@@ -431,9 +431,6 @@ object Etl {
     if (maxDf > 0)
       System.err.println(
         s"[capstone] corpus near-dup df cap ENGAGED: maxDf=$maxDf")
-    System.err.println("[capstone] corpus stages: neardup-canonical -> " +
-      "fraction-decontaminate(10%) -> quality -> mixture -> split -> " +
-      "pack -> tokenizer-accounting -> span-corruption pairs")
     val t0 = System.nanoTime()
     val outputs = buildCorpusOutputs(spark, sfDir, dedupMaxDf = maxDf)
     ParquetSink.write(outputs(corpusWide.name), corpusWide,
@@ -583,31 +580,12 @@ object Etl {
     // reference's report_year + substr(plant_name_mphone,1,3) rule,
     // key-for-key since round 13 (native Metaphone expression; soundex
     // held the slot in rounds ≤12) — plus an identity-digits rule.
-    // Candidate generation goes through Linkage.unionBlocks (round 14):
-    // splink's blocking_rules_to_generate_predictions semantics — a pair
-    // matched by both rules is scored ONCE (cross-rule dedup before
-    // scoring, exactly the reference's candidate shape) instead of twice
-    // with the best-match window absorbing the duplicate. Output is
-    // bit-identical (duplicate rows were identical), golden row counts
-    // unaffected. True-pair recall does not depend on the phonetic key
-    // at all: each pair's canon names are EQUAL (same metaphone) and
-    // rule 1's identity token blocks them independently.
-    // skew guard stays ON (maxBlock inside unionBlocks): the phonetic
-    // block key is degenerate-prone at corpus scale — a very common name
-    // prefix puts L·R pairs in ONE shuffle group (AQE splits skewed
-    // partitions, not a single giant key). saltBySize spreads any block
-    // with > maxBlock left rows over ceil(L/maxBlock) salts with the
-    // right side replicated per salt — pair-for-pair identical; at
-    // fixture scale no block exceeds the cap and the guard costs one
-    // map-side count + an empty broadcast per rule.
-    // The cap itself is DATA-DERIVED (round 15, splink's pre-flight→run
-    // discipline): calibrateMaxBlock measures the hottest right block
-    // per rule from map-side counts (pairs never materialize) and sizes
-    // maxBlock so one salted shuffle group scores ≤ ~4M pairs —
-    // replacing the static 100000, which over-replicates when right
-    // blocks are fat and under-splits when they're thin. Clamped, so the
-    // guard can neither salt everything nor switch off; the guard being
-    // semantics-preserving, golden counts cannot move with the cap.
+    // Candidate generation goes through Linkage.unionBlocks: both rules
+    // ride ONE (rule, key) equi-join, with splink's
+    // blocking_rules_to_generate_predictions semantics — a pair matched
+    // by both rules is scored ONCE. True-pair recall does not depend on
+    // the phonetic key at all: each pair's canon names are EQUAL (same
+    // metaphone) and rule 1's identity token blocks them independently.
     val rules = Seq(
       (Seq(col("l_nkey"),
          substring(graft.plans.Metaphone(col("l_canon")), 1, 3)),
@@ -615,23 +593,16 @@ object Etl {
          substring(graft.plans.Metaphone(col("r_canon")), 1, 3))),
       (Seq(regexp_extract(col("l_canon"), "\\bid[a-j]{5}\\b", 0)),
        Seq(regexp_extract(col("r_canon"), "\\bid[a-j]{5}\\b", 0))))
-    // Round 18 (barrier diet): the hottest-block pre-flight runs ONCE for
-    // both consumers — calibrateMaxBlock and detectBothSidesHot each ran
-    // their own driver action over per-rule aggregation unions; one fused
-    // hottestBlocks job (each side scanned once) now feeds the clamp
-    // formula AND the 2-D router. Same values by construction.
+    // Skew guard ON: the phonetic block key is degenerate-prone at
+    // corpus scale (a very common name prefix puts L·R pairs in ONE
+    // shuffle group; AQE splits skewed partitions, not a single giant
+    // key). One hottestBlocks action sizes the cap from the hottest right
+    // block (≤ ~4M pairs per salted group, clamped) and flags rules hot on
+    // BOTH sides for the 2-D tile guard. The guard is pair-for-pair
+    // identical to the plain join, so golden counts cannot move with it.
     val hot = graft.linkage.Linkage.hottestBlocks(a, b, rules)
     val maxBlock = graft.linkage.Linkage.maxBlockFromHottest(
       hot.map(_._2).max)
-    // Both-sides-hot routing (round 16): a rule whose hottest block
-    // exceeds maxBlock on BOTH sides is the big-joins-big regime where
-    // the 1-D salt still leaves ~maxBlock·R pairs per salted group —
-    // those rules take the saltBySize2D tile decomposition instead
-    // (pair-for-pair identical, so golden counts cannot move). At
-    // fixture scale no rule trips the detector (one tiny single-job
-    // collect, 2 rows per rule) and the plan is byte-identical to the
-    // 1-D path; the oracle-checked q198 lane exercises the 2-D path
-    // end-to-end on a planted both-sides-degenerate key.
     val hot2d = hot.map { case (l, r) => l > maxBlock && r > maxBlock }
     val cand0 = graft.linkage.Linkage.unionBlocks(a, b, "l_id", "r_id",
       rules, maxBlock = maxBlock, rules2D = hot2d)

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components on a DataFrame edge list — the primitive behind the
   * reference's boiler–generator unit assembly and EPA–EIA subplant ids
@@ -19,15 +19,13 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   *    3 jobs × O(log d) rounds. Even in a 100 TB corpus, the *edge set* of a
   *    near-dup/crosswalk graph is orders of magnitude smaller than the corpus
   *    (pairs ∝ true duplicates), so this path covers most production runs;
-  *    the threshold (default 5M edges ≈ 80 MB on the driver) keeps it safe.
+  *    the threshold (default 5M edges, ~380 MB of driver heap for the
+  *    collected edge list) keeps it safe.
   *
   *  - **Large graphs**: large-star/small-star contraction ([[runStars]],
   *    Kiveris et al. SoCC'14) — O(log n) rounds regardless of graph
   *    diameter, join-free windowed rounds, the safe default when the
-  *    shape is unknown. Min-label propagation with pointer jumping
-  *    ([[runLabelProp]]) stays available for known-small-diameter graphs
-  *    (crosswalks), where it converges in fewer exchanges.
-  *    `localCheckpoint` truncates plan lineage in both loops.
+  *    shape is unknown. `localCheckpoint` truncates plan lineage.
   */
 object ConnectedComponents {
 
@@ -38,51 +36,34 @@ object ConnectedComponents {
     * Routing: below `localEdgeThreshold` the edge list collects to a driver
     * union-find (one job); above it the star-contraction loop
     * ([[runStars]]) runs — O(log n) rounds with no dependence on graph
-    * diameter, the safe default when the shape is unknown. The min-label
-    * loop ([[runLabelProp]]) stays available for known-small-diameter
-    * graphs, where its two-hop pointer jumping converges in fewer
-    * exchanges.
-    *
-    * `timer` (optional) receives `(stage, wallSeconds)` per blocking
-    * action — `cc:edge-materialize` (the distinct-edge count, which
-    * absorbs the caller's whole upstream edge lineage) and `cc:label`
-    * (union-find collect+solve or the star loop) — so callers under
-    * driver-contention investigation (q97) can decompose their barriers
-    * without changing the plan. */
+    * diameter, the safe default when the shape is unknown. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
           maxIter: Int = 25,
           localEdgeThreshold: Long = 5000000L,
-          strict: Boolean = false,
-          timer: (String, Double) => Unit = (_, _) => ()): DataFrame = {
+          strict: Boolean = false): DataFrame = {
     val e = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
       .distinct()
-    // Round 18 (barrier diet): ONE driver action decides the route AND
-    // delivers the small-graph edge list — collect up to threshold+1 rows
-    // (bounded: ≤ ~80 MB at the 5M default, the same driver budget the
-    // old count()+cache+collect pair was sized for). The old form paid
-    // two actions and a cache materialization; under driver contention
-    // every removed barrier stops amplifying. A graph over the threshold
-    // pays one discarded bounded collect and re-derives its edges in
-    // runStars — exactly what the cache-unpersist path did.
-    val t0 = System.nanoTime()
+    // ONE driver action decides the route AND delivers the small-graph
+    // edge list: collect up to threshold+1 rows. The rows arrive as
+    // generic Tuple2s of boxed Longs: 5M edges retained 382 MB of driver
+    // heap after a full GC (76 B per edge; JDK 17, 4 GB heap, compressed
+    // oops), before counting the transient result blocks of the collect.
+    // Size the driver heap for that at the default threshold. A graph
+    // over the threshold pays one discarded bounded collect and
+    // re-derives its edges in runStars.
     import e.sparkSession.implicits._
     val pairs = e.limit(
         (localEdgeThreshold min (Int.MaxValue - 1L)).toInt + 1)
       .as[(Long, Long)].collect()
-    timer("cc:edge-materialize", (System.nanoTime() - t0) / 1e9)
-    val t1 = System.nanoTime()
-    val out =
-      if (pairs.length <= localEdgeThreshold) runLocal(e.sparkSession, pairs)
-      else {
-        // caller's maxIter is honored as-is (star rounds run 3 alternations
-        // per iteration, so even the default 25 covers ~75 contractions —
-        // far past O(log n) convergence for any realistic graph)
-        runStars(edges, srcCol, dstCol, maxIter = maxIter, strict = strict)
-      }
-    timer("cc:label", (System.nanoTime() - t1) / 1e9)
-    out
+    if (pairs.length <= localEdgeThreshold) runLocal(e.sparkSession, pairs)
+    else {
+      // caller's maxIter is honored as-is (star rounds run 3 alternations
+      // per iteration, so even the default 25 covers ~75 contractions —
+      // far past O(log n) convergence for any realistic graph)
+      runStars(edges, srcCol, dstCol, maxIter = maxIter, strict = strict)
+    }
   }
 
   /** Driver union-find (path compression + union by rank). */
@@ -111,11 +92,10 @@ object ConnectedComponents {
     * Components in MapReduce and Beyond*, ACM SoCC 2014) — the web-scale
     * path promised in the header. Convergence takes O(log n) rounds
     * REGARDLESS of graph diameter, where min-label propagation (even with
-    * pointer jumping, [[runLabelProp]]) needs O(log diameter) rounds and
-    * degrades on path-shaped graphs (a 1M-hop chain: ~20 rounds vs ~60).
-    * Both phases are one hash aggregation + one shuffle join on vertex id —
-    * the same primitives as the label loop, so the 100 TB cost model is
-    * unchanged: no per-round growth, `localCheckpoint` truncates lineage.
+    * pointer jumping) needs O(log diameter) rounds and degrades on
+    * path-shaped graphs (a 1M-hop chain: ~20 rounds vs ~60). Both phases
+    * are one hash aggregation + one shuffle join on vertex id: no
+    * per-round growth, `localCheckpoint` truncates lineage.
     *
     *  - large-star(u): every neighbor v > u links to m = min(Γ(u) ∪ {u})
     *  - small-star(u): all neighbors v ≤ u (and u itself) link to their min
@@ -223,73 +203,5 @@ object ConnectedComponents {
     val eFinal = spark0.createDataFrame(rddCur, edgeSchema)
     verts.join(eFinal.select(col("a").as("v"), col("b").as("c")), Seq("v"), "left")
       .select(col("v"), coalesce(col("c"), col("v")).as("component"))
-  }
-
-  /** Min-label propagation with two-hop pointer jumping — fewer exchanges
-    * per round than star contraction, but round count grows with graph
-    * diameter; prefer for known-small-diameter graphs (crosswalks, star
-    * schemas). Takes the raw edge list like [[runStars]]. */
-  def runLabelProp(edges: DataFrame, srcCol: String, dstCol: String,
-                   maxIter: Int = 25, strict: Boolean = false): DataFrame = {
-    val e = edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull)
-      .distinct()
-      .cache()
-    runDistributed(e, maxIter, strict)
-  }
-
-  private def runDistributed(sym0: DataFrame, maxIter: Int,
-                             strict: Boolean = false): DataFrame = {
-    val spark = sym0.sparkSession
-    val sym = sym0
-      .unionByName(sym0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .cache()
-    val lblSchema = StructType(Seq(
-      StructField("v", LongType, nullable = false),
-      StructField("component", LongType, nullable = false)))
-    val chgSchema = lblSchema.add(StructField("__chg", BooleanType, nullable = false))
-    // same fused materialize+count trick as runStars: one action per round,
-    // superseded checkpoint blocks released as soon as the next round lands
-    var rddCur: RDD[Row] = sym.select(col("a").as("v"), col("a").as("component")).distinct().rdd
-    rddCur.localCheckpoint()
-    rddCur.count()
-    var labels = spark.createDataFrame(rddCur, lblSchema)
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = sym.join(labels, sym("b") === labels("v"))
-        .groupBy(col("a")).agg(min(col("component")).as("nbr_min"))
-      val updated = labels.join(nbrMin, labels("v") === nbrMin("a"), "left")
-        .select(labels("v").as("v"),
-          least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("c1"),
-          col("component").as("c0"))
-      // pointer jump ("shortcutting"): follow the new label one more hop —
-      // halves the number of propagation rounds (O(log d) overall)
-      val lbl2 = updated.select(col("v").as("v2"), col("c1").as("c2"))
-      val next = updated.join(lbl2, updated("c1") === lbl2("v2"), "left")
-        .select(col("v"),
-          least(col("c1"), coalesce(col("c2"), col("c1"))).as("component"),
-          (least(col("c1"), coalesce(col("c2"), col("c1"))) < col("c0")).as("__chg"))
-      val rddNext = next.rdd
-      rddNext.localCheckpoint()
-      changed = rddNext.aggregate(0L)(
-        (acc, r) => acc + (if (r.getBoolean(2)) 1L else 0L), _ + _)
-      rddCur.unpersist(blocking = false)
-      rddCur = rddNext
-      labels = spark.createDataFrame(rddNext, chgSchema).drop("__chg")
-      i += 1
-    }
-    if (changed > 0) {
-      val msg = s"runLabelProp: maxIter=$maxIter exhausted with $changed " +
-        "labels still changing — components may be under-merged"
-      if (strict) throw new IllegalStateException(msg)
-      log.warn(msg)
-    }
-    sym.unpersist()
-    sym0.unpersist()
-    labels
   }
 }

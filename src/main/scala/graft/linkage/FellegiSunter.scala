@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
   */
 final case class Comparison(name: String, level: Column, nLevels: Int) {
   require(nLevels >= 2, "a comparison needs at least two levels")
+  require(name != "__prior" && name != "__lam",
+    s"comparison name $name is reserved for FellegiSunter's sentinel rows")
 }
 
 /** Fellegi–Sunter record linkage, the model behind the reference's splink

@@ -3,6 +3,9 @@ package graft.linkage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType,
+  DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType,
+  StringType, TimestampType}
 
 import graft.text.TextAnalysis
 import graft.graph.ConnectedComponents
@@ -56,9 +59,7 @@ object Linkage {
     * measured on the LEFT side only and every right row of a hot block
     * replicates to all of its salts, so per-task work is bounded by
     * ~maxBlock·R for a block with R right rows — a key that is
-    * degenerate on the RIGHT alone is not split (put the skewed side on
-    * the left, or pick maxBlock from [[blockProfile]]'s per-side counts;
-    * a 2-D both-sides salt is the big-joins-big extension).
+    * degenerate on BOTH sides needs [[saltBySize2D]].
     * SEMANTICS-PRESERVING — the classic manual skew-join
     * split, NOT a recall-lossy cap: a hot block of L left rows gets
     * ceil(L/maxBlock) salts, each left row lands in exactly one salt
@@ -79,27 +80,17 @@ object Linkage {
   def saltBySize(left: DataFrame, right: DataFrame,
                  leftKeys: Seq[Column], rightKeys: Seq[Column],
                  maxBlock: Int): (DataFrame, DataFrame, Seq[String]) = {
-    require(maxBlock >= 1, "maxBlock must be >= 1")
-    require(leftKeys.size == rightKeys.size, "key lists must align")
-    val names = leftKeys.indices.map(i => s"__bk$i")
-    val l = left.select(
-      left.columns.map(col) ++ leftKeys.zip(names).map { case (c, n) => c.as(n) }: _*)
-    val r = right.select(
-      right.columns.map(col) ++ rightKeys.zip(names).map { case (c, n) => c.as(n) }: _*)
+    val (l, r, names) = keyed(left, right, leftKeys, rightKeys, maxBlock)
     val hot = l.groupBy(names.map(col): _*)
       .agg(count(lit(1)).as("__bn"))
       .where(col("__bn") > maxBlock)
       .select(names.map(col) :+
         ceil(col("__bn") / lit(maxBlock.toDouble)).cast("int").as("__nsalt"): _*)
     val saltedL = l.join(broadcast(hot), names, "left")
-      .withColumn("__salt",
-        when(col("__nsalt").isNull, lit(0)).otherwise(
-          pmod(xxhash64(left.columns.map(col): _*),
-            col("__nsalt").cast("long")).cast("int")))
+      .withColumn("__salt", hashSalt(left, "__nsalt"))
       .drop("__nsalt")
     val saltedR = r.join(broadcast(hot), names, "left")
-      .withColumn("__salt", explode(
-        sequence(lit(0), coalesce(col("__nsalt"), lit(1)) - 1)))
+      .withColumn("__salt", replicate("__nsalt"))
       .drop("__nsalt")
     (saltedL, saltedR, names :+ "__salt")
   }
@@ -115,7 +106,8 @@ object Linkage {
     * shuffle group, every (l, r) pair meets in EXACTLY one tile, so the
     * output is pair-for-pair identical to the plain equi-join while no
     * task holds more than ~maxBlock rows of either side (in expectation;
-    * salts are hash-assigned).
+    * salts are hash-assigned). A key hot on the left only gets the 1-D
+    * guard's salts (one column-salt).
     *
     * Cost: hot-block rows replicate ceil(other-side/maxBlock) times —
     * the classic blocked-matrix trade (total replicated volume
@@ -126,13 +118,7 @@ object Linkage {
   def saltBySize2D(left: DataFrame, right: DataFrame,
                    leftKeys: Seq[Column], rightKeys: Seq[Column],
                    maxBlock: Int): (DataFrame, DataFrame, Seq[String]) = {
-    require(maxBlock >= 1, "maxBlock must be >= 1")
-    require(leftKeys.size == rightKeys.size, "key lists must align")
-    val names = leftKeys.indices.map(i => s"__bk$i")
-    val l = left.select(
-      left.columns.map(col) ++ leftKeys.zip(names).map { case (c, n) => c.as(n) }: _*)
-    val r = right.select(
-      right.columns.map(col) ++ rightKeys.zip(names).map { case (c, n) => c.as(n) }: _*)
+    val (l, r, names) = keyed(left, right, leftKeys, rightKeys, maxBlock)
     def sizes(side: DataFrame, out: String) = side
       .groupBy(names.map(col): _*)
       .agg(ceil(count(lit(1)) / lit(maxBlock.toDouble)).cast("int").as(out))
@@ -144,23 +130,38 @@ object Linkage {
         coalesce(col("__nsl"), lit(1)).as("__nsl") :+
         coalesce(col("__nsr"), lit(1)).as("__nsr"): _*)
     val saltedL = l.join(broadcast(hot), names, "left")
-      .withColumn("__sl",
-        when(col("__nsl").isNull, lit(0)).otherwise(
-          pmod(xxhash64(left.columns.map(col): _*),
-            col("__nsl").cast("long")).cast("int")))
-      .withColumn("__sr", explode(
-        sequence(lit(0), coalesce(col("__nsr"), lit(1)) - 1)))
+      .withColumn("__sl", hashSalt(left, "__nsl"))
+      .withColumn("__sr", replicate("__nsr"))
       .drop("__nsl", "__nsr")
     val saltedR = r.join(broadcast(hot), names, "left")
-      .withColumn("__sr",
-        when(col("__nsr").isNull, lit(0)).otherwise(
-          pmod(xxhash64(right.columns.map(col): _*),
-            col("__nsr").cast("long")).cast("int")))
-      .withColumn("__sl", explode(
-        sequence(lit(0), coalesce(col("__nsl"), lit(1)) - 1)))
+      .withColumn("__sr", hashSalt(right, "__nsr"))
+      .withColumn("__sl", replicate("__nsl"))
       .drop("__nsl", "__nsr")
     (saltedL, saltedR, names ++ Seq("__sl", "__sr"))
   }
+
+  /** Shared prologue of the skew guards: each side gains its aligned key
+    * expressions as `__bk<i>` columns. */
+  private def keyed(left: DataFrame, right: DataFrame,
+                    leftKeys: Seq[Column], rightKeys: Seq[Column],
+                    maxBlock: Int): (DataFrame, DataFrame, Seq[String]) = {
+    require(maxBlock >= 1, "maxBlock must be >= 1")
+    require(leftKeys.size == rightKeys.size, "key lists must align")
+    val names = leftKeys.indices.map(i => s"__bk$i")
+    def withKeys(df: DataFrame, keys: Seq[Column]): DataFrame = df.select(
+      df.columns.map(col) ++ keys.zip(names).map { case (c, n) => c.as(n) }: _*)
+    (withKeys(left, leftKeys), withKeys(right, rightKeys), names)
+  }
+
+  /** A row's salt in its block: a hash of the whole `side` row modulo
+    * the block's salt count column `n` (null = cold block, salt 0). */
+  private def hashSalt(side: DataFrame, n: String): Column =
+    when(col(n).isNull, lit(0)).otherwise(
+      pmod(xxhash64(side.columns.map(col): _*), col(n).cast("long")).cast("int"))
+
+  /** One copy of the row per salt of its block (cold block: one copy). */
+  private def replicate(n: String): Column =
+    explode(sequence(lit(0), coalesce(col(n), lit(1)) - 1))
 
   /** Equi-join with the [[saltBySize2D]] both-sides guard; output equals
     * the plain equi-join pair-for-pair. */
@@ -182,28 +183,6 @@ object Linkage {
     l.join(r, names).drop(names: _*)
   }
 
-  /** Per-rule both-sides-hot detection for [[unionBlocks]] routing: a
-    * rule whose hottest block exceeds `maxBlock` rows on BOTH sides is
-    * in the big-joins-big regime where the 1-D guard's per-salt bound
-    * (~maxBlock · R) is itself quadratic — those rules should take the
-    * [[saltBySize2D]] tile decomposition instead. Null-key groups are
-    * excluded (they never equi-join, same discipline as
-    * [[calibrateMaxBlock]]). Cost: one map-side-combinable count per
-    * side per rule, all 1-row maxima unioned into a SINGLE job and one
-    * 2·rules-row collect (bounded by contract). */
-  def detectBothSidesHot(left: DataFrame, right: DataFrame,
-                         rules: Seq[(Seq[Column], Seq[Column])],
-                         maxBlock: Int): Seq[Boolean] = {
-    require(rules.nonEmpty, "need at least one blocking rule")
-    require(maxBlock >= 1, "maxBlock must be >= 1")
-    // Round 18: the per-(rule, side) union form planned 2·|rules|
-    // aggregation subtrees over re-planned side lineages; the fused
-    // [[hottestBlocks]] scans each side once. Same detector output.
-    hottestBlocks(left, right, rules).map { case (l, r) =>
-      l > maxBlock && r > maxBlock
-    }
-  }
-
   /** Multi-rule candidate generation — splink's
     * `blocking_rules_to_generate_predictions` union semantics, the
     * reference's actual candidate shape (it ORs 10 blocking rules,
@@ -215,62 +194,46 @@ object Linkage {
     * previous-rule` SQL; union + min-rule dedup is the equivalent
     * declarative form) and `n_rules` = how many rules generated it.
     *
-    * Scale: K blocked equi-joins (never all-pairs) + ONE shuffle on the
-    * (leftId, rightId) pair key for the cross-rule dedup window. Pass
-    * `maxBlock > 0` to route every rule's join through the
-    * [[saltBySize]] skew guard. Left/right must have disjoint column
-    * names (including the id columns), and `leftId` / `rightId` must each
+    * Plan: each side is computed once and tagged with one (rule, encoded
+    * key) row per rule ([[encoded]]); ONE equi-join on (rule, key)
+    * stands for all K rule joins, and ONE shuffle on the (leftId,
+    * rightId) pair key runs the cross-rule dedup window. `maxBlock > 0`
+    * guards that join against degenerate (rule, key) blocks with
+    * [[skewGuardedJoin]], or with [[skewGuardedJoin2D]] when any
+    * `rules2D` flag is set (flag the rules whose [[hottestBlocks]] exceed
+    * maxBlock on BOTH sides); both guards return the plain join's pairs.
+    * A rule set the encoding gate rejects (mismatched or non-atomic key
+    * types) falls back to K typed per-rule joins, unioned.
+    *
+    * Left/right must have disjoint column names (including the id
+    * columns) that avoid the reserved tag names `__lrule`, `__lkey`,
+    * `__rrule`, `__rkey` and `__rk`. `leftId` / `rightId` must each
     * UNIQUELY identify their side's rows (splink's `unique_id` contract):
     * the cross-rule dedup keeps one row per (leftId, rightId), so
-    * duplicate ids would silently collapse distinct candidate rows.
-    *
-    * `rules2D(i)` routes rule i through the [[saltBySize2D]] tile guard
-    * instead of the 1-D guard (same pair set either way) — feed it
-    * [[detectBothSidesHot]] so rules whose hottest block is degenerate
-    * on BOTH sides get the blocked-matrix decomposition the 1-D salt
-    * cannot bound. Shorter-than-rules (or empty) vectors default the
-    * remaining rules to the 1-D guard. */
+    * duplicate ids would silently collapse distinct candidate rows. */
   def unionBlocks(left: DataFrame, right: DataFrame,
                   leftId: String, rightId: String,
                   rules: Seq[(Seq[Column], Seq[Column])],
                   maxBlock: Int = 0,
                   rules2D: Seq[Boolean] = Nil): DataFrame = {
     require(rules.nonEmpty, "need at least one blocking rule")
-    // Round 18 (plan-size diet, the q189/ruleKeyCounts discipline applied
-    // to the pair join itself): the per-rule form planned one join PER
-    // RULE over re-planned copies of each side's whole lineage — q190's
-    // 10 production rules produced a 718-line / 24-Exchange initial plan,
-    // and every branch re-EXECUTED the side subtrees (the Metaphone
-    // codes were computed 10× per row). Fused: each side is computed
-    // ONCE, an explode emits one (rule, key) row per rule, and ONE
-    // equi-join on (rule, encoded key) replaces all K joins — the same
-    // total shuffle bytes (K joins × n rows each ≡ one join × K·n rows),
-    // K× fewer exchanges/stages and 1× side computation. Key tuples use
-    // the [[ruleKeyCounts]] array<string> encoding, whose equality is
-    // exactly the typed null-unsafe conjunction when both sides of every
-    // aligned key share one atomic type: distinct values of one SQL type
-    // cast to distinct strings (Double/Float pre-normalized -0.0 → 0.0;
-    // all-NaN-equal matches Spark's join semantics, both sides reading
-    // "NaN"), and any-null key tuples are dropped up front. Rules with
-    // mismatched or non-atomic key types — and every maxBlock > 0 salted
-    // path — keep the per-rule joins.
-    val fusable = maxBlock <= 0 && rules.size > 1 &&
-      rules.forall { case (lk, rk) =>
-        lk.size == rk.size && lk.zip(rk).forall { case (a, b) =>
-          val ta = left.select(a).schema.head.dataType
-          val tb = right.select(b).schema.head.dataType
-          ta == tb && stringEncodable(ta)
-        }
-      }
-    val unioned =
-      if (fusable) {
-        val lT = tagRules(left, rules.map(_._1), "__lrule", "__lkey")
-        val rT = tagRules(right, rules.map(_._2), "__rrule", "__rkey")
-        lT.join(rT, col("__lrule") === col("__rrule") &&
+    val shared = left.columns.map(_.toLowerCase)
+      .intersect(right.columns.map(_.toLowerCase))
+    require(shared.isEmpty,
+      s"unionBlocks needs disjoint left/right column names; both have ${shared.mkString(", ")}")
+    val unioned = encoded(left, right, rules) match {
+      case Right((lT, rT)) =>
+        val lk = Seq(col("__lrule"), col("__lkey"))
+        val rk = Seq(col("__rrule"), col("__rkey"))
+        val joined =
+          if (maxBlock <= 0) lT.join(rT, col("__lrule") === col("__rrule") &&
             col("__lkey") === col("__rkey"))
-          .select(left.columns.map(col) ++ right.columns.map(col) :+
-            col("__lrule").as("match_key"): _*)
-      } else {
+          else if (rules2D.contains(true))
+            skewGuardedJoin2D(lT, rT, lk, rk, maxBlock)
+          else skewGuardedJoin(lT, rT, lk, rk, maxBlock)
+        joined.select(left.columns.map(col) ++ right.columns.map(col) :+
+          col("__lrule").as("match_key"): _*)
+      case Left(_) =>
         rules.zipWithIndex.map { case ((lk, rk), i) =>
           val j =
             if (maxBlock > 0 && rules2D.lift(i).getOrElse(false))
@@ -281,7 +244,7 @@ object Linkage {
               lk.zip(rk).map { case (a, b) => a === b }.reduce(_ && _))
           j.withColumn("match_key", lit(i))
         }.reduce(_.unionByName(_))
-      }
+    }
     val pair = Window.partitionBy(col(leftId), col(rightId))
     unioned
       .withColumn("n_rules", count(lit(1)).over(pair))
@@ -291,116 +254,137 @@ object Linkage {
       .drop("__rn")
   }
 
-  /** Types whose cast-to-string is injective on SQL-distinct values —
-    * the precondition for the [[tagRules]] encoded-key join to replay
-    * the typed equi-join exactly. */
-  private def stringEncodable(t: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    t match {
-      case StringType | IntegerType | LongType | ShortType | ByteType |
-           BooleanType | DateType | TimestampType | DoubleType | FloatType =>
-        true
-      case _: DecimalType => true
-      case _ => false
-    }
+  /** Column names the (rule, key) tagging adds to its input sides. */
+  private val tagNames = Set("__lrule", "__lkey", "__rrule", "__rkey", "__rk")
+
+  /** Types with an injective string encoding under [[tagRules]] — the
+    * precondition for the encoded-key join to replay the typed
+    * equi-join exactly. */
+  private def stringEncodable(t: DataType): Boolean = t match {
+    case StringType | IntegerType | LongType | ShortType | ByteType |
+         BooleanType | DateType | TimestampType | DoubleType | FloatType |
+         _: DecimalType =>
+      true
+    case _ => false
   }
 
-  /** Tag every row of `df` with one (rule index, encoded key) pair per
-    * rule whose key tuple is fully non-null — the payload-carrying twin
-    * of [[ruleKeyCounts]]'s explode (same encoding, same null and float
-    * discipline), used by the fused [[unionBlocks]] join. */
+  /** The one (rule, key) blocking encoder behind [[unionBlocks]],
+    * [[blockProfile]] and [[hottestBlocks]]. The injectivity gate comes
+    * first: every rule's aligned keys must share one [[stringEncodable]]
+    * type on both sides — otherwise the typed join would coerce ('5' vs
+    * 5.0) or compare structurally where the strings would not — and the
+    * first rule that fails is returned as Left(reason). Otherwise both
+    * sides come back tagged by [[tagRules]]: left as (`__lrule`,
+    * `__lkey`), right as (`__rrule`, `__rkey`). Input columns may not
+    * use the tag names. */
+  private def encoded(left: DataFrame, right: DataFrame,
+                      rules: Seq[(Seq[Column], Seq[Column])])
+      : Either[String, (DataFrame, DataFrame)] = {
+    val reserved = (left.columns ++ right.columns)
+      .filter(c => tagNames(c.toLowerCase))
+    require(reserved.isEmpty,
+      s"blocking reserves the column names ${tagNames.toSeq.sorted.mkString(", ")}; got ${reserved.mkString(", ")}")
+    val lt = keyTypes(left, rules.map(_._1))
+    val rt = keyTypes(right, rules.map(_._2))
+    def show(ts: Seq[DataType]) = ts.map(_.simpleString).mkString("(", ", ", ")")
+    lt.zip(rt).zipWithIndex.collectFirst {
+      case ((a, b), i) if a != b || !a.forall(stringEncodable) =>
+        s"blocking rule $i has left key types ${show(a)} and right key " +
+          s"types ${show(b)}; the (rule, key) encoding needs one " +
+          "string-encodable atomic type per aligned key pair"
+    }.toLeft((tagRules(left, rules.map(_._1), lt, "__lrule", "__lkey"),
+      tagRules(right, rules.map(_._2), rt, "__rrule", "__rkey")))
+  }
+
+  /** [[encoded]] for the pre-flight profiles, which have no typed
+    * fallback: a rule set the gate rejects fails loudly instead of
+    * miscounting the joins it budgets. */
+  private def encodedOrReject(left: DataFrame, right: DataFrame,
+                              rules: Seq[(Seq[Column], Seq[Column])])
+      : (DataFrame, DataFrame) = {
+    require(rules.nonEmpty, "need at least one blocking rule")
+    val tagged = encoded(left, right, rules)
+    require(tagged.isRight, tagged.swap.getOrElse(""))
+    tagged.toOption.get
+  }
+
+  /** Every rule's key types over `df`, from one analysis of `df`. */
+  private def keyTypes(df: DataFrame,
+                       sides: Seq[Seq[Column]]): Seq[Seq[DataType]] = {
+    val ts = df.select(sides.flatten: _*).schema.iterator.map(_.dataType)
+    sides.map(_.map(_ => ts.next()))
+  }
+
+  /** Tag every row of `df` with one (rule index, key) row per rule whose
+    * key tuple is fully non-null; `types` are the keys' types. A key
+    * tuple encodes as array<string> (rule arity varies): Double/Float
+    * -0.0 normalizes to 0.0 (the typed join's NormalizeFloatingNumbers;
+    * NaN reads "NaN" on both sides, matching Spark's NaN = NaN join),
+    * timestamps encode as epoch micros (their string form follows the
+    * session time zone and repeats across a DST fall-back hour), and
+    * any-null tuples drop (null keys never survive the null-unsafe
+    * equi-join). The explode replicates each row ×|rules|, the same as a
+    * grouping-sets Expand would. */
   private def tagRules(df: DataFrame, sides: Seq[Seq[Column]],
+                       types: Seq[Seq[DataType]],
                        ruleCol: String, keyCol: String): DataFrame = {
-    def norm(c: Column): Column =
-      df.select(c).schema.head.dataType match {
-        case org.apache.spark.sql.types.DoubleType =>
-          when(c === lit(0.0d), lit(0.0d)).otherwise(c)
-        case org.apache.spark.sql.types.FloatType =>
-          when(c === lit(0.0f), lit(0.0f)).otherwise(c)
-        case _ => c
-      }
-    df.select(col("*"), explode(array(sides.zipWithIndex.map {
-        case (ks, i) =>
+    def enc(c: Column, t: DataType): Column = (t match {
+      case DoubleType => when(c === lit(0.0d), lit(0.0d)).otherwise(c)
+      case FloatType => when(c === lit(0.0f), lit(0.0f)).otherwise(c)
+      case TimestampType => unix_micros(c)
+      case _ => c
+    }).cast("string")
+    df.select(col("*"), explode(array(sides.zip(types).zipWithIndex.map {
+        case ((ks, ts), i) =>
           struct(lit(i).as("r"),
             when(ks.map(_.isNotNull).reduce(_ && _),
-              array(ks.map(k => norm(k).cast("string")): _*)).as("k"))
+              array(ks.zip(ts).map { case (k, t) => enc(k, t) }: _*)).as("k"))
       }: _*)).as("__rk"))
       .where(col("__rk.k").isNotNull)
       .select(col("*"), col("__rk.r").as(ruleCol), col("__rk.k").as(keyCol))
       .drop("__rk")
   }
 
-  /** Blocking-rule pre-flight — splink's
-    * `count_comparisons_from_blocking_rule` analysis (the tool used to
-    * budget the reference's 10 prediction rules before running them):
-    * for each rule, the candidate-pair volume computed from per-block
-    * cardinalities — sum over blocks of nL·nR — WITHOUT materializing a
-    * single pair. At 100 TB this is how a rule set is chosen and how
-    * [[saltBySize]]'s maxBlock is calibrated: two map-side-combinable
-    * counts + one (small) key-cardinality join per rule, never the
-    * quadratic pair frame itself. Returns one row per rule:
-    * (match_key, n_blocks, n_pairs, max_block_pairs). */
-  /** Fused per-(rule, block-key) cardinalities — ONE scan of `df` serves
-    * every rule: an explode emits one (rule, key) row per rule (the same
-    * ×|rules| replication a grouping-sets Expand would produce) and one
-    * aggregation counts all blocks. Key tuples are encoded as
-    * array<string> (rule arity varies); the encoding preserves each
-    * rule's typed-groupBy semantics exactly: distinct values of one SQL
-    * type cast to distinct strings, rows with ANY null key component are
-    * dropped up front (null keys never survive the null-unsafe equi-joins
-    * this profiles), and float keys are pre-normalized (-0.0 → 0.0,
-    * matching the aggregate's NormalizeFloatingNumbers) so the string
-    * grouping can never split a group the typed grouping merged. */
-  private def ruleKeyCounts(df: DataFrame, sides: Seq[Seq[Column]],
-                            cnt: String): DataFrame = {
-    def norm(c: Column): Column =
-      df.select(c).schema.head.dataType match {
-        case org.apache.spark.sql.types.DoubleType =>
-          when(c === lit(0.0d), lit(0.0d)).otherwise(c)
-        case org.apache.spark.sql.types.FloatType =>
-          when(c === lit(0.0f), lit(0.0f)).otherwise(c)
-        case _ => c
-      }
-    df.select(explode(array(sides.zipWithIndex.map { case (ks, i) =>
-        struct(lit(i).as("r"),
-          when(ks.map(_.isNotNull).reduce(_ && _),
-            array(ks.map(k => norm(k).cast("string")): _*)).as("k"))
-      }: _*)).as("__rk"))
-      .select(col("__rk.r").as("__rule"), col("__rk.k").as("__key"))
-      .where(col("__key").isNotNull)
-      .groupBy(col("__rule"), col("__key"))
+  /** Per-(rule, key) block sizes of one tagged side: (__rule, __key, cnt). */
+  private def blockCounts(tagged: DataFrame, ruleCol: String, keyCol: String,
+                          cnt: String): DataFrame =
+    tagged.groupBy(col(ruleCol).as("__rule"), col(keyCol).as("__key"))
       .agg(count(lit(1)).as(cnt))
-  }
-
-  /** Per-rule hottest block size on one side, from the fused counts:
-    * (__rule, __mx) — rules whose every row has a null key component are
-    * absent (callers default them to 0). */
-  private def hottestPerRule(df: DataFrame,
-                             sides: Seq[Seq[Column]]): DataFrame =
-    ruleKeyCounts(df, sides, "__n")
-      .groupBy(col("__rule")).agg(max(col("__n")).as("__mx"))
 
   /** Per-rule hottest (left, right) block sizes in ONE driver action —
-    * the shared pre-flight [[calibrateMaxBlock]] and
-    * [[detectBothSidesHot]] both derive from, exposed so a caller that
-    * needs both (the linkage capstone) pays one barrier instead of two.
-    * Each side is scanned once (fused explode, not one aggregation per
-    * rule); the collect is 2·|rules| rows, bounded by contract. */
+    * the skew-guard pre-flight. `maxBlockFromHottest(hot.map(_._2).max)`
+    * sizes the guard's cap, and `l > maxBlock && r > maxBlock` flags the
+    * rules [[unionBlocks]] should route through the 2-D guard. Null-key
+    * groups are excluded (they never equi-join, and a mostly-null key
+    * would otherwise read as one giant block); a rule with no non-null
+    * key on a side reads 0. Each side is scanned once; the collect is
+    * 2·|rules| rows, bounded by contract. Rejects rule sets the
+    * encoding gate fails. */
   def hottestBlocks(left: DataFrame, right: DataFrame,
                     rules: Seq[(Seq[Column], Seq[Column])]): Seq[(Long, Long)] = {
-    require(rules.nonEmpty, "need at least one blocking rule")
-    val rows = hottestPerRule(left, rules.map(_._1))
-      .select(col("__rule"), lit(0).as("__side"), col("__mx"))
-      .unionByName(hottestPerRule(right, rules.map(_._2))
-        .select(col("__rule"), lit(1).as("__side"), col("__mx")))
+    val (lT, rT) = encodedOrReject(left, right, rules)
+    def hottest(tagged: DataFrame, ruleCol: String, keyCol: String,
+                side: Int): DataFrame =
+      blockCounts(tagged, ruleCol, keyCol, "__n")
+        .groupBy(col("__rule")).agg(max(col("__n")).as("__mx"))
+        .select(col("__rule"), lit(side).as("__side"), col("__mx"))
+    val rows = hottest(lT, "__lrule", "__lkey", 0)
+      .unionByName(hottest(rT, "__rrule", "__rkey", 1))
       .collect()
     val m = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     rules.indices.map(i =>
       (m.getOrElse((i, 0), 0L), m.getOrElse((i, 1), 0L)))
   }
 
-  /** The [[calibrateMaxBlock]] clamp formula over an already-measured
-    * hottest-right-block size (0 or negative = empty profile). */
+  /** Data-derived `maxBlock` for the skew guards from the hottest RIGHT
+    * block across rules (0 or negative = empty profile). The 1-D guard
+    * bounds per-salt pair work at ~maxBlock · R, so the left-block cap
+    * that holds one shuffle group to `targetPairsPerTask` pairs is
+    * targetPairsPerTask / max R — one cap for every rule, because
+    * [[unionBlocks]] guards one join. Clamped to [minBlock, maxCap]: a
+    * fixture-degenerate right side must not drive the cap to 1 and salt
+    * EVERYTHING, and an empty or all-cold profile must not disable the
+    * guard. */
   def maxBlockFromHottest(maxRight: Long,
                           targetPairsPerTask: Long = 4L * 1000 * 1000,
                           minBlock: Int = 1024,
@@ -412,28 +396,22 @@ object Linkage {
       math.max(minBlock.toLong, targetPairsPerTask / maxRight)).toInt
   }
 
+  /** Blocking-rule pre-flight — splink's
+    * `count_comparisons_from_blocking_rule` analysis (the tool used to
+    * budget the reference's 10 prediction rules before running them):
+    * for each rule, the candidate-pair volume computed from per-block
+    * cardinalities — sum over blocks of nL·nR — WITHOUT materializing a
+    * single pair. Each side is scanned once through the (rule, key)
+    * encoder, ONE aggregation per side counts every rule's blocks, and
+    * ONE join multiplies the per-block cardinalities. Returns one row per
+    * rule: (match_key, n_blocks, n_pairs, max_block_pairs). Rejects rule
+    * sets the encoding gate fails. */
   def blockProfile(left: DataFrame, right: DataFrame,
                    rules: Seq[(Seq[Column], Seq[Column])]): DataFrame = {
-    require(rules.nonEmpty, "need at least one blocking rule")
-    // Round 18 (plan-size diet): the per-rule form planned 2 aggregations
-    // + 1 join PER RULE over re-planned copies of each side's whole
-    // lineage — q189's 10 production rules produced a 1173-line /
-    // 80-Exchange initial plan whose driver-side analysis dominated the
-    // lane, and at scale it re-scanned each side once per rule. Fused:
-    // each side is scanned ONCE, an explode emits one (rule, key) row per
-    // rule (the same ×|rules| row replication a grouping-sets Expand
-    // would produce), ONE aggregation counts every rule's blocks, and ONE
-    // join multiplies the per-block cardinalities. Key tuples are encoded
-    // as array<string> (rule arity varies); the encoding preserves the
-    // per-rule groupBy semantics exactly: distinct values of one SQL type
-    // cast to distinct strings, rows with ANY null key component are
-    // dropped up front (the old null-unsafe join dropped their blocks),
-    // and float keys are pre-normalized (-0.0 → 0.0, matching the
-    // aggregate's NormalizeFloatingNumbers) so the string grouping can
-    // never split a group the typed grouping merged.
     val spark = left.sparkSession
-    val lc = ruleKeyCounts(left, rules.map(_._1), "__nl")
-    val rc = ruleKeyCounts(right, rules.map(_._2), "__nr")
+    val (lT, rT) = encodedOrReject(left, right, rules)
+    val lc = blockCounts(lT, "__lrule", "__lkey", "__nl")
+    val rc = blockCounts(rT, "__rrule", "__rkey", "__nr")
     // per-block products and their sum are computed in decimal(38,0):
     // at the 100 TB scale this tool exists for, a single hot block's
     // nl*nr (or the rule total) can exceed Long and non-ANSI Long
@@ -457,41 +435,6 @@ object Linkage {
       .select(col("match_key"),
         coalesce(col("n_blocks"), lit(0L)).as("n_blocks"),
         col("n_pairs"), col("max_block_pairs"))
-  }
-
-  /** Data-derived `maxBlock` for [[saltBySize]] / [[unionBlocks]]: the
-    * 1-D guard bounds per-salt pair work at ~maxBlock · R, where R is the
-    * hottest key's RIGHT-side row count — so the left-block cap that
-    * holds one shuffle group to `targetPairsPerTask` pairs is
-    * targetPairsPerTask / max R. This computes max R from the same
-    * map-side-combinable per-key counts [[blockProfile]] uses (pairs are
-    * never materialized): one small aggregate per rule, max across rules
-    * (because [[unionBlocks]] applies ONE cap to every rule's join), one
-    * 1-row collect (bounded by contract). The result is clamped to
-    * [minBlock, maxCap]: a fixture-degenerate right side (max R ≈ corpus)
-    * must not drive the cap to 1 and salt EVERYTHING, and an empty or
-    * all-cold profile must not disable the guard entirely. Calibrating
-    * from the data replaces a static guess that is either too tight
-    * (needless replication) or too loose (the quadratic hot task the
-    * guard exists to prevent) when block-size distributions drift —
-    * exactly the pre-flight→run discipline splink documents for its
-    * blocking rules. */
-  def calibrateMaxBlock(right: DataFrame, rightRules: Seq[Seq[Column]],
-                        targetPairsPerTask: Long = 4L * 1000 * 1000,
-                        minBlock: Int = 1024,
-                        maxCap: Int = 1 << 20): Int = {
-    require(rightRules.nonEmpty, "need at least one blocking rule")
-    require(targetPairsPerTask >= 1 && minBlock >= 1 && maxCap >= minBlock,
-      "need targetPairsPerTask >= 1 and 1 <= minBlock <= maxCap")
-    // Round 18: one fused scan of `right` for every rule (ruleKeyCounts
-    // drops null-key rows — they never survive the null-unsafe
-    // equi-joins, and a mostly-null blocking key would otherwise drive
-    // max R toward the corpus size and over-salt every rule), then the
-    // driver-side clamp. One action, |rules| rows collected.
-    val row = hottestPerRule(right, rightRules)
-      .agg(max(col("__mx"))).head
-    maxBlockFromHottest(if (row.isNullAt(0)) 0L else row.getLong(0),
-      targetPairsPerTask, minBlock, maxCap)
   }
 
   /** Blocked fuzzy join: equi-join on `blockKeys`, keep pairs with
@@ -635,18 +578,6 @@ object Linkage {
     * exact brute-force nearest-neighbor semantics (bounded corpora /
     * oracle replay — q97 does this explicitly).
     *
-    * INSTRUMENTATION (round 17 — the five-round q97 driver-vs-builder gap):
-    * each of the lane's ≤3 blocking actions prints ONE stderr line,
-    * `[linkage] linkIdsCrossYear stage=<name> wall=<s>`, naming the stages
-    * whose lazy work that barrier absorbs — `cc:edge-materialize` (banded
-    * near-pair edges + the distinct-edge count), `cc:label` (union-find /
-    * star loop), and `finalize` (year re-split + orphan top-1 join + the
-    * final label union, all inside the returned frame's localCheckpoint) —
-    * plus a `total` line. Wall time only, measured around the blocking
-    * call; zero extra jobs, zero plan change. A contended environment
-    * shows up as ONE of these lines inflating: that line is the next
-    * fix's target.
-    *
     * @return (idCol, yearCol, record_label) */
   def linkIdsCrossYear(records: DataFrame, idCol: String, yearCol: String,
                        embCol: String, dim: Int, simThreshold: Double,
@@ -661,10 +592,6 @@ object Linkage {
                        // guarantees one record per year per sub-cluster
                        // and replays in SQL (q97's oracle).
                        agglomerativeSplit: Option[Double] = None): DataFrame = {
-    val tTotal = System.nanoTime()
-    def announce(stage: String, wall: Double): Unit =
-      System.err.println(
-        f"[linkage] linkIdsCrossYear stage=$stage wall=$wall%.3fs")
     val ids = records.select(col(idCol).cast("long").as(idCol),
       col(yearCol), col(embCol))
     // 1. blocked near-pair edges, same-year pairs vetoed
@@ -674,9 +601,8 @@ object Linkage {
       .join(ids.select(col(idCol).as("id_b"), col(yearCol).as("__yb")), "id_b")
       .where(col("__ya") =!= col("__yb"))
       .select("id_a", "id_b")
-    // 2. cluster (the CC call's two blocking actions announce themselves;
-    // cc:edge-materialize absorbs the whole step-1 edge lineage)
-    val cc = ConnectedComponents.run(edges, "id_a", "id_b", timer = announce)
+    // 2. cluster
+    val cc = ConnectedComponents.run(edges, "id_a", "id_b")
       .withColumnRenamed("v", idCol)
     // 3. re-split clusters that chained duplicate years together
     val clustered = ids.join(cc, Seq(idCol))
@@ -749,13 +675,10 @@ object Linkage {
     // branches carry the year, so the old (ids ⋈ union) reattach join —
     // one more shuffle/broadcast stage over the whole record set — is
     // gone (round 18); rows are identical by construction.
-    val tFin = System.nanoTime()
     val out = labeled.unionByName(orphanLabels)
       .select(col(idCol), col(yearCol), col("record_label"))
       .localCheckpoint()
-    announce("finalize", (System.nanoTime() - tFin) / 1e9)
     labeled.unpersist(blocking = false)
-    announce("total", (System.nanoTime() - tTotal) / 1e9)
     out
   }
 }

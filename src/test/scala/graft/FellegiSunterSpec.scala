@@ -188,4 +188,16 @@ class FellegiSunterSpec extends SparkSpec {
       FS.nameComparisonLevel(col("l"), col("r"), Seq(0.7, 0.9))
     }
   }
+
+  test("comparison names reserved for the sentinel rows are rejected") {
+    // collectWeightsAndPrior and emTrainM carry the prior and lambda as
+    // rows named "__prior" / "__lam"; a real comparison of that name
+    // would be silently misread as one
+    for (name <- Seq("__prior", "__lam")) {
+      val e = intercept[IllegalArgumentException](
+        Comparison(name, when(col("a") === col("b"), 2).otherwise(1), 2))
+      assert(e.getMessage.contains(name) &&
+        e.getMessage.contains("reserved"), e.getMessage)
+    }
+  }
 }

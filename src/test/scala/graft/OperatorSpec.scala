@@ -247,10 +247,6 @@ class OperatorSpec extends SparkSpec {
         localEdgeThreshold = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(local == dist)
-    // the min-label + pointer-jump loop stays available and agrees too
-    val lbl = graph.ConnectedComponents.runLabelProp(edges, "src", "dst")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(local == lbl)
     assert(local(6L) == 1L && local(12L) == 10L && local(21L) == 20L)
   }
 

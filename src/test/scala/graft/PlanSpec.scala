@@ -422,6 +422,29 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Generate"), p)
   }
 
+  test("linkage capstone: salted candidate join is ONE fused (rule, key) join") {
+    // the capstone's guarded candidate generation (maxBlock > 0) rides
+    // the same fused (rule, key) join as q177/q188: no Union of per-rule
+    // joins, and each side's tagging explode planned once in the final
+    // adaptive plan. (The 1-D guard's left block-size table is its own
+    // query stage; at fixture scale it holds no hot block, so AQE folds
+    // its left join away.) The only other generator is the guard's salt
+    // replication on the right.
+    val df = Etl.buildLinkageWide(spark, sf)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(p.contains("Final Plan"), p)
+    assert(!p.contains("Union"), p)
+    assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    val tagging = p.linesIterator.filter(l =>
+      l.contains("Generate explode(array(struct(r, 0, k")).toSeq
+    assert(tagging.count(_.contains("l_canon")) == 1, p)
+    assert(tagging.count(_.contains("r_canon")) == 1, p)
+    assert("Generate explode\\(sequence".r.findAllIn(p).size == 1, p)
+  }
+
   test("q199 multi-probe LSH: candidates stay an equi-join; probes query-side") {
     // corpus side carries BASE memberships only (same 8 structs as q43 —
     // one persisted index serves both); the probe expansion (margins,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -331,6 +332,69 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Block-key pools, one per key type the (rule, key) encoder accepts,
+    * each holding values a careless string encoding would merge or split:
+    * -0.0 vs 0.0 and NaN, equal decimals written with different scales,
+    * and two instants an hour apart that share a New York local time. */
+  private def keyPools: Seq[(String, Seq[Column])] = {
+    def ts(s: String) = lit(java.sql.Timestamp.from(java.time.Instant.parse(s)))
+    def dec(s: String) = lit(new java.math.BigDecimal(s)).cast("decimal(10,2)")
+    Seq(
+      "int" -> Seq(lit(1), lit(2), lit(-3), lit(0)),
+      "long" -> Seq(lit(1L), lit(2L), lit(Long.MinValue), lit(0L)),
+      "string" -> Seq(lit("a"), lit("b"), lit(""), lit("a ")),
+      "double" -> Seq(lit(0.0), lit(-0.0), lit(Double.NaN), lit(1.5)),
+      "decimal" -> Seq(dec("1.10"), dec("1.1"), dec("-2.00"), dec("0")),
+      "date" -> Seq("2024-01-01", "2024-11-03", "1970-01-01", "2024-02-29")
+        .map(d => lit(java.sql.Date.valueOf(d))),
+      "timestamp" -> Seq(ts("2024-11-03T05:30:00Z"), ts("2024-11-03T06:30:00Z"),
+        ts("1970-01-01T00:00:00Z"), ts("2024-03-10T07:00:00Z")))
+  }
+
+  /** One generated frame pair per key pool: (id, k, p) per side, where k
+    * is drawn from the pool by the skewed generator's key ("hot"
+    * dominates; every fifth id is null) and p is the id's parity. Runs
+    * in the America/New_York session time zone, where the pool's two
+    * fall-back instants print alike. */
+  private def typedPairFrames(
+      body: (String, DataFrame, DataFrame) => Unit): Unit = {
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try keyPools.zipWithIndex.foreach { case ((name, pool), t) =>
+      val (ls, rs) = pairFrameGen.pureApply(Gen.Parameters.default, Seed(42L + t))
+      def side(rows: List[(Long, String)], s: String) = rows.toDF(s"${s}_id", "g")
+        .select(col(s"${s}_id"),
+          when(col(s"${s}_id") % 5 =!= 4, element_at(array(pool: _*),
+            when(col("g") === "hot", 1).when(col("g") === "c1", 2)
+              .when(col("g") === "c2", 3).otherwise(4))).as(s"${s}_k"),
+          pmod(col(s"${s}_id"), lit(2)).as(s"${s}_p"))
+      body(name, side(ls, "l"), side(rs, "r"))
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+  }
+
+  private val keyParityRules = Seq(
+    (Seq(col("l_k")), Seq(col("r_k"))),
+    (Seq(col("l_p")), Seq(col("r_p"))))
+
+  /** unionBlocks output against the typed per-rule equi-joins over the
+    * same frames: the pair set is their union, n_rules counts the rules
+    * that matched, match_key names the first. */
+  private def assertUnionMatchesTypedJoins(l: DataFrame, r: DataFrame,
+      ub: DataFrame, clue: String): Unit = {
+    val got = ub
+      .select(col("l_id"), col("r_id"), col("match_key"), col("n_rules"))
+      .collect().map(x => ((x.getLong(0), x.getLong(1)),
+        (x.getInt(2), x.getLong(3)))).toMap
+    val inR = Seq(col("l_k") === col("r_k"), col("l_p") === col("r_p"))
+      .map(c => l.join(r, c).select("l_id", "r_id").collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSet)
+    assert(got.keySet === (inR(0) ++ inR(1)), clue)
+    got.foreach { case (p, (mk, nr)) =>
+      assert(nr === inR.count(_(p)).toLong, s"$clue: pair $p n_rules")
+      assert(mk === inR.indexWhere(_(p)), s"$clue: pair $p match_key")
+    }
+  }
+
   test("unionBlocks == distinct OR-join; n_rules/match_key consistent (property)") {
     import graft.linkage.Linkage
     forAll(pairFrameGen, 8) { case (ls, rs) =>
@@ -339,25 +403,19 @@ class PropertySpec extends SparkSpec {
         .withColumn("l_p", pmod(col("l_id"), lit(2)))
       val r = rs.toDF("r_id", "r_k")
         .withColumn("r_p", pmod(col("r_id"), lit(2)))
-      val rules = Seq(
-        (Seq(col("l_k")), Seq(col("r_k"))),
-        (Seq(col("l_p")), Seq(col("r_p"))))
-      val ub = Linkage.unionBlocks(l, r, "l_id", "r_id", rules)
-        .select(col("l_id"), col("r_id"), col("match_key"), col("n_rules"))
-        .collect().map(x => ((x.getLong(0), x.getLong(1)),
-          (x.getInt(2), x.getLong(3)))).toMap
-      val inR0 = l.join(r, col("l_k") === col("r_k"))
-        .select("l_id", "r_id").collect()
-        .map(x => (x.getLong(0), x.getLong(1))).toSet
-      val inR1 = l.join(r, col("l_p") === col("r_p"))
-        .select("l_id", "r_id").collect()
-        .map(x => (x.getLong(0), x.getLong(1))).toSet
-      assert(ub.keySet === (inR0 ++ inR1))
-      ub.foreach { case (p, (mk, nr)) =>
-        val exp = (if (inR0(p)) 1 else 0) + (if (inR1(p)) 1 else 0)
-        assert(nr === exp.toLong, s"pair $p n_rules")
-        assert(mk === (if (inR0(p)) 0 else 1), s"pair $p match_key")
-      }
+      assertUnionMatchesTypedJoins(l, r,
+        Linkage.unionBlocks(l, r, "l_id", "r_id", keyParityRules),
+        s"nl=${ls.size} nr=${rs.size}")
+    }
+    // every key type the encoder accepts, with the skew guard off, 1-D
+    // and 2-D (maxBlock 2 salts every hot block)
+    typedPairFrames { (name, l, r) =>
+      for ((mode, maxBlock, rules2D) <- Seq(("off", 0, Nil),
+          ("1-D", 2, Nil), ("2-D", 2, Seq(true))))
+        assertUnionMatchesTypedJoins(l, r,
+          Linkage.unionBlocks(l, r, "l_id", "r_id", keyParityRules,
+            maxBlock = maxBlock, rules2D = rules2D),
+          s"$name keys, guard $mode")
     }
   }
 
@@ -371,6 +429,15 @@ class PropertySpec extends SparkSpec {
         .head
       val actual = l.join(r, col("l_k") === col("r_k")).count()
       assert(prof.getLong(2) === actual)
+    }
+    typedPairFrames { (name, l, r) =>
+      val prof = Linkage.blockProfile(l, r, keyParityRules)
+        .collect().map(x => x.getInt(0) -> x).toMap
+      keyParityRules.zipWithIndex.foreach { case ((lk, rk), i) =>
+        val actual = l.join(r, lk.head === rk.head).count()
+        val got = if (prof(i).isNullAt(2)) 0L else prof(i).getLong(2)
+        assert(got === actual, s"$name keys, rule $i")
+      }
     }
   }
 
@@ -550,8 +617,12 @@ class PropertySpec extends SparkSpec {
       case (dist, target) =>
         val right = dist.flatMap { case (key, c) =>
           (1 to c).map(i => (key, i)) }.toDF("blk", "row_id")
-        val got = graft.linkage.Linkage.calibrateMaxBlock(right,
-          Seq(Seq(col("blk"))), targetPairsPerTask = target,
+        // the capstone's calibration: hottestBlocks' hottest right block
+        // through the clamp formula
+        val hot = graft.linkage.Linkage.hottestBlocks(right, right,
+          Seq((Seq(col("blk")), Seq(col("blk")))))
+        val got = graft.linkage.Linkage.maxBlockFromHottest(
+          hot.map(_._2).max, targetPairsPerTask = target,
           minBlock = 5, maxCap = 50000)
         // duplicate keys in the generated dist merge into one block
         val maxR = dist.groupBy(_._1).map(_._2.map(_._2).sum).max

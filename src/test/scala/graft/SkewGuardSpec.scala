@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.linkage.Linkage
 
@@ -185,18 +186,26 @@ class SkewGuardSpec extends SparkSpec {
     assert(g2.collect().toSet === p2.collect().toSet)
   }
 
+  /** Both-sides-hot flags from the hottestBlocks pre-flight, the way the
+    * linkage capstone routes rules to the 2-D guard. */
+  private def bothSidesHot(l: DataFrame, r: DataFrame,
+                           rules: Seq[(Seq[Column], Seq[Column])],
+                           maxBlock: Int): Seq[Boolean] =
+    Linkage.hottestBlocks(l, r, rules).map { case (nl, nr) =>
+      nl > maxBlock && nr > maxBlock }
+
   test("detectBothSidesHot flags only rules hot on BOTH sides") {
     // bigLeft/bigRight: "aaa" holds 300 left + 200 right rows → hot at
     // maxBlock 50; hotLeft/hotRight: 400 left but only 60 right → NOT
     // both-sides-hot at maxBlock 100
-    assert(Linkage.detectBothSidesHot(bigLeft, bigRight,
+    assert(bothSidesHot(bigLeft, bigRight,
       Seq((Seq(col("blk")), Seq(col("rblk")))), maxBlock = 50)
       === Seq(true))
-    assert(Linkage.detectBothSidesHot(hotLeft, hotRight,
+    assert(bothSidesHot(hotLeft, hotRight,
       Seq((Seq(col("blk")), Seq(col("rblk")))), maxBlock = 100)
       === Seq(false))
     // per-rule: rule 0 both-hot, rule 1 (distinct ids) cold
-    assert(Linkage.detectBothSidesHot(bigLeft, bigRight,
+    assert(bothSidesHot(bigLeft, bigRight,
       Seq((Seq(col("blk")), Seq(col("rblk"))),
         (Seq(col("l_id")), Seq(col("r_id")))), maxBlock = 50)
       === Seq(true, false))
@@ -211,9 +220,10 @@ class SkewGuardSpec extends SparkSpec {
     val nr = (1 to 300).map(i =>
       (i.toLong, if (i <= 290) None else Some(s"k${i % 3}")))
       .toDF("r_id", "rblk")
-    assert(Linkage.detectBothSidesHot(nl, nr,
-      Seq((Seq(col("blk")), Seq(col("rblk")))), maxBlock = 50)
-      === Seq(false))
+    val rules = Seq((Seq(col("blk")), Seq(col("rblk"))))
+    // the 10 non-null rows split 4/3/3 over k0/k1/k2
+    assert(Linkage.hottestBlocks(nl, nr, rules) === Seq((4L, 4L)))
+    assert(bothSidesHot(nl, nr, rules, maxBlock = 50) === Seq(false))
   }
 
   test("unionBlocks with a 2-D-routed rule equals the unguarded union") {
@@ -222,7 +232,7 @@ class SkewGuardSpec extends SparkSpec {
       rules).select("l_id", "r_id", "match_key", "n_rules")
     val routed = Linkage.unionBlocks(bigLeft, bigRight, "l_id", "r_id",
         rules, maxBlock = 50,
-        rules2D = Linkage.detectBothSidesHot(bigLeft, bigRight, rules, 50))
+        rules2D = bothSidesHot(bigLeft, bigRight, rules, 50))
       .select("l_id", "r_id", "match_key", "n_rules")
     assert(routed.exceptAll(plain).count() === 0)
     assert(plain.exceptAll(routed).count() === 0)
@@ -313,16 +323,28 @@ class SkewGuardSpec extends SparkSpec {
     assert(guarded.collect().toSet === plain.collect().toSet)
   }
 
+  /** The capstone's cap calibration: the clamp formula over the hottest
+    * right block across rules. */
+  private def calibrated(left: DataFrame, right: DataFrame,
+                         rules: Seq[(Seq[Column], Seq[Column])],
+                         targetPairsPerTask: Long, minBlock: Int,
+                         maxCap: Int): Int =
+    Linkage.maxBlockFromHottest(
+      Linkage.hottestBlocks(left, right, rules).map(_._2).max,
+      targetPairsPerTask, minBlock, maxCap)
+
+  private val blkRule = Seq((Seq(col("blk")), Seq(col("rblk"))))
+
   test("calibrateMaxBlock = targetPairs / hottest right block, clamped") {
     // hotRight's hottest block is "aaa" with 60 rows → cap = 6000/60 =
     // 100 at a 6000-pair task budget (inside the clamps)
-    val cap = Linkage.calibrateMaxBlock(hotRight, Seq(Seq(col("rblk"))),
+    val cap = calibrated(hotLeft, hotRight, blkRule,
       targetPairsPerTask = 6000, minBlock = 10, maxCap = 100000)
     assert(cap === 100)
     // the formula takes the max across rules: a second rule blocking on
     // a constant makes the whole right side one 90-row block → 6000/90
-    val cap2 = Linkage.calibrateMaxBlock(hotRight,
-      Seq(Seq(col("rblk")), Seq(lit("all"))),
+    val cap2 = calibrated(hotLeft, hotRight,
+      blkRule :+ ((Seq(lit("all")), Seq(lit("all")))),
       targetPairsPerTask = 6000, minBlock = 10, maxCap = 100000)
     assert(cap2 === 66)
   }
@@ -330,15 +352,98 @@ class SkewGuardSpec extends SparkSpec {
   test("calibrateMaxBlock clamps: floor, cap, and empty right side") {
     // degenerate: tiny budget over a fat block floors at minBlock (the
     // guard must not salt every row individually)
-    assert(Linkage.calibrateMaxBlock(hotRight, Seq(Seq(col("rblk"))),
+    assert(calibrated(hotLeft, hotRight, blkRule,
       targetPairsPerTask = 1, minBlock = 10, maxCap = 100000) === 10)
     // cold: huge budget is clamped at maxCap (the guard stays armed)
-    assert(Linkage.calibrateMaxBlock(hotRight, Seq(Seq(col("rblk"))),
+    assert(calibrated(hotLeft, hotRight, blkRule,
       targetPairsPerTask = Long.MaxValue, minBlock = 10,
       maxCap = 100000) === 100000)
     // empty right side → no blocks → maxCap (nothing to guard)
-    assert(Linkage.calibrateMaxBlock(hotRight.where(lit(false)),
-      Seq(Seq(col("rblk"))), targetPairsPerTask = 6000, minBlock = 10,
+    assert(calibrated(hotLeft, hotRight.where(lit(false)), blkRule,
+      targetPairsPerTask = 6000, minBlock = 10,
       maxCap = 100000) === 100000)
+  }
+
+  // ---- misuse fails loudly ---------------------------------------------
+
+  test("blockProfile and hottestBlocks reject a rule the encoding gate fails") {
+    // int vs double keys: the typed join coerces 5 = 5.0, the string
+    // encoding would compare "5" with "5.0" — the pre-flight must refuse
+    // instead of miscounting
+    val l = Seq((1L, 5), (2L, 6)).toDF("l_id", "l_k")
+    val r = Seq((10L, 5.0), (11L, 7.0)).toDF("r_id", "r_k")
+    val rules = Seq((Seq(col("l_id")), Seq(col("r_id"))),
+      (Seq(col("l_k")), Seq(col("r_k"))))
+    val e1 = intercept[IllegalArgumentException](
+      Linkage.blockProfile(l, r, rules))
+    assert(e1.getMessage.contains("blocking rule 1"), e1.getMessage)
+    assert(e1.getMessage.contains("(int)") &&
+      e1.getMessage.contains("(double)"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Linkage.hottestBlocks(l, r, rules))
+    assert(e2.getMessage.contains("blocking rule 1"), e2.getMessage)
+    // a non-atomic key type fails the gate even when both sides agree
+    val la = Seq((1L, Seq("a"))).toDF("l_id", "l_arr")
+    val ra = Seq((10L, Seq("a"))).toDF("r_id", "r_arr")
+    val e3 = intercept[IllegalArgumentException](Linkage.blockProfile(la, ra,
+      Seq((Seq(col("l_arr")), Seq(col("r_arr"))))))
+    assert(e3.getMessage.contains("blocking rule 0") &&
+      e3.getMessage.contains("array<string>"), e3.getMessage)
+    // unionBlocks keeps its typed per-rule fallback for the same rules
+    val ub = Linkage.unionBlocks(l, r, "l_id", "r_id", rules)
+      .select("l_id", "r_id", "match_key").as[(Long, Long, Int)]
+      .collect().toSet
+    assert(ub === Set((1L, 10L, 1)))
+  }
+
+  test("unionBlocks rejects shared left/right column names") {
+    val l = Seq((1L, "a")).toDF("l_id", "blk")
+    val r = Seq((10L, "a")).toDF("r_id", "blk")
+    val e = intercept[IllegalArgumentException](Linkage.unionBlocks(
+      l, r, "l_id", "r_id", Seq((Seq(l("blk")), Seq(r("blk"))))))
+    assert(e.getMessage.contains("disjoint") &&
+      e.getMessage.contains("blk"), e.getMessage)
+  }
+
+  test("unionBlocks rejects the reserved tag column names") {
+    val rules = Seq((Seq(col("l_blk")), Seq(col("r_blk"))))
+    val r = Seq((10L, "a")).toDF("r_id", "r_blk")
+    for (name <- Seq("__lrule", "__lkey", "__rrule", "__rkey", "__rk")) {
+      val l = Seq((1L, "a", 0)).toDF("l_id", "l_blk", name)
+      val e = intercept[IllegalArgumentException](
+        Linkage.unionBlocks(l, r, "l_id", "r_id", rules))
+      assert(e.getMessage.contains("reserves") &&
+        e.getMessage.contains(s"got $name"), e.getMessage)
+    }
+    // the pre-flight profiles share the encoder, so they refuse too
+    val l = Seq((1L, "a", 0)).toDF("l_id", "l_blk", "__rk")
+    intercept[IllegalArgumentException](Linkage.blockProfile(l, r, rules))
+    intercept[IllegalArgumentException](Linkage.hottestBlocks(l, r, rules))
+  }
+
+  test("encoded timestamp keys match by instant, not session-zone text") {
+    // 2024-11-03 01:30 happens twice in America/New_York (EDT, then EST
+    // after the fall-back): two instants an hour apart share one
+    // local-time string, so a string-cast key would cross-match them
+    val t1 = java.sql.Timestamp.from(java.time.Instant.parse("2024-11-03T05:30:00Z"))
+    val t2 = java.sql.Timestamp.from(java.time.Instant.parse("2024-11-03T06:30:00Z"))
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val l = Seq((1L, t1, "x"), (2L, t2, "y")).toDF("l_id", "l_ts", "l_tag")
+      val r = Seq((10L, t1, "p"), (11L, t2, "q")).toDF("r_id", "r_ts", "r_tag")
+      val rules = Seq((Seq(col("l_ts")), Seq(col("r_ts"))),
+        (Seq(col("l_tag")), Seq(col("r_tag"))))
+      val typed = l.join(r, col("l_ts") === col("r_ts"))
+        .select("l_id", "r_id").as[(Long, Long)].collect().toSet
+      assert(typed === Set((1L, 10L), (2L, 11L)))
+      val ub = Linkage.unionBlocks(l, r, "l_id", "r_id", rules)
+        .select("l_id", "r_id").as[(Long, Long)].collect().toSet
+      assert(ub === typed)
+      val prof = Linkage.blockProfile(l, r, rules)
+        .where(col("match_key") === 0).head
+      assert(prof.getLong(1) === 2L && prof.getLong(2) === 2L, prof)
+      assert(Linkage.hottestBlocks(l, r, rules).head === ((1L, 1L)))
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
   }
 }
