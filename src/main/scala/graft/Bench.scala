@@ -73,12 +73,15 @@ object Bench {
       else SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.forall(_.contains(n)) }
     var queriesSinceGc = 0
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // None = the pass threw: its time-to-exception is not a timing
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       // session hygiene OUTSIDE the timed window: drop every cache and
       // localCheckpoint block the query left behind, so each number
@@ -92,7 +95,7 @@ object Bench {
       // being timed instead of paying GC inside a later query's window
       queriesSinceGc += 1
       if (queriesSinceGc >= 16) { queriesSinceGc = 0; System.gc() }
-      dt
+      if (ok) Some(dt) else None
     }
     val firstPass = selected.map { case (name, fn) => name -> timeOne(name, fn) }
     // Min-of-two, for EVERY query: this host shows per-query noise from
@@ -111,10 +114,15 @@ object Bench {
     // inside one long contention burst). BOTH numbers are recorded:
     // `queries` carries the final (min) time, `__first_pass` the raw
     // pass-1 measurement, so round-over-round comparisons can pick a
-    // consistent basis.
+    // consistent basis. A failed pass never wins: lanes with no
+    // successful pass go to `failed_lanes` and stay out of the median,
+    // the cutoff and the totals.
     val byName = selected.toMap
-    val secondPass = firstPass.map { case (name, dt1) =>
-      name -> math.min(dt1, timeOne(name, byName(name)))
+    val (secondPass, failedLanes) = firstPass.map { case (name, dt1) =>
+      name -> (dt1 ++ timeOne(name, byName(name))).minOption
+    }.partitionMap {
+      case (name, Some(dt)) => Left(name -> dt)
+      case (name, None) => Right(name)
     }
     val med = {
       val s = secondPass.map(_._2).sorted
@@ -124,7 +132,7 @@ object Bench {
     val results = secondPass.map { case (name, dt) =>
       if (dt <= cutoff) name -> dt
       else {
-        val best = math.min(dt, timeOne(name, byName(name)))
+        val best = (dt +: timeOne(name, byName(name)).toSeq).min
         System.err.println(
           f"[bench] $name outlier: $dt%.2f s min-of-two, $best%.2f s best of 3")
         name -> best
@@ -457,14 +465,14 @@ object Bench {
       } finally graft.util.SessionHygiene.releaseAll(spark)
     val total = results.map(_._2).sum
     val firstMap = firstPass.toMap
+    val failedJson = failedLanes.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson = results.sortBy(-_._2)
       .map { case (k, v) =>
-        val fp = firstMap(k)
-        "\"" + k + "\":" + jnum(v) +
-          (if (fp != v) ",\"" + k + "__first_pass\":" + jnum(fp) else "")
+        "\"" + k + "\":" + jnum(v) + firstMap(k).filter(_ != v)
+          .map(fp => ",\"" + k + "__first_pass\":" + jnum(fp)).getOrElse("")
       }
       .mkString(
-        s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"total_first_pass":${jnum(firstPass.map(_._2).sum)},"etl_capstone_sec":${jnum(capstoneSec)},"etl_capstone_core_sec":${jnum(capstoneCore)},"etl_capstone_checks_sec":${jnum(capstoneChecks)},"etl_capstone_first_pass_sec":${jnum(capstoneFpSec)},"etl_capstone_first_pass_core_sec":${jnum(capstoneFpCore)},"etl_capstone_first_pass_checks_sec":${jnum(capstoneFpChecks)},"corpus_capstone_sec":${jnum(corpusSec)},"corpus_capstone_core_sec":${jnum(corpusCore)},"corpus_capstone_checks_sec":${jnum(corpusChecks)},"corpus_capstone_first_pass_sec":${jnum(corpusFpSec)},"corpus_capstone_first_pass_core_sec":${jnum(corpusFpCore)},"corpus_capstone_first_pass_checks_sec":${jnum(corpusFpChecks)},"linkage_capstone_sec":${jnum(linkSec)},"linkage_capstone_core_sec":${jnum(linkCore)},"linkage_capstone_checks_sec":${jnum(linkChecks)},"linkage_capstone_first_pass_sec":${jnum(linkFpSec)},"linkage_capstone_first_pass_core_sec":${jnum(linkFpCore)},"linkage_capstone_first_pass_checks_sec":${jnum(linkFpChecks)},"latc_wmape_nano":$latcWmapeNano,"tubal_wmape_nano":$tubalWmapeNano,"latc_grid_wmape_nano":$latcGridNano,"median_grid_wmape_nano":$medianGridNano,"recall10_lsh_nano":$recallLshNano,"recall10_mplsh_nano":$recallMpLshNano,"recall10_ivf_nano":$recallIvfNano,"recall10_sq8_nano":$recallSq8Nano,"recall10_pq_nano":$recallPqNano,"recall10_pq_rerank_nano":$recallPqRerankNano,"recall10_ivfpq_rerank_nano":$recallIvfPqRerankNano,"recall10_ivfpq_nano":$recallIvfPqNano,"recall1_orphan_nano":$recallOrphanNano,"recall1_orphan_probed_nano":$recallOrphanProbedNano,"recall5_hardneg_nano":$recallHardNegNano,"recall_eucpairs_nano":$recallEucNano,"recall_semdedup_nano":$recallSemDedupNano,"recall_semdedup_probed_nano":$recallSemDedupProbedNano,"mrr_nano":$mrrNano,"p10_nano":$p10Nano,"r10_nano":$r10Nano,"queries":{""",
+        s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"total_first_pass":${jnum(firstPass.flatMap(_._2).sum)},"etl_capstone_sec":${jnum(capstoneSec)},"etl_capstone_core_sec":${jnum(capstoneCore)},"etl_capstone_checks_sec":${jnum(capstoneChecks)},"etl_capstone_first_pass_sec":${jnum(capstoneFpSec)},"etl_capstone_first_pass_core_sec":${jnum(capstoneFpCore)},"etl_capstone_first_pass_checks_sec":${jnum(capstoneFpChecks)},"corpus_capstone_sec":${jnum(corpusSec)},"corpus_capstone_core_sec":${jnum(corpusCore)},"corpus_capstone_checks_sec":${jnum(corpusChecks)},"corpus_capstone_first_pass_sec":${jnum(corpusFpSec)},"corpus_capstone_first_pass_core_sec":${jnum(corpusFpCore)},"corpus_capstone_first_pass_checks_sec":${jnum(corpusFpChecks)},"linkage_capstone_sec":${jnum(linkSec)},"linkage_capstone_core_sec":${jnum(linkCore)},"linkage_capstone_checks_sec":${jnum(linkChecks)},"linkage_capstone_first_pass_sec":${jnum(linkFpSec)},"linkage_capstone_first_pass_core_sec":${jnum(linkFpCore)},"linkage_capstone_first_pass_checks_sec":${jnum(linkFpChecks)},"latc_wmape_nano":$latcWmapeNano,"tubal_wmape_nano":$tubalWmapeNano,"latc_grid_wmape_nano":$latcGridNano,"median_grid_wmape_nano":$medianGridNano,"recall10_lsh_nano":$recallLshNano,"recall10_mplsh_nano":$recallMpLshNano,"recall10_ivf_nano":$recallIvfNano,"recall10_sq8_nano":$recallSq8Nano,"recall10_pq_nano":$recallPqNano,"recall10_pq_rerank_nano":$recallPqRerankNano,"recall10_ivfpq_rerank_nano":$recallIvfPqRerankNano,"recall10_ivfpq_nano":$recallIvfPqNano,"recall1_orphan_nano":$recallOrphanNano,"recall1_orphan_probed_nano":$recallOrphanProbedNano,"recall5_hardneg_nano":$recallHardNegNano,"recall_eucpairs_nano":$recallEucNano,"recall_semdedup_nano":$recallSemDedupNano,"recall_semdedup_probed_nano":$recallSemDedupProbedNano,"mrr_nano":$mrrNano,"p10_nano":$p10Nano,"r10_nano":$r10Nano,"failed_lanes":$failedJson,"queries":{""",
         ",", s"""},"sf":"$sfDir"}""")
     try {
       val w = new java.io.PrintWriter("bench_full.json")

@@ -596,16 +596,12 @@ object Etl {
     // Skew guard ON: the phonetic block key is degenerate-prone at
     // corpus scale (a very common name prefix puts L·R pairs in ONE
     // shuffle group; AQE splits skewed partitions, not a single giant
-    // key). One hottestBlocks action sizes the cap from the hottest right
-    // block (≤ ~4M pairs per salted group, clamped) and flags rules hot on
-    // BOTH sides for the 2-D tile guard. The guard is pair-for-pair
-    // identical to the plain join, so golden counts cannot move with it.
-    val hot = graft.linkage.Linkage.hottestBlocks(a, b, rules)
-    val maxBlock = graft.linkage.Linkage.maxBlockFromHottest(
-      hot.map(_._2).max)
-    val hot2d = hot.map { case (l, r) => l > maxBlock && r > maxBlock }
+    // key). The tile guard bounds every shuffle group at ~2048² ≈ 4.2M
+    // pairs whatever the data, so no pre-flight measures it. It is
+    // pair-for-pair identical to the plain join, so golden counts cannot
+    // move with it.
     val cand0 = graft.linkage.Linkage.unionBlocks(a, b, "l_id", "r_id",
-      rules, maxBlock = maxBlock, rules2D = hot2d)
+      rules, maxBlock = 2048)
     val cand = addLevels(cand0)
       .withColumn("weight_nano", FS.matchWeight(comps, wMap, priorNano))
       .withColumn("accepted", col("weight_nano") >= FS.acceptAt(0.9))

@@ -3103,8 +3103,8 @@ object SparkEntry {
   // Blocking-rule pre-flight — splink's count_comparisons analysis over
   // the q177 rule set: per-rule candidate-pair volume from per-block
   // cardinalities (sum of nL*nR), computed WITHOUT materializing pairs —
-  // the 100 TB budget check that picks the rule set and calibrates the
-  // skew guard's maxBlock. Output: one row per rule.
+  // the 100 TB budget check that picks the rule set. Output: one row per
+  // rule.
   private def q178(s: SparkSession, dir: String): DataFrame = {
     val (c, sup) = q177Sides(s, dir)
     graft.linkage.Linkage.blockProfile(c, sup, q177Rules)
@@ -3179,8 +3179,7 @@ object SparkEntry {
   // splink's count_comparisons pre-flight over the FULL 10-rule set:
   // one (n_blocks, n_pairs, max_block_pairs) row per production rule —
   // the realistic rule-budgeting run the reference would do before
-  // predict (q178 profiles the 2-rule subset). Pairs never materialize;
-  // the profile also calibrates saltBySize's maxBlock per rule.
+  // predict (q178 profiles the 2-rule subset). Pairs never materialize.
   private def q189(s: SparkSession, dir: String): DataFrame = {
     val (c, sup) = q188Sides(s, dir)
     graft.linkage.Linkage.blockProfile(c, sup, q188Rules)
@@ -3601,13 +3600,12 @@ object SparkEntry {
       t(s, dir, "documents"), "doc_id", "text")
 
   // ---- §2.3 both-sides skew-guarded join (2-D tile decomposition) --------
-  // The big-joins-big regime the 1-D saltBySize guard cannot bound: the
-  // planted (key % 5) blocking key makes EVERY block hot on BOTH sides,
-  // so each per-salt group of the 1-D guard would still hold
-  // ~maxBlock · R pairs. skewGuardedJoin2D decomposes each block's L×R
-  // pair matrix into ~maxBlock×maxBlock tiles — (row-salt, col-salt)
-  // shuffle groups, every pair meeting in exactly one tile — and
-  // maxBlock = 4 forces real multi-salt grids at every graded scale.
+  // The big-joins-big regime: the planted (key % 5) blocking key makes
+  // EVERY block hot on BOTH sides, so salting one side alone would still
+  // leave ~maxBlock · R pairs per salt. skewGuardedJoin decomposes each
+  // block's L×R pair matrix into ~maxBlock×maxBlock tiles — (row-salt,
+  // col-salt) shuffle groups, every pair meeting in exactly one tile —
+  // and maxBlock = 4 forces real multi-salt grids at every graded scale.
   // The guard is pair-for-pair identical to the plain equi-join, which
   // is precisely what the oracle replays: the exact pair count plus an
   // integer checksum over ALL pairs would expose any pair the tiling
@@ -3620,7 +3618,7 @@ object SparkEntry {
       .select(col("s_suppkey"),
         pmod(col("s_suppkey"), lit(5)).as("__rblk"),
         round(col("s_acctbal") * 100).cast("long").as("r_cents"))
-    graft.linkage.Linkage.skewGuardedJoin2D(c, sup,
+    graft.linkage.Linkage.skewGuardedJoin(c, sup,
         Seq(col("blk")), Seq(col("__rblk")), maxBlock = 4)
       .groupBy(col("blk"))
       .agg(count(lit(1)).as("n_pairs"),

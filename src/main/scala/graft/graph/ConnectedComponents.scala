@@ -29,8 +29,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object ConnectedComponents {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** @return (vertex "v", component) with component = min vertex id reachable.
     *
     * Routing: below `localEdgeThreshold` the edge list collects to a driver
@@ -39,8 +37,7 @@ object ConnectedComponents {
     * diameter, the safe default when the shape is unknown. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
           maxIter: Int = 25,
-          localEdgeThreshold: Long = 5000000L,
-          strict: Boolean = false): DataFrame = {
+          localEdgeThreshold: Long = 5000000L): DataFrame = {
     val e = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
@@ -62,7 +59,7 @@ object ConnectedComponents {
       // caller's maxIter is honored as-is (star rounds run 3 alternations
       // per iteration, so even the default 25 covers ~75 contractions —
       // far past O(log n) convergence for any realistic graph)
-      runStars(edges, srcCol, dstCol, maxIter = maxIter, strict = strict)
+      runStars(edges, srcCol, dstCol, maxIter = maxIter)
     }
   }
 
@@ -103,10 +100,11 @@ object ConnectedComponents {
     * The fixed point is a set of stars centered at each component's minimum
     * vertex, which is exactly the (v, component) labeling [[run]] returns.
     * Equality with the driver union-find is property-tested on random
-    * graphs (OperatorSpec).
+    * graphs (OperatorSpec). Throws IllegalStateException when `maxIter`
+    * iterations end before the fixed point.
     */
   def runStars(edges: DataFrame, srcCol: String, dstCol: String,
-               maxIter: Int = 50, strict: Boolean = false): DataFrame = {
+               maxIter: Int = 50): DataFrame = {
     val spark0 = edges.sparkSession
     val e0 = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
@@ -189,14 +187,13 @@ object ConnectedComponents {
       rddCur = rddNext
       i += 1
     }
+    // downstream linkage treats components as EXACT identity: labels that
+    // may split a component are never returned
     if (!converged) {
-      // downstream linkage treats components as EXACT identity — a caller
-      // that needs that guarantee opts into fail-fast instead of a warning
-      val msg = s"runStars: maxIter=$maxIter exhausted without signature " +
-        "convergence — returned labels may split components that one more " +
-        "round would have merged"
-      if (strict) throw new IllegalStateException(msg)
-      log.warn(msg)
+      rddCur.unpersist(blocking = false)
+      throw new IllegalStateException(s"runStars: maxIter=$maxIter " +
+        "exhausted without signature convergence — returned labels may " +
+        "split components that one more round would have merged")
     }
     // fixed point is (child, root) stars; roots + self-loop-only vertices
     // label themselves

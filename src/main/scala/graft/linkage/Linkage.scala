@@ -51,74 +51,48 @@ object Linkage {
         round(col("score"), 6).as("tfidf"))
   }
 
-  /** Skew guard for blocked pair joins: salt oversized blocks into
-    * sub-blocks so no single shuffle group holds more than ~`maxBlock`
-    * left rows in EXPECTATION (salts are hash-assigned, so a group can
-    * exceed the cap by a small factor from hash unevenness; the bound is
-    * statistical, not hard). The guard is ONE-SIDED: block sizes are
-    * measured on the LEFT side only and every right row of a hot block
-    * replicates to all of its salts, so per-task work is bounded by
-    * ~maxBlock·R for a block with R right rows — a key that is
-    * degenerate on BOTH sides needs [[saltBySize2D]].
-    * SEMANTICS-PRESERVING — the classic manual skew-join
-    * split, NOT a recall-lossy cap: a hot block of L left rows gets
-    * ceil(L/maxBlock) salts, each left row lands in exactly one salt
-    * (deterministic hash of the whole left row) and each right row is
-    * replicated to every salt of its block, so the joined pair set is
-    * bit-identical to the unguarded equi-join while the degenerate key
-    * (a very common name prefix at 100 TB) is spread across
-    * ceil(L/maxBlock) tasks instead of one quadratic hot partition.
-    * AQE's OptimizeSkewedJoin cannot do this — it splits skewed
+  /** Skew guard for blocked pair joins: split degenerate blocks (a very
+    * common name prefix at 100 TB) into tiles so no shuffle group holds
+    * more than ~`maxBlock` rows of either side — about maxBlock² pairs,
+    * whatever the data. SEMANTICS-PRESERVING — the classic manual
+    * skew-join split, NOT a recall-lossy cap. Both sides are sized per
+    * key and each hot block's L×R pair matrix is cut into a grid of
+    * ceil(L/maxBlock) row-salts × ceil(R/maxBlock) column-salts: a left
+    * row hashes into one row-salt (deterministic hash of the whole left
+    * row) and replicates across the column-salts, a right row
+    * symmetrically, and the join key gains (`__sl`, `__sr`). Every
+    * (l, r) pair meets in EXACTLY one tile, so the output is
+    * pair-for-pair identical to the plain equi-join. A key hot on one
+    * side only gets a single-column grid; a cold key stays on the 1×1
+    * tile (0, 0). The bound is statistical, not hard: salts are
+    * hash-assigned, so a tile can exceed maxBlock rows by a small
+    * factor. AQE's OptimizeSkewedJoin cannot do this — it splits skewed
     * *partitions*, and a single giant key stays in one task.
     *
-    * Scale: one extra map-side-combinable count over the left side; the
-    * oversized-key frame is broadcast and small by construction (each
-    * key holds > maxBlock rows, so there are at most N/maxBlock of
-    * them). Returns (saltedLeft, saltedRight, joinKeyNames); callers
-    * join on the returned names and drop them. Left/right must have
-    * disjoint non-key column names. */
+    * Cost: one map-side-combinable count per side; hot-block rows
+    * replicate ceil(other-side/maxBlock) times (replicated volume
+    * L·ceil(R/m) + R·ceil(L/m), vs one task doing L·R work serially).
+    * Cold keys pay one broadcast probe and a 1-element generator. The
+    * hot-key frame broadcasts: at most N/maxBlock keys per side by
+    * construction. Returns (saltedLeft, saltedRight, joinKeyNames);
+    * callers join on the returned names and drop them. Left/right must
+    * have disjoint non-key column names. */
   def saltBySize(left: DataFrame, right: DataFrame,
                  leftKeys: Seq[Column], rightKeys: Seq[Column],
                  maxBlock: Int): (DataFrame, DataFrame, Seq[String]) = {
-    val (l, r, names) = keyed(left, right, leftKeys, rightKeys, maxBlock)
-    val hot = l.groupBy(names.map(col): _*)
-      .agg(count(lit(1)).as("__bn"))
-      .where(col("__bn") > maxBlock)
-      .select(names.map(col) :+
-        ceil(col("__bn") / lit(maxBlock.toDouble)).cast("int").as("__nsalt"): _*)
-    val saltedL = l.join(broadcast(hot), names, "left")
-      .withColumn("__salt", hashSalt(left, "__nsalt"))
-      .drop("__nsalt")
-    val saltedR = r.join(broadcast(hot), names, "left")
-      .withColumn("__salt", replicate("__nsalt"))
-      .drop("__nsalt")
-    (saltedL, saltedR, names :+ "__salt")
-  }
-
-  /** Two-dimensional skew guard for big-joins-big: [[saltBySize]]'s
-    * bound is one-sided (left block size), so a key degenerate on BOTH
-    * sides still concentrates maxBlock·R pairs in each salt. This
-    * variant sizes BOTH sides and decomposes each hot block's L×R pair
-    * matrix into a grid of ~maxBlock×maxBlock tiles: the left side
-    * hashes into one of ceil(L/maxBlock) row-salts and replicates across
-    * the ceil(R/maxBlock) column-salts, the right side symmetrically, and
-    * the join key gains (row-salt, column-salt) — every tile is its own
-    * shuffle group, every (l, r) pair meets in EXACTLY one tile, so the
-    * output is pair-for-pair identical to the plain equi-join while no
-    * task holds more than ~maxBlock rows of either side (in expectation;
-    * salts are hash-assigned). A key hot on the left only gets the 1-D
-    * guard's salts (one column-salt).
-    *
-    * Cost: hot-block rows replicate ceil(other-side/maxBlock) times —
-    * the classic blocked-matrix trade (total replicated volume
-    * L·ceil(R/m) + R·ceil(L/m), vs the unguarded single task doing L·R
-    * work serially). Cold keys pay one broadcast-probe each and a
-    * 1-element generator. The hot-key frame broadcasts: at most
-    * N/maxBlock keys per side by construction. */
-  def saltBySize2D(left: DataFrame, right: DataFrame,
-                   leftKeys: Seq[Column], rightKeys: Seq[Column],
-                   maxBlock: Int): (DataFrame, DataFrame, Seq[String]) = {
-    val (l, r, names) = keyed(left, right, leftKeys, rightKeys, maxBlock)
+    require(maxBlock >= 1, "maxBlock must be >= 1")
+    require(leftKeys.nonEmpty && leftKeys.size == rightKeys.size,
+      "key lists must be non-empty and align")
+    // each side gains its aligned key expressions as `__bk<i>` columns;
+    // rows whose key tuple has any null drop before sizing — they never
+    // match the null-unsafe equi-join, and a mostly-null key would
+    // otherwise be sized as one giant block
+    val names = leftKeys.indices.map(i => s"__bk$i")
+    def keyed(df: DataFrame, keys: Seq[Column]): DataFrame = df
+      .select(df.columns.map(col) ++
+        keys.zip(names).map { case (c, n) => c.as(n) }: _*)
+      .where(names.map(col(_).isNotNull).reduce(_ && _))
+    val (l, r) = (keyed(left, leftKeys), keyed(right, rightKeys))
     def sizes(side: DataFrame, out: String) = side
       .groupBy(names.map(col): _*)
       .agg(ceil(count(lit(1)) / lit(maxBlock.toDouble)).cast("int").as(out))
@@ -140,19 +114,6 @@ object Linkage {
     (saltedL, saltedR, names ++ Seq("__sl", "__sr"))
   }
 
-  /** Shared prologue of the skew guards: each side gains its aligned key
-    * expressions as `__bk<i>` columns. */
-  private def keyed(left: DataFrame, right: DataFrame,
-                    leftKeys: Seq[Column], rightKeys: Seq[Column],
-                    maxBlock: Int): (DataFrame, DataFrame, Seq[String]) = {
-    require(maxBlock >= 1, "maxBlock must be >= 1")
-    require(leftKeys.size == rightKeys.size, "key lists must align")
-    val names = leftKeys.indices.map(i => s"__bk$i")
-    def withKeys(df: DataFrame, keys: Seq[Column]): DataFrame = df.select(
-      df.columns.map(col) ++ keys.zip(names).map { case (c, n) => c.as(n) }: _*)
-    (withKeys(left, leftKeys), withKeys(right, rightKeys), names)
-  }
-
   /** A row's salt in its block: a hash of the whole `side` row modulo
     * the block's salt count column `n` (null = cold block, salt 0). */
   private def hashSalt(side: DataFrame, n: String): Column =
@@ -162,15 +123,6 @@ object Linkage {
   /** One copy of the row per salt of its block (cold block: one copy). */
   private def replicate(n: String): Column =
     explode(sequence(lit(0), coalesce(col(n), lit(1)) - 1))
-
-  /** Equi-join with the [[saltBySize2D]] both-sides guard; output equals
-    * the plain equi-join pair-for-pair. */
-  def skewGuardedJoin2D(left: DataFrame, right: DataFrame,
-                        leftKeys: Seq[Column], rightKeys: Seq[Column],
-                        maxBlock: Int): DataFrame = {
-    val (l, r, names) = saltBySize2D(left, right, leftKeys, rightKeys, maxBlock)
-    l.join(r, names).drop(names: _*)
-  }
 
   /** Equi-join `left` and `right` on aligned key expressions with the
     * [[saltBySize]] skew guard; output carries all left + right columns
@@ -199,11 +151,10 @@ object Linkage {
     * stands for all K rule joins, and ONE shuffle on the (leftId,
     * rightId) pair key runs the cross-rule dedup window. `maxBlock > 0`
     * guards that join against degenerate (rule, key) blocks with
-    * [[skewGuardedJoin]], or with [[skewGuardedJoin2D]] when any
-    * `rules2D` flag is set (flag the rules whose [[hottestBlocks]] exceed
-    * maxBlock on BOTH sides); both guards return the plain join's pairs.
-    * A rule set the encoding gate rejects (mismatched or non-atomic key
-    * types) falls back to K typed per-rule joins, unioned.
+    * [[skewGuardedJoin]] (≤ ~maxBlock² pairs per tile), which returns the
+    * plain join's pairs. A rule set the encoding gate rejects (mismatched
+    * or non-atomic key types) falls back to K typed per-rule joins,
+    * unioned, each guarded the same way.
     *
     * Left/right must have disjoint column names (including the id
     * columns) that avoid the reserved tag names `__lrule`, `__lkey`,
@@ -214,8 +165,7 @@ object Linkage {
   def unionBlocks(left: DataFrame, right: DataFrame,
                   leftId: String, rightId: String,
                   rules: Seq[(Seq[Column], Seq[Column])],
-                  maxBlock: Int = 0,
-                  rules2D: Seq[Boolean] = Nil): DataFrame = {
+                  maxBlock: Int = 0): DataFrame = {
     require(rules.nonEmpty, "need at least one blocking rule")
     val shared = left.columns.map(_.toLowerCase)
       .intersect(right.columns.map(_.toLowerCase))
@@ -223,23 +173,17 @@ object Linkage {
       s"unionBlocks needs disjoint left/right column names; both have ${shared.mkString(", ")}")
     val unioned = encoded(left, right, rules) match {
       case Right((lT, rT)) =>
-        val lk = Seq(col("__lrule"), col("__lkey"))
-        val rk = Seq(col("__rrule"), col("__rkey"))
         val joined =
           if (maxBlock <= 0) lT.join(rT, col("__lrule") === col("__rrule") &&
             col("__lkey") === col("__rkey"))
-          else if (rules2D.contains(true))
-            skewGuardedJoin2D(lT, rT, lk, rk, maxBlock)
-          else skewGuardedJoin(lT, rT, lk, rk, maxBlock)
+          else skewGuardedJoin(lT, rT, Seq(col("__lrule"), col("__lkey")),
+            Seq(col("__rrule"), col("__rkey")), maxBlock)
         joined.select(left.columns.map(col) ++ right.columns.map(col) :+
           col("__lrule").as("match_key"): _*)
       case Left(_) =>
         rules.zipWithIndex.map { case ((lk, rk), i) =>
           val j =
-            if (maxBlock > 0 && rules2D.lift(i).getOrElse(false))
-              skewGuardedJoin2D(left, right, lk, rk, maxBlock)
-            else if (maxBlock > 0)
-              skewGuardedJoin(left, right, lk, rk, maxBlock)
+            if (maxBlock > 0) skewGuardedJoin(left, right, lk, rk, maxBlock)
             else left.join(right,
               lk.zip(rk).map { case (a, b) => a === b }.reduce(_ && _))
           j.withColumn("match_key", lit(i))
@@ -268,8 +212,8 @@ object Linkage {
     case _ => false
   }
 
-  /** The one (rule, key) blocking encoder behind [[unionBlocks]],
-    * [[blockProfile]] and [[hottestBlocks]]. The injectivity gate comes
+  /** The one (rule, key) blocking encoder behind [[unionBlocks]] and
+    * [[blockProfile]]. The injectivity gate comes
     * first: every rule's aligned keys must share one [[stringEncodable]]
     * type on both sides — otherwise the typed join would coerce ('5' vs
     * 5.0) or compare structurally where the strings would not — and the
@@ -294,18 +238,6 @@ object Linkage {
           "string-encodable atomic type per aligned key pair"
     }.toLeft((tagRules(left, rules.map(_._1), lt, "__lrule", "__lkey"),
       tagRules(right, rules.map(_._2), rt, "__rrule", "__rkey")))
-  }
-
-  /** [[encoded]] for the pre-flight profiles, which have no typed
-    * fallback: a rule set the gate rejects fails loudly instead of
-    * miscounting the joins it budgets. */
-  private def encodedOrReject(left: DataFrame, right: DataFrame,
-                              rules: Seq[(Seq[Column], Seq[Column])])
-      : (DataFrame, DataFrame) = {
-    require(rules.nonEmpty, "need at least one blocking rule")
-    val tagged = encoded(left, right, rules)
-    require(tagged.isRight, tagged.swap.getOrElse(""))
-    tagged.toOption.get
   }
 
   /** Every rule's key types over `df`, from one analysis of `df`. */
@@ -345,57 +277,6 @@ object Linkage {
       .drop("__rk")
   }
 
-  /** Per-(rule, key) block sizes of one tagged side: (__rule, __key, cnt). */
-  private def blockCounts(tagged: DataFrame, ruleCol: String, keyCol: String,
-                          cnt: String): DataFrame =
-    tagged.groupBy(col(ruleCol).as("__rule"), col(keyCol).as("__key"))
-      .agg(count(lit(1)).as(cnt))
-
-  /** Per-rule hottest (left, right) block sizes in ONE driver action —
-    * the skew-guard pre-flight. `maxBlockFromHottest(hot.map(_._2).max)`
-    * sizes the guard's cap, and `l > maxBlock && r > maxBlock` flags the
-    * rules [[unionBlocks]] should route through the 2-D guard. Null-key
-    * groups are excluded (they never equi-join, and a mostly-null key
-    * would otherwise read as one giant block); a rule with no non-null
-    * key on a side reads 0. Each side is scanned once; the collect is
-    * 2·|rules| rows, bounded by contract. Rejects rule sets the
-    * encoding gate fails. */
-  def hottestBlocks(left: DataFrame, right: DataFrame,
-                    rules: Seq[(Seq[Column], Seq[Column])]): Seq[(Long, Long)] = {
-    val (lT, rT) = encodedOrReject(left, right, rules)
-    def hottest(tagged: DataFrame, ruleCol: String, keyCol: String,
-                side: Int): DataFrame =
-      blockCounts(tagged, ruleCol, keyCol, "__n")
-        .groupBy(col("__rule")).agg(max(col("__n")).as("__mx"))
-        .select(col("__rule"), lit(side).as("__side"), col("__mx"))
-    val rows = hottest(lT, "__lrule", "__lkey", 0)
-      .unionByName(hottest(rT, "__rrule", "__rkey", 1))
-      .collect()
-    val m = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    rules.indices.map(i =>
-      (m.getOrElse((i, 0), 0L), m.getOrElse((i, 1), 0L)))
-  }
-
-  /** Data-derived `maxBlock` for the skew guards from the hottest RIGHT
-    * block across rules (0 or negative = empty profile). The 1-D guard
-    * bounds per-salt pair work at ~maxBlock · R, so the left-block cap
-    * that holds one shuffle group to `targetPairsPerTask` pairs is
-    * targetPairsPerTask / max R — one cap for every rule, because
-    * [[unionBlocks]] guards one join. Clamped to [minBlock, maxCap]: a
-    * fixture-degenerate right side must not drive the cap to 1 and salt
-    * EVERYTHING, and an empty or all-cold profile must not disable the
-    * guard. */
-  def maxBlockFromHottest(maxRight: Long,
-                          targetPairsPerTask: Long = 4L * 1000 * 1000,
-                          minBlock: Int = 1024,
-                          maxCap: Int = 1 << 20): Int = {
-    require(targetPairsPerTask >= 1 && minBlock >= 1 && maxCap >= minBlock,
-      "need targetPairsPerTask >= 1 and 1 <= minBlock <= maxCap")
-    if (maxRight <= 0L) maxCap // empty right side: nothing to guard
-    else math.min(maxCap.toLong,
-      math.max(minBlock.toLong, targetPairsPerTask / maxRight)).toInt
-  }
-
   /** Blocking-rule pre-flight — splink's
     * `count_comparisons_from_blocking_rule` analysis (the tool used to
     * budget the reference's 10 prediction rules before running them):
@@ -409,7 +290,15 @@ object Linkage {
   def blockProfile(left: DataFrame, right: DataFrame,
                    rules: Seq[(Seq[Column], Seq[Column])]): DataFrame = {
     val spark = left.sparkSession
-    val (lT, rT) = encodedOrReject(left, right, rules)
+    require(rules.nonEmpty, "need at least one blocking rule")
+    // no typed fallback here: a rule set the encoding gate rejects fails
+    // loudly instead of miscounting the joins it budgets
+    val (lT, rT) = encoded(left, right, rules)
+      .fold(msg => throw new IllegalArgumentException(msg), identity)
+    def blockCounts(tagged: DataFrame, ruleCol: String, keyCol: String,
+                    cnt: String): DataFrame =
+      tagged.groupBy(col(ruleCol).as("__rule"), col(keyCol).as("__key"))
+        .agg(count(lit(1)).as(cnt))
     val lc = blockCounts(lT, "__lrule", "__lkey", "__nl")
     val rc = blockCounts(rT, "__rrule", "__rkey", "__nr")
     // per-block products and their sum are computed in decimal(38,0):
@@ -441,7 +330,7 @@ object Linkage {
     * levenshtein(leftText, rightText) <= maxDist. Reference:
     * StringSimilarityScorer over blocked candidates
     * (`/root/reference/src/pudl/analysis/record_linkage/embed_dataframe.py:356-500`).
-    * `maxBlock > 0` turns on the [[saltBySize]] skew guard (identical
+    * `maxBlock > 0` turns on the [[skewGuardedJoin]] skew guard (identical
     * results, bounded shuffle groups); 0 = plain equi-join (default —
     * the oracle lanes keep the unguarded plan their PlanSpec pins). */
   def blockedFuzzyJoin(left: DataFrame, right: DataFrame, blockKeys: Seq[String],

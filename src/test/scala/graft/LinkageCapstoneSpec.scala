@@ -10,6 +10,29 @@ class LinkageCapstoneSpec extends SparkSpec {
 
   private lazy val out = Etl.buildLinkageWide(spark, sf).collect()
 
+  test("the lineage runs ONE eager action: the weights+prior collect") {
+    // every driver action before the returned frame is used is a barrier
+    // the capstone pays on each pass; the skew guard needs none
+    import org.apache.spark.graftaccess.Bus
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = actions.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = actions.add(funcName)
+    }
+    Bus.drain(spark.sparkContext) // earlier tests' events stay out
+    spark.listenerManager.register(listener)
+    try {
+      Etl.buildLinkageWide(spark, sf)
+      Bus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(actions.asScala.toSeq === Seq("collect"))
+  }
+
   test("cleaner is load-bearing: every true pair differs raw, agrees canon") {
     // replicate the two dressings for a handful of ids and check the
     // canon convergence the pipeline depends on

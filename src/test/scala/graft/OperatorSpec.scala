@@ -275,6 +275,19 @@ class OperatorSpec extends SparkSpec {
     assert(loopLabels == Map(7L -> 7L, 1L -> 1L, 2L -> 1L))
   }
 
+  test("ConnectedComponents.runStars throws when maxIter runs out") {
+    // a 2,000-node path needs O(log n) star rounds; one iteration cannot
+    // reach the fixed point, and labels that may split a component must
+    // not be returned as exact identity
+    val path = (0L until 1999L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException](
+      graph.ConnectedComponents.runStars(path, "src", "dst", maxIter = 1))
+    assert(e.getMessage.contains("maxIter=1 exhausted"), e.getMessage)
+    // run() honors maxIter on its distributed path the same way
+    intercept[IllegalStateException](graph.ConnectedComponents.run(
+      path, "src", "dst", maxIter = 1, localEdgeThreshold = 0L))
+  }
+
   test("TemporalOps.asofJoin: backward match, equal-ts inclusion, tolerance") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val left = Seq(

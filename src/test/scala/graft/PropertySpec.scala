@@ -319,14 +319,14 @@ class PropertySpec extends SparkSpec {
       val r = rs.toDF("r_id", "r_k")
       val plain = l.join(r, col("l_k") === col("r_k"))
         .select("l_id", "r_id").collect().toSet
-      val guarded = Linkage.skewGuardedJoin2D(l, r,
+      val guarded = Linkage.skewGuardedJoin(l, r,
           Seq(col("l_k")), Seq(col("r_k")), maxBlock = cap)
         .select("l_id", "r_id").collect().toSet
       assert(guarded === plain, s"2D cap=$cap nl=${ls.size} nr=${rs.size}")
       // exactly-once: multiset sizes must also agree (a tile-overlap bug
       // would duplicate pairs without changing the distinct set)
       val plainN = l.join(r, col("l_k") === col("r_k")).count()
-      val guardN = Linkage.skewGuardedJoin2D(l, r,
+      val guardN = Linkage.skewGuardedJoin(l, r,
         Seq(col("l_k")), Seq(col("r_k")), maxBlock = cap).count()
       assert(guardN === plainN, s"2D multiset cap=$cap")
     }
@@ -407,14 +407,13 @@ class PropertySpec extends SparkSpec {
         Linkage.unionBlocks(l, r, "l_id", "r_id", keyParityRules),
         s"nl=${ls.size} nr=${rs.size}")
     }
-    // every key type the encoder accepts, with the skew guard off, 1-D
-    // and 2-D (maxBlock 2 salts every hot block)
+    // every key type the encoder accepts, with the skew guard off and on
+    // (maxBlock 2 salts every hot block)
     typedPairFrames { (name, l, r) =>
-      for ((mode, maxBlock, rules2D) <- Seq(("off", 0, Nil),
-          ("1-D", 2, Nil), ("2-D", 2, Seq(true))))
+      for ((mode, maxBlock) <- Seq(("off", 0), ("guarded", 2)))
         assertUnionMatchesTypedJoins(l, r,
           Linkage.unionBlocks(l, r, "l_id", "r_id", keyParityRules,
-            maxBlock = maxBlock, rules2D = rules2D),
+            maxBlock = maxBlock),
           s"$name keys, guard $mode")
     }
   }
@@ -606,28 +605,6 @@ class PropertySpec extends SparkSpec {
         assert(batch.getOrElse(qid, Set.empty) == single,
           s"$qid: batch != single on ${texts.size} docs")
       }
-    }
-  }
-
-  test("calibrateMaxBlock equals the clamped brute-force formula") {
-    val distGen: Gen[List[(String, Int)]] =
-      Gen.choose(1, 8).flatMap(n => Gen.listOfN(n,
-        Gen.zip(Gen.identifier.map(_.take(4)), Gen.choose(1, 300))))
-    forAll(Gen.zip(distGen, Gen.choose(100L, 20000L)), 10) {
-      case (dist, target) =>
-        val right = dist.flatMap { case (key, c) =>
-          (1 to c).map(i => (key, i)) }.toDF("blk", "row_id")
-        // the capstone's calibration: hottestBlocks' hottest right block
-        // through the clamp formula
-        val hot = graft.linkage.Linkage.hottestBlocks(right, right,
-          Seq((Seq(col("blk")), Seq(col("blk")))))
-        val got = graft.linkage.Linkage.maxBlockFromHottest(
-          hot.map(_._2).max, targetPairsPerTask = target,
-          minBlock = 5, maxCap = 50000)
-        // duplicate keys in the generated dist merge into one block
-        val maxR = dist.groupBy(_._1).map(_._2.map(_._2).sum).max
-        val exp = math.min(50000L, math.max(5L, target / maxR)).toInt
-        assert(got === exp, s"dist=$dist target=$target maxR=$maxR")
     }
   }
 }

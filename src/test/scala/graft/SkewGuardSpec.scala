@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.linkage.Linkage
 
-/** Round-14 skew guard for blocked pair joins (Linkage.saltBySize /
-  * skewGuardedJoin): a planted degenerate block key must (a) produce
-  * bit-identical pairs to the unguarded equi-join and (b) leave no
-  * shuffle group holding more than `maxBlock` left rows — the quadratic
-  * hot-partition hazard the round-13 verdict flagged for the phonetic
-  * block lanes (q165/q174/q168/q170, linkage capstone). */
+/** The skew guard for blocked pair joins (Linkage.saltBySize /
+  * skewGuardedJoin, a tile decomposition of each hot block's L×R pair
+  * matrix): a planted degenerate block key must (a) produce bit-identical
+  * pairs to the unguarded equi-join and (b) leave no shuffle group
+  * holding more than ~`maxBlock` rows of either side — the quadratic
+  * hot-partition hazard of the phonetic block lanes
+  * (q165/q174/q168/q170, linkage capstone). */
 class SkewGuardSpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,14 +44,14 @@ class SkewGuardSpec extends SparkSpec {
     // and that the hot key actually fanned out
     assert(maxGroup <= 100, s"hot block not split: max group $maxGroup")
     val hotSalts = l.where(col(keys.head) === "aaa")
-      .select(col(keys.last)).distinct().count()
+      .select(col("__sl")).distinct().count()
     assert(hotSalts === 8L, s"expected 8 salts for the hot block, got $hotSalts")
   }
 
   test("saltBySize leaves small blocks unsalted (salt 0, no replication)") {
     val (l, r, keys) = Linkage.saltBySize(hotLeft, hotRight,
       Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
-    assert(l.where(col(keys.head) =!= "aaa" && col(keys.last) =!= 0)
+    assert(l.where(col(keys.head) =!= "aaa" && col("__sl") =!= 0)
       .count() === 0)
     // right rows of cold blocks appear exactly once
     val coldRight = r.where(col(keys.head) =!= "aaa")
@@ -66,10 +66,10 @@ class SkewGuardSpec extends SparkSpec {
   }
 
   test("guard is deterministic: same salts on re-evaluation") {
-    val (l, _, keys) = Linkage.saltBySize(hotLeft, hotRight,
+    val (l, _, _) = Linkage.saltBySize(hotLeft, hotRight,
       Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
-    val a = l.select(col("l_id"), col(keys.last)).collect().toSet
-    val b = l.select(col("l_id"), col(keys.last)).collect().toSet
+    val a = l.select(col("l_id"), col("__sl")).collect().toSet
+    val b = l.select(col("l_id"), col("__sl")).collect().toSet
     assert(a === b)
   }
 
@@ -107,9 +107,7 @@ class SkewGuardSpec extends SparkSpec {
     assert(plain.exceptAll(guarded).count() === 0)
   }
 
-  // ---- saltBySize2D: the both-sides guard for big-joins-big -------------
-  // (round-15 ADVICE: saltBySize's bound is one-sided; a key degenerate
-  // on BOTH sides needs the 2-D tile decomposition)
+  // ---- big-joins-big: a key degenerate on BOTH sides ---------------------
 
   // both sides degenerate on "aaa": 300 left x 200 right = 60k pairs in
   // one key; plus cold keys on each side
@@ -123,7 +121,7 @@ class SkewGuardSpec extends SparkSpec {
   test("skewGuardedJoin2D equals the plain equi-join on a both-sides hot key") {
     val plain = bigLeft.join(bigRight, col("blk") === col("rblk"))
       .select("l_id", "r_id")
-    val guarded = Linkage.skewGuardedJoin2D(bigLeft, bigRight,
+    val guarded = Linkage.skewGuardedJoin(bigLeft, bigRight,
         Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
       .select("l_id", "r_id")
     assert(guarded.count() === plain.count()) // exactly-once per pair
@@ -132,11 +130,11 @@ class SkewGuardSpec extends SparkSpec {
   }
 
   test("saltBySize2D bounds BOTH sides' tile occupancy") {
-    val (l, r, keys) = Linkage.saltBySize2D(bigLeft, bigRight,
+    val (l, r, keys) = Linkage.saltBySize(bigLeft, bigRight,
       Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
     // per (key, sl, sr) tile: left rows ~<= maxBlock (2x slack for hash
-    // unevenness), right rows likewise — THE property saltBySize can't
-    // give when the right side is also degenerate
+    // unevenness), right rows likewise — THE property a one-sided salt
+    // can't give when the right side is also degenerate
     val lMax = l.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
       .agg(max(col("n"))).head.getLong(0)
     val rMax = r.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
@@ -150,7 +148,7 @@ class SkewGuardSpec extends SparkSpec {
   }
 
   test("saltBySize2D leaves cold keys on the (0,0) tile, no replication") {
-    val (l, r, keys) = Linkage.saltBySize2D(bigLeft, bigRight,
+    val (l, r, keys) = Linkage.saltBySize(bigLeft, bigRight,
       Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
     assert(l.where(col(keys.head) =!= "aaa" &&
       (col("__sl") =!= 0 || col("__sr") =!= 0)).count() === 0)
@@ -169,7 +167,7 @@ class SkewGuardSpec extends SparkSpec {
     // hotLeft/hotRight: only the LEFT side of "aaa" is big
     val plain = hotLeft.join(hotRight, col("blk") === col("rblk"))
       .select("l_id", "r_id")
-    val guarded = Linkage.skewGuardedJoin2D(hotLeft, hotRight,
+    val guarded = Linkage.skewGuardedJoin(hotLeft, hotRight,
         Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
       .select("l_id", "r_id")
     assert(guarded.exceptAll(plain).count() === 0)
@@ -180,50 +178,37 @@ class SkewGuardSpec extends SparkSpec {
       .toDF("r_id", "rblk")
     val p2 = left.join(right, col("blk") === col("rblk"))
       .select("l_id", "r_id")
-    val g2 = Linkage.skewGuardedJoin2D(left, right,
+    val g2 = Linkage.skewGuardedJoin(left, right,
         Seq(col("blk")), Seq(col("rblk")), maxBlock = 1)
       .select("l_id", "r_id")
     assert(g2.collect().toSet === p2.collect().toSet)
   }
 
-  /** Both-sides-hot flags from the hottestBlocks pre-flight, the way the
-    * linkage capstone routes rules to the 2-D guard. */
-  private def bothSidesHot(l: DataFrame, r: DataFrame,
-                           rules: Seq[(Seq[Column], Seq[Column])],
-                           maxBlock: Int): Seq[Boolean] =
-    Linkage.hottestBlocks(l, r, rules).map { case (nl, nr) =>
-      nl > maxBlock && nr > maxBlock }
-
-  test("detectBothSidesHot flags only rules hot on BOTH sides") {
-    // bigLeft/bigRight: "aaa" holds 300 left + 200 right rows → hot at
-    // maxBlock 50; hotLeft/hotRight: 400 left but only 60 right → NOT
-    // both-sides-hot at maxBlock 100
-    assert(bothSidesHot(bigLeft, bigRight,
-      Seq((Seq(col("blk")), Seq(col("rblk")))), maxBlock = 50)
-      === Seq(true))
-    assert(bothSidesHot(hotLeft, hotRight,
-      Seq((Seq(col("blk")), Seq(col("rblk")))), maxBlock = 100)
-      === Seq(false))
-    // per-rule: rule 0 both-hot, rule 1 (distinct ids) cold
-    assert(bothSidesHot(bigLeft, bigRight,
-      Seq((Seq(col("blk")), Seq(col("rblk"))),
-        (Seq(col("l_id")), Seq(col("r_id")))), maxBlock = 50)
-      === Seq(true, false))
-  }
-
-  test("detectBothSidesHot ignores null-key groups (they never join)") {
-    // a mostly-null key must not read as hot: null rows never match the
-    // null-unsafe equi-join, so they are excluded before the max
+  test("guard never salts or replicates null-key rows (they never join)") {
+    // a mostly-null key: null rows never match the null-unsafe equi-join,
+    // so the guard drops them before sizing instead of sizing them as one
+    // giant block and carrying them through the salted join
     val nl = (1 to 300).map(i =>
       (i.toLong, if (i <= 290) None else Some(s"k${i % 3}")))
       .toDF("l_id", "blk")
     val nr = (1 to 300).map(i =>
       (i.toLong, if (i <= 290) None else Some(s"k${i % 3}")))
       .toDF("r_id", "rblk")
-    val rules = Seq((Seq(col("blk")), Seq(col("rblk"))))
-    // the 10 non-null rows split 4/3/3 over k0/k1/k2
-    assert(Linkage.hottestBlocks(nl, nr, rules) === Seq((4L, 4L)))
-    assert(bothSidesHot(nl, nr, rules, maxBlock = 50) === Seq(false))
+    val (l, r, keys) = Linkage.saltBySize(nl, nr,
+      Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
+    assert(l.where(col(keys.head).isNull).count() === 0)
+    assert(r.where(col(keys.head).isNull).count() === 0)
+    // the 10 non-null rows per side (4/3/3 over k0/k1/k2) are cold: one
+    // copy each, on the (0,0) tile
+    assert(l.count() === 10 && r.count() === 10)
+    assert(l.where(col("__sl") =!= 0 || col("__sr") =!= 0).count() === 0)
+    assert(r.where(col("__sl") =!= 0 || col("__sr") =!= 0).count() === 0)
+    val plain = nl.join(nr, col("blk") === col("rblk"))
+      .select("l_id", "r_id").collect().toSet
+    val guarded = Linkage.skewGuardedJoin(nl, nr,
+        Seq(col("blk")), Seq(col("rblk")), maxBlock = 50)
+      .select("l_id", "r_id").collect().toSet
+    assert(guarded === plain)
   }
 
   test("unionBlocks with a 2-D-routed rule equals the unguarded union") {
@@ -231,8 +216,7 @@ class SkewGuardSpec extends SparkSpec {
     val plain = Linkage.unionBlocks(bigLeft, bigRight, "l_id", "r_id",
       rules).select("l_id", "r_id", "match_key", "n_rules")
     val routed = Linkage.unionBlocks(bigLeft, bigRight, "l_id", "r_id",
-        rules, maxBlock = 50,
-        rules2D = bothSidesHot(bigLeft, bigRight, rules, 50))
+        rules, maxBlock = 50)
       .select("l_id", "r_id", "match_key", "n_rules")
     assert(routed.exceptAll(plain).count() === 0)
     assert(plain.exceptAll(routed).count() === 0)
@@ -323,47 +307,6 @@ class SkewGuardSpec extends SparkSpec {
     assert(guarded.collect().toSet === plain.collect().toSet)
   }
 
-  /** The capstone's cap calibration: the clamp formula over the hottest
-    * right block across rules. */
-  private def calibrated(left: DataFrame, right: DataFrame,
-                         rules: Seq[(Seq[Column], Seq[Column])],
-                         targetPairsPerTask: Long, minBlock: Int,
-                         maxCap: Int): Int =
-    Linkage.maxBlockFromHottest(
-      Linkage.hottestBlocks(left, right, rules).map(_._2).max,
-      targetPairsPerTask, minBlock, maxCap)
-
-  private val blkRule = Seq((Seq(col("blk")), Seq(col("rblk"))))
-
-  test("calibrateMaxBlock = targetPairs / hottest right block, clamped") {
-    // hotRight's hottest block is "aaa" with 60 rows → cap = 6000/60 =
-    // 100 at a 6000-pair task budget (inside the clamps)
-    val cap = calibrated(hotLeft, hotRight, blkRule,
-      targetPairsPerTask = 6000, minBlock = 10, maxCap = 100000)
-    assert(cap === 100)
-    // the formula takes the max across rules: a second rule blocking on
-    // a constant makes the whole right side one 90-row block → 6000/90
-    val cap2 = calibrated(hotLeft, hotRight,
-      blkRule :+ ((Seq(lit("all")), Seq(lit("all")))),
-      targetPairsPerTask = 6000, minBlock = 10, maxCap = 100000)
-    assert(cap2 === 66)
-  }
-
-  test("calibrateMaxBlock clamps: floor, cap, and empty right side") {
-    // degenerate: tiny budget over a fat block floors at minBlock (the
-    // guard must not salt every row individually)
-    assert(calibrated(hotLeft, hotRight, blkRule,
-      targetPairsPerTask = 1, minBlock = 10, maxCap = 100000) === 10)
-    // cold: huge budget is clamped at maxCap (the guard stays armed)
-    assert(calibrated(hotLeft, hotRight, blkRule,
-      targetPairsPerTask = Long.MaxValue, minBlock = 10,
-      maxCap = 100000) === 100000)
-    // empty right side → no blocks → maxCap (nothing to guard)
-    assert(calibrated(hotLeft, hotRight.where(lit(false)), blkRule,
-      targetPairsPerTask = 6000, minBlock = 10,
-      maxCap = 100000) === 100000)
-  }
-
   // ---- misuse fails loudly ---------------------------------------------
 
   test("blockProfile and hottestBlocks reject a rule the encoding gate fails") {
@@ -379,9 +322,6 @@ class SkewGuardSpec extends SparkSpec {
     assert(e1.getMessage.contains("blocking rule 1"), e1.getMessage)
     assert(e1.getMessage.contains("(int)") &&
       e1.getMessage.contains("(double)"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](
-      Linkage.hottestBlocks(l, r, rules))
-    assert(e2.getMessage.contains("blocking rule 1"), e2.getMessage)
     // a non-atomic key type fails the gate even when both sides agree
     val la = Seq((1L, Seq("a"))).toDF("l_id", "l_arr")
     val ra = Seq((10L, Seq("a"))).toDF("r_id", "r_arr")
@@ -415,10 +355,9 @@ class SkewGuardSpec extends SparkSpec {
       assert(e.getMessage.contains("reserves") &&
         e.getMessage.contains(s"got $name"), e.getMessage)
     }
-    // the pre-flight profiles share the encoder, so they refuse too
+    // the pre-flight profile shares the encoder, so it refuses too
     val l = Seq((1L, "a", 0)).toDF("l_id", "l_blk", "__rk")
     intercept[IllegalArgumentException](Linkage.blockProfile(l, r, rules))
-    intercept[IllegalArgumentException](Linkage.hottestBlocks(l, r, rules))
   }
 
   test("encoded timestamp keys match by instant, not session-zone text") {
@@ -443,7 +382,6 @@ class SkewGuardSpec extends SparkSpec {
       val prof = Linkage.blockProfile(l, r, rules)
         .where(col("match_key") === 0).head
       assert(prof.getLong(1) === 2L && prof.getLong(2) === 2L, prof)
-      assert(Linkage.hottestBlocks(l, r, rules).head === ((1L, 1L)))
     } finally spark.conf.set("spark.sql.session.timeZone", tz)
   }
 }
