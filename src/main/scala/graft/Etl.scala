@@ -15,9 +15,10 @@ import graft.sources.ParquetSink
   * one lazy Catalyst lineage with explicit parquet checkpoints only at
   * named outputs. Run: `runMain graft.Etl <sfDir> <outDir>`.
   *
-  * Dagster process boundaries become shuffle boundaries; the only
-  * materializations are the two declared output tables and the check
-  * results.
+  * Dagster process boundaries become shuffle boundaries. The three
+  * capstones publish through one path ([[Etl.publish]]): write every
+  * declared output, then validate them all — CheckRunner suites plus the
+  * golden row counts — in one lazy plan collected by one driver action.
   */
 object Etl {
 
@@ -414,11 +415,9 @@ object Etl {
     Map(corpusWide.name -> wide, corpusPairs.name -> pairsOut)
   }
 
-  /** Run the corpus chain end-to-end — split-partitioned parquet write +
-    * CheckRunner validation — returning (core seconds, check seconds,
-    * failed checks), where core = lineage + write and checks = the
-    * validation pass, timed separately so round-over-round core numbers
-    * stay comparable when the check suite grows. Bench records
+  /** Run the corpus chain end-to-end through [[publish]]
+    * (split-partitioned parquet writes, then one validation action),
+    * returning (core seconds, check seconds, failed checks). Bench records
     * `corpus_capstone` (= core + checks) plus the two parts. */
   def corpusCapstone(spark: SparkSession, sfDir: String,
                      outDir: String): (Double, Double, Long) = {
@@ -431,46 +430,14 @@ object Etl {
     if (maxDf > 0)
       System.err.println(
         s"[capstone] corpus near-dup df cap ENGAGED: maxDf=$maxDf")
-    val t0 = System.nanoTime()
-    val outputs = buildCorpusOutputs(spark, sfDir, dedupMaxDf = maxDf)
-    ParquetSink.write(outputs(corpusWide.name), corpusWide,
-      s"$outDir/${corpusWide.name}", partitionBy = Seq("split"))
-    ParquetSink.write(outputs(corpusPairs.name), corpusPairs,
-      s"$outDir/${corpusPairs.name}", partitionBy = Seq("split"))
-    val coreSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val checkFailed = Seq(corpusWide, corpusPairs).map { res =>
-      CheckRunner.run(spark.read.parquet(s"$outDir/${res.name}"),
-          CheckRunner.fromResource(res))
-        .where(!col("passed")).count()
-    }.sum
-    // golden row-count regression (same machinery as the ETL capstone):
-    // per-(table × split) counts against the committed manifest slice.
-    // SKIPPED when the df cap is engaged — the cap is lossy by contract,
-    // so its counts are measurement-lane artifacts, never golden.
-    val sfLabel = new java.io.File(sfDir).getName
-    val golden = loadRowCountGoldens(spark).where(col("sf") === sfLabel &&
-      col("table_name").isin(corpusWide.name, corpusPairs.name))
-    val driftFailed =
-      if (maxDf > 0 || golden.isEmpty) 0L
-      else {
-        val drift = rowCountDrift(corpusRowCounts(spark, outDir), golden)
-        val n = drift.count()
-        if (n > 0) drift.show(50, false)
-        n
-      }
-    (coreSec, (System.nanoTime() - t1) / 1e9, checkFailed + driftFailed)
+    // the cap is lossy by contract, so its counts are measurement-lane
+    // artifacts, never golden: capped outputs carry no golden column
+    val outputs =
+      if (maxDf > 0) corpusOutputs.map(_.copy(countBy = None))
+      else corpusOutputs
+    publish(spark, sfDir, outDir, outputs)(
+      buildCorpusOutputs(spark, sfDir, dedupMaxDf = maxDf))
   }
-
-  /** Per-(table × split) row counts of the written corpus capstone
-    * outputs — the corpus twin of [[capstoneRowCounts]]. */
-  def corpusRowCounts(spark: SparkSession, outDir: String): DataFrame =
-    Seq(corpusWide, corpusPairs).map { res =>
-      spark.read.parquet(s"$outDir/${res.name}")
-        .groupBy(col("split").cast("string").as("partition"))
-        .agg(count(lit(1)).as("n_rows"))
-        .withColumn("table_name", lit(res.name))
-    }.reduce(_.unionByName(_)).select("table_name", "partition", "n_rows")
 
   // ---- record-linkage capstone --------------------------------------------
 
@@ -611,40 +578,62 @@ object Etl {
         col("weight_nano"), col("accepted"))
   }
 
-  /** Run the linkage chain end-to-end — parquet write + CheckRunner
-    * validation — returning (core seconds, check seconds, failed checks);
-    * Bench records `linkage_capstone` (= core + checks) plus the parts. */
+  /** Run the linkage chain end-to-end through [[publish]] — parquet write
+    * + one validation action — returning (core seconds, check seconds,
+    * failed checks); Bench records `linkage_capstone` (= core + checks)
+    * plus the parts. */
   def linkageCapstone(spark: SparkSession, sfDir: String,
-                      outDir: String): (Double, Double, Long) = {
-    val t0 = System.nanoTime()
-    val out = buildLinkageWide(spark, sfDir)
-    ParquetSink.write(out, linkageMatches, s"$outDir/${linkageMatches.name}")
-    val coreSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val failed = CheckRunner.run(
-        spark.read.parquet(s"$outDir/${linkageMatches.name}"),
-        CheckRunner.fromResource(linkageMatches))
-      .where(!col("passed")).count()
-    (coreSec, (System.nanoTime() - t1) / 1e9, failed)
-  }
+                      outDir: String): (Double, Double, Long) =
+    publish(spark, sfDir, outDir, Seq(Output(linkageMatches)))(
+      Map(linkageMatches.name -> buildLinkageWide(spark, sfDir)))
 
-  /** Per-(table × partition) row counts of the written capstone outputs —
-    * the observation side of the reference's golden row-count regression
-    * (`/root/reference/dbt/seeds/etl_full_row_counts.csv` checked by
-    * `row_counts_per_partition.sql`). supplier_metrics partitions by
-    * order_year, plant_parts by grain. One metadata-cheap count
+  /** Run the wide chain end-to-end through [[publish]] — write both
+    * outputs, validate them with [[CheckRunner]] plus the golden row-count
+    * regression — and return (core seconds, check seconds, failed checks).
+    * Bench records `etl_capstone` (= core + checks) plus the parts. */
+  def capstone(spark: SparkSession, sfDir: String,
+               outDir: String): (Double, Double, Long) =
+    publish(spark, sfDir, outDir, etlOutputs)(buildWide(spark, sfDir))
+
+  // ---- publishing: write every output, then validate them all -----------
+
+  /** How a capstone output is published: its declared schema, the hive
+    * partition columns of its parquet write, and the column its golden
+    * row counts group by (None: never pinned). The specs below are the
+    * only place those choices are stated. */
+  private[graft] case class Output(resource: Resource,
+                                   partitionBy: Seq[String] = Nil,
+                                   countBy: Option[String] = None)
+
+  private[graft] val etlOutputs = Seq(
+    Output(supplierMetrics, Seq("order_year"), Some("order_year")),
+    Output(plantParts, countBy = Some("grain")))
+  private[graft] val corpusOutputs =
+    Seq(corpusWide, corpusPairs).map(Output(_, Seq("split"), Some("split")))
+
+  /** Write each output's frame as schema-enforced parquet under
+    * `<outDir>/<table name>`. */
+  private[graft] def writeOutputs(outDir: String, outputs: Seq[Output],
+                                  frames: Map[String, DataFrame]): Unit =
+    outputs.foreach { o =>
+      ParquetSink.write(frames(o.resource.name), o.resource,
+        s"$outDir/${o.resource.name}", o.partitionBy)
+    }
+
+  /** Per-(table × partition) row counts of the written outputs that have a
+    * golden column — the observation side of the reference's golden
+    * row-count regression (`dbt/seeds/etl_full_row_counts.csv` checked by
+    * `row_counts_per_partition.sql`). One metadata-cheap count
     * aggregation per table over the freshly-written files. */
-  def capstoneRowCounts(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/${supplierMetrics.name}")
-      .groupBy(col("order_year").cast("string").as("partition"))
-      .agg(count(lit(1)).as("n_rows"))
-      .withColumn("table_name", lit(supplierMetrics.name))
-      .unionByName(
-        spark.read.parquet(s"$outDir/${plantParts.name}")
-          .groupBy(col("grain").as("partition"))
-          .agg(count(lit(1)).as("n_rows"))
-          .withColumn("table_name", lit(plantParts.name)))
-      .select("table_name", "partition", "n_rows")
+  private[graft] def rowCounts(spark: SparkSession, outDir: String,
+                               outputs: Seq[Output]): DataFrame =
+    outputs.collect { case Output(res, _, Some(by)) =>
+      spark.read.parquet(s"$outDir/${res.name}")
+        .groupBy(col(by).cast("string").as("partition"))
+        .agg(count(lit(1)).as("n_rows"))
+        .select(lit(res.name).as("table_name"), col("partition"),
+          col("n_rows"))
+    }.reduce(_ unionByName _)
 
   /** Drift report between observed capstone counts and a golden frame
     * (`sf`-filtered slice of the manifest): one row per
@@ -658,64 +647,88 @@ object Etl {
         Seq("table_name", "partition"), "full_outer")
       .where(not(col("observed_rows") <=> col("expected_rows")))
 
-  /** The committed golden manifest (regenerate via [[CapstoneGoldens]]),
-    * empty when the classpath resource is absent. Columns:
-    * sf, table_name, partition, n_rows. */
-  def loadRowCountGoldens(spark: SparkSession): DataFrame = {
-    val res = Option(getClass.getResourceAsStream(
-      "/goldens/capstone_row_counts.csv"))
-    val lines = res.map { in =>
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }.getOrElse(Nil)
-    import spark.implicits._
-    lines.drop(1).map(_.split(",", -1)).collect {
-      case Array(sfL, tbl, part, n) => (sfL, tbl, part, n.toLong)
-    }.toDF("sf", "table_name", "partition", "n_rows")
+  /** One row of the golden manifest: a pinned (scale × table × partition)
+    * row count. The sf label is the fixture dir's basename. */
+  private[graft] case class GoldenCount(sf: String, table_name: String,
+                                        partition: String, n_rows: Long)
+
+  /** Parse the golden manifest's lines (header first). A malformed line
+    * throws: a broken manifest must fail the regression, not silently
+    * stop it checking. */
+  private[graft] def parseRowCountGoldens(lines: Seq[String]): Seq[GoldenCount] = {
+    val header = "sf,table_name,partition,n_rows"
+    if (!lines.headOption.contains(header))
+      throw new IllegalStateException(
+        s"golden manifest header is not '$header': ${lines.headOption}")
+    lines.tail.map { line =>
+      line.split(",", -1) match {
+        case Array(sfL, tbl, part, n) if n.toLongOption.isDefined =>
+          GoldenCount(sfL, tbl, part, n.toLong)
+        case _ =>
+          throw new IllegalStateException(
+            s"malformed golden manifest line: '$line'")
+      }
+    }
   }
 
-  /** Run the wide chain end-to-end — write both outputs, validate them
-    * with [[CheckRunner]] plus the golden row-count regression — and
-    * return (core seconds, check seconds, failed checks): core = lineage
-    * + parquet writes (the number to hold against the reference's
-    * whole-ETL wall time), checks = CheckRunner + golden row counts,
-    * timed apart so adding a check never reads as a lineage regression.
-    * Bench records `etl_capstone` (= core + checks) plus the parts. */
-  def capstone(spark: SparkSession, sfDir: String,
-               outDir: String): (Double, Double, Long) = {
+  /** Read and parse a golden manifest from the classpath; a missing
+    * resource throws, naming the path. */
+  private[graft] def readRowCountGoldens(resource: String): Seq[GoldenCount] = {
+    val in = Option(getClass.getResourceAsStream(resource)).getOrElse(
+      throw new IllegalStateException(
+        s"golden manifest $resource is missing from the classpath"))
+    try parseRowCountGoldens(
+      scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
+    finally in.close()
+  }
+
+  /** The committed golden manifest (regenerate via [[CapstoneGoldens]]). */
+  private[graft] lazy val rowCountGoldens: Seq[GoldenCount] =
+    readRowCountGoldens("/goldens/capstone_row_counts.csv")
+
+  /** Build, write and validate one capstone's outputs, returning (core
+    * seconds, check seconds, failed checks): core = lineage + parquet
+    * writes, checks = validation, timed apart so adding a check never
+    * reads as a lineage regression. Validation is ONE lazy frame — every
+    * table's [[CheckRunner]] suite over its re-read parquet, plus golden
+    * row-count drift for the tables the manifest pins at this scale
+    * (filtered on the driver: no job) — collected by ONE driver action. */
+  private def publish(spark: SparkSession, sfDir: String, outDir: String,
+                      outputs: Seq[Output])(
+                      build: => Map[String, DataFrame]): (Double, Double, Long) = {
     val t0 = System.nanoTime()
-    val outputs = buildWide(spark, sfDir)
-    ParquetSink.write(outputs(supplierMetrics.name), supplierMetrics,
-      s"$outDir/${supplierMetrics.name}", partitionBy = Seq("order_year"))
-    ParquetSink.write(outputs(plantParts.name), plantParts,
-      s"$outDir/${plantParts.name}")
+    writeOutputs(outDir, outputs, build)
     val coreSec = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val checkFailed = Seq(
-      CheckRunner.run(
-        spark.read.parquet(s"$outDir/${supplierMetrics.name}"),
-        CheckRunner.fromResource(supplierMetrics)),
-      CheckRunner.run(
-        spark.read.parquet(s"$outDir/${plantParts.name}"),
-        CheckRunner.fromResource(plantParts))
-    ).map(_.where(!col("passed")).count()).sum
-    // golden row-count regression: only for scale labels the committed
-    // manifest pins (sf label = fixture dir basename); any
-    // (table × partition) drift is a failed check
+    val checkFailures = outputs.map { o =>
+      CheckRunner.run(spark.read.parquet(s"$outDir/${o.resource.name}"),
+          CheckRunner.fromResource(o.resource))
+        .where(!col("passed"))
+        .select(lit(o.resource.name).as("table_name"), col("check_name"),
+          col("observed"), lit(null).cast("long").as("expected"))
+    }
     val sfLabel = new java.io.File(sfDir).getName
-    // own-table slice only: the manifest also pins the corpus capstone's
-    // tables, which this capstone does not write
-    val golden = loadRowCountGoldens(spark).where(col("sf") === sfLabel &&
-      col("table_name").isin(supplierMetrics.name, plantParts.name))
-    val driftFailed =
-      if (golden.isEmpty) 0L
+    val golden = outputs.filter(_.countBy.isDefined).flatMap { o =>
+      rowCountGoldens.filter(g =>
+        g.sf == sfLabel && g.table_name == o.resource.name)
+    }
+    val driftFailures =
+      if (golden.isEmpty) Nil
       else {
-        val drift = rowCountDrift(capstoneRowCounts(spark, outDir), golden)
-        val n = drift.count()
-        if (n > 0) drift.show(50, false)
-        n
+        val pinned = outputs.filter(o =>
+          golden.exists(_.table_name == o.resource.name))
+        Seq(rowCountDrift(rowCounts(spark, outDir, pinned),
+            spark.createDataFrame(golden))
+          .select(col("table_name"),
+            concat(lit("row_count:"), col("partition")).as("check_name"),
+            col("observed_rows").as("observed"),
+            col("expected_rows").as("expected")))
       }
-    (coreSec, (System.nanoTime() - t1) / 1e9, checkFailed + driftFailed)
+    val failing = (checkFailures ++ driftFailures).reduce(_ unionByName _)
+      .collect()
+    failing.foreach(r => System.err.println(
+      s"[capstone] FAILED ${r.mkString(" | ")}"))
+    (coreSec, (System.nanoTime() - t1) / 1e9, failing.length.toLong)
   }
 
   /** Build both outputs as one lineage over the fixture tables. */
@@ -774,14 +787,12 @@ object Etl {
     val spark = GraftSession.local()
     val outputs = build(spark, sfDir)
 
-    ParquetSink.write(outputs(customerSummary.name), customerSummary,
-      s"$outDir/${customerSummary.name}")
-    ParquetSink.write(outputs(supplierYearly.name), supplierYearly,
-      s"$outDir/${supplierYearly.name}", partitionBy = Seq("ship_year"))
     // training corpus partitioned by split: downstream loaders prune to
     // their split without touching the others
-    ParquetSink.write(outputs(corpusPacked.name), corpusPacked,
-      s"$outDir/${corpusPacked.name}", partitionBy = Seq("split"))
+    val published = Seq(Output(customerSummary),
+      Output(supplierYearly, Seq("ship_year")),
+      Output(corpusPacked, Seq("split")))
+    writeOutputs(outDir, published, outputs)
     // legacy single-file mirror of both outputs — the reference's
     // PudlMixedFormatIOManager writes Parquet AND SQLite side by side
     graft.sources.SqliteSink.write(
@@ -789,24 +800,18 @@ object Etl {
       s"$outDir/graft.sqlite")
 
     // validation layer over the written outputs (dbt analogue)
-    val results = Seq(
-      customerSummary.name -> CheckRunner.run(
-        spark.read.parquet(s"$outDir/${customerSummary.name}"),
-        CheckRunner.fromResource(customerSummary)),
-      supplierYearly.name -> CheckRunner.run(
-        spark.read.parquet(s"$outDir/${supplierYearly.name}"),
-        CheckRunner.fromResource(supplierYearly) :+
-          ColumnsRatio("out_supplier_yearly:rev_per_discount_sane",
-            "revenue", "revenue", 0.999, 1.001)),
-      corpusPacked.name -> CheckRunner.run(
-        spark.read.parquet(s"$outDir/${corpusPacked.name}"),
-        CheckRunner.fromResource(corpusPacked))
-    )
-    results.foreach { case (table, df) =>
+    val extraChecks = Map(supplierYearly.name -> Seq(
+      ColumnsRatio("out_supplier_yearly:rev_per_discount_sane",
+        "revenue", "revenue", 0.999, 1.001)))
+    val failed = published.map { o =>
+      val table = o.resource.name
+      val rows = CheckRunner.run(spark.read.parquet(s"$outDir/$table"),
+        CheckRunner.fromResource(o.resource) ++
+          extraChecks.getOrElse(table, Nil)).collect()
       println(s"== checks: $table ==")
-      df.collect().foreach(r => println(s"  ${r.mkString(" | ")}"))
-    }
-    val failed = results.map(_._2.where(!col("passed")).count()).sum
+      rows.foreach(r => println(s"  ${r.mkString(" | ")}"))
+      rows.count(r => !r.isNullAt(1) && !r.getBoolean(1))
+    }.sum
     println(s"ETL complete -> $outDir (failed checks: $failed)")
     // whole-pipeline capstone: the chained wide lineage, timed end-to-end
     val (coreSec, checkSec, wideFailed) = capstone(spark, sfDir, s"$outDir/wide")
@@ -838,21 +843,12 @@ object CapstoneGoldens {
     val spark = GraftSession.local()
     val rows = args.drop(1).flatMap { sfDir =>
       val out = java.nio.file.Files.createTempDirectory("graft_golden").toString
-      val outputs = Etl.buildWide(spark, sfDir)
-      graft.sources.ParquetSink.write(outputs(Etl.supplierMetrics.name),
-        Etl.supplierMetrics, s"$out/${Etl.supplierMetrics.name}",
-        partitionBy = Seq("order_year"))
-      graft.sources.ParquetSink.write(outputs(Etl.plantParts.name),
-        Etl.plantParts, s"$out/${Etl.plantParts.name}")
+      Etl.writeOutputs(out, Etl.etlOutputs, Etl.buildWide(spark, sfDir))
       // corpus capstone outputs (uncapped — the golden basis by contract)
-      val corpusOuts = Etl.buildCorpusOutputs(spark, sfDir)
-      Seq(Etl.corpusWide, Etl.corpusPairs).foreach { res =>
-        graft.sources.ParquetSink.write(corpusOuts(res.name), res,
-          s"$out/${res.name}", partitionBy = Seq("split"))
-      }
+      Etl.writeOutputs(out, Etl.corpusOutputs,
+        Etl.buildCorpusOutputs(spark, sfDir))
       val sfLabel = new java.io.File(sfDir).getName
-      Etl.capstoneRowCounts(spark, out)
-        .unionByName(Etl.corpusRowCounts(spark, out))
+      Etl.rowCounts(spark, out, Etl.etlOutputs ++ Etl.corpusOutputs)
         .orderBy("table_name", "partition")
         .collect()
         .map(r => s"$sfLabel,${r.getString(0)},${r.getString(1)},${r.getLong(2)}")

@@ -1,5 +1,7 @@
 package graft.checks
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,29 +80,30 @@ object CheckRunner {
     * NotNull / InRange / InEnum / RowCount / ColumnsRatio / SummedNotExceed
     * — are FUSED into one `agg` over the input, so a suite of N such checks
     * costs ONE scan, not N (round-11 verdict: q160 was recomputing a
-    * lineitem⋈orders join once per check). The fused one-row result is
-    * `localCheckpoint`ed (a single tiny job) so each per-check projection
-    * reads the cached row rather than re-running the scan. Checks that
-    * need their own grouping (UniqueKey, OneValuePerKey, SubcomponentsSum,
+    * lineitem⋈orders join once per check). That one-row aggregate feeds
+    * one `inline` of per-check (check_name, passed, observed) structs, and
+    * each fused check's row is picked from it by position: every pick
+    * reads the whole struct array, so column pruning cannot split the
+    * aggregate per check, and the picks share its exchange
+    * (`ReusedExchange`) instead of re-scanning. Checks that need their own
+    * grouping (UniqueKey, OneValuePerKey, SubcomponentsSum,
     * WeightedQuantileBound, ChangeWithinRatio, ForeignKey) keep their own
-    * shapes; when the suite still needs more than one pass over the input,
-    * the input is projected down to exactly the columns the suite
-    * references and `localCheckpoint`ed once, so the (possibly expensive)
-    * upstream lineage — joins, transforms — is computed exactly once.
+    * shapes; when the suite still needs more than one pass over a COMPUTED
+    * input (joins, transforms), the input is projected down to exactly the
+    * columns the suite references and `localCheckpoint`ed once, so the
+    * upstream lineage is computed exactly once.
     *
-    * Consequence: `run` is eager (it triggers the checkpoint jobs at call
-    * time) whenever the suite needs a shared input or has fusible checks;
-    * a single non-fusible check stays fully lazy. */
+    * Consequence: `run` is lazy over a bare file scan (the capstone
+    * pattern: checks over freshly written parquet) and for any suite that
+    * needs one pass; it is eager (one checkpoint job at call time) only
+    * when a computed input is shared by several passes. */
   def run(df: DataFrame, checks: Seq[Check]): DataFrame = {
     // an empty suite would otherwise surface as reduce's opaque
     // UnsupportedOperationException at the very end of the method
     require(checks.nonEmpty,
       "CheckRunner.run: empty check list (a suite must declare >= 1 check)")
-    val fusedIdx = checks.zipWithIndex.collect {
-      case (c, i) if isFusible(c) => (c, i)
-    }
-    val standalone = checks.zipWithIndex.filterNot { case (c, _) => isFusible(c) }
-    val scans = standalone.size + (if (fusedIdx.nonEmpty) 1 else 0)
+    val fused = checks.zipWithIndex.filter { case (c, _) => isFusible(c) }
+    val scans = checks.size - fused.size + (if (fused.nonEmpty) 1 else 0)
     // Share the input across passes: prune to the referenced columns first
     // so the checkpoint materializes only what the suite reads (a full-width
     // join would otherwise be cached column-complete for a 3-column suite).
@@ -118,17 +121,16 @@ object CheckRunner {
         (if (needed.nonEmpty) df.select(needed.map(col): _*) else df)
           .localCheckpoint()
       } else df
-    val fusedResults: Map[Int, DataFrame] =
-      if (fusedIdx.isEmpty) Map.empty
-      else {
-        val aggs = fusedIdx.flatMap { case (c, i) => fusedAggs(c, i) }
-        // One scan computes every fused counter; checkpoint the 1-row
-        // result so the per-check projections below are free.
-        val row = in.agg(aggs.head, aggs.tail: _*).localCheckpoint()
-        fusedIdx.map { case (c, i) => i -> fusedSelect(row, c, i) }.toMap
-      }
+    // One aggregate computes every fused counter; one inline turns it into
+    // a row per fused check, tagged with the check's position.
+    lazy val fusedRows = {
+      val aggs = fused.flatMap { case (c, i) => fusedAggs(c, i) }
+      in.agg(aggs.head, aggs.tail: _*)
+        .select(inline(array(fused.map { case (c, i) => fusedRow(c, i) }: _*)))
+    }
     checks.zipWithIndex.map { case (c, i) =>
-      fusedResults.getOrElse(i, runOne(in, c))
+      if (isFusible(c)) fusedRows.where(col("__i") === i).drop("__i")
+      else runOne(in, c)
     }.reduce(_ unionByName _)
   }
 
@@ -146,7 +148,7 @@ object CheckRunner {
       case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => true
       case _ => false
     }
-    try bare(df.queryExecution.optimizedPlan) catch { case _: Throwable => false }
+    try bare(df.queryExecution.optimizedPlan) catch { case NonFatal(_) => false }
   }
 
   private def isFusible(c: Check): Boolean = c match {
@@ -203,25 +205,22 @@ object CheckRunner {
       Seq(count(when(badPredicate(rowPred), 1)).as(s"__obs_$i"))
   }
 
-  /** Per-check (check_name, passed, observed) projection over the fused
-    * one-row frame. */
-  private def fusedSelect(row: DataFrame, c: Check, i: Int): DataFrame = c match {
-    case RowCount(n, expected) =>
-      row.select(lit(n).as("check_name"),
-        (col(s"__obs_$i") === expected).as("passed"),
-        col(s"__obs_$i").as("observed"))
-    case ColumnsRatio(n, _, _, lo, hi) =>
-      row.select(lit(n).as("check_name"),
-        col(s"__r_$i").between(lo, hi).as("passed"),
-        round(col(s"__r_$i") * 1e6).cast("long").as("observed"))
-    case SummedNotExceed(n, _, _, _, _, errT) =>
-      row.select(lit(n).as("check_name"),
-        (col(s"__obs_$i") <= errT).as("passed"),
-        col(s"__obs_$i").as("observed"))
-    case other =>
-      row.select(lit(other.name).as("check_name"),
-        (col(s"__obs_$i") === 0).as("passed"),
-        col(s"__obs_$i").as("observed"))
+  /** Per-check (__i, check_name, passed, observed) struct over the fused
+    * one-row aggregate; `__i` is the check's position in the suite. */
+  private def fusedRow(c: Check, i: Int): Column = {
+    val (passed, observed) = c match {
+      case RowCount(_, expected) =>
+        (col(s"__obs_$i") === expected, col(s"__obs_$i"))
+      case ColumnsRatio(_, _, _, lo, hi) =>
+        (col(s"__r_$i").between(lo, hi),
+          round(col(s"__r_$i") * 1e6).cast("long"))
+      case SummedNotExceed(_, _, _, _, _, errT) =>
+        (col(s"__obs_$i") <= errT, col(s"__obs_$i"))
+      case _ =>
+        (col(s"__obs_$i") === 0, col(s"__obs_$i"))
+    }
+    struct(lit(i).as("__i"), lit(c.name).as("check_name"),
+      passed.as("passed"), observed.as("observed"))
   }
 
   /** Checks that need their own grouping/join — one pass each over the
@@ -278,8 +277,7 @@ object CheckRunner {
         .select(lit(n).as("check_name"), (col("observed") === 0).as("passed"),
           col("observed"))
     case fusible =>
-      // Single fusible check with no sharing needed: one lazy agg.
-      fusedSelect(df.agg(fusedAggs(fusible, 0).head), fusible, 0)
+      throw new IllegalArgumentException(s"fused, not run alone: $fusible")
   }
 
   /** Derive the standard check set from a declared Resource (PK unique +

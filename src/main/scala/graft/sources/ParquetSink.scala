@@ -13,12 +13,14 @@ import graft.schema.Resource
   */
 object ParquetSink {
 
+  /** Upper bound on rows per written parquet file. */
+  private val MaxRecordsPerFile = 5000000L
+
   def write(df: DataFrame, resource: Resource, path: String,
-            partitionBy: Seq[String] = Nil,
-            maxRecordsPerFile: Long = 5000000L): Unit = {
+            partitionBy: Seq[String] = Nil): Unit = {
     val enforced = resource.enforceSchema(df)
     val writer = enforced.write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
     val w2 = if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer
     w2.parquet(path)
   }

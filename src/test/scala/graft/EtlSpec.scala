@@ -135,13 +135,8 @@ class EtlSpec extends SparkSpec {
   test("capstone golden row counts: manifest matches, any drift fails") {
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_golden_spec").toString
-    val outputs = Etl.buildWide(spark, sf)
-    graft.sources.ParquetSink.write(outputs(Etl.supplierMetrics.name),
-      Etl.supplierMetrics, s"$out/${Etl.supplierMetrics.name}",
-      partitionBy = Seq("order_year"))
-    graft.sources.ParquetSink.write(outputs(Etl.plantParts.name),
-      Etl.plantParts, s"$out/${Etl.plantParts.name}")
-    val observed = Etl.capstoneRowCounts(spark, out)
+    Etl.writeOutputs(out, Etl.etlOutputs, Etl.buildWide(spark, sf))
+    val observed = Etl.rowCounts(spark, out, Etl.etlOutputs)
 
     // identity golden -> no drift
     assert(Etl.rowCountDrift(observed, observed).isEmpty)
@@ -159,7 +154,7 @@ class EtlSpec extends SparkSpec {
     // the committed manifest pins the graded scale factors; this spec's
     // sf0.001 run must NOT be pinned (capstone skips the diff for
     // unpinned labels), while sf0.01 and sf0.1 slices must exist
-    val golden = Etl.loadRowCountGoldens(spark)
+    val golden = spark.createDataFrame(Etl.rowCountGoldens)
     assert(golden.where(col("sf") === "sf0.01").count() > 0)
     assert(golden.where(col("sf") === "sf0.1").count() > 0)
     // and the committed slice agrees with a fresh sf0.01 build end-to-end
@@ -167,5 +162,40 @@ class EtlSpec extends SparkSpec {
     val capOut = java.nio.file.Files.createTempDirectory("graft_cap_gold").toString
     val (_, _, failed) = Etl.capstone(spark, "/root/testdata/sf0.01", capOut)
     assert(failed === 0L, s"capstone failed $failed checks at sf0.01")
+  }
+
+  test("a broken golden manifest fails loudly, naming the line or path") {
+    val header = "sf,table_name,partition,n_rows"
+    val good = Etl.parseRowCountGoldens(Seq(header, "sf0.01,out_t,1995,7"))
+    assert(good === Seq(Etl.GoldenCount("sf0.01", "out_t", "1995", 7L)))
+    // a line that is not four fields, and a count that is not an integer
+    for (bad <- Seq("sf0.01,out_t,1995", "sf0.01,out_t,1995,7,8",
+                    "sf0.01,out_t,1995,seven", "")) {
+      val e = intercept[IllegalStateException](
+        Etl.parseRowCountGoldens(Seq(header, "sf0.1,out_t,1995,3", bad)))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    val noHeader = intercept[IllegalStateException](
+      Etl.parseRowCountGoldens(Seq("sf0.01,out_t,1995,7")))
+    assert(noHeader.getMessage.contains(header), noHeader.getMessage)
+    val missing = intercept[IllegalStateException](
+      Etl.readRowCountGoldens("/goldens/no_such_manifest.csv"))
+    assert(missing.getMessage.contains("/goldens/no_such_manifest.csv"),
+      missing.getMessage)
+  }
+
+  test("Etl.capstone validates in ONE action after its last write") {
+    // every output is written first; then the CheckRunner suites and the
+    // golden drift of both tables are one lazy plan, collected once
+    // the sf0.01 fixture beside `sf`: the manifest pins it, so the golden
+    // drift is part of the validation plan
+    val sf001 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01")
+    val dir = java.nio.file.Files.createTempDirectory("graft_cap_actions")
+    val ((_, _, failed), actions) = actionsDuring(
+      Etl.capstone(spark, sf001.getPath, dir.toString))
+    assert(failed === 0L)
+    val lastWrite = actions.lastIndexWhere(_._2)
+    assert(actions.count(_._2) === 2, actions)
+    assert(actions.drop(lastWrite + 1).map(_._1) === Seq("collect"), actions)
   }
 }

@@ -33,6 +33,15 @@ class LinkageCapstoneSpec extends SparkSpec {
     assert(actions.asScala.toSeq === Seq("collect"))
   }
 
+  test("the capstone runs 3 actions: weights collect, write, one validation") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_linkcap_actions")
+    val ((_, _, failed), actions) =
+      actionsDuring(Etl.linkageCapstone(spark, sf, dir.toString))
+    assert(failed === 0L)
+    assert(actions === Seq("collect" -> false, "command" -> true,
+      "collect" -> false), actions)
+  }
+
   test("cleaner is load-bearing: every true pair differs raw, agrees canon") {
     // replicate the two dressings for a handful of ids and check the
     // canon convergence the pipeline depends on

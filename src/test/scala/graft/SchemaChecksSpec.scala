@@ -97,6 +97,39 @@ class SchemaChecksSpec extends SparkSpec {
     assert(accB.value == 100L, s"mixed suite scanned ${accB.value} rows")
   }
 
+  test("CheckRunner over written parquet starts no execution until used") {
+    // a bare-scan suite (the capstone pattern) builds a lazy frame: the
+    // fused checks' rows are picked from one shared aggregate, not read
+    // back from a checkpointed row
+    val dir = java.nio.file.Files.createTempDirectory("graft_lazy_checks").toString
+    ParquetSink.write(
+      Seq((1, "A", 5.0), (1, "B", 20.0), (2, null, 3.0)).toDF("id", "flag", "v"),
+      res, dir)
+    val suite = CheckRunner.fromResource(res)
+    val (result, actions) =
+      actionsDuring(CheckRunner.run(spark.read.parquet(dir), suite))
+    assert(actions.isEmpty, actions)
+    val rows = result.collect()
+    assert(rows.map(_.getString(0)).toSeq === suite.map(_.name))
+    assert(rows.map(r => r.getString(0) -> r.getBoolean(1)).toMap === Map(
+      "t:pk_unique" -> false, "t:id:not_null" -> true,
+      "t:flag:enum" -> true, "t:v:range" -> false))
+    // two file scans: the primary-key check's and the ONE fused aggregate
+    // the three fused checks share (their picks reuse its exchange)
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Int = (p match {
+      case _: FileSourceScanExec => 1
+      case _ => 0
+    }) + (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }).map(scans).sum
+    assert(scans(result.queryExecution.executedPlan) === 2,
+      result.queryExecution.executedPlan)
+  }
+
   test("WeightedQuantile picks smallest value reaching cumulative weight") {
     val df = Seq((1.0, 1.0), (2.0, 1.0), (3.0, 10.0)).toDF("v", "w")
     val got = df.agg(WeightedQuantile($"v", $"w", 1, 2)).head().getDouble(0)
