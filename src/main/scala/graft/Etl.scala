@@ -435,7 +435,7 @@ object Etl {
     val outputs =
       if (maxDf > 0) corpusOutputs.map(_.copy(countBy = None))
       else corpusOutputs
-    publish(spark, sfDir, outDir, outputs)(
+    publish(spark, "corpus_capstone", sfDir, outDir, outputs)(
       buildCorpusOutputs(spark, sfDir, dedupMaxDf = maxDf))
   }
 
@@ -584,7 +584,8 @@ object Etl {
     * plus the parts. */
   def linkageCapstone(spark: SparkSession, sfDir: String,
                       outDir: String): (Double, Double, Long) =
-    publish(spark, sfDir, outDir, Seq(Output(linkageMatches)))(
+    publish(spark, "linkage_capstone", sfDir, outDir,
+        Seq(Output(linkageMatches)))(
       Map(linkageMatches.name -> buildLinkageWide(spark, sfDir)))
 
   /** Run the wide chain end-to-end through [[publish]] — write both
@@ -593,7 +594,8 @@ object Etl {
     * Bench records `etl_capstone` (= core + checks) plus the parts. */
   def capstone(spark: SparkSession, sfDir: String,
                outDir: String): (Double, Double, Long) =
-    publish(spark, sfDir, outDir, etlOutputs)(buildWide(spark, sfDir))
+    publish(spark, "etl_capstone", sfDir, outDir, etlOutputs)(
+      buildWide(spark, sfDir))
 
   // ---- publishing: write every output, then validate them all -----------
 
@@ -612,13 +614,23 @@ object Etl {
     Seq(corpusWide, corpusPairs).map(Output(_, Seq("split"), Some("split")))
 
   /** Write each output's frame as schema-enforced parquet under
-    * `<outDir>/<table name>`. */
+    * `<outDir>/<table name>`; its jobs are described `<table>:write`. */
   private[graft] def writeOutputs(outDir: String, outputs: Seq[Output],
                                   frames: Map[String, DataFrame]): Unit =
     outputs.foreach { o =>
-      ParquetSink.write(frames(o.resource.name), o.resource,
-        s"$outDir/${o.resource.name}", o.partitionBy)
+      val frame = frames(o.resource.name)
+      described(frame.sparkSession, s"${o.resource.name}:write") {
+        ParquetSink.write(frame, o.resource,
+          s"$outDir/${o.resource.name}", o.partitionBy)
+      }
     }
+
+  /** `body`, with every Spark job it starts described as `label`, so a
+    * listener trace names the table or phase that ran it. */
+  private def described[T](spark: SparkSession, label: String)(body: => T): T = {
+    spark.sparkContext.setJobDescription(label)
+    try body finally spark.sparkContext.setJobDescription(null)
+  }
 
   /** Per-(table × partition) row counts of the written outputs that have a
     * golden column — the observation side of the reference's golden
@@ -692,40 +704,43 @@ object Etl {
     * reads as a lineage regression. Validation is ONE lazy frame — every
     * table's [[CheckRunner]] suite over its re-read parquet, plus golden
     * row-count drift for the tables the manifest pins at this scale
-    * (filtered on the driver: no job) — collected by ONE driver action. */
-  private def publish(spark: SparkSession, sfDir: String, outDir: String,
-                      outputs: Seq[Output])(
+    * (filtered on the driver: no job) — collected by ONE driver action.
+    * Its jobs are described `<capstone>:build` (eager actions of the
+    * lineage), `<table>:write` and `<capstone>:validate`. */
+  private def publish(spark: SparkSession, capstone: String, sfDir: String,
+                      outDir: String, outputs: Seq[Output])(
                       build: => Map[String, DataFrame]): (Double, Double, Long) = {
     val t0 = System.nanoTime()
-    writeOutputs(outDir, outputs, build)
+    writeOutputs(outDir, outputs, described(spark, s"$capstone:build")(build))
     val coreSec = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val checkFailures = outputs.map { o =>
-      CheckRunner.run(spark.read.parquet(s"$outDir/${o.resource.name}"),
-          CheckRunner.fromResource(o.resource))
-        .where(!col("passed"))
-        .select(lit(o.resource.name).as("table_name"), col("check_name"),
-          col("observed"), lit(null).cast("long").as("expected"))
-    }
-    val sfLabel = new java.io.File(sfDir).getName
-    val golden = outputs.filter(_.countBy.isDefined).flatMap { o =>
-      rowCountGoldens.filter(g =>
-        g.sf == sfLabel && g.table_name == o.resource.name)
-    }
-    val driftFailures =
-      if (golden.isEmpty) Nil
-      else {
-        val pinned = outputs.filter(o =>
-          golden.exists(_.table_name == o.resource.name))
-        Seq(rowCountDrift(rowCounts(spark, outDir, pinned),
-            spark.createDataFrame(golden))
-          .select(col("table_name"),
-            concat(lit("row_count:"), col("partition")).as("check_name"),
-            col("observed_rows").as("observed"),
-            col("expected_rows").as("expected")))
+    val failing = described(spark, s"$capstone:validate") {
+      val checkFailures = outputs.map { o =>
+        CheckRunner.run(spark.read.parquet(s"$outDir/${o.resource.name}"),
+            CheckRunner.fromResource(o.resource))
+          .where(!col("passed"))
+          .select(lit(o.resource.name).as("table_name"), col("check_name"),
+            col("observed"), lit(null).cast("long").as("expected"))
       }
-    val failing = (checkFailures ++ driftFailures).reduce(_ unionByName _)
-      .collect()
+      val sfLabel = new java.io.File(sfDir).getName
+      val golden = outputs.filter(_.countBy.isDefined).flatMap { o =>
+        rowCountGoldens.filter(g =>
+          g.sf == sfLabel && g.table_name == o.resource.name)
+      }
+      val driftFailures =
+        if (golden.isEmpty) Nil
+        else {
+          val pinned = outputs.filter(o =>
+            golden.exists(_.table_name == o.resource.name))
+          Seq(rowCountDrift(rowCounts(spark, outDir, pinned),
+              spark.createDataFrame(golden))
+            .select(col("table_name"),
+              concat(lit("row_count:"), col("partition")).as("check_name"),
+              col("observed_rows").as("observed"),
+              col("expected_rows").as("expected")))
+        }
+      (checkFailures ++ driftFailures).reduce(_ unionByName _).collect()
+    }
     failing.foreach(r => System.err.println(
       s"[capstone] FAILED ${r.mkString(" | ")}"))
     (coreSec, (System.nanoTime() - t1) / 1e9, failing.length.toLong)

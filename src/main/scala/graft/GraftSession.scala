@@ -13,7 +13,29 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft's canonical confs to any builder. */
+  /** Apply graft's canonical confs to any builder.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes Spark's JVM-wide cache of
+    * generated classes: one entry per class and class loader, so in local
+    * mode a stage fills two, the driver's and the executor's. Spark's
+    * default of 100 entries is smaller than one pass of a graft workload,
+    * so every warm pass regenerated classes the pass before had compiled.
+    * Entries one pass fills at sf0.1: 129 for the linkage capstone (write
+    * + validate) and 95 for the five spine lanes q19/q42/q45/q61/q69
+    * (perfbench, `local[2]`); ~590 for a `SPARK_GRAFT_CAPSTONES=only`
+    * Bench run (table warm-up plus one pass of each capstone). With 100
+    * entries every warm pass recompiled 104 linkage and 40 spine classes;
+    * with 2000 it recompiles none.
+    *
+    * A recompile costs executor time as well as driver time. Beyond the
+    * janino compile itself, a recompiled class is a new class, so HotSpot
+    * runs the tasks' generated code in the interpreter again until it
+    * re-JITs it, and small stages end before it does. 2000 entries hold
+    * each working set above, not the whole 211-lane suite. Every entry
+    * pins its class in Metaspace (a capstones-only Bench run ends at
+    * ~175 MB against ~171 MB with 100 entries), so a larger cache needs a
+    * Metaspace reading first. The conf is static: the first session that
+    * generates code fixes the size for the JVM. */
   def tune(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -44,6 +66,7 @@ object GraftSession {
       // reader rejects by default; read as long and convert (Tables.load).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
     val s = tune(

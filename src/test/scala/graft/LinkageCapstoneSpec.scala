@@ -42,6 +42,50 @@ class LinkageCapstoneSpec extends SparkSpec {
       "collect" -> false), actions)
   }
 
+  private def capstoneRun(): Long = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_linkcap_run")
+    try {
+      val (_, _, failed) = Etl.linkageCapstone(spark, sf, dir.toString)
+      failed
+    } finally rm(dir.toFile)
+  }
+
+  test("a second linkage capstone run reuses its generated classes") {
+    // One run fills ~125 codegen cache entries here. Spark's default
+    // cache of 100 recompiled ~100 of them on every later run; the cache
+    // GraftSession.tune sizes keeps them all. A later run may still
+    // compile AQE's plan variants: a join re-planned in another stage
+    // completion order can take another shape, which is new code (0-8
+    // compiles per run on local[4], two per variant: the driver's class
+    // loader and the executor's).
+    assert(capstoneRun() === 0L)
+    val (failed, compiles) = compilesDuring(capstoneRun())
+    assert(failed === 0L)
+    assert(compiles <= 16L, s"a warm run compiled $compiles classes")
+  }
+
+  test("every job the capstone starts names its table or phase") {
+    import org.apache.spark.graftaccess.Bus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        descriptions.add(Option(jobStart.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("<none>"))
+    }
+    Bus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(capstoneRun() === 0L)
+      Bus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(descriptions.asScala.toSet === Set("linkage_capstone:build",
+      "out_linkage_matches:write", "linkage_capstone:validate"),
+      descriptions.asScala.toSeq)
+  }
+
   test("cleaner is load-bearing: every true pair differs raw, agrees canon") {
     // replicate the two dressings for a handful of ids and check the
     // canon convergence the pipeline depends on
@@ -91,12 +135,11 @@ class LinkageCapstoneSpec extends SparkSpec {
       val (core, checks, failed) = Etl.linkageCapstone(spark, sf, dir.toString)
       assert(core > 0 && checks >= 0)
       assert(failed == 0, s"$failed failed checks")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
+    } finally rm(dir.toFile)
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
+    f.delete(); ()
   }
 }

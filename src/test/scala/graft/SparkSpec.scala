@@ -43,4 +43,15 @@ trait SparkSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     (result, actions.asScala.toSeq)
   }
+
+  /** `body`'s result and the number of classes Spark's codegen compiled
+    * while it ran. The codegen cache is JVM-wide, so a class generated
+    * before `body` and still cached costs no compile. */
+  def compilesDuring[T](body: => T): (T, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = compiles
+    val result = body
+    (result, compiles - before)
+  }
 }
