@@ -388,8 +388,7 @@ object Bench {
         .select(col("id_a").as("q_id"), lit(1).as("rk"),
           col("id_b").as("c_id"))
       val approx = Similarity.euclideanNearPairs(emb, "vec_id",
-          "embedding", dim = 64, eps = eps, w = 2.0, tables = 8,
-          portable = true)
+          "embedding", dim = 64, eps = eps, w = 2.0, tables = 8)
         .where(col("id_a") < 20)
         .select(col("id_a").as("q_id"), lit(1).as("rk"),
           col("id_b").as("c_id"))
@@ -422,13 +421,12 @@ object Bench {
       (semDedupDups(None, probed = false), semDedupDups(Some(64), probed = true))
     }
     val recallLshNano = recall10Of((q, c) => Similarity.lshTopK(q, c,
-      "vec_id", "embedding", 10, nBits = 6, dim = 64, tables = 8,
-      portable = true))
+      "vec_id", "embedding", 10, nBits = 6, dim = 64, tables = 8))
     // Multi-probe on the SAME index as the lsh gate (q199's graded config):
     // the recorded pair shows what 4 probes buy over 1 at zero index cost.
     val recallMpLshNano = recall10Of((q, c) => Similarity.lshMultiProbeTopK(
       q, c, "vec_id", "embedding", 10, nBits = 6, dim = 64, tables = 8,
-      probes = 4, portable = true))
+      probes = 4))
     val recallIvfNano = recall10Of((q, c) => Similarity.ivfTopKSeeded(q, c,
       "vec_id", "embedding", 10, nCells = 16, nProbe = 4))
     val recallSq8Nano = recall10Of((q, c) => Similarity.sq8TopK(q, c,

@@ -248,36 +248,31 @@ object Etl {
     * supplier-of-training-batches shaped (split-partitioned parquet).
     * The Bench entry `corpus_capstone` times build + write + validation
     * end-to-end — the data-pipeline twin of [[capstone]]. */
-  def buildCorpusWide(spark: SparkSession, sfDir: String,
-                      dedupMaxDf: Int = 0): DataFrame =
-    buildCorpusOutputs(spark, sfDir, dedupMaxDf)(corpusWide.name)
+  def buildCorpusWide(spark: SparkSession, sfDir: String): DataFrame =
+    buildCorpusOutputs(spark, sfDir)(corpusWide.name)
 
   /** THE corpus capstone's near-dup edge set — 3-gram Jaccard ≥ 1/4 pairs
     * as (src, dst) — extracted so consumers beyond the canonicalization
     * stage (the q211 community/density report) read the IDENTICAL edge
     * definition the capstone clusters on, by construction rather than by
-    * parallel re-declaration. `maxDf > 0` engages the stop-shingle
-    * posting-list cap (measurement lanes only). */
-  def corpusDupEdges(docs: DataFrame, maxDf: Int = 0): DataFrame =
+    * parallel re-declaration. */
+  def corpusDupEdges(docs: DataFrame): DataFrame =
     graft.dedup.NearDup.jaccardPairs(docs, "doc_id", "text",
-        n = 3, thresholdNum = 1, thresholdDen = 4, maxDf = maxDf)
+        n = 3, thresholdNum = 1, thresholdDen = 4)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
 
   /** Both corpus capstone outputs as one shared lineage:
     * `out_corpus_wide` (per-doc accounting) and `out_corpus_pairs` (the
     * model-ready span-corruption (input, target) pairs — stage 8). */
-  def buildCorpusOutputs(spark: SparkSession, sfDir: String,
-                         dedupMaxDf: Int = 0): Map[String, DataFrame] = {
+  def buildCorpusOutputs(spark: SparkSession,
+                         sfDir: String): Map[String, DataFrame] = {
     import graft.dedup.NearDup
     import graft.text.TextAnalysis
     import graft.operators.Sampling
     val docs = Tables.load(spark, sfDir, "documents")
 
-    // 1. near-dup canonicalization: keep each cluster's minimum doc id.
-    //    dedupMaxDf > 0 engages the stop-shingle df cap (jaccardPairs
-    //    discipline) — the 100 TB posting-list bound; 0 = exact (the
-    //    default, and what the golden counts pin)
-    val pairs = corpusDupEdges(docs, maxDf = dedupMaxDf)
+    // 1. near-dup canonicalization: keep each cluster's minimum doc id
+    val pairs = corpusDupEdges(docs)
     val cc = graft.graph.ConnectedComponents.run(pairs, "src", "dst")
     val canonical = docs
       .join(cc, docs("doc_id") === cc("v"), "left")
@@ -420,24 +415,9 @@ object Etl {
     * returning (core seconds, check seconds, failed checks). Bench records
     * `corpus_capstone` (= core + checks) plus the two parts. */
   def corpusCapstone(spark: SparkSession, sfDir: String,
-                     outDir: String): (Double, Double, Long) = {
-    // SPARK_GRAFT_CORPUS_MAXDF > 0 engages the stage-1 stop-shingle cap —
-    // the scale-measurement lane (SCALE.md capped-vs-uncapped exponents);
-    // unset/0 = exact, the per-round default. Announced on stderr so no
-    // recorded number can silently carry a cap.
-    val maxDf = sys.env.get("SPARK_GRAFT_CORPUS_MAXDF")
-      .map(_.trim.toInt).getOrElse(0)
-    if (maxDf > 0)
-      System.err.println(
-        s"[capstone] corpus near-dup df cap ENGAGED: maxDf=$maxDf")
-    // the cap is lossy by contract, so its counts are measurement-lane
-    // artifacts, never golden: capped outputs carry no golden column
-    val outputs =
-      if (maxDf > 0) corpusOutputs.map(_.copy(countBy = None))
-      else corpusOutputs
-    publish(spark, "corpus_capstone", sfDir, outDir, outputs)(
-      buildCorpusOutputs(spark, sfDir, dedupMaxDf = maxDf))
-  }
+                     outDir: String): (Double, Double, Long) =
+    publish(spark, "corpus_capstone", sfDir, outDir, corpusOutputs)(
+      buildCorpusOutputs(spark, sfDir))
 
   // ---- record-linkage capstone --------------------------------------------
 
@@ -859,7 +839,7 @@ object CapstoneGoldens {
     val rows = args.drop(1).flatMap { sfDir =>
       val out = java.nio.file.Files.createTempDirectory("graft_golden").toString
       Etl.writeOutputs(out, Etl.etlOutputs, Etl.buildWide(spark, sfDir))
-      // corpus capstone outputs (uncapped — the golden basis by contract)
+      // corpus capstone outputs
       Etl.writeOutputs(out, Etl.corpusOutputs,
         Etl.buildCorpusOutputs(spark, sfDir))
       val sfLabel = new java.io.File(sfDir).getName

@@ -474,13 +474,12 @@ object SparkEntry {
 
   // ---- similarity search: LSH-bucketed ANN (scale path). Portable
   // Rademacher planes → the DuckDB oracle rebuilds all 8 hash tables,
-  // buckets, candidates and the top-k ranking exactly; the Gaussian-plane
-  // default stays recall-tested in SimilaritySpec.
+  // buckets, candidates and the top-k ranking exactly.
   private def q43(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     Similarity.lshTopK(emb.where(col("vec_id") < 20), emb,
       idCol = "vec_id", embCol = "embedding", k = 5, nBits = 6, dim = 64,
-      tables = 8, portable = true)
+      tables = 8)
   }
 
   // ---- multimodal: opaque binary columns + typed metadata -----------------
@@ -1406,7 +1405,7 @@ object SparkEntry {
   }
 
   // ---- dedup: embedding-cosine near-dup pairs — banded sign-bit blocking
-  // over portable Rademacher hyperplanes + exact cosine filter inside
+  // over portable Rademacher planes + exact cosine filter inside
   // buckets. Fully replayed by the DuckDB oracle (same sign matrix via MD5).
   private def q95(s: SparkSession, dir: String): DataFrame =
     Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id",
@@ -1417,7 +1416,7 @@ object SparkEntry {
   // inside buckets). Portable grids → oracle-replayed end-to-end.
   private def q96(s: SparkSession, dir: String): DataFrame =
     Similarity.euclideanNearPairs(t(s, dir, "embeddings"), "vec_id",
-      "embedding", dim = 64, eps = 1.1, w = 2.0, tables = 8, portable = true)
+      "embedding", dim = 64, eps = 1.1, w = 2.0, tables = 8)
 
   // ---- §2.11 full cross-year linkage orchestration -----------------------
   // Reference: link_ids_cross_year graph (link_cross_year.py:299-360) —
@@ -3571,7 +3570,7 @@ object SparkEntry {
     Similarity.recallAtK(
       Similarity.cosineTopK(qs, emb, "vec_id", "embedding", 10),
       Similarity.lshTopK(qs, emb, "vec_id", "embedding", 10, nBits = 6,
-        dim = 64, tables = 8, portable = true),
+        dim = 64, tables = 8),
       10)
   }
 
@@ -3638,7 +3637,7 @@ object SparkEntry {
     val emb = t(s, dir, "embeddings")
     Similarity.lshMultiProbeTopK(emb.where(col("vec_id") < 20), emb,
       idCol = "vec_id", embCol = "embedding", k = 5, nBits = 6, dim = 64,
-      tables = 8, probes = 4, portable = true)
+      tables = 8, probes = 4)
   }
 
   /** q200's eval query set — the SINGLE descriptor both the Spark lane and

@@ -153,8 +153,7 @@ object Linkage {
     * guards that join against degenerate (rule, key) blocks with
     * [[skewGuardedJoin]] (≤ ~maxBlock² pairs per tile), which returns the
     * plain join's pairs. A rule set the encoding gate rejects (mismatched
-    * or non-atomic key types) falls back to K typed per-rule joins,
-    * unioned, each guarded the same way.
+    * or non-atomic key types) fails with the gate's message.
     *
     * Left/right must have disjoint column names (including the id
     * columns) that avoid the reserved tag names `__lrule`, `__lkey`,
@@ -171,24 +170,14 @@ object Linkage {
       .intersect(right.columns.map(_.toLowerCase))
     require(shared.isEmpty,
       s"unionBlocks needs disjoint left/right column names; both have ${shared.mkString(", ")}")
-    val unioned = encoded(left, right, rules) match {
-      case Right((lT, rT)) =>
-        val joined =
-          if (maxBlock <= 0) lT.join(rT, col("__lrule") === col("__rrule") &&
-            col("__lkey") === col("__rkey"))
-          else skewGuardedJoin(lT, rT, Seq(col("__lrule"), col("__lkey")),
-            Seq(col("__rrule"), col("__rkey")), maxBlock)
-        joined.select(left.columns.map(col) ++ right.columns.map(col) :+
-          col("__lrule").as("match_key"): _*)
-      case Left(_) =>
-        rules.zipWithIndex.map { case ((lk, rk), i) =>
-          val j =
-            if (maxBlock > 0) skewGuardedJoin(left, right, lk, rk, maxBlock)
-            else left.join(right,
-              lk.zip(rk).map { case (a, b) => a === b }.reduce(_ && _))
-          j.withColumn("match_key", lit(i))
-        }.reduce(_.unionByName(_))
-    }
+    val (lT, rT) = encoded(left, right, rules)
+    val joined =
+      if (maxBlock <= 0) lT.join(rT, col("__lrule") === col("__rrule") &&
+        col("__lkey") === col("__rkey"))
+      else skewGuardedJoin(lT, rT, Seq(col("__lrule"), col("__lkey")),
+        Seq(col("__rrule"), col("__rkey")), maxBlock)
+    val unioned = joined.select(left.columns.map(col) ++
+      right.columns.map(col) :+ col("__lrule").as("match_key"): _*)
     val pair = Window.partitionBy(col(leftId), col(rightId))
     unioned
       .withColumn("n_rules", count(lit(1)).over(pair))
@@ -217,13 +206,13 @@ object Linkage {
     * first: every rule's aligned keys must share one [[stringEncodable]]
     * type on both sides — otherwise the typed join would coerce ('5' vs
     * 5.0) or compare structurally where the strings would not — and the
-    * first rule that fails is returned as Left(reason). Otherwise both
-    * sides come back tagged by [[tagRules]]: left as (`__lrule`,
-    * `__lkey`), right as (`__rrule`, `__rkey`). Input columns may not
-    * use the tag names. */
+    * first rule that fails throws IllegalArgumentException naming the
+    * rule and both sides' key types. Otherwise both sides come back
+    * tagged by [[tagRules]]: left as (`__lrule`, `__lkey`), right as
+    * (`__rrule`, `__rkey`). Input columns may not use the tag names. */
   private def encoded(left: DataFrame, right: DataFrame,
                       rules: Seq[(Seq[Column], Seq[Column])])
-      : Either[String, (DataFrame, DataFrame)] = {
+      : (DataFrame, DataFrame) = {
     val reserved = (left.columns ++ right.columns)
       .filter(c => tagNames(c.toLowerCase))
     require(reserved.isEmpty,
@@ -231,13 +220,14 @@ object Linkage {
     val lt = keyTypes(left, rules.map(_._1))
     val rt = keyTypes(right, rules.map(_._2))
     def show(ts: Seq[DataType]) = ts.map(_.simpleString).mkString("(", ", ", ")")
-    lt.zip(rt).zipWithIndex.collectFirst {
-      case ((a, b), i) if a != b || !a.forall(stringEncodable) =>
+    lt.zip(rt).zipWithIndex.foreach { case ((a, b), i) =>
+      require(a == b && a.forall(stringEncodable),
         s"blocking rule $i has left key types ${show(a)} and right key " +
           s"types ${show(b)}; the (rule, key) encoding needs one " +
-          "string-encodable atomic type per aligned key pair"
-    }.toLeft((tagRules(left, rules.map(_._1), lt, "__lrule", "__lkey"),
-      tagRules(right, rules.map(_._2), rt, "__rrule", "__rkey")))
+          "string-encodable atomic type per aligned key pair")
+    }
+    (tagRules(left, rules.map(_._1), lt, "__lrule", "__lkey"),
+      tagRules(right, rules.map(_._2), rt, "__rrule", "__rkey"))
   }
 
   /** Every rule's key types over `df`, from one analysis of `df`. */
@@ -291,10 +281,7 @@ object Linkage {
                    rules: Seq[(Seq[Column], Seq[Column])]): DataFrame = {
     val spark = left.sparkSession
     require(rules.nonEmpty, "need at least one blocking rule")
-    // no typed fallback here: a rule set the encoding gate rejects fails
-    // loudly instead of miscounting the joins it budgets
     val (lT, rT) = encoded(left, right, rules)
-      .fold(msg => throw new IllegalArgumentException(msg), identity)
     def blockCounts(tagged: DataFrame, ruleCol: String, keyCol: String,
                     cnt: String): DataFrame =
       tagged.groupBy(col(ruleCol).as("__rule"), col(keyCol).as("__key"))
@@ -403,8 +390,7 @@ object Linkage {
     * O(n_features). */
   def trainPairMatcher(pairs: DataFrame, featureCols: Seq[String],
                        labelCol: String, maxIter: Int = 500,
-                       tol: Double = 1e-12,
-                       trainPartitions: Int = 1): (Seq[Double], Double) = {
+                       tol: Double = 1e-12): (Seq[Double], Double) = {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.feature.VectorAssembler
     // localCheckpoint the (features, label) projection: every LBFGS
@@ -412,16 +398,12 @@ object Linkage {
     // each pass would re-run the candidate-pair lineage (blocked join +
     // string distances) — the measured cost of q158 before this was the
     // join × iterations, not the optimizer.
-    // trainPartitions sizes the per-pass parallelism: the default 1 suits
-    // fixture-scale frames ((features, label) doubles are tiny, and 1 task
-    // per LBFGS pass beats 32 near-empty tasks on scheduling latency);
-    // large candidate-pair frames pass a bigger count — or 0 to keep the
-    // input partitioning — so the gradient passes stay parallel instead
-    // of serializing through one task.
-    val projected = pairs.select((featureCols :+ labelCol).map(c =>
-      col(c).cast("double").as(c)): _*)
-    val training = (if (trainPartitions > 0) projected.coalesce(trainPartitions)
-                    else projected).localCheckpoint()
+    // coalesce(1): (features, label) doubles are tiny at every caller's
+    // scale, and 1 task per LBFGS pass beats 32 near-empty tasks on
+    // scheduling latency.
+    val training = pairs.select((featureCols :+ labelCol).map(c =>
+        col(c).cast("double").as(c)): _*)
+      .coalesce(1).localCheckpoint()
     try {
       val assembled = new VectorAssembler().setInputCols(featureCols.toArray)
         .setOutputCol("__features")
@@ -472,15 +454,7 @@ object Linkage {
                        embCol: String, dim: Int, simThreshold: Double,
                        assignThreshold: Double,
                        nBits: Int = 24, bands: Int = 4,
-                       blockOrphans: Boolean = true,
-                       // Some(t): reference-parity re-split — per-cluster
-                       // AVERAGE-linkage agglomerative at distance
-                       // threshold t (sklearn semantics; may keep
-                       // near-identical same-year records together).
-                       // None (default): windowed greedy first-fit, which
-                       // guarantees one record per year per sub-cluster
-                       // and replays in SQL (q97's oracle).
-                       agglomerativeSplit: Option[Double] = None): DataFrame = {
+                       blockOrphans: Boolean = true): DataFrame = {
     val ids = records.select(col(idCol).cast("long").as(idCol),
       col(yearCol), col(embCol))
     // 1. blocked near-pair edges, same-year pairs vetoed
@@ -500,26 +474,19 @@ object Linkage {
     // window's result between them without its own materialization round.
     // Linkage labels are ids+longs — tiny relative to the embedding
     // corpus at any scale.
-    val split = agglomerativeSplit match {
-      case Some(t) => NearDup.splitClustersAgglomerative(
-          clustered, "component", idCol, yearCol, embCol, t)
-        // the agglomerative splitter's 3-column output is oracle-pinned
-        // (q119) — re-attach the year here; the rare reference-parity
-        // branch keeps its old join count
-        .join(ids.select(col(idCol), col(yearCol)), Seq(idCol))
-      case None =>
-        // one exchange serves BOTH windows below (round 18): hash on
-        // component alone clusters every (component, year) group AND
-        // every (component, sub_cluster) group, so the split row_number
-        // and the record_label min reuse it instead of exchanging twice.
-        // Components are eps-graph clusters (entity × years) — bounded by
-        // construction, so keying the shuffle on component alone cannot
-        // create a hot partition a (component, year) key would have split.
-        // keepKey carries the original-typed year through, which removes
-        // the final reattach join over the whole record set.
-        NearDup.splitClusters(clustered.repartition(col("component")),
-          "component", idCol, yearCol, keepKey = true)
-    }
+    // One exchange serves BOTH windows below (round 18): hash on
+    // component alone clusters every (component, year) group AND every
+    // (component, sub_cluster) group, so the split row_number and the
+    // record_label min reuse it instead of exchanging twice. Components
+    // are eps-graph clusters (entity × years) — bounded by construction,
+    // so keying the shuffle on component alone cannot create a hot
+    // partition a (component, year) key would have split. The windowed
+    // greedy first-fit guarantees one record per year per sub-cluster
+    // and replays in SQL (q97's oracle); keepKey carries the
+    // original-typed year through, which removes the final reattach join
+    // over the whole record set.
+    val split = NearDup.splitClusters(clustered.repartition(col("component")),
+      "component", idCol, yearCol, keepKey = true)
     // CONTENTION SHAPE: every eager materialization here is a driver
     // barrier whose cost is the slowest straggler's — under host
     // contention the lane's wall time multiplies by the number of

@@ -10,7 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression: Σ aᵢ·bᵢ over two float arrays in double
   * precision, sequential left fold (same association order as
-  * `Similarity.dot`/`dotFast`, so results are bit-identical).
+  * `Similarity.dot`/`dotFast`, so results on equal-length arrays are
+  * bit-identical — PropertySpec checks it). Arrays of different lengths
+  * throw IllegalArgumentException naming both lengths, where the
+  * declarative `Similarity.dot` would return null.
   *
   * This is the preferred extension tier from SURVEY §7 ("custom Expression
   * beats Scala UDF"): `doGenCode` emits a primitive loop over the columnar
@@ -39,7 +42,9 @@ case class FloatDotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (y.numElements() != n) throw new IllegalArgumentException(
+      s"float_dot_product: array lengths differ ($n vs ${y.numElements()})")
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -55,7 +60,11 @@ case class FloatDotProduct(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |if ($b.numElements() != $n) {
+         |  throw new IllegalArgumentException("float_dot_product: array " +
+         |    "lengths differ (" + $n + " vs " + $b.numElements() + ")");
+         |}
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));

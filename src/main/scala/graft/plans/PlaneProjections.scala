@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Companion to [[PlaneSignBits]] for the projection-valued LSH families
   * (p-stable euclidean grids, IVF centroid distances): one constant
-  * float[] reference instead of nPlanes × dim literal nodes. */
+  * float[] reference instead of nPlanes × dim literal nodes. An embedding
+  * whose length is not `dim` throws IllegalArgumentException naming both
+  * lengths. */
 case class PlaneProjections(child: Expression, planes: Array[Float], dim: Int)
     extends UnaryExpression {
   require(dim > 0 && planes.length % dim == 0,
@@ -33,7 +35,9 @@ case class PlaneProjections(child: Expression, planes: Array[Float], dim: Int)
 
   override def nullSafeEval(e: Any): Any = {
     val v = e.asInstanceOf[ArrayData]
-    val n = math.min(dim, v.numElements())
+    val n = v.numElements()
+    if (n != dim) throw new IllegalArgumentException(
+      s"plane_projections: embedding length $n differs from plane length $dim")
     val out = new Array[Double](nPlanes)
     var p = 0
     while (p < nPlanes) {
@@ -60,7 +64,11 @@ case class PlaneProjections(child: Expression, planes: Array[Float], dim: Int)
       val acc = ctx.freshName("acc")
       val j = ctx.freshName("j")
       s"""
-         |int $n = java.lang.Math.min($dim, $v.numElements());
+         |int $n = $v.numElements();
+         |if ($n != $dim) {
+         |  throw new IllegalArgumentException("plane_projections: embedding length " +
+         |    $n + " differs from plane length $dim");
+         |}
          |double[] $out = new double[$nPlanes];
          |for (int $p = 0; $p < $nPlanes; $p++) {
          |  int $off = $p * $dim;

@@ -12,7 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * embedding against a whole plane matrix in ONE node — bit p of the result
   * is set iff emb · planes[p] > 0 (dot in double precision, sequential
   * fold, identical association order to [[FloatDotProduct]], so signs are
-  * bit-identical to the per-plane form).
+  * bit-identical to the per-plane form). `> 0` has SQL semantics: a NaN
+  * projection counts as positive (NaN is greatest in Spark and DuckDB).
+  * An embedding whose length is not `dim` throws IllegalArgumentException
+  * naming both lengths.
   *
   * Exists for plan size as much as row speed: the declarative form (one
   * `FloatDotProduct` per plane against a 64-float literal array) puts
@@ -40,7 +43,9 @@ case class PlaneSignBits(child: Expression, planes: Array[Float], dim: Int)
 
   override def nullSafeEval(e: Any): Any = {
     val v = e.asInstanceOf[ArrayData]
-    val n = math.min(dim, v.numElements())
+    val n = v.numElements()
+    if (n != dim) throw new IllegalArgumentException(
+      s"plane_sign_bits: embedding length $n differs from plane length $dim")
     var bits = 0L
     var p = 0
     while (p < nBits) {
@@ -51,7 +56,7 @@ case class PlaneSignBits(child: Expression, planes: Array[Float], dim: Int)
         acc += v.getFloat(j).toDouble * planes(off + j).toDouble
         j += 1
       }
-      if (acc > 0) bits |= (1L << p)
+      if (!(acc <= 0)) bits |= (1L << p)
       p += 1
     }
     bits
@@ -67,7 +72,11 @@ case class PlaneSignBits(child: Expression, planes: Array[Float], dim: Int)
       val acc = ctx.freshName("acc")
       val j = ctx.freshName("j")
       s"""
-         |int $n = java.lang.Math.min($dim, $v.numElements());
+         |int $n = $v.numElements();
+         |if ($n != $dim) {
+         |  throw new IllegalArgumentException("plane_sign_bits: embedding length " +
+         |    $n + " differs from plane length $dim");
+         |}
          |long $bits = 0L;
          |for (int $p = 0; $p < $nBits; $p++) {
          |  int $off = $p * $dim;
@@ -75,7 +84,7 @@ case class PlaneSignBits(child: Expression, planes: Array[Float], dim: Int)
          |  for (int $j = 0; $j < $n; $j++) {
          |    $acc += ((double) $v.getFloat($j)) * ((double) $planesRef[$off + $j]);
          |  }
-         |  if ($acc > 0) $bits |= (1L << $p);
+         |  if (!($acc <= 0)) $bits |= (1L << $p);
          |}
          |${ev.value} = $bits;
        """.stripMargin

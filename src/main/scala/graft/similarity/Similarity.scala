@@ -12,6 +12,14 @@ import org.apache.spark.sql.functions._
   * buckets make candidate generation an equi-join on (bucket), so the
   * query×corpus cross product never materializes — at 100 TB the corpus is
   * hash-partitioned by bucket and each query probes one partition.
+  *
+  * Every operator is a candidate stage followed by one shared ranking
+  * stage. Candidates come from a cross join (the bounded exact twins),
+  * the banded-signature join ([[bandedPairs]]), the LSH (tbl, bucket)
+  * join or IVF cells; ranking is the exact rounded cosine over per-row
+  * norms ([[normed]], [[rankByCosine]]) or the PQ ADC distance
+  * ([[adcTopK]]). All planes are the portable Rademacher family
+  * ([[rademacherPlanes]]), so every bucket replays in the DuckDB oracle.
   */
 object Similarity {
 
@@ -27,7 +35,9 @@ object Similarity {
     * the native codegen expression `graft.plans.FloatDotProduct` —
     * Catalyst's interpreted higher-order functions box every element, which
     * is the difference between 44 s and ~2 s on a 12M-pair scoring pass.
-    * Association order matches `dot` exactly, so results are bit-identical. */
+    * Association order matches `dot` exactly, so results on equal-length
+    * arrays are bit-identical (PropertySpec); arrays of different lengths
+    * throw, where `dot` returns null. */
   def dotFast(a: Column, b: Column): Column = graft.plans.FloatDotProduct(a, b)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
@@ -44,26 +54,44 @@ object Similarity {
   private def safeCosine(num: Column, denom: Column): Column =
     coalesce(nanvl(try_divide(num, denom), lit(-1.0)), lit(-1.0))
 
-  /** Exact top-k cosine neighbors for each query row (brute force).
-    * Ranking uses the rounded cosine with an id tiebreak so ordering is
-    * insensitive to last-bit float drift. */
-  def cosineTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-                 embCol: String, k: Int): DataFrame = {
-    // norms precomputed per ROW (O(n) folds), not per pair (O(n²))
-    val q = queries.select(col(idCol).as("q_id"), col(embCol).as("q_emb"))
-      .withColumn("__qn", sqrt(dotFast(col("q_emb"), col("q_emb"))))
-    val c = corpus.select(col(idCol).as("c_id"), col(embCol).as("c_emb"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
-    val scored = q.crossJoin(c).where(col("q_id") =!= col("c_id"))
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("q_emb"), col("c_emb")), col("__qn") * col("__cn")), 4))
-    scored
+  /** The per-row side projection of every exact-cosine operator:
+    * `<side>_id`, `<side>_emb`, the `extra` columns, and the L2 norm
+    * `__<side>n`, computed once per ROW (O(n) folds), never per pair
+    * (O(n²)). Sides are "q" (queries, orphans) and "c" (corpus). */
+  private def normed(df: DataFrame, idCol: String, embCol: String,
+                     side: String, extra: Column*): DataFrame = {
+    val emb = s"${side}_emb"
+    df.select(Seq(col(idCol).as(s"${side}_id"), col(embCol).as(emb)) ++
+        extra: _*)
+      .withColumn(s"__${side}n", sqrt(dotFast(col(emb), col(emb))))
+  }
+
+  /** Unrounded cosine of a candidate row's [[normed]] sides. */
+  private def pairCosine: Column =
+    safeCosine(dotFast(col("q_emb"), col("c_emb")), col("__qn") * col("__cn"))
+
+  /** The one exact-cosine ranker: `score` (default: [[pairCosine]]
+    * rounded to 4 dp) as `cosine`, numbered per `q_id` by cosine desc,
+    * then `c_id` asc, as `rk`; rows with rk ≤ k are kept as `out`. The
+    * rounding and the id tiebreak make the order insensitive to last-bit
+    * float drift, so every ranking here replays in the oracle. */
+  private def rankByCosine(cand: DataFrame, k: Int,
+                           score: Column = round(pairCosine, 4),
+                           out: Seq[String] = Seq("q_id", "rk", "c_id",
+                             "cosine")): DataFrame =
+    cand.withColumn("cosine", score)
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id"))
           .orderBy(col("cosine").desc, col("c_id").asc)))
       .where(col("rk") <= k)
-      .select("q_id", "rk", "c_id", "cosine")
-  }
+      .select(out.map(col): _*)
+
+  /** Exact top-k cosine neighbors for each query row (brute force). */
+  def cosineTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
+                 embCol: String, k: Int): DataFrame =
+    rankByCosine(normed(queries, idCol, embCol, "q")
+      .crossJoin(normed(corpus, idCol, embCol, "c"))
+      .where(col("q_id") =!= col("c_id")), k)
 
   /** Recall@k of an approximate top-k result against the exact one — the
     * standard ANN index-quality metric (FAISS's `recall@k`): both inputs
@@ -107,8 +135,8 @@ object Similarity {
     * in-batch random sampling almost never surfaces. With
     * `bandedDim = None` the exact brute form runs (bounded query sets —
     * the q154 oracle twin); with `bandedDim = Some(dim)` candidates must
-    * share ≥1 portable sign-bit band (the cosineNearDupPairs/semDedup
-    * blocking), so the search is a (band, bits) equi-join — candidate
+    * share ≥1 portable sign-bit band ([[bandedPairs]]), so the search is
+    * a (band, bits) equi-join — candidate
     * volume ~ bands × corpus / 2^(nBits/bands) per query, never corpus²
     * (recall vs the exact form is spec-tested, the lshTopK pattern).
     * TUNING: hard negatives live in the moderate-cosine band
@@ -121,61 +149,30 @@ object Similarity {
                     embCol: String, labelCol: String, k: Int,
                     bandedDim: Option[Int] = None, nBits: Int = 24,
                     bands: Int = 4): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"),
-        col(labelCol).as("q_label"), col(embCol).as("q_emb"))
-      .withColumn("__qn", sqrt(dotFast(col("q_emb"), col("q_emb"))))
-    val c = corpus.select(col(idCol).as("c_id"),
-        col(labelCol).as("c_label"), col(embCol).as("c_emb"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
+    val q = normed(queries, idCol, embCol, "q", col(labelCol).as("q_label"))
+    val c = normed(corpus, idCol, embCol, "c", col(labelCol).as("c_label"))
     val cand = bandedDim match {
-      case None =>
-        q.crossJoin(c)
+      case None => q.crossJoin(c)
       case Some(dim) =>
-        val bandStructs = bandedSignStructs(embCol, dim, nBits, bands)
-        val qb = queries.select(col(idCol).as("q_id"),
-          explode(array(bandStructs: _*)).as("bb"))
-          .select(col("q_id"), col("bb.band"), col("bb.bits"))
-        val cb = corpus.select(col(idCol).as("c_id"),
-          explode(array(bandStructs: _*)).as("bb"))
-          .select(col("c_id"), col("bb.band"), col("bb.bits"))
-        qb.join(cb, Seq("band", "bits"))
-          .select("q_id", "c_id").distinct()
+        bandedPairs(queries, corpus, idCol, embCol, dim, nBits, bands)
           .join(q, "q_id").join(c, "c_id")
     }
-    cand
-      .where(col("q_id") =!= col("c_id") &&
-        !(col("q_label") <=> col("c_label")))
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("q_emb"), col("c_emb")), col("__qn") * col("__cn")), 4))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("c_id").asc)))
-      .where(col("rk") <= k)
-      .select("q_id", "q_label", "rk", "c_id", "c_label", "cosine")
+    rankByCosine(cand.where(col("q_id") =!= col("c_id") &&
+        !(col("q_label") <=> col("c_label"))), k,
+      out = Seq("q_id", "q_label", "rk", "c_id", "c_label", "cosine"))
   }
 
   /** Assign each orphan (unclustered) row to the cluster of its nearest
     * clustered neighbor by cosine — `match_orphaned_records`
     * (`/root/reference/src/pudl/analysis/record_linkage/link_cross_year.py:241-299`).
-    * Brute-force here (orphans × clustered); swap the cross join for the
-    * LSH bucket join at scale. */
+    * Brute-force here (orphans × clustered); [[nearestAssignBlocked]] is
+    * the scale path. */
   def nearestAssign(orphans: DataFrame, clustered: DataFrame, idCol: String,
-                    embCol: String, clusterCol: String): DataFrame = {
-    val o = orphans.select(col(idCol).as("orphan_id"), col(embCol).as("o_emb"))
-      .withColumn("__on", sqrt(dotFast(col("o_emb"), col("o_emb"))))
-    val c = clustered.select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb"),
-        col(clusterCol).as("assigned_cluster"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
-    val scored = o.crossJoin(c)
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("o_emb"), col("c_emb")), col("__on") * col("__cn")), 4))
-    graft.operators.Dedup.keepFirst(scored, Seq("orphan_id"),
-        Seq(col("cosine").desc, col("neighbor_id").asc))
-      .select("orphan_id", "neighbor_id", "cosine", "assigned_cluster")
-  }
+                    embCol: String, clusterCol: String): DataFrame =
+    nearestOf(orphans, clustered, idCol, embCol, clusterCol)(_.crossJoin(_))
 
   /** Scale path for [[nearestAssign]]: candidates come from the banded
-    * sign-bit LSH equi-join (same portable Rademacher planes as
+    * sign-bit LSH equi-join ([[bandedPairs]], the same portable planes as
     * [[cosineNearDupPairs]]) instead of the orphans × clustered cross join.
     * Shuffle keys are (band, bits); per-orphan candidate volume is
     * ~ bands × clustered / 2^(nBits/bands). Narrow bands (bands = nBits →
@@ -186,38 +183,32 @@ object Similarity {
     * materializing the product at 100 TB.
     *
     * `bandProbe1 = true` additionally probes, on the ORPHAN side only,
-    * every single-bit-flip neighbor bucket of each band
-    * ([[bandedSignStructsProbed]]) — the multi-probe recall lever in its
-    * best-case placement: orphans are the BOUNDED side of this join, so
-    * the (w+1)× membership growth lands on a few-thousand-row frame while
-    * the clustered corpus index stays untouched. */
+    * every single-bit-flip neighbor bucket of each band — the multi-probe
+    * recall lever in its best-case placement: orphans are the BOUNDED side
+    * of this join, so the (w+1)× membership growth lands on a
+    * few-thousand-row frame while the clustered corpus index stays
+    * untouched. */
   def nearestAssignBlocked(orphans: DataFrame, clustered: DataFrame,
                            idCol: String, embCol: String, clusterCol: String,
                            dim: Int, nBits: Int = 24,
                            bands: Int = 4,
-                           bandProbe1: Boolean = false): DataFrame = {
-    val bandStructs = bandedSignStructs(embCol, dim, nBits, bands)
-    def buckets(df: DataFrame, as: String, structs: Seq[Column]) =
-      df.select(col(idCol).as(as), explode(array(structs: _*)).as("bb"))
-        .select(col(as), col("bb.band"), col("bb.bits"))
-    val oStructs = if (bandProbe1)
-      bandedSignStructsProbed(embCol, dim, nBits, bands) else bandStructs
-    val cand = buckets(orphans, "orphan_id", oStructs)
-      .join(buckets(clustered.select(idCol, embCol), "neighbor_id",
-        bandStructs), Seq("band", "bits"))
-      .select("orphan_id", "neighbor_id").distinct()
-    val o = orphans.select(col(idCol).as("orphan_id"), col(embCol).as("o_emb"))
-      .withColumn("__on", sqrt(dotFast(col("o_emb"), col("o_emb"))))
-    val c = clustered.select(col(idCol).as("neighbor_id"),
-        col(embCol).as("c_emb"), col(clusterCol).as("assigned_cluster"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
-    val scored = cand.join(o, "orphan_id").join(c, "neighbor_id")
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("o_emb"), col("c_emb")), col("__on") * col("__cn")), 4))
-    graft.operators.Dedup.keepFirst(scored, Seq("orphan_id"),
-        Seq(col("cosine").desc, col("neighbor_id").asc))
-      .select("orphan_id", "neighbor_id", "cosine", "assigned_cluster")
-  }
+                           bandProbe1: Boolean = false): DataFrame =
+    nearestOf(orphans, clustered, idCol, embCol, clusterCol) { (o, c) =>
+      bandedPairs(orphans, clustered, idCol, embCol, dim, nBits, bands,
+          probeA = bandProbe1)
+        .join(o, "q_id").join(c, "c_id")
+    }
+
+  /** Top-1 of the exact ranker over the candidates `pair` forms from the
+    * [[normed]] orphan and clustered sides. */
+  private def nearestOf(orphans: DataFrame, clustered: DataFrame,
+                        idCol: String, embCol: String, clusterCol: String)(
+                        pair: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    rankByCosine(pair(normed(orphans, idCol, embCol, "q"),
+        normed(clustered, idCol, embCol, "c",
+          col(clusterCol).as("assigned_cluster"))), 1,
+        out = Seq("q_id", "c_id", "cosine", "assigned_cluster"))
+      .toDF("orphan_id", "neighbor_id", "cosine", "assigned_cluster")
 
   /** Exact eps-graph edges (rounded cosine ≥ threshold) by brute force —
     * the verification twin of the blocked LSH paths, standing in for the
@@ -281,45 +272,97 @@ object Similarity {
     }.toDF("id_a", "id_b", "cosine")
   }
 
-  /** Deterministic pseudo-random hyperplanes (seeded), as literal arrays —
-    * tiny (nBits × dim doubles), broadcast with the plan. */
-  private def hyperplanes(nBits: Int, dim: Int, seed: Long): Seq[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(nBits)(Array.fill(dim)(rnd.nextGaussian()))
-  }
+  /** Deterministic Rademacher (±1) planes derived from the portable
+    * MD5-prefix hash: sign(i,d) = +1 iff hex60(md5("i_d")) is even. They
+    * are reproducible in ANY engine with MD5 — the DuckDB oracle rebuilds
+    * the identical matrix, and sign-bit projections of ±1 planes are
+    * bit-exact (same in-order double sum on both sides). Rademacher
+    * projections preserve angles in expectation just like Gaussian ones
+    * (Achlioptas 2001; lshTopK recall@5 on the fixture at nBits 3, 6
+    * tables: 0.77, vs 0.76 with Gaussian planes), so this one family
+    * serves both the scale path and the oracle. */
+  private def rademacherPlanes(nBits: Int, dim: Int): Seq[Array[Float]] =
+    (0 until nBits).map { i =>
+      Array.tabulate(dim) { d =>
+        if (graft.functions.PortableHash.hex60(s"${i}_$d") % 2 == 0) 1f else -1f
+      }
+    }
 
-  /** Sign-bit LSH bucket id for an embedding column. The whole plane
-    * matrix evaluates in ONE native `PlaneSignBits` node (constant float[]
-    * reference, codegen'd primitive loop) — bit i of the result is plane
-    * i's sign, identical to the per-plane `FloatDotProduct` form but
-    * without nBits × dim literal nodes in the plan. */
-  def lshBucket(emb: Column, nBits: Int, dim: Int, seed: Long = 42L): Column = {
-    val planes = hyperplanes(nBits, dim, seed)
-    graft.plans.PlaneSignBits(emb,
-      planes.flatMap(_.map(_.toFloat)).toArray, dim)
-  }
+  /** `tables` row-major nBits × dim plane matrices: table t holds the
+    * global planes g = t·nBits + i, the indexing the oracle replays. */
+  private def tablePlanes(nBits: Int, tables: Int,
+                          dim: Int): Seq[Array[Float]] =
+    rademacherPlanes(tables * nBits, dim).grouped(nBits)
+      .map(_.flatten.toArray).toSeq
 
   /** All (table, bucket) memberships for an embedding: `tables` independent
-    * hash tables of `nBits` hyperplanes each. Multi-table is what buys
-    * recall: a true neighbor is a candidate if it collides in ANY table.
-    * `portable = true` swaps the Gaussian planes for MD5-derived Rademacher
-    * planes (global plane index g = t·nBits + i), making every bucket
-    * reproducible by the DuckDB oracle. */
+    * hash tables of `nBits` planes each, one native `PlaneSignBits` node
+    * per table. Multi-table is what buys recall: a true neighbor is a
+    * candidate if it collides in ANY table. */
   private def bucketMemberships(emb: Column, nBits: Int, tables: Int,
-                                dim: Int, portable: Boolean = false): Column =
-    if (!portable)
-      array((0 until tables).map { t =>
-        struct(lit(t).as("tbl"),
-          lshBucket(emb, nBits, dim, seed = 42L + t).as("bucket"))
-      }: _*)
-    else {
-      val all = rademacherPlanes(tables * nBits, dim)
-      array((0 until tables).map { t =>
-        val flat = (0 until nBits).flatMap(i => all(t * nBits + i)).toArray
-        struct(lit(t).as("tbl"),
-          graft.plans.PlaneSignBits(emb, flat, dim).as("bucket"))
-      }: _*)
+                                dim: Int): Column =
+    array(tablePlanes(nBits, tables, dim).zipWithIndex.map { case (p, t) =>
+      struct(lit(t).as("tbl"),
+        graft.plans.PlaneSignBits(emb, p, dim).as("bucket"))
+    }: _*)
+
+  /** The full nBits sign signature as ONE expression. [[bandedPairs]]
+    * materializes it into a column before its explode: struct arrays that
+    * INLINE the signature expression repeat it per struct, and past a
+    * handful of copies the generator stage falls out of whole-stage
+    * codegen and evaluates interpreted (the probed 28-struct form cost
+    * 90 µs/row — 50× the codegen'd path — until semDedup switched to the
+    * sig-as-column shape, round 17). */
+  private def planeSig(embCol: String, dim: Int, nBits: Int): Column =
+    graft.plans.PlaneSignBits(col(embCol),
+      rademacherPlanes(nBits, dim).flatten.toArray, dim)
+
+  /** The one banded-signature candidate join, behind [[hardNegatives]]
+    * (banded), [[nearestAssignBlocked]], [[cosineNearDupPairs]] and
+    * [[semDedup]] (banded). The [[planeSig]] signature splits into
+    * `bands` equal bands of w = nBits/bands bits; rows of `a` and `b`
+    * meet when they agree exactly on ≥1 band — and on the `key` column,
+    * when given (semDedup's cluster). Shuffle keys are (key, band, bits):
+    * candidate volume per row is ~ bands × |b| / 2^w, never |a|·|b|.
+    *
+    * `probeA` adds, on the `a` side only, every Hamming-radius-1
+    * neighbor bucket of each band: a pair whose band signatures differ in
+    * ONE bit meets in that band — the near-dup transfer of multi-probe
+    * LSH ([[lshMultiProbeTopK]]) at (w+1)× memberships on the probe side,
+    * while `b`, the index-sized side at 100 TB, keeps its base
+    * memberships.
+    *
+    * Returns the distinct (q_id, c_id) pairs, q_id from `a` and c_id
+    * from `b`. Both sides share ONE signature expression: its plane
+    * matrix compares by reference, so a self-join (a == b, no probe) has
+    * two identical sides and AQE reuses one side's exchange. */
+  private def bandedPairs(a: DataFrame, b: DataFrame, idCol: String,
+                          embCol: String, dim: Int, nBits: Int, bands: Int,
+                          probeA: Boolean = false,
+                          key: Option[String] = None): DataFrame = {
+    require(nBits % bands == 0, "bands must divide nBits")
+    val w = nBits / bands
+    val sig = planeSig(embCol, dim, nBits)
+    val keep = col(idCol) +: key.toSeq.map(col)
+    def memberships(df: DataFrame, probe: Boolean): DataFrame = {
+      val structs = (0 until bands).flatMap { band =>
+        val bits = shiftright(col("__sig"), band * w)
+          .bitwiseAND(lit((1L << w) - 1))
+        val flips =
+          if (probe) (0 until w).map(i => bits.bitwiseXOR(lit(1L << i)))
+          else Nil
+        (bits +: flips).map(v => struct(lit(band).as("band"), v.as("bits")))
+      }
+      df.withColumn("__sig", sig)
+        .select(keep :+ explode(array(structs: _*)).as("bb"): _*)
+        .select(keep ++ Seq(col("bb.band"), col("bb.bits")): _*)
     }
+    memberships(a, probeA).as("x")
+      .join(memberships(b, probe = false).as("y"),
+        key.toSeq ++ Seq("band", "bits"))
+      .select(col(s"x.$idCol").as("q_id"), col(s"y.$idCol").as("c_id"))
+      .distinct()
+  }
 
   /** Driver-side Lloyd iterations over a bounded sample: seeded distinct
     * init, empty clusters keep their previous centroid. Deterministic given
@@ -387,31 +430,38 @@ object Similarity {
       roundedRouting = false)
   }
 
-  /** Portable IVF — same routing/ranking as [[ivfTopK]], but the coarse
-    * quantizer is the `nCells` corpus rows with the smallest portable hash
-    * `hex60("ivf_" || id)` (ties by id-as-string), used directly as
-    * centroids with no Lloyd refinement. Sampled-seed init is a standard
-    * IVF quantizer (recall still comes from `nProbe`, cells are merely
-    * routing); picking seeds by a deterministic engine-portable hash makes
-    * the ENTIRE operator — seed set, cell assignment, probe set, final
-    * ranking — replayable by the DuckDB oracle, so the approximate ANN path
-    * graduates from rows-only to hash-checked. Cell-routing distances are
-    * rounded (4 dp, cell-id tiebreak) so argmin agrees across engines
-    * despite summation-order float drift. */
-  def ivfTopKSeeded(queries: DataFrame, corpus: DataFrame, idCol: String,
-                    embCol: String, k: Int, nCells: Int,
-                    nProbe: Int): DataFrame = {
-    val centroids: Seq[Array[Float]] = corpus
+  /** The one portable seeded-row pick: the embeddings of the `n` corpus
+    * rows with the smallest portable hash `hex60(prefix || id)` (ties by
+    * id-as-string) — IVF centroids ("ivf_") and PQ codebook seeds ("pq_").
+    * Sampled-seed init is a standard quantizer init; a deterministic
+    * engine-portable pick makes the operators built on it replayable by
+    * the DuckDB oracle. sort+limit is a distributed TopK: n rows reach
+    * the driver. */
+  private def seededRows(corpus: DataFrame, idCol: String, embCol: String,
+                         prefix: String, n: Int): Seq[Array[Float]] =
+    corpus
       .select(col(idCol).cast("string").as("__sid"), col(embCol).as("__emb"))
       .withColumn("__h",
-        graft.functions.PortableHash.hex60(concat(lit("ivf_"), col("__sid"))))
-      .sort(col("__h"), col("__sid")).limit(nCells) // distributed TopK
+        graft.functions.PortableHash.hex60(concat(lit(prefix), col("__sid"))))
+      .sort(col("__h"), col("__sid")).limit(n)
       .collect().map(_.getSeq[Float](1).toArray).toSeq
-    ivfRank(queries, corpus, idCol, embCol, k, centroids, nProbe,
-      roundedRouting = true)
-  }
 
-  /** Shared IVF routing/ranking for a constant centroid matrix. */
+  /** Portable IVF — same routing/ranking as [[ivfTopK]], but the coarse
+    * quantizer is the `nCells` [[seededRows]] ("ivf_"), used directly as
+    * centroids with no Lloyd refinement (recall still comes from
+    * `nProbe`, cells are merely routing). The ENTIRE operator — seed set,
+    * cell assignment, probe set, final ranking — is replayable by the
+    * DuckDB oracle, so the approximate ANN path graduates from rows-only
+    * to hash-checked. Cell-routing distances are rounded (4 dp, cell-id
+    * tiebreak) so argmin agrees across engines despite summation-order
+    * float drift. */
+  def ivfTopKSeeded(queries: DataFrame, corpus: DataFrame, idCol: String,
+                    embCol: String, k: Int, nCells: Int,
+                    nProbe: Int): DataFrame =
+    ivfRank(queries, corpus, idCol, embCol, k,
+      seededRows(corpus, idCol, embCol, "ivf_", nCells), nProbe,
+      roundedRouting = true)
+
   /** Constant centroids → cell routing as one codegen expression per
     * row: (dist, cell) structs sorted by argmin over cells of
     * |v−c|² = v·v − 2v·c + c·c, with the per-row v·v constant dropped
@@ -432,114 +482,25 @@ object Similarity {
       struct(d.as("dist"), i.as("cell"))))
   }
 
+  /** A corpus row's cell: the nearest centroid of [[cellRouting]]. */
+  private def nearestCell(routing: Column): Column =
+    element_at(routing, 1).getField("cell")
+
+  /** A query row's probed cells, one row each: its `nProbe` nearest. */
+  private def probedCells(routing: Column, nProbe: Int): Column =
+    explode(transform(slice(routing, 1, nProbe), s => s.getField("cell")))
+
+  /** Shared IVF routing/ranking for a constant centroid matrix. */
   private def ivfRank(queries: DataFrame, corpus: DataFrame, idCol: String,
                       embCol: String, k: Int, centroids: Seq[Array[Float]],
                       nProbe: Int, roundedRouting: Boolean): DataFrame = {
-    val cellsByDist = cellRouting(embCol, centroids, roundedRouting)
-    val corpusCells = corpus
-      .withColumn("cell", element_at(cellsByDist, 1).getField("cell"))
-      .select(col(idCol).as("c_id"), col(embCol).as("c_emb"), col("cell"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
-    // queries probe their nProbe nearest cells
-    val queryCells = queries
-      .withColumn("cell", explode(
-        transform(slice(cellsByDist, 1, nProbe), s => s.getField("cell"))))
-      .select(col(idCol).as("q_id"), col(embCol).as("q_emb"), col("cell"))
-      .withColumn("__qn", sqrt(dotFast(col("q_emb"), col("q_emb"))))
-    queryCells.join(corpusCells, Seq("cell"))
-      .where(col("q_id") =!= col("c_id"))
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("q_emb"), col("c_emb")), col("__qn") * col("__cn")), 4))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("c_id").asc)))
-      .where(col("rk") <= k)
-      .select("q_id", "rk", "c_id", "cosine")
+    val routing = cellRouting(embCol, centroids, roundedRouting)
+    val c = normed(corpus.withColumn("cell", nearestCell(routing)),
+      idCol, embCol, "c", col("cell"))
+    val q = normed(queries.withColumn("cell", probedCells(routing, nProbe)),
+      idCol, embCol, "q", col("cell"))
+    rankByCosine(q.join(c, Seq("cell")).where(col("q_id") =!= col("c_id")), k)
   }
-
-  /** Deterministic Rademacher (±1) hyperplanes derived from the portable
-    * MD5-prefix hash: sign(i,d) = +1 iff hex60(md5("i_d")) is even. Unlike
-    * the Gaussian planes in [[lshBucket]], these are reproducible in ANY
-    * engine with MD5 — the DuckDB oracle rebuilds the identical matrix, and
-    * sign-bit projections of ±1 planes are bit-exact (same in-order double
-    * sum on both sides). Rademacher projections preserve angles in
-    * expectation just like Gaussian ones (Achlioptas 2001). */
-  private def rademacherPlanes(nBits: Int, dim: Int): Seq[Array[Float]] =
-    (0 until nBits).map { i =>
-      Array.tabulate(dim) { d =>
-        if (graft.functions.PortableHash.hex60(s"${i}_$d") % 2 == 0) 1f else -1f
-      }
-    }
-
-  /** Embedding-cosine near-duplicate pairs — the embedding-space member of
-    * the dedup family (exact / MinHash / SimHash / Jaccard live in
-    * `graft.dedup.NearDup`). Candidate generation is banded sign-bit
-    * blocking: an `nBits`-bit hyperplane signature split into `bands`
-    * equal bands; pairs agreeing exactly on ≥1 band meet in a (band, bits)
-    * equi-join, then the EXACT cosine filter `>= threshold` runs inside
-    * buckets only. The all-pairs cross product never materializes: shuffle
-    * keys are (band, bits), candidate volume per doc is ~ bands × corpus /
-    * 2^(nBits/bands) — the same blocking shape as MinHash-LSH, tuned by
-    * band width. With the portable plane matrix the entire operator
-    * (signatures → buckets → pairs → cosine) is replayable by the DuckDB
-    * oracle, so it is hash-checked, not rows-only. */
-  /** Banded sign-bit signature structs for an embedding: `bands` structs of
-    * (band, bits) where bits packs `nBits/bands` portable Rademacher-plane
-    * signs. The shared candidate-generation key for the cosine family. */
-  /** The full nBits sign signature as ONE expression — callers that
-    * explode many band structs should materialize this into a column
-    * first ([[bandedSignStructsFromSig]]): struct arrays that INLINE the
-    * signature expression repeat it per struct, and past a handful of
-    * copies the generator stage falls out of whole-stage codegen and
-    * evaluates interpreted (the probed 28-struct form cost 90 µs/row —
-    * 50× the codegen'd path — until semDedup switched to the
-    * sig-as-column shape, round 17). */
-  private def planeSig(embCol: String, dim: Int, nBits: Int): Column =
-    graft.plans.PlaneSignBits(col(embCol),
-      rademacherPlanes(nBits, dim).flatten.toArray, dim)
-
-  /** Band structs over a PRE-COMPUTED signature column: band b =
-    * bits [b·w, (b+1)·w) via integer shift+mask. */
-  private def bandedSignStructsFromSig(sig: Column, nBits: Int,
-                                       bands: Int): Seq[Column] = {
-    require(nBits % bands == 0, "bands must divide nBits")
-    val w = nBits / bands
-    (0 until bands).map { b =>
-      val bits = shiftright(sig, b * w).bitwiseAND(lit((1L << w) - 1))
-      struct(lit(b).as("band"), bits.as("bits"))
-    }
-  }
-
-  /** [[bandedSignStructsFromSig]] plus Hamming-radius-1 probing over a
-    * pre-computed signature column. */
-  private def bandedSignStructsProbedFromSig(sig: Column, nBits: Int,
-                                             bands: Int): Seq[Column] = {
-    require(nBits % bands == 0, "bands must divide nBits")
-    val w = nBits / bands
-    (0 until bands).flatMap { b =>
-      val bits = shiftright(sig, b * w).bitwiseAND(lit((1L << w) - 1))
-      struct(lit(b).as("band"), bits.as("bits")) +:
-        (0 until w).map { i =>
-          struct(lit(b).as("band"),
-            bits.bitwiseXOR(lit(1L << i)).as("bits"))
-        }
-    }
-  }
-
-  private def bandedSignStructs(embCol: String, dim: Int, nBits: Int,
-                                bands: Int): Seq[Column] =
-    bandedSignStructsFromSig(planeSig(embCol, dim, nBits), nBits, bands)
-
-  /** [[bandedSignStructs]] plus Hamming-radius-1 probing: per band, the
-    * base bucket AND all `w` single-bit flips — the near-dup transfer of
-    * multi-probe LSH ([[lshMultiProbeTopK]]): a pair whose band signatures
-    * differ in ONE bit now meets in that band. Meant for ONE side of a
-    * self-join only (the other side keeps base memberships), so candidate
-    * volume grows (w+1)× on the probe side while the blocked side — the
-    * thing that is index-sized at 100 TB — stays put. */
-  private def bandedSignStructsProbed(embCol: String, dim: Int, nBits: Int,
-                                      bands: Int): Seq[Column] =
-    bandedSignStructsProbedFromSig(planeSig(embCol, dim, nBits), nBits, bands)
 
   /** Single-row frame of per-dimension corpus (min, max) — the SQ8
     * codebook. Dim-bounded metadata (64 doubles per array here), computed
@@ -582,7 +543,9 @@ object Similarity {
     * contract (rounded cosine, id tiebreak). The corpus rides as codes —
     * the raw embedding never reaches the join — so the scoring pass moves
     * 4× fewer bytes; recall loss is the quantization error (spec-tested
-    * ≥ 0.8 recall@5 on the fixture). */
+    * ≥ 0.8 recall@5 on the fixture). Scores double arrays with [[dot]]
+    * (`FloatDotProduct` takes float arrays only), ranks through the shared
+    * ranker. */
   def sq8TopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               embCol: String, k: Int): DataFrame = {
     val stats = sq8Stats(corpus, embCol)
@@ -595,14 +558,9 @@ object Similarity {
     val q = queries.select(col(idCol).as("q_id"),
         col(embCol).cast("array<double>").as("__q"))
       .withColumn("__qn", sqrt(dot(col("__q"), col("__q"))))
-    q.crossJoin(deq).where(col("q_id") =!= col("c_id"))
-      .withColumn("cosine", round(safeCosine(
-        dot(col("__q"), col("__xhat")), col("__qn") * col("__cn")), 4))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("c_id").asc)))
-      .where(col("rk") <= k)
-      .select("q_id", "rk", "c_id", "cosine")
+    rankByCosine(q.crossJoin(deq).where(col("q_id") =!= col("c_id")), k,
+      score = round(safeCosine(dot(col("__q"), col("__xhat")),
+        col("__qn") * col("__cn")), 4))
   }
 
   // ---- Product quantization (Jégou et al., *Product Quantization for
@@ -616,27 +574,23 @@ object Similarity {
   // encode and ADC are pure per-row expressions — zero shuffle beyond
   // the final per-query top-k window.
 
-  /** Portable PQ codebooks: the `nCodes` corpus rows with the smallest
-    * portable hash `hex60('pq_' || id)` (ties by id-as-string), each
-    * split into `m` subvectors — subspace `mi`'s codebook is the seeds'
-    * mi-th subvectors, no Lloyd refinement (the [[ivfTopKSeeded]] trick:
-    * sampled-seed codebooks are a standard quantizer init, and a
-    * deterministic engine-portable pick makes encode + ADC + ranking
-    * replayable by the DuckDB oracle). */
-  private def pqSeededCodebooks(corpus: DataFrame, idCol: String,
-                                embCol: String, m: Int,
-                                nCodes: Int): Seq[Seq[Array[Float]]] = {
-    val seeds: Array[Array[Float]] = corpus
-      .select(col(idCol).cast("string").as("__sid"), col(embCol).as("__emb"))
-      .withColumn("__h",
-        graft.functions.PortableHash.hex60(concat(lit("pq_"), col("__sid"))))
-      .sort(col("__h"), col("__sid")).limit(nCodes) // distributed TopK
-      .collect().map(_.getSeq[Float](1).toArray)
-    val dim = seeds.head.length
+  /** Per subspace mi, the mi-th `dim/m`-float slice of every vector. */
+  private def subvectors(vs: Seq[Array[Float]],
+                         m: Int): Seq[Seq[Array[Float]]] = {
+    val dim = vs.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val sub = dim / m
-    (0 until m).map(mi => seeds.toSeq.map(_.slice(mi * sub, (mi + 1) * sub)))
+    (0 until m).map(mi => vs.map(_.slice(mi * sub, (mi + 1) * sub)))
   }
+
+  /** Portable PQ codebooks: the `nCodes` [[seededRows]] ("pq_"), each
+    * split into `m` subvectors — subspace `mi`'s codebook is the seeds'
+    * mi-th subvectors, no Lloyd refinement (the [[ivfTopKSeeded]] trick),
+    * so encode + ADC + ranking replay in the DuckDB oracle. */
+  private def pqSeededCodebooks(corpus: DataFrame, idCol: String,
+                                embCol: String, m: Int,
+                                nCodes: Int): Seq[Seq[Array[Float]]] =
+    subvectors(seededRows(corpus, idCol, embCol, "pq_", nCodes), m)
 
   /** PQ-encode: append `codes` (array<int>, length m) — per subspace the
     * argmin codeword by ROUNDED (4 dp) `|c|² − 2·v_m·c` distance
@@ -666,22 +620,23 @@ object Similarity {
     withCodes.withColumn("__cn2sum", cn2Sum)
   }
 
-  /** ADC top-k over a PQ-encoded corpus: per pair the approximate
-    * squared euclidean distance Σ_m |q_m − c_{m,codes[m]}|², each term
-    * expanded as `|q_m|² + |c|² − 2·q_m·c` with the codeword vector and
-    * its norm read from plan-time literal arrays by the corpus row's
-    * code — the raw corpus embedding never reaches the join. Terms sum
-    * in fixed subspace order and round once (4 dp, id tiebreak) so the
-    * ranking replays across engines. */
-  private def pqAdcTopK(queries: DataFrame, encoded: DataFrame,
-                        idCol: String, embCol: String, k: Int,
-                        codebooks: Seq[Seq[Array[Float]]]): DataFrame = {
-    val m = codebooks.length
+  /** The one ADC rank, shared by [[pqAdcTopK]] and [[ivfPqTopKSeeded]]:
+    * per (q_id, c_id) pair that `pair` forms from `queries` (`q_id`,
+    * `__q`, …), the approximate squared euclidean distance
+    * Σ_m |q_m − c_{m,codes[m]}|², each term expanded as
+    * `|q_m|² + |c|² − 2·q_m·c` with the codeword vector and its norm read
+    * from plan-time literal arrays by the corpus row's code — the raw
+    * corpus embedding never reaches the join. Terms sum in fixed subspace
+    * order and round once (4 dp, id tiebreak) so the ranking replays
+    * across engines. */
+  private def adcTopK(queries: DataFrame, k: Int,
+                      codebooks: Seq[Seq[Array[Float]]])(
+                      pair: DataFrame => DataFrame): DataFrame = {
     val sub = codebooks.head.head.length
     // per-pair algebra: adc = |q|² + Σ|c|² − 2·Σ q_m·c_m, with |q|²
     // (fold of per-subspace norms) computed ONCE per query row and Σ|c|²
     // attached at encode time — only the m small dots remain per pair
-    val qn2Tot = (0 until m).map { mi =>
+    val qn2Tot = codebooks.indices.map { mi =>
       val qm = slice(col("__q"), mi * sub + 1, sub)
       dotFast(qm, qm)
     }.reduce(_ + _)
@@ -689,11 +644,8 @@ object Similarity {
     // (codeword lookup by the corpus row's code) — the declarative
     // slice + literal-array + HOF form evaluated m interpreted folds
     // per pair
-    val dotSum: Column = graft.plans.PqAdcDotSum(col("__q"), col("codes"),
-      codebooks)
-    queries.select(col(idCol).as("q_id"), col(embCol).as("__q"))
-      .withColumn("__qn2", qn2Tot)
-      .crossJoin(encoded)
+    val dotSum = graft.plans.PqAdcDotSum(col("__q"), col("codes"), codebooks)
+    pair(queries.withColumn("__qn2", qn2Tot))
       .where(col("q_id") =!= col("c_id"))
       .withColumn("adc_dist",
         round(col("__qn2") + col("__cn2sum") - lit(2.0) * dotSum, 4))
@@ -704,17 +656,23 @@ object Similarity {
       .select("q_id", "rk", "c_id", "adc_dist")
   }
 
+  /** ADC top-k of every query over the whole PQ-encoded corpus. */
+  private def pqAdcTopK(queries: DataFrame, corpus: DataFrame,
+                        idCol: String, embCol: String, k: Int,
+                        codebooks: Seq[Seq[Array[Float]]]): DataFrame = {
+    val encoded = pqEncode(corpus, embCol, codebooks)
+      .select(col(idCol).as("c_id"), col("codes"), col("__cn2sum"))
+    adcTopK(queries.select(col(idCol).as("q_id"), col(embCol).as("__q")), k,
+      codebooks)(_.crossJoin(encoded))
+  }
+
   /** Portable PQ ADC top-k (seeded codebooks, fully oracle-replayable —
     * the q159 production twin at fixture scale). */
   def pqTopKSeeded(queries: DataFrame, corpus: DataFrame, idCol: String,
                    embCol: String, k: Int, m: Int = 8,
-                   nCodes: Int = 32): DataFrame = {
-    val cbs = pqSeededCodebooks(corpus, idCol, embCol, m, nCodes)
-    pqAdcTopK(queries,
-      pqEncode(corpus, embCol, cbs)
-        .select(col(idCol).as("c_id"), col("codes"), col("__cn2sum")),
-      idCol, embCol, k, cbs)
-  }
+                   nCodes: Int = 32): DataFrame =
+    pqAdcTopK(queries, corpus, idCol, embCol, k,
+      pqSeededCodebooks(corpus, idCol, embCol, m, nCodes))
 
   /** IVF-PQ (the composition FAISS ships as `IVFx,PQy` — Jégou et al.
     * TPAMI 2011 §V): seeded-IVF cell routing prunes the corpus to each
@@ -728,37 +686,17 @@ object Similarity {
   def ivfPqTopKSeeded(queries: DataFrame, corpus: DataFrame, idCol: String,
                       embCol: String, k: Int, nCells: Int, nProbe: Int,
                       m: Int = 16, nCodes: Int = 64): DataFrame = {
-    val centroids: Seq[Array[Float]] = corpus
-      .select(col(idCol).cast("string").as("__sid"), col(embCol).as("__emb"))
-      .withColumn("__h",
-        graft.functions.PortableHash.hex60(concat(lit("ivf_"), col("__sid"))))
-      .sort(col("__h"), col("__sid")).limit(nCells)
-      .collect().map(_.getSeq[Float](1).toArray).toSeq
+    val routing = cellRouting(embCol,
+      seededRows(corpus, idCol, embCol, "ivf_", nCells), rounded = true)
     val cbs = pqSeededCodebooks(corpus, idCol, embCol, m, nCodes)
-    val sub = cbs.head.head.length
-    val routing = cellRouting(embCol, centroids, rounded = true)
     val corpusCells = pqEncode(corpus, embCol, cbs)
-      .withColumn("cell", element_at(routing, 1).getField("cell"))
+      .withColumn("cell", nearestCell(routing))
       .select(col(idCol).as("c_id"), col("codes"), col("__cn2sum"),
         col("cell"))
-    val qn2Tot = (0 until m).map { mi =>
-      val qm = slice(col("__q"), mi * sub + 1, sub)
-      dotFast(qm, qm)
-    }.reduce(_ + _)
     val queryCells = queries
-      .withColumn("cell", explode(
-        transform(slice(routing, 1, nProbe), s => s.getField("cell"))))
+      .withColumn("cell", probedCells(routing, nProbe))
       .select(col(idCol).as("q_id"), col(embCol).as("__q"), col("cell"))
-      .withColumn("__qn2", qn2Tot)
-    queryCells.join(corpusCells, Seq("cell"))
-      .where(col("q_id") =!= col("c_id"))
-      .withColumn("adc_dist", round(col("__qn2") + col("__cn2sum") -
-        lit(2.0) * graft.plans.PqAdcDotSum(col("__q"), col("codes"), cbs), 4))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("adc_dist").asc, col("c_id").asc)))
-      .where(col("rk") <= k)
-      .select("q_id", "rk", "c_id", "adc_dist")
+    adcTopK(queryCells, k, cbs)(_.join(corpusCells, Seq("cell")))
   }
 
   /** Trained PQ ADC top-k: per-subspace Lloyd codebooks on a bounded
@@ -772,75 +710,65 @@ object Similarity {
     val sample: Array[Array[Float]] = corpus
       .select(col(idCol), col(embCol)).sort(col(idCol)).limit(sampleN)
       .collect().map(_.getSeq[Float](1).toArray)
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val sub = dim / m
-    val cbs = (0 until m).map(mi => localLloyd(
-      sample.map(_.slice(mi * sub, (mi + 1) * sub)), nCodes, kmeansIters,
-      seed + mi))
-    pqAdcTopK(queries,
-      pqEncode(corpus, embCol, cbs)
-        .select(col(idCol).as("c_id"), col("codes"), col("__cn2sum")),
-      idCol, embCol, k, cbs)
+    val cbs = subvectors(sample.toSeq, m).zipWithIndex.map { case (vs, mi) =>
+      localLloyd(vs.toArray, nCodes, kmeansIters, seed + mi)
+    }
+    pqAdcTopK(queries, corpus, idCol, embCol, k, cbs)
   }
 
+  /** Embedding-cosine near-duplicate pairs — the embedding-space member of
+    * the dedup family (exact / MinHash / SimHash / Jaccard live in
+    * `graft.dedup.NearDup`). Candidate generation is banded sign-bit
+    * blocking ([[bandedPairs]]): an `nBits`-bit plane signature split into
+    * `bands` equal bands; pairs agreeing exactly on ≥1 band meet in a
+    * (band, bits) equi-join, then the EXACT cosine filter `>= threshold`
+    * runs inside buckets only. The all-pairs cross product never
+    * materializes: shuffle keys are (band, bits), candidate volume per doc
+    * is ~ bands × corpus / 2^(nBits/bands) — the same blocking shape as
+    * MinHash-LSH, tuned by band width. With the portable plane matrix the
+    * entire operator (signatures → buckets → pairs → cosine) is
+    * replayable by the DuckDB oracle, so it is hash-checked, not
+    * rows-only. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, embCol: String,
                          dim: Int, threshold: Double, nBits: Int = 24,
-                         bands: Int = 4): DataFrame = {
-    val bandStructs = bandedSignStructs(embCol, dim, nBits, bands)
-    val buckets = df.select(col(idCol),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bits"))
-    val cand = buckets.as("x").join(buckets.as("y"), Seq("band", "bits"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
-    val emb = df.select(col(idCol), col(embCol))
-      .withColumn("__n", sqrt(dotFast(col(embCol), col(embCol))))
-    val ea = emb.select(col(idCol).as("id_a"), col(embCol).as("__ea"),
-      col("__n").as("__na"))
-    val eb = emb.select(col(idCol).as("id_b"), col(embCol).as("__eb"),
-      col("__n").as("__nb"))
-    cand.join(ea, "id_a").join(eb, "id_b")
-      .withColumn("__cos", safeCosine(
-        dotFast(col("__ea"), col("__eb")), col("__na") * col("__nb")))
+                         bands: Int = 4): DataFrame =
+    bandedPairs(df, df, idCol, embCol, dim, nBits, bands)
+      .where(col("q_id") < col("c_id"))
+      .join(normed(df, idCol, embCol, "q"), "q_id")
+      .join(normed(df, idCol, embCol, "c"), "c_id")
+      .withColumn("__cos", pairCosine)
       .where(col("__cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("__cos"), 4).as("cosine"))
-  }
+      .select(col("q_id").as("id_a"), col("c_id").as("id_b"),
+        round(col("__cos"), 4).as("cosine"))
 
   /** Euclidean near-pair generation via p-stable LSH — the scale
     * replacement for the reference's O(n²) `DistanceMatrix` memmap
     * (`/root/reference/src/pudl/analysis/record_linkage/link_cross_year.py:34-128`)
     * under its own metric (the cross-year features are euclidean, not
-    * cosine). Classic Datar–Indyk scheme: bucket_t(v) = ⌊(v·g_t + b_t)/w⌋
-    * for a Gaussian direction g_t and uniform shift b_t; vectors within
+    * cosine). Datar–Indyk scheme: bucket_t(v) = ⌊(v·g_t)/w + b_t⌋ for a
+    * random direction g_t and shift b_t ∈ [0, 1); vectors within
     * distance eps land in the same bucket of some table with probability
-    * rising as w/eps grows. Candidates meet on the (table, bucket)
+    * rising as w/eps grows. Directions are Rademacher and shifts
+    * MD5-derived (namespaced "eg_"/"eshift_" keys; the sign-bit planes
+    * use bare "i_d"), so the DuckDB oracle rebuilds grids, buckets and
+    * candidates exactly. Candidates meet on the (table, bucket)
     * equi-join — same blocking shape as every other family here — and the
     * EXACT distance filter runs inside buckets only.
     *
     * Neighboring-bucket misses are covered by multiple tables (shifted
     * grids), the standard multi-table trade: recall is tuned by `tables`
     * and `w` (≈ 2×eps is a good default), never by widening to a cross
-    * join. Seeded and deterministic. */
+    * join. */
   def euclideanNearPairs(df: DataFrame, idCol: String, embCol: String,
                          dim: Int, eps: Double, w: Double,
-                         tables: Int = 8, seed: Long = 42L,
-                         portable: Boolean = false): DataFrame = {
-    val rnd = new scala.util.Random(seed)
-    // portable mode: Rademacher directions + MD5-derived shifts, so the
-    // DuckDB oracle rebuilds grids, buckets and candidates exactly
-    // (namespaced "eg_"/"eshift_" keys; q95's planes use bare "i_d")
-    val grids: Seq[(Array[Float], Double)] =
-      if (portable) Seq.tabulate(tables) { t =>
-        (Array.tabulate(dim) { d =>
-          if (graft.functions.PortableHash.hex60(s"eg_${t}_$d") % 2 == 0) 1f
-          else -1f
-        }, (graft.functions.PortableHash.hex60(s"eshift_$t") % 1000000L)
-          / 1000000.0)
-      }
-      else Seq.fill(tables)(
-        (Array.fill(dim)(rnd.nextGaussian().toFloat), rnd.nextDouble()))
+                         tables: Int = 8): DataFrame = {
+    val grids: Seq[(Array[Float], Double)] = Seq.tabulate(tables) { t =>
+      (Array.tabulate(dim) { d =>
+        if (graft.functions.PortableHash.hex60(s"eg_${t}_$d") % 2 == 0) 1f
+        else -1f
+      }, (graft.functions.PortableHash.hex60(s"eshift_$t") % 1000000L)
+        / 1000000.0)
+    }
     // all grid projections in one PlaneProjections node, shifts as one
     // literal array; zip_with + posexplode keeps the plan at a handful of
     // nodes instead of tables × dim literals
@@ -881,26 +809,27 @@ object Similarity {
     * ~ tables × corpus / 2^nBits per query, never the full cross product. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               embCol: String, k: Int, nBits: Int, dim: Int,
-              tables: Int = 4, portable: Boolean = false): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), col(embCol).as("q_emb"),
-      explode(bucketMemberships(col(embCol), nBits, tables, dim, portable)).as("bb"))
-      .select(col("q_id"), col("q_emb"), col("bb.tbl"), col("bb.bucket"))
-      .withColumn("__qn", sqrt(dotFast(col("q_emb"), col("q_emb"))))
-    val c = corpus.select(col(idCol).as("c_id"), col(embCol).as("c_emb"),
-      explode(bucketMemberships(col(embCol), nBits, tables, dim, portable)).as("bb"))
-      .select(col("c_id"), col("c_emb"), col("bb.tbl"), col("bb.bucket"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
-    val cand = q.join(c, Seq("tbl", "bucket")).where(col("q_id") =!= col("c_id"))
+              tables: Int = 4): DataFrame =
+    lshRank(queries, corpus, idCol, embCol, k, nBits, dim, tables,
+      bucketMemberships(col(embCol), nBits, tables, dim))
+
+  /** The body of [[lshTopK]] and [[lshMultiProbeTopK]]: query rows
+    * explode `queryMembers`, corpus rows their base (tbl, bucket)
+    * memberships; candidates meet on the (tbl, bucket) equi-join, keep one
+    * row per (q_id, c_id), and go through the exact ranker. */
+  private def lshRank(queries: DataFrame, corpus: DataFrame, idCol: String,
+                      embCol: String, k: Int, nBits: Int, dim: Int,
+                      tables: Int, queryMembers: Column): DataFrame = {
+    def side(df: DataFrame, s: String, members: Column): DataFrame =
+      normed(df.withColumn("bb", explode(members)), idCol, embCol, s,
+        col("bb.tbl"), col("bb.bucket"))
+    val cand = side(queries, "q", queryMembers)
+      .join(side(corpus, "c", bucketMemberships(col(embCol), nBits, tables,
+        dim)), Seq("tbl", "bucket"))
+      .where(col("q_id") =!= col("c_id"))
       .select("q_id", "q_emb", "__qn", "c_id", "c_emb", "__cn")
       .dropDuplicates("q_id", "c_id")
-    cand
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("q_emb"), col("c_emb")), col("__qn") * col("__cn")), 4))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("c_id").asc)))
-      .where(col("rk") <= k)
-      .select("q_id", "rk", "c_id", "cosine")
+    rankByCosine(cand, k)
   }
 
   /** Per-(table) probe memberships for multi-probe LSH: the base bucket
@@ -911,32 +840,27 @@ object Similarity {
     * sequence truncated at Hamming radius 1).
     *
     * Margins come from [[PlaneProjections]] — the same in-order double
-    * accumulation as [[PlaneSignBits]] — so in the portable (Rademacher ±1)
-    * family every margin, and therefore the probe ORDER, is bit-identical
+    * accumulation as [[PlaneSignBits]] — so with the Rademacher ±1 planes
+    * every margin, and therefore the probe ORDER, is bit-identical
     * to the DuckDB oracle's `list_sum` replay. Ties break toward the lower
     * plane index (struct sort on (margin, bit)). `probes = 1` degrades to
     * exactly the base memberships of [[lshTopK]]. */
   private def multiProbeMemberships(emb: Column, nBits: Int, tables: Int,
-                                    dim: Int, probes: Int,
-                                    portable: Boolean): Column = {
+                                    dim: Int, probes: Int): Column = {
     require(probes >= 1 && probes <= nBits + 1,
       s"probes must be in [1, nBits + 1 = ${nBits + 1}], got $probes")
     val pow2 = array((0 until nBits).map(i => lit(1L << i)): _*)
-    val allPortable =
-      if (portable) rademacherPlanes(tables * nBits, dim) else Seq.empty
-    flatten(array((0 until tables).map { t =>
-      val flat: Array[Float] =
-        if (portable) (0 until nBits).flatMap(i => allPortable(t * nBits + i)).toArray
-        else hyperplanes(nBits, dim, seed = 42L + t).flatMap(_.map(_.toFloat)).toArray
-      val base = graft.plans.PlaneSignBits(emb, flat, dim)
-      val proj = graft.plans.PlaneProjections(emb, flat, dim)
-      // (|margin|, bit) ascending: the cheapest hyperplanes to cross first
-      val margins = array_sort(transform(proj, (p, i) =>
-        struct(abs(p).as("m"), i.as("bit"))))
-      val flips = transform(slice(margins, 1, probes - 1), s =>
-        base.bitwiseXOR(element_at(pow2, s.getField("bit") + 1)))
-      transform(concat(array(base), flips), b =>
-        struct(lit(t).as("tbl"), b.as("bucket")))
+    flatten(array(tablePlanes(nBits, tables, dim).zipWithIndex.map {
+      case (flat, t) =>
+        val base = graft.plans.PlaneSignBits(emb, flat, dim)
+        val proj = graft.plans.PlaneProjections(emb, flat, dim)
+        // (|margin|, bit) ascending: the cheapest planes to cross first
+        val margins = array_sort(transform(proj, (p, i) =>
+          struct(abs(p).as("m"), i.as("bit"))))
+        val flips = transform(slice(margins, 1, probes - 1), s =>
+          base.bitwiseXOR(element_at(pow2, s.getField("bit") + 1)))
+        transform(concat(array(base), flips), b =>
+          struct(lit(t).as("tbl"), b.as("bucket")))
     }: _*))
   }
 
@@ -955,21 +879,10 @@ object Similarity {
     * ever touched. Same scoring/tiebreak contract as [[cosineTopK]]. */
   def rerankExact(shortlist: DataFrame, queries: DataFrame,
                   corpus: DataFrame, idCol: String, embCol: String,
-                  k: Int): DataFrame = {
-    val cand = shortlist.select(col("q_id"), col("c_id")).distinct()
-    val q = queries.select(col(idCol).as("q_id"), col(embCol).as("q_emb"))
-      .withColumn("__qn", sqrt(dotFast(col("q_emb"), col("q_emb"))))
-    val c = corpus.select(col(idCol).as("c_id"), col(embCol).as("c_emb"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
-    cand.join(q, "q_id").join(c, "c_id")
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("q_emb"), col("c_emb")), col("__qn") * col("__cn")), 4))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("c_id").asc)))
-      .where(col("rk") <= k)
-      .select("q_id", "rk", "c_id", "cosine")
-  }
+                  k: Int): DataFrame =
+    rankByCosine(shortlist.select(col("q_id"), col("c_id")).distinct()
+      .join(normed(queries, idCol, embCol, "q"), "q_id")
+      .join(normed(corpus, idCol, embCol, "c"), "c_id"), k)
 
   /** Multi-probe LSH approximate top-k (Lv et al., VLDB 2007): candidates
     * share EITHER the query's base bucket or one of its `probes − 1` best
@@ -987,29 +900,9 @@ object Similarity {
     * agree), which is what moves recall@10 without touching index cost. */
   def lshMultiProbeTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                         embCol: String, k: Int, nBits: Int, dim: Int,
-                        tables: Int = 4, probes: Int = 3,
-                        portable: Boolean = false): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), col(embCol).as("q_emb"),
-      explode(multiProbeMemberships(col(embCol), nBits, tables, dim, probes,
-        portable)).as("bb"))
-      .select(col("q_id"), col("q_emb"), col("bb.tbl"), col("bb.bucket"))
-      .withColumn("__qn", sqrt(dotFast(col("q_emb"), col("q_emb"))))
-    val c = corpus.select(col(idCol).as("c_id"), col(embCol).as("c_emb"),
-      explode(bucketMemberships(col(embCol), nBits, tables, dim, portable)).as("bb"))
-      .select(col("c_id"), col("c_emb"), col("bb.tbl"), col("bb.bucket"))
-      .withColumn("__cn", sqrt(dotFast(col("c_emb"), col("c_emb"))))
-    val cand = q.join(c, Seq("tbl", "bucket")).where(col("q_id") =!= col("c_id"))
-      .select("q_id", "q_emb", "__qn", "c_id", "c_emb", "__cn")
-      .dropDuplicates("q_id", "c_id")
-    cand
-      .withColumn("cosine", round(safeCosine(
-        dotFast(col("q_emb"), col("c_emb")), col("__qn") * col("__cn")), 4))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("c_id").asc)))
-      .where(col("rk") <= k)
-      .select("q_id", "rk", "c_id", "cosine")
-  }
+                        tables: Int = 4, probes: Int = 3): DataFrame =
+    lshRank(queries, corpus, idCol, embCol, k, nBits, dim, tables,
+      multiProbeMemberships(col(embCol), nBits, tables, dim, probes))
 
   /** SemDeDup — semantic deduplication via clustered embeddings (Abbas et
     * al., arXiv:2303.09540): k-means the corpus embeddings, then search for
@@ -1049,7 +942,7 @@ object Similarity {
     *
     * `bandProbe1 = true` additionally probes, on ONE side of the
     * within-cluster self-join, every single-bit-flip neighbor bucket of
-    * each band ([[bandedSignStructsProbed]]) — pairs within Hamming
+    * each band ([[bandedPairs]]' `probeA`) — pairs within Hamming
     * distance 1 of agreeing on a band become candidates, the multi-probe
     * recall lever at (w+1)× probe-side candidate volume and UNCHANGED
     * blocked-side/index cost. The banded dup set grows monotonically
@@ -1147,58 +1040,27 @@ object Similarity {
       .select(col(idCol), col("__cl").as("cluster"))
       .localCheckpoint()
     val fin = q.join(assigned, Seq(idCol))
-      .withColumn("__n2", sqrt(dotFast(col(embCol), col(embCol))))
-    val dups = (bandedDim match {
+    val cand = bandedDim match {
       case Some(dim) =>
         // production path: candidates agree on cluster AND ≥1 signature
         // band — the same (band, bits) blocking as cosineNearDupPairs,
-        // narrowed by the cluster key, so no unbanded self-join exists.
-        // The sign signature materializes as ONE column below the
-        // explode — band structs that inline the signature expression
-        // repeat its 24 hyperplane dots per struct and (at the probed
-        // 28-struct arity) drop the generator out of codegen entirely
-        // (52 s → ~1 s on the 10× fixture).
-        val fin2 = fin.withColumn("__sig", planeSig(embCol, dim, nBits))
-        val buckets = fin2.select(col(idCol), col("cluster"),
-            explode(array(
-              bandedSignStructsFromSig(col("__sig"), nBits, bands): _*))
-              .as("bb"))
-          .select(col(idCol), col("cluster"), col("bb.band"), col("bb.bits"))
-        // probe side: base memberships, or base + radius-1 flips — the
-        // y (blocked) side always stays at base memberships
-        val xBuckets = if (!bandProbe1) buckets
-          else fin2.select(col(idCol), col("cluster"),
-              explode(array(
-                bandedSignStructsProbedFromSig(col("__sig"), nBits,
-                  bands): _*))
-                .as("bb"))
-            .select(col(idCol), col("cluster"), col("bb.band"),
-              col("bb.bits"))
-        val cand = xBuckets.as("x")
-          .join(buckets.as("y"), Seq("cluster", "band", "bits"))
-          .where(col(s"y.$idCol") < col(s"x.$idCol"))
-          .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-          .distinct()
-        val ea = fin.select(col(idCol).as("id_a"), col(embCol).as("__ea"),
-          col("__n2").as("__na"))
-        val eb = fin.select(col(idCol).as("id_b"), col(embCol).as("__eb"),
-          col("__n2").as("__nb"))
-        cand.join(ea, "id_a").join(eb, "id_b")
-          .withColumn("__cos", round(safeCosine(
-            dotFast(col("__ea"), col("__eb")), col("__na") * col("__nb")), 4))
+        // narrowed by the cluster key, so no unbanded self-join exists;
+        // the q side may add radius-1 flips, the c side keeps base
+        // memberships
+        bandedPairs(fin, fin, idCol, embCol, dim, nBits, bands,
+            probeA = bandProbe1, key = Some("cluster"))
+          .where(col("c_id") < col("q_id"))
+          .join(normed(fin, idCol, embCol, "q"), "q_id")
+          .join(normed(fin, idCol, embCol, "c"), "c_id")
       case None =>
         // exact all-pairs twin: bounded inputs only (oracle verification)
-        val left = fin.select(col(idCol).as("id_a"), col(embCol).as("__ea"),
-          col("__n2").as("__na"), col("cluster"))
-        val right = fin.select(col(idCol).as("id_b"), col(embCol).as("__eb"),
-          col("__n2").as("__nb"), col("cluster"))
-        left.join(right, Seq("cluster"))
-          .where(col("id_b") < col("id_a"))
-          .withColumn("__cos", round(safeCosine(
-            dotFast(col("__ea"), col("__eb")), col("__na") * col("__nb")), 4))
-    })
-      .where(col("__cos") >= tau)
-      .select(col("id_a")).distinct()
+        normed(fin, idCol, embCol, "q", col("cluster"))
+          .join(normed(fin, idCol, embCol, "c", col("cluster")), Seq("cluster"))
+          .where(col("c_id") < col("q_id"))
+    }
+    val dups = cand
+      .where(round(pairCosine, 4) >= tau)
+      .select(col("q_id").as("id_a")).distinct()
       .withColumn("__dup", lit(true))
     fin.select(col(idCol), col("cluster").cast("long").as("cluster"))
       .join(dups, col(idCol) === col("id_a"), "left")

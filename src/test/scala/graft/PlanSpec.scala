@@ -65,6 +65,37 @@ class PlanSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p).size >= 2)
   }
 
+  test("q42 cosine top-k: broadcast cross join, ONE shuffle, rank cap map-side") {
+    // exact brute force over a bounded query set: the corpus broadcasts
+    // into a nested-loop cross join, so the pair product never shuffles;
+    // the one shuffle is the per-query top-k window's, capped map-side by
+    // WindowGroupLimit; scores come from the native dot product
+    val p = plan("q42_cosine_topk")
+    assert(p.contains("BroadcastNestedLoopJoin"), p)
+    assert(!p.contains("CartesianProduct"), p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
+    assert("BroadcastExchange".r.findAllIn(p).size == 1, p)
+    assert("WindowGroupLimit".r.findAllIn(p).size == 2, p)
+    assert(p.contains("float_dot_product"), p)
+  }
+
+  test("q43 LSH ANN: candidates meet on ONE (tbl, bucket) equi-join") {
+    // each side explodes its 8 tables' memberships once (one
+    // plane_sign_bits node per table); the only joins are the (tbl,
+    // bucket) candidate join; two shuffles: the (q_id, c_id) dedup and
+    // the per-query top-k window
+    val p = plan("q43_lsh_ann")
+    assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    val joins = p.linesIterator.filter(l =>
+      l.contains("HashJoin") || l.contains("SortMergeJoin")).toSeq
+    assert(joins.size == 1 && joins.head.contains("tbl") &&
+      joins.head.contains("bucket"), joins.mkString("\n"))
+    assert("Generate explode".r.findAllIn(p).size == 2, p)
+    assert("plane_sign_bits".r.findAllIn(p).size == 16, p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).size == 2, p)
+  }
+
   test("q99 blocked orphan assignment never forms a cross product") {
     val p = plan("q99_orphan_assign_lsh")
     // candidates must meet on the (band, bits) equi-join, neither as a

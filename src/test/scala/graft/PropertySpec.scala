@@ -541,8 +541,7 @@ class PropertySpec extends SparkSpec {
       val exact = ids(Similarity.cosineTopK(q, df, "vec_id", "embedding", 3))
       def hits(p: Int): Int = {
         val a = ids(Similarity.lshMultiProbeTopK(q, df, "vec_id",
-          "embedding", 3, nBits = 4, dim = dim, tables = 2, probes = p,
-          portable = true))
+          "embedding", 3, nBits = 4, dim = dim, tables = 2, probes = p))
         exact.intersect(a).size
       }
       val r = Seq(1, 3, 5).map(hits)
@@ -604,6 +603,107 @@ class PropertySpec extends SparkSpec {
           .as[(Long, Double, Long, Long)].collect().toSet
         assert(batch.getOrElse(qid, Set.empty) == single,
           s"$qid: batch != single on ${texts.size} docs")
+      }
+    }
+  }
+
+  test("float natives equal their declarative twins bit for bit; mismatched lengths throw") {
+    // FloatDotProduct vs Similarity.dot, PlaneProjections vs one dot per
+    // plane, PlaneSignBits vs SQL `dot > 0` per plane — in codegen and in
+    // interpreted eval, on random floats mixed with -0.0, NaN, ±Inf,
+    // subnormals and extremes, empty and null arrays
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.plans.{FloatDotProduct, PlaneProjections, PlaneSignBits}
+    import graft.similarity.Similarity
+    val special = Gen.oneOf(-0.0f, 0.0f, Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity, Float.MinPositiveValue, -1.0e-40f, Float.MaxValue)
+    def vec(n: Int, specials: Int = 1): Gen[Array[Float]] = Gen.listOfN(n,
+      Gen.frequency(11 -> Gen.choose(-8.0f, 8.0f), specials -> special))
+      .map(_.toArray)
+    def orNull(g: Gen[Array[Float]]): Gen[Array[Float]] =
+      Gen.frequency(8 -> g, 1 -> Gen.const(null))
+    val (dim, nPlanes) = (6, 5)
+    val pairGen = Gen.listOfN(30, Gen.choose(0, 7).flatMap(n =>
+      Gen.zip(orNull(vec(n)), orNull(vec(n)))))
+    // planes mostly finite, so the sign rule is not all-NaN
+    val planeGen = Gen.zip(Gen.frequency(3 -> vec(nPlanes * dim, 0),
+      1 -> vec(nPlanes * dim)), Gen.listOfN(30, orNull(vec(dim))))
+    val floats = ArrayType(FloatType, containsNull = false)
+    def frame(rows: Seq[Seq[Any]], names: String*): DataFrame =
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.zipWithIndex.map {
+          case (r, i) => Row.fromSeq(i.toLong +: r) }, 2),
+        StructType(StructField("id", LongType) +:
+          names.map(StructField(_, floats))))
+    def byId(df: DataFrame): Map[Long, Any] =
+      df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    def same(x: Any, y: Any): Boolean = (x, y) match {
+      case (null, null) => true
+      case (a: Double, b: Double) =>
+        java.lang.Double.doubleToLongBits(a) ==
+          java.lang.Double.doubleToLongBits(b)
+      case (a: Long, b: Long) => a == b
+      case (a: scala.collection.Seq[_], b: scala.collection.Seq[_]) =>
+        a.length == b.length && a.zip(b).forall { case (u, v) => same(u, v) }
+      case _ => false
+    }
+    def assertTwins(df: DataFrame, native: Column, twin: Column,
+                    clue: String): Unit = {
+      val got = byId(df.select(col("id"), native))
+      val exp = byId(df.select(col("id"), twin))
+      assert(got.keySet == exp.keySet, clue)
+      got.foreach { case (id, v) =>
+        assert(same(v, exp(id)), s"$clue row $id: native $v, twin ${exp(id)}")
+      }
+    }
+    def assertThrows(df: DataFrame, c: Column, msg: String): Unit = {
+      val e = intercept[Exception](df.select(c).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+        .mkString(" | ")
+      assert(chain.contains(msg), chain)
+    }
+    val modes = Seq(
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "eval" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes) {
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        forAll(pairGen, 4) { pairs =>
+          val df = frame(pairs.map { case (a, b) => Seq(a, b) }, "a", "b")
+          assertTwins(df, FloatDotProduct(col("a"), col("b")),
+            Similarity.dot(col("a"), col("b")), s"$mode dot")
+        }
+        forAll(planeGen, 4) { case (flat, embs) =>
+          val df = frame(embs.map(Seq(_)), "e")
+          val dots = (0 until nPlanes).map(p => Similarity.dot(col("e"),
+            typedLit(flat.slice(p * dim, (p + 1) * dim).toSeq)))
+          assertTwins(df, PlaneProjections(col("e"), flat, dim),
+            when(col("e").isNotNull, array(dots: _*)), s"$mode projections")
+          assertTwins(df, PlaneSignBits(col("e"), flat, dim),
+            dots.zipWithIndex.map { case (d, p) =>
+              when(d > 0, lit(1L << p)).when(d <= 0, lit(0L))
+            }.reduce(_ bitwiseOR _), s"$mode sign bits")
+        }
+        val ab = frame(Seq(Seq(Array(1f, 2f, 3f), Array(1f, 2f))), "a", "b")
+        assertThrows(ab, FloatDotProduct(col("a"), col("b")),
+          "float_dot_product: array lengths differ (3 vs 2)")
+        assert(ab.select(Similarity.dot(col("a"), col("b"))).head().isNullAt(0))
+        val planes = Array.fill(nPlanes * dim)(1f)
+        for (n <- Seq(0, dim - 1, dim + 1)) {
+          val e = frame(Seq(Seq(Array.fill(n)(1f))), "e")
+          val msg = s"embedding length $n differs from plane length $dim"
+          assertThrows(e, PlaneProjections(col("e"), planes, dim),
+            s"plane_projections: $msg")
+          assertThrows(e, PlaneSignBits(col("e"), planes, dim),
+            s"plane_sign_bits: $msg")
+        }
+      } finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
     }
   }

@@ -46,17 +46,17 @@ class RecallGateSpec extends SparkSpec {
   // fixture itself. Measured at sf0.001, k=10, queries vec_id < 20.
   test("LSH recall@10 floor at the q43 graded config") {
     val (_, _, _, rec) = recall(Similarity.lshTopK(qs, emb, "vec_id",
-      "embedding", 10, nBits = 6, dim = 64, tables = 8, portable = true), 10)
+      "embedding", 10, nBits = 6, dim = 64, tables = 8), 10)
     info(s"lsh recall@10 = $rec")
     assert(rec >= 0.20, s"lsh recall@10 = $rec")
   }
 
   test("multi-probe LSH recall@10 floor and dominance at the q199 config") {
     val (_, _, _, base) = recall(Similarity.lshTopK(qs, emb, "vec_id",
-      "embedding", 10, nBits = 6, dim = 64, tables = 8, portable = true), 10)
+      "embedding", 10, nBits = 6, dim = 64, tables = 8), 10)
     val (_, _, _, mp) = recall(Similarity.lshMultiProbeTopK(qs, emb,
       "vec_id", "embedding", 10, nBits = 6, dim = 64, tables = 8,
-      probes = 4, portable = true), 10)
+      probes = 4), 10)
     info(s"mplsh recall@10 = $mp (single-probe = $base)")
     assert(mp >= base,
       "multi-probe candidates are a superset — recall cannot drop")
@@ -165,7 +165,7 @@ class RecallGateSpec extends SparkSpec {
       .where($"__d2" <= eps * eps)
       .select($"id_a".as("q_id"), lit(1).as("rk"), $"id_b".as("c_id"))
     val approx = Similarity.euclideanNearPairs(emb, "vec_id", "embedding",
-        dim = 64, eps = eps, w = 2.0, tables = 8, portable = true)
+        dim = 64, eps = eps, w = 2.0, tables = 8)
       .where($"id_a" < 20)
       .select($"id_a".as("q_id"), lit(1).as("rk"), $"id_b".as("c_id"))
     val r = Similarity.recallAtK(exactPairs, approx, 1).head()

@@ -40,18 +40,15 @@ class SimilaritySpec extends SparkSpec {
   test("lshMultiProbeTopK: probes=1 IS lshTopK; recall monotone in probes") {
     val emb = Tables.load(spark, sf, "embeddings")
     val q = emb.where($"vec_id" < 20)
-    // probes = 1 degrades to exactly the single-probe operator, in BOTH
-    // plane families (same planes, same buckets, same ranking)
-    for (portable <- Seq(true, false)) {
-      val base = Similarity.lshTopK(q, emb, "vec_id", "embedding", 5,
-          nBits = 6, dim = 64, tables = 8, portable = portable)
-        .collect().map(_.toSeq).toSet
-      val mp1 = Similarity.lshMultiProbeTopK(q, emb, "vec_id", "embedding",
-          5, nBits = 6, dim = 64, tables = 8, probes = 1,
-          portable = portable)
-        .collect().map(_.toSeq).toSet
-      assert(mp1 == base, s"probes=1 must equal lshTopK (portable=$portable)")
-    }
+    // probes = 1 degrades to exactly the single-probe operator (same
+    // planes, same buckets, same ranking)
+    val base = Similarity.lshTopK(q, emb, "vec_id", "embedding", 5,
+        nBits = 6, dim = 64, tables = 8)
+      .collect().map(_.toSeq).toSet
+    val mp1 = Similarity.lshMultiProbeTopK(q, emb, "vec_id", "embedding",
+        5, nBits = 6, dim = 64, tables = 8, probes = 1)
+      .collect().map(_.toSeq).toSet
+    assert(mp1 == base, "probes=1 must equal lshTopK")
     // candidate sets grow with probes, and with identical (cosine, c_id)
     // ranking keys a true top-k member can only be displaced by another
     // true top-k member - so recall@k is monotone in probes by construction
@@ -59,7 +56,7 @@ class SimilaritySpec extends SparkSpec {
       .select("q_id", "c_id").as[(Long, Long)].collect().toSet
     def rec(probes: Int): Double = {
       val a = Similarity.lshMultiProbeTopK(q, emb, "vec_id", "embedding", 5,
-          nBits = 6, dim = 64, tables = 8, probes = probes, portable = true)
+          nBits = 6, dim = 64, tables = 8, probes = probes)
         .select("q_id", "c_id").as[(Long, Long)].collect().toSet
       exact.intersect(a).size.toDouble / exact.size
     }
@@ -70,7 +67,7 @@ class SimilaritySpec extends SparkSpec {
     assert(r7 > r1, "full radius-1 probing bought no recall on the fixture")
     intercept[IllegalArgumentException] {
       Similarity.lshMultiProbeTopK(q, emb, "vec_id", "embedding", 5,
-        nBits = 6, dim = 64, tables = 8, probes = 8, portable = true)
+        nBits = 6, dim = 64, tables = 8, probes = 8)
     }
   }
 

@@ -329,11 +329,13 @@ class SkewGuardSpec extends SparkSpec {
       Seq((Seq(col("l_arr")), Seq(col("r_arr"))))))
     assert(e3.getMessage.contains("blocking rule 0") &&
       e3.getMessage.contains("array<string>"), e3.getMessage)
-    // unionBlocks keeps its typed per-rule fallback for the same rules
-    val ub = Linkage.unionBlocks(l, r, "l_id", "r_id", rules)
-      .select("l_id", "r_id", "match_key").as[(Long, Long, Int)]
-      .collect().toSet
-    assert(ub === Set((1L, 10L, 1)))
+    // unionBlocks has no typed per-rule fallback: the same rules fail
+    // with the gate's message
+    val e2 = intercept[IllegalArgumentException](
+      Linkage.unionBlocks(l, r, "l_id", "r_id", rules))
+    assert(e2.getMessage.contains("blocking rule 1") &&
+      e2.getMessage.contains("(int)") &&
+      e2.getMessage.contains("(double)"), e2.getMessage)
   }
 
   test("unionBlocks rejects shared left/right column names") {
