@@ -2858,8 +2858,8 @@ object SparkEntry {
     val (l, r, addLevels, comps, uPairs) = fsFixture(s, dir)
     val mPairs = addLevels(l.join(r, col("l_id") === col("r_id"))
       .where(col("l_id") % 4 < 3))
-    val wMap = FS.collectWeights(FS.trainWeights(mPairs, uPairs, comps))
-    val priorNano = FS.priorNanoDf(l).head.getLong(0)
+    val (wMap, priorNano) =
+      FS.collectWeightsAndPrior(FS.trainWeights(mPairs, uPairs, comps), l)
     // blocking: splink block_on style — both rules are pure equi-joins;
     // the duplicate (l,r) a pair can earn from matching both rules is
     // resolved by the best-match window itself (identical rows rank 1,2 —
@@ -2914,11 +2914,10 @@ object SparkEntry {
     val mPairs = addLevels(l.join(r, col("l_id") === col("r_id"))
       .where(col("l_id") % 4 < 3))
     val trained = FS.trainWeights(mPairs, uPairs, comps).localCheckpoint()
-    val wMap = FS.collectWeights(trained)
+    val (wMap, priorNano) = FS.collectWeightsAndPrior(trained, l)
     val segU = trained
       .where(col("comparison") === "seg" && col("level") === 2)
       .select("c_u", "n_u").head
-    val priorNano = FS.priorNanoDf(l).head.getLong(0)
     val tf = FS.tfAdjustments(
       l.select(col("l_seg").as("value"))
         .unionByName(r.select(col("r_seg").as("value"))),

@@ -205,12 +205,7 @@ object FellegiSunter {
     var lamMicro = 0L
 
     for (_ <- 1 to iters) {
-      val sCol = comps.map { c =>
-        (1 to c.nLevels).map(l => (c.level === lit(l), lit(w(c.name -> l))))
-          .foldRight(lit(0L): Column) { case ((cond, wl), e) =>
-            when(cond, wl).otherwise(e)
-          }
-      }.reduce(_ + _) + lit(lr)
+      val sCol = matchWeight(comps, w, lr)
       val withP = p.withColumn("p_micro",
         round(lit(1.0) / (lit(1.0) +
             exp(lit(-1.0) * (sCol / lit(1e9)) * log(lit(2.0)))) * lit(1e6))
@@ -262,7 +257,7 @@ object FellegiSunter {
   /** [[collectWeights]] and the [[priorNanoDf]] prior in ONE driver
     * action (round 18 barrier diet): the 1-row prior frame rides the
     * weights collect as a sentinel row, so a caller that needs both — the
-    * linkage capstone — pays one barrier instead of two. Values are
+    * linkage capstone, q168, q170 — pays one barrier instead of two. Values are
     * bit-identical to the separate collects (same in-engine expressions,
     * just unioned). */
   def collectWeightsAndPrior(weights: DataFrame,
@@ -282,7 +277,7 @@ object FellegiSunter {
     * `probability_two_random_records_match=1/len(eia_df)`), in nanos,
     * computed in-engine as a 1-row frame so the JVM never does the float
     * math (collect the exact long). */
-  def priorNanoDf(left: DataFrame): DataFrame =
+  private def priorNanoDf(left: DataFrame): DataFrame =
     left.agg(count(lit(1)).as("n"))
       .select(round(-log(col("n") - lit(1.0)) / log(lit(2.0)) * lit(1e9))
         .cast("long").as("prior_nano"))

@@ -16,9 +16,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * declarative `Similarity.dot` would return null.
   *
   * This is the preferred extension tier from SURVEY §7 ("custom Expression
-  * beats Scala UDF"): `doGenCode` emits a primitive loop over the columnar
-  * `ArrayData` — no per-row boxing, no Scala closure dispatch, and the
-  * expression participates in whole-stage codegen alongside its consumers.
+  * beats Scala UDF"): the kernel is one Scala method, `FloatDotProduct.dot`,
+  * which `nullSafeEval` calls and `doGenCode` emits as a static call — a
+  * primitive loop over the columnar `ArrayData`, no per-row boxing, and the
+  * expression stays in whole-stage codegen alongside its consumers.
   * Null arrays → null (nullIntolerant); elements are assumed non-null
   * (embedding vectors).
   */
@@ -39,9 +40,20 @@ case class FloatDotProduct(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "float_dot_product"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatDotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.FloatDotProduct.dot($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): FloatDotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+object FloatDotProduct {
+  /** The kernel both `nullSafeEval` and the generated code call. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     if (y.numElements() != n) throw new IllegalArgumentException(
       s"float_dot_product: array lengths differ ($n vs ${y.numElements()})")
@@ -54,31 +66,6 @@ case class FloatDotProduct(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  throw new IllegalArgumentException("float_dot_product: array " +
-         |    "lengths differ (" + $n + " vs " + $b.numElements() + ")");
-         |}
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): FloatDotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-object FloatDotProduct {
   /** Column-API entry point. */
   def apply(a: Column, b: Column): Column =
     Internals.column(FloatDotProduct(

@@ -2,9 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, Cast, Conv, Expression, ExpressionInfo, Literal, Md5, Multiply, Substring}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, Cast, Expression, ExpressionInfo, Literal, Multiply}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
 
 /** Catalyst integration point: registers graft's native expressions in the
   * session FunctionRegistry so they are first-class SQL functions —
@@ -19,97 +18,66 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, LongTyp
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("float_dot_product"),
-      info("float_dot_product",
-        "float_dot_product(a, b) - dot product of two float arrays in double precision"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "float_dot_product expects 2 arguments")
-        FloatDotProduct(args(0), args(1))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("long_sq_dist"),
-      info("long_sq_dist",
-        "long_sq_dist(a, b) - exact integer squared euclidean distance of two bigint arrays"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "long_sq_dist expects 2 arguments")
-        LongSqDist(args(0), args(1))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      info("word_shingles",
-        "word_shingles(text, n) - distinct lowercase word n-gram shingles"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "word_shingles expects 2 arguments")
-        val n = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"word_shingles: n must be an integer literal, got $other")
-        }
-        WordShingles(args(0), n)
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler",
-        "jaro_winkler(a, b) - Jaro-Winkler similarity (boost threshold 0.7, prefix cap 4)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "jaro_winkler expects 2 arguments")
-        JaroWinkler(args(0), args(1))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("metaphone"),
-      info("metaphone",
-        "metaphone(s) - Metaphone phonetic code (Philips 1990), per word, " +
-          "joined with spaces; the reference's splink blocking key function"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "metaphone expects 1 argument")
-        Metaphone(args(0))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("convex_clip"),
-      info("convex_clip",
-        "convex_clip(subject, clip) - Sutherland-Hodgman intersection ring of a simple polygon with a CONVEX clip ring"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "convex_clip expects 2 arguments")
-        ConvexClip(args(0), args(1))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("polygon_intersect_area"),
-      info("polygon_intersect_area",
-        "polygon_intersect_area(a, b) - exact intersection area of two simple (possibly concave) polygon rings"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "polygon_intersect_area expects 2 arguments")
-        PolygonIntersectArea(args(0), args(1))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
+    /** Registers `name`; argument lists `build` does not match fail with
+      * the function's name, the argument count and its usage. */
+    def register(name: String, usage: String)(
+        build: PartialFunction[Seq[Expression], Expression]): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        (args: Seq[Expression]) => build.applyOrElse(args, (_: Seq[Expression]) =>
+          throw new IllegalArgumentException(
+            s"$name: wrong number of arguments (${args.length}); usage: $usage"))))
+
+    register("float_dot_product",
+      "float_dot_product(a, b) - dot product of two float arrays in double precision") {
+      case Seq(a, b) => FloatDotProduct(a, b)
+    }
+    register("long_sq_dist",
+      "long_sq_dist(a, b) - exact integer squared euclidean distance of two bigint arrays") {
+      case Seq(a, b) => LongSqDist(a, b)
+    }
+    register("word_shingles",
+      "word_shingles(text, n) - distinct lowercase word n-gram shingles") {
+      case Seq(text, Literal(n: Int, IntegerType)) => WordShingles(text, n)
+      case Seq(_, other) => throw new IllegalArgumentException(
+        s"word_shingles: n must be an integer literal, got $other")
+    }
+    register("jaro_winkler",
+      "jaro_winkler(a, b) - Jaro-Winkler similarity (boost threshold 0.7, prefix cap 4)") {
+      case Seq(a, b) => JaroWinkler(a, b)
+    }
+    register("metaphone",
+      "metaphone(s) - Metaphone phonetic code (Philips 1990), per word, " +
+        "joined with spaces; the reference's splink blocking key function") {
+      case Seq(s) => Metaphone(s)
+    }
+    register("convex_clip",
+      "convex_clip(subject, clip) - Sutherland-Hodgman intersection ring of a simple polygon with a CONVEX clip ring") {
+      case Seq(subject, clip) => ConvexClip(subject, clip)
+    }
+    register("polygon_intersect_area",
+      "polygon_intersect_area(a, b) - exact intersection area of two simple (possibly concave) polygon rings") {
+      case Seq(a, b) => PolygonIntersectArea(a, b)
+    }
     // the portable 60-bit MD5-prefix hash (graft.functions.PortableHash) as
     // a SQL function — the same native Md5Prefix60 expression as the
     // Column form, bit-identical to DuckDB's
     // ('0x'||substr(md5(x),1,15))::BIGINT
-    ext.injectFunction((
-      FunctionIdentifier("hex60"),
-      info("hex60",
-        "hex60(x) - portable 60-bit hash: first 15 hex digits of md5(x) as a BIGINT"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "hex60 expects 1 argument")
-        Md5Prefix60(Cast(args(0), StringType))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
+    register("hex60",
+      "hex60(x) - portable 60-bit hash: first 15 hex digits of md5(x) as a BIGINT") {
+      case Seq(x) => Md5Prefix60(Cast(x, StringType))
+    }
     // Morton/Z-order key (operators.Layout.zorderValue) as SQL — the same
     // static mask-and-multiply sum as the Column form (plain codegen'd
     // long arithmetic), for clustered writes from the SQL front door
-    ext.injectFunction((
-      FunctionIdentifier("zorder_key"),
-      info("zorder_key",
-        "zorder_key(d1, d2, ..., bits) - Morton/Z-order interleave of the" +
-          " low `bits` bits of each dimension as a BIGINT (bits*dims <= 62)"),
-      (args: Seq[Expression]) => {
-        require(args.length >= 3, "zorder_key expects >= 2 dims + bits")
+    register("zorder_key",
+      "zorder_key(d1, d2, ..., bits) - Morton/Z-order interleave of the" +
+        " low `bits` bits of each dimension as a BIGINT (bits*dims <= 62)") {
+      case args if args.length >= 3 =>
         val bits = args.last match {
           case Literal(v: Int, IntegerType) => v
-          case Literal(v: Long, LongType)   => v.toInt
+          case Literal(v: Long, LongType) => v.toInt
           case _ => throw new IllegalArgumentException(
             "zorder_key: bits must be an integer literal")
         }
@@ -124,30 +92,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         } yield Multiply(BitwiseAnd(masked, Literal(1L << i)),
           Literal(1L << (i * (n - 1) + d))): Expression
         terms.reduce((a, b) => Add(a, b))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("wkb_from_polygons"),
-      info("wkb_from_polygons",
-        "wkb_from_polygons(polys[, force_multi]) - little-endian WKB" +
-          " Polygon/MultiPolygon bytes from polygons x open rings x vertices"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1 || args.length == 2,
-          "wkb_from_polygons expects 1 or 2 arguments")
-        val force = if (args.length < 2) false else args(1) match {
-          case Literal(b: Boolean, BooleanType) => b
-          case other => throw new IllegalArgumentException(
-            s"wkb_from_polygons: force_multi must be a boolean literal, got $other")
-        }
-        WkbFromPolygons(args(0), force)
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("wkb_to_polygons"),
-      info("wkb_to_polygons",
-        "wkb_to_polygons(bin) - decode WKB Polygon/MultiPolygon bytes to" +
-          " struct<wkb_type, polys: polygons x open rings x vertices>"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "wkb_to_polygons expects 1 argument")
-        WkbToPolygons(args(0))
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
+    }
+    register("wkb_from_polygons",
+      "wkb_from_polygons(polys[, force_multi]) - little-endian WKB" +
+        " Polygon/MultiPolygon bytes from polygons x open rings x vertices") {
+      case Seq(polys) => WkbFromPolygons(polys, false)
+      case Seq(polys, Literal(force: Boolean, BooleanType)) => WkbFromPolygons(polys, force)
+      case Seq(_, other) => throw new IllegalArgumentException(
+        s"wkb_from_polygons: force_multi must be a boolean literal, got $other")
+    }
+    register("wkb_to_polygons",
+      "wkb_to_polygons(bin) - decode WKB Polygon/MultiPolygon bytes to" +
+        " struct<wkb_type, polys: polygons x open rings x vertices>") {
+      case Seq(bin) => WkbToPolygons(bin)
+    }
   }
 }

@@ -9,8 +9,10 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Exact integer squared euclidean distance between two `array<bigint>`
-  * vectors: Σ (aᵢ − bᵢ)² over the common prefix, as a single codegen'd
-  * primitive loop.
+  * vectors: Σ (aᵢ − bᵢ)², one Scala kernel (`LongSqDist.sqDist`) that
+  * `nullSafeEval` calls and `doGenCode` emits as a static call. Arrays of
+  * different lengths throw IllegalArgumentException naming both lengths,
+  * where the declarative form would return null.
   *
   * Exists for the same reason as [[FloatDotProduct]]: the declarative
   * `aggregate(zip_with(a, b, …))` form allocates an intermediate array
@@ -41,10 +43,23 @@ case class LongSqDist(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "long_sq_dist"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  override def nullSafeEval(a: Any, b: Any): Any =
+    LongSqDist.sqDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.LongSqDist.sqDist($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): LongSqDist =
+    copy(left = newLeft, right = newRight)
+}
+
+object LongSqDist {
+  /** The kernel both `nullSafeEval` and the generated code call. */
+  def sqDist(x: ArrayData, y: ArrayData): Long = {
+    val n = x.numElements()
+    if (y.numElements() != n) throw new IllegalArgumentException(
+      s"long_sq_dist: array lengths differ ($n vs ${y.numElements()})")
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -55,29 +70,6 @@ case class LongSqDist(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): LongSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-object LongSqDist {
   /** Column-API entry point. */
   def apply(a: Column, b: Column): Column =
     Internals.column(LongSqDist(

@@ -15,14 +15,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Companion to [[PlaneSignBits]] for the projection-valued LSH families
   * (p-stable euclidean grids, IVF centroid distances): one constant
-  * float[] reference instead of nPlanes × dim literal nodes. An embedding
-  * whose length is not `dim` throws IllegalArgumentException naming both
-  * lengths. */
-case class PlaneProjections(child: Expression, planes: Array[Float], dim: Int)
+  * [[FloatMatrix]] instead of nPlanes × dim literal nodes, equal by value
+  * across separately built expressions. The kernel is one Scala method,
+  * `PlaneProjections.project`, which `nullSafeEval` calls and `doGenCode`
+  * emits as a static call. An embedding whose length is not the plane
+  * length throws IllegalArgumentException naming both lengths. */
+case class PlaneProjections(child: Expression, planes: FloatMatrix)
     extends UnaryExpression {
-  require(dim > 0 && planes.length % dim == 0,
-    s"planes length ${planes.length} must be a multiple of dim $dim")
-  private val nPlanes = planes.length / dim
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
@@ -33,54 +32,12 @@ case class PlaneProjections(child: Expression, planes: Array[Float], dim: Int)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "plane_projections"
 
-  override def nullSafeEval(e: Any): Any = {
-    val v = e.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (n != dim) throw new IllegalArgumentException(
-      s"plane_projections: embedding length $n differs from plane length $dim")
-    val out = new Array[Double](nPlanes)
-    var p = 0
-    while (p < nPlanes) {
-      val off = p * dim
-      var acc = 0.0
-      var j = 0
-      while (j < n) {
-        acc += v.getFloat(j).toDouble * planes(off + j).toDouble
-        j += 1
-      }
-      out(p) = acc
-      p += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(e: Any): Any =
+    PlaneProjections.project(e.asInstanceOf[ArrayData], planes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "float[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val p = ctx.freshName("p")
-      val off = ctx.freshName("off")
-      val acc = ctx.freshName("acc")
-      val j = ctx.freshName("j")
-      s"""
-         |int $n = $v.numElements();
-         |if ($n != $dim) {
-         |  throw new IllegalArgumentException("plane_projections: embedding length " +
-         |    $n + " differs from plane length $dim");
-         |}
-         |double[] $out = new double[$nPlanes];
-         |for (int $p = 0; $p < $nPlanes; $p++) {
-         |  int $off = $p * $dim;
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $acc += ((double) $v.getFloat($j)) * ((double) $planesRef[$off + $j]);
-         |  }
-         |  $out[$p] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    val planesRef = ctx.addReferenceObj("planes", planes)
+    defineCodeGen(ctx, ev, v => s"graft.plans.PlaneProjections.project($v, $planesRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PlaneProjections =
@@ -88,7 +45,21 @@ case class PlaneProjections(child: Expression, planes: Array[Float], dim: Int)
 }
 
 object PlaneProjections {
+  /** The kernel both `nullSafeEval` and the generated code call. */
+  def project(v: ArrayData, planes: FloatMatrix): ArrayData = {
+    val n = v.numElements()
+    if (n != planes.cols) throw new IllegalArgumentException(
+      s"plane_projections: embedding length $n differs from plane length ${planes.cols}")
+    val out = new Array[Double](planes.rows)
+    var p = 0
+    while (p < out.length) {
+      out(p) = planes.dotRow(p, v, 0, n)
+      p += 1
+    }
+    new GenericArrayData(out)
+  }
+
   /** Column-API entry point: `planes` is a row-major nPlanes × dim matrix. */
   def apply(emb: Column, planes: Array[Float], dim: Int): Column =
-    Internals.column(PlaneProjections(Internals.expression(emb), planes, dim))
+    Internals.column(PlaneProjections(Internals.expression(emb), FloatMatrix(planes, dim)))
 }

@@ -14,23 +14,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * fold, identical association order to [[FloatDotProduct]], so signs are
   * bit-identical to the per-plane form). `> 0` has SQL semantics: a NaN
   * projection counts as positive (NaN is greatest in Spark and DuckDB).
-  * An embedding whose length is not `dim` throws IllegalArgumentException
-  * naming both lengths.
+  * An embedding whose length is not the plane length throws
+  * IllegalArgumentException naming both lengths. The kernel is one Scala
+  * method, `PlaneSignBits.signBits`, which `nullSafeEval` calls and
+  * `doGenCode` emits as a static call.
   *
   * Exists for plan size as much as row speed: the declarative form (one
   * `FloatDotProduct` per plane against a 64-float literal array) puts
   * nBits × dim literal nodes in the tree — ~1.5k nodes for a 24×64 plane
   * set, duplicated on both sides of the candidate self-join — and analysis
   * + codegen of that tree dominates small-batch latency. Here the matrix
-  * rides along as one flattened constant reference.
+  * rides along as one constant [[FloatMatrix]], equal by value across
+  * separately built expressions.
   *
   * Max 64 planes per node (one long); callers chunk per hash table. */
-case class PlaneSignBits(child: Expression, planes: Array[Float], dim: Int)
+case class PlaneSignBits(child: Expression, planes: FloatMatrix)
     extends UnaryExpression {
-  require(dim > 0 && planes.length % dim == 0,
-    s"planes length ${planes.length} must be a multiple of dim $dim")
-  private val nBits = planes.length / dim
-  require(nBits >= 1 && nBits <= 64, s"need 1..64 planes, got $nBits")
+  require(planes.rows >= 1 && planes.rows <= 64, s"need 1..64 planes, got ${planes.rows}")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
@@ -41,54 +41,12 @@ case class PlaneSignBits(child: Expression, planes: Array[Float], dim: Int)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "plane_sign_bits"
 
-  override def nullSafeEval(e: Any): Any = {
-    val v = e.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (n != dim) throw new IllegalArgumentException(
-      s"plane_sign_bits: embedding length $n differs from plane length $dim")
-    var bits = 0L
-    var p = 0
-    while (p < nBits) {
-      val off = p * dim
-      var acc = 0.0
-      var j = 0
-      while (j < n) {
-        acc += v.getFloat(j).toDouble * planes(off + j).toDouble
-        j += 1
-      }
-      if (!(acc <= 0)) bits |= (1L << p)
-      p += 1
-    }
-    bits
-  }
+  override def nullSafeEval(e: Any): Any =
+    PlaneSignBits.signBits(e.asInstanceOf[ArrayData], planes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "float[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val bits = ctx.freshName("bits")
-      val p = ctx.freshName("p")
-      val off = ctx.freshName("off")
-      val acc = ctx.freshName("acc")
-      val j = ctx.freshName("j")
-      s"""
-         |int $n = $v.numElements();
-         |if ($n != $dim) {
-         |  throw new IllegalArgumentException("plane_sign_bits: embedding length " +
-         |    $n + " differs from plane length $dim");
-         |}
-         |long $bits = 0L;
-         |for (int $p = 0; $p < $nBits; $p++) {
-         |  int $off = $p * $dim;
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $acc += ((double) $v.getFloat($j)) * ((double) $planesRef[$off + $j]);
-         |  }
-         |  if (!($acc <= 0)) $bits |= (1L << $p);
-         |}
-         |${ev.value} = $bits;
-       """.stripMargin
-    })
+    val planesRef = ctx.addReferenceObj("planes", planes)
+    defineCodeGen(ctx, ev, v => s"graft.plans.PlaneSignBits.signBits($v, $planesRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PlaneSignBits =
@@ -96,7 +54,21 @@ case class PlaneSignBits(child: Expression, planes: Array[Float], dim: Int)
 }
 
 object PlaneSignBits {
+  /** The kernel both `nullSafeEval` and the generated code call. */
+  def signBits(v: ArrayData, planes: FloatMatrix): Long = {
+    val n = v.numElements()
+    if (n != planes.cols) throw new IllegalArgumentException(
+      s"plane_sign_bits: embedding length $n differs from plane length ${planes.cols}")
+    var bits = 0L
+    var p = 0
+    while (p < planes.rows) {
+      if (!(planes.dotRow(p, v, 0, n) <= 0)) bits |= (1L << p)
+      p += 1
+    }
+    bits
+  }
+
   /** Column-API entry point: `planes` is a row-major nBits × dim matrix. */
   def apply(emb: Column, planes: Array[Float], dim: Int): Column =
-    Internals.column(PlaneSignBits(Internals.expression(emb), planes, dim))
+    Internals.column(PlaneSignBits(Internals.expression(emb), FloatMatrix(planes, dim)))
 }

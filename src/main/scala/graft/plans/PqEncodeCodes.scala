@@ -3,10 +3,10 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftaccess.Internals
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Product-quantization encoder as ONE native pass: for each of `m`
   * subspaces, the argmin codeword by ROUNDED (4 dp, HALF_UP — Spark's
@@ -17,21 +17,28 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * interpreted higher-order-function chains boxing 64 structs per
   * subspace per row (the measured difference on the sf1 encode pass).
   *
-  * `codebooks` is flattened mi-major: codeword (mi, j) occupies
-  * [mi·nCodes·sub + j·sub, +sub). Codeword norms are precomputed once at
-  * construction with the same sequential fold the literal form used. */
-case class PqEncodeCodes(child: Expression, codebooks: Array[Float],
-                         m: Int, sub: Int, nCodes: Int)
+  * `codebooks` is [[FloatMatrix.stacked]]: codeword (mi, j) is row
+  * mi·nCodes + j, so m = rows / nCodes. Codeword norms are precomputed
+  * once per expression with the same sequential fold the literal form
+  * used. The kernel is one Scala method, `PqEncodeCodes.encode`, which
+  * `nullSafeEval` calls and `doGenCode` emits as a static call.
+  *
+  * Lengths are not checked, by design: subspace mi reads the embedding's
+  * elements [mi·sub, mi·sub + sub) that are present — the bound of
+  * `slice()`, which the query-side norms of `Similarity.adcTopK` use — so
+  * a short embedding contributes only its present elements and a long
+  * one's tail is ignored. [[PqAdcDotSum]] reads the same bound. */
+case class PqEncodeCodes(child: Expression, codebooks: FloatMatrix, nCodes: Int)
     extends UnaryExpression {
-  require(codebooks.length == m * nCodes * sub,
-    s"codebook length ${codebooks.length} != m*nCodes*sub = ${m * nCodes * sub}")
+  require(codebooks.rows % nCodes == 0,
+    s"codebook rows ${codebooks.rows} must be a multiple of nCodes $nCodes")
 
-  private lazy val cn2: Array[Double] = Array.tabulate(m * nCodes) { i =>
-    val off = i * sub
+  private lazy val cn2: Array[Double] = Array.tabulate(codebooks.rows) { i =>
+    val off = i * codebooks.cols
     var acc = 0.0
     var d = 0
-    while (d < sub) {
-      acc += codebooks(off + d).toDouble * codebooks(off + d).toDouble
+    while (d < codebooks.cols) {
+      acc += codebooks.values(off + d).toDouble * codebooks.values(off + d).toDouble
       d += 1
     }
     acc
@@ -46,83 +53,33 @@ case class PqEncodeCodes(child: Expression, codebooks: Array[Float],
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "pq_encode"
 
-  override def nullSafeEval(e: Any): Any = {
-    val v = e.asInstanceOf[ArrayData]
-    val out = new Array[Int](m)
-    val dists = new Array[Double](nCodes)
-    var mi = 0
-    while (mi < m) {
-      val vOff = mi * sub
-      var j = 0
-      while (j < nCodes) {
-        val off = (mi * nCodes + j) * sub
-        var dot = 0.0
-        var d = 0
-        // bound like the declarative slice(): a short vector contributes
-        // only its present elements
-        val dMax = math.min(sub, v.numElements() - vOff)
-        while (d < dMax) {
-          dot += v.getFloat(vOff + d).toDouble * codebooks(off + d).toDouble
-          d += 1
-        }
-        dists(j) = cn2(mi * nCodes + j) - 2.0 * dot
-        j += 1
-      }
-      out(mi) = PqEncodeCodes.argminRounded(dists)
-      mi += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(e: Any): Any =
+    PqEncodeCodes.encode(e.asInstanceOf[ArrayData], codebooks, cn2, nCodes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("codebooks", codebooks, "float[]")
+    val cbRef = ctx.addReferenceObj("codebooks", codebooks)
     val cn2Ref = ctx.addReferenceObj("cn2", cn2, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val dists = ctx.freshName("dists")
-      val mi = ctx.freshName("mi")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val off = ctx.freshName("off")
-      val vOff = ctx.freshName("vOff")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int[] $out = new int[$m];
-         |double[] $dists = new double[$nCodes];
-         |for (int $mi = 0; $mi < $m; $mi++) {
-         |  int $vOff = $mi * $sub;
-         |  for (int $j = 0; $j < $nCodes; $j++) {
-         |    int $off = ($mi * $nCodes + $j) * $sub;
-         |    double $dot = 0.0;
-         |    int ${d}Max = java.lang.Math.min($sub, $v.numElements() - $vOff);
-         |    for (int $d = 0; $d < ${d}Max; $d++) {
-         |      $dot += ((double) $v.getFloat($vOff + $d))
-         |        * ((double) $cbRef[$off + $d]);
-         |    }
-         |    $dists[$j] = $cn2Ref[$mi * $nCodes + $j] - 2.0 * $dot;
-         |  }
-         |  $out[$mi] = graft.plans.PqEncodeCodes.argminRounded($dists);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, v =>
+      s"graft.plans.PqEncodeCodes.encode($v, $cbRef, $cn2Ref, $nCodes)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeCodes =
     copy(child = newChild)
 }
 
-/** The ADC pair kernel: Σ_m q_m · c_{m,codes[m]} over the same flattened
+/** The ADC pair kernel: Σ_m q_m · c_{m,codes[m]} over the same stacked
   * codebook, each subspace dot a sequential double fold (bit-identical to
   * the declarative slice+zip_with form it replaced) and the m terms
   * summed in subspace order. One native pass per pair instead of m
-  * interpreted HOF folds — the pair side of the q159 hot path. */
+  * interpreted HOF folds — the pair side of the q159 hot path. The
+  * kernel is one Scala method, `PqAdcDotSum.dotSum`, which `nullSafeEval`
+  * calls and `doGenCode` emits as a static call. Like [[PqEncodeCodes]]
+  * it reads each subspace within the `slice()` bound, unchecked. */
 case class PqAdcDotSum(left: Expression, right: Expression,
-                       codebooks: Array[Float], m: Int, sub: Int,
-                       nCodes: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(codebooks.length == m * nCodes * sub,
-    s"codebook length ${codebooks.length} != m*nCodes*sub = ${m * nCodes * sub}")
+                       codebooks: FloatMatrix, nCodes: Int)
+    extends BinaryExpression {
+  require(codebooks.rows % nCodes == 0,
+    s"codebook rows ${codebooks.rows} must be a multiple of nCodes $nCodes")
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -132,56 +89,18 @@ case class PqAdcDotSum(left: Expression, right: Expression,
         s"pq_adc_dot_sum expects (array<float>, array<int>), got " +
           s"(${l.simpleString}, ${r.simpleString})")
     }
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+  override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "pq_adc_dot_sum"
 
-  override def nullSafeEval(q: Any, c: Any): Any = {
-    val v = q.asInstanceOf[ArrayData]
-    val codes = c.asInstanceOf[ArrayData]
-    var total = 0.0
-    var mi = 0
-    while (mi < m) {
-      val vOff = mi * sub
-      val off = (mi * nCodes + codes.getInt(mi)) * sub
-      var dot = 0.0
-      var d = 0
-      val dMax = math.min(sub, v.numElements() - vOff)
-      while (d < dMax) {
-        dot += v.getFloat(vOff + d).toDouble * codebooks(off + d).toDouble
-        d += 1
-      }
-      total += dot
-      mi += 1
-    }
-    total
-  }
+  override def nullSafeEval(q: Any, c: Any): Any =
+    PqAdcDotSum.dotSum(q.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
+      codebooks, nCodes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("codebooks", codebooks, "float[]")
-    nullSafeCodeGen(ctx, ev, (v, codes) => {
-      val total = ctx.freshName("total")
-      val mi = ctx.freshName("mi")
-      val d = ctx.freshName("d")
-      val off = ctx.freshName("off")
-      val vOff = ctx.freshName("vOff")
-      val dot = ctx.freshName("dot")
-      s"""
-         |double $total = 0.0;
-         |for (int $mi = 0; $mi < $m; $mi++) {
-         |  int $vOff = $mi * $sub;
-         |  int $off = ($mi * $nCodes + $codes.getInt($mi)) * $sub;
-         |  double $dot = 0.0;
-         |  int ${d}Max = java.lang.Math.min($sub, $v.numElements() - $vOff);
-         |  for (int $d = 0; $d < ${d}Max; $d++) {
-         |    $dot += ((double) $v.getFloat($vOff + $d))
-         |      * ((double) $cbRef[$off + $d]);
-         |  }
-         |  $total += $dot;
-         |}
-         |${ev.value} = $total;
-       """.stripMargin
-    })
+    val cbRef = ctx.addReferenceObj("codebooks", codebooks)
+    defineCodeGen(ctx, ev, (v, codes) =>
+      s"graft.plans.PqAdcDotSum.dotSum($v, $codes, $cbRef, $nCodes)")
   }
 
   override protected def withNewChildrenInternal(
@@ -190,17 +109,25 @@ case class PqAdcDotSum(left: Expression, right: Expression,
 }
 
 object PqAdcDotSum {
-  def apply(qEmb: Column, codes: Column,
-            codebooks: Seq[Seq[Array[Float]]]): Column = {
-    val m = codebooks.length
-    val nCodes = codebooks.head.length
-    val sub = codebooks.head.head.length
-    val flat = new Array[Float](m * nCodes * sub)
-    var i = 0
-    for (cb <- codebooks; cw <- cb; v <- cw) { flat(i) = v; i += 1 }
-    Internals.column(PqAdcDotSum(Internals.expression(qEmb),
-      Internals.expression(codes), flat, m, sub, nCodes))
+  /** The kernel both `nullSafeEval` and the generated code call. */
+  def dotSum(v: ArrayData, codes: ArrayData, codebooks: FloatMatrix,
+             nCodes: Int): Double = {
+    val sub = codebooks.cols
+    var total = 0.0
+    var mi = 0
+    while (mi < codebooks.rows / nCodes) {
+      total += codebooks.dotRow(mi * nCodes + codes.getInt(mi), v, mi * sub,
+        PqEncodeCodes.sliceLength(v, mi, sub))
+      mi += 1
+    }
+    total
   }
+
+  def apply(qEmb: Column, codes: Column,
+            codebooks: Seq[Seq[Array[Float]]]): Column =
+    Internals.column(PqAdcDotSum(Internals.expression(qEmb),
+      Internals.expression(codes), FloatMatrix.stacked(codebooks),
+      codebooks.head.length))
 }
 
 object PqEncodeCodes {
@@ -235,14 +162,33 @@ object PqEncodeCodes {
     0
   }
 
-  def apply(emb: Column, codebooks: Seq[Seq[Array[Float]]]): Column = {
-    val m = codebooks.length
-    val nCodes = codebooks.head.length
-    val sub = codebooks.head.head.length
-    val flat = new Array[Float](m * nCodes * sub)
-    var i = 0
-    for (cb <- codebooks; cw <- cb; v <- cw) { flat(i) = v; i += 1 }
-    Internals.column(
-      PqEncodeCodes(Internals.expression(emb), flat, m, sub, nCodes))
+  /** Elements of subspace `mi` present in `v`: `slice(v, mi·sub + 1, sub)`'s
+    * length, 0 past the end. */
+  private[plans] def sliceLength(v: ArrayData, mi: Int, sub: Int): Int =
+    math.max(0, math.min(sub, v.numElements() - mi * sub))
+
+  /** The kernel both `nullSafeEval` and the generated code call. */
+  def encode(v: ArrayData, codebooks: FloatMatrix, cn2: Array[Double],
+             nCodes: Int): ArrayData = {
+    val sub = codebooks.cols
+    val out = new Array[Int](codebooks.rows / nCodes)
+    val dists = new Array[Double](nCodes)
+    var mi = 0
+    while (mi < out.length) {
+      val n = sliceLength(v, mi, sub)
+      var j = 0
+      while (j < nCodes) {
+        val row = mi * nCodes + j
+        dists(j) = cn2(row) - 2.0 * codebooks.dotRow(row, v, mi * sub, n)
+        j += 1
+      }
+      out(mi) = argminRounded(dists)
+      mi += 1
+    }
+    new GenericArrayData(out)
   }
+
+  def apply(emb: Column, codebooks: Seq[Seq[Array[Float]]]): Column =
+    Internals.column(PqEncodeCodes(Internals.expression(emb),
+      FloatMatrix.stacked(codebooks), codebooks.head.length))
 }

@@ -232,7 +232,9 @@ object Similarity {
     * (what Spark's `round` does for doubles). Zero-norm vectors are
     * skipped (the declarative form's NaN cosine compares TRUE under
     * Spark's NaN-is-greatest `>=`, which no oracle reproduces — the same
-    * divergence [[safeCosine]] guards). */
+    * divergence [[safeCosine]] guards). Embeddings of different lengths
+    * throw IllegalArgumentException naming both lengths, as [[dotFast]]
+    * does. */
   def bruteForceEpsPairs(df: DataFrame, idCol: String, embCol: String,
                          threshold: Double): DataFrame = {
     val spark = df.sparkSession
@@ -257,11 +259,12 @@ object Similarity {
         Iterator.range(i + 1, n).flatMap { j =>
           val (idb, vb) = c(j)
           val nb = nm(j)
+          if (va.length != vb.length) throw new IllegalArgumentException(
+            s"bruteForceEpsPairs: embedding lengths differ (${va.length} vs ${vb.length})")
           if (na == 0.0 || nb == 0.0) Iterator.empty
           else {
             var acc = 0.0; var k = 0
-            val len = math.min(va.length, vb.length)
-            while (k < len) { acc += va(k).toDouble * vb(k).toDouble; k += 1 }
+            while (k < va.length) { acc += va(k).toDouble * vb(k).toDouble; k += 1 }
             val cos = java.math.BigDecimal.valueOf(acc / (na * nb))
               .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
             if (cos >= threshold) Iterator.single((ida, idb, cos))
@@ -333,9 +336,9 @@ object Similarity {
     * memberships.
     *
     * Returns the distinct (q_id, c_id) pairs, q_id from `a` and c_id
-    * from `b`. Both sides share ONE signature expression: its plane
-    * matrix compares by reference, so a self-join (a == b, no probe) has
-    * two identical sides and AQE reuses one side's exchange. */
+    * from `b`. A self-join (a == b, no probe) has two identical sides —
+    * the signature's plane matrix compares by value — and AQE reuses one
+    * side's exchange. */
   private def bandedPairs(a: DataFrame, b: DataFrame, idCol: String,
                           embCol: String, dim: Int, nBits: Int, bands: Int,
                           probeA: Boolean = false,
@@ -596,9 +599,8 @@ object Similarity {
     * argmin codeword by ROUNDED (4 dp) `|c|² − 2·v_m·c` distance
     * (the per-row `|v_m|²` constant drops; ordering only) with codeword
     * index as tiebreak, so assignments agree across engines despite
-    * summation-order float drift. One codegen'd expression per row:
-    * all codeword dots come from a single constant-matrix
-    * [[graft.plans.PlaneProjections]] node per subspace. */
+    * summation-order float drift. One codegen'd
+    * [[graft.plans.PqEncodeCodes]] node per row computes all m codes. */
   def pqEncode(df: DataFrame, embCol: String,
                codebooks: Seq[Seq[Array[Float]]]): DataFrame = {
     val m = codebooks.length

@@ -8,15 +8,22 @@ import org.apache.spark.sql.SparkSession
   * SparkContext, and restores the shared session afterwards. */
 class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
 
-  test("word_shingles and float_dot_product are callable from SQL") {
+  private def withExtensions(body: SparkSession => Unit): Unit = {
     val prior = TestSession.spark // ensure the shared context exists
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    try {
-      val spark = GraftSession.tune(
-        SparkSession.builder().master("local[2]")
-          .withExtensions(new graft.plans.GraftExtensions),
-        shufflePartitions = 2).getOrCreate()
+    try body(GraftSession.tune(
+      SparkSession.builder().master("local[2]")
+        .withExtensions(new graft.plans.GraftExtensions),
+      shufflePartitions = 2).getOrCreate())
+    finally {
+      SparkSession.setDefaultSession(prior)
+      SparkSession.setActiveSession(prior)
+    }
+  }
+
+  test("word_shingles and float_dot_product are callable from SQL") {
+    withExtensions { spark =>
       val sh = spark.sql(
         "SELECT word_shingles('a b c d', 3) AS s").head().getSeq[String](0)
       assert(sh == Seq("a b c", "b c d"))
@@ -74,9 +81,30 @@ class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
           |  named_struct('x', 0.0d, 'y', 4.0d)))) AS p)""".stripMargin).head()
       assert(wkb.getString(0).startsWith("010300000001000000" + "05000000"))
       assert(wkb.getInt(1) == 6)
-    } finally {
-      SparkSession.setDefaultSession(prior)
-      SparkSession.setActiveSession(prior)
+    }
+  }
+
+  test("long_sq_dist is callable from SQL; mismatched lengths throw") {
+    withExtensions { spark =>
+      val d = spark.sql(
+        "SELECT long_sq_dist(array(1L, -2L, 30L), array(4L, 2L, 30L)) AS d")
+        .head().getLong(0)
+      assert(d == 25L)
+      val e = intercept[Exception](spark.sql(
+        "SELECT long_sq_dist(array(1L, 2L, 3L), array(1L, 2L)) AS d").collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(chain.contains("long_sq_dist: array lengths differ (3 vs 2)"), chain)
+    }
+  }
+
+  test("a wrong-arity call fails naming the function") {
+    withExtensions { spark =>
+      val e = intercept[Exception](
+        spark.sql("SELECT float_dot_product(array(CAST(1.0 AS FLOAT))) AS d").collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(chain.contains("float_dot_product: wrong number of arguments (1)"), chain)
     }
   }
 }

@@ -28,6 +28,34 @@ class PlanSpec extends SparkSpec {
       compute("ab", "abzzzzzzzzzzzz") == 0.7714285714285714)
   }
 
+  test("constant-matrix natives built twice are equal; q43's plan text is stable") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.FormattedMode
+    import org.apache.spark.sql.graftaccess.Internals
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.plans.{PlaneProjections, PlaneSignBits, PqEncodeCodes}
+    val e = Internals.column(org.apache.spark.sql.catalyst.expressions
+      .AttributeReference("e", ArrayType(FloatType, containsNull = false))())
+    // every call builds fresh arrays: equality must come from the values
+    def planes = Array.tabulate(12)(i => (i % 5 - 2).toFloat)
+    def codebooks = Seq.tabulate(2, 3)((mi, j) => Array(mi.toFloat, j - 1f))
+    val builds: Seq[() => Column] = Seq(
+      () => PlaneSignBits(e, planes, 4),
+      () => PlaneProjections(e, planes, 4),
+      () => PqEncodeCodes(e, codebooks))
+    for (build <- builds) {
+      val (a, b) = (Internals.expression(build()), Internals.expression(build()))
+      assert(a == b, s"$a != $b")
+      assert(a.semanticEquals(b), s"$a !~ $b")
+      assert(a.hashCode == b.hashCode, s"$a")
+    }
+    def q43Plan: String = SparkEntry.queries("q43_lsh_ann")(spark, sf)
+      .queryExecution.explainString(FormattedMode)
+      .replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+    val (p1, p2) = (q43Plan, q43Plan)
+    assert(p1 == p2, s"\n$p1\n---\n$p2")
+  }
+
   test("q02 star join broadcasts dims, no nested-loop join") {
     val p = plan("q02_region_revenue")
     assert(p.contains("BroadcastHashJoin"))

@@ -611,10 +611,14 @@ class PropertySpec extends SparkSpec {
     // FloatDotProduct vs Similarity.dot, PlaneProjections vs one dot per
     // plane, PlaneSignBits vs SQL `dot > 0` per plane — in codegen and in
     // interpreted eval, on random floats mixed with -0.0, NaN, ±Inf,
-    // subnormals and extremes, empty and null arrays
+    // subnormals and extremes, empty and null arrays. LongSqDist vs
+    // aggregate(zip_with), and the PQ pair vs their slice + zip_with forms
+    // on finite floats (a NaN distance has no rounded argmin), with
+    // integer-grid codewords so rounded distances tie
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    import graft.plans.{FloatDotProduct, PlaneProjections, PlaneSignBits}
+    import graft.plans.{FloatDotProduct, LongSqDist, PlaneProjections,
+      PlaneSignBits, PqAdcDotSum, PqEncodeCodes}
     import graft.similarity.Similarity
     val special = Gen.oneOf(-0.0f, 0.0f, Float.NaN, Float.PositiveInfinity,
       Float.NegativeInfinity, Float.MinPositiveValue, -1.0e-40f, Float.MaxValue)
@@ -629,13 +633,47 @@ class PropertySpec extends SparkSpec {
     // planes mostly finite, so the sign rule is not all-NaN
     val planeGen = Gen.zip(Gen.frequency(3 -> vec(nPlanes * dim, 0),
       1 -> vec(nPlanes * dim)), Gen.listOfN(30, orNull(vec(dim))))
+    val longGen = Gen.listOfN(30, Gen.choose(0, 7).flatMap(n => Gen.zip(
+      Gen.frequency(8 -> Gen.listOfN(n, Gen.choose(-1000000L, 1000000L))
+        .map(_.toArray), 1 -> Gen.const(null)),
+      Gen.frequency(8 -> Gen.listOfN(n, Gen.choose(-1000000L, 1000000L))
+        .map(_.toArray), 1 -> Gen.const(null)))))
+    val (m, sub, nCodes) = (3, 2, 4)
+    val codeword = Gen.listOfN(sub, Gen.frequency(3 -> Gen.choose(-8.0f, 8.0f),
+      1 -> Gen.choose(-2, 2).map(_.toFloat))).map(_.toArray)
+    val pqGen = Gen.zip(Gen.listOfN(m, Gen.listOfN(nCodes, codeword)),
+      Gen.listOfN(30, Gen.zip(orNull(vec(m * sub, 0)),
+        Gen.frequency(8 -> Gen.listOfN(m, Gen.choose(0, nCodes - 1))
+          .map(_.toArray), 1 -> Gen.const(null)))))
     val floats = ArrayType(FloatType, containsNull = false)
-    def frame(rows: Seq[Seq[Any]], names: String*): DataFrame =
+    def frameOf(rows: Seq[Seq[Any]], fields: (String, DataType)*): DataFrame =
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.zipWithIndex.map {
           case (r, i) => Row.fromSeq(i.toLong +: r) }, 2),
         StructType(StructField("id", LongType) +:
-          names.map(StructField(_, floats))))
+          fields.map { case (n, t) => StructField(n, t) }))
+    def frame(rows: Seq[Seq[Any]], names: String*): DataFrame =
+      frameOf(rows, names.map(_ -> floats): _*)
+    val longs = ArrayType(LongType, containsNull = false)
+    def longFrame(rows: Seq[(Array[Long], Array[Long])]): DataFrame =
+      frameOf(rows.map { case (a, b) => Seq(a, b) }, "a" -> longs, "b" -> longs)
+    // declarative twins of the PQ kernels: per subspace, the slice of the
+    // embedding dotted with literal codewords
+    def pqEncodeTwin(cbs: Seq[Seq[Array[Float]]]): Column =
+      when(col("e").isNotNull, array(cbs.zipWithIndex.map { case (cb, mi) =>
+        val dists = array(cb.map { cw =>
+          val cn2 = cw.foldLeft(0.0)((a, v) => a + v.toDouble * v.toDouble)
+          round(lit(cn2) - lit(2.0) * Similarity.dot(
+            slice(col("e"), mi * sub + 1, sub), typedLit(cw.toSeq)), 4)
+        }.toSeq: _*)
+        (array_position(dists, array_min(dists)) - 1).cast("int")
+      }: _*))
+    def pqAdcTwin(cbs: Seq[Seq[Array[Float]]]): Column =
+      cbs.zipWithIndex.map { case (cb, mi) =>
+        Similarity.dot(slice(col("e"), mi * sub + 1, sub),
+          element_at(typedLit(cb.map(_.toSeq)),
+            element_at(col("codes"), mi + 1) + 1))
+      }.foldLeft(lit(0.0))(_ + _)
     def byId(df: DataFrame): Map[Long, Any] =
       df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
     def same(x: Any, y: Any): Boolean = (x, y) match {
@@ -644,6 +682,7 @@ class PropertySpec extends SparkSpec {
         java.lang.Double.doubleToLongBits(a) ==
           java.lang.Double.doubleToLongBits(b)
       case (a: Long, b: Long) => a == b
+      case (a: Int, b: Int) => a == b
       case (a: scala.collection.Seq[_], b: scala.collection.Seq[_]) =>
         a.length == b.length && a.zip(b).forall { case (u, v) => same(u, v) }
       case _ => false
@@ -689,10 +728,27 @@ class PropertySpec extends SparkSpec {
               when(d > 0, lit(1L << p)).when(d <= 0, lit(0L))
             }.reduce(_ bitwiseOR _), s"$mode sign bits")
         }
+        forAll(longGen, 4) { pairs =>
+          assertTwins(longFrame(pairs), LongSqDist(col("a"), col("b")),
+            aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
+              lit(0L), _ + _), s"$mode long_sq_dist")
+        }
+        forAll(pqGen, 4) { case (cbs, rows) =>
+          val df = frameOf(rows.map { case (e, c) => Seq(e, c) },
+            "e" -> floats, "codes" -> ArrayType(IntegerType, containsNull = false))
+          val cbArrays = cbs.map(_.toSeq)
+          assertTwins(df, PqEncodeCodes(col("e"), cbArrays),
+            pqEncodeTwin(cbArrays), s"$mode pq_encode")
+          assertTwins(df, PqAdcDotSum(col("e"), col("codes"), cbArrays),
+            pqAdcTwin(cbArrays), s"$mode pq_adc_dot_sum")
+        }
         val ab = frame(Seq(Seq(Array(1f, 2f, 3f), Array(1f, 2f))), "a", "b")
         assertThrows(ab, FloatDotProduct(col("a"), col("b")),
           "float_dot_product: array lengths differ (3 vs 2)")
         assert(ab.select(Similarity.dot(col("a"), col("b"))).head().isNullAt(0))
+        val longAb = longFrame(Seq((Array(1L, 2L, 3L), Array(1L, 2L))))
+        assertThrows(longAb, LongSqDist(col("a"), col("b")),
+          "long_sq_dist: array lengths differ (3 vs 2)")
         val planes = Array.fill(nPlanes * dim)(1f)
         for (n <- Seq(0, dim - 1, dim + 1)) {
           val e = frame(Seq(Seq(Array.fill(n)(1f))), "e")
