@@ -38,4 +38,24 @@ class QueriesSpec extends SparkSpec {
   test("every oracleSql key has a matching query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
+
+  test("every oracleSql entry matches its pinned SHA-256 digest") {
+    // src/test/resources/oracle_sql.sha256 changes only when a lane's
+    // oracle is meant to change; a refactor of the oracle builders must
+    // leave every string byte-identical
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/oracle_sql.sha256"), "UTF-8")
+    val pinned = try src.getLines()
+      .filterNot(l => l.isEmpty || l.startsWith("#"))
+      .map { l => val Array(d, k) = l.split("  "); k -> d }.toMap
+    finally src.close()
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val actual = SparkEntry.oracleSql.map { case (k, v) =>
+      k -> md.digest(v.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    }
+    assert(actual.keySet === pinned.keySet)
+    val changed = actual.keySet.toSeq.sorted.filter(k => actual(k) != pinned(k))
+    assert(changed.isEmpty,
+      changed.map(k => s"${actual(k)}  $k").mkString("changed:\n", "\n", ""))
+  }
 }
