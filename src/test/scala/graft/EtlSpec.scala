@@ -198,4 +198,24 @@ class EtlSpec extends SparkSpec {
     assert(actions.count(_._2) === 2, actions)
     assert(actions.drop(lastWrite + 1).map(_._1) === Seq("collect"), actions)
   }
+
+  test("the corpus capstone runs its pinned sequence of actions") {
+    // every eager barrier before the writes, in order; a refactor that
+    // moves or adds one changes this sequence
+    val dir = java.nio.file.Files.createTempDirectory("graft_corpus_actions")
+    val ((_, _, failed), actions) =
+      actionsDuring(Etl.corpusCapstone(spark, sf, dir.toString))
+    assert(failed === 0L)
+    val ckpt = "localCheckpoint" -> false
+    assert(actions === Seq(
+      "collect" -> false, // ConnectedComponents' routing collect
+      ckpt,               // the quality-scored accounting frame
+      "collect" -> false, // per-language token budgets
+      "collect" -> false, // mixtureSelect's per-bucket token totals
+      ckpt,               // the kept accounting frame
+      ckpt, ckpt, ckpt,   // unigram word dictionary, seed vocab, EM round 1
+      ckpt,               // EM round 2, read by the per-word encode
+      "command" -> true, "command" -> true, // the two parquet writes
+      "collect" -> false), actions)         // the one validation action
+  }
 }
