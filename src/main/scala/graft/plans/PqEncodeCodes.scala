@@ -74,7 +74,11 @@ case class PqEncodeCodes(child: Expression, codebooks: FloatMatrix, nCodes: Int)
   * interpreted HOF folds — the pair side of the q159 hot path. The
   * kernel is one Scala method, `PqAdcDotSum.dotSum`, which `nullSafeEval`
   * calls and `doGenCode` emits as a static call. Like [[PqEncodeCodes]]
-  * it reads each subspace within the `slice()` bound, unchecked. */
+  * it reads each subspace of the embedding within the `slice()` bound,
+  * unchecked; `codes` is checked, because an unchecked code would
+  * silently read a codeword of another subspace: it must hold exactly m
+  * non-null codes, each in [0, nCodes), or the kernel throws
+  * `IllegalArgumentException`. */
 case class PqAdcDotSum(left: Expression, right: Expression,
                        codebooks: FloatMatrix, nCodes: Int)
     extends BinaryExpression {
@@ -112,11 +116,17 @@ object PqAdcDotSum {
   /** The kernel both `nullSafeEval` and the generated code call. */
   def dotSum(v: ArrayData, codes: ArrayData, codebooks: FloatMatrix,
              nCodes: Int): Double = {
-    val sub = codebooks.cols
+    val (sub, m) = (codebooks.cols, codebooks.rows / nCodes)
+    if (codes.numElements() != m) throw new IllegalArgumentException(
+      s"pq_adc_dot_sum: ${codes.numElements()} codes for $m subspaces")
     var total = 0.0
     var mi = 0
-    while (mi < codebooks.rows / nCodes) {
-      total += codebooks.dotRow(mi * nCodes + codes.getInt(mi), v, mi * sub,
+    while (mi < m) {
+      val code = if (codes.isNullAt(mi)) -1 else codes.getInt(mi)
+      if (code < 0 || code >= nCodes) throw new IllegalArgumentException(
+        s"pq_adc_dot_sum: code ${if (codes.isNullAt(mi)) "null" else code} " +
+          s"of subspace $mi is outside [0, $nCodes)")
+      total += codebooks.dotRow(mi * nCodes + code, v, mi * sub,
         PqEncodeCodes.sliceLength(v, mi, sub))
       mi += 1
     }

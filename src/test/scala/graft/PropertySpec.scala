@@ -614,7 +614,8 @@ class PropertySpec extends SparkSpec {
     // subnormals and extremes, empty and null arrays. LongSqDist vs
     // aggregate(zip_with), and the PQ pair vs their slice + zip_with forms
     // on finite floats (a NaN distance has no rounded argmin), with
-    // integer-grid codewords so rounded distances tie
+    // integer-grid codewords so rounded distances tie; PqAdcDotSum
+    // rejects a codes array of the wrong length or with a bad code
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     import graft.plans.{FloatDotProduct, LongSqDist, PlaneProjections,
@@ -758,6 +759,20 @@ class PropertySpec extends SparkSpec {
           assertThrows(e, PlaneSignBits(col("e"), planes, dim),
             s"plane_sign_bits: $msg")
         }
+        val ones = Seq.fill(m)(Seq.fill(nCodes)(Array.fill(sub)(1f)))
+        def codesFrame(codes: Array[Integer]): DataFrame =
+          frameOf(Seq(Seq(Array.fill(m * sub)(1f), codes)), "e" -> floats,
+            "codes" -> ArrayType(IntegerType, containsNull = true))
+        for ((codes, msg) <- Seq(
+            Array[Integer](0, 1) -> s"2 codes for $m subspaces",
+            Array[Integer](0, nCodes, 1) ->
+              s"code $nCodes of subspace 1 is outside [0, $nCodes)",
+            Array[Integer](0, 1, -1) ->
+              s"code -1 of subspace 2 is outside [0, $nCodes)",
+            Array[Integer](null, 1, 2) ->
+              s"code null of subspace 0 is outside [0, $nCodes)"))
+          assertThrows(codesFrame(codes),
+            PqAdcDotSum(col("e"), col("codes"), ones), s"pq_adc_dot_sum: $msg")
       } finally saved.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
