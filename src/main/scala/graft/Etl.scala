@@ -354,26 +354,9 @@ object Etl {
     //    whitespace budget above is an approximation; n_pieces is the
     //    number the trained tokenizer will actually emit.
     import graft.text.Unigram
-    val unk = -23025850930L
-    val words = mixedText
-      .select(explode(
-        org.apache.spark.sql.functions.split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 1)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val r1 = Unigram.emRound(words, "word", "cnt",
-      Unigram.seedVocab(words, "word", "cnt", k = 24).localCheckpoint(),
-      4, unk).localCheckpoint()
-    val r2 = Unigram.emRound(words, "word", "cnt", r1, 4, unk)
-      .localCheckpoint()
-    val wordPieces = Unigram.viterbiSegment(
-        Unigram.scoreArrays(words, "word", r2, 4, unk), "word", 4)
-      .select(col("word"), size(col("pieces")).cast("long").as("__wp"))
-    val docPieces = mixedText
-      .select(col("doc_id"), explode(
-        org.apache.spark.sql.functions.split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 1)
-      .join(wordPieces, Seq("word"))
+    val words = Unigram.wordDict(mixedText)
+    val docPieces = Unigram.piecesPerWord(mixedText, Seq("doc_id"), words,
+        Unigram.train(words).localCheckpoint())
       .groupBy("doc_id").agg(sum(col("__wp")).as("n_pieces"))
 
     val wide = mixed.select("doc_id", "lang", "n_tokens")

@@ -8,7 +8,7 @@ import graft.functions.{Cleaning, WeightedQuantile}
 import graft.dedup.NearDup
 import graft.multimodal.BinaryOps
 import graft.similarity.Similarity
-import graft.text.TextAnalysis
+import graft.text.{TextAnalysis, Unigram}
 import graft.operators.{Allocation, Dedup, Harvest, Reshape, TemporalOps, WindowOps}
 import graft.graph.{CalcForest, ConnectedComponents}
 import graft.linkage.Linkage
@@ -2944,46 +2944,17 @@ object SparkEntry {
   // hard-EM rounds — Viterbi-segment the word dictionary under the current
   // integer-nano scores, count pieces weighted by word frequency, re-score
   // as smoothed log-probabilities. The Viterbi DP is EXACT integer
-  // arithmetic with an explicit tie rule, so the oracle's list_reduce twin
-  // replays both EM rounds bit-for-bit (unrolled CTEs, the q143 pattern).
-  private def q171(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.Unigram
-    val unk = -23025850930L // ln(1e-10) nanos, literal in both engines
-    // the word dict and each round's vocab are tiny by contract —
-    // checkpointing them keeps round R+1's plan from containing round R's
-    // whole lineage (3 nested Viterbi HOFs would recompile otherwise)
-    val words = t(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 1)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val seed = Unigram.seedVocab(words, "word", "cnt", k = 24)
-      .localCheckpoint()
-    val r1 = Unigram.emRound(words, "word", "cnt", seed, 4, unk)
-      .localCheckpoint()
-    val r2 = Unigram.emRound(words, "word", "cnt", r1, 4, unk)
-    r2.orderBy("piece")
-  }
+  // arithmetic with an explicit tie rule, so the oracle's recursive-CTE
+  // twin (`UnigramSql`) replays both EM rounds bit-for-bit.
+  private def q171(s: SparkSession, dir: String): DataFrame =
+    Unigram.train(Unigram.wordDict(t(s, dir, "documents"))).orderBy("piece")
 
   // Encode under the TRAINED unigram vocab (q171's round-2 scores) — the
   // q143→q144 train→encode symmetry for the SentencePiece family. One row
   // per dictionary word: its exact-integer Viterbi segmentation.
   private def q172(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.Unigram
-    val unk = -23025850930L
-    val words = t(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 1)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val seed = Unigram.seedVocab(words, "word", "cnt", k = 24)
-      .localCheckpoint()
-    val r1 = Unigram.emRound(words, "word", "cnt", seed, 4, unk)
-      .localCheckpoint()
-    val r2 = Unigram.emRound(words, "word", "cnt", r1, 4, unk)
-      .localCheckpoint()
-    Unigram.viterbiSegment(
-        Unigram.scoreArrays(words, "word", r2, 4, unk), "word", 4)
+    val words = Unigram.wordDict(t(s, dir, "documents"))
+    Unigram.encodeWords(words, Unigram.train(words).localCheckpoint())
       .select(col("word"), col("cnt"),
         size(col("pieces")).as("n_pieces"),
         concat_ws("+", col("pieces")).as("seg"),
@@ -2996,22 +2967,11 @@ object SparkEntry {
   // under the shrunk vocabulary. Completes q171's fixed-membership rounds
   // with the shrink schedule real SentencePiece runs.
   private def q173(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.Unigram
-    val unk = -23025850930L
-    val words = t(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 1)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    val words = Unigram.wordDict(t(s, dir, "documents"))
+    val pruned = Unigram.rescoreCounts(
+        Unigram.prune(Unigram.train(words).localCheckpoint(), keepMulti = 12))
       .localCheckpoint()
-    val seed = Unigram.seedVocab(words, "word", "cnt", k = 24)
-      .localCheckpoint()
-    val r1 = Unigram.emRound(words, "word", "cnt", seed, 4, unk)
-      .localCheckpoint()
-    val r2 = Unigram.emRound(words, "word", "cnt", r1, 4, unk)
-      .localCheckpoint()
-    val pruned = Unigram.rescoreCounts(Unigram.prune(r2, keepMulti = 12))
-      .localCheckpoint()
-    Unigram.emRound(words, "word", "cnt", pruned, 4, unk)
+    Unigram.emRound(words, "word", "cnt", pruned, 4, Unigram.UnkNano)
       .orderBy("piece")
   }
 
@@ -3497,32 +3457,10 @@ object SparkEntry {
     * n_pieces) under the q171-trained unigram vocab. */
   private def unigramDocPieces(s: SparkSession, dir: String,
                                withScore: Boolean = false): DataFrame = {
-    import graft.text.Unigram
-    val unk = -23025850930L
     val docs = t(s, dir, "documents")
-    val words = docs
-      .select(explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 1)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val seed = Unigram.seedVocab(words, "word", "cnt", k = 24)
-      .localCheckpoint()
-    val r1 = Unigram.emRound(words, "word", "cnt", seed, 4, unk)
-      .localCheckpoint()
-    val r2 = Unigram.emRound(words, "word", "cnt", r1, 4, unk)
-      .localCheckpoint()
-    val seg = Unigram.viterbiSegment(
-      Unigram.scoreArrays(words, "word", r2, 4, unk), "word", 4)
-    val wp =
-      if (withScore) seg.select(col("word"),
-        size(col("pieces")).cast("long").as("__wp"),
-        col("score_nano").as("__ws"))
-      else seg.select(col("word"),
-        size(col("pieces")).cast("long").as("__wp"))
-    val grouped = docs.select(col("doc_id"), col("lang"),
-        explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 1)
-      .join(wp, Seq("word"))
+    val words = Unigram.wordDict(docs)
+    val grouped = Unigram.piecesPerWord(docs, Seq("doc_id", "lang"), words,
+        Unigram.train(words).localCheckpoint())
       .groupBy("doc_id", "lang")
     if (withScore)
       grouped.agg(count(lit(1)).as("n_tokens"),
@@ -4795,14 +4733,26 @@ met_$qid AS (
       .replace("@UNIONS@", unions)
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** Shared recursive-CTE prefix for the trained-unigram oracles
-    * (q175/q191): word dictionary -> seed vocab -> 2 EM rounds ->
-    * per-word Viterbi DP; dp3's terminal rows carry the best path `p0`
-    * AND its total score `s0`. */
-  private def q175UnigramDpSql: String =
-    """WITH RECURSIVE wdict AS MATERIALIZED (
+  /** DuckDB twin of the unigram-LM recipe (`Unigram.wordDict` → `train`
+    * → `encodeWords`), one CTE block per step; the q171-q173, q175, q176
+    * and q191 oracles are assembled from it.
+    *
+    * The DPs are RECURSIVE CTEs (forward Viterbi, state carried in plain
+    * BIGINT/VARCHAR[] columns) rather than unrolled list_reduce folds:
+    * DuckDB 1.0.0's list_reduce lambda nondeterministically corrupts
+    * STRUCT accumulators once the query chains ~3 DP instances (round 12:
+    * q173's seg3 returned another row's pieces, a different row per run;
+    * round 13's gate caught the same flake in q172's third DP). The
+    * recursive form has no lambda accumulator at all, so the whole
+    * corruption family is out of reach; tie-breaks (longest piece wins on
+    * equal score) and the unreachable-cell sentinel match
+    * `plans.UnigramViterbi` exactly. */
+  private object UnigramSql {
+    /** `WITH RECURSIVE` word dictionary `wdict`, substring table `sub` and
+      * seed vocabulary `vocab0`: every character plus the top 24
+      * multi-character substrings. */
+    val seed: String =
+      """WITH RECURSIVE wdict AS MATERIALIZED (
         |  SELECT word, CAST(count(*) AS BIGINT) AS cnt, len(word) AS n
         |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
         |  WHERE len(word) >= 1 GROUP BY word),
@@ -4821,140 +4771,204 @@ met_$qid AS (
         |vocab0 AS MATERIALIZED (SELECT piece, cnt,
         |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
         |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM picked),
-        |arr1 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab0 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp1 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr1
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp1 WHERE i < n)),
-        |seg1 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp1 WHERE i = n),
-        |cnt1 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab0) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg1 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab1 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt1),
-        |arr2 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab1 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp2 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr2
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp2 WHERE i < n)),
-        |seg2 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp2 WHERE i = n),
-        |cnt2 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab1) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg2 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab2 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt2),
-        |arr3 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab2 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp3 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr3
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp3 WHERE i < n))""".stripMargin
+        |  FROM picked)""".stripMargin
 
+    /** Every dictionary word's score array `arr<r>` under `vocab`, then
+      * its Viterbi DP `dp<r>`; the terminal rows (`i = n`) carry the best
+      * path `p0` and its total score `s0`. */
+    def encode(r: Int, vocab: String): String =
+      s"""arr$r AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
+        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
+        |        THEN coalesce(v.score_nano, CAST(${Unigram.UnkNano} AS BIGINT))
+        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
+        |      ORDER BY sub.j, sub.l) AS arr
+        |  FROM wdict w JOIN sub ON sub.word = w.word
+        |  LEFT JOIN $vocab v ON v.piece = sub.piece
+        |  GROUP BY w.word, w.cnt, w.n),
+        |dp$r AS (
+        |  SELECT word, cnt, n, arr, 0 AS i,
+        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
+        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
+        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
+        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
+        |  FROM arr$r
+        |  UNION ALL
+        |  SELECT word, cnt, n, arr, i + 1,
+        |    greatest(c1, c2, c3, c4), s0, s1, s2,
+        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
+        |           THEN list_append(p3, substr(word, i - 2, 4))
+        |         WHEN c3 = greatest(c1, c2, c3, c4)
+        |           THEN list_append(p2, substr(word, i - 1, 3))
+        |         WHEN c2 = greatest(c1, c2, c3, c4)
+        |           THEN list_append(p1, substr(word, i, 2))
+        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
+        |    p0, p1, p2
+        |  FROM (SELECT *,
+        |      coalesce(s0 + arr[i * 4 + 1],
+        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c1,
+        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
+        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c2,
+        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
+        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c3,
+        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
+        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c4
+        |    FROM dp$r WHERE i < n))""".stripMargin
+
+    /** EM round `r` under `vocab`: encode, count each chosen piece by word
+      * frequency (`cnt<r>`), re-score as `vocab<r>`. */
+    def emRound(r: Int, vocab: String): String =
+      encode(r, vocab) + s""",
+        |seg$r AS MATERIALIZED (
+        |  SELECT word, cnt, p0 AS pieces FROM dp$r WHERE i = n),
+        |cnt$r AS MATERIALIZED (SELECT vp.piece,
+        |    coalesce(u.cnt, 0) AS cnt
+        |  FROM (SELECT piece FROM $vocab) vp
+        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
+        |    FROM seg$r s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
+        |    ON u.piece = vp.piece),
+        |vocab$r AS MATERIALIZED (SELECT piece, cnt,
+        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
+        |      * 1e9) AS BIGINT) AS score_nano
+        |  FROM cnt$r)""".stripMargin
+
+    /** The seed plus two EM rounds, ending at `vocab2` (`Unigram.train`). */
+    val trained: String =
+      Seq(seed, emRound(1, "vocab0"), emRound(2, "vocab1")).mkString(",\n")
+
+    /** `trained`, then every dictionary word encoded under it (`dp3`). */
+    val encoded: String = trained + ",\n" + encode(3, "vocab2")
+  }
+
+  /** DuckDB twin of FellegiSunter's customer fixture (`fsFixture`) and its
+    * three comparison levels; the q168, q169 and q170 oracles are
+    * assembled from it. */
+  private object FsSql {
+    /** `base` and its two sides `l` / `rr`: 1 in 17 left and 1 in 13
+      * right balances nulled, right cents jittered by `id % 7 - 3`. */
+    val fixture: String =
+      """WITH base AS (
+        |  SELECT c_custkey AS id,
+        |    right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4) AS last4,
+        |    c_nationkey AS nkey, c_mktsegment AS seg,
+        |    CAST(round(c_acctbal * 100) AS BIGINT) AS cents
+        |  FROM customer),
+        |l AS (SELECT id AS l_id, last4 AS l_last4, nkey AS l_nkey, seg AS l_seg,
+        |    CASE WHEN id % 17 = 0 THEN NULL ELSE cents END AS l_cents FROM base),
+        |rr AS (SELECT id AS r_id, last4 AS r_last4, nkey AS r_nkey, seg AS r_seg,
+        |    CASE WHEN id % 13 = 0 THEN NULL ELSE cents + id % 7 - 3 END AS r_cents
+        |  FROM base)""".stripMargin
+
+    /** `up`: the seeded random-pair sample the u-probabilities count. */
+    val up: String =
+      """up AS (SELECT * FROM
+        |    (SELECT * FROM l WHERE ('0x' || substr(md5('u168_' || l_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)
+        |    CROSS JOIN
+        |    (SELECT * FROM rr WHERE ('0x' || substr(md5('v168_' || r_id::VARCHAR), 1, 15))::BIGINT % 64 = 0))""".stripMargin
+
+    /** The per-comparison level spine (name 1-3, seg 1-2, bal 1-3). */
+    val spine: String =
+      """spine AS (
+        |  SELECT 'name' AS comparison, CAST(unnest(range(1, 4)) AS INT) AS level, 3 AS n_levels
+        |  UNION ALL
+        |  SELECT 'seg', CAST(unnest(range(1, 3)) AS INT), 2
+        |  UNION ALL
+        |  SELECT 'bal', CAST(unnest(range(1, 4)) AS INT), 3)""".stripMargin
+
+    /** CTE `head` selecting the three comparison levels (`lvl_name`,
+      * `lvl_seg`, `lvl_bal`) over `from`. */
+    def levels(head: String, from: String): String =
+      head + """
+        |    CASE WHEN l_last4 = r_last4 THEN 3
+        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
+        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
+        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
+        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
+        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
+        |      ELSE 1 END AS lvl_bal""".stripMargin + "\n  FROM " + from + ")"
+
+    /** q168/q170's estimate: the true pairs `mp` and the random pairs `up`
+      * levelled and counted into match weights `w`, plus the prior `pr`. */
+    val weights: String = Seq(fixture,
+      "mp AS (SELECT * FROM l JOIN rr ON l_id = r_id WHERE l_id % 4 < 3)",
+      up, levels("mlev AS (SELECT", "mp"), levels("ulev AS (SELECT", "up"),
+      """obs AS (
+        |  SELECT 'm' AS src, 'name' AS comparison, lvl_name AS level FROM mlev
+        |  UNION ALL SELECT 'm', 'seg', lvl_seg FROM mlev
+        |  UNION ALL SELECT 'm', 'bal', lvl_bal FROM mlev WHERE lvl_bal IS NOT NULL
+        |  UNION ALL SELECT 'u', 'name', lvl_name FROM ulev
+        |  UNION ALL SELECT 'u', 'seg', lvl_seg FROM ulev
+        |  UNION ALL SELECT 'u', 'bal', lvl_bal FROM ulev WHERE lvl_bal IS NOT NULL)""".stripMargin,
+      spine,
+      """cnt AS (SELECT comparison, level,
+        |    CAST(count(*) FILTER (WHERE src = 'm') AS BIGINT) AS c_m,
+        |    CAST(count(*) FILTER (WHERE src = 'u') AS BIGINT) AS c_u
+        |  FROM obs GROUP BY 1, 2),
+        |j AS (SELECT spine.comparison, spine.level, spine.n_levels,
+        |    coalesce(c_m, 0) AS c_m, coalesce(c_u, 0) AS c_u,
+        |    sum(coalesce(c_m, 0)) OVER (PARTITION BY spine.comparison) AS n_m,
+        |    sum(coalesce(c_u, 0)) OVER (PARTITION BY spine.comparison) AS n_u
+        |  FROM spine LEFT JOIN cnt
+        |    ON spine.comparison = cnt.comparison AND spine.level = cnt.level),
+        |w AS (SELECT comparison, level,
+        |    CAST(round((ln((c_m + 0.5) / (n_m + 0.5 * n_levels))
+        |              - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
+        |         / ln(2.0) * 1e9) AS BIGINT) AS w_nano
+        |  FROM j),
+        |pr AS (SELECT CAST(round(-ln(count(*) - 1.0) / ln(2.0) * 1e9) AS BIGINT)
+        |    AS prior_nano FROM l)""".stripMargin).mkString(",\n")
+
+    /** Both blocking rules' candidate pairs, levelled and scored (`sc`). */
+    val scored: String = Seq(
+      """cand AS (
+        |  SELECT l.*, rr.* FROM l JOIN rr
+        |    ON l_nkey = r_nkey AND substr(l_last4, 1, 2) = substr(r_last4, 1, 2)
+        |  UNION ALL
+        |  SELECT l.*, rr.* FROM l JOIN rr ON l_last4 = r_last4)""".stripMargin,
+      levels("clev AS (SELECT *,", "cand"),
+      """sc AS (SELECT c.*,
+        |    (SELECT w_nano FROM w WHERE comparison = 'name' AND level = c.lvl_name)
+        |  + (SELECT w_nano FROM w WHERE comparison = 'seg' AND level = c.lvl_seg)
+        |  + coalesce((SELECT w_nano FROM w WHERE comparison = 'bal' AND level = c.lvl_bal), 0)
+        |  + (SELECT prior_nano FROM pr) AS weight_nano
+        |  FROM clev c)""".stripMargin).mkString(",\n")
+
+    /** q169's EM round `r`: every blocked pair's match probability under
+      * the weights `w<r>` and log-odds prior `lr<r>`, then the
+      * re-estimated m-probabilities `m<r>`, weights `w<r+1>` and prior
+      * `lr<r+1>`. */
+    def emRound(r: Int): String =
+      s"""p$r AS (SELECT ep.*,
+        |    (SELECT lr FROM lr$r)
+        |  + (SELECT w_nano FROM w$r WHERE comparison = 'name' AND level = ep.lvl_name)
+        |  + (SELECT w_nano FROM w$r WHERE comparison = 'seg' AND level = ep.lvl_seg)
+        |  + coalesce((SELECT w_nano FROM w$r WHERE comparison = 'bal' AND level = ep.lvl_bal), 0)
+        |    AS s_nano
+        |  FROM ep),
+        |q$r AS MATERIALIZED (SELECT *, CAST(round(1.0 / (1.0 + exp(-(s_nano / 1e9) * ln(2.0))) * 1e6)
+        |    AS BIGINT) AS p_micro FROM p$r),
+        |c$r AS MATERIALIZED (SELECT comparison, level, CAST(sum(p_micro) AS BIGINT) AS s_p FROM (
+        |    SELECT 'name' AS comparison, lvl_name AS level, p_micro FROM q$r
+        |    UNION ALL SELECT 'seg', lvl_seg, p_micro FROM q$r
+        |    UNION ALL SELECT 'bal', lvl_bal, p_micro FROM q$r WHERE lvl_bal IS NOT NULL)
+        |  GROUP BY 1, 2),
+        |t$r AS MATERIALIZED (SELECT CAST(sum(p_micro) AS BIGINT) AS sp, CAST(count(*) AS BIGINT) AS n
+        |  FROM q$r),
+        |m$r AS MATERIALIZED (SELECT uj.comparison, uj.level, uj.n_levels, uj.c_u, uj.n_u,
+        |    (coalesce(s_p, 0) + 500000.0) /
+        |    (CAST(sum(coalesce(s_p, 0)) OVER (PARTITION BY uj.comparison) AS BIGINT)
+        |      + 500000.0 * uj.n_levels) AS m
+        |  FROM uj LEFT JOIN c$r
+        |    ON uj.comparison = c$r.comparison AND uj.level = c$r.level),
+        |w${r + 1} AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
+        |    CAST(round((ln(m) - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
+        |      / ln(2.0) * 1e9) AS BIGINT) AS w_nano
+        |  FROM m$r),
+        |lr${r + 1} AS MATERIALIZED (SELECT CAST(round(ln(sp / (n * 1000000 - sp)) / ln(2.0) * 1e9)
+        |    AS BIGINT) AS lr FROM t$r)""".stripMargin
+  }
+
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Map(
     "q01_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
@@ -8715,309 +8729,44 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |FROM (SELECT *, row_number() OVER (PARTITION BY lang
         |    ORDER BY sample_key DESC, doc_id ASC) AS rk FROM k)
         |WHERE rk <= 25""".stripMargin,
-    "q168_fellegi_sunter" ->
-      """WITH base AS (
-        |  SELECT c_custkey AS id,
-        |    right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4) AS last4,
-        |    c_nationkey AS nkey, c_mktsegment AS seg,
-        |    CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer),
-        |l AS (SELECT id AS l_id, last4 AS l_last4, nkey AS l_nkey, seg AS l_seg,
-        |    CASE WHEN id % 17 = 0 THEN NULL ELSE cents END AS l_cents FROM base),
-        |rr AS (SELECT id AS r_id, last4 AS r_last4, nkey AS r_nkey, seg AS r_seg,
-        |    CASE WHEN id % 13 = 0 THEN NULL ELSE cents + id % 7 - 3 END AS r_cents
-        |  FROM base),
-        |mp AS (SELECT * FROM l JOIN rr ON l_id = r_id WHERE l_id % 4 < 3),
-        |up AS (SELECT * FROM
-        |    (SELECT * FROM l WHERE ('0x' || substr(md5('u168_' || l_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)
-        |    CROSS JOIN
-        |    (SELECT * FROM rr WHERE ('0x' || substr(md5('v168_' || r_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)),
-        |mlev AS (SELECT
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM mp),
-        |ulev AS (SELECT
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM up),
-        |obs AS (
-        |  SELECT 'm' AS src, 'name' AS comparison, lvl_name AS level FROM mlev
-        |  UNION ALL SELECT 'm', 'seg', lvl_seg FROM mlev
-        |  UNION ALL SELECT 'm', 'bal', lvl_bal FROM mlev WHERE lvl_bal IS NOT NULL
-        |  UNION ALL SELECT 'u', 'name', lvl_name FROM ulev
-        |  UNION ALL SELECT 'u', 'seg', lvl_seg FROM ulev
-        |  UNION ALL SELECT 'u', 'bal', lvl_bal FROM ulev WHERE lvl_bal IS NOT NULL),
-        |spine AS (
-        |  SELECT 'name' AS comparison, CAST(unnest(range(1, 4)) AS INT) AS level, 3 AS n_levels
-        |  UNION ALL
-        |  SELECT 'seg', CAST(unnest(range(1, 3)) AS INT), 2
-        |  UNION ALL
-        |  SELECT 'bal', CAST(unnest(range(1, 4)) AS INT), 3),
-        |cnt AS (SELECT comparison, level,
-        |    CAST(count(*) FILTER (WHERE src = 'm') AS BIGINT) AS c_m,
-        |    CAST(count(*) FILTER (WHERE src = 'u') AS BIGINT) AS c_u
-        |  FROM obs GROUP BY 1, 2),
-        |j AS (SELECT spine.comparison, spine.level, spine.n_levels,
-        |    coalesce(c_m, 0) AS c_m, coalesce(c_u, 0) AS c_u,
-        |    sum(coalesce(c_m, 0)) OVER (PARTITION BY spine.comparison) AS n_m,
-        |    sum(coalesce(c_u, 0)) OVER (PARTITION BY spine.comparison) AS n_u
-        |  FROM spine LEFT JOIN cnt
-        |    ON spine.comparison = cnt.comparison AND spine.level = cnt.level),
-        |w AS (SELECT comparison, level,
-        |    CAST(round((ln((c_m + 0.5) / (n_m + 0.5 * n_levels))
-        |              - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |         / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM j),
-        |pr AS (SELECT CAST(round(-ln(count(*) - 1.0) / ln(2.0) * 1e9) AS BIGINT)
-        |    AS prior_nano FROM l),
-        |cand AS (
-        |  SELECT l.*, rr.* FROM l JOIN rr
-        |    ON l_nkey = r_nkey AND substr(l_last4, 1, 2) = substr(r_last4, 1, 2)
-        |  UNION ALL
-        |  SELECT l.*, rr.* FROM l JOIN rr ON l_last4 = r_last4),
-        |clev AS (SELECT *,
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM cand),
-        |sc AS (SELECT c.*,
-        |    (SELECT w_nano FROM w WHERE comparison = 'name' AND level = c.lvl_name)
-        |  + (SELECT w_nano FROM w WHERE comparison = 'seg' AND level = c.lvl_seg)
-        |  + coalesce((SELECT w_nano FROM w WHERE comparison = 'bal' AND level = c.lvl_bal), 0)
-        |  + (SELECT prior_nano FROM pr) AS weight_nano
-        |  FROM clev c)
+    "q168_fellegi_sunter" -> (FsSql.weights + ",\n" + FsSql.scored + """
         |SELECT r_id, l_id, lvl_name, lvl_seg, lvl_bal, weight_nano,
         |  weight_nano >= (SELECT CAST(round(ln(0.9 / (1.0 - 0.9)) / ln(2.0) * 1e9)
         |    AS BIGINT)) AS accepted
         |FROM (SELECT *, row_number() OVER (PARTITION BY r_id
         |    ORDER BY weight_nano DESC, l_id ASC) AS rk FROM sc)
-        |WHERE rk = 1""".stripMargin,
-    "q169_fs_em_train" ->
-      """WITH base AS (
-        |  SELECT c_custkey AS id,
-        |    right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4) AS last4,
-        |    c_nationkey AS nkey, c_mktsegment AS seg,
-        |    CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer),
-        |l AS (SELECT id AS l_id, last4 AS l_last4, nkey AS l_nkey, seg AS l_seg,
-        |    CASE WHEN id % 17 = 0 THEN NULL ELSE cents END AS l_cents FROM base),
-        |rr AS (SELECT id AS r_id, last4 AS r_last4, nkey AS r_nkey, seg AS r_seg,
-        |    CASE WHEN id % 13 = 0 THEN NULL ELSE cents + id % 7 - 3 END AS r_cents
-        |  FROM base),
-        |up AS (SELECT * FROM
-        |    (SELECT * FROM l WHERE ('0x' || substr(md5('u168_' || l_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)
-        |    CROSS JOIN
-        |    (SELECT * FROM rr WHERE ('0x' || substr(md5('v168_' || r_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)),
-        |ulev AS (SELECT
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM up),
-        |uobs AS (
+        |WHERE rk = 1""".stripMargin),
+    "q169_fs_em_train" -> (Seq(FsSql.fixture, FsSql.up,
+      FsSql.levels("ulev AS (SELECT", "up"),
+      """uobs AS (
         |  SELECT 'name' AS comparison, lvl_name AS level FROM ulev
         |  UNION ALL SELECT 'seg', lvl_seg FROM ulev
-        |  UNION ALL SELECT 'bal', lvl_bal FROM ulev WHERE lvl_bal IS NOT NULL),
-        |spine AS (
-        |  SELECT 'name' AS comparison, CAST(unnest(range(1, 4)) AS INT) AS level, 3 AS n_levels
-        |  UNION ALL
-        |  SELECT 'seg', CAST(unnest(range(1, 3)) AS INT), 2
-        |  UNION ALL
-        |  SELECT 'bal', CAST(unnest(range(1, 4)) AS INT), 3),
-        |ucnt AS (SELECT comparison, level, CAST(count(*) AS BIGINT) AS c_u
+        |  UNION ALL SELECT 'bal', lvl_bal FROM ulev WHERE lvl_bal IS NOT NULL)""".stripMargin,
+      FsSql.spine,
+      """ucnt AS (SELECT comparison, level, CAST(count(*) AS BIGINT) AS c_u
         |  FROM uobs GROUP BY 1, 2),
         |uj AS MATERIALIZED (SELECT spine.comparison, spine.level, spine.n_levels,
         |    coalesce(c_u, 0) AS c_u,
         |    CAST(sum(coalesce(c_u, 0)) OVER (PARTITION BY spine.comparison) AS BIGINT) AS n_u
         |  FROM spine LEFT JOIN ucnt
-        |    ON spine.comparison = ucnt.comparison AND spine.level = ucnt.level),
-        |ep AS MATERIALIZED (SELECT *,
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM (SELECT l.*, rr.* FROM l JOIN rr
-        |    ON l_nkey = r_nkey AND substr(l_last4, 1, 2) = substr(r_last4, 1, 2))),
-        |w1 AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
+        |    ON spine.comparison = ucnt.comparison AND spine.level = ucnt.level)""".stripMargin,
+      FsSql.levels("ep AS MATERIALIZED (SELECT *,",
+        """(SELECT l.*, rr.* FROM l JOIN rr
+        |    ON l_nkey = r_nkey AND substr(l_last4, 1, 2) = substr(r_last4, 1, 2))""".stripMargin),
+      """w1 AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
         |    CAST(round((ln(1.0 / n_levels) - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
         |      / ln(2.0) * 1e9) AS BIGINT) AS w_nano
         |  FROM uj),
-        |lr1 AS MATERIALIZED (SELECT CAST(round(ln(0.01 / (1.0 - 0.01)) / ln(2.0) * 1e9) AS BIGINT) AS lr),
-        |p1 AS (SELECT ep.*,
-        |    (SELECT lr FROM lr1)
-        |  + (SELECT w_nano FROM w1 WHERE comparison = 'name' AND level = ep.lvl_name)
-        |  + (SELECT w_nano FROM w1 WHERE comparison = 'seg' AND level = ep.lvl_seg)
-        |  + coalesce((SELECT w_nano FROM w1 WHERE comparison = 'bal' AND level = ep.lvl_bal), 0)
-        |    AS s_nano
-        |  FROM ep),
-        |q1 AS MATERIALIZED (SELECT *, CAST(round(1.0 / (1.0 + exp(-(s_nano / 1e9) * ln(2.0))) * 1e6)
-        |    AS BIGINT) AS p_micro FROM p1),
-        |c1 AS MATERIALIZED (SELECT comparison, level, CAST(sum(p_micro) AS BIGINT) AS s_p FROM (
-        |    SELECT 'name' AS comparison, lvl_name AS level, p_micro FROM q1
-        |    UNION ALL SELECT 'seg', lvl_seg, p_micro FROM q1
-        |    UNION ALL SELECT 'bal', lvl_bal, p_micro FROM q1 WHERE lvl_bal IS NOT NULL)
-        |  GROUP BY 1, 2),
-        |t1 AS MATERIALIZED (SELECT CAST(sum(p_micro) AS BIGINT) AS sp, CAST(count(*) AS BIGINT) AS n
-        |  FROM q1),
-        |m1 AS MATERIALIZED (SELECT uj.comparison, uj.level, uj.n_levels, uj.c_u, uj.n_u,
-        |    (coalesce(s_p, 0) + 500000.0) /
-        |    (CAST(sum(coalesce(s_p, 0)) OVER (PARTITION BY uj.comparison) AS BIGINT)
-        |      + 500000.0 * uj.n_levels) AS m
-        |  FROM uj LEFT JOIN c1
-        |    ON uj.comparison = c1.comparison AND uj.level = c1.level),
-        |w2 AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
-        |    CAST(round((ln(m) - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |      / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM m1),
-        |lr2 AS MATERIALIZED (SELECT CAST(round(ln(sp / (n * 1000000 - sp)) / ln(2.0) * 1e9)
-        |    AS BIGINT) AS lr FROM t1),
-        |p2 AS (SELECT ep.*,
-        |    (SELECT lr FROM lr2)
-        |  + (SELECT w_nano FROM w2 WHERE comparison = 'name' AND level = ep.lvl_name)
-        |  + (SELECT w_nano FROM w2 WHERE comparison = 'seg' AND level = ep.lvl_seg)
-        |  + coalesce((SELECT w_nano FROM w2 WHERE comparison = 'bal' AND level = ep.lvl_bal), 0)
-        |    AS s_nano
-        |  FROM ep),
-        |q2 AS MATERIALIZED (SELECT *, CAST(round(1.0 / (1.0 + exp(-(s_nano / 1e9) * ln(2.0))) * 1e6)
-        |    AS BIGINT) AS p_micro FROM p2),
-        |c2 AS MATERIALIZED (SELECT comparison, level, CAST(sum(p_micro) AS BIGINT) AS s_p FROM (
-        |    SELECT 'name' AS comparison, lvl_name AS level, p_micro FROM q2
-        |    UNION ALL SELECT 'seg', lvl_seg, p_micro FROM q2
-        |    UNION ALL SELECT 'bal', lvl_bal, p_micro FROM q2 WHERE lvl_bal IS NOT NULL)
-        |  GROUP BY 1, 2),
-        |t2 AS MATERIALIZED (SELECT CAST(sum(p_micro) AS BIGINT) AS sp, CAST(count(*) AS BIGINT) AS n
-        |  FROM q2),
-        |m2 AS MATERIALIZED (SELECT uj.comparison, uj.level, uj.n_levels, uj.c_u, uj.n_u,
-        |    (coalesce(s_p, 0) + 500000.0) /
-        |    (CAST(sum(coalesce(s_p, 0)) OVER (PARTITION BY uj.comparison) AS BIGINT)
-        |      + 500000.0 * uj.n_levels) AS m
-        |  FROM uj LEFT JOIN c2
-        |    ON uj.comparison = c2.comparison AND uj.level = c2.level),
-        |w3 AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
-        |    CAST(round((ln(m) - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |      / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM m2),
-        |lr3 AS MATERIALIZED (SELECT CAST(round(ln(sp / (n * 1000000 - sp)) / ln(2.0) * 1e9)
-        |    AS BIGINT) AS lr FROM t2),
-        |p3 AS (SELECT ep.*,
-        |    (SELECT lr FROM lr3)
-        |  + (SELECT w_nano FROM w3 WHERE comparison = 'name' AND level = ep.lvl_name)
-        |  + (SELECT w_nano FROM w3 WHERE comparison = 'seg' AND level = ep.lvl_seg)
-        |  + coalesce((SELECT w_nano FROM w3 WHERE comparison = 'bal' AND level = ep.lvl_bal), 0)
-        |    AS s_nano
-        |  FROM ep),
-        |q3 AS MATERIALIZED (SELECT *, CAST(round(1.0 / (1.0 + exp(-(s_nano / 1e9) * ln(2.0))) * 1e6)
-        |    AS BIGINT) AS p_micro FROM p3),
-        |c3 AS MATERIALIZED (SELECT comparison, level, CAST(sum(p_micro) AS BIGINT) AS s_p FROM (
-        |    SELECT 'name' AS comparison, lvl_name AS level, p_micro FROM q3
-        |    UNION ALL SELECT 'seg', lvl_seg, p_micro FROM q3
-        |    UNION ALL SELECT 'bal', lvl_bal, p_micro FROM q3 WHERE lvl_bal IS NOT NULL)
-        |  GROUP BY 1, 2),
-        |t3 AS MATERIALIZED (SELECT CAST(sum(p_micro) AS BIGINT) AS sp, CAST(count(*) AS BIGINT) AS n
-        |  FROM q3),
-        |m3 AS MATERIALIZED (SELECT uj.comparison, uj.level, uj.n_levels, uj.c_u, uj.n_u,
-        |    (coalesce(s_p, 0) + 500000.0) /
-        |    (CAST(sum(coalesce(s_p, 0)) OVER (PARTITION BY uj.comparison) AS BIGINT)
-        |      + 500000.0 * uj.n_levels) AS m
-        |  FROM uj LEFT JOIN c3
-        |    ON uj.comparison = c3.comparison AND uj.level = c3.level),
-        |w4 AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
-        |    CAST(round((ln(m) - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |      / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM m3),
-        |lr4 AS MATERIALIZED (SELECT CAST(round(ln(sp / (n * 1000000 - sp)) / ln(2.0) * 1e9)
-        |    AS BIGINT) AS lr FROM t3)
+        |lr1 AS MATERIALIZED (SELECT CAST(round(ln(0.01 / (1.0 - 0.01)) / ln(2.0) * 1e9) AS BIGINT) AS lr)""".stripMargin,
+      FsSql.emRound(1), FsSql.emRound(2), FsSql.emRound(3)).mkString(",\n") +
+      """
         |SELECT m3.comparison, m3.level, m3.c_u, m3.n_u,
         |  CAST(round(m3.m * 1e9) AS BIGINT) AS m_nano,
         |  w4.w_nano,
         |  (SELECT CAST(round(sp / n) AS BIGINT) FROM t3) AS lam_micro
         |FROM m3 JOIN w4 ON m3.comparison = w4.comparison AND m3.level = w4.level
-        |ORDER BY m3.comparison, m3.level""".stripMargin,
-    "q170_fs_tf_adjust" ->
-      """WITH base AS (
-        |  SELECT c_custkey AS id,
-        |    right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4) AS last4,
-        |    c_nationkey AS nkey, c_mktsegment AS seg,
-        |    CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer),
-        |l AS (SELECT id AS l_id, last4 AS l_last4, nkey AS l_nkey, seg AS l_seg,
-        |    CASE WHEN id % 17 = 0 THEN NULL ELSE cents END AS l_cents FROM base),
-        |rr AS (SELECT id AS r_id, last4 AS r_last4, nkey AS r_nkey, seg AS r_seg,
-        |    CASE WHEN id % 13 = 0 THEN NULL ELSE cents + id % 7 - 3 END AS r_cents
-        |  FROM base),
-        |mp AS (SELECT * FROM l JOIN rr ON l_id = r_id WHERE l_id % 4 < 3),
-        |up AS (SELECT * FROM
-        |    (SELECT * FROM l WHERE ('0x' || substr(md5('u168_' || l_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)
-        |    CROSS JOIN
-        |    (SELECT * FROM rr WHERE ('0x' || substr(md5('v168_' || r_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)),
-        |mlev AS (SELECT
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM mp),
-        |ulev AS (SELECT
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM up),
-        |obs AS (
-        |  SELECT 'm' AS src, 'name' AS comparison, lvl_name AS level FROM mlev
-        |  UNION ALL SELECT 'm', 'seg', lvl_seg FROM mlev
-        |  UNION ALL SELECT 'm', 'bal', lvl_bal FROM mlev WHERE lvl_bal IS NOT NULL
-        |  UNION ALL SELECT 'u', 'name', lvl_name FROM ulev
-        |  UNION ALL SELECT 'u', 'seg', lvl_seg FROM ulev
-        |  UNION ALL SELECT 'u', 'bal', lvl_bal FROM ulev WHERE lvl_bal IS NOT NULL),
-        |spine AS (
-        |  SELECT 'name' AS comparison, CAST(unnest(range(1, 4)) AS INT) AS level, 3 AS n_levels
-        |  UNION ALL
-        |  SELECT 'seg', CAST(unnest(range(1, 3)) AS INT), 2
-        |  UNION ALL
-        |  SELECT 'bal', CAST(unnest(range(1, 4)) AS INT), 3),
-        |cnt AS (SELECT comparison, level,
-        |    CAST(count(*) FILTER (WHERE src = 'm') AS BIGINT) AS c_m,
-        |    CAST(count(*) FILTER (WHERE src = 'u') AS BIGINT) AS c_u
-        |  FROM obs GROUP BY 1, 2),
-        |j AS (SELECT spine.comparison, spine.level, spine.n_levels,
-        |    coalesce(c_m, 0) AS c_m, coalesce(c_u, 0) AS c_u,
-        |    sum(coalesce(c_m, 0)) OVER (PARTITION BY spine.comparison) AS n_m,
-        |    sum(coalesce(c_u, 0)) OVER (PARTITION BY spine.comparison) AS n_u
-        |  FROM spine LEFT JOIN cnt
-        |    ON spine.comparison = cnt.comparison AND spine.level = cnt.level),
-        |w AS (SELECT comparison, level,
-        |    CAST(round((ln((c_m + 0.5) / (n_m + 0.5 * n_levels))
-        |              - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |         / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM j),
-        |pr AS (SELECT CAST(round(-ln(count(*) - 1.0) / ln(2.0) * 1e9) AS BIGINT)
-        |    AS prior_nano FROM l),
+        |ORDER BY m3.comparison, m3.level""".stripMargin),
+    "q170_fs_tf_adjust" -> (FsSql.weights + """,
         |tf AS (SELECT value,
         |    CAST(round((ln(((SELECT c_u FROM j WHERE comparison = 'seg' AND level = 2) + 0.5)
         |              / ((SELECT n_u FROM j WHERE comparison = 'seg' AND level = 2) + 0.5 * 2))
@@ -9026,26 +8775,8 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |      CAST(sum(count(*)) OVER () AS BIGINT) AS n
         |    FROM (SELECT l_seg AS value FROM l UNION ALL SELECT r_seg FROM rr)
         |    GROUP BY value)),
-        |cand AS (
-        |  SELECT l.*, rr.* FROM l JOIN rr
-        |    ON l_nkey = r_nkey AND substr(l_last4, 1, 2) = substr(r_last4, 1, 2)
-        |  UNION ALL
-        |  SELECT l.*, rr.* FROM l JOIN rr ON l_last4 = r_last4),
-        |clev AS (SELECT *,
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal
-        |  FROM cand),
-        |sc AS (SELECT c.*,
-        |    (SELECT w_nano FROM w WHERE comparison = 'name' AND level = c.lvl_name)
-        |  + (SELECT w_nano FROM w WHERE comparison = 'seg' AND level = c.lvl_seg)
-        |  + coalesce((SELECT w_nano FROM w WHERE comparison = 'bal' AND level = c.lvl_bal), 0)
-        |  + (SELECT prior_nano FROM pr) AS weight_nano
-        |  FROM clev c),
+        |""".stripMargin +
+      FsSql.scored + """,
         |adj AS (SELECT sc.*,
         |    CASE WHEN lvl_seg = 2 THEN tf.tf_adj_nano ELSE 0 END AS tf_adj_nano,
         |    weight_nano + CASE WHEN lvl_seg = 2 THEN tf.tf_adj_nano ELSE 0 END
@@ -9056,411 +8787,14 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |    AS BIGINT)) AS accepted
         |FROM (SELECT *, row_number() OVER (PARTITION BY r_id
         |    ORDER BY weight_adj_nano DESC, l_id ASC) AS rk FROM adj)
-        |WHERE rk = 1""".stripMargin,
-    "q171_unigram_lm" ->
-      """WITH RECURSIVE wdict AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS cnt, len(word) AS n
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) >= 1 GROUP BY word),
-        |sub AS MATERIALIZED (
-        |  SELECT word, j, l,
-        |    CASE WHEN j + l - 1 <= len(word) THEN substr(word, j, l) END AS piece
-        |  FROM wdict, unnest(generate_series(1, n)) AS gj(j),
-        |    unnest(generate_series(1, 4)) AS gl(l)),
-        |occ AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt
-        |  FROM sub JOIN wdict USING (word) WHERE piece IS NOT NULL GROUP BY 1),
-        |picked AS (
-        |  SELECT piece, cnt FROM occ WHERE len(piece) = 1
-        |  UNION ALL
-        |  SELECT piece, cnt FROM (SELECT piece, cnt FROM occ WHERE len(piece) > 1
-        |    ORDER BY cnt DESC, piece ASC LIMIT 24)),
-        |vocab0 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM picked),
-        |arr1 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab0 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp1 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr1
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp1 WHERE i < n)),
-        |seg1 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp1 WHERE i = n),
-        |cnt1 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab0) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg1 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab1 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt1),
-        |arr2 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab1 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp2 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr2
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp2 WHERE i < n)),
-        |seg2 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp2 WHERE i = n),
-        |cnt2 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab1) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg2 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab2 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt2)
-        |SELECT piece, cnt, score_nano FROM vocab2 ORDER BY piece""".stripMargin,
-    "q172_unigram_encode" ->
-      """WITH RECURSIVE wdict AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS cnt, len(word) AS n
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) >= 1 GROUP BY word),
-        |sub AS MATERIALIZED (
-        |  SELECT word, j, l,
-        |    CASE WHEN j + l - 1 <= len(word) THEN substr(word, j, l) END AS piece
-        |  FROM wdict, unnest(generate_series(1, n)) AS gj(j),
-        |    unnest(generate_series(1, 4)) AS gl(l)),
-        |occ AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt
-        |  FROM sub JOIN wdict USING (word) WHERE piece IS NOT NULL GROUP BY 1),
-        |picked AS (
-        |  SELECT piece, cnt FROM occ WHERE len(piece) = 1
-        |  UNION ALL
-        |  SELECT piece, cnt FROM (SELECT piece, cnt FROM occ WHERE len(piece) > 1
-        |    ORDER BY cnt DESC, piece ASC LIMIT 24)),
-        |vocab0 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM picked),
-        |arr1 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab0 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp1 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr1
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp1 WHERE i < n)),
-        |seg1 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp1 WHERE i = n),
-        |cnt1 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab0) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg1 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab1 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt1),
-        |arr2 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab1 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp2 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr2
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp2 WHERE i < n)),
-        |seg2 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp2 WHERE i = n),
-        |cnt2 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab1) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg2 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab2 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt2),
-        |arr3 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab2 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp3 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr3
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp3 WHERE i < n))
+        |WHERE rk = 1""".stripMargin),
+    "q171_unigram_lm" -> (UnigramSql.trained +
+      "\nSELECT piece, cnt, score_nano FROM vocab2 ORDER BY piece"),
+    "q172_unigram_encode" -> (UnigramSql.encoded + """
         |SELECT word, cnt, CAST(len(p0) AS INT) AS n_pieces,
         |  array_to_string(p0, '+') AS seg, s0 AS score_nano
-        |FROM dp3 WHERE i = n ORDER BY word""".stripMargin,
-    // The unigram DPs (q171/q172/q173) are RECURSIVE CTEs (forward
-    // Viterbi, state carried in plain BIGINT/VARCHAR[] columns) rather
-    // than unrolled list_reduce folds: DuckDB 1.0.0's list_reduce lambda
-    // nondeterministically corrupts STRUCT accumulators once the query
-    // chains ~3 DP instances (round 12: q173's seg3 returned another
-    // row's pieces, different row per run — 'customer' segmented as
-    // 'stream' in one run, 'column' in another; round 13's gate then
-    // caught the same flake in q172's third DP, green through round 12
-    // by luck). The recursive form has no lambda accumulator at all, so
-    // the whole corruption family is out of reach; tie-breaks (longest
-    // piece wins on equal score) and the unreachable-cell sentinel match
-    // the fold DP exactly — verified value-identical to the engine at
-    // both scales over repeated runs.
-    "q173_unigram_prune" ->
-      """WITH RECURSIVE wdict AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS cnt, len(word) AS n
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) >= 1 GROUP BY word),
-        |sub AS MATERIALIZED (
-        |  SELECT word, j, l,
-        |    CASE WHEN j + l - 1 <= len(word) THEN substr(word, j, l) END AS piece
-        |  FROM wdict, unnest(generate_series(1, n)) AS gj(j),
-        |    unnest(generate_series(1, 4)) AS gl(l)),
-        |occ AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt
-        |  FROM sub JOIN wdict USING (word) WHERE piece IS NOT NULL GROUP BY 1),
-        |picked AS (
-        |  SELECT piece, cnt FROM occ WHERE len(piece) = 1
-        |  UNION ALL
-        |  SELECT piece, cnt FROM (SELECT piece, cnt FROM occ WHERE len(piece) > 1
-        |    ORDER BY cnt DESC, piece ASC LIMIT 24)),
-        |vocab0 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM picked),
-        |arr1 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab0 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp1 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr1
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp1 WHERE i < n)),
-        |seg1 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp1 WHERE i = n),
-        |cnt1 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab0) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg1 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab1 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt1),
-        |arr2 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab1 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp2 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr2
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp2 WHERE i < n)),
-        |seg2 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp2 WHERE i = n),
-        |cnt2 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab1) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg2 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab2 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt2),
+        |FROM dp3 WHERE i = n ORDER BY word""".stripMargin),
+    "q173_unigram_prune" -> (UnigramSql.trained + """,
         |vocabp AS MATERIALIZED (
         |  SELECT piece, cnt,
         |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
@@ -9470,59 +8804,13 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |    UNION ALL
         |    SELECT piece, cnt FROM (SELECT piece, cnt FROM vocab2
         |      WHERE len(piece) > 1 ORDER BY cnt DESC, piece ASC LIMIT 12))),
-        |arr3 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocabp v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp3 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr3
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp3 WHERE i < n)),
-        |seg3 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp3 WHERE i = n),
-        |cnt3 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocabp) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg3 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab3 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt3)
-        |SELECT piece, cnt, score_nano FROM vocab3 ORDER BY piece""".stripMargin,
+        |""".stripMargin +
+      UnigramSql.emRound(3, "vocabp") +
+      "\nSELECT piece, cnt, score_nano FROM vocab3 ORDER BY piece"),
     // q175: stage-7 accounting replay — the q172 recursive-CTE encode
     // oracle extended with the per-doc piece-count join (no new DP
     // instances; sums CAST to BIGINT so no HUGEINT reaches the hash).
-    "q175_doc_pieces" -> (q175UnigramDpSql + "," + """
+    "q175_doc_pieces" -> (UnigramSql.encoded + "," + """
         |wp AS MATERIALIZED (
         |  SELECT word, CAST(len(p0) AS BIGINT) AS np FROM dp3 WHERE i = n),
         |docw AS (
@@ -9532,7 +8820,7 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |  CAST(sum(np) AS BIGINT) AS n_pieces
         |FROM docw JOIN wp USING (word) WHERE len(word) >= 1
         |GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin),
-    "q191_lm_quality" -> (q175UnigramDpSql + "," + """
+    "q191_lm_quality" -> (UnigramSql.encoded + "," + """
         |wp AS MATERIALIZED (
         |  SELECT word, CAST(len(p0) AS BIGINT) AS np, s0 AS ws
         |  FROM dp3 WHERE i = n),
@@ -9575,159 +8863,7 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
     // q176: the q175 accounting packed into 512-PIECE context windows
     // (window-sum replay; every sum/offset CAST to BIGINT so no
     // HUGEINT reaches the hash).
-    "q176_pack_by_pieces" ->
-      """WITH RECURSIVE wdict AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS cnt, len(word) AS n
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) >= 1 GROUP BY word),
-        |sub AS MATERIALIZED (
-        |  SELECT word, j, l,
-        |    CASE WHEN j + l - 1 <= len(word) THEN substr(word, j, l) END AS piece
-        |  FROM wdict, unnest(generate_series(1, n)) AS gj(j),
-        |    unnest(generate_series(1, 4)) AS gl(l)),
-        |occ AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt
-        |  FROM sub JOIN wdict USING (word) WHERE piece IS NOT NULL GROUP BY 1),
-        |picked AS (
-        |  SELECT piece, cnt FROM occ WHERE len(piece) = 1
-        |  UNION ALL
-        |  SELECT piece, cnt FROM (SELECT piece, cnt FROM occ WHERE len(piece) > 1
-        |    ORDER BY cnt DESC, piece ASC LIMIT 24)),
-        |vocab0 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM picked),
-        |arr1 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab0 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp1 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr1
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp1 WHERE i < n)),
-        |seg1 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp1 WHERE i = n),
-        |cnt1 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab0) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg1 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab1 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt1),
-        |arr2 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab1 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp2 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr2
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp2 WHERE i < n)),
-        |seg2 AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp2 WHERE i = n),
-        |cnt2 AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM vocab1) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg2 s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab2 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt2),
-        |arr3 AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(-23025850930 AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN vocab2 v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp3 AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr3
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(-4611686018427387904 AS BIGINT)) AS c4
-        |    FROM dp3 WHERE i < n)),
+    "q176_pack_by_pieces" -> (UnigramSql.encoded + "," + """
         |wp AS MATERIALIZED (
         |  SELECT word, CAST(len(p0) AS BIGINT) AS np FROM dp3 WHERE i = n),
         |docw AS (
@@ -9748,7 +8884,7 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |  CASE WHEN n_pieces = 0 THEN CAST(0 AS BIGINT)
         |    ELSE CAST(floor((end_off - 1) / 512.0)
         |      - floor((end_off - n_pieces) / 512.0) + 1 AS BIGINT) END AS n_chunks
-        |FROM off ORDER BY doc_id""".stripMargin,
+        |FROM off ORDER BY doc_id""".stripMargin),
     // Metaphone replay: per-word codes from the single-level VARCHAR-
     // accumulator fold in Phonetics.metaphoneWordSql (the q163 fold
     // discipline — no struct accumulators), computed once over the 24

@@ -91,7 +91,7 @@ object BigramLm {
     * n_backoff, score_nano)`. */
   def scoreDocs(df: DataFrame, idCol: String, textCol: String,
                 trainPred: Column, backoff: Double = 0.4,
-                unkNano: Long = -23025850930L): DataFrame = {
+                unkNano: Long = Unigram.UnkNano): DataFrame = {
     val bg = bigramStream(df, idCol, textCol)
     val (bscore, uscore) = trainFromStream(bg.where(trainPred))
     val backoffNano = round(log(lit(backoff)) * 1e9).cast("long")

@@ -14,27 +14,38 @@ import org.apache.spark.sql.functions._
   * (`round(ln(p)·1e9)`), so the Viterbi DP is EXACT integer arithmetic —
   * a float DP would tie-break on ulps and diverge across engines; the
   * integer DP with an explicit tie rule (equal score → smaller start =
-  * longer last piece) replays bit-for-bit in DuckDB's list_reduce twin
-  * (q171). EM round trips (counts → ln → nanos) follow the q126 rule:
-  * one ln per cell from exact integer counts, rounded once.
+  * longer last piece) replays bit-for-bit in DuckDB's recursive-CTE twin
+  * (`SparkEntry.UnigramSql`). EM round trips (counts → ln → nanos)
+  * follow the q126 rule: one ln per cell from exact integer counts,
+  * rounded once.
   *
   * Spark-first shape — NO UDFs anywhere:
   *  - candidate piece scores come from an equi-JOIN of exploded
   *    (word, start, len) substrings against the vocab table (vocab can be
   *    any size — nothing broadcasts into a lambda closure), re-aggregated
   *    into one flat score array per word;
-  *  - the DP itself is a declarative `aggregate` HOF over positions with
-  *    the candidate window UNROLLED (≤ maxPieceLen candidates per
-  *    position) — whole-stage codegen, no interpreted path;
+  *  - the DP itself is the native [[graft.plans.UnigramViterbi]]
+  *    expression (`CodegenFallback`): one node per word row running the
+  *    integer DP in Scala, bit-identical to the SQL twin's recursive CTE;
   *  - the unit of work is the word DICTIONARY (distinct words ×
   *    frequency), which is vocabulary-bounded no matter the corpus size —
   *    the same reduction SentencePiece itself relies on.
+  *
+  * The graded recipe (q171-q173, q175/q176/q191 and the corpus capstone)
+  * is stated once: [[wordDict]] → [[train]] (seed of all characters plus
+  * the top 24 substrings, two EM rounds) → [[encodeWords]] /
+  * [[piecesPerWord]].
   */
 object Unigram {
 
+  /** ln(1e-10) in nanos: the score of a single character the vocabulary
+    * lacks. The SQL twins print it into their text (q201's bigram
+    * oracle spells it out). */
+  val UnkNano: Long = -23025850930L
+
   /** Very negative sentinel for the DP fold — far below any real score
     * (scores are ≥ n·unkNano ≈ −2·10¹¹ for fixture-sized words) but safe
-    * from overflow. Mirrored literally in the SQL twin. */
+    * from overflow. The SQL twin prints it into its text. */
   val NegInf: Long = -4611686018427387904L
 
   /** (word, start j, len l, piece) for every substring of length
@@ -180,4 +191,47 @@ object Unigram {
         .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt")),
       alpha)
   }
+
+  /** Every whitespace word of `docs`' `text` column, one row per
+    * occurrence, with the `keep` columns alongside; empty tokens (double
+    * spaces) dropped. */
+  private def docWords(docs: DataFrame, keep: Seq[String]): DataFrame =
+    docs.select(
+        keep.map(col) :+ explode(split(col("text"), " ")).as("word"): _*)
+      .where(length(col("word")) >= 1)
+
+  /** The word dictionary (word, cnt) of `docs`' `text`, checkpointed:
+    * it is tiny by contract and every EM round reads it, so round R+1's
+    * plan does not carry the corpus scan. */
+  def wordDict(docs: DataFrame): DataFrame =
+    docWords(docs, Nil)
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
+      .localCheckpoint()
+
+  /** The trained vocabulary (piece, cnt, score_nano) of a [[wordDict]]:
+    * all characters plus the top 24 substrings, then two hard-EM rounds.
+    * The seed and round 1 are checkpointed so each round's plan holds one
+    * Viterbi pass, not the whole chain; the last round is left lazy for
+    * the caller, who checkpoints it if it reads it more than once. */
+  def train(words: DataFrame): DataFrame =
+    (1 to 2).foldLeft(seedVocab(words, "word", "cnt", k = 24)) { (v, _) =>
+      emRound(words, "word", "cnt", v.localCheckpoint(), 4, UnkNano)
+    }
+
+  /** Each dictionary word's Viterbi segmentation under `vocab`: the
+    * [[wordDict]] columns plus `pieces` and `score_nano`. */
+  def encodeWords(words: DataFrame, vocab: DataFrame): DataFrame =
+    viterbiSegment(scoreArrays(words, "word", vocab, 4, UnkNano), "word", 4)
+
+  /** Every word occurrence of `docs` (with its `keep` columns) joined to
+    * its dictionary word's piece count `__wp` and path score `__ws` under
+    * `vocab`. The dictionary is encoded once; the corpus is read once
+    * more, by this join, whatever its size. Callers sum per document. */
+  def piecesPerWord(docs: DataFrame, keep: Seq[String], words: DataFrame,
+                    vocab: DataFrame): DataFrame =
+    docWords(docs, keep).join(
+      encodeWords(words, vocab).select(col("word"),
+        size(col("pieces")).cast("long").as("__wp"),
+        col("score_nano").as("__ws")),
+      Seq("word"))
 }
