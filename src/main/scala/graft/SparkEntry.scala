@@ -8766,17 +8766,16 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |  (SELECT CAST(round(sp / n) AS BIGINT) FROM t3) AS lam_micro
         |FROM m3 JOIN w4 ON m3.comparison = w4.comparison AND m3.level = w4.level
         |ORDER BY m3.comparison, m3.level""".stripMargin),
-    "q170_fs_tf_adjust" -> (FsSql.weights + """,
-        |tf AS (SELECT value,
+    "q170_fs_tf_adjust" -> (Seq(FsSql.weights,
+      """tf AS (SELECT value,
         |    CAST(round((ln(((SELECT c_u FROM j WHERE comparison = 'seg' AND level = 2) + 0.5)
         |              / ((SELECT n_u FROM j WHERE comparison = 'seg' AND level = 2) + 0.5 * 2))
         |          - ln(c / n)) / ln(2.0) * 1e9) AS BIGINT) AS tf_adj_nano
         |  FROM (SELECT value, CAST(count(*) AS BIGINT) AS c,
         |      CAST(sum(count(*)) OVER () AS BIGINT) AS n
         |    FROM (SELECT l_seg AS value FROM l UNION ALL SELECT r_seg FROM rr)
-        |    GROUP BY value)),
-        |""".stripMargin +
-      FsSql.scored + """,
+        |    GROUP BY value))""".stripMargin,
+      FsSql.scored).mkString(",\n") + """,
         |adj AS (SELECT sc.*,
         |    CASE WHEN lvl_seg = 2 THEN tf.tf_adj_nano ELSE 0 END AS tf_adj_nano,
         |    weight_nano + CASE WHEN lvl_seg = 2 THEN tf.tf_adj_nano ELSE 0 END
@@ -8794,8 +8793,8 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |SELECT word, cnt, CAST(len(p0) AS INT) AS n_pieces,
         |  array_to_string(p0, '+') AS seg, s0 AS score_nano
         |FROM dp3 WHERE i = n ORDER BY word""".stripMargin),
-    "q173_unigram_prune" -> (UnigramSql.trained + """,
-        |vocabp AS MATERIALIZED (
+    "q173_unigram_prune" -> (Seq(UnigramSql.trained,
+      """vocabp AS MATERIALIZED (
         |  SELECT piece, cnt,
         |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
         |      * 1e9) AS BIGINT) AS score_nano
@@ -8803,9 +8802,8 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
         |    SELECT piece, cnt FROM vocab2 WHERE len(piece) = 1
         |    UNION ALL
         |    SELECT piece, cnt FROM (SELECT piece, cnt FROM vocab2
-        |      WHERE len(piece) > 1 ORDER BY cnt DESC, piece ASC LIMIT 12))),
-        |""".stripMargin +
-      UnigramSql.emRound(3, "vocabp") +
+        |      WHERE len(piece) > 1 ORDER BY cnt DESC, piece ASC LIMIT 12)))""".stripMargin,
+      UnigramSql.emRound(3, "vocabp")).mkString(",\n") +
       "\nSELECT piece, cnt, score_nano FROM vocab3 ORDER BY piece"),
     // q175: stage-7 accounting replay — the q172 recursive-CTE encode
     // oracle extended with the per-doc piece-count join (no new DP
