@@ -229,28 +229,6 @@ object Etl {
     Field("target_text", FieldType.Str, required = true)),
     primaryKey = Seq("doc_id"))
 
-  /** The training-corpus capstone: the WHOLE LLM-data pipeline as one
-    * lazy lineage over the documents fixture —
-    *
-    *   near-dup canonicalization (3-gram Jaccard pairs → connected
-    *   components → keep cluster minimum) → FRACTION-based
-    *   decontamination against a planted benchmark slice (4-gram overlap
-    *   share ≥ 10% drops, GPT-3 appendix C; broadcast eval grams) →
-    *   quality filter (composite score) → domain-mixture selection to
-    *   per-language token budgets (half of each language's surviving
-    *   tokens, deterministic hash order) → leakage-stable deterministic
-    *   split → context-window packing —
-    *
-    * each stage consuming the previous stage's frame. Catalyst sees one
-    * plan: column pruning reaches the scan through all seven stages, the
-    * gram/pair machinery shuffles on its content keys, the mixture stage
-    * windows only boundary buckets, and the final frame is
-    * supplier-of-training-batches shaped (split-partitioned parquet).
-    * The Bench entry `corpus_capstone` times build + write + validation
-    * end-to-end — the data-pipeline twin of [[capstone]]. */
-  def buildCorpusWide(spark: SparkSession, sfDir: String): DataFrame =
-    buildCorpusOutputs(spark, sfDir)(corpusWide.name)
-
   /** THE corpus capstone's near-dup edge set — 3-gram Jaccard ≥ 1/4 pairs
     * as (src, dst) — extracted so consumers beyond the canonicalization
     * stage (the q211 community/density report) read the IDENTICAL edge
@@ -261,9 +239,28 @@ object Etl {
         n = 3, thresholdNum = 1, thresholdDen = 4)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
 
-  /** Both corpus capstone outputs as one shared lineage:
-    * `out_corpus_wide` (per-doc accounting) and `out_corpus_pairs` (the
-    * model-ready span-corruption (input, target) pairs — stage 8). */
+  /** The training-corpus capstone: the WHOLE LLM-data pipeline as one
+    * lazy lineage over the documents fixture —
+    *
+    *   near-dup canonicalization (3-gram Jaccard pairs → connected
+    *   components → keep cluster minimum) → FRACTION-based
+    *   decontamination against a planted benchmark slice (4-gram overlap
+    *   share ≥ 10% drops, GPT-3 appendix C; broadcast eval grams) →
+    *   quality filter (composite score) → domain-mixture selection to
+    *   per-language token budgets (half of each language's surviving
+    *   tokens, deterministic hash order) → leakage-stable deterministic
+    *   split → context-window packing → unigram piece counts →
+    *   span-corruption (input, target) pairs —
+    *
+    * each stage consuming the previous stage's frame. Catalyst sees one
+    * plan: column pruning reaches the scan through every stage, the
+    * gram/pair machinery shuffles on its content keys, the mixture stage
+    * windows only boundary buckets, and the final frame is
+    * supplier-of-training-batches shaped (split-partitioned parquet).
+    * Returns both outputs of the shared lineage: `out_corpus_wide`
+    * (per-doc accounting) and `out_corpus_pairs` (the model-ready pairs).
+    * The Bench entry `corpus_capstone` times build + write + validation
+    * end-to-end — the data-pipeline twin of [[capstone]]. */
   def buildCorpusOutputs(spark: SparkSession,
                          sfDir: String): Map[String, DataFrame] = {
     import graft.dedup.NearDup
@@ -310,11 +307,12 @@ object Etl {
       .select("doc_id", "lang", "n_tokens")
       .localCheckpoint()
 
-    // 4. mixture: half of each surviving language's tokens, hash order
-    //    (5-row bounded collect — the per-domain budget dimension)
+    // 4. mixture: half of each surviving language's tokens, hash order.
+    //    The budgets stay a lazy aggregate of the scored frame: the
+    //    mixture's cutoffs are part of the kept frame's plan, so no
+    //    action runs between the two checkpoints.
     val budgets = scoredMeta.groupBy(col("lang"))
-      .agg((sum(col("n_tokens")) / 2).cast("long").as("__b"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .agg((sum(col("n_tokens")) / 2).cast("long").as("budget"))
     // the kept ACCOUNTING frame fans out to the split input, the final
     // wide select and the id filter of every text consumer — narrow
     // (doc_id, lang, n_tokens), checkpointed so the mixture window never

@@ -2619,9 +2619,10 @@ object SparkEntry {
     val docs = t(s, dir, "documents")
       .withColumn("n_tokens",
         graft.text.TextAnalysis.tokenCount(col("text")).cast("long"))
+    import s.implicits._
     graft.operators.Sampling.mixtureSelect(docs, "doc_id", "lang",
-        "n_tokens", budgets = Map("en" -> 5000L, "zh" -> 2000L,
-          "es" -> 2000L, "de" -> 1500L))
+        "n_tokens", budgets = Seq("en" -> 5000L, "zh" -> 2000L,
+          "es" -> 2000L, "de" -> 1500L).toDF("lang", "budget"))
       .select(col("doc_id"), col("lang"), col("n_tokens"),
         col("mix_bucket"), col("selected"))
   }

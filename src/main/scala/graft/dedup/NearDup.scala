@@ -91,28 +91,14 @@ object NearDup {
     * anywhere in the eval corpus (per-doc shingle dedup is local inside
     * `WordShingles`, so a gram repeated in one doc counts once).
     *
-    * Scale shape: eval benchmarks are tiny next to a 100 TB corpus (MBs of
-    * distinct grams), so the eval side is collapsed to a distinct-gram dim
-    * and BROADCAST — the corpus shingles are never shuffled by gram, and
-    * the per-doc hit count is a partial-agg-friendly null-skipping count
-    * grouped on the doc id. The final left join restores docs too short to
-    * shingle (< n words) with a zero count; its probe side carries ids
-    * only and both sides hash on the id, so no wide data moves twice. */
+    * The any-hit projection of [[contaminationReport]]: the same
+    * broadcast eval-gram dimension and per-doc hit count, with the unused
+    * per-doc gram count pruned from the plan. */
   def decontaminate(train: DataFrame, eval: DataFrame, idCol: String,
-                    textCol: String, n: Int): DataFrame = {
-    val evalGrams = eval
-      .select(explode(graft.plans.WordShingles(col(textCol), n)).as("shingle"))
-      .distinct()
-      .withColumn("__hit", lit(1))
-    val hits = wordShingles(train, idCol, textCol, n)
-      .join(broadcast(evalGrams), Seq("shingle"), "left")
-      .groupBy(col(idCol))
-      .agg(count(col("__hit")).as("n_eval_hits"))
-    train.select(col(idCol))
-      .join(hits, Seq(idCol), "left")
-      .withColumn("n_eval_hits", coalesce(col("n_eval_hits"), lit(0L)))
-      .withColumn("contaminated", col("n_eval_hits") >= 1)
-  }
+                    textCol: String, n: Int): DataFrame =
+    contaminationReport(train, eval, idCol, textCol, n)
+      .select(col(idCol), col("n_eval_hits"),
+        (col("n_eval_hits") >= 1).as("contaminated"))
 
   /** Contamination REPORT — the fraction-based analysis published with
     * GPT-3 (arXiv:2005.14165 appendix C reports the PERCENTAGE of each
@@ -121,12 +107,20 @@ object NearDup {
     * overlap share as exact integer nanos (1e9·hits/grams, floor), and
     * the `dirty` flag at `dirtyAtNano` (default 10%) — the triage knob
     * between [[decontaminate]]'s any-hit drop (recall-safe, over-drops
-    * boilerplate) and keeping everything. Same scale shape as
-    * [[decontaminate]]: the eval gram dim broadcasts, corpus shingles
-    * never shuffle by gram, one hash aggregation on the doc id. The
-    * nano share divides two exact integers ≤ 1e9·doc-length — floor of
-    * a double quotient whose distance from any integer is ≥ 1/n_grams,
-    * far above double error, so both engines floor identically. */
+    * boilerplate) and keeping everything.
+    *
+    * Scale shape: eval benchmarks are tiny next to a 100 TB corpus (MBs of
+    * distinct grams), so the eval side is collapsed to a distinct-gram dim
+    * and BROADCAST — the corpus shingles are never shuffled by gram, and
+    * the per-doc counts are partial-agg-friendly counts grouped on the doc
+    * id (per-doc shingle dedup is local inside `WordShingles`, so a gram
+    * repeated in one doc counts once). The final left join restores docs
+    * too short to shingle (< n words) with zero counts; its probe side
+    * carries ids only and both sides hash on the id, so no wide data
+    * moves twice. The nano share divides two exact integers ≤
+    * 1e9·doc-length — floor of a double quotient whose distance from any
+    * integer is ≥ 1/n_grams, far above double error, so both engines
+    * floor identically. */
   def contaminationReport(train: DataFrame, eval: DataFrame, idCol: String,
                           textCol: String, n: Int,
                           dirtyAtNano: Long = 100000000L): DataFrame = {

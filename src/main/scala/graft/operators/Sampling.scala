@@ -194,59 +194,31 @@ object Sampling {
     * order is total, so the selected set is a pure function of the corpus.
     *
     * Scale shape — the naive form (one global-order window) collapses the
-    * corpus into a single partition. Instead, exact three-step:
-    *   1. coarse score buckets `floor(score·nBuckets)` → per-bucket token
-    *      sums (tiny agg, ≤ nBuckets+1 rows collected — bounded driver
-    *      state, same pattern as the IVF centroid collect);
-    *   2. the driver walks buckets best-first to find the single cutoff
-    *      bucket where the budget line falls;
-    *   3. docs in better buckets are kept by a narrow filter (no
-    *      shuffle); ONLY the cutoff bucket — 1/nBuckets of the corpus in
-    *      expectation — is exactly ranked by a window to place the line.
-    * Because floor is monotone, bucket order refines to the global order,
-    * so the result is IDENTICAL to the naive global window (the SQL
-    * oracle replays the naive form).
+    * corpus into a single partition. Instead, the one-domain case of
+    * [[cutoffSelect]]: coarse score buckets `floor(score·nBuckets)`,
+    * walked best-first, find the cutoff bucket where the budget line
+    * falls; docs in better buckets are kept by a narrow filter and ONLY
+    * the cutoff bucket — 1/nBuckets of the corpus in expectation — is
+    * exactly ranked by a window to place the line. Because floor is
+    * monotone, bucket order refines to the global order, so the result
+    * is IDENTICAL to the naive global window (the SQL oracle replays the
+    * naive form). The budget is a one-row literal frame, so building the
+    * plan runs no job.
     *
     * `scoreCol` must be in [0, 1] (e.g. [[graft.text.TextAnalysis
-    * .qualityScore]]). Output: all rows with a `selected` flag. */
+    * .qualityScore]]); a null score fails the query. Output: all rows
+    * with a `selected` flag. */
   def budgetSelect(df: DataFrame, idCol: String, tokenCol: String,
                    scoreCol: String, budget: Long,
                    nBuckets: Int = 1000): DataFrame = {
     require(budget >= 0 && nBuckets >= 1, "need budget >= 0, nBuckets >= 1")
-    val bucket = floor(col(scoreCol) * nBuckets).cast("long")
-    val base = df.withColumn("__bucket", bucket)
-    val totals = base.groupBy(col("__bucket"))
-      .agg(sum(col(tokenCol)).cast("long").as("__toks"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(-_._1) // best bucket first
-    var before = 0L
-    var cutoff = Long.MinValue // all buckets better than this are full-kept
-    var cutoffBefore = 0L
-    val it = totals.iterator
-    while (cutoff == Long.MinValue && it.hasNext) {
-      val (b, toks) = it.next()
-      if (before + toks >= budget) { cutoff = b; cutoffBefore = before }
-      before += toks
-    }
-    if (cutoff == Long.MinValue)
-      base.withColumn("selected", lit(true)).drop("__bucket")
-    else {
-      val boundary = base.where(col("__bucket") === cutoff)
-      val W = org.apache.spark.sql.expressions.Window
-      val w = W.partitionBy(col("__bucket"))
-        .orderBy(col(scoreCol).desc, col(idCol).asc)
-        .rowsBetween(W.unboundedPreceding, -1)
-      val boundaryMarked = boundary
-        .withColumn("__cum_before",
-          coalesce(sum(col(tokenCol)).over(w), lit(0L)))
-        .withColumn("selected",
-          col("__cum_before") + cutoffBefore < budget)
-        .drop("__cum_before")
-      base.where(col("__bucket") =!= cutoff)
-        .withColumn("selected", col("__bucket") > cutoff)
-        .unionByName(boundaryMarked)
-        .drop("__bucket")
-    }
+    val sp = df.sparkSession
+    import sp.implicits._
+    val score = nonNull(col(scoreCol),
+      s"budgetSelect: null value in column $scoreCol")
+    cutoffSelect(df, lit(0), -floor(score * nBuckets).cast("long"),
+      Seq(col(scoreCol).desc, col(idCol).asc), tokenCol,
+      Seq((0, budget)).toDF("domain", "budget"))
   }
 
   /** Domain-mixture selection to per-domain token budgets — the corpus
@@ -258,20 +230,19 @@ object Sampling {
     * stay under the budget — rerun-stable, backfill-stable, and
     * engine-replayable (the hash IS the shuffle).
     *
-    * Scale shape — the [[budgetSelect]] trick per domain: docs land in
-    * `nBuckets` ranges of the hash (high bits, so bucket order ==
-    * hash order); per-(domain, bucket) token totals are one hash
-    * aggregation collected driver-side (bounded: domains × nBuckets),
-    * the cutoff bucket per domain is driver arithmetic, and only each
-    * domain's ONE boundary bucket pays a row-level window. Everything
-    * else is a map-side comparison — no global sort, no per-domain
-    * full window, skew-immune (hash buckets are uniform within every
-    * domain).
+    * Scale shape — [[cutoffSelect]] per domain: docs land in `nBuckets`
+    * ranges of the hash (high bits, so bucket order == hash order), and
+    * only each domain's ONE boundary bucket pays a row-level window.
+    * Everything else is a comparison against a broadcast cutoff — no
+    * global sort, no per-domain full window, skew-immune (hash buckets
+    * are uniform within every domain) — and the budgets may themselves be
+    * a lazy aggregate of the corpus: nothing reaches the driver.
     *
-    * Domains absent from `budgets` are dropped (selected = false).
-    * Output: input + (mix_bucket, selected). */
+    * `budgets` is (domain, budget), one row per domain, matched against
+    * `strataCol`. Domains absent from it are dropped (selected = false);
+    * a null id fails the query. Output: input + (mix_bucket, selected). */
   def mixtureSelect(df: DataFrame, idCol: String, strataCol: String,
-                    tokenCol: String, budgets: Map[String, Long],
+                    tokenCol: String, budgets: DataFrame,
                     salt: String = "mix", nBuckets: Int = 1024): DataFrame = {
     require(nBuckets >= 2 && (nBuckets & (nBuckets - 1)) == 0,
       "nBuckets must be a power of two (bucket = high hash bits)")
@@ -280,51 +251,91 @@ object Sampling {
       concat(lit(s"${salt}_"), col(idCol).cast("string")))
     val base = df.withColumn("__u", u)
       .withColumn("mix_bucket", shiftright(col("__u"), shiftBits))
-    // bounded collect: ≤ |domains| × nBuckets rows of (domain, bucket,
-    // token total) — the budgetSelect pattern, per domain
-    val totals = base
-      .groupBy(col(strataCol).cast("string").as("__d"), col("mix_bucket"))
-      .agg(sum(col(tokenCol)).cast("long").as("__t"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val byDomain = totals.groupBy(_._1)
-    // cutoff bucket per domain: first bucket (ascending hash order) at
-    // which the running total reaches the budget; None = whole domain fits
-    val cuts: Map[String, Option[(Long, Long)]] = budgets.map {
-      case (d, budget) =>
-        var before = 0L
-        var cut: Option[(Long, Long)] = None
-        for ((_, b, t) <- byDomain.getOrElse(d, Array.empty[(String, Long, Long)])
-               .sortBy(_._2) if cut.isEmpty) {
-          if (before + t >= budget) cut = Some((b, before))
-          before += t
-        }
-        d -> cut
-    }
-    val sp = df.sparkSession
-    import sp.implicits._
-    val cutFrame = broadcast(
-      budgets.toSeq.map { case (d, budget) =>
-        val (cb, cbBefore) = cuts(d).getOrElse((Long.MaxValue, 0L))
-        (d, budget, cb, cbBefore)
-      }.toDF("__d", "__budget", "__cut", "__cut_before"))
-    val joined = base
-      .join(cutFrame, base(strataCol).cast("string") === cutFrame("__d"), "left")
-    val boundary = joined.where(col("mix_bucket") === col("__cut"))
+    cutoffSelect(base, col(strataCol), nonNull(col("mix_bucket"),
+          s"mixtureSelect: null value in column $idCol"),
+        Seq(col("__u").asc, col(idCol).asc), tokenCol, budgets)
+      .drop("__u")
+  }
+
+  /** `c`, failing the query with `msg` on a null. */
+  private def nonNull(c: Column, msg: String): Column =
+    when(c.isNull, raise_error(lit(msg))).otherwise(c)
+
+  /** The budget cutoff behind [[budgetSelect]] and [[mixtureSelect]]:
+    * within each domain, buckets are walked in ascending order to the
+    * first one whose running token total reaches the domain's budget —
+    * the cut. Rows in earlier buckets are kept, rows in later ones are
+    * not, and only the cut bucket's rows pay a row-level window, ordered
+    * by `within`, to place the line. The decision stays in the plan, as
+    * in the q161 oracle: per-(domain, bucket) token totals meet the
+    * budgets in one per-domain aggregate, a running sum over each
+    * domain's buckets finds the cut, and the cuts broadcast back onto the
+    * rows — no collect, no driver loop.
+    *
+    * `budgets` is (domain, budget) by position. A domain missing from it
+    * is dropped, a listed domain whose total is below its budget is kept
+    * whole, and budget 0 keeps nothing. A null domain, a duplicate domain
+    * or a null budget in `budgets` fails the query with a message that
+    * names the column; `bucket` must already fail on a null.
+    * Output: `df` + `selected`. */
+  private def cutoffSelect(df: DataFrame, domain: Column, bucket: Column,
+                           within: Seq[Column], tokenCol: String,
+                           budgets: DataFrame): DataFrame = {
+    require(budgets.columns.length == 2,
+      "budgets must have two columns: (domain, budget)")
+    val Array(bd, bb) = budgets.columns
     val W = org.apache.spark.sql.expressions.Window
-    val w = W.partitionBy(col("__d"))
-      .orderBy(col("__u").asc, col(idCol).asc)
+    val none = lit(null).cast("long")
+    val rows = df.withColumn("__d", domain).withColumn("__b", bucket)
+    // one row per domain: its bucket totals, its budget and the number of
+    // budget rows naming it. The budgets join the totals as a union, so
+    // one aggregate both collects the totals and counts the budgets.
+    val budgetRows = budgets.select(
+      nonNull(col(bd), s"budgets: null value in column $bd").as("__d"),
+      none.as("__b"), none.as("__t"),
+      nonNull(col(bb), s"budgets: null value in column $bb")
+        .cast("long").as("__budget"))
+    val perDomain = rows.groupBy(col("__d"), col("__b"))
+      .agg(sum(col(tokenCol)).cast("long").as("__t"))
+      .withColumn("__budget", none)
+      .unionByName(budgetRows)
+      .groupBy(col("__d"))
+      .agg(array_sort(collect_list(when(col("__b").isNotNull,
+          struct(col("__b"), col("__t"))))).as("__bt"),
+        count(col("__budget")).as("__n"), max(col("__budget")).as("__budget"))
+    // the walk: the totals in bucket order, folded into a running sum whose
+    // first bucket at or over the budget is the cut, with the tokens before
+    // it. A fold over the totals grouped by domain, not a window
+    // partitioned by it: Catalyst drops a constant partition key
+    // (budgetSelect's one domain) and would run the window in one
+    // partition.
+    val walk = aggregate(col("__bt"),
+      struct(lit(0L).as("run"), none.as("cut"), none.as("before")),
+      (acc, x) => {
+        val reached = acc("cut").isNull &&
+          acc("run") + x("__t") >= col("__budget")
+        struct((acc("run") + x("__t")).as("run"),
+          when(reached, x("__b")).otherwise(acc("cut")).as("cut"),
+          when(reached, acc("run")).otherwise(acc("before")).as("before"))
+      })
+    val cuts = perDomain
+      .select(col("__d"), when(col("__n") > 1, raise_error(
+          concat(lit(s"budgets: duplicate value in column $bd: "),
+            col("__d").cast("string")))).otherwise(col("__budget"))
+          .as("__budget"), walk.as("__w"))
+      .select(col("__d"), col("__budget"), col("__w.cut").as("__cut"),
+        col("__w.before").as("__cut_before"))
+    val joined = rows.join(broadcast(cuts), Seq("__d"), "left")
+    val w = W.partitionBy(col("__d"), col("__b")).orderBy(within: _*)
       .rowsBetween(W.unboundedPreceding, -1)
-    val boundaryMarked = boundary
-      .withColumn("__cum_before",
-        coalesce(sum(col(tokenCol)).over(w), lit(0L)))
-      .withColumn("selected",
-        col("__cut_before") + col("__cum_before") < col("__budget"))
-      .drop("__cum_before")
-    joined.where(col("mix_bucket") =!= col("__cut") || col("__cut").isNull)
-      .withColumn("selected",
-        col("__cut").isNotNull && col("mix_bucket") < col("__cut"))
-      .unionByName(boundaryMarked)
-      .drop("__d", "__budget", "__cut", "__cut_before", "__u")
+    val boundary = joined.where(col("__b") === col("__cut"))
+      .withColumn("selected", col("__cut_before") +
+        coalesce(sum(col(tokenCol)).over(w), lit(0L)) < col("__budget"))
+    joined.where(col("__cut").isNull || col("__b") =!= col("__cut"))
+      .withColumn("selected", col("__budget").isNotNull &&
+        (col("__cut").isNull || col("__b") < col("__cut")))
+      .unionByName(boundary)
+      .drop("__d", "__b", "__budget", "__cut", "__cut_before")
   }
 
   /** Weighted sampling WITHOUT replacement, k per stratum — the

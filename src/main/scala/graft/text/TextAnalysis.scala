@@ -541,7 +541,24 @@ object TextAnalysis {
                queryTerms: Seq[String], k: Int,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && k > 0, "need query terms and k > 0")
-    val terms = queryTerms.distinct.map(_.toLowerCase)
+    val scored = bm25TermScores(df, idCol, textCol,
+        queryTerms.distinct.map(_.toLowerCase), k1, b)
+      .groupBy(col(idCol))
+      .agg(round(sum(col("__s")), 4).as("score"),
+        count(lit(1)).as("n_terms_hit"))
+      .orderBy(col("score").desc, col(idCol).asc)
+      .limit(k)
+    scored.select(col(idCol), col("score"), col("n_terms_hit"),
+      row_number().over(org.apache.spark.sql.expressions.Window
+        .orderBy(col("score").desc, col(idCol).asc)).cast("long").as("rank"))
+  }
+
+  /** The BM25 scoring both [[bm25TopK]] and [[bm25TopKBatch]] rank: one
+    * row per matching (doc, term) with its contribution `__s`, in the
+    * scale shape [[bm25TopK]] documents. */
+  private def bm25TermScores(df: DataFrame, idCol: String, textCol: String,
+                             terms: Seq[String], k1: Double,
+                             b: Double): DataFrame = {
     val toks = df.select(col(idCol),
         tokenCount(col(textCol)).cast("long").as("__dl"),
         explode(tokens(col(textCol))).as("__tok"))
@@ -560,8 +577,7 @@ object TextAnalysis {
     // into a second, non-reusable corpus pass.
     val dfreq = tf.where(col("__dl") >= 0L && col("__tf") >= 1L)
       .groupBy(col("__tok")).agg(count(lit(1)).as("__df"))
-    val scored = tf
-      .join(broadcast(dfreq), "__tok")
+    tf.join(broadcast(dfreq), "__tok")
       .crossJoin(broadcast(stats))
       .withColumn("__idf", log(lit(1.0) +
         (col("__n") - col("__df") + 0.5) / (col("__df") + 0.5)))
@@ -570,14 +586,6 @@ object TextAnalysis {
       .withColumn("__s", col("__idf") * (col("__tf") * (k1 + 1)) /
         (col("__tf") + lit(k1) * (lit(1.0) - b +
           lit(b) * col("__dl") / col("__avgdl"))))
-      .groupBy(col(idCol))
-      .agg(round(sum(col("__s")), 4).as("score"),
-        count(lit(1)).as("n_terms_hit"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-    scored.select(col(idCol), col("score"), col("n_terms_hit"),
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("score").desc, col(idCol).asc)).cast("long").as("rank"))
   }
 
   /** Batched multi-query BM25 — the scale form of [[bm25TopK]]: ONE corpus
@@ -601,32 +609,10 @@ object TextAnalysis {
     val qt = queries.flatMap { case (qid, ts) =>
       ts.distinct.map(t => (qid, t.toLowerCase))
     }
-    val allTerms = qt.map(_._2).distinct
     val spark = df.sparkSession
     import spark.implicits._
-    val qtDf = qt.toDF("query_id", "__tok")
-    val toks = df.select(col(idCol),
-        tokenCount(col(textCol)).cast("long").as("__dl"),
-        explode(tokens(col(textCol))).as("__tok"))
-      .where(col("__tok").isin(allTerms: _*))
-    val tf = toks.groupBy(col(idCol), col("__tok"))
-      .agg(first(col("__dl")).as("__dl"), count(lit(1)).as("__tf"))
-    val stats = df.agg(count(lit(1)).as("__n"),
-      sum(tokenCount(col(textCol)).cast("long")).as("__sumdl"))
-    // same always-true guard as bm25TopK: both consumers of the tf shuffle
-    // keep identical column sets so the exchange reuses at runtime
-    val dfreq = tf.where(col("__dl") >= 0L && col("__tf") >= 1L)
-      .groupBy(col("__tok")).agg(count(lit(1)).as("__df"))
-    tf.join(broadcast(dfreq), "__tok")
-      .join(broadcast(qtDf), "__tok")
-      .crossJoin(broadcast(stats))
-      .withColumn("__idf", log(lit(1.0) +
-        (col("__n") - col("__df") + 0.5) / (col("__df") + 0.5)))
-      .withColumn("__avgdl",
-        col("__sumdl").cast("double") / col("__n"))
-      .withColumn("__s", col("__idf") * (col("__tf") * (k1 + 1)) /
-        (col("__tf") + lit(k1) * (lit(1.0) - b +
-          lit(b) * col("__dl") / col("__avgdl"))))
+    bm25TermScores(df, idCol, textCol, qt.map(_._2).distinct, k1, b)
+      .join(broadcast(qt.toDF("query_id", "__tok")), "__tok")
       .groupBy(col("query_id"), col(idCol))
       .agg(round(sum(col("__s")), 4).as("score"),
         count(lit(1)).as("n_terms_hit"))

@@ -210,8 +210,6 @@ class EtlSpec extends SparkSpec {
     assert(actions === Seq(
       "collect" -> false, // ConnectedComponents' routing collect
       ckpt,               // the quality-scored accounting frame
-      "collect" -> false, // per-language token budgets
-      "collect" -> false, // mixtureSelect's per-bucket token totals
       ckpt,               // the kept accounting frame
       ckpt, ckpt, ckpt,   // unigram word dictionary, seed vocab, EM round 1
       ckpt,               // EM round 2, read by the per-word encode

@@ -197,6 +197,9 @@ class PackingSamplingSpec extends SparkSpec {
         .where(col("selected")).select("doc_id").as[Long].collect().toSet
       assert(got == expect, s"budget=$budget")
     }
+    // a corpus with no rows selects nothing and fails nothing
+    assert(Sampling.budgetSelect(df.where(lit(false)), "doc_id", "n_tokens",
+      "score", 50L, nBuckets = 10).count() == 0)
   }
 
   test("mixtureSelect matches the naive per-domain hash-order rule; unlisted domains drop") {
@@ -204,11 +207,13 @@ class PackingSamplingSpec extends SparkSpec {
       (i, s"d${i % 4}", (i % 17 + 1).toLong)
     }
     val df = rows.toDF("doc_id", "domain", "n_tokens")
-    val budgets = Map("d0" -> 0L, "d1" -> 40L, "d2" -> 100000L)
+    // d2 sits under its budget (kept whole); d9 is listed but has no rows
+    val budgetMap = Map("d0" -> 0L, "d1" -> 40L, "d2" -> 100000L, "d9" -> 10L)
+    val budgets = budgetMap.toSeq.toDF("domain", "budget")
     // naive twin: per domain, docs in (salted hash, id) order, keep while
     // cumulative-before < budget; d3 unlisted -> dropped
     val expect = rows.groupBy(_._2).flatMap { case (d, rs) =>
-      budgets.get(d).toSeq.flatMap { budget =>
+      budgetMap.get(d).toSeq.flatMap { budget =>
         var cum = 0L
         rs.map { case (id, _, n) =>
           (graft.functions.PortableHash.hex60(s"mix_$id"), id, n)
@@ -228,6 +233,44 @@ class PackingSamplingSpec extends SparkSpec {
         "n_tokens", budgets, nBuckets = 8)
       .where(col("selected")).select("doc_id").as[Long].collect().toSet
     assert(got2 == got)
+  }
+
+  test("building mixtureSelect and budgetSelect starts no Spark action") {
+    val df = (0L until 40L).map(i => (i, s"d${i % 2}", i % 5 + 1, i / 40.0))
+      .toDF("doc_id", "domain", "n_tokens", "score")
+    val budgets = df.groupBy("domain")
+      .agg((sum(col("n_tokens")) / 2).cast("long").as("budget"))
+    val (_, actions) = actionsDuring {
+      Sampling.mixtureSelect(df, "doc_id", "domain", "n_tokens", budgets)
+      Sampling.budgetSelect(df, "doc_id", "n_tokens", "score", 30L)
+    }
+    assert(actions.isEmpty, actions)
+  }
+
+  test("budget selectors fail on a null bucket or a malformed budgets frame") {
+    def failsWith(msg: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](df.collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null)
+      assert(chain.exists(t => Option(t.getMessage).exists(_.contains(msg))), e)
+    }
+    val df = Seq((Some(1L), "d0", 3L, Some(0.5)), (None, "d0", 2L, None))
+      .toDF("doc_id", "domain", "n_tokens", "score")
+    val one = Seq("d0" -> 10L).toDF("domain", "budget")
+    failsWith("budgetSelect: null value in column score")(
+      Sampling.budgetSelect(df, "doc_id", "n_tokens", "score", 3L))
+    failsWith("mixtureSelect: null value in column doc_id")(
+      Sampling.mixtureSelect(df, "doc_id", "domain", "n_tokens", one))
+    val ok = df.where(col("doc_id").isNotNull)
+    failsWith("budgets: duplicate value in column domain: d0")(
+      Sampling.mixtureSelect(ok, "doc_id", "domain", "n_tokens",
+        Seq("d0" -> 10L, "d0" -> 20L).toDF("domain", "budget")))
+    failsWith("budgets: null value in column budget")(
+      Sampling.mixtureSelect(ok, "doc_id", "domain", "n_tokens",
+        Seq(("d0", Option.empty[Long])).toDF("domain", "budget")))
+    failsWith("budgets: null value in column domain")(
+      Sampling.mixtureSelect(ok, "doc_id", "domain", "n_tokens",
+        Seq((Option.empty[String], 10L)).toDF("domain", "budget")))
   }
 
   test("weightedSample matches driver-side ES ranking and is partition-stable") {
