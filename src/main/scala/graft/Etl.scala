@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.checks.CheckRunner
 import graft.checks.CheckRunner._
 import graft.functions.AggFunctions._
-import graft.operators.{Allocation, Dedup, Harvest}
+import graft.operators.{Allocation, Dedup, Harvest, PlantParts}
 import graft.schema.{Field, FieldType, Resource}
 import graft.sources.ParquetSink
 
@@ -85,10 +85,11 @@ object Etl {
     * (orderkey for the ownership window, suppkey×year for the metric
     * rollup); every dimension join is a broadcast; the plant-parts stage
     * re-aggregates the ALREADY-REDUCED metrics frame (supplier×year
-    * cardinality), so the three grains cost three small aggregations,
-    * not three corpus scans. */
+    * cardinality) in one aggregation over all three grains, not three
+    * corpus scans. Stages 2 and 4 call the operators their graded twins
+    * call (q12's `Allocation.quantityShares`, q157's `PlantParts`), so a
+    * change to either lands once. */
   def buildWide(spark: SparkSession, sfDir: String): Map[String, DataFrame] = {
-    import org.apache.spark.sql.expressions.Window
     val lineitem = Tables.load(spark, sfDir, "lineitem")
     val orders = Tables.load(spark, sfDir, "orders")
     val supplier = Tables.load(spark, sfDir, "supplier")
@@ -113,21 +114,13 @@ object Etl {
       roundScale = Map("acctbal" -> -1))
 
     // 2. ALLOCATION: per-(order, supplier) quantity-share ownership
-    //    fractions, then order totals scaled by ownership (q12's shape);
-    //    the groupBy clustering and the fraction window share one
-    //    hash(l_orderkey) exchange
-    val own = lineitem
-      .repartition(col("l_orderkey"))
-      .groupBy(col("l_orderkey").as("o_orderkey"), col("l_suppkey"))
-      .agg(sum(col("l_quantity")).as("qty"))
-      .withColumn("fraction_owned",
-        col("qty") / sum(col("qty")).over(
-          Window.partitionBy(col("o_orderkey"))))
+    //    fractions, then order totals scaled by ownership (q12's
+    //    Allocation.quantityShares, one hash(l_orderkey) exchange)
     val alloc = Allocation.scaleByOwnership(
       orders.select(col("o_orderkey"),
         year(col("o_orderdate")).as("order_year"), col("o_totalprice")),
-      own, keys = Seq("o_orderkey"), fracCol = "fraction_owned",
-      dataCols = Seq("o_totalprice"))
+      Allocation.quantityShares(lineitem), keys = Seq("o_orderkey"),
+      fracCol = "fraction_owned", dataCols = Seq("o_totalprice"))
 
     // 3. MCOE: per-(supplier, year) ratio metrics over the ALLOCATED
     //    revenue (stage 2's frame), joined to the HARVESTED entities
@@ -166,31 +159,17 @@ object Etl {
     // NULL nationkey; its nation/region grain rows land in an explicit
     // "unknown" bucket so the required part_key check holds for any
     // data distribution
-    // Round 18 (plan-size diet, the q157 twin): one explode + one
-    // aggregation replaces the union of three aggregations — same row
-    // set (groups are disjoint across grains, per-group rows/sums/
-    // distincts unchanged), one shuffle over the metrics frame instead
-    // of three, one planned subtree instead of three.
-    def grainStruct(label: String, priority: Int, key: Column): Column =
-      struct(lit(label).as("grain"), lit(priority).as("priority"),
-        coalesce(key.cast("string"), lit("unknown")).as("part_key"))
-    val parts = withRegion
-      .select(col("alloc_revenue"), col("s_suppkey"),
-        explode(array(
-          grainStruct("supplier", 1, col("s_suppkey")),
-          grainStruct("nation", 2, col("nationkey")),
-          grainStruct("region", 3, col("n_regionkey")))).as("__g"))
-      .groupBy(col("__g.grain").as("grain"),
-        col("__g.priority").as("priority"),
-        col("__g.part_key").as("part_key"))
-      .agg(round(sum(col("alloc_revenue")), 2).as("sum_revenue"),
+    def known(key: Column): Column =
+      coalesce(key.cast("string"), lit("unknown"))
+    val parts = PlantParts.grainRollup(withRegion,
+      Seq("supplier" -> known(col("s_suppkey")),
+        "nation" -> known(col("nationkey")),
+        "region" -> known(col("n_regionkey"))),
+      Seq(round(sum(col("alloc_revenue")), 2).as("sum_revenue"),
         count(lit(1)).as("n_rows"),
-        count_distinct(col("s_suppkey")).as("n_suppliers"))
-    val sig = Window.partitionBy(col("sum_revenue"), col("n_rows"),
-      col("n_suppliers"))
-    val partsOut = parts
-      .withColumn("true_gran", row_number().over(
-        sig.orderBy(col("priority").asc, col("part_key").asc)) === 1)
+        count_distinct(col("s_suppkey")).as("n_suppliers")))
+    val partsOut = PlantParts.trueGranularity(parts,
+        Seq("sum_revenue", "n_rows", "n_suppliers"))
       .select("grain", "part_key", "sum_revenue", "n_rows", "n_suppliers",
         "true_gran")
 
@@ -479,13 +458,7 @@ object Etl {
       .withColumn("lvl_nation", when(col("l_nkey") === col("r_nkey"), 2)
         .otherwise(1))
       .withColumn("lvl_bal",
-        when(col("l_cents").isNull || col("r_cents").isNull,
-            lit(null).cast("int"))
-          .when(lit(1000L) * abs(col("l_cents") - col("r_cents")) <=
-            greatest(abs(col("l_cents")), abs(col("r_cents"))), 3)
-          .when(lit(20L) * abs(col("l_cents") - col("r_cents")) <=
-            greatest(abs(col("l_cents")), abs(col("r_cents"))), 2)
-          .otherwise(1))
+        FS.percentDifferenceLevel(col("l_cents"), col("r_cents")))
     val comps = Seq(
       Comparison("name", col("lvl_name"), 3),
       Comparison("nation", col("lvl_nation"), 2),
@@ -502,8 +475,8 @@ object Etl {
     // one driver action for trained weights AND the prior (round 18
     // barrier diet — the separate head() was its own contention-exposed
     // barrier over the same supplier-sized lineage)
-    val (wMap, priorNano) = FS.collectWeightsAndPrior(
-      FS.trainWeights(mPairs, uPairs, comps), a)
+    val weight = FS.trainedMatchWeight(
+      FS.trainWeights(mPairs, uPairs, comps), a, comps)
     // blocking: (nation, metaphone 3-prefix of the canon name) — the
     // reference's report_year + substr(plant_name_mphone,1,3) rule,
     // key-for-key since round 13 (native Metaphone expression; soundex
@@ -531,7 +504,7 @@ object Etl {
     val cand0 = graft.linkage.Linkage.unionBlocks(a, b, "l_id", "r_id",
       rules, maxBlock = 2048)
     val cand = addLevels(cand0)
-      .withColumn("weight_nano", FS.matchWeight(comps, wMap, priorNano))
+      .withColumn("weight_nano", weight)
       .withColumn("accepted", col("weight_nano") >= FS.acceptAt(0.9))
     FS.bestMatch(cand, "r_id", "l_id")
       .select(col("r_id"), col("l_id"), col("r_canon").as("canon_name"),

@@ -9,7 +9,7 @@ import graft.dedup.NearDup
 import graft.multimodal.BinaryOps
 import graft.similarity.Similarity
 import graft.text.{TextAnalysis, Unigram}
-import graft.operators.{Allocation, Dedup, Harvest, Reshape, TemporalOps, WindowOps}
+import graft.operators.{Allocation, Dedup, Harvest, PlantParts, Reshape, TemporalOps, WindowOps}
 import graft.graph.{CalcForest, ConnectedComponents}
 import graft.linkage.Linkage
 import graft.checks.Profile
@@ -156,22 +156,9 @@ object SparkEntry {
   // Ownership fractions derived from per-order quantity shares; reference:
   // scale_by_ownership (/root/reference/src/pudl/helpers.py:2006-2104).
   private def q12(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // one shuffle, reused twice: hash(l_orderkey) satisfies both the
-    // (orderkey, suppkey) groupBy clustering and the window partitioning,
-    // so the agg and the fraction window share a single exchange. This
-    // trades away the map-side partial agg — correct here because
-    // (orderkey, suppkey) is near-distinct per row, so partial aggregation
-    // would not shrink the shuffle anyway
-    val own = t(s, dir, "lineitem")
-      .repartition(col("l_orderkey"))
-      .groupBy(col("l_orderkey").as("o_orderkey"), col("l_suppkey"))
-      .agg(sum(col("l_quantity")).as("__q"))
-      .withColumn("fraction_owned",
-        col("__q") / sum(col("__q")).over(Window.partitionBy(col("o_orderkey"))))
-      .drop("__q")
     Allocation.scaleByOwnership(
-        t(s, dir, "orders").select("o_orderkey", "o_totalprice"), own,
+        t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
+        Allocation.quantityShares(t(s, dir, "lineitem")),
         keys = Seq("o_orderkey"), fracCol = "fraction_owned",
         dataCols = Seq("o_totalprice"))
       // no rounding: every operand is bit-identical on both engines (integral
@@ -579,22 +566,21 @@ object SparkEntry {
   // ---- §2.5 plant-parts pattern: one fact at multiple entity grains ------
   // Reference: plant-parts aggregation
   // (/root/reference/src/pudl/analysis/plant_parts_eia.py:594-1102).
-  private def q51(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "lineitem")
+  private def q51(s: SparkSession, dir: String): DataFrame =
+    PlantParts.grainRollup(supplierNationLines(s, dir), supplierGrains,
+        Seq(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_rows"),
+          count_distinct(col("l_suppkey")).as("n_suppliers")))
+      .select("grain", "part_key", "sum_qty", "n_rows", "n_suppliers")
+
+  /** q51/q89's base: every line item with its supplier's nation row. */
+  private def supplierNationLines(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
       .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-    def grain(label: String, key: Column): DataFrame =
-      base.groupBy(key.cast("string").as("part_key"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          count(lit(1)).as("n_rows"),
-          count_distinct(col("l_suppkey")).as("n_suppliers"))
-        .withColumn("grain", lit(label))
-    grain("supplier", col("l_suppkey"))
-      .unionByName(grain("nation", col("s_nationkey")))
-      .unionByName(grain("region", col("n_regionkey")))
-      .select("grain", "part_key", "sum_qty", "n_rows", "n_suppliers")
-  }
+
+  /** q51/q89's grain family, finest first. */
+  private val supplierGrains = Seq("supplier" -> col("l_suppkey"),
+    "nation" -> col("s_nationkey"), "region" -> col("n_regionkey"))
 
   // ---- §2.15 custom Aggregator: weighted quantile ------------------------
   // Reference: weighted_quantile (/root/reference/src/pudl/validate/quality.py:67-110).
@@ -1250,28 +1236,15 @@ object SparkEntry {
   // aggregate; duplicates across grains keep only the finest (priority
   // order supplier > nation > region), via one window over the aggregate
   // signature.
-  private def q89(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-    def grain(label: String, priority: Int, key: Column): DataFrame =
-      base.groupBy(key.cast("string").as("part_key"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"),
-          count(lit(1)).as("n_rows"),
-          count_distinct(col("l_suppkey")).as("n_suppliers"))
-        .withColumn("grain", lit(label))
-        .withColumn("priority", lit(priority))
-    val parts = grain("supplier", 1, col("l_suppkey"))
-      .unionByName(grain("nation", 2, col("s_nationkey")))
-      .unionByName(grain("region", 3, col("n_regionkey")))
-    val sig = Window.partitionBy(col("sum_qty"), col("n_rows"), col("n_suppliers"))
-    parts
-      .withColumn("true_gran", row_number().over(
-        sig.orderBy(col("priority").asc, col("part_key").asc)) === 1)
+  private def q89(s: SparkSession, dir: String): DataFrame =
+    PlantParts.trueGranularity(
+        PlantParts.grainRollup(supplierNationLines(s, dir), supplierGrains,
+          Seq(round(sum(col("l_quantity")), 2).as("sum_qty"),
+            count(lit(1)).as("n_rows"),
+            count_distinct(col("l_suppkey")).as("n_suppliers"))),
+        Seq("sum_qty", "n_rows", "n_suppliers"))
       .select("grain", "part_key", "sum_qty", "n_rows", "n_suppliers",
         "true_gran")
-  }
 
   // ---- §2.9 heuristic address parsing ------------------------------------
   // Reference: parse_address (/root/reference/src/pudl/helpers.py:2660-2701);
@@ -2464,7 +2437,6 @@ object SparkEntry {
   // cents/100, so ·100 recovers them losslessly), keeping every sum
   // partition-order independent and the oracle hash-exact.
   private def q157(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val withRegion = q156(s, dir).join(
       broadcast(t(s, dir, "nation").select(
         col("n_nationkey").cast("long").as("nationkey"),
@@ -2472,35 +2444,13 @@ object SparkEntry {
       Seq("nationkey"), "left")
       .withColumn("__cents",
         round(col("alloc_revenue") * 100).cast("long"))
-    // Round 18 (plan-size diet, the q208/q211 single-reference
-    // discipline): the three grains aggregate the SAME metrics frame —
-    // the union-of-3-aggregations form re-planned the whole q156 lineage
-    // per grain (990-line / 62-Exchange initial plan) and shuffled it
-    // three times. One explode emits each row once per grain, so ONE
-    // aggregation (grain rides in the grouping key) computes the
-    // identical row set: groups are disjoint across grains, per-group
-    // rows/sums/distincts are unchanged, and part_key keeps the same
-    // nullable cast.
-    def grainStruct(label: String, priority: Int, key: Column): Column =
-      struct(lit(label).as("grain"), lit(priority).as("priority"),
-        key.cast("string").as("part_key"))
-    val parts = withRegion
-      .select(col("__cents"), col("s_suppkey"),
-        explode(array(
-          grainStruct("supplier", 1, col("s_suppkey")),
-          grainStruct("nation", 2, col("nationkey")),
-          grainStruct("region", 3, col("n_regionkey")))).as("__g"))
-      .groupBy(col("__g.grain").as("grain"),
-        col("__g.priority").as("priority"),
-        col("__g.part_key").as("part_key"))
-      .agg((sum(col("__cents")) / 100.0).as("sum_revenue"),
+    val parts = PlantParts.grainRollup(withRegion,
+      Seq("supplier" -> col("s_suppkey"), "nation" -> col("nationkey"),
+        "region" -> col("n_regionkey")),
+      Seq((sum(col("__cents")) / 100.0).as("sum_revenue"),
         count(lit(1)).as("n_rows"),
-        count_distinct(col("s_suppkey")).as("n_suppliers"))
-    val sig = Window.partitionBy(col("sum_revenue"), col("n_rows"),
-      col("n_suppliers"))
-    parts
-      .withColumn("true_gran", row_number().over(
-        sig.orderBy(col("priority").asc, col("part_key").asc)) === 1)
+        count_distinct(col("s_suppkey")).as("n_suppliers")))
+    PlantParts.trueGranularity(parts, Seq("sum_revenue", "n_rows", "n_suppliers"))
       .select("grain", "part_key", "sum_revenue", "n_rows", "n_suppliers",
         "true_gran")
   }
@@ -2814,7 +2764,7 @@ object SparkEntry {
   private def fsFixture(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame => DataFrame,
          Seq[graft.linkage.Comparison], DataFrame) = {
-    import graft.linkage.Comparison
+    import graft.linkage.{Comparison, FellegiSunter => FS}
     val cust = t(s, dir, "customer")
     val last4 = expr("right(regexp_replace(c_name, '[^0-9]', ''), 4)")
     val cents = round(col("c_acctbal") * 100).cast("long")
@@ -2834,13 +2784,7 @@ object SparkEntry {
       .withColumn("lvl_seg", when(col("l_seg") === col("r_seg"), 2)
         .otherwise(1))
       .withColumn("lvl_bal",
-        when(col("l_cents").isNull || col("r_cents").isNull,
-            lit(null).cast("int"))
-          .when(lit(1000L) * abs(col("l_cents") - col("r_cents")) <=
-            greatest(abs(col("l_cents")), abs(col("r_cents"))), 3)
-          .when(lit(20L) * abs(col("l_cents") - col("r_cents")) <=
-            greatest(abs(col("l_cents")), abs(col("r_cents"))), 2)
-          .otherwise(1))
+        FS.percentDifferenceLevel(col("l_cents"), col("r_cents")))
     val comps = Seq(
       Comparison("name", col("lvl_name"), 3),
       Comparison("seg", col("lvl_seg"), 2),
@@ -2859,8 +2803,8 @@ object SparkEntry {
     val (l, r, addLevels, comps, uPairs) = fsFixture(s, dir)
     val mPairs = addLevels(l.join(r, col("l_id") === col("r_id"))
       .where(col("l_id") % 4 < 3))
-    val (wMap, priorNano) =
-      FS.collectWeightsAndPrior(FS.trainWeights(mPairs, uPairs, comps), l)
+    val weight = FS.trainedMatchWeight(
+      FS.trainWeights(mPairs, uPairs, comps), l, comps)
     // blocking: splink block_on style — both rules are pure equi-joins;
     // the duplicate (l,r) a pair can earn from matching both rules is
     // resolved by the best-match window itself (identical rows rank 1,2 —
@@ -2869,7 +2813,7 @@ object SparkEntry {
       substring(col("l_last4"), 1, 2) === substring(col("r_last4"), 1, 2))
     val ruleB = l.join(r, col("l_last4") === col("r_last4"))
     val cand = addLevels(ruleA.unionByName(ruleB))
-      .withColumn("weight_nano", FS.matchWeight(comps, wMap, priorNano))
+      .withColumn("weight_nano", weight)
       .withColumn("accepted", col("weight_nano") >= FS.acceptAt(0.9))
     FS.bestMatch(cand, "r_id", "l_id")
       .select(col("r_id"), col("l_id"), col("lvl_name"), col("lvl_seg"),
@@ -2915,7 +2859,7 @@ object SparkEntry {
     val mPairs = addLevels(l.join(r, col("l_id") === col("r_id"))
       .where(col("l_id") % 4 < 3))
     val trained = FS.trainWeights(mPairs, uPairs, comps).localCheckpoint()
-    val (wMap, priorNano) = FS.collectWeightsAndPrior(trained, l)
+    val weight = FS.trainedMatchWeight(trained, l, comps)
     val segU = trained
       .where(col("comparison") === "seg" && col("level") === 2)
       .select("c_u", "n_u").head
@@ -2927,7 +2871,7 @@ object SparkEntry {
       substring(col("l_last4"), 1, 2) === substring(col("r_last4"), 1, 2))
     val ruleB = l.join(r, col("l_last4") === col("r_last4"))
     val cand = addLevels(ruleA.unionByName(ruleB))
-      .withColumn("weight_nano", FS.matchWeight(comps, wMap, priorNano))
+      .withColumn("weight_nano", weight)
       .join(broadcast(tf), col("l_seg") === col("value"))
       .withColumn("tf_adj_nano",
         when(col("lvl_seg") === 2, col("tf_adj_nano")).otherwise(0L))

@@ -306,6 +306,27 @@ object NearDup {
     based.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** LSH banding of a MinHash signature `h(0..numHashes-1)`: one
+    * (band, bucket) struct per band, band b hashing signature rows
+    * [b·r, (b+1)·r) with `family.combine`, r = numHashes / bands. The one
+    * home of the banding for [[minhashLshPairs]], [[incrementalDedup]] and
+    * `EventStreams.nearDupCandidates`. */
+  private[graft] def bandBuckets(h: Int => Column, numHashes: Int, bands: Int,
+                                 family: graft.functions.HashFamily): Column = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rowsPerBand = numHashes / bands
+    array((0 until bands).map { b =>
+      val slice = (0 until rowsPerBand).map(r => h(b * rowsPerBand + r))
+      struct(lit(b).as("band"), family.combine(slice).as("bucket"))
+    }: _*)
+  }
+
+  /** Estimated Jaccard of two MinHash signature arrays: the fraction of
+    * equal components, k/numHashes. */
+  private def estJaccard(a: Column, b: Column, numHashes: Int): Column =
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, x) => acc + x).cast("double") / numHashes
+
   /** MinHash + LSH banding: signatures are split into `bands` bands of
     * `numHashes/bands` rows hashed to a bucket; docs sharing any (band,
     * bucket) become candidates; candidates are kept when the estimated
@@ -319,14 +340,8 @@ object NearDup {
                       threshold: Double = 0.5,
                       family: graft.functions.HashFamily =
                         graft.functions.XxHashFamily): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
     val sh = wordShingles(df, idCol, textCol, shingleN)
     val sig = minhashSignatures(sh, idCol, numHashes, family)
-    val bandStructs = (0 until bands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), family.combine(slice).as("bucket"))
-    }
     // The full signature rides along with each bucket row (bands× a few
     // hundred bytes per doc), so the estimated Jaccard is computed INSIDE
     // the band join — no cached signature frame held past the call (the old
@@ -335,17 +350,16 @@ object NearDup {
     // the shuffles it removes.
     val buckets = sig.select(col(idCol),
         array((0 until numHashes).map(i => col(s"h$i")): _*).as("__sig"),
-        explode(array(bandStructs: _*)).as("bb"))
+        explode(bandBuckets(i => col(s"h$i"), numHashes, bands, family))
+          .as("bb"))
       .select(col(idCol), col("__sig"), col("bb.band"), col("bb.bucket"))
-    val matches = aggregate(
-      zip_with(col("__sa"), col("__sb"), (a, b) => when(a === b, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x)
     buckets.as("x").join(buckets.as("y"), Seq("band", "bucket"))
       .where(col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
         col("x.__sig").as("__sa"), col("y.__sig").as("__sb"))
       .dropDuplicates("id_a", "id_b")
-      .withColumn("est_jaccard", matches.cast("double") / numHashes)
+      .withColumn("est_jaccard",
+        estJaccard(col("__sa"), col("__sb"), numHashes))
       .where(col("est_jaccard") >= threshold)
       .select("id_a", "id_b", "est_jaccard")
   }
@@ -379,8 +393,6 @@ object NearDup {
                        threshold: Double = 0.5,
                        family: graft.functions.HashFamily =
                          graft.functions.XxHashFamily): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
     val fp = TextAnalysis.fingerprint(col(textCol))
     val histIdx = history
       .select(fp.as("__fp"), col(idCol).as("__hid"))
@@ -400,25 +412,17 @@ object NearDup {
     // signatures ride the bucket rows (see minhashLshPairs): the estimate
     // is computed inside the candidate join, so neither signature frame is
     // cached — nothing persisted survives the call
-    def bucketsOf(df: DataFrame, idAs: String, sigAs: String) = {
-      val bandStructs = (0 until bands).map { b =>
-        val slice = (0 until rowsPerBand).map(r =>
-          col(s"h${b * rowsPerBand + r}"))
-        struct(lit(b).as("band"), family.combine(slice).as("bucket"))
-      }
+    def bucketsOf(df: DataFrame, idAs: String, sigAs: String) =
       sigOf(df).select(col(idCol).as(idAs),
           array((0 until numHashes).map(i => col(s"h$i")): _*).as(sigAs),
-          explode(array(bandStructs: _*)).as("bb"))
+          explode(bandBuckets(i => col(s"h$i"), numHashes, bands, family))
+            .as("bb"))
         .select(col(idAs), col(sigAs), col("bb.band"), col("bb.bucket"))
-    }
-    val est = aggregate(
-      zip_with(col("__sa"), col("__sb"), (a, b) => when(a === b, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / numHashes
     val best = graft.operators.Dedup.keepFirst(
       bucketsOf(newBatch.select(col(idCol), col(textCol)), "__nid", "__sa")
         .join(bucketsOf(history, "__hid", "__sb"), Seq("band", "bucket"))
         .dropDuplicates("__nid", "__hid")
-        .withColumn("__est", est)
+        .withColumn("__est", estJaccard(col("__sa"), col("__sb"), numHashes))
         .where(col("__est") >= threshold),
       Seq("__nid"), Seq(col("__est").desc, col("__hid").asc))
       .select(col("__nid").as(idCol), col("__hid").as("near_match_id"),

@@ -254,14 +254,21 @@ object FellegiSunter {
     weights.select("comparison", "level", "w_nano").collect()
       .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
 
+  /** [[matchWeight]] over the trained `weights` and the prior of `left`,
+    * both read by one driver action at the call. */
+  def trainedMatchWeight(weights: DataFrame, left: DataFrame,
+                         comps: Seq[Comparison]): Column = {
+    val (w, priorNano) = collectWeightsAndPrior(weights, left)
+    matchWeight(comps, w, priorNano)
+  }
+
   /** [[collectWeights]] and the [[priorNanoDf]] prior in ONE driver
     * action (round 18 barrier diet): the 1-row prior frame rides the
-    * weights collect as a sentinel row, so a caller that needs both — the
-    * linkage capstone, q168, q170 — pays one barrier instead of two. Values are
-    * bit-identical to the separate collects (same in-engine expressions,
-    * just unioned). */
-  def collectWeightsAndPrior(weights: DataFrame,
-                             left: DataFrame): (Map[(String, Int), Long], Long) = {
+    * weights collect as a sentinel row, so a caller that needs both pays
+    * one barrier instead of two. Values are bit-identical to the separate
+    * collects (same in-engine expressions, just unioned). */
+  private def collectWeightsAndPrior(weights: DataFrame, left: DataFrame)
+      : (Map[(String, Int), Long], Long) = {
     val rows = weights.select(col("comparison"), col("level"), col("w_nano"))
       .unionByName(priorNanoDf(left).select(
         lit("__prior").as("comparison"), lit(0).as("level"),
@@ -345,6 +352,18 @@ object FellegiSunter {
     thresholds.zipWithIndex.foldLeft(base) { case (acc, (t, i)) =>
       acc.when(jw >= t, lit(thresholds.size - i))
     }.otherwise(lit(0))
+  }
+
+  /** splink's percentage-difference ladder over two INTEGER columns:
+    * either side null → NULL (the null level), |l − r| within 0.1 % of the
+    * larger magnitude → 3, within 5 % → 2, else 1. Integer arithmetic, so
+    * no float boundary. */
+  def percentDifferenceLevel(l: Column, r: Column): Column = {
+    val larger = greatest(abs(l), abs(r))
+    when(l.isNull || r.isNull, lit(null).cast("int"))
+      .when(lit(1000L) * abs(l - r) <= larger, 3)
+      .when(lit(20L) * abs(l - r) <= larger, 2)
+      .otherwise(1)
   }
 
   /** Acceptance threshold for match probability ≥ p, in weight nanos:

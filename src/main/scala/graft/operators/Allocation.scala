@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Ownership scaling / proportional allocation (SURVEY §2.3, §2.5).
@@ -39,6 +40,20 @@ object Allocation {
         col("__rec.ownership_record_type").as("ownership_record_type"): _*)
   }
 
+  /** Quantity-share ownership, ready for [[scaleByOwnership]]: per (order,
+    * supplier) the summed `l_quantity` and its fraction of the order's
+    * total. One `hash(l_orderkey)` exchange serves the aggregation and the
+    * fraction window; no map-side partial aggregate, which would not
+    * shrink a near-distinct (order, supplier) shuffle. Output:
+    * (o_orderkey, l_suppkey, qty, fraction_owned). */
+  def quantityShares(lineitem: DataFrame): DataFrame =
+    lineitem
+      .repartition(col("l_orderkey"))
+      .groupBy(col("l_orderkey").as("o_orderkey"), col("l_suppkey"))
+      .agg(sum(col("l_quantity")).as("qty"))
+      .withColumn("fraction_owned", col("qty") / sum(col("qty")).over(
+        Window.partitionBy(col("o_orderkey"))))
+
   /** Allocate a coarse-grain total across fine-grain rows proportionally to
     * a weight column, with equal split when the group's weights are all
     * zero/null. Reference: the allocation core of `allocate_gen_fuel`
@@ -48,7 +63,6 @@ object Allocation {
   def allocateProportionally(totals: DataFrame, detail: DataFrame,
                              keys: Seq[String], totalCol: String, weightCol: String,
                              out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*)
     val withFrac = detail
       .withColumn("__wsum", sum(when(col(weightCol).isNotNull, col(weightCol))

@@ -328,12 +328,17 @@ object Sampling {
     val joined = rows.join(broadcast(cuts), Seq("__d"), "left")
     val w = W.partitionBy(col("__d"), col("__b")).orderBy(within: _*)
       .rowsBetween(W.unboundedPreceding, -1)
-    val boundary = joined.where(col("__b") === col("__cut"))
+    // Both branches broadcast the cuts through ONE exchange only if they
+    // join the same way and read the same columns: the boundary test is
+    // not a bare equality (as one it would become a hash-join key on the
+    // cut), and the other branch tests `__cut_before`, null exactly when
+    // `__cut` is, so column pruning keeps it on both sides.
+    val boundary = joined.where(coalesce(col("__b") === col("__cut"), lit(false)))
       .withColumn("selected", col("__cut_before") +
         coalesce(sum(col(tokenCol)).over(w), lit(0L)) < col("__budget"))
     joined.where(col("__cut").isNull || col("__b") =!= col("__cut"))
       .withColumn("selected", col("__budget").isNotNull &&
-        (col("__cut").isNull || col("__b") < col("__cut")))
+        (col("__cut_before").isNull || col("__b") < col("__cut")))
       .unionByName(boundary)
       .drop("__d", "__b", "__budget", "__cut", "__cut_before")
   }

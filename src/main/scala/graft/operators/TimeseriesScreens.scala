@@ -379,37 +379,53 @@ object TimeseriesScreens {
   def ewmaScreen(df: DataFrame, keyCol: String, tsCol: String,
                  idCol: String, valueCol: String, threshold: Double,
                  alphaNum: Int = 1, alphaDen: Int = 4): DataFrame = {
-    require(alphaDen >= 1 && alphaNum >= 1 && alphaNum <= alphaDen,
-      "need 0 < alphaNum/alphaDen <= 1")
+    val fold = EwmaFold(alphaNum, alphaDen, threshold)
     val spark = df.sparkSession
     import spark.implicits._
-    val thrMicro = math.round(threshold * 1000000L)
     val rows = df.select(col(keyCol).cast("long"),
         unix_micros(col(tsCol)), col(idCol).cast("long"),
         col(valueCol).cast("double"))
       .as[(Long, Long, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (_, it) =>
-      val xs = it.toArray.sortBy(t => (t._2, t._3))
-      // first-row tracked EXPLICITLY, never via a negative sentinel: a
-      // contract-violating negative value must fail loudly below, not
-      // silently restart the series mid-stream
-      var first = true
-      var prev = 0L // micro-units
-      xs.iterator.map { case (u, ts, id, v) =>
-        val x = math.round(v * 1000000L)
-        require(x >= 0L,
-          s"ewmaScreen requires non-negative $valueCol, got $v (key=$u)")
-        val e = if (first) x
-          else Math.floorDiv(
-            alphaNum * x + (alphaDen - alphaNum) * prev + alphaDen / 2,
-            alphaDen)
-        val dev = if (first) None else Some(x - prev)
-        prev = e
-        first = false
-        (u, ts, id, v, e / 1000000.0, dev.map(_ / 1000000.0),
-          dev.exists(d => math.abs(d) > thrMicro))
-      }
+    rows.groupByKey(_._1).flatMapGroups { (u, it) =>
+      fold.scan(None, it.toArray.sortBy(t => (t._2, t._3)))(_._4,
+          t => s"ewmaScreen requires non-negative $valueCol, got ${t._4} (key=$u)") {
+        case ((_, ts, id, v), ewma, dev, flag) => (u, ts, id, v, ewma, dev, flag)
+      }._1.iterator
     }.toDF(keyCol, "ts_us", idCol, valueCol, "ewma", "deviation",
       "flag_ewma")
+  }
+
+  /** The fixed-point EWMA fold of [[ewmaScreen]] and its streaming twins
+    * (`EventStreams.EwmaProcessor`, `OrderedEwmaProcessor`), so batch and
+    * stream agree bit for bit by construction. Alpha outside (0, 1]
+    * throws when one is built. */
+  private[graft] final case class EwmaFold(alphaNum: Int, alphaDen: Int,
+                                           threshold: Double) {
+    require(alphaDen >= 1 && alphaNum >= 1 && alphaNum <= alphaDen,
+      "need 0 < alphaNum/alphaDen <= 1")
+    private val thrMicro = math.round(threshold * 1000000L)
+
+    /** Folds `rows`, in series order, onto `prev` (the last ewma in
+      * micro-units; None at a series start, never a negative sentinel),
+      * mapping each through `out` with its ewma, deviation (None first)
+      * and flag in original units. A negative value fails with
+      * `fail(row)`. Returns the outputs and the new state. */
+    def scan[A, B](prev: Option[Long], rows: scala.collection.Seq[A])(
+        value: A => Double, fail: A => String)(
+        out: (A, Double, Option[Double], Boolean) => B)
+        : (scala.collection.Seq[B], Option[Long]) = {
+      var state = prev
+      val outs = rows.map { r =>
+        val x = math.round(value(r) * 1000000L)
+        require(x >= 0L, fail(r))
+        val e = state.fold(x)(p => Math.floorDiv(
+          alphaNum * x + (alphaDen - alphaNum) * p + alphaDen / 2, alphaDen))
+        val dev = state.map(x - _)
+        state = Some(e)
+        out(r, e / 1000000.0, dev.map(_ / 1000000.0),
+          dev.exists(d => math.abs(d) > thrMicro))
+      }
+      (outs, state)
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.StructType
+import graft.operators.TimeseriesScreens.EwmaFold
 
 /** Structured Streaming façade over the hourly/timeseries operators
   * (SURVEY §2.14): the reference is batch-only, so this is the additive
@@ -35,22 +36,35 @@ object EventStreams {
       .groupByKey(_.user_id)
       .mapGroupsWithState[SessionState, SessionOut](
         GroupStateTimeout.NoTimeout) { (uid, rows, state: GroupState[SessionState]) =>
-        val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-        var c = prev.count; var s = prev.sum; var last = prev.lastTs
-        rows.foreach { e =>
-          c += 1; s += e.value; last = math.max(last, e.ts.getTime)
-        }
-        state.update(SessionState(c, s, last))
-        SessionOut(uid, c, s)
+        val next = accumulate(state.getOption, rows)
+        state.update(next)
+        SessionOut(uid, next.count, next.sum)
       }
       .toDF()
   }
 
+  /** The running-totals step of [[sessionize]] and
+    * [[RunningTotalsProcessor]]: `rows` folded onto the previous state
+    * (None for a new user). */
+  private def accumulate(prev: Option[SessionState],
+                         rows: Iterator[Event]): SessionState =
+    rows.foldLeft(prev.getOrElse(SessionState(0L, 0.0, 0L))) { (st, e) =>
+      SessionState(st.count + 1, st.sum + e.value,
+        math.max(st.lastTs, e.ts.getTime))
+    }
+
+  /** Epoch microseconds of `t`. `Timestamp.getTime` is MILLIS; micros
+    * matter for the output columns and for the within-batch (ts, id) sort
+    * parity with the batch twins, so derive them from the Instant. */
+  private def micros(t: java.sql.Timestamp): Long =
+    t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+
   /** [[sessionize]]'s processor re-expressed on `transformWithState` —
     * Spark 4's arbitrary-state API (the successor to mapGroupsWithState):
     * named state variables behind a handle, optional TTL, timers, and a
-    * RocksDB-backed store. Same accumulation semantics; StreamingSpec
-    * asserts output parity between the two APIs batch-for-batch. */
+    * RocksDB-backed store. Same accumulation step as [[sessionize]] (one
+    * private `accumulate`); StreamingSpec asserts output parity between
+    * the two APIs batch-for-batch. */
   class RunningTotalsProcessor
       extends StatefulProcessor[Long, Event, SessionOut] {
     @transient private var state: ValueState[SessionState] = _
@@ -59,13 +73,9 @@ object EventStreams {
         Encoders.product[SessionState], TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[Event],
                                  timers: TimerValues): Iterator[SessionOut] = {
-      val prev = if (state.exists()) state.get() else SessionState(0L, 0.0, 0L)
-      var c = prev.count; var s = prev.sum; var last = prev.lastTs
-      rows.foreach { e =>
-        c += 1; s += e.value; last = math.max(last, e.ts.getTime)
-      }
-      state.update(SessionState(c, s, last))
-      Iterator.single(SessionOut(uid, c, s))
+      val next = accumulate(Option.when(state.exists())(state.get()), rows)
+      state.update(next)
+      Iterator.single(SessionOut(uid, next.count, next.sum))
     }
   }
 
@@ -90,56 +100,44 @@ object EventStreams {
                      flag_ewma: Boolean)
 
   /** Streaming twin of [[graft.operators.TimeseriesScreens.ewmaScreen]]:
-    * the same FIXED-POINT micro-unit recursion
-    * (`E' = (aN·X + (aD−aN)·E + aD/2) DIV aD`) carried as per-user
-    * `ValueState` in a `transformWithState` processor — because the state
-    * is an exact integer, a stream fed in timestamp order produces
-    * BIT-IDENTICAL ewma/deviation/flag values to the batch screen
-    * (StreamingSpec asserts it batch-for-batch), which is exactly why
-    * the fixed-point design matters: a float state would drift between
-    * the batch fold and the incremental store. Within each micro-batch,
-    * rows sort by (ts, id) like the batch twin; cross-batch order is the
-    * stream's arrival contract (feed event-time-ordered or add a
-    * watermark+sort upstream). */
+    * the batch screen's own fold (`TimeseriesScreens.EwmaFold`: the
+    * FIXED-POINT micro-unit recursion `E' = (aN·X + (aD−aN)·E + aD/2) DIV
+    * aD`, the non-negative check and the alpha check) with its state
+    * carried as per-user `ValueState` in a `transformWithState` processor.
+    * Because the state is an exact integer and the fold is one
+    * definition, a stream fed in timestamp order produces BIT-IDENTICAL
+    * ewma/deviation/flag values to the batch screen by construction
+    * (StreamingSpec asserts it batch-for-batch); a float state would
+    * drift between the batch fold and the incremental store. An alpha
+    * outside (0, 1] fails when the processor is built. Within each
+    * micro-batch, rows sort by (ts, id) like the batch twin; cross-batch
+    * order is the stream's arrival contract (feed event-time-ordered or
+    * add a watermark+sort upstream). */
   class EwmaProcessor(threshold: Double, alphaNum: Int, alphaDen: Int)
       extends StatefulProcessor[Long, EwmaEvent, EwmaOut] {
+    private val fold = EwmaFold(alphaNum, alphaDen, threshold)
     @transient private var state: ValueState[EwmaState] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[EwmaState]("ewma",
         Encoders.product[EwmaState], TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[EwmaEvent],
-                                 timers: TimerValues): Iterator[EwmaOut] = {
-      val thrMicro = math.round(threshold * 1000000L)
-      // Timestamp.getTime is MILLIS — micros matter for both the output
-      // column and the within-batch (ts, id) sort parity with the batch
-      // twin, so derive epoch micros from the Instant
-      def micros(t: java.sql.Timestamp): Long =
-        t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-      // first-row tracked explicitly (state absence), never a negative
-      // sentinel — a contract-violating negative value throws below
-      // instead of silently restarting the series (batch-twin parity)
-      var first = !state.exists()
-      var prev = if (first) 0L else state.get().emicro
-      val out = rows.toArray
-        .sortBy(e => (micros(e.ts), e.event_id))
-        .map { e =>
-          val x = math.round(e.value * 1000000L)
-          require(x >= 0L,
-            s"EwmaProcessor requires non-negative value, got ${e.value}")
-          val em = if (first) x
-            else Math.floorDiv(
-              alphaNum * x + (alphaDen - alphaNum) * prev + alphaDen / 2,
-              alphaDen)
-          val dev = if (first) None else Some(x - prev)
-          prev = em
-          first = false
-          EwmaOut(uid, micros(e.ts), e.event_id, e.value,
-            em / 1000000.0, dev.map(_ / 1000000.0),
-            dev.exists(d => math.abs(d) > thrMicro))
-        }
-      if (out.nonEmpty) state.update(EwmaState(prev))
-      out.iterator
+                                 timers: TimerValues): Iterator[EwmaOut] =
+      ewmaRun(fold, uid, state, rows.toArray, "EwmaProcessor")
+  }
+
+  /** The batch screen's fold ([[EwmaFold]]) over `rows` in (ts, id)
+    * order, from and back to the per-user `state`. */
+  private def ewmaRun(fold: EwmaFold, uid: Long, state: ValueState[EwmaState],
+                      rows: Array[EwmaEvent], who: String): Iterator[EwmaOut] = {
+    val (out, last) = fold.scan(
+        Option.when(state.exists())(state.get().emicro),
+        rows.sortBy(e => (micros(e.ts), e.event_id)))(_.value,
+        e => s"$who requires non-negative value, got ${e.value}") {
+      (e, ewma, dev, flag) =>
+        EwmaOut(uid, micros(e.ts), e.event_id, e.value, ewma, dev, flag)
     }
+    if (out.nonEmpty) last.foreach(m => state.update(EwmaState(m)))
+    out.iterator
   }
 
   /** Out-of-order-tolerant streaming EWMA — the THIRD state shape of the
@@ -149,11 +147,12 @@ object EventStreams {
     * event-time-ordered" as its arrival contract; this processor removes
     * that contract — events buffer in ListState on arrival, an
     * event-time timer fires when the watermark advances, and only then do
-    * the ripe events (ts ≤ watermark) flush through the same fixed-point
-    * fold in exact (ts, id) order. As long as the watermark delay bounds
-    * the stream's disorder, the fold order — and therefore every output
-    * bit — matches the batch screen (StreamingSpec proves it on a stream
-    * deliberately shuffled across micro-batches).
+    * the ripe events (ts ≤ watermark) flush through the batch screen's
+    * fold (`TimeseriesScreens.EwmaFold`) in exact (ts, id) order. As long
+    * as the watermark delay bounds the stream's disorder, the fold order —
+    * and therefore every output bit — matches the batch screen
+    * (StreamingSpec proves it on a stream deliberately shuffled across
+    * micro-batches).
     *
     * Scale: buffered state per key is bounded by (watermark delay ×
     * event rate), the same bound every watermarked stateful op carries;
@@ -161,6 +160,7 @@ object EventStreams {
     * while the buffer is non-empty. */
   class OrderedEwmaProcessor(threshold: Double, alphaNum: Int, alphaDen: Int)
       extends StatefulProcessor[Long, EwmaEvent, EwmaOut] {
+    private val fold = EwmaFold(alphaNum, alphaDen, threshold)
     @transient private var buf: ListState[EwmaEvent] = _
     @transient private var st: ValueState[EwmaState] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
@@ -169,8 +169,6 @@ object EventStreams {
       st = getHandle.getValueState[EwmaState]("ewma",
         Encoders.product[EwmaState], TTLConfig.NONE)
     }
-    private def micros(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     override def handleInputRows(uid: Long, rows: Iterator[EwmaEvent],
                                  timers: TimerValues): Iterator[EwmaOut] = {
       rows.foreach(buf.appendValue)
@@ -193,26 +191,7 @@ object EventStreams {
         // never collides with the re-registration
         getHandle.registerTimer(wmMs + 2)
       }
-      var first = !st.exists()
-      var prev = if (first) 0L else st.get().emicro
-      val thrMicro = math.round(threshold * 1000000L)
-      val out = ripe.sortBy(e => (micros(e.ts), e.event_id)).map { e =>
-        val x = math.round(e.value * 1000000L)
-        require(x >= 0L,
-          s"OrderedEwmaProcessor requires non-negative value, got ${e.value}")
-        val em = if (first) x
-          else Math.floorDiv(
-            alphaNum * x + (alphaDen - alphaNum) * prev + alphaDen / 2,
-            alphaDen)
-        val dev = if (first) None else Some(x - prev)
-        prev = em
-        first = false
-        EwmaOut(uid, micros(e.ts), e.event_id, e.value,
-          em / 1000000.0, dev.map(_ / 1000000.0),
-          dev.exists(d => math.abs(d) > thrMicro))
-      }
-      if (ripe.nonEmpty) st.update(EwmaState(prev))
-      out.iterator
+      ewmaRun(fold, uid, st, ripe, "OrderedEwmaProcessor")
     }
   }
 
@@ -271,8 +250,6 @@ object EventStreams {
         Encoders.scalaLong, Encoders.scalaLong, ttl)
     override def handleInputRows(uid: Long, rows: Iterator[DedupEvent],
                                  timers: TimerValues): Iterator[DedupOut] = {
-      def micros(t: java.sql.Timestamp): Long =
-        t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
       // eager: state mutations must happen inside handleInputRows, not
       // during a deferred iterator consumption
       val out = rows.toArray
@@ -385,6 +362,8 @@ object EventStreams {
     * a new document is compared only against the recent window of docs
     * sharing a band bucket, never the full history.
     *
+    * The (band, bucket) structs are `NearDup.bandBuckets`, the banding of
+    * the batch passes.
     * Pairs can surface once per shared band (documented; the downstream
     * batch compaction dedupes). Use `NearDup.minhashLshPairs` for the
     * full-corpus batch pass.
@@ -396,8 +375,6 @@ object EventStreams {
                         watermark: String = "20 minutes",
                         family: graft.functions.HashFamily =
                           graft.functions.XxHashFamily): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
     val withBases = docs
       .withColumn("__bases",
         transform(graft.plans.WordShingles(col(textCol), shingleN),
@@ -407,12 +384,9 @@ object EventStreams {
       array_min(transform(col("__bases"), b => family.derive(i, b)))
         .as(s"__h$i"))
     val sig = withBases.select(col(idCol) +: col(tsCol) +: hCols: _*)
-    val bandStructs = (0 until bands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col(s"__h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), family.combine(slice).as("bucket"))
-    }
     val buckets = sig
-      .select(col(idCol), col(tsCol), explode(array(bandStructs: _*)).as("bb"))
+      .select(col(idCol), col(tsCol), explode(graft.dedup.NearDup.bandBuckets(
+        i => col(s"__h$i"), numHashes, bands, family)).as("bb"))
       .select(col(idCol), col(tsCol),
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
       .withWatermark(tsCol, watermark)

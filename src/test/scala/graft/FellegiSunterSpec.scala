@@ -200,4 +200,21 @@ class FellegiSunterSpec extends SparkSpec {
         e.getMessage.contains("reserved"), e.getMessage)
     }
   }
+
+  test("percentDifferenceLevel: the 0.1 % and 5 % edges over integer cents") {
+    val cases = Seq[(Option[Long], Option[Long], Option[Int])](
+      (None, Some(100L), None), // either side null: the null level
+      (Some(100L), None, None),
+      (None, None, None),
+      (Some(100000L), Some(99900L), Some(3)), // exactly 0.1 %
+      (Some(100000L), Some(99899L), Some(2)), // just over 0.1 %
+      (Some(10000L), Some(9500L), Some(2)), // exactly 5 %
+      (Some(10000L), Some(9499L), Some(1)), // just over 5 %
+      (Some(-10000L), Some(-9500L), Some(2)), // magnitudes, not signs
+      (Some(0L), Some(0L), Some(3))) // both zero
+    val got = cases.map(c => (c._1, c._2)).toDF("l", "r")
+      .select(FS.percentDifferenceLevel(col("l"), col("r")))
+      .as[Option[Int]].collect().toSeq
+    assert(got == cases.map(_._3))
+  }
 }

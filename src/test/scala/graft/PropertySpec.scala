@@ -778,4 +778,45 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  // grain frames: small key domains with nulls, so grains collide on
+  // their aggregate signatures and null keys form their own groups
+  private val grainFrameGen: Gen[List[(Option[Int], Option[Int], Double)]] =
+    Gen.choose(1, 30).flatMap(n => Gen.listOfN(n, Gen.zip(
+      Gen.option(Gen.choose(-2, 3)), Gen.option(Gen.choose(0, 2)),
+      Gen.choose(0, 3).map(_.toDouble))))
+  private val grainAggs = Seq(sum(col("v")).as("sum_v"),
+    count(lit(1)).as("n_rows"), count_distinct(col("a")).as("n_a"))
+  private def grainParts(rows: List[(Option[Int], Option[Int], Double)]) =
+    graft.operators.PlantParts.grainRollup(rows.toDF("a", "b", "v"),
+      Seq("a" -> col("a"), "b" -> col("b")), grainAggs)
+
+  test("grainRollup equals the union of one aggregation per grain (property)") {
+    forAll(grainFrameGen, 12) { rows =>
+      val df = rows.toDF("a", "b", "v")
+      def grain(label: String, priority: Int, key: String): DataFrame =
+        df.groupBy(col(key).cast("string").as("part_key"))
+          .agg(grainAggs.head, grainAggs.tail: _*)
+          .select(lit(label).as("grain"), lit(priority).as("priority"),
+            col("part_key"), col("sum_v"), col("n_rows"), col("n_a"))
+      def sorted(d: DataFrame) = d.collect().map(_.toSeq.map(String.valueOf))
+        .sortBy(_.mkString("|")).toSeq
+      assert(sorted(grainParts(rows)) ==
+        sorted(grain("a", 1, "a").unionByName(grain("b", 2, "b"))))
+    }
+  }
+
+  test("trueGranularity marks exactly the lowest (priority, part_key) row per signature (property)") {
+    forAll(grainFrameGen, 12) { rows =>
+      val got = graft.operators.PlantParts.trueGranularity(grainParts(rows),
+          Seq("sum_v", "n_rows", "n_a"))
+        .select("priority", "part_key", "sum_v", "n_rows", "n_a", "true_gran")
+        .as[(Int, Option[String], Double, Long, Long, Boolean)].collect().toSeq
+      // Spark's ascending order puts a null part_key first
+      val lowest = got.groupBy(r => (r._3, r._4, r._5)).values
+        .map(_.minBy(r => (r._1, r._2.fold("")("~" + _)))).toSet
+      assert(got.filter(_._6).toSet == lowest)
+      assert(got.count(_._6) == lowest.size)
+    }
+  }
 }

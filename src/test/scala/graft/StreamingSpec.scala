@@ -350,4 +350,23 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch, s"stream $streamed vs batch $batch")
     assert(batch.nonEmpty)
   }
+
+  test("both stream EWMA paths reject alpha outside (0, 1] like the batch screen") {
+    val events = Tables.load(spark, sf, "events")
+    // 5/4 would fold (5·X − E + 2) DIV 4: an over-shooting "average"
+    for ((num, den) <- Seq((5, 4), (0, 4), (1, 0))) {
+      val msgs = Seq(
+        intercept[IllegalArgumentException](
+          EventStreams.ewmaStream(spark, events, threshold = 150.0,
+            alphaNum = num, alphaDen = den)),
+        intercept[IllegalArgumentException](
+          EventStreams.ewmaStreamOrdered(spark, events, threshold = 150.0,
+            watermark = "2 days", alphaNum = num, alphaDen = den)),
+        intercept[IllegalArgumentException](
+          graft.operators.TimeseriesScreens.ewmaScreen(events, "user_id",
+            "ts", "event_id", "value", threshold = 150.0,
+            alphaNum = num, alphaDen = den))).map(_.getMessage)
+      assert(msgs.forall(_.contains("need 0 < alphaNum/alphaDen <= 1")), msgs)
+    }
+  }
 }
