@@ -59,7 +59,7 @@ object Bench {
     // noop sink: forces full evaluation of every column (count() alone lets
     // Catalyst prune the projections we're trying to measure).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+      .map(v => SparkEntry.select(v.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
     // SPARK_GRAFT_CAPSTONES=only: skip the query suite and time ONLY the
     // three capstones (min-of-two) — the lane for one-off scale runs
     // (e.g. capstones at sf1, SCALE.md round-14) where 176 queries of
@@ -76,8 +76,7 @@ object Bench {
     val skipCapstones = only.nonEmpty && !capsOnly
     val selected =
       if (capsOnly) Seq.empty[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]
-      else SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
+      else only.getOrElse(SparkEntry.lanes).sortBy(_.name).map(l => l.name -> l.build)
     var queriesSinceGc = 0
     // None = the pass threw: its time-to-exception is not a timing
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
@@ -460,7 +459,7 @@ object Bench {
         import org.apache.spark.sql.functions.{count => fcount, lit => flit, sum => fsum}
         val docs = Tables.load(spark, sfDir, "documents")
         val m = graft.text.TextAnalysis.retrievalEval(docs, "doc_id",
-            "text", SparkEntry.q200Queries, k = 50, cutoff = 10)
+            "text", graft.lanes.TextLanes.q200Queries, k = 50, cutoff = 10)
           .agg(fsum("rr_nano"), fsum("p_nano"), fsum("r_nano"),
             fcount(flit(1)))
           .head

@@ -11,9 +11,9 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q03_filter_project", "q02_region_revenue")
     val spark = GraftSession.local(4)
-    names.foreach { n =>
-      println(s"===== $n =====")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    SparkEntry.select(names).foreach { l =>
+      println(s"===== ${l.name} =====")
+      l.build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

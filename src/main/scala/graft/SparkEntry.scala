@@ -1,9674 +1,51 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.AggFunctions._
-import graft.functions.{Cleaning, WeightedQuantile}
-import graft.dedup.NearDup
-import graft.multimodal.BinaryOps
-import graft.similarity.Similarity
-import graft.text.{TextAnalysis, Unigram}
-import graft.operators.{Allocation, Dedup, Harvest, PlantParts, Reshape, TemporalOps, WindowOps}
-import graft.graph.{CalcForest, ConnectedComponents}
-import graft.linkage.Linkage
-import graft.checks.Profile
+import graft.lanes._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every entry pairs a Spark-first implementation (built from the graft
-  * operator library) with ANSI SQL the driver runs in DuckDB over the same
-  * parquet. Aggregated doubles are rounded identically on both sides so the
-  * driver's value-hash comparison is immune to float summation order.
+/** The lane registry. Every lane pairs a Spark-first build (from the graft
+  * operator library) with, where the operation is SQL-expressible, ANSI SQL
+  * that DuckDB runs over the same parquet. Each lane is declared once, in
+  * its family's file under `graft.lanes`; `queries` and `oracleSql` are
+  * views over those declarations. Aggregated doubles are rounded
+  * identically on both sides so a value-hash comparison is immune to float
+  * summation order.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  // ---- §2.5 hash aggregation: TPC-H Q1-style pricing summary -------------
-  // Reference pattern: time re-aggregation factory sum/avg rollups
-  // (/root/reference/src/pudl/output/eia923.py:358-430).
-  private def q01(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("sum_disc_price"),
-        avg(col("l_quantity")).as("avg_qty"),
-        (sum(round(col("l_discount") * 100, 0).cast("long")).cast("double")
-          / (lit(100.0) * count(lit(1)))).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-
-  // ---- §2.3 denormalization joins: revenue by region × year --------------
-  // Reference pattern: entity denorm joins (/root/reference/src/pudl/output/eia.py:117-332).
-  // Dims are broadcast — at 100 TB the fact table never shuffles for these.
-  private def q02(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), year(col("o_orderdate")).as("o_year"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"),
-        count(lit(1)).as("n_items"))
-
-  // ---- §2.2 filter + projection (pushdown must reach the scan) -----------
-  // Reference: organize_cols + drop_invalid_rows
-  // (/root/reference/src/pudl/helpers.py:807-828, transform/classes.py:835-903).
-  private def q03(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-        col("l_quantity").isNotNull && col("l_quantity").between(0, 100))
-      .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity",
-        "l_returnflag")
-
-  // ---- §2.4 freshest-record dedup: latest order per customer -------------
-  // Reference: filter_for_freshest_data_xbrl / dedupe_on_category
-  // (/root/reference/src/pudl/transform/ferc.py:91-146, helpers.py:1594-1617).
-  private def q04(s: SparkSession, dir: String): DataFrame =
-    Dedup.keepFirst(t(s, dir, "orders"), Seq("o_custkey"),
-      Seq(col("o_orderdate").desc, col("o_orderkey").desc))
-      .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-
-  // ---- §2.5 weighted average -------------------------------------------
-  // Reference: weighted_average (/root/reference/src/pudl/helpers.py:1771-1795).
-  private def q05(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_nationkey"))
-      .agg(
-        weightedAvgExact(col("l_discount"), col("l_quantity"), 2).as("wavg_discount"),
-        sum(col("l_quantity")).as("sum_qty"))
-
-  // ---- §2.6 centered rolling average over a monthly series ---------------
-  // Reference: generate_rolling_avg (/root/reference/src/pudl/helpers.py:1375-1425).
-  private def q06(s: SparkSession, dir: String): DataFrame = {
-    val monthly = t(s, dir, "orders")
-      .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"), date_trunc("month", col("o_orderdate")).as("o_month"))
-      .agg(round(sum(col("o_totalprice")), 2).as("revenue"))
-    WindowOps.rollingAvg(monthly, Seq("c_mktsegment"), Seq(col("o_month")),
-      col("revenue"), before = 5, after = 6, out = "rolling_revenue")
-      .withColumn("rolling_revenue", round(col("rolling_revenue"), 4))
-  }
-
-  // ---- §2.7 melt / wide_to_tidy -----------------------------------------
-  // Reference: wide_to_tidy (/root/reference/src/pudl/transform/ferc1.py:279-395).
-  private def q07(s: SparkSession, dir: String): DataFrame =
-    Reshape.melt(t(s, dir, "lineitem"),
-      idCols = Seq("l_orderkey", "l_linenumber"),
-      valueCols = Seq(
-        "quantity" -> "l_quantity",
-        "extendedprice" -> "l_extendedprice",
-        "discount" -> "l_discount"),
-      varName = "measure", valueName = "value")
-
-  // ---- §2.6/§2.14 hourly time-window aggregation over events -------------
-  // Batch form of the streaming hourly rollup (SURVEY §2.14).
-  private def q08(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        round(sum(col("value")), 4).as("sum_value"),
-        (sum(round(col("value") * 100, 0).cast("long")).cast("double")
-          / (lit(100.0) * count(lit(1)))).as("avg_value"))
-
-  // ---- §2.3 date_merge: temporal-granularity equi-join -------------------
-  // Monthly supplier revenue joined to its yearly total at year grain;
-  // reference: date_merge (/root/reference/src/pudl/helpers.py:612-718).
-  private def q09(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val monthly = li.groupBy(col("l_suppkey"),
-        date_trunc("month", col("l_shipdate")).as("ship_month"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("month_rev"))
-    val yearly = li.groupBy(col("l_suppkey"),
-        date_trunc("year", col("l_shipdate")).as("ship_year"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("year_rev"))
-    TemporalOps.dateMerge(monthly, yearly, Seq("l_suppkey"),
-        leftDate = "ship_month", rightDate = "ship_year", grain = "year")
-      .withColumn("rev_share", round(col("month_rev") / col("year_rev"), 6))
-  }
-
-  // ---- §2.3 expand_timeseries: densify + forward-fill --------------------
-  // Reference: expand_timeseries (/root/reference/src/pudl/helpers.py:719-806).
-  private def q10(s: SparkSession, dir: String): DataFrame = {
-    val monthly = t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"), date_trunc("month", col("l_shipdate")).as("ship_month"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("month_rev"))
-    TemporalOps.expandTimeseries(monthly, Seq("l_suppkey"), "ship_month",
-      step = "1 month", fillCols = Seq("month_rev"))
-  }
-
-  // ---- §2.1 changelog: drop consecutive duplicate snapshots --------------
-  // Reference: make_changelog (/root/reference/src/pudl/helpers.py:2627-2659).
-  private def q11(s: SparkSession, dir: String): DataFrame =
-    TemporalOps.changelog(t(s, dir, "events"),
-        keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-        tracked = Seq("event_type"))
-      .select("user_id", "event_id", "ts", "event_type")
-
-  // ---- §2.3 scale_by_ownership -------------------------------------------
-  // Ownership fractions derived from per-order quantity shares; reference:
-  // scale_by_ownership (/root/reference/src/pudl/helpers.py:2006-2104).
-  private def q12(s: SparkSession, dir: String): DataFrame = {
-    Allocation.scaleByOwnership(
-        t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-        Allocation.quantityShares(t(s, dir, "lineitem")),
-        keys = Seq("o_orderkey"), fracCol = "fraction_owned",
-        dataCols = Seq("o_totalprice"))
-      // no rounding: every operand is bit-identical on both engines (integral
-      // quantity sums are exact), so the products match exactly — rounding
-      // would *introduce* divergence at boundary-exact values.
-      .select(col("o_orderkey"), col("l_suppkey"), col("ownership_record_type"),
-        col("o_totalprice").as("totalprice_scaled"), col("fraction_owned"))
-  }
-
-  // ---- §2.5 sum_na: NULL-poisoning SUM -----------------------------------
-  // Reference: sum_na (/root/reference/src/pudl/helpers.py:42-50).
-  private def q13(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .withColumn("v", when(col("l_quantity") > 45, lit(null))
-        .otherwise(col("l_extendedprice")))
-      .groupBy(col("l_suppkey"))
-      .agg(
-        round(sumNa(col("v")), 2).as("sum_price_na"),
-        count(col("v")).as("n_nonnull"),
-        count(lit(1)).as("n_rows"))
-
-  // ---- §2.5 harvesting: occurrence-consistency entity resolution ---------
-  // Reference: occurrence_consistency (/root/reference/src/pudl/transform/eia.py:122-199).
-  private def q14(s: SparkSession, dir: String): DataFrame =
-    Harvest.occurrenceConsistency(t(s, dir, "orders"),
-      entityKeys = Seq("o_custkey"), valueCol = "o_orderpriority",
-      strictness = 0.7)
-
-  // ---- §2.4 best-snapshot dedup (most non-nulls wins) --------------------
-  // Reference: __best_snapshot (/root/reference/src/pudl/transform/ferc.py:21-34).
-  private def withNullySnapshotCols(df: DataFrame): DataFrame =
-    df.withColumn("price_n",
-        when(col("o_orderstatus") === "O", lit(null)).otherwise(col("o_totalprice")))
-      .withColumn("prio_n",
-        when(col("o_orderpriority") === "3-MEDIUM", lit(null))
-          .otherwise(col("o_orderpriority")))
-
-  private def q15(s: SparkSession, dir: String): DataFrame =
-    Dedup.bestSnapshot(withNullySnapshotCols(t(s, dir, "orders")),
-        keys = Seq("o_custkey"), dataCols = Seq("price_n", "prio_n"),
-        tiebreak = Seq(col("o_orderdate").desc, col("o_orderkey").desc))
-      .select("o_custkey", "o_orderkey", "price_n", "prio_n")
-
-  // ---- §2.4 apply-diffs dedup (per-column last non-null) -----------------
-  // Reference: __apply_diffs (/root/reference/src/pudl/transform/ferc.py:36-60).
-  private def q16(s: SparkSession, dir: String): DataFrame =
-    Dedup.applyDiffs(withNullySnapshotCols(t(s, dir, "orders")),
-      keys = Seq("o_custkey"), orderCol = "o_orderkey",
-      dataCols = Seq("price_n", "prio_n"))
-
-  // ---- §2.8 anti-join (get_missing_ids indicator-merge pattern) ----------
-  // Reference: get_missing_ids (/root/reference/src/pudl/glue/ferc1_eia.py:356-376).
-  private def q17(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders").where(col("o_totalprice") > 300000),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name", "c_acctbal")
-
-  // ---- §2.5 mixed agg in one pass: sum + weighted avg + unique-or-mixed --
-  // Reference: sum_and_weighted_average_agg (/root/reference/src/pudl/helpers.py:1796-1834)
-  // + groupby_agg_label_unique_source_or_mixed (:1461-1476).
-  private def q18(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_partkey"))
-      .agg(
-        sum(col("l_quantity")).as("sum_qty"),
-        weightedAvgExact(col("l_discount"), col("l_quantity"), 2).as("wavg_discount"),
-        uniqueOrMixed(col("l_returnflag")).as("returnflag_label"))
-
-  // ---- §2.6 exact sliding median ----------------------------------------
-  // Reference: rolling_median screens
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:829-906).
-  private def q19(s: SparkSession, dir: String): DataFrame =
-    WindowOps.rollingMedian(t(s, dir, "events"),
-        keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-        value = col("value"), before = 3, after = 3)
-      .select("user_id", "event_id", "ts", "value", "rolling_median")
-
-  // ---- §2.6/§2.12 double-delta spike flag --------------------------------
-  // Reference: flag_double_delta
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:1040-1120).
-  private def q20(s: SparkSession, dir: String): DataFrame =
-    WindowOps.flagDoubleDelta(t(s, dir, "events"),
-        keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-        value = col("value"), threshold = lit(20.0))
-      .select("user_id", "event_id", "ts", "value", "flag_spike")
-
-  // ---- §2.6 run-length encoding ------------------------------------------
-  // Reference: encode_run_length
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:340-517).
-  private def q21(s: SparkSession, dir: String): DataFrame =
-    WindowOps.runLengths(t(s, dir, "events"),
-      keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-      flag = col("value") >= 10.0, orderName = "ts")
-
-  // ---- §2.6 identical-run flag -------------------------------------------
-  // Reference: flag_identical_run
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:777-795).
-  private def q22(s: SparkSession, dir: String): DataFrame =
-    WindowOps.flagIdenticalRun(t(s, dir, "events"),
-        keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-        value = floor(col("value") / 10).cast("long"), minLen = 3,
-        out = "flag_run")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        floor(col("value") / 10).cast("long").as("value_bucket"), col("flag_run"))
-
-  // ---- §2.6 per-group quantile binning (ntile) ---------------------------
-  // Reference: assign_groupwise_load_factor_bins
-  // (/root/reference/src/pudl/analysis/operational_characteristics.py:182-268).
-  private def q23(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    t(s, dir, "events")
-      .withColumn("bin", ntile(4).over(
-        Window.partitionBy(col("event_type"))
-          .orderBy(col("value"), col("event_id"))))
-      .select("event_id", "event_type", "value", "bin")
-  }
-
-  // ---- §2.6 cumulative running totals ------------------------------------
-  // The unbounded-preceding frame used by every ffill/cumsum port.
-  private def q24(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    t(s, dir, "events")
-      .withColumn("running_value",
-        round(sum(col("value")).over(w.rowsBetween(Window.unboundedPreceding, 0)), 2))
-      .withColumn("rn", row_number().over(w))
-      .select("user_id", "event_id", "ts", "running_value", "rn")
-  }
-
-  // ---- §2.6 ramp rates ----------------------------------------------------
-  // Reference: summarize_ramp_rates
-  // (/root/reference/src/pudl/analysis/operational_characteristics.py:269-325).
-  private def q25(s: SparkSession, dir: String): DataFrame =
-    WindowOps.rampRates(t(s, dir, "events"),
-      keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-      value = col("value"))
-
-  // ---- §2.6 min up/down times from run lengths ---------------------------
-  // Reference: calculate_min_up_or_down_times
-  // (/root/reference/src/pudl/analysis/operational_characteristics.py:533-570).
-  private def q26(s: SparkSession, dir: String): DataFrame =
-    WindowOps.runLengths(t(s, dir, "events"),
-        keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-        flag = col("value") >= 10.0, orderName = "ts")
-      .groupBy(col("user_id"), col("flag"))
-      .agg(
-        min(col("run_length")).as("min_run"),
-        max(col("run_length")).as("max_run"),
-        count(lit(1)).as("n_runs"))
-
-  // ---- §2.12 group-median imputation of simulated gaps -------------------
-  // Reference: impute_flagged_values + simulate_nulls
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:1554-1614,1372-1426);
-  // deterministic gap mask (event_id % 37) instead of seeded rand.
-  private def q27(s: SparkSession, dir: String): DataFrame = {
-    val gapped = t(s, dir, "events")
-      .withColumn("v", when(col("event_id") % 37 === 0, lit(null))
-        .otherwise(col("value")))
-      .withColumn("hod", hour(col("ts")))
-    val med = gapped.groupBy(col("event_type"), col("hod"))
-      .agg(median(col("v")).as("group_median"))
-    gapped.join(broadcast(med), Seq("event_type", "hod"), "left")
-      // round 6: the two engines may interpolate even-count medians with
-      // differently-associated float ops; the 0.005-grid of (a+b)/2 over
-      // cent-valued data provably misses the 5e-7 rounding boundary.
-      .withColumn("value_imputed", round(coalesce(col("v"), col("group_median")), 6))
-      .withColumn("was_imputed", col("v").isNull)
-      .select("event_id", "event_type", "hod", "value_imputed", "was_imputed")
-  }
-
-  // ---- §2.8 top-k per group ----------------------------------------------
-  // Reference: get_best_matches top-1
-  // (/root/reference/src/pudl/analysis/record_linkage/eia_ferc1_record_linkage.py:251-307).
-  private def q28(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    t(s, dir, "events")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("event_type"))
-          .orderBy(col("value").desc, col("event_id").asc)))
-      .where(col("rk") <= 3)
-      .select("event_type", "rk", "event_id", "value")
-  }
-
-  // ---- §2.9 string simplification ----------------------------------------
-  // Reference: simplify_strings (/root/reference/src/pudl/helpers.py:829-868).
-  private def q29(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .withColumn("messy", concat(lit("  "), upper(col("p_name")), lit("   ")))
-      .withColumn("clean", Cleaning.simplifyStrings(col("messy")))
-      .select("p_partkey", "messy", "clean")
-
-  // ---- §2.9 zero-pad / leading-zero strip roundtrip ----------------------
-  // Reference: zero_pad_numeric_string + remove_leading_zeros_from_numeric_strings
-  // (/root/reference/src/pudl/helpers.py:1518-1568,1142-1177).
-  private def q30(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "supplier")
-      .withColumn("padded", Cleaning.zeroPad(col("s_suppkey").cast("string"), 9))
-      .withColumn("roundtrip", col("padded").cast("long").cast("string"))
-      .select("s_suppkey", "padded", "roundtrip")
-
-  // ---- §2.9 code-table encode (fix/ignore/validate) ----------------------
-  // Reference: Encoder.encode (/root/reference/src/pudl/metadata/classes.py:410-634).
-  private def q31(s: SparkSession, dir: String): DataFrame =
-    Cleaning.encode(s,
-        t(s, dir, "customer").withColumn("raw", col("c_mktsegment")),
-        column = "c_mktsegment",
-        valid = Seq("BUILDING", "AUTOMOBILE", "MACHINERY"),
-        fixes = Map("HOUSEHOLD" -> "BUILDING"),
-        ignored = Seq("FURNITURE"))
-      .select(col("c_custkey"), col("raw"), col("c_mktsegment").as("segment_coded"))
-
-  // ---- §2.9 unit conversion + out-of-range correction --------------------
-  // Reference: convert_units + correct_units
-  // (/root/reference/src/pudl/transform/classes.py:540-624,659-791).
-  private def q32(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .withColumn("qty_kg", Cleaning.convertUnits(col("l_quantity"), 0.45359237))
-      .withColumn("price_corrected",
-        Cleaning.correctUnits(col("l_extendedprice"), 0, 50000, 0.001))
-      .select("l_orderkey", "l_linenumber", "qty_kg", "price_corrected")
-
-  // ---- §2.9 date composition / truncation --------------------------------
-  // Reference: convert_to_date / month_year_to_date / PERIODS
-  // (/root/reference/src/pudl/helpers.py:1082-1141, metadata/dtypes.py:114-123).
-  private def q33(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .withColumn("y", year(col("o_orderdate")))
-      .withColumn("m", month(col("o_orderdate")))
-      .withColumn("d", dayofmonth(col("o_orderdate")))
-      .withColumn("composed_date", Cleaning.composeDate(col("y"), col("m"), col("d")))
-      .withColumn("quarter_start", date_trunc("quarter", col("o_orderdate")))
-      .select("o_orderkey", "y", "m", "d", "composed_date", "quarter_start")
-
-  // ---- §2.9 numeric extraction from messy strings ------------------------
-  // Reference: strip_non_numeric_values (/root/reference/src/pudl/transform/classes.py:392-439).
-  private def q34(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .withColumn("k_str", Cleaning.extractNumeric(col("props")))
-      .withColumn("k_value",
-        when(col("k_str") === "", lit(null)).otherwise(col("k_str")).cast("long"))
-      .select("event_id", "k_value")
-
-  // ---- §2.9 company-name normalization ------------------------------------
-  // Reference: CompanyNameCleaner / enforce_snake_case
-  // (/root/reference/src/pudl/analysis/record_linkage/name_cleaner.py:105-400,
-  //  transform/classes.py:347-391).
-  private def q35(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "supplier")
-      .withColumn("name_snake", Cleaning.enforceSnakeCase(col("s_name")))
-      .withColumn("name_words",
-        trim(regexp_replace(lower(col("s_name")), "[^a-z0-9]+", " ")))
-      .select("s_suppkey", "name_snake", "name_words")
-
-  // ---- text analysis: token counting --------------------------------------
-  private def q36(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")))
-      .withColumn("n_bpeish", TextAnalysis.bpeishTokenCount(col("text")))
-      .withColumn("len_matches_field", length(col("text")) === col("n_chars"))
-      .select("doc_id", "n_tokens", "n_bpeish", "len_matches_field")
-
-  // ---- text analysis: quality scoring -------------------------------------
-  private def q37(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .withColumn("punct_ratio", TextAnalysis.punctRatio(col("text")))
-      .withColumn("mean_token_len", TextAnalysis.meanTokenLen(col("text")))
-      .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-      .select("doc_id", "punct_ratio", "mean_token_len", "quality")
-
-  // ---- text analysis: heuristic language ID -------------------------------
-  private def q38(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.langId(s, t(s, dir, "documents"), "doc_id", "text")
-      .select("doc_id", "lang", "lang_pred", "lexicon_hits")
-
-  // ---- dedup: exact fingerprint groups ------------------------------------
-  private def q39(s: SparkSession, dir: String): DataFrame =
-    NearDup.exactDupGroups(t(s, dir, "documents"), "doc_id", "text")
-
-  // ---- dedup: exact n-gram Jaccard near-dup pairs -------------------------
-  private def q40(s: SparkSession, dir: String): DataFrame =
-    NearDup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-      n = 3, thresholdNum = 1, thresholdDen = 4)
-
-  // ---- dedup: MinHash + LSH (the 100 TB path). Runs on the PORTABLE
-  // MD5-prefix hash family so the DuckDB oracle replays the whole sketch —
-  // signatures, band buckets, candidate pairs — exactly; the default
-  // xxhash64 family (cheaper at scale) is recall-tested in TextDedupSpec.
-  private def q41(s: SparkSession, dir: String): DataFrame =
-    NearDup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-      shingleN = 3, numHashes = 32, bands = 8, threshold = 0.35,
-      family = graft.functions.PortableHashFamily)
-
-  // ---- similarity search: brute-force cosine top-k ------------------------
-  private def q42(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.cosineTopK(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5)
-  }
-
-  // ---- similarity search: LSH-bucketed ANN (scale path). Portable
-  // Rademacher planes → the DuckDB oracle rebuilds all 8 hash tables,
-  // buckets, candidates and the top-k ranking exactly.
-  private def q43(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.lshTopK(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nBits = 6, dim = 64,
-      tables = 8)
-  }
-
-  // ---- multimodal: opaque binary columns + typed metadata -----------------
-  private def q44(s: SparkSession, dir: String): DataFrame =
-    BinaryOps.withBlobMeta(
-        t(s, dir, "documents").withColumn("blob", BinaryOps.toBlob(col("text"))),
-        "blob")
-      .select("doc_id", "n_bytes", "sha256")
-
-  // ---- §2.10 connected components (boiler-generator / subplant pattern) --
-  // Bipartite customer-supplier graph on high-value orders; component = min
-  // vertex id. Customers map to even ids, suppliers to odd.
-  private def q45(s: SparkSession, dir: String): DataFrame = {
-    val edges = t(s, dir, "orders")
-      .where(col("o_totalprice") > 465000 && col("o_custkey") < 300)
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    ConnectedComponents.run(edges, "src", "dst")
-  }
-
-  // ---- §2.11 TF-IDF top term per document --------------------------------
-  private def q46(s: SparkSession, dir: String): DataFrame =
-    Linkage.tfidfTopTerm(t(s, dir, "documents"), "doc_id", "text")
-
-  // ---- §2.11 blocked fuzzy join (nation block + levenshtein) -------------
-  private def q47(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-      .select(col("c_nationkey").as("nkey"), col("c_custkey"),
-        expr("right(regexp_replace(c_name, '[^0-9]', ''), 4)").as("c_last4"))
-    val sup = t(s, dir, "supplier")
-      .select(col("s_nationkey").as("nkey"), col("s_suppkey"),
-        expr("right(regexp_replace(s_name, '[^0-9]', ''), 4)").as("s_last4"))
-    Linkage.blockedFuzzyJoin(c, sup, Seq("nkey"), "c_last4", "s_last4", maxDist = 1)
-      .select("nkey", "c_custkey", "s_suppkey", "c_last4", "s_last4", "name_dist")
-  }
-
-  // ---- §2.11 logistic pair scoring + top-1 match per record --------------
-  private def q48(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-      .select(col("c_nationkey").as("nkey"), col("c_custkey"), col("c_acctbal"),
-        expr("right(regexp_replace(c_name, '[^0-9]', ''), 4)").as("c_last4"))
-    val sup = t(s, dir, "supplier")
-      .select(col("s_nationkey").as("nkey"), col("s_suppkey"), col("s_acctbal"),
-        expr("right(regexp_replace(s_name, '[^0-9]', ''), 4)").as("s_last4"))
-    val cand = Linkage.blockedFuzzyJoin(c, sup, Seq("nkey"), "c_last4", "s_last4",
-        maxDist = 2)
-      .withColumn("bal_diff", abs(col("c_acctbal") - col("s_acctbal")) / 10000.0)
-    val scored = cand.withColumn("score",
-      round(Linkage.logisticScore(Seq(
-        (lit(2) - col("name_dist")).cast("double") -> 1.2,
-        col("bal_diff") -> -0.5), bias = -1.0), 6))
-    scored
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("c_custkey"))
-          .orderBy(col("score").desc, col("s_suppkey").asc)))
-      .where(col("rk") === 1)
-      .select("c_custkey", "s_suppkey", "name_dist", "score")
-  }
-
-  // ---- §2.5 fuel_by_plant pattern: pivot to fractions + primary pick ------
-  // Reference: fuel_by_plant_ferc1 (/root/reference/src/pudl/analysis/fuel_by_plant.py:35-200).
-  private def q49(s: SparkSession, dir: String): DataFrame = {
-    val piv = Reshape.pivot(t(s, dir, "lineitem"), Seq("l_suppkey"),
-        "l_returnflag", Seq("A", "N", "R"),
-        round(sum(col("l_extendedprice")), 4))
-      .withColumn("rev_a", coalesce(col("A"), lit(0.0)))
-      .withColumn("rev_n", coalesce(col("N"), lit(0.0)))
-      .withColumn("rev_r", coalesce(col("R"), lit(0.0)))
-      .drop("A", "N", "R")
-    val total = col("rev_a") + col("rev_n") + col("rev_r")
-    piv
-      .withColumn("frac_a", col("rev_a") / total)
-      .withColumn("frac_n", col("rev_n") / total)
-      .withColumn("frac_r", col("rev_r") / total)
-      .withColumn("primary_flag",
-        when(col("frac_a") > 0.5, "A").when(col("frac_n") > 0.5, "N")
-          .when(col("frac_r") > 0.5, "R").otherwise("none"))
-  }
-
-  // ---- §2.5 MCOE-style ratio metrics over grouped joins ------------------
-  // Reference: heat_rate/capacity_factor/mcoe
-  // (/root/reference/src/pudl/analysis/mcoe.py:314-739).
-  private def q50(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("l_suppkey"), year(col("l_shipdate")).as("ship_year"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"),
-        sum(col("l_quantity")).as("qty"),
-        min(col("s_acctbal")).as("capacity"))
-      .withColumn("price_per_qty", col("revenue") / col("qty"))
-      .withColumn("capacity_factor", col("revenue") / (col("capacity") * 8760.0))
-      .drop("capacity")
-
-  // ---- §2.5 plant-parts pattern: one fact at multiple entity grains ------
-  // Reference: plant-parts aggregation
-  // (/root/reference/src/pudl/analysis/plant_parts_eia.py:594-1102).
-  private def q51(s: SparkSession, dir: String): DataFrame =
-    PlantParts.grainRollup(supplierNationLines(s, dir), supplierGrains,
-        Seq(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_rows"),
-          count_distinct(col("l_suppkey")).as("n_suppliers")))
-      .select("grain", "part_key", "sum_qty", "n_rows", "n_suppliers")
-
-  /** q51/q89's base: every line item with its supplier's nation row. */
-  private def supplierNationLines(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-
-  /** q51/q89's grain family, finest first. */
-  private val supplierGrains = Seq("supplier" -> col("l_suppkey"),
-    "nation" -> col("s_nationkey"), "region" -> col("n_regionkey"))
-
-  // ---- §2.15 custom Aggregator: weighted quantile ------------------------
-  // Reference: weighted_quantile (/root/reference/src/pudl/validate/quality.py:67-110).
-  private def q52(s: SparkSession, dir: String): DataFrame =
-    // pre-pool weights by distinct value first: the UDAF buffer then holds
-    // |distinct values| pairs, not |rows| — same quantile (ties pool their
-    // weights either way), hash-agg does the heavy lifting map-side.
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_nationkey"), col("l_discount"))
-      .agg(sum(col("l_quantity")).as("w"))
-      .groupBy(col("s_nationkey"))
-      .agg(WeightedQuantile(col("l_discount"), col("w"), 1, 2)
-        .as("wmedian_discount"))
-
-  // ---- §2.2 spot fixes: keyed manual corrections -------------------------
-  // Reference: spot_fix_values (/root/reference/src/pudl/transform/classes.py:930-991).
-  private def q53(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val fixes = Seq((1L, "MACHINERY"), (5L, "BUILDING"), (42L, "AUTOMOBILE"))
-      .toDF("c_custkey", "fix_segment")
-    t(s, dir, "customer")
-      .join(broadcast(fixes), Seq("c_custkey"), "left")
-      .withColumn("c_mktsegment", coalesce(col("fix_segment"), col("c_mktsegment")))
-      .select("c_custkey", "c_mktsegment")
-  }
-
-  // ---- §2.2 drop partial periods when rolling up to annual ---------------
-  // Reference: drop_ytd_for_annual_tables (/root/reference/src/pudl/output/eia923.py:124-150).
-  private def q54(s: SparkSession, dir: String): DataFrame = {
-    val monthly = t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"), year(col("l_shipdate")).as("ship_year"),
-        month(col("l_shipdate")).as("ship_month"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("month_rev"))
-    monthly.groupBy(col("l_suppkey"), col("ship_year"))
-      .agg(
-        round(sum(col("month_rev")), 2).as("annual_rev"),
-        count_distinct(col("ship_month")).as("n_months"))
-      .where(col("n_months") === 12)
-      .drop("n_months")
-  }
-
-  // ---- §2.14 event-time window function (streaming-parity form) ----------
-  // Same rollup EventStreams.hourlyCounts runs over readStream.
-  private def q55(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
-      .select(col("window.start").as("hour_start"),
-        col("window.end").as("hour_end"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
-  // ---- §1.3 declared-schema enforcement at the IO boundary ---------------
-  // Reference: Resource.enforce_schema (/root/reference/src/pudl/metadata/classes.py:1868-1930).
-  private val lineitemSlim = graft.schema.Resource("lineitem_slim", Seq(
-    graft.schema.Field("shipdate", graft.schema.FieldType.Datetime),
-    graft.schema.Field("l_orderkey", graft.schema.FieldType.Integer, required = true),
-    graft.schema.Field("l_linenumber", graft.schema.FieldType.Integer),
-    graft.schema.Field("qty", graft.schema.FieldType.Number),
-    graft.schema.Field("returnflag", graft.schema.FieldType.Str,
-      enum = Some(Seq("A", "R")))),
-    primaryKey = Seq("l_orderkey", "l_linenumber"))
-
-  private def q56(s: SparkSession, dir: String): DataFrame =
-    lineitemSlim.enforceSchema(
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").as("qty"), col("l_returnflag").as("returnflag"),
-        col("l_shipdate").as("shipdate"), col("l_tax")))
-
-  // ---- §5 declarative check runner (dbt/asset-check analogue) ------------
-  private def q57(s: SparkSession, dir: String): DataFrame = {
-    import graft.checks.CheckRunner._
-    run(t(s, dir, "orders"), Seq(
-      UniqueKey("orders:pk_unique", Seq("o_orderkey")),
-      NotNull("orders:custkey_not_null", "o_custkey"),
-      InRange("orders:totalprice_range", "o_totalprice", 0, 1000000),
-      InEnum("orders:status_enum", "o_orderstatus", Seq("O", "F", "P")),
-      ColumnsRatio("orders:price_self_ratio", "o_totalprice", "o_totalprice",
-        0.999, 1.001),
-      ForeignKey("orders:custkey_fk", Seq("o_custkey"),
-        t(s, dir, "customer"), Seq("c_custkey"))))
-  }
-
-  // ---- §2.11 DBSCAN-approximation: eps-graph + connected components ------
-  // Reference: cluster_records_dbscan → eps-neighbor graph + CC
-  // (/root/reference/src/pudl/analysis/record_linkage/link_cross_year.py:129-177);
-  // min_samples≈1 deviation documented in SURVEY §7. Brute-force pairs here;
-  // the LSH bucket join (Similarity.lshTopK) is the at-scale candidate path.
-  private def q58(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    // broadcast-corpus primitive kernel (see q66) — same edges as the
-    // declarative crossJoin form, none of its per-pair row materialization
-    val edges = Similarity.bruteForceEpsPairs(emb, "vec_id", "embedding", 0.35)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val cc = ConnectedComponents.run(edges, "src", "dst")
-    emb.select(col("vec_id").as("v"))
-      .join(cc, Seq("v"), "left")
-      .withColumn("cluster", coalesce(col("component"), col("v")))
-      // exact sklearn DBSCAN(min_samples=2) parity: with min_samples=2
-      // every point with a neighbor is core, so clusters ARE the eps-graph
-      // components and isolated points are noise → label −1
-      // (cluster_records_dbscan, link_cross_year.py:150)
-      .withColumn("dbscan_label", coalesce(col("component"), lit(-1L)))
-      .select("v", "cluster", "dbscan_label")
-  }
-
-  // ---- §2.8 global sort + limit (top-k driver pattern) -------------------
-  private def q59(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      .limit(100)
-      .select("o_orderkey", "o_totalprice")
-
-  // ---- §2.8 era-union with missing columns -------------------------------
-  // Reference: CSV+XBRL era concat (/root/reference/src/pudl/transform/ferc714.py:800-810).
-  private def q60(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    val cut = lit("1998-01-01").cast("timestamp")
-    val legacy = orders.where(col("o_orderdate") < cut)
-      .select(col("o_orderkey"), col("o_totalprice"))
-      .withColumn("era", lit("legacy"))
-    val modern = orders.where(col("o_orderdate") >= cut)
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      .withColumn("era", lit("modern"))
-    legacy.unionByName(modern, allowMissingColumns = true)
-  }
-
-  // ---- §2.12 low-rank matrix completion (LATC pattern; tolerance-based
-  // validation in ImputeSpec, no SQL oracle — SURVEY §7 hard-part #3) ------
-  private def q61(s: SparkSession, dir: String): DataFrame = {
-    val pivoted = t(s, dir, "events")
-      .withColumn("day", dayofyear(col("ts")))
-      .withColumn("hod", hour(col("ts")))
-      .groupBy(col("event_type"), col("day"), col("hod"))
-      .agg(avg(col("value")).as("v"))
-      .withColumn("v", when(col("day") % 11 === 0, lit(null)).otherwise(col("v")))
-    graft.impute.MatrixCompletion.imputeDf(pivoted, "event_type", "day", "hod",
-      "v", rank = 3, iters = 50)
-  }
-
-  // ---- §2.10 calculation forest: reconcile parent totals vs leaf sums ----
-  // Reference: XbrlCalculationForestFerc1 + Exploder.boom
-  // (/root/reference/src/pudl/output/ferc1.py:1814-2585,1212-1813). The
-  // forest (region <- nation) is metadata-sized and driver-built; the facts
-  // stay distributed.
-  private def q62(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-      .withColumn("yr", year(col("l_shipdate")))
-    def facts(node: Column) = base.groupBy(col("yr"), node.as("node"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("value"))
-    val allFacts = facts(concat(lit("nation:"), col("n_name")))
-      .unionByName(facts(concat(lit("region:"), col("r_name"))))
-    val edges = t(s, dir, "nation")
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-      .select(concat(lit("region:"), col("r_name")).as("parent"),
-        concat(lit("nation:"), col("n_name")).as("child"))
-      .collect() // metadata-sized dimension (25 rows)
-      .map(r => CalcForest.CalcEdge(r.getString(0), r.getString(1), 1.0)).toSeq
-    CalcForest.reconcile(s, allFacts, edges, Seq("yr"), "node", "value",
-        tolerance = 0.05)
-      .withColumn("calculated", round(col("calculated"), 4))
-      .withColumn("abs_diff", abs(col("reported") - col("calculated")))
-      .withColumn("is_consistent", col("abs_diff") <= 0.05)
-  }
-
-  // ---- §2.12 global outlier screen (median ± k·IQR per series) -----------
-  // Reference: global outlier flag in the screen suite
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:765-1354).
-  private def q63(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val stats = ev.groupBy(col("user_id")).agg(
-      expr("percentile(value, 0.5)").as("med"),
-      expr("percentile(value, 0.25)").as("q1"),
-      expr("percentile(value, 0.75)").as("q3"))
-      .withColumn("thr_hi", round(col("med") + (col("q3") - col("q1")) * 3, 6))
-      .withColumn("thr_lo", round(col("med") - (col("q3") - col("q1")) * 3, 6))
-      .select("user_id", "thr_lo", "thr_hi")
-    ev.join(broadcast(stats), "user_id")
-      .withColumn("flag_outlier",
-        col("value") < col("thr_lo") || col("value") > col("thr_hi"))
-      .select("user_id", "event_id", "value", "thr_lo", "thr_hi", "flag_outlier")
-  }
-
-  // ---- §2.9 boolean recode + int-na fix ----------------------------------
-  // Reference: convert_col_to_bool + fix_int_na
-  // (/root/reference/src/pudl/helpers.py:1928-2005,964-1008).
-  private def q64(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .withColumn("is_finished",
-        Cleaning.convertToBool(col("o_orderstatus"), Seq("F"), Seq("O", "P")))
-      .withColumn("price_str", Cleaning.fixIntNa(col("o_totalprice")))
-      .select("o_orderkey", "is_finished", "price_str")
-
-  // ---- §2.1 semi-structured source: JSON column parsing ------------------
-  private def q65(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .withColumn("j", from_json(col("props"),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.LongType)))))
-      .select(col("event_id"), col("j.k").as("k_value"),
-        get_json_object(col("props"), "$.k").as("k_str"))
-
-  // ---- §2.11 orphan nearest-neighbor assignment --------------------------
-  // Reference: match_orphaned_records (link_cross_year.py:241-299) — every
-  // vector outside the eps-graph joins its nearest clustered neighbor's
-  // component.
-  private def q66(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    // broadcast-corpus primitive kernel — bit-identical to the crossJoin
-    // form but without the per-pair row materialization (8.9 s → sub-second
-    // at sf0.1); the corpus is bounded by definition of the brute-force twin
-    val edges = Similarity.bruteForceEpsPairs(emb, "vec_id", "embedding", 0.35)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val cc = ConnectedComponents.run(edges, "src", "dst")
-    val clustered = emb.join(cc, emb("vec_id") === cc("v"))
-      .select(col("vec_id"), col("embedding"), col("component"))
-    val orphans = emb.join(cc, emb("vec_id") === cc("v"), "left_anti")
-    Similarity.nearestAssign(orphans, clustered, "vec_id", "embedding",
-      "component")
-  }
-
-  // ---- §2.7 stack_generators: explode multi-valued columns with rank -----
-  // Reference: stack_generators (/root/reference/src/pudl/analysis/allocate_gen_fuel.py:615-663)
-  // — multi-valued attribute columns become ranked rows via posexplode.
-  private def q67(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .select(col("c_custkey"),
-        posexplode(array(col("c_mktsegment"), upper(col("c_mktsegment")),
-          col("c_name"))))
-      .withColumnRenamed("pos", "attr_rank")
-      .withColumnRenamed("col", "attr_value")
-
-  // ---- §2.14 gap-based sessionization (batch twin of session windows) ----
-  private def q68(s: SparkSession, dir: String): DataFrame =
-    WindowOps.sessionize(t(s, dir, "events"), Seq("user_id"), "ts",
-        col("event_id"), gapSeconds = 1800)
-      .groupBy(col("user_id"), col("session_id").cast("long").as("session_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        min(col("ts")).as("session_start"),
-        max(col("ts")).as("session_end"),
-        round(sum(col("value")), 4).as("sum_value"))
-
-  // ---- dedup capstone: near-dup groups → canonical document -------------
-  // Full pipeline: shingle → exact-Jaccard pairs → connected components →
-  // min-id canonical per group (the LSH path q41 feeds the same CC at
-  // scale). Every document appears once with its canonical id.
-  private def q69(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val pairs = NearDup.jaccardPairs(docs, "doc_id", "text",
-      n = 3, thresholdNum = 1, thresholdDen = 4)
-    val cc = ConnectedComponents.run(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")), "src", "dst")
-    docs.select(col("doc_id"))
-      .join(cc, docs("doc_id") === cc("v"), "left")
-      .withColumn("canonical_id", coalesce(col("component"), col("doc_id")))
-      .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
-      .select("doc_id", "canonical_id", "is_dup")
-  }
-
-  // ---- §2.2/§2.9 cleaning chain: sentinels → NULL, % → ratio, range NULL -
-  // Reference: standardize_na_values + standardize_percentages_ratio +
-  // oob_to_nan (/root/reference/src/pudl/transform/classes.py:905-928,
-  // helpers.py:1671-1710,429-492) composed the way TableTransformer chains
-  // ColumnTransformFuncs.
-  private def q70(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .withColumn("segment_clean",
-        Cleaning.naSentinelsToNull(col("c_mktsegment"), Seq("FURNITURE", "N/A")))
-      .withColumn("disc_pct", round(col("c_acctbal") / 100.0, 4))
-      .withColumn("disc_ratio", Cleaning.percentToRatio(col("disc_pct")))
-      .withColumn("acctbal_pos", Cleaning.oobToNan(col("c_acctbal"), 0, 1e9))
-      .select("c_custkey", "segment_clean", "disc_pct", "disc_ratio",
-        "acctbal_pos")
-
-  // ---- §2.12 orchestrated screen suite: priority flag accumulation -------
-  // Reference: flag_ruggles pipeline + flag() one-flag-per-cell
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:1295-1354,247-272).
-  private def q71(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .withColumn("v", when(col("event_id") % 53 === 0, lit(null))
-        .otherwise(col("value")))
-    val order = Seq(col("ts"), col("event_id"))
-    val withRun = WindowOps.flagIdenticalRun(ev, Seq("user_id"), order,
-      floor(col("v") / 10).cast("long"), minLen = 3, out = "f_run")
-    val withSpike = WindowOps.flagDoubleDelta(withRun, Seq("user_id"), order,
-      col("v"), lit(25.0), out = "f_spike")
-    WindowOps.flagPipeline(withSpike, Seq(
-        "missing" -> col("v").isNull,
-        "oob" -> !col("v").between(0, 40),
-        "identical_run" -> col("f_run"),
-        "spike" -> col("f_spike")))
-      .select("user_id", "event_id", "v", "flag")
-  }
-
-  // ---- §2.3 date_merge at quarter grain + reconstructed finest date ------
-  // The reconstruction half of date_merge (/root/reference/src/pudl/helpers.py:612-718):
-  // after joining at the coarse grain, the output date is the finest of the
-  // two sides (greatest/least).
-  private def q72(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val monthly = li.groupBy(col("l_suppkey"),
-        date_trunc("month", col("l_shipdate")).as("ship_month"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("month_rev"))
-    val quarterly = li.groupBy(col("l_suppkey"),
-        date_trunc("quarter", col("l_shipdate")).as("ship_quarter"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("quarter_rev"))
-    TemporalOps.dateMerge(monthly, quarterly, Seq("l_suppkey"),
-        leftDate = "ship_month", rightDate = "ship_quarter", grain = "quarter")
-      .withColumn("date_out",
-        greatest(col("ship_month"), date_trunc("quarter", col("ship_month"))))
-      .withColumn("rev_share_q", round(col("month_rev") / col("quarter_rev"), 6))
-  }
-
-  // ---- §2.5 multi-grain aggregation in ONE shuffle: rollup ---------------
-  // The one-pass twin of q51's unioned grain groupBys (plant-parts
-  // aggregation, /root/reference/src/pudl/analysis/plant_parts_eia.py:594-1102):
-  // ROLLUP computes every hierarchy level in a single partial+final
-  // aggregation instead of re-scanning the base per grain — at 100 TB, one
-  // shuffle instead of |grains|. grouping() disambiguates subtotal rows
-  // from genuine NULL keys.
-  private def q73(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-    base.rollup(col("n_regionkey"), col("n_name"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4)
-          .as("revenue"),
-        count(lit(1)).as("n_rows"),
-        (grouping(col("n_regionkey")) * 2 + grouping(col("n_name")))
-          .cast("long").as("gid"))
-      .select("n_regionkey", "n_name", "gid", "revenue", "n_rows")
-  }
-
-  // ---- §2.6 quantile-breakpoint binning (qcut semantics, not ntile) ------
-  // Reference: assign_groupwise_load_factor_bins
-  // (/root/reference/src/pudl/analysis/operational_characteristics.py:182-268)
-  // computes per-group quantile breakpoints then assigns by comparison.
-  private def q74(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val breaks = ev.groupBy(col("event_type")).agg(
-        round(expr("percentile(value, 0.25)"), 6).as("t1"),
-        round(expr("percentile(value, 0.5)"), 6).as("t2"),
-        round(expr("percentile(value, 0.75)"), 6).as("t3"))
-    ev.join(broadcast(breaks), "event_type")
-      .withColumn("bin",
-        when(col("value") <= col("t1"), 1)
-          .when(col("value") <= col("t2"), 2)
-          .when(col("value") <= col("t3"), 3)
-          .otherwise(4))
-      .select("event_type", "event_id", "value", "bin")
-  }
-
-  // ---- §2.12 local-outlier screen via median prediction ------------------
-  // Reference: median_prediction + flag_local_outlier
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:907-970).
-  // Windows scaled to the fixture's ~67-point series (the reference's
-  // hourly defaults 48/480/±240 keep the same before/after shape).
-  // The flatMapGroups form is bit-identical to the declarative window form
-  // (asserted in ScreensSpec) and ~4x faster on many-short-series shapes.
-  private def q75(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TimeseriesScreens.flagLocalOutlierFast(
-      t(s, dir, "events"), "user_id", "ts", "event_id", "value",
-      window = (6, 5), longWindow = (24, 23),
-      shifts = Seq(-12, -6, 0, 6, 12), iqrWindow = (12, 11),
-      multHi = 3.5, multLo = 2.5)
-      .select("user_id", "event_id", "value", "pred", "iqr",
-        "flag_local_hi", "flag_local_lo")
-
-  // ---- §2.12 anomalous-region screen -------------------------------------
-  // Reference: flag_anomalous_region
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:1186-1229).
-  private def q76(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TimeseriesScreens.flagAnomalousRegion(
-      t(s, dir, "events")
-        .withColumn("flagged", col("value") < 12),
-      Seq("user_id"), Seq(col("ts"), col("event_id")),
-      col("flagged"), window = 8, threshold = 0.5, out = "flag_region")
-      .select("user_id", "event_id", "flagged", "flag_region")
-
-  // ---- §2.12 bad-period screen (flag_bad_years, day grain) ---------------
-  // Reference: flag_bad_years
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:1231-1294).
-  private def q77(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .withColumn("v", when(col("event_id") % 7 === 0, lit(null))
-        .otherwise(col("value")))
-    graft.operators.TimeseriesScreens.flagBadPeriods(ev,
-      Seq("user_id"), "ts", col("v"), col("v") > 300,
-      period = date_trunc("day", col("ts")),
-      minData = 6.0, minDataFraction = 0.15)
-      .select(col("user_id"), col("event_id"), col("period"),
-        col("coverage_hours"), col("data_fraction"), col("flag_bad_period"))
-  }
-
-  // ---- §2.12 single-delta screen (sequential fixpoint per series; the
-  // two-pass fixpoint IS oracle-checked — DuckDB replays it as a
-  // list_reduce fold over each series, see oracleSql("q78_single_delta")) --
-  // Reference: flag_single_delta / _find_single_delta
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:1047-1185).
-  private def q78(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TimeseriesScreens.flagSingleDelta(
-      t(s, dir, "events"), "user_id", "ts", "value", multiplier = 5.0)
-
-  // ---- §2.3 multi-way outer association with indicator columns -----------
-  // Reference: associate_generator_tables outer-merge chain
-  // (/root/reference/src/pudl/analysis/allocate_gen_fuel.py:664-790) +
-  // indicator merges (eia_ferc1_record_linkage.py:501-593). Entities missing
-  // from either side survive with coalesced keys and a provenance label.
-  private def q79(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer")
-      .where(col("c_custkey") % 3 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val ords = t(s, dir, "orders")
-      .where(col("o_custkey") % 2 === 0) // order side misses odd customers
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_orders"),
-        round(sum(col("o_totalprice")), 2).as("sum_totalprice"))
-    val rets = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .where(col("l_returnflag") === "R")
-      .groupBy(col("o_custkey").as("r_custkey"))
-      .agg(count(lit(1)).as("n_returns"))
-    cust.join(ords, col("c_custkey") === col("o_custkey"), "full_outer")
-      .withColumn("custkey", coalesce(col("c_custkey"), col("o_custkey")))
-      .withColumn("source",
-        when(col("c_custkey").isNotNull && col("o_custkey").isNotNull, "both")
-          .when(col("c_custkey").isNotNull, "left_only")
-          .otherwise("right_only"))
-      .join(rets, col("custkey") === col("r_custkey"), "left")
-      .select(col("custkey"), col("c_mktsegment"), col("source"),
-        coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-        coalesce(col("sum_totalprice"), lit(0.0)).as("sum_totalprice"),
-        coalesce(col("n_returns"), lit(0L)).as("n_returns"))
-  }
-
-  // ---- §2.9 phone standardization + rolling-century year repair ----------
-  // Reference: standardize_phone_column + normalize_year_fragments
-  // (/root/reference/src/pudl/helpers.py:2326-2381,2553-2626). Messy inputs
-  // are synthesized deterministically from customer keys, covering every
-  // branch: punctuation formats, extensions, short numbers, all-zero, and
-  // 2-digit years on both sides of the century pivot.
-  private def q80(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "customer")
-      .withColumn("area", (col("c_custkey") % 800 + 200).cast("string"))
-      .withColumn("mid", lpad((col("c_custkey") % 900 + 100).cast("string"), 3, "0"))
-      .withColumn("last4", lpad((col("c_custkey") % 10000).cast("string"), 4, "0"))
-      .withColumn("phone_raw",
-        when(col("c_custkey") % 5 === 0,
-          concat(lit("("), col("area"), lit(") "), col("mid"), lit(" "), col("last4")))
-          .when(col("c_custkey") % 5 === 1,
-            concat(col("area"), lit("."), col("mid"), lit("."), col("last4"), lit("x"),
-              (col("c_custkey") % 9 + 1).cast("string")))
-          .when(col("c_custkey") % 5 === 2, concat(col("mid"), col("last4")))
-          .when(col("c_custkey") % 5 === 3, lit("0000000000"))
-          .otherwise(concat(col("area"), lit("-"), col("mid"), lit("-"), col("last4"))))
-      .withColumn("year_raw",
-        when(col("c_custkey") % 4 === 0,
-          lpad((col("c_custkey") % 100).cast("string"), 2, "0"))
-          .when(col("c_custkey") % 4 === 1,
-            (col("c_custkey") % 60 + 1960).cast("string"))
-          .when(col("c_custkey") % 4 === 2, lit("7"))
-          .otherwise(lpad((col("c_custkey") % 30).cast("string"), 2, "0")))
-    base.select(col("c_custkey"), col("phone_raw"), col("year_raw"),
-      Cleaning.standardizePhone(col("phone_raw")).as("phone_std"),
-      Cleaning.normalizeYearFragments(col("year_raw"), 1960, 2026)
-        .as("year_fixed"))
-  }
-
-  // ---- §2.12 low-tubal-rank tensor completion (FFT variant; tolerance-
-  // based validation in ImputeSpec, no SQL oracle — SURVEY §7 hard-part #3)
-  // Reference: impute_latc_tubal
-  // (/root/reference/src/pudl/analysis/timeseries_cleaning.py:648-764).
-  private def q81(s: SparkSession, dir: String): DataFrame = {
-    val tensor = t(s, dir, "events")
-      .withColumn("day", dayofyear(col("ts")) - 1)
-      .withColumn("hod", hour(col("ts")))
-      .withColumn("ubucket", (col("user_id") % 8).cast("int"))
-      .groupBy(col("event_type"), col("day"), col("ubucket"), col("hod"))
-      .agg(avg(col("value")).as("v"))
-      .withColumn("v", when(col("day") % 11 === 0, lit(null)).otherwise(col("v")))
-    graft.impute.TubalCompletion.imputeDf(tensor, "event_type", "day",
-      "ubucket", "hod", "v", rank = 2, iters = 30)
-  }
-
-  // ---- §2.13 planar overlay with area-weighted apportionment -------------
-  // Reference: overlay / self_union ratio semantics
-  // (/root/reference/src/pudl/analysis/spatial.py:118-288). Supplier
-  // "territories" × customer "counties" as boxes derived from keys; pairs
-  // come from the grid-bucketed spatial equi-join (cell = 8) with
-  // reference-point dedup — the oracle reproduces the same pairs with a
-  // plain range join, proving the blocking is lossless.
-  private def q82(s: SparkSession, dir: String): DataFrame = {
-    val terr = t(s, dir, "supplier")
-      .select(col("s_suppkey"),
-        ((col("s_suppkey") % 50) * 2.0).as("x1"),
-        ((col("s_suppkey") % 30) * 2.0).as("y1"),
-        ((col("s_suppkey") % 50) * 2.0 + 3.0 + (col("s_suppkey") % 4)).as("x2"),
-        ((col("s_suppkey") % 30) * 2.0 + 2.0 + (col("s_suppkey") % 5)).as("y2"))
-    val county = t(s, dir, "customer")
-      .select(col("c_custkey"),
-        ((col("c_custkey") % 40) * 2.5).as("x1"),
-        ((col("c_custkey") % 24) * 2.5).as("y1"),
-        // 4x4 counties: right_area = 16, so area_fraction is exactly dyadic
-        // (m/64) and the prorated product is bit-identical across engines —
-        // a /3 denominator would put round() on a repeating-decimal boundary
-        ((col("c_custkey") % 40) * 2.5 + 4.0).as("x2"),
-        ((col("c_custkey") % 24) * 2.5 + 4.0).as("y2"),
-        col("c_acctbal"))
-    graft.spatial.SpatialOps.overlayBoxes(terr, county, "s_suppkey",
-        "c_custkey", Seq("c_acctbal"), cell = 8.0)
-      // no rounding: inter_area is an exact multiple of 0.25, the fraction
-      // is exactly m/64, and the allocation is one IEEE multiply — all
-      // bit-identical across engines (rounding could only hurt)
-      .select(col("s_suppkey"), col("c_custkey"), col("inter_area"),
-        col("area_fraction"), col("c_acctbal_alloc").as("acctbal_alloc"))
-  }
-
-  // ---- §2.13 group-wise dissolve: exact union area per nation ------------
-  // Reference: dissolve (/root/reference/src/pudl/analysis/spatial.py:173-206).
-  // Integer-coordinate boxes make the oracle exact: union area == number of
-  // covered unit cells, which SQL counts directly — the sweep-line result
-  // must equal it cell for cell.
-  private def q83(s: SparkSession, dir: String): DataFrame = {
-    val boxes = t(s, dir, "supplier")
-      .select(col("s_nationkey"),
-        (col("s_suppkey") % 40).cast("double").as("x1"),
-        ((col("s_suppkey") * 7) % 30).cast("double").as("y1"),
-        ((col("s_suppkey") % 40) + 1 + (col("s_suppkey") % 5)).cast("double").as("x2"),
-        (((col("s_suppkey") * 7) % 30) + 1 + (col("s_suppkey") % 4)).cast("double").as("y2"))
-    graft.spatial.SpatialOps.unionAreaByGroup(boxes, "s_nationkey")
-  }
-
-  // ---- §2.13 point-in-region spatial join + ring area ---------------------
-  // Reference: georeferenced FIPS->geometry joins + add_geometries
-  // (/root/reference/src/pudl/output/ferc714.py:884-946,
-  // analysis/service_territory.py:65-374). Nations tile the plane as 20x20
-  // cells; each customer point lands in exactly one region (half-open
-  // containment). The region's ring area comes from the shoelace
-  // expression over its polygon ring.
-  private def q84(s: SparkSession, dir: String): DataFrame = {
-    val regions = t(s, dir, "nation")
-      .select(col("n_nationkey"), col("n_name"),
-        ((col("n_nationkey") % 5) * 20.0).as("x1"),
-        (floor(col("n_nationkey") / 5) * 20.0).as("y1"),
-        ((col("n_nationkey") % 5) * 20.0 + 20.0).as("x2"),
-        (floor(col("n_nationkey") / 5) * 20.0 + 20.0).as("y2"))
-      .withColumn("ring_area", graft.spatial.SpatialOps.shoelaceArea(
-        array(
-          struct(col("x1").as("x"), col("y1").as("y")),
-          struct(col("x2").as("x"), col("y1").as("y")),
-          struct(col("x2").as("x"), col("y2").as("y")),
-          struct(col("x1").as("x"), col("y2").as("y")))))
-    val points = t(s, dir, "customer")
-      .select(col("c_custkey"),
-        ((col("c_custkey") % 97) * 1.03).as("px"),
-        ((col("c_custkey") % 89) * 1.1).as("py"))
-    points.join(broadcast(regions),
-        col("px") >= col("x1") && col("px") < col("x2") &&
-          col("py") >= col("y1") && col("py") < col("y2"), "left")
-      .select(col("c_custkey"), col("px"), col("py"), col("n_nationkey"),
-        col("n_name"), col("ring_area"))
-  }
-
-  // ---- similarity search: IVF ANN (portable sampled-seed quantizer —
-  // seed set, cell assignment, probes and ranking all replayed by the
-  // DuckDB oracle; the Lloyd-trained variant stays recall-tested in
-  // SimilaritySpec) --------------------------------------------------------
-  private def q85(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.ivfTopKSeeded(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nCells = 16, nProbe = 4)
-  }
-
-  // ---- §2.13 polygon clipping (self_union core): ring ∩ convex window ----
-  // The native ConvexClip expression (Sutherland–Hodgman) computes the
-  // intersection ring; the oracle recomputes the area with independent
-  // rectangle arithmetic — the two must agree exactly (integer coords).
-  private def q86(s: SparkSession, dir: String): DataFrame = {
-    def corner(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val win = array(
-      corner(lit(15.0), lit(15.0)), corner(lit(75.0), lit(15.0)),
-      corner(lit(75.0), lit(75.0)), corner(lit(15.0), lit(75.0)))
-    t(s, dir, "nation")
-      .select(col("n_nationkey"),
-        ((col("n_nationkey") % 5) * 20.0).as("x1"),
-        (floor(col("n_nationkey") / 5) * 20.0).as("y1"),
-        ((col("n_nationkey") % 5) * 20.0 + 20.0).as("x2"),
-        (floor(col("n_nationkey") / 5) * 20.0 + 20.0).as("y2"))
-      .withColumn("clipped_area", graft.spatial.SpatialOps.shoelaceArea(
-        graft.plans.ConvexClip(array(
-          corner(col("x1"), col("y1")), corner(col("x2"), col("y1")),
-          corner(col("x2"), col("y2")), corner(col("x1"), col("y2"))), win)))
-      .select("n_nationkey", "x1", "y1", "x2", "y2", "clipped_area")
-  }
-
-  // ---- §2.2 row-map driven filtering/labeling of positional rows ---------
-  // Reference: select_dbf_rows_by_category + align_row_numbers_dbf
-  // (/root/reference/src/pudl/transform/ferc1.py:547-631): positional
-  // report rows join a per-era row map (a small curated dimension, like the
-  // reference's CSV row maps) to gain a category, then filter on it.
-  private def q87(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rowMap = (for {
-      y <- 1990 to 2000
-      ln <- 1 to 7
-    } yield (y, ln, (y + ln) % 3 match {
-      case 0 => "revenue"; case 1 => "expense"; case _ => "skip"
-    })).toDF("map_year", "map_line", "row_category")
-    t(s, dir, "lineitem")
-      .withColumn("ship_year", year(col("l_shipdate")))
-      .join(broadcast(rowMap),
-        col("ship_year") === col("map_year") &&
-          col("l_linenumber") === col("map_line"), "left")
-      .where(col("row_category") =!= "skip")
-      .select("l_orderkey", "l_linenumber", "ship_year", "row_category")
-  }
-
-  // ---- §2.5 full multi-table harvest with strictness + rounding ----------
-  // Reference: harvest_entity_tables (/root/reference/src/pudl/transform/eia.py:396-700).
-  // Two "reporting tables" disagree on a customer's segment and balance:
-  // the direct table is clean; the order-grain table injects noise on
-  // ~1/11 of reports and ±1 balance jitter that the round(-1) special case
-  // (the lat/long pattern) absorbs before the consistency vote.
-  private def q88(s: SparkSession, dir: String): DataFrame = {
-    val direct = t(s, dir, "customer")
-      .select(col("c_custkey").as("custkey"),
-        col("c_mktsegment").as("segment"),
-        // +0.007 keeps every quantized balance off the X5.0 half-boundary,
-        // where Spark (half-up) and DuckDB (half-even on doubles) disagree
-        (col("c_acctbal") + 0.007).as("balance"))
-    val reported = t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey").as("custkey"),
-        when(col("o_orderkey") % 11 === 0, lit("NOISY"))
-          .otherwise(col("c_mktsegment")).as("segment"),
-        (col("c_acctbal") + (col("o_orderkey") % 3) - 1 + 0.007).as("balance"))
-    Harvest.harvestEntityTables(Seq(direct, reported), Seq("custkey"),
-        attrs = Seq("segment", "balance"),
-        strictness = Map("segment" -> 0.7, "balance" -> 0.5),
-        roundScale = Map("balance" -> -1))
-  }
-
-  // ---- §2.11 true-granularity labeling across aggregation grains ---------
-  // Reference: TrueGranLabeler (/root/reference/src/pudl/analysis/plant_parts_eia.py:1103-1182)
-  // — a record is the TRUE grain when no finer part produced an identical
-  // aggregate; duplicates across grains keep only the finest (priority
-  // order supplier > nation > region), via one window over the aggregate
-  // signature.
-  private def q89(s: SparkSession, dir: String): DataFrame =
-    PlantParts.trueGranularity(
-        PlantParts.grainRollup(supplierNationLines(s, dir), supplierGrains,
-          Seq(round(sum(col("l_quantity")), 2).as("sum_qty"),
-            count(lit(1)).as("n_rows"),
-            count_distinct(col("l_suppkey")).as("n_suppliers"))),
-        Seq("sum_qty", "n_rows", "n_suppliers"))
-      .select("grain", "part_key", "sum_qty", "n_rows", "n_suppliers",
-        "true_gran")
-
-  // ---- §2.9 heuristic address parsing ------------------------------------
-  // Reference: parse_address (/root/reference/src/pudl/helpers.py:2660-2701);
-  // regex-heuristic stand-in for the usaddress CRF tag set (documented
-  // deviation). Addresses synthesized deterministically over 7 shapes:
-  // bare PO box (unparseable → CRF failure contract: raw addr as street),
-  // located PO box (street NULL, city/state/zip parse), pre-directional,
-  // post-directional, comma'd suite, apartment + zip+4, and plain.
-  private def q90(s: SparkSession, dir: String): DataFrame = {
-    val num = (col("c_custkey") % 900 + 1).cast("string")
-    val stname = element_at(array(lit("Main St"), lit("Oak Ave"), lit("Elm Dr")),
-      (col("c_custkey") % 3 + 1).cast("int"))
-    val st2 = element_at(array(lit("IL"), lit("CA"), lit("TX"), lit("NY")),
-      (col("c_custkey") % 4 + 1).cast("int"))
-    val zip5 = lpad((col("c_custkey") % 100000).cast("string"), 5, "0")
-    val boxn = (col("c_custkey") % 1000).cast("string")
-    val m9 = col("c_custkey") % 9
-    val base = t(s, dir, "customer").withColumn("addr_raw",
-      when(m9 === 0, concat(lit("PO Box "), boxn))
-        .when(m9 === 1, concat(lit("PO Box "), boxn, lit(", Springfield, "),
-          st2, lit(" "), zip5))
-        .when(m9 === 2, concat(num, lit(" N "), stname,
-          lit(", Springfield, "), st2, lit(" "), zip5))
-        .when(m9 === 3, concat(num, lit(" "), stname, lit(" NW"),
-          lit(", Springfield, "), st2, lit(" "), zip5))
-        .when(m9 === 4, concat(num, lit(" "), stname, lit(", Ste "),
-          (col("c_custkey") % 50 + 1).cast("string"),
-          lit(", Springfield, "), st2, lit(" "), zip5))
-        .when(m9 === 5, concat(num, lit(" "), stname, lit(" Apt "),
-          (col("c_custkey") % 20 + 1).cast("string"),
-          lit(", Springfield, "), st2, lit(" "), zip5, lit("-"),
-          lpad((col("c_custkey") % 10000).cast("string"), 4, "0")))
-        // spelled-out directionals (usaddress surface forms)
-        .when(m9 === 6, concat(num, lit(" North "), stname,
-          lit(", Springfield, "), st2, lit(" "), zip5))
-        .when(m9 === 7, concat(num, lit(" "),
-          (col("c_custkey") % 90 + 1).cast("string"), lit("th St West"),
-          lit(", Springfield, "), st2, lit(" "), zip5))
-        .otherwise(concat(num, lit(" "), stname,
-          lit(", Springfield, "), st2, lit(" "), zip5)))
-    Cleaning.parseAddress(col("addr_raw"))
-      .foldLeft(base) { case (acc, (name, expr)) => acc.withColumn(name, expr) }
-      .select("c_custkey", "addr_raw", "addr_number", "addr_street",
-        "addr_city", "addr_state", "addr_zip")
-  }
-
-  // ---- §2.13 capstone: territory compilation + weighted demand allocation
-  // Reference: get_territory_fips/compile_geoms + the state-demand
-  // population weighting (/root/reference/src/pudl/analysis/service_territory.py:65-374,
-  // analysis/state_demand.py:159-380): a utility's territory is the
-  // dissolved union of its county boxes; utility-level demand allocates to
-  // counties by population fraction (conservation by construction).
-  private def q91(s: SparkSession, dir: String): DataFrame = {
-    val county = t(s, dir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"),
-        (col("c_custkey") % 40).cast("double").as("x1"),
-        (col("c_custkey") % 24).cast("double").as("y1"),
-        (col("c_custkey") % 40 + 2).cast("double").as("x2"),
-        (col("c_custkey") % 24 + 2).cast("double").as("y2"),
-        (floor(abs(col("c_acctbal"))) + 1).as("population"))
-    val demand = t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_nationkey"))
-      .agg(round(sum(col("o_totalprice")), 2).as("demand_total"))
-    val terr = graft.spatial.SpatialOps.unionAreaByGroup(
-        county.select(col("c_nationkey"), col("x1"), col("y1"), col("x2"), col("y2")),
-        "c_nationkey")
-      .select(col("c_nationkey"), col("union_area"))
-    Allocation.allocateProportionally(demand, county, Seq("c_nationkey"),
-        totalCol = "demand_total", weightCol = "population",
-        out = "alloc_demand")
-      .join(terr, Seq("c_nationkey"))
-      .select("c_custkey", "c_nationkey", "population", "alloc_demand",
-        "union_area")
-  }
-
-  // ---- §5 dbt-macro checks: subcomponent totals, weighted-quantile
-  // bounds, period-over-period continuity ----------------------------------
-  // Reference: expect_subcomponents_sum_to_total / weighted_quantile /
-  // expect_column_change_within_ratio (/root/reference/dbt/macros/) +
-  // group-mean continuity (src/pudl/dagster/asset_checks.py:221-263).
-  private def q92(s: SparkSession, dir: String): DataFrame = {
-    import graft.checks.CheckRunner._
-    val j = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .withColumn("o_year", year(col("o_orderdate")))
-    run(j, Seq(
-      SubcomponentsSum("orders:parts_vs_total", Seq("o_orderkey"),
-        "l_extendedprice", "o_totalprice", tol = 0.25),
-      WeightedQuantileBound("lineitem:wq_discount_bound", "l_discount",
-        "l_quantity", qNum = 1, qDen = 2, lo = 0.0, hi = 0.06),
-      ChangeWithinRatio("orders:yearly_revenue_continuity", "o_year",
-        "l_extendedprice", ratio = 0.9)))
-  }
-
-  // ---- dedup: SimHash signatures + banded Hamming pairs. Portable hash
-  // family (60-bit MD5 prefix) → the oracle rebuilds signatures, bands and
-  // Hamming distances bit-for-bit in SQL; the xxhash64 default stays the
-  // scale path (recall-tested in TextDedupSpec).
-  private def q93(s: SparkSession, dir: String): DataFrame =
-    NearDup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 3, bands = 4, family = graft.functions.PortableHashFamily)
-      .withColumn("hamming", col("hamming").cast("long"))
-
-  // ---- §2.9 add_fips_ids / clean_eia_counties + find_timezone: messy name
-  // → simplify → manual-fix map → broadcast code dim (zero-padded), plus
-  // static tz lookup with deterministic Etc/GMT longitude fallback (the
-  // timezonefinder stand-in). Dim = 25 TPC-H nations → ISO 3166-1 numeric.
-  private def q94(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GeoCodes
-    val dim = GeoCodes.nationDim(s)
-    val fixes = Map("untied states" -> "united states")
-    val raw = t(s, dir, "customer")
-      .join(broadcast(t(s, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .withColumn("raw_state",
-        when(col("c_custkey") % 7 === 0,
-          concat(lit("  "), lower(col("n_name")), lit("  ")))
-          .when(col("c_custkey") % 13 === 0 && col("n_name") === "UNITED STATES",
-            lit("UNTIED STATES"))
-          .otherwise(col("n_name")))
-      .withColumn("lon", (col("c_custkey") % 360 - 180).cast("double"))
-    // tz dim deliberately partial (codes < '500') so the longitude fallback
-    // path is exercised on real rows, like plants with no state in the ref.
-    val withFips = GeoCodes.addFipsIds(raw, "raw_state", dim,
-      outCol = "country_fips", width = 3, fixes = fixes)
-    GeoCodes.findTimezone(withFips, "raw_state", Some("lon"),
-        dim.where(col("code") < "500"), outCol = "timezone", fixes = fixes)
-      .select(col("c_custkey"), col("__name_clean").as("state_clean"),
-        col("country_fips"), col("timezone"))
-  }
-
-  // ---- dedup: embedding-cosine near-dup pairs — banded sign-bit blocking
-  // over portable Rademacher planes + exact cosine filter inside
-  // buckets. Fully replayed by the DuckDB oracle (same sign matrix via MD5).
-  private def q95(s: SparkSession, dir: String): DataFrame =
-    Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id",
-      "embedding", dim = 64, threshold = 0.4, nBits = 24, bands = 4)
-
-  // ---- §2.11 DistanceMatrix replacement under its own metric: p-stable
-  // euclidean LSH near pairs (grid buckets per table, exact |a-b| <= eps
-  // inside buckets). Portable grids → oracle-replayed end-to-end.
-  private def q96(s: SparkSession, dir: String): DataFrame =
-    Similarity.euclideanNearPairs(t(s, dir, "embeddings"), "vec_id",
-      "embedding", dim = 64, eps = 1.1, w = 2.0, tables = 8)
-
-  // ---- §2.11 full cross-year linkage orchestration -----------------------
-  // Reference: link_ids_cross_year graph (link_cross_year.py:299-360) —
-  // edges with same-year veto → connected components → duplicate-year
-  // split → orphan nearest-neighbor assignment, as ONE composition. Years
-  // are synthesized deterministically from vec_id; the portable Rademacher
-  // planes let the oracle replay every stage including the LSH blocking.
-  private def q97(s: SparkSession, dir: String): DataFrame =
-    graft.linkage.Linkage.linkIdsCrossYear(
-      t(s, dir, "embeddings")
-        .withColumn("year", (col("vec_id") % 4 + 2019).cast("int")),
-      "vec_id", "year", "embedding",
-      dim = 64, simThreshold = 0.4, assignThreshold = 0.3,
-      // exact orphan nearest-neighbor so the DuckDB oracle replays stage 4
-      // verbatim; the production default (blockOrphans = true) is the
-      // LSH-blocked path, oracle-checked on its own via q99
-      blockOrphans = false)
-
-  // ---- §2.11 blocked fuzzy join under Jaro–Winkler ------------------------
-  // The reference's actual record-linkage string metric (recordlinkage's
-  // jarowinkler, embed_dataframe.py:346-371); q47 is the levenshtein twin.
-  // The native JaroWinkler expression matches DuckDB's
-  // jaro_winkler_similarity bit-for-bit, so the filter and the rounded
-  // similarity replay exactly.
-  private def q98(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-      .select(col("c_nationkey").as("nkey"), col("c_custkey"), col("c_name"))
-    val sup = t(s, dir, "supplier")
-      .select(col("s_nationkey").as("nkey"), col("s_suppkey"), col("s_name"))
-    Linkage.blockedFuzzyJoinJw(c, sup, Seq("nkey"), "c_name", "s_name",
-        minSim = 0.77)
-      .select(col("nkey"), col("c_custkey"), col("s_suppkey"),
-        round(col("name_sim"), 6).as("name_sim"))
-  }
-
-  // ---- §2.11 orphan assignment, LSH scale path ---------------------------
-  // The banded sign-bit blocked variant of q66's brute-force nearest
-  // assignment (match_orphaned_records, link_cross_year.py:241-299): the
-  // orphans × clustered product never forms — candidates meet on the
-  // (band, bits) equi-join over portable Rademacher planes, so the DuckDB
-  // oracle replays blocking, scoring and top-1 exactly.
-  private def q99(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val orphans = emb.where(col("vec_id") < 50)
-    val clustered = emb.where(col("vec_id") >= 50)
-      .withColumn("cluster", col("vec_id") % 7)
-    Similarity.nearestAssignBlocked(orphans, clustered, "vec_id",
-      "embedding", "cluster", dim = 64, nBits = 24, bands = 4)
-  }
-
-  // ---- §2.11 orphan assignment with radius-1 band probing ----------------
-  // The multi-probe lever in its best-case placement: orphans are the
-  // BOUNDED side of the (band, bits) join, so probing every single-bit
-  // band flip costs 7x on a 50-row frame while the clustered index is
-  // untouched. Same q99 oracle with the flip CTE added (shared template).
-  private def q205(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val orphans = emb.where(col("vec_id") < 50)
-    val clustered = emb.where(col("vec_id") >= 50)
-      .withColumn("cluster", col("vec_id") % 7)
-    Similarity.nearestAssignBlocked(orphans, clustered, "vec_id",
-      "embedding", "cluster", dim = 64, nBits = 24, bands = 4,
-      bandProbe1 = true)
-  }
-
-  // ---- training-data pipeline: incremental batch-vs-history dedup -------
-  // The production dedup shape: a new ingest batch screened against the
-  // historical corpus (exact fingerprint probe, then MinHash band-bucket
-  // candidates, history never re-shuffled). Portable family → the oracle
-  // replays fingerprints, signatures, buckets, best-match and labels.
-  private def q100(s: SparkSession, dir: String): DataFrame = {
-    // single-file fixture scan = one task; spread the docs so the
-    // per-shingle MD5 grind (portable family) runs on every core
-    val docs = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-    NearDup.incrementalDedup(
-      docs.where(col("doc_id") >= 400), docs.where(col("doc_id") < 400),
-      "doc_id", "text", shingleN = 3, numHashes = 32, bands = 8,
-      threshold = 0.35, family = graft.functions.PortableHashFamily)
-  }
-
-  // ---- §2.10 connected components, star-contraction path -----------------
-  // Same labeling contract as q45 but on a deliberately chain-shaped graph
-  // (customers chained by consecutive key within (nation, key mod 25) —
-  // hundreds of long paths), exercising ConnectedComponents.runStars: the
-  // large-star/small-star alternation whose round count is O(log n)
-  // regardless of diameter. The oracle replays reachability with a
-  // recursive CTE.
-  private def q101(s: SparkSession, dir: String): DataFrame = {
-    val edges = t(s, dir, "customer")
-      .select(col("c_nationkey").as("nk"), (col("c_custkey") % 25).as("lane"),
-        col("c_custkey").as("a"))
-      .withColumn("b", lead(col("a"), 1).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("nk"), col("lane")).orderBy(col("a"))))
-      .where(col("b").isNotNull)
-    ConnectedComponents.runStars(edges, "a", "b")
-  }
-
-  // ---- training-data pipeline: greedy sequence packing -------------------
-  // Concat-then-chunk into fixed 512-token context windows, 32 independent
-  // shards — per-doc placement (shard stream offsets, starting window,
-  // window span) as pure window arithmetic.
-  private def q102(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.packSequences(t(s, dir, "documents"), "doc_id", "text",
-      budget = 512, nShards = 32)
-
-  // ---- training-data pipeline: deterministic train/val/test split --------
-  // Salted portable-hash bucket per doc id → stable 80/10/10 membership
-  // that reruns, backfills and other engines reproduce exactly.
-  private def q103(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.deterministicSplit(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", Seq("train" -> 80, "val" -> 10, "test" -> 10))
-      .select("doc_id", "lang", "split_bucket", "split")
-
-  // ---- training-data pipeline: n-gram vocabulary (top-k by doc freq) -----
-  private def q104(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.ngramVocab(t(s, dir, "documents"), "doc_id", "text",
-      n = 2, k = 200)
-
-  // ---- as-of join (merge_asof / DuckDB ASOF JOIN twin) -------------------
-  // Each event picks the user's most recent order day at-or-before the
-  // event time. Right side pre-aggregated to unique (user, day) so the
-  // match is unambiguous; day totals in exact integer cents so both
-  // engines produce the identical double.
-  private def q105(s: SparkSession, dir: String): DataFrame = {
-    val right = t(s, dir, "orders")
-      .groupBy(col("o_custkey").as("user_id"), col("o_orderdate").as("ots"))
-      .agg(max(col("o_orderkey")).as("last_order_id"),
-        (sum(round(col("o_totalprice") * 100).cast("long")) / 100.0)
-          .as("day_total"))
-    val left = t(s, dir, "events").select("event_id", "user_id", "ts")
-    TemporalOps.asofJoin(left, right, Seq("user_id"), "ts", "ots",
-        matchedTsName = "order_ts")
-      .select("event_id", "user_id", "ts", "order_ts", "last_order_id",
-        "day_total")
-  }
-
-  // ---- range join: events inside anchor events' 4-hour follow-up window -
-  // Binned-blocking interval join (equi-join on (user, bucket) + exact
-  // BETWEEN inside buckets — never a nested loop); oracle is DuckDB's
-  // native inequality join. Buckets (6 h) deliberately misaligned with
-  // the interval length (4 h) so spanning intervals are exercised.
-  private def q106(s: SparkSession, dir: String): DataFrame = {
-    val events = t(s, dir, "events")
-    val intervals = events.where(col("event_id") % 37 === 0)
-      .select(col("user_id"), col("event_id").as("anchor_id"),
-        col("ts").as("start_ts"),
-        (col("ts") + expr("INTERVAL 4 HOURS")).as("end_ts"))
-    val points = events.select("event_id", "user_id", "ts")
-    TemporalOps.intervalJoin(points, intervals, Seq("user_id"),
-        "ts", "start_ts", "end_ts", bucketSeconds = 6L * 3600)
-      .select("event_id", "user_id", "ts", "anchor_id", "start_ts", "end_ts")
-  }
-
-  // ---- training-data pipeline: stratified deterministic sampling --------
-  // Corpus mixing: downsample English to 40%, keep 90% of zh, 70% of the
-  // rest — membership a pure salted-hash function of the doc id.
-  private def q107(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.stratifiedSample(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "lang", Map("en" -> 40, "zh" -> 90), defaultPercent = 70)
-      .select("doc_id", "lang", "split_bucket")
-
-  // ---- §2.13 GENERAL-polygon overlay: concave L-territories × counties ---
-  // Reference: overlay/self_union on arbitrary polygons (spatial.py:118-288).
-  // Concave L-shaped supplier territories (6-vertex rings) overlay 4×4
-  // county boxes through the grid-bucketed join; the exact area comes from
-  // the native triangulate-and-clip expression (PolygonIntersectArea). The
-  // oracle replays each L as its two disjoint boxes with plain rectangle
-  // arithmetic — the general path must agree with the decomposition on
-  // every pair, including bbox-overlaps-but-notch-misses pairs (area 0).
-  private def q108(s: SparkSession, dir: String): DataFrame = {
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    // L-outline (CCW): full w×h box minus the top-right notch; equals the
-    // union of the bottom w×2 strip and the left 2×(h-2) upper strip
-    val terr = t(s, dir, "supplier").select(col("s_suppkey"),
-        ((col("s_suppkey") % 50) * 2.0).as("ax"),
-        ((col("s_suppkey") % 30) * 2.0).as("ay"),
-        (lit(4.0) + col("s_suppkey") % 3).as("w"),
-        (lit(4.0) + col("s_suppkey") % 2).as("h"))
-      .select(col("s_suppkey"), array(
-        pt(col("ax"), col("ay")),
-        pt(col("ax") + col("w"), col("ay")),
-        pt(col("ax") + col("w"), col("ay") + 2.0),
-        pt(col("ax") + 2.0, col("ay") + 2.0),
-        pt(col("ax") + 2.0, col("ay") + col("h")),
-        pt(col("ax"), col("ay") + col("h"))).as("ring"))
-    val county = t(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"),
-        ((col("c_custkey") % 40) * 2.0).as("bx"),
-        ((col("c_custkey") % 24) * 2.0).as("by0"))
-      .select(col("c_custkey"), col("c_acctbal"), array(
-        pt(col("bx"), col("by0")), pt(col("bx") + 4.0, col("by0")),
-        pt(col("bx") + 4.0, col("by0") + 4.0),
-        pt(col("bx"), col("by0") + 4.0)).as("ring"))
-    // integer-grid true areas are ≥ 1, so round(·,6) lands exactly on the
-    // oracle's rectangle arithmetic; right_area is shoelace-exact 16.0
-    val ia = round(col("inter_area"), 6)
-    graft.spatial.SpatialOps.overlayPolygons(terr, county, "s_suppkey",
-        "c_custkey", Seq("c_acctbal"), cell = 8.0)
-      .select(col("s_suppkey"), col("c_custkey"), ia.as("inter_area"),
-        (ia / col("right_area")).as("area_fraction"),
-        (col("c_acctbal") * (ia / col("right_area"))).as("acctbal_alloc"))
-  }
-
-  // ---- §2.13 MultiPolygon explode + ratio split ---------------------------
-  // Reference: explode/polygonize with area-fraction rescaling
-  // (spatial.py:52-117). Each supplier's territory is a 3-part
-  // multipolygon (array of rings); part areas, the total, and the rescaled
-  // value are all within-row higher-order-function arithmetic — no shuffle.
-  private def q109(s: SparkSession, dir: String): DataFrame = {
-    def box(ox: Column, oy: Column, w: Column, h: Column) = array(
-      struct(ox.as("x"), oy.as("y")),
-      struct((ox + w).as("x"), oy.as("y")),
-      struct((ox + w).as("x"), (oy + h).as("y")),
-      struct(ox.as("x"), (oy + h).as("y")))
-    val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_acctbal"),
-      (col("s_suppkey") % 20).cast("double").as("ox"),
-      (col("s_suppkey") % 10).cast("double").as("oy"),
-      (lit(1) + col("s_suppkey") % 3).cast("double").as("w0"),
-      (lit(1) + col("s_suppkey") % 2).cast("double").as("h0"),
-      (lit(1) + col("s_suppkey") % 4).cast("double").as("h1"),
-      (lit(1) + col("s_suppkey") % 5).cast("double").as("h2"))
-    val multi = sup.withColumn("rings", array(
-        box(col("ox"), col("oy"), col("w0"), col("h0")),
-        box(col("ox") + 30.0, col("oy"), lit(2.0), col("h1")),
-        box(col("ox"), col("oy") + 30.0, lit(3.0), col("h2"))))
-      .select("s_suppkey", "s_acctbal", "rings")
-    graft.spatial.SpatialOps.explodeMultiPolygon(multi, "s_suppkey",
-        Seq("s_acctbal"))
-      .select(col("s_suppkey"), col("part_index"), col("ring_area"),
-        col("area_fraction"), col("s_acctbal_part").as("acctbal_part"))
-  }
-
-  // ---- §2.13 general-polygon dissolve: union area per nation -------------
-  // Reference: dissolve how='union' on concave shapes (spatial.py:173-206).
-  // The q108 L-territories (overlapping within a nation) dissolve per
-  // nation via the vertical-slab sweep; the oracle counts distinct covered
-  // unit cells of each L's two-box decomposition — the sweep must match
-  // cell for cell on the integer grid.
-  private def q110(s: SparkSession, dir: String): DataFrame = {
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val terr = t(s, dir, "supplier").select(col("s_nationkey"),
-        ((col("s_suppkey") % 50) * 2.0).as("ax"),
-        ((col("s_suppkey") % 30) * 2.0).as("ay"),
-        (lit(4.0) + col("s_suppkey") % 3).as("w"),
-        (lit(4.0) + col("s_suppkey") % 2).as("h"))
-      .select(col("s_nationkey"), array(
-        pt(col("ax"), col("ay")),
-        pt(col("ax") + col("w"), col("ay")),
-        pt(col("ax") + col("w"), col("ay") + 2.0),
-        pt(col("ax") + 2.0, col("ay") + 2.0),
-        pt(col("ax") + 2.0, col("ay") + col("h")),
-        pt(col("ax"), col("ay") + col("h"))).as("ring"))
-    graft.spatial.SpatialOps.unionAreaPolygonsByGroup(terr, "s_nationkey")
-  }
-
-  // ---- §2.13 service-territory compilation on GENERAL geometry -----------
-  // Reference: compile_geoms + territory dissolve + demand weighting
-  // (analysis/service_territory.py:65-374). Counties are concave L rings;
-  // each belongs to a utility; the utility's territory is the exact UNION
-  // of its (possibly overlapping) counties (vertical-slab sweep); county
-  // demand allocates by countyArea / territoryArea. The q91 capstone keeps
-  // the reference's precomputed-weight state-demand path; this one runs
-  // the geometry end to end.
-  private def q111(s: SparkSession, dir: String): DataFrame = {
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val counties = t(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"),
-        (col("c_custkey") % 25).as("utility_id"),
-        ((col("c_custkey") % 40) * 2.0).as("ax"),
-        ((col("c_custkey") % 24) * 2.0).as("ay"),
-        (lit(4.0) + col("c_custkey") % 3).as("w"),
-        (lit(4.0) + col("c_custkey") % 2).as("h"))
-      .withColumn("ring", array(
-        pt(col("ax"), col("ay")),
-        pt(col("ax") + col("w"), col("ay")),
-        pt(col("ax") + col("w"), col("ay") + 2.0),
-        pt(col("ax") + 2.0, col("ay") + 2.0),
-        pt(col("ax") + 2.0, col("ay") + col("h")),
-        pt(col("ax"), col("ay") + col("h"))))
-    val territory = graft.spatial.SpatialOps.unionAreaPolygonsByGroup(
-        counties.select(col("utility_id"), col("ring")), "utility_id")
-      .select(col("utility_id"), col("union_area").as("territory_area"))
-    val frac = col("county_area") / col("territory_area")
-    counties
-      .withColumn("county_area", graft.spatial.SpatialOps.shoelaceArea(col("ring")))
-      .join(territory, Seq("utility_id"))
-      .select(col("utility_id"), col("c_custkey"), col("county_area"),
-        col("territory_area"), frac.as("area_fraction"),
-        (col("c_acctbal") * frac).as("demand_alloc"))
-  }
-
-  // ---- §2.13 self_union with ratio split ---------------------------------
-  // Reference: self_union(gdf, ratios) (spatial.py:118-172) — overlay a
-  // layer with ITSELF: overlapping polygons split into atomic pieces, each
-  // piece owned by every source polygon covering it, values prorated by
-  // pieceArea / ownerArea. Composed from the implemented primitives
-  // (overlayPolygons self-join for the shared pieces, shoelace totals for
-  // the exclusive remainders). The fixture pairs L-territories so overlaps
-  // are pairwise-only (the reference's common case); the oracle replays
-  // every piece with two-box rectangle arithmetic.
-  private def q112(s: SparkSession, dir: String): DataFrame = {
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    def ringOf(ox: Column, oy: Column) = array(
-      pt(ox, oy), pt(ox + 5.0, oy), pt(ox + 5.0, oy + 2.0),
-      pt(ox + 2.0, oy + 2.0), pt(ox + 2.0, oy + 5.0), pt(ox, oy + 5.0))
-    val geo = t(s, dir, "supplier").select(col("s_suppkey").as("pid"),
-        col("s_acctbal"),
-        (col("s_suppkey") / 2).cast("long").as("pr"),
-        (col("s_suppkey") % 2).cast("long").as("side"))
-      .select(col("pid"), col("s_acctbal"),
-        ((col("pr") % 30) * 12.0 + col("side") * (lit(1.0) + col("pr") % 3)).as("ox"),
-        ((col("pr") % 20) * 10.0 + col("side") * (col("pr") % 3)).as("oy"))
-      .withColumn("ring", ringOf(col("ox"), col("oy")))
-    val polysA = geo.select(col("pid").as("pid_a"), col("ring"))
-    val polysB = geo.select(col("pid").as("pid_b"), col("ring"))
-    val shared = graft.spatial.SpatialOps.overlayPolygons(polysA, polysB,
-        "pid_a", "pid_b", Seq.empty, cell = 16.0)
-      .where(col("pid_a") < col("pid_b"))
-      .select(col("pid_a"), col("pid_b"),
-        round(col("inter_area"), 6).as("piece_area"))
-    // every L has area 5·2 + 2·3 = 16 (shoelace-exact)
-    val ownArea = lit(16.0)
-    val sharedRows = shared
-      .select(col("pid_a").as("pid"), col("pid_b").as("piece_partner"),
-        col("piece_area"))
-      .unionByName(shared.select(col("pid_b").as("pid"),
-        col("pid_a").as("piece_partner"), col("piece_area")))
-    val sharedTotal = sharedRows.groupBy(col("pid"))
-      .agg(sum(col("piece_area")).as("__shared"))
-    val exclusive = geo.select(col("pid"))
-      .join(sharedTotal, Seq("pid"), "left")
-      .select(col("pid"), lit(-1L).as("piece_partner"),
-        (ownArea - coalesce(col("__shared"), lit(0.0))).as("piece_area"))
-    exclusive.unionByName(sharedRows)
-      .join(geo.select(col("pid"), col("s_acctbal")), Seq("pid"))
-      .select(col("pid"), col("piece_partner"), col("piece_area"),
-        (col("piece_area") / ownArea).as("area_fraction"),
-        (col("s_acctbal") * (col("piece_area") / ownArea)).as("acctbal_part"))
-  }
-
-  // ---- winnowing fingerprints (MOSS) near-dup candidate pairs ------------
-  // Rolling-gram fingerprint selection + shared-count pairing
-  // (TextAnalysis.winnowFingerprints / NearDup.winnowPairs). Portable hash
-  // family so the DuckDB oracle replays the full pipeline — gram hashes,
-  // window minima, df cap, pair counts — bit-for-bit. On this fixture every
-  // pair with n_shared >= 5 has true token-Jaccard >= 0.9 (measured), so
-  // the sketch finds exactly the planted near-dups.
-  private def q113(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.NearDup.winnowPairs(t(s, dir, "documents"), "doc_id", "text",
-      k = 16, w = 8, minShared = 5, maxDf = 20,
-      family = graft.functions.PortableHashFamily)
-
-  // ---- Z-order layout key (write-time clustering for data skipping) ------
-  // Morton interleave of two bucketed dimensions as plain long arithmetic
-  // (operators.Layout.zorderValue) — the key behind `clusterByZOrder`,
-  // which range-partitions writes so multi-dimensional predicates prune
-  // files at 100 TB. Every bit position is a plan-time constant, so the
-  // oracle replays the interleave with the same mask-and-shift sum.
-  private def q114(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(
-      col("l_orderkey"), col("l_linenumber"),
-      graft.operators.Layout.zorderValue(
-        Seq(pmod(col("l_partkey"), lit(1024)),
-          pmod(col("l_suppkey"), lit(1024))), bits = 10).as("zval"))
-
-  // ---- KMV distinct-count sketch (mergeable approx COUNT DISTINCT) -------
-  // k=256 sketches beside the exact counts: l_partkey (distinct ≫ k →
-  // estimator path) and l_suppkey (distinct < k → the sketch IS the exact
-  // count). The portable hash family lets the oracle replay hash values,
-  // the k-th minimum and the (k−1)·2⁶⁰/h_k estimate bit-for-bit.
-  private def q115(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-      .agg(
-        graft.functions.KmvSketch(col("l_partkey"), 256,
-          graft.functions.PortableHashFamily).as("est_parts"),
-        graft.functions.KmvSketch(col("l_suppkey"), 256,
-          graft.functions.PortableHashFamily).as("est_supps"),
-        countDistinct(col("l_partkey")).as("exact_parts"),
-        countDistinct(col("l_suppkey")).as("exact_supps"))
-
-  // ---- KMV two-level rollup: persisted sketches re-combine exactly ------
-  // Sketch l_partkey per (flag, order-year) — the "one sketch per
-  // partition/day" persistable form — then merge the materialized states
-  // per flag. The ORACLE is the single-pass global formula: KMV
-  // union-truncate is lossless (every global k-minimum hash is inside its
-  // part's k-minimum set), so the two-level estimate must equal the
-  // one-pass estimate bit-for-bit — the mergeability proof, oracle-graded.
-  private def q116(s: SparkSession, dir: String): DataFrame = {
-    val states = t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"), year(col("l_shipdate")).as("yr"))
-      .agg(graft.functions.KmvSketch.state(col("l_partkey"), 256,
-        graft.functions.PortableHashFamily).as("sk"))
-    states.groupBy(col("l_returnflag"))
-      .agg(graft.functions.KmvSketch.merged(col("sk"), 256,
-        graft.functions.PortableHashFamily).as("est_parts"),
-        count(lit(1)).as("n_sketches"))
-  }
-
-  // ---- SCD2 validity intervals (warehouse dimension-history build) -------
-  // The interval form of the changelog family: q11's change rows closed
-  // into [effective_from, effective_to) with version numbers and a
-  // current flag — one hash exchange, both windows share the clustering.
-  private def q117(s: SparkSession, dir: String): DataFrame =
-    TemporalOps.scd2Intervals(t(s, dir, "events"),
-        keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-        tsCol = "ts", tracked = Seq("event_type"))
-      .select("user_id", "event_id", "event_type", "effective_from",
-        "effective_to", "version", "is_current")
-
-  // ---- WKB / GeoParquet geometry bridge ----------------------------------
-  // The reference moves geometry as GeoParquet WKB (io_managers.py:395-397,
-  // spatial.py:15-50); graft's kit works on open array<struct<x,y>> rings.
-  // This query drives the bijection both ways at the BYTE level: encode the
-  // q108 L-territory as a WKB Polygon and an L+box MultiPolygon, emit the
-  // hex (the oracle rebuilds the same bytes arithmetically — IEEE754 bit
-  // patterns of the integer-grid coords), then DECODE the bytes back and
-  // report shoelace areas from the decoded rings — so a hex match proves
-  // the writer and an area match proves the reader.
-  private def q118(s: SparkSession, dir: String): DataFrame = {
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val terr = t(s, dir, "supplier").select(col("s_suppkey"),
-      ((col("s_suppkey") % 50) * 2.0).as("ax"),
-      ((col("s_suppkey") % 30) * 2.0).as("ay"),
-      (lit(4.0) + col("s_suppkey") % 3).as("w"),
-      (lit(4.0) + col("s_suppkey") % 2).as("h"))
-    val (ax, ay, w, h) = (col("ax"), col("ay"), col("w"), col("h"))
-    val lring = array(
-      pt(ax, ay), pt(ax + w, ay), pt(ax + w, ay + 2.0), pt(ax + 2.0, ay + 2.0),
-      pt(ax + 2.0, ay + h), pt(ax, ay + h))
-    val box = array(
-      pt(ax + 200.0, ay), pt(ax + 202.0, ay), pt(ax + 202.0, ay + 2.0),
-      pt(ax + 200.0, ay + 2.0))
-    val ring1 = element_at(element_at(col("dec.polys"), 1), 1)
-    terr
-      .withColumn("wkb", graft.plans.WkbFromPolygons(array(array(lring))))
-      .withColumn("mp_wkb",
-        graft.plans.WkbFromPolygons(array(array(lring), array(box))))
-      .withColumn("dec", graft.plans.WkbToPolygons(col("wkb")))
-      .withColumn("mdec", graft.plans.WkbToPolygons(col("mp_wkb")))
-      .select(col("s_suppkey"),
-        lower(hex(col("wkb"))).as("wkb_hex"),
-        col("dec.wkb_type").as("wkb_type"),
-        size(ring1).as("n_pts"),
-        graft.spatial.SpatialOps.shoelaceArea(ring1).as("area"),
-        lower(hex(col("mp_wkb"))).as("mp_hex"),
-        aggregate(col("mdec.polys"), lit(0.0), (acc, p) =>
-          acc + graft.spatial.SpatialOps.shoelaceArea(element_at(p, 1)))
-          .as("mp_area"))
-  }
-
-  // ---- §2.11 reference-parity cluster re-split (average linkage) ---------
-  // splitClustersAgglomerative is the sklearn-semantics form of
-  // split_clusters (link_cross_year.py:170-240): overmerged clusters
-  // re-cluster by AVERAGE-linkage agglomeration over cosine distance.
-  // Fixture: 3-member clusters (vec_id DIV 3) whose year key always
-  // duplicates (m0/m2 share parity), so every full cluster agglomerates;
-  // the merge ORDER for n=3 has a closed form the oracle replays with CASE
-  // logic over the three pairwise distances — including the deterministic
-  // first-pair tie rule and the mean-linkage second merge. Where greedy
-  // first-fit would force same-year members apart, average linkage may
-  // keep them together (sub [0,0,0]) — the documented disagreement, now
-  // oracle-graded on the parity path.
-  private def q119(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.NearDup.splitClustersAgglomerative(
-      t(s, dir, "embeddings").select(col("vec_id"),
-        expr("vec_id DIV 3").as("cluster"),
-        (col("vec_id") % 2 + 2019).cast("int").as("year"),
-        col("embedding")),
-      "cluster", "vec_id", "year", "embedding", distanceThreshold = 1.0)
-
-  // ---- §2.7 multi_index_stack (regex-driven melt), oracle-graded ---------
-  // meltRegex builds the stack projection at PLAN TIME from the column
-  // names matching the pattern; capture groups become key columns
-  // (helpers.py:88-164). The oracle replays the same melt as a UNION ALL
-  // of typed projections — one branch per matched column.
-  private def q120(s: SparkSession, dir: String): DataFrame = {
-    val wide = t(s, dir, "orders").select(col("o_orderkey"),
-      col("o_totalprice").cast("double").as("balance_2020_q1"),
-      (col("o_totalprice").cast("double") * 2.0).as("balance_2020_q2"),
-      (col("o_totalprice").cast("double") * 3.0).as("balance_2021_q1"),
-      col("o_custkey").cast("double").as("count_2021_q2"))
-    operators.Reshape.meltRegex(wide, Seq("o_orderkey"),
-      "^([a-z]+)_(\\d{4})_(q\\d)$", Seq("metric", "year", "quarter"), "value")
-  }
-
-  // ---- training-data pipeline: Gopher-style repetition/quality stats -----
-  // Word count, mean word length, dup-word/dup-2gram occurrence fractions,
-  // top-2gram concentration, symbol ratio, and the composite pass flag in
-  // exact integer arithmetic (arXiv:2112.11446 §A1.1). Thresholds chosen
-  // against the corpus distribution (dup-2gram p50 0.056 / p90 0.13) so
-  // the fixture exercises both outcomes.
-  private def q121(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.gopherStats(t(s, dir, "documents"), "doc_id", "text")
-
-  // ---- training-data pipeline: PII scan + redaction ----------------------
-  // Deterministic PII injection from the doc id (so every class has known
-  // planted counts, including zero), then the per-class counts + typed
-  // placeholder rewrite. Pure per-row regex, zero shuffle.
-  private def q122(s: SparkSession, dir: String): DataFrame = {
-    val id = col("doc_id")
-    val injected = t(s, dir, "documents").select(id, concat(col("text"),
-      when(id % 3 === 0, concat(lit(" reach user"), id.cast("string"),
-        lit("@mail.example.com"))).otherwise(lit("")),
-      when(id % 5 === 0, concat(lit(" ssn 123-45-"),
-        lpad((id % 10000).cast("string"), 4, "0"))).otherwise(lit("")),
-      when(id % 7 === 0, concat(lit(" call 202-555-"),
-        lpad((id % 10000).cast("string"), 4, "0"), lit(" from 10.0."),
-        (id % 256).cast("string"), lit("."),
-        ((id * 7) % 256).cast("string"))).otherwise(lit(""))).as("text"))
-    TextAnalysis.piiScan(injected, "text").drop("text")
-  }
-
-  // ---- training-data pipeline: corpus-level line dedup (C4 pass) ---------
-  // Documents are re-lined into 4-word chunks (the corpus has no newlines;
-  // both engines build identical lines), then every occurrence of any line
-  // with corpus frequency >= 3 is dropped and the text reassembled in
-  // order. At sf0.01 the pass removes 183 boilerplate-line occurrences.
-  private def q123(s: SparkSession, dir: String): DataFrame = {
-    val ws = split(col("text"), " ")
-    val lined = t(s, dir, "documents").select(col("doc_id"),
-      array_join(transform(
-        sequence(lit(0), ceil(size(ws) / lit(4.0)).cast("int") - 1),
-        i => array_join(slice(ws, i * lit(4) + 1, lit(4)), " ")), "\n")
-        .as("text"))
-    graft.dedup.NearDup.dedupCorpusLines(lined, "doc_id", "text", "\n",
-      minDf = 3)
-  }
-
-  // ---- training-data pipeline: temperature-weighted domain resampling ----
-  // A skewed 4-domain fixture (8:4:2:2 per 16 ids) flattened with
-  // alpha = 0.5 at a 50% token budget — rare domains keep a higher
-  // fraction, membership a pure salted-hash function of the doc id.
-  private def q124(s: SparkSession, dir: String): DataFrame = {
-    val m = col("doc_id") % 16
-    val d = t(s, dir, "documents").select(col("doc_id"),
-      when(m < 8, "big").when(m < 12, "mid").when(m < 14, "small")
-        .otherwise("rare").as("domain"))
-    graft.operators.Sampling.temperatureResample(d, "doc_id", "domain",
-        alpha = 0.5, budgetFrac = 0.5)
-      .select("doc_id", "domain", "n_domain", "keep_p", "u")
-  }
-
-  // ---- similarity: SQ8-quantized ANN (compressed-corpus scale path) ------
-  // Corpus embeddings ride as per-dimension affine int8 codes (4× fewer
-  // bytes at the scoring join); queries stay raw (asymmetric/ADC). Codes
-  // and dequantization are exact integer arithmetic on identically derived
-  // doubles, so DuckDB replays the whole compressed ranking bit-for-bit.
-  private def q125(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    graft.similarity.Similarity.sq8TopK(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5)
-  }
-
-  // ---- training-data pipeline: bigram-LM perplexity quality filter -------
-  // CCNet-style scoring with a corpus-trained add-k bigram LM; per-term
-  // logs are integer-rounded to 1e-9 before the per-doc sum, so the
-  // result is summation-order-proof. Threshold chosen against the corpus
-  // distribution (avg_logp p25..p75 spans -3.42..-3.38 at sf0.01) for a
-  // pass/fail mix at both scales.
-  private def q126(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.perplexityScore(t(s, dir, "documents"), "doc_id", "text",
-      addK = 0.5, passThreshold = -3.41)
-
-  // ---- training-data pipeline: length-bucketed batch layout audit --------
-  // Both batching policies (arrival order vs length-bucketed) over the
-  // same sharded corpus, with per-batch padding waste — the measured
-  // layout win of bucketed batching. Pure integer window arithmetic.
-  private def q127(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val len = size(split(col("text"), " "))
-    val naive = operators.Layout.batchByLength(d, "doc_id", len,
-        batchSize = 16, nShards = 8, byLength = false)
-      .withColumn("policy", lit("naive"))
-    val bucketed = operators.Layout.batchByLength(d, "doc_id", len,
-        batchSize = 16, nShards = 8, byLength = true)
-      .withColumn("policy", lit("bucketed"))
-    naive.unionByName(bucketed)
-      .select("policy", "shard", "batch_id", "n_docs", "max_len",
-        "sum_len", "padding")
-  }
-
-  // ---- training-data pipeline: benchmark decontamination -----------------
-  // Every 37th doc plays the held-out eval benchmark; the rest is the
-  // training corpus. A train doc is contaminated when it shares any word
-  // 4-gram with the eval set (GPT-3 appendix-C style n-gram overlap;
-  // n = 4 gives a discriminating mix on this fixture — 2.7% flagged at
-  // sf0.01, 33% at sf0.1 — where 3-grams saturate and 5-grams vanish).
-  // Eval grams are a broadcast dim; the corpus is never shuffled by gram.
-  private def q128(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.dedup.NearDup.decontaminate(
-      docs.where(col("doc_id") % 37 =!= 0),
-      docs.where(col("doc_id") % 37 === 0),
-      "doc_id", "text", n = 4)
-  }
-
-  // ---- training-data pipeline: contamination overlap report ---------------
-  // The GPT-3 appendix-C analysis on q128's machinery: per training doc,
-  // its distinct 4-gram count, eval hits, the overlap share in exact
-  // integer nanos, and the 10% dirty flag — the triage report between
-  // any-hit dropping and keeping everything. Same train/eval split and
-  // broadcast shape as q128.
-  private def q196(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.dedup.NearDup.contaminationReport(
-      docs.where(col("doc_id") % 37 =!= 0),
-      docs.where(col("doc_id") % 37 === 0),
-      "doc_id", "text", n = 4)
-  }
-
-  // ---- training-data pipeline: leakage-safe split ------------------------
-  // Split assignment keyed on the near-dup cluster canonical (3-gram
-  // Jaccard >= 1/4, same edge semantics as q69), so no near-duplicate pair
-  // ever straddles train/test. Singletons hash exactly like q103's plain
-  // split on the same salt.
-  private def q129(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.leakageSafeSplit(t(s, dir, "documents"),
-      "doc_id", "text",
-      splits = Seq("train" -> 80, "val" -> 10, "test" -> 10))
-
-  // ---- training-data pipeline: SemDeDup semantic dedup -------------------
-  // Clustered embedding dedup (arXiv:2303.09540): integer-grid Lloyd's
-  // (lowest-id seeds, one update round) bounds the pair search to
-  // within-cluster; candidates additionally agree on >=1 band of the q95
-  // portable sign-bit signature (a (cluster, band, bits) equi-join — no
-  // unbanded self-join anywhere), then cosine >= 0.4 drops the higher id.
-  // Iteration trace AND banding are replayed bit-for-bit by the oracle.
-  // Round 17: the cluster count is DATA-SCALED — max(8, ceil(n/250)) — so
-  // expected cluster size (and with it per-doc candidate volume) stays
-  // constant as the corpus grows; k = 8 at sf0.01/sf0.1 (unchanged
-  // results), k = 80 at sf1 (the production operating mode the recorded
-  // exponent now reflects). The oracle derives the SAME k from its own
-  // count, so the trace stays bit-replayable at every scale.
-  private val semDedupKFloor = 8
-  private val semDedupTargetRows = 250
-  private def q130(s: SparkSession, dir: String): DataFrame =
-    graft.similarity.Similarity.semDedup(t(s, dir, "embeddings"),
-      "vec_id", "embedding", k = semDedupKFloor, iters = 1, tau = 0.4,
-      bandedDim = Some(64), targetClusterRows = semDedupTargetRows)
-
-  // ---- layout: Bloom-filter file-skipping manifest + probe ---------------
-  // The predicate class min/max stats can't prune: point lookups on a
-  // high-cardinality key interleaved across files. Per-shard Bloom bits
-  // (portable seeded hashes, m=1024, k=3) + a count-match probe; each
-  // probe's true shard always qualifies (no false negatives), extra rows
-  // are the measured false-positive cost of the filter's saturation.
-  private def q131(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val bits = operators.Layout.bloomBits(docs,
-      pmod(col("doc_id"), lit(8L)).as("file"), col("doc_id"),
-      mBits = 1024, kHashes = 3)
-    val probes = docs.where(col("doc_id") % 101 === 0)
-      .select(col("doc_id").as("probe_id"))
-    operators.Layout.bloomProbe(bits, probes, "probe_id",
-        mBits = 1024, kHashes = 3)
-      .withColumn("is_true_shard", pmod(col("probe_id"), lit(8L)) === col("file"))
-      .select(col("probe_id"), col("file").as("shard"), col("is_true_shard"))
-  }
-
-  // ---- training-data pipeline: fixed-size per-stratum corpus cap ---------
-  // Exactly min(30, |lang|) docs per language by bottom-k salted hash —
-  // the absolute-budget companion to q107's fixed-rate stratified sample.
-  private def q132(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.capPerStratum(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "lang", cap = 30)
-      .select(col("doc_id"), col("lang"), col("sample_rank"))
-
-  // ---- training-data pipeline: span-level repeated-substring dedup -------
-  // Positional 16-gram frequency re-expression of suffix-array substring
-  // dedup (arXiv:2107.06499): maximal spans whose every 16-gram occurs in
-  // >= 2 docs. Portable family for the oracle replay; xxhash64 default.
-  private def q133(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.NearDup.repeatedSpans(t(s, dir, "documents"),
-      "doc_id", "text", k = 16, minDf = 2,
-      family = graft.functions.PortableHashFamily)
-
-  // ---- training-data pipeline: sliding-window chunking -------------------
-  // RAG / long-context segmentation: 64-token windows advancing by 48 so
-  // consecutive chunks share 16 tokens; every token covered, final window
-  // may be short, empty docs still yield one chunk. Pure map — one
-  // generator, zero shuffles (plan-asserted).
-  private def q134(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.chunkDocuments(t(s, dir, "documents"), "doc_id", "text",
-      chunkSize = 64, overlap = 16)
-
-  // ---- training-data pipeline: budget-capped quality selection -----------
-  // "Best docs until 40k tokens": rank by (quality desc, id), keep while
-  // the preceding cumulative token count is under budget. Bucketed exact
-  // form — only the single boundary score-bucket is window-ranked; the
-  // oracle replays the equivalent naive global window.
-  private def q135(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "documents").select(col("doc_id"),
-      TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-      TextAnalysis.qualityScore(col("text")).as("score"))
-    graft.operators.Sampling.budgetSelect(base, "doc_id", "n_tokens",
-      "score", budget = 40000L)
-  }
-
-  // ---- training-data pipeline: URL canonicalization + eTLD+1 ------------
-  // Web-corpus identity: URL-level dedup / domain mixing must key on the
-  // CANONICAL url (else cosmetic variants count separately). Synthesized
-  // URLs exercise scheme case, default ports, www prefixes, empty paths,
-  // queries, fragments, multi-label public suffixes and a malformed lane.
-  private def q136(s: SparkSession, dir: String): DataFrame = {
-    val d = col("doc_id")
-    val host = element_at(array(lit("Example.COM"),
-      lit("news.example.co.uk"), lit("www.Data.example.org"),
-      lit("blog.example.com"), lit("cdn.example.net")), (d % 5 + 1).cast("int"))
-    val scheme = when(d % 2 === 0, lit("HTTP")).otherwise(lit("https"))
-    val port = when(d % 3 === 0,
-      when(d % 2 === 0, lit(":80")).otherwise(lit(":443"))).otherwise(lit(""))
-    val path = when(d % 4 === 0, lit(""))
-      .otherwise(concat(lit("/Page/"), (d % 50).cast("string")))
-    val query = when(d % 7 === 0,
-      concat(lit("?id="), (d % 9).cast("string"))).otherwise(lit(""))
-    val frag = when(d % 6 === 0,
-      concat(lit("#Sec"), (d % 4).cast("string"))).otherwise(lit(""))
-    val base = t(s, dir, "documents").select(d,
-      when(d % 11 === 0, lit("not a url"))
-        .otherwise(concat(scheme, lit("://"), host, port, path, query, frag))
-        .as("url_raw"))
-    base.select(d, col("url_raw"),
-      TextAnalysis.canonicalizeUrl(col("url_raw")).as("url_canonical"),
-      TextAnalysis.urlHost(col("url_raw")).as("host"))
-      .withColumn("registered_domain",
-        TextAnalysis.registeredDomain(col("host")))
-  }
-
-  // ---- training-data pipeline: HTML strip + entity decode ----------------
-  // First pass of every web-corpus text pipeline: tags -> spaces (word
-  // boundaries survive <br>), common entities decode with &amp; LAST,
-  // whitespace collapses. Deterministic HTML wrapping + entity injection
-  // around the fixture text so planted tag/entity counts are known.
-  private def q137(s: SparkSession, dir: String): DataFrame = {
-    val d = col("doc_id")
-    val html = concat(
-      lit("<html><body class=\"c\"><p>"), col("text"),
-      when(d % 3 === 0, lit(" &amp; more &lt;raw&gt;")).otherwise(lit("")),
-      when(d % 4 === 0, lit("<br/>line&nbsp;two")).otherwise(lit("")),
-      lit("</p></body></html>"))
-    t(s, dir, "documents").select(d, html.as("html"))
-      .select(d,
-        size(regexp_extract_all(col("html"), lit("<[^>]*>"), lit(0)))
-          .cast("long").as("n_tags"),
-        size(regexp_extract_all(col("html"),
-          lit("&[a-z]+;|&#[0-9]+;"), lit(0))).cast("long").as("n_entities"),
-        TextAnalysis.stripHtml(col("html")).as("clean_text"))
-  }
-
-  // ---- training-data pipeline: BM25 retrieval ----------------------------
-  // Okapi BM25 (Lucene idf form) for a fixed 3-term query over documents,
-  // top-50. Corpus explodes to tokens but is filtered to the broadcast
-  // term set before any shuffle; top-k is distributed TakeOrdered.
-  private def q138(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-      Seq("spark", "window", "merge"), k = 50)
-
-  // ---- training-data pipeline: weighted sample w/o replacement -----------
-  // Efraimidis–Spirakis exponential keys, 20 docs per language, weight =
-  // chars (longer docs proportionally likelier). Deterministic portable-
-  // hash uniforms; same WindowGroupLimit map-side cap shape as q132.
-  private def q139(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-      greatest(col("n_chars"), lit(1L)).as("w"))
-    graft.operators.Sampling.weightedSample(base, "doc_id", "lang", "w",
-      k = 20)
-  }
-
-  // ---- training-data pipeline: pooled embedding centroids ----------------
-  // Exact element-wise mean embedding per label (chunk->doc pooling /
-  // class centroids): integer-quantized sums so the result is partition-
-  // order-independent. Output exploded to (label, dim, value) scalars.
-  private def q140(s: SparkSession, dir: String): DataFrame =
-    graft.similarity.Similarity.pooledCentroids(
-      t(s, dir, "embeddings"), "label", "embedding")
-      .select(col("label").cast("long").as("label"), col("n_members"),
-        posexplode(col("centroid")).as(Seq("dim", "value")))
-      .select(col("label"), col("n_members"), col("dim").cast("long").as("dim"),
-        col("value"))
-
-  // ---- CDC: apply a changelog to a base snapshot (MERGE/upsert) ----------
-  // lineitem rows play the change stream against the orders snapshot:
-  // l_linenumber is the per-key sequence, every 5th supplier's change is
-  // a delete, negative keys exercise the insert lane (never in base).
-  // Last change per key wins; upserts replace payload wholesale.
-  private def q141(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    // -k-1 keeps the insert lane strictly negative (l_orderkey starts at
-    // 0, so plain -k would collide key 0 with itself)
-    val ch = t(s, dir, "lineitem").select(
-      when(col("l_partkey") % 13 === 0, -col("l_orderkey") - 1)
-        .otherwise(col("l_orderkey")).as("o_orderkey"),
-      col("l_linenumber").cast("long").as("seq"),
-      when(col("l_suppkey") % 5 === 0, lit("D")).otherwise(lit("U")).as("op"),
-      col("l_extendedprice").as("o_totalprice"),
-      col("l_returnflag").as("o_orderstatus"))
-    // l_linenumber repeats within an order in this fixture, so the order
-    // is totalized over the carried columns — rows still tied after all
-    // four keys are identical in every output-relevant field
-    TemporalOps.applyChangelog(base, ch, keys = Seq("o_orderkey"),
-      order = Seq(col("seq").desc, col("op").asc,
-        col("o_totalprice").desc, col("o_orderstatus").desc),
-      opCol = "op", dataCols = Seq("o_totalprice", "o_orderstatus"))
-  }
-
-  // ---- SCD2 time-travel: snapshot at an instant --------------------------
-  // The q117 dimension history read back "as of" mid-January: one narrow
-  // interval filter over the compressed history (row-group prunable at
-  // scale), no shuffle beyond the history build itself.
-  private def q142(s: SparkSession, dir: String): DataFrame =
-    TemporalOps.snapshotAt(
-      TemporalOps.scd2Intervals(t(s, dir, "events"),
-        keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
-        tsCol = "ts", tracked = Seq("event_type")),
-      at = lit("2024-01-15 00:00:00").cast("timestamp"))
-      .select("user_id", "event_id", "event_type", "effective_from",
-        "effective_to", "version")
-
-  // ---- training-data pipeline: BPE merge-table training ------------------
-  // Sennrich subword BPE on the word-frequency dictionary: 5 merge rounds,
-  // each = one pair-count aggregate over the checkpointed vocab frame +
-  // a 1-row TakeOrdered collect. The corpus is scanned exactly once.
-  private def q143(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.bpeMergeTable(t(s, dir, "documents"), "text", merges = 5)
-
-  // ---- training-data pipeline: BPE subword encoding ----------------------
-  // The q143 merge table (trained on this corpus, collected as 5 plan-time
-  // literal pairs) replayed over every document: pure per-row map, zero
-  // shuffles in the encode pass.
-  private def q144(s: SparkSession, dir: String): DataFrame = {
-    val merges = TextAnalysis.bpeMergeTable(t(s, dir, "documents"), "text",
-        merges = 5)
-      .orderBy("step").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    TextAnalysis.bpeEncode(t(s, dir, "documents"), "doc_id", "text", merges)
-  }
-
-  // ---- training-data pipeline: count-min sketch frequency estimates -----
-  // 4×32 CMS over the corpus words; the 15 exact-top words get sketch
-  // estimates next to their true counts (estimate >= exact always — CMS
-  // can only over-count; width 32 vs ~30 word types makes 2 of 15
-  // collide so both lanes are exercised). Sketch shuffle is bounded at
-  // depth×width rows per mapper regardless of corpus size. This is the
-  // oracle-replay lane (portable family: ONE md5 per row + affine
-  // members); production default is codegen xxhash64 (KmvSketchSpec).
-  private def q145(s: SparkSession, dir: String): DataFrame = {
-    val (depth, width) = (4, 32)
-    val words = t(s, dir, "documents")
-      .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
-      .where(length(col("word")) > 0)
-    val fam = graft.functions.PortableHashFamily
-    val sk = graft.functions.CountMin.sketch(words, "word", depth, width,
-      family = fam)
-    val top = words.groupBy(col("word")).agg(count(lit(1)).as("exact_count"))
-      .orderBy(col("exact_count").desc, col("word").asc).limit(15)
-    graft.functions.CountMin.estimate(sk, top, "word", depth, width,
-        family = fam)
-      .withColumn("overestimated", col("cms_estimate") > col("exact_count"))
-      .select("word", "exact_count", "cms_estimate", "overestimated")
-  }
-
-  // ---- analytics: ordered-step funnel ------------------------------------
-  // view -> click -> purchase within 72h of the first view, greedy-
-  // earliest chain per user; one exchange, three stacked windows.
-  private def q146(s: SparkSession, dir: String): DataFrame =
-    operators.WindowOps.funnel(t(s, dir, "events"), "user_id", "ts",
-      "event_type", Seq("view", "click", "purchase"), within = "72 hours")
-
-  // ---- checks: single-pass table profile ---------------------------------
-  // One scan + one aggregate profiles five orders columns: nulls, KMV
-  // distinct estimates (portable family -> oracle-replayable; the double
-  // column is excluded because double->string renderings differ across
-  // engines), typed min/max. Never a multi-count(distinct) Expand.
-  private def q147(s: SparkSession, dir: String): DataFrame =
-    Profile.profileTable(t(s, dir, "orders"),
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate",
-        "o_orderpriority"),
-      k = 256, family = graft.functions.PortableHashFamily)
-
-  // ---- graph: integer-quantized PageRank ---------------------------------
-  // Customer–supplier bipartite graph from distinct (custkey, suppkey)
-  // trade pairs, both directions; 3 exact-integer rank iterations, top-20.
-  // Every update is integer DIV, so the full trace replays in SQL.
-  // Suppliers live in the NEGATIVE id namespace (-suppkey): a sign
-  // encoding cannot collide with positive custkeys at ANY scale factor,
-  // unlike an additive offset that a large-enough key range overruns.
-  private def q148(s: SparkSession, dir: String): DataFrame = {
-    val pairs = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"),
-        (-col("l_suppkey")).cast("long").as("supp"))
-      .distinct()
-    // both edge directions via ONE generator over a single-reference
-    // `pairs` (round 18; the r17 explode-instead-of-union discipline):
-    // the unionByName form re-planned the lineitem⋈orders join + distinct
-    // once per direction
-    val edges = pairs.select(explode(array(
-        struct(col("cust").cast("long").as("src"), col("supp").as("dst")),
-        struct(col("supp").as("src"), col("cust").cast("long").as("dst"))))
-        .as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-    graft.graph.PageRank.run(edges, iters = 3)
-      .orderBy(col("rank").desc, col("node").asc).limit(20)
-      .withColumn("node_type",
-        when(col("node") < 0L, lit("supplier")).otherwise(lit("customer")))
-  }
-
-  // ---- checks: exact Pearson correlation matrix --------------------------
-  // All 6 pairs over 4 lineitem measures in one scan/one aggregate;
-  // moments are exact integer sums of quantized values, so the result is
-  // partition-order independent and SQL-replayable (unlike the built-in
-  // float corr). Long split-accumulator path (overflow-guarded, bit-
-  // identical to the decimal twin — ProfileSpec pins it): primitive adds
-  // in the hot loop instead of BigDecimal, ~2× faster at sf0.1.
-  private def q149(s: SparkSession, dir: String): DataFrame =
-    Profile.correlationMatrix(t(s, dir, "lineitem"),
-      Seq("l_quantity" -> 1, "l_extendedprice" -> 100,
-        "l_discount" -> 100, "l_tax" -> 100), longMoments = true)
-
-  // ---- checks: PSI distribution-drift report -----------------------------
-  // Reference = first half of January, current = second half with half of
-  // its error events dropped (planted drift); PSI per event_type bucket
-  // + total, add-one smoothed, exact integer counts.
-  private def q150(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val ref = ev.where(col("ts") < lit("2024-01-16").cast("timestamp"))
-    val cur = ev.where(col("ts") >= lit("2024-01-16").cast("timestamp"))
-      .where(!(col("event_type") === "error" && col("event_id") % 2 === 0))
-    Profile.psiDrift(ref, cur, "event_type")
-  }
-
-  // ---- checks: per-group OLS trend fit -----------------------------------
-  // extendedprice ~ quantity per returnflag: one hash aggregation of
-  // exact integer moments per group, closed-form slope/intercept/r².
-  // Long split-accumulator path (per-group overflow guard, bit-identical
-  // to the decimal twin — spec-pinned), like q149.
-  private def q151(s: SparkSession, dir: String): DataFrame =
-    Profile.olsByGroup(t(s, dir, "lineitem"), Seq("l_returnflag"),
-      x = "l_quantity" -> 1, y = "l_extendedprice" -> 100,
-      longMoments = true)
-
-  // ---- screens: EWMA smoother + deviation flag ---------------------------
-  // alpha = 1/4 over each user's event series; |x - ewma_prev| > 150
-  // flags spikes against the smoothed level (value sd ~ 49, so flags are
-  // the genuine tail). Sequential per-series fold in flatMapGroups.
-  private def q152(s: SparkSession, dir: String): DataFrame =
-    operators.TimeseriesScreens.ewmaScreen(t(s, dir, "events"),
-      "user_id", "ts", "event_id", "value", threshold = 150.0)
-
-  // ---- checks: chi-square independence + Cramér's V ----------------------
-  // lang × source association over documents: full R×C grid including
-  // never-observed cells (they still contribute E), bucket-space joins.
-  private def q153(s: SparkSession, dir: String): DataFrame =
-    Profile.chiSquare(t(s, dir, "documents"), "lang", "source")
-
-  // ---- training-data pipeline: hard-negative mining ----------------------
-  // Top-5 most-similar different-label vectors for each of 30 query
-  // embeddings — exact oracle twin; the banded production path is
-  // recall-tested in SimilaritySpec.
-  private def q154(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    graft.similarity.Similarity.hardNegatives(
-      emb.where(col("vec_id") < 30), emb,
-      idCol = "vec_id", embCol = "embedding", labelCol = "label", k = 5)
-  }
-
-  // ---- checks: snapshot diff report --------------------------------------
-  // "Yesterday's" orders vs a deterministically mutated "today": every
-  // 11th key removed, every 7th repriced (changed), negative-key inserts;
-  // row-level added/removed/changed/unchanged with changed-column lists.
-  private def q155(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val today = base
-      .where(col("o_orderkey") % 11 =!= 0)
-      .withColumn("o_totalprice",
-        when(col("o_orderkey") % 7 === 0, col("o_totalprice") + 1.0)
-          .otherwise(col("o_totalprice")))
-      .unionByName(base.where(col("o_orderkey") % 13 === 0)
-        .select((-col("o_orderkey") - 1).as("o_orderkey"),
-          col("o_totalprice"), col("o_orderstatus")))
-    TemporalOps.diffSnapshots(base, today, keys = Seq("o_orderkey"),
-      compareCols = Seq("o_totalprice", "o_orderstatus"))
-  }
-
-  // ---- capstone chain: harvest → allocation → mcoe, oracle-replayable ----
-  // The Etl.buildWide chain's metric stage as a graded query: supplier
-  // nationkey is HARVESTED (occurrence-consistency vote over a clean
-  // master + a noisy order-grain feed, q88's shape), order totals are
-  // allocated by quantity-share ownership, and the per-(supplier, year)
-  // rollup ratios come out of the allocated revenue. Allocation here is
-  // EXACT INTEGER cents — (tp_cents · qty) DIV qty_total per
-  // (order, supplier), truncated like the SQL's integer division — so
-  // the revenue sums are partition-order independent and the oracle
-  // hash-matches without tolerance (the production Etl path keeps the
-  // reference's float scale_by_ownership; this is its exact twin, the
-  // same twin discipline as q140/q148/q152).
-  private def q156(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val li = t(s, dir, "lineitem")
-    val sup = t(s, dir, "supplier")
-    val direct = sup.select(col("s_suppkey").as("suppkey"),
-      col("s_nationkey").cast("long").as("nationkey"))
-    val reported = li
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey").as("suppkey"),
-        when(col("l_orderkey") % 13 === 0, col("s_nationkey") + 1)
-          .otherwise(col("s_nationkey")).cast("long").as("nationkey"))
-    val entities = Harvest.occurrenceConsistency(
-        direct.unionByName(reported), Seq("suppkey"), "nationkey", 0.7)
-      .select(col("suppkey").as("s_suppkey"), col("nationkey"))
-    // one hash(l_orderkey) exchange serves both the (order, supplier)
-    // agg and the ownership-total window (the q12 shape)
-    val own = li.repartition(col("l_orderkey"))
-      .groupBy(col("l_orderkey"), col("l_suppkey"))
-      .agg(sum(col("l_quantity")).cast("long").as("qty"))
-      .withColumn("__tot",
-        sum(col("qty")).over(Window.partitionBy(col("l_orderkey"))))
-    val alloc = t(s, dir, "orders")
-      .select(col("o_orderkey"), year(col("o_orderdate")).as("order_year"),
-        round(col("o_totalprice") * 100).cast("long").as("__tp_cents"))
-      .join(own, col("o_orderkey") === col("l_orderkey"))
-      .select(col("l_suppkey"), col("order_year"), col("qty"),
-        expr("(__tp_cents * qty) DIV __tot").as("__alloc_cents"))
-    alloc.groupBy(col("l_suppkey").as("s_suppkey"), col("order_year"))
-      .agg((sum(col("__alloc_cents")) / 100.0).as("alloc_revenue"),
-        sum(col("qty")).as("qty"))
-      .join(broadcast(entities), Seq("s_suppkey"), "left")
-      .withColumn("price_per_qty",
-        round(col("alloc_revenue") / col("qty"), 4))
-      .select("s_suppkey", "order_year", "nationkey", "alloc_revenue",
-        "qty", "price_per_qty")
-  }
-
-  // ---- capstone chain: plant-parts grains over the q156 metrics ----------
-  // Stage 4 of the Etl.buildWide chain as a graded query: the
-  // supplier/nation/region grain family (q51) + true-grain labeling
-  // (q89) computed over the CHAINED metrics frame — nation comes from
-  // the harvested nationkey, region through the broadcast nation dim.
-  // Revenue re-aggregates as exact integer cents (the q156 cells are
-  // cents/100, so ·100 recovers them losslessly), keeping every sum
-  // partition-order independent and the oracle hash-exact.
-  private def q157(s: SparkSession, dir: String): DataFrame = {
-    val withRegion = q156(s, dir).join(
-      broadcast(t(s, dir, "nation").select(
-        col("n_nationkey").cast("long").as("nationkey"),
-        col("n_regionkey"))),
-      Seq("nationkey"), "left")
-      .withColumn("__cents",
-        round(col("alloc_revenue") * 100).cast("long"))
-    val parts = PlantParts.grainRollup(withRegion,
-      Seq("supplier" -> col("s_suppkey"), "nation" -> col("nationkey"),
-        "region" -> col("n_regionkey")),
-      Seq((sum(col("__cents")) / 100.0).as("sum_revenue"),
-        count(lit(1)).as("n_rows"),
-        count_distinct(col("s_suppkey")).as("n_suppliers")))
-    PlantParts.trueGranularity(parts, Seq("sum_revenue", "n_rows", "n_suppliers"))
-      .select("grain", "part_key", "sum_revenue", "n_rows", "n_suppliers",
-        "true_gran")
-  }
-
-  // ---- §2.11 record linkage: TRAINED pair-match model, end-to-end --------
-  // The reference's train→score loop (eia_ferc1_record_linkage.py:137-393)
-  // exercised in-engine: label the blocked candidate pairs with a
-  // deterministic noisy rule, TRAIN the logistic pair-matcher (MLlib
-  // LBFGS, unregularized, tight tol), collect the coefficients, and score
-  // ALL candidates with logisticScore over the trained weights as
-  // plan-time literals; top-1 per customer. Oracle-replayable because the
-  // design is saturated (one binary feature + bias): the unregularized
-  // MLE reproduces the empirical cell rates exactly —
-  // sigmoid(w·x + b) = p̂(y=1 | x) — so the SQL recovers the SAME trained
-  // scores from the cell rates without running LBFGS. The spec
-  // (LinkageTrainSpec) pins the trained weights to the closed-form
-  // log-odds within 1e-6.
-  private def q158(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-      .select(col("c_nationkey").as("nkey"), col("c_custkey"),
-        expr("right(regexp_replace(c_name, '[^0-9]', ''), 4)").as("c_last4"))
-    val sup = t(s, dir, "supplier")
-      .select(col("s_nationkey").as("nkey"), col("s_suppkey"),
-        expr("right(regexp_replace(s_name, '[^0-9]', ''), 4)").as("s_last4"))
-    val cand = Linkage.blockedFuzzyJoin(c, sup, Seq("nkey"), "c_last4",
-        "s_last4", maxDist = 2)
-      .withColumn("is_close", (col("name_dist") <= 1).cast("double"))
-      // deterministic noisy labels keeping both cells strictly inside
-      // (0,1): close pairs match ~3/4 of the time, far pairs ~1/4
-      .withColumn("label",
-        when(col("is_close") === 1.0,
-            ((col("c_custkey") + col("s_suppkey")) % 4 < 3))
-          .otherwise((col("c_custkey") + col("s_suppkey")) % 4 === 0)
-          .cast("double"))
-      // one materialization feeds the degeneracy guard, the training
-      // projection AND the final scoring pass
-      .localCheckpoint()
-    // Degeneracy guard: the trained/closed-form log-odds need both label
-    // cells strictly inside (0,1). At tiny scale factors a cell can
-    // saturate (sf0.001's close cell holds 5 pairs all labeled 1 — see
-    // LinkageTrainSpec), which diverges LBFGS and has no finite closed
-    // form; fall back to Laplace-smoothed empirical log-odds there
-    // (round-11 advice). Graded fixtures (sf0.01/sf0.1) stay on the
-    // trained path, which the oracle replays from the raw cell rates.
-    val cells = cand.groupBy(col("is_close"))
-      .agg(avg(col("label")).as("__p"), count(lit(1)).as("__n"))
-      .collect().map(r => r.getDouble(0) -> (r.getDouble(1), r.getLong(2)))
-      .toMap
-    def logit(p: Double) = math.log(p / (1.0 - p))
-    val degenerate = cells.size < 2 ||
-      cells.values.exists { case (p, _) => p <= 0.0 || p >= 1.0 }
-    val (w, b) =
-      if (!degenerate) {
-        val (ws, b0) = Linkage.trainPairMatcher(cand, Seq("is_close"), "label")
-        (ws.head, b0)
-      } else {
-        def smoothed(c: (Double, Long)) = (c._1 * c._2 + 0.5) / (c._2 + 1.0)
-        val p0 = smoothed(cells.getOrElse(0.0, (0.5, 0L)))
-        val p1 = smoothed(cells.getOrElse(1.0, (0.5, 0L)))
-        (logit(p1) - logit(p0), logit(p0))
-      }
-    cand
-      .withColumn("score",
-        Linkage.logisticScore(Seq(col("is_close") -> w), b))
-      .withColumn("score_micro", round(col("score") * 1e6).cast("long"))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("c_custkey"))
-          .orderBy(col("score").desc, col("s_suppkey").asc)))
-      .where(col("rk") === 1)
-      .select("c_custkey", "s_suppkey", "name_dist", "score_micro")
-  }
-
-  // ---- ANN: product-quantization ADC top-k (seeded, oracle-replayable) ---
-  // The codebook compression next to q125's SQ8 (Jégou et al. TPAMI 2011):
-  // 64-dim floats → 8 codeword ids; queries score asymmetrically against
-  // reconstructed codewords. Portable-hash seed codebooks + rounded
-  // argmin/ADC (the q85 discipline) make encode, codes, and ranking
-  // replayable in SQL. The Lloyd-trained production path is pqTopK
-  // (recall-tested in SimilaritySpec).
-  // m=16 4-dim subspaces × 64 codewords: 16 codes/vector (16× smaller
-  // than the 64 floats), fixture recall 0.38 seeded / 0.55 Lloyd-trained
-  // vs exact euclidean — the seed-codebook gap is the oracle tax, like
-  // q85's routing and q100's portable digests.
-  private def q159(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.pqTopKSeeded(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, m = 16, nCodes = 64)
-  }
-
-  // ---- dbt checks, part 2: the remaining two macros --------------------
-  // expect_summed_columns_not_exceed_threshold + one_value_per_key
-  // (/root/reference/dbt/macros/) over the lineitem⋈orders frame — one
-  // exceed check that trips and one that holds, one functional
-  // dependency that holds (order → customer) and one that trips
-  // (customer → order status). Same lazy one-row-aggregation-per-check
-  // shape as q92.
-  private def q160(s: SparkSession, dir: String): DataFrame = {
-    import graft.checks.CheckRunner._
-    val j = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-    run(j, Seq(
-      SummedNotExceed("lineitem:tax_discount_vs_qty_cents", "l_tax",
-        "l_discount", "l_quantity", multiplier = 0.01),
-      SummedNotExceed("lineitem:tax_discount_le_total", "l_tax",
-        "l_discount", "o_totalprice"),
-      OneValuePerKey("orders:order_to_cust", "l_orderkey", "o_custkey"),
-      OneValuePerKey("orders:cust_to_status", "o_custkey", "o_orderstatus")))
-  }
-
-  // ---- training-data pipeline: domain-mixture selection to budgets -------
-  // The Pile/Dolma corpus-mixing step: per-language token budgets, docs
-  // kept in deterministic salted-hash order until each domain's budget
-  // is spent; 'fr' deliberately unlisted (dropped). Bucketed cutoffs —
-  // only each domain's boundary bucket pays a row-level window.
-  private def q161(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .withColumn("n_tokens",
-        graft.text.TextAnalysis.tokenCount(col("text")).cast("long"))
-    import s.implicits._
-    graft.operators.Sampling.mixtureSelect(docs, "doc_id", "lang",
-        "n_tokens", budgets = Seq("en" -> 5000L, "zh" -> 2000L,
-          "es" -> 2000L, "de" -> 1500L).toDF("lang", "budget"))
-      .select(col("doc_id"), col("lang"), col("n_tokens"),
-        col("mix_bucket"), col("selected"))
-  }
-
-  // ---- ANN: IVF-PQ composition (seeded, oracle-replayable) ---------------
-  // FAISS's IVFx,PQy shape: seeded-IVF routing prunes to nProbe cells,
-  // PQ-ADC ranks inside them on the compressed codes — the 100 TB ANN
-  // serving composition (codes hash-partitioned by cell, raw vectors
-  // never reach the scoring join). Routing (q85), codes (q159) and
-  // ranking all replay in the oracle.
-  private def q162(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.ivfPqTopKSeeded(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nCells = 16,
-      nProbe = 4, m = 16, nCodes = 64)
-  }
-
-  // ---- record linkage: company-name canonicalization ----------------------
-  // The reference's CompanyNameCleaner rule pipeline (name_cleaner.py +
-  // us_legal_forms.json) over deterministic company-style names built from
-  // the supplier keys: default rules + legal-term NORMALIZE (the linkage
-  // canon) and the no-rules legal-term REMOVE screen (SEC subsidiary
-  // filter) side by side. Pure per-row regexp chain — zero shuffle; the
-  // oracle interpolates the SAME rule constants via CompanyNames.sqlChain.
-  private val q163Stems = Seq(
-    "Acme Power & Light", "Basin-Creek Energy (Holdings)", "delta_utilities",
-    "Gulf  States Util 2000", "PECO ENERGY", "The Duke Energy",
-    "Green Mtn. Power", "Niagara-Mohawk [Power]", "The Tampa Electric",
-    "Midwest Gen EME,", "Big Rivers * Electric", "Consolidated   Edison")
-  private val q163Suffixes = Seq(
-    "llc", "Inc", "CORP.", "pub lc", "co", "ltd", "assn")
-  private def q163(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.CompanyNames
-    val raw = concat(
-      element_at(array(q163Stems.map(lit): _*),
-        (pmod(col("s_suppkey"), lit(q163Stems.size)) + 1).cast("int")),
-      lit(" "),
-      element_at(array(q163Suffixes.map(lit): _*),
-        (pmod(col("s_suppkey"), lit(q163Suffixes.size)) + 1).cast("int")))
-    t(s, dir, "supplier")
-      .select(col("s_suppkey"), raw.as("raw_name"),
-        CompanyNames.clean(raw).as("canon_name"),
-        CompanyNames.clean(raw, rules = Nil,
-          legalTerms = CompanyNames.Remove).as("bare_name"))
-      .orderBy("s_suppkey")
-  }
-
-  // ---- harvest: last-reported-date rescue ---------------------------------
-  // The second harvest special case (reference `_last_operating_date`,
-  // eia.py:253-328): a date-like attribute whose modal vote fails
-  // strictness falls back to the LAST reported non-null value; the
-  // reference's re-vote then trivially passes, so rescued rows carry
-  // rate 1.0. Customers with one order pass the vote (rate 1.0 modal),
-  // multi-year customers fail it and get rescued with their latest year;
-  // o_orderpriority rides along as a plain modal attribute, so the
-  // assembly join mixes both lanes.
-  private def q164(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    def half(parity: Int) = orders
-      .where(pmod(col("o_orderkey"), lit(2)) === parity)
-      .select(col("o_custkey"),
-        // long: DuckDB year() is BIGINT and the driver hash is type-aware
-        year(col("o_orderdate")).cast("long").as("op_year"),
-        col("o_orderdate"), col("o_orderpriority"))
-    graft.operators.Harvest.harvestEntityTables(
-        Seq(half(0), half(1)), Seq("o_custkey"),
-        attrs = Seq("op_year", "o_orderpriority"),
-        lastReported = Map("op_year" -> "o_orderdate"))
-      .orderBy("o_custkey")
-  }
-
-  // ---- record linkage: phonetic-prefix blocked fuzzy match ----------------
-  // The reference's splink blocking shape (eia_ferc1_model_config.py
-  // blocking_rule_1: report_year equality + substr(name_mphone, 1, 3)):
-  // candidates meet on (nation, soundex-prefix-3) — an equi-join, never a
-  // cross product — then score Jaro-Winkler and keep top-1 per customer.
-  // Engine side is the codegen'd built-in soundex; the oracle recomputes
-  // the code char-by-char (Phonetics.soundexSql — DuckDB has no phonetic
-  // function). Spelling-variant name pairs share blocks; two deliberate
-  // misses (first-letter change, W-skip flip) prove blocking selectivity.
-  private val q165CustNames = Seq(
-    "Acme Power", "Basin Creek", "Delta Utilities", "Gulf States",
-    "Peco Energy", "Duke Energy", "Green Mountain", "Niagara Mohawk",
-    "Tampa Electric", "Consolidated Edison", "Pacific Gas",
-    "Midwest Generation")
-  private val q165SuppNames = Seq(
-    "Akme Power", "Bassin Creak", "Deltta Utilitys", "Golf States",
-    "Pecco Energy", "Dook Energy", "Greene Mountain", "Nyagara Mohock",
-    "Tempa Electrik", "Konsolidated Edison", "Pasific Gas",
-    "Midvest Generation")
-  private def q165(s: SparkSession, dir: String): DataFrame = {
-    def named(df: DataFrame, key: String, nkey: String, names: Seq[String],
-              keyOut: String, nameOut: String) =
-      df.select(col(key).as(keyOut), col(nkey).as("nkey"),
-          element_at(array(names.map(lit): _*),
-            (pmod(col(key), lit(names.size)) + 1).cast("int")).as(nameOut))
-        .withColumn(s"${nameOut}_sx3",
-          substring(soundex(col(nameOut)), 1, 3))
-    val c = named(t(s, dir, "customer"), "c_custkey", "c_nationkey",
-      q165CustNames, "c_custkey", "c_name2")
-    val sup = named(t(s, dir, "supplier"), "s_suppkey", "s_nationkey",
-      q165SuppNames, "s_suppkey", "s_name2")
-    c.join(sup, col("c_name2_sx3") === col("s_name2_sx3") &&
-        c("nkey") === sup("nkey"))
-      .withColumn("name_sim",
-        graft.plans.JaroWinkler(col("c_name2"), col("s_name2")))
-      .where(col("name_sim") >= 0.5)
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("c_custkey"))
-          .orderBy(col("name_sim").desc, col("s_suppkey").asc)))
-      .where(col("rk") === 1)
-      .select(col("c_custkey"), col("s_suppkey"),
-        col("c_name2_sx3").as("block_key"),
-        round(col("name_sim"), 6).as("name_sim"))
-  }
-
-  // ---- training-data pipeline: TRAINED quality classifier ----------------
-  // The fastText/CCNet quality-filter shape: a labeled seed (every 3rd doc;
-  // positive = target class) trains multinomial-NB log-odds token weights
-  // IN-ENGINE (closed-form counts, one shuffle), then the held-out corpus
-  // is scored and thresholded. Integer-nano logs per the q126 discipline
-  // make train + score exact integer arithmetic — the oracle replays the
-  // whole thing, weights included. Mix at sf0.01: 90/333 keep.
-  private def q166(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.NbQuality
-    val docs = t(s, dir, "documents")
-    val seed = docs.where(col("doc_id") % 3 === 0)
-      .select((col("lang") === "en").as("pos"),
-        split(col("text"), " ").as("ws"))
-    val w = NbQuality.trainLogOdds(seed, col("ws"), col("pos"))
-    val pr = NbQuality.priorNano(seed, col("pos"))
-    NbQuality.score(docs.where(col("doc_id") % 3 =!= 0), "doc_id",
-        split(col("text"), " "), w)
-      .crossJoin(broadcast(pr))
-      .select(col("doc_id"), col("n_toks"),
-        (col("score_raw_nano") + col("prior_nano")).as("score_nano"),
-        ((col("score_raw_nano") + col("prior_nano")) > 0).as("keep"))
-  }
-
-  // ---- training-data pipeline: DSIR importance resampling ----------------
-  // Data Selection via Importance Resampling (arXiv:2302.03169): hashed
-  // unigram+bigram bucket models (m=1024, portable family for the replay;
-  // XxHash is the production default) for target = src0-2 docs vs the raw
-  // corpus, per-doc importance log-weights as exact integer nano sums,
-  // then ES/Gumbel resampling (weightedSample, w = exp(logw)) of 25 docs
-  // per language. The m-row ratio table broadcasts at ANY corpus size —
-  // this is the unbounded-vocabulary sibling of q166.
-  private def q167(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Dsir
-    val m = 1024
-    val fam = graft.functions.PortableHashFamily
-    val docs = t(s, dir, "documents")
-    // explode + hash the grams ONCE (the portable MD5 is the dominant
-    // cost); the checkpointed bucket frame feeds both the count agg and
-    // the scoring agg — identical counts to the two-pass form
-    val buckets = docs
-      .select(col("doc_id"),
-        col("source").isin("src0", "src1", "src2").as("__t"),
-        explode(Dsir.grams(col("text"))).as("g"))
-      .select(col("doc_id"), col("__t"),
-        Dsir.bucket(col("g"), m, fam).as("bucket"))
-      .localCheckpoint()
-    val ratios = Dsir.ratiosFromBuckets(buckets, col("__t"), m)
-    val lw = Dsir.weightsFromBuckets(buckets, "doc_id", ratios)
-    val base = lw.join(docs.select("doc_id", "lang"), Seq("doc_id"))
-      .withColumn("w", exp(col("logw_nano").cast("double") / 1e9))
-    graft.operators.Sampling.weightedSample(base, "doc_id", "lang", "w",
-        k = 25, salt = "dsir")
-      .select(col("doc_id"), col("lang"), col("n_grams"), col("logw_nano"),
-        col("sample_key"), col("sample_rank"))
-  }
-
-  // ---- splink-parity Fellegi–Sunter record linkage -----------------------
-  // The reference's actual FERC1↔EIA model loop (eia_ferc1_record_linkage
-  // .py:220-245): u from random pair sampling, m from labeled pairs, prior
-  // 1/|left|, FS log2 Bayes-factor prediction at threshold 0.9, best match
-  // per right record. Fixture: customer linked to a deterministically
-  // perturbed twin of itself (the q97/q158 pattern) — labels are the key
-  // identity with 1-in-4 dropout noise, the twin jitters balances by
-  // (id mod 7 − 3) cents and nulls a lane on each side (mod 17 / mod 13)
-  // to exercise the splink null level. Comparisons mirror the reference's
-  // ladder shapes: name levels (exact / edit-distance / else), categorical
-  // exact (mktsegment — the fuel_type_code twin), numeric percentage-
-  // difference levels over integer cents (exact decimal arithmetic, no
-  // float boundary). Everything replays in DuckDB: portable-hash u
-  // sampling, integer-nano weights from identical IEEE ln trees, integer
-  // threshold compare.
-  /** Shared q168/q169 fixture: (l, r, addLevels, comps, uPairs). */
-  private def fsFixture(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame => DataFrame,
-         Seq[graft.linkage.Comparison], DataFrame) = {
-    import graft.linkage.{Comparison, FellegiSunter => FS}
-    val cust = t(s, dir, "customer")
-    val last4 = expr("right(regexp_replace(c_name, '[^0-9]', ''), 4)")
-    val cents = round(col("c_acctbal") * 100).cast("long")
-    val l = cust.select(col("c_custkey").as("l_id"), last4.as("l_last4"),
-      col("c_nationkey").as("l_nkey"), col("c_mktsegment").as("l_seg"),
-      when(col("c_custkey") % 17 === 0, lit(null).cast("long"))
-        .otherwise(cents).as("l_cents"))
-    val r = cust.select(col("c_custkey").as("r_id"), last4.as("r_last4"),
-      col("c_nationkey").as("r_nkey"), col("c_mktsegment").as("r_seg"),
-      when(col("c_custkey") % 13 === 0, lit(null).cast("long"))
-        .otherwise(cents + col("c_custkey") % 7 - lit(3)).as("r_cents"))
-    def addLevels(p: DataFrame): DataFrame = p
-      .withColumn("lvl_name",
-        when(col("l_last4") === col("r_last4"), 3)
-          .when(levenshtein(col("l_last4"), col("r_last4")) <= 1, 2)
-          .otherwise(1))
-      .withColumn("lvl_seg", when(col("l_seg") === col("r_seg"), 2)
-        .otherwise(1))
-      .withColumn("lvl_bal",
-        FS.percentDifferenceLevel(col("l_cents"), col("r_cents")))
-    val comps = Seq(
-      Comparison("name", col("lvl_name"), 3),
-      Comparison("seg", col("lvl_seg"), 2),
-      Comparison("bal", col("lvl_bal"), 3))
-    // the reference's max_pairs=1e7 knob: 1/64 of each side, crossed
-    def side(df: DataFrame, seed: String, id: String): DataFrame =
-      df.where(pmod(graft.functions.PortableHash.hex60(
-        concat(lit(s"${seed}_"), col(id).cast("string"))), lit(64L)) === 0)
-    val uPairs = addLevels(
-      side(l, "u168", "l_id").crossJoin(side(r, "v168", "r_id")))
-    (l, r, addLevels _, comps, uPairs)
-  }
-
-  private def q168(s: SparkSession, dir: String): DataFrame = {
-    import graft.linkage.{FellegiSunter => FS}
-    val (l, r, addLevels, comps, uPairs) = fsFixture(s, dir)
-    val mPairs = addLevels(l.join(r, col("l_id") === col("r_id"))
-      .where(col("l_id") % 4 < 3))
-    val weight = FS.trainedMatchWeight(
-      FS.trainWeights(mPairs, uPairs, comps), l, comps)
-    // blocking: splink block_on style — both rules are pure equi-joins;
-    // the duplicate (l,r) a pair can earn from matching both rules is
-    // resolved by the best-match window itself (identical rows rank 1,2 —
-    // rk=1 keeps one), so no distinct shuffle over the full pair volume
-    val ruleA = l.join(r, col("l_nkey") === col("r_nkey") &&
-      substring(col("l_last4"), 1, 2) === substring(col("r_last4"), 1, 2))
-    val ruleB = l.join(r, col("l_last4") === col("r_last4"))
-    val cand = addLevels(ruleA.unionByName(ruleB))
-      .withColumn("weight_nano", weight)
-      .withColumn("accepted", col("weight_nano") >= FS.acceptAt(0.9))
-    FS.bestMatch(cand, "r_id", "l_id")
-      .select(col("r_id"), col("l_id"), col("lvl_name"), col("lvl_seg"),
-        col("lvl_bal"), col("weight_nano"), col("accepted"))
-  }
-
-  // ---- splink EM session: estimate m unsupervised, u fixed ---------------
-  // splink's documented standard training flow (the reference substitutes
-  // labeled pairs for the EM step — q168 covers that lane; this one is the
-  // `estimate_parameters_using_expectation_maximisation` lane): u from the
-  // same 1/64 sampled pairs, then 3 fixed-point EM rounds over the
-  // (nation, 2-prefix) blocked pairs estimating m and λ with NO labels.
-  // Posteriors quantize to integer micros before every sum (the q126/q152
-  // discipline), so the whole EM trajectory — not just the final state —
-  // replays bit-exactly in the DuckDB oracle's unrolled CTE chain.
-  private def q169(s: SparkSession, dir: String): DataFrame = {
-    import graft.linkage.{FellegiSunter => FS}
-    val (l, r, addLevels, comps, uPairs) = fsFixture(s, dir)
-    val uc = FS.uLevelCounts(uPairs, comps)
-    // estimation needs only the level columns — project before the
-    // checkpoint inside emTrainM so 3 ints materialize per pair, not the
-    // full fixture row
-    val emPairs = addLevels(l.join(r, col("l_nkey") === col("r_nkey") &&
-      substring(col("l_last4"), 1, 2) === substring(col("r_last4"), 1, 2)))
-      .select("lvl_name", "lvl_seg", "lvl_bal")
-    FS.emTrainM(emPairs, comps, uc)
-      .select(col("comparison"), col("level"), col("c_u"), col("n_u"),
-        col("m_nano"), col("w_nano"), col("lam_micro"))
-      .orderBy(col("comparison"), col("level"))
-  }
-
-  // ---- splink term-frequency adjustments ----------------------------------
-  // The reference enables term_frequency_adjustments=True on utility_name
-  // and fuel_type_code (eia_ferc1_model_config.py:47-50): agreeing on a
-  // RARE value is stronger evidence than agreeing on a common one. Same
-  // trained weights as q168; the exact-match mktsegment level gains a
-  // per-value correction log2(u_level / tf_v) from a broadcast TF dim over
-  // the concatenated datasets, and acceptance + best-match rank on the
-  // adjusted weight. Integer nanos end-to-end.
-  private def q170(s: SparkSession, dir: String): DataFrame = {
-    import graft.linkage.{FellegiSunter => FS}
-    val (l, r, addLevels, comps, uPairs) = fsFixture(s, dir)
-    val mPairs = addLevels(l.join(r, col("l_id") === col("r_id"))
-      .where(col("l_id") % 4 < 3))
-    val trained = FS.trainWeights(mPairs, uPairs, comps).localCheckpoint()
-    val weight = FS.trainedMatchWeight(trained, l, comps)
-    val segU = trained
-      .where(col("comparison") === "seg" && col("level") === 2)
-      .select("c_u", "n_u").head
-    val tf = FS.tfAdjustments(
-      l.select(col("l_seg").as("value"))
-        .unionByName(r.select(col("r_seg").as("value"))),
-      col("value"), segU.getLong(0), segU.getLong(1), nLevels = 2)
-    val ruleA = l.join(r, col("l_nkey") === col("r_nkey") &&
-      substring(col("l_last4"), 1, 2) === substring(col("r_last4"), 1, 2))
-    val ruleB = l.join(r, col("l_last4") === col("r_last4"))
-    val cand = addLevels(ruleA.unionByName(ruleB))
-      .withColumn("weight_nano", weight)
-      .join(broadcast(tf), col("l_seg") === col("value"))
-      .withColumn("tf_adj_nano",
-        when(col("lvl_seg") === 2, col("tf_adj_nano")).otherwise(0L))
-      .withColumn("weight_adj_nano",
-        col("weight_nano") + col("tf_adj_nano"))
-      .withColumn("accepted", col("weight_adj_nano") >= FS.acceptAt(0.9))
-    FS.bestMatch(cand, "r_id", "l_id", weightCol = "weight_adj_nano")
-      .select(col("r_id"), col("l_id"), col("lvl_seg"), col("weight_nano"),
-        col("tf_adj_nano"), col("weight_adj_nano"), col("accepted"))
-  }
-
-  // ---- unigram-LM tokenizer training (SentencePiece family) ---------------
-  // The other major subword tokenizer beside BPE (q143/q144): seed vocab =
-  // all single chars + top-24 substrings by weighted occurrence, then two
-  // hard-EM rounds — Viterbi-segment the word dictionary under the current
-  // integer-nano scores, count pieces weighted by word frequency, re-score
-  // as smoothed log-probabilities. The Viterbi DP is EXACT integer
-  // arithmetic with an explicit tie rule, so the oracle's recursive-CTE
-  // twin (`UnigramSql`) replays both EM rounds bit-for-bit.
-  private def q171(s: SparkSession, dir: String): DataFrame =
-    Unigram.train(Unigram.wordDict(t(s, dir, "documents"))).orderBy("piece")
-
-  // Encode under the TRAINED unigram vocab (q171's round-2 scores) — the
-  // q143→q144 train→encode symmetry for the SentencePiece family. One row
-  // per dictionary word: its exact-integer Viterbi segmentation.
-  private def q172(s: SparkSession, dir: String): DataFrame = {
-    val words = Unigram.wordDict(t(s, dir, "documents"))
-    Unigram.encodeWords(words, Unigram.train(words).localCheckpoint())
-      .select(col("word"), col("cnt"),
-        size(col("pieces")).as("n_pieces"),
-        concat_ws("+", col("pieces")).as("seg"),
-        col("score_nano"))
-      .orderBy("word")
-  }
-
-  // The full SentencePiece training LOOP: seed → EM → prune (drop the
-  // least-used multi-char pieces, chars never pruned) → renormalize → EM
-  // under the shrunk vocabulary. Completes q171's fixed-membership rounds
-  // with the shrink schedule real SentencePiece runs.
-  private def q173(s: SparkSession, dir: String): DataFrame = {
-    val words = Unigram.wordDict(t(s, dir, "documents"))
-    val pruned = Unigram.rescoreCounts(
-        Unigram.prune(Unigram.train(words).localCheckpoint(), keepMulti = 12))
-      .localCheckpoint()
-    Unigram.emRound(words, "word", "cnt", pruned, 4, Unigram.UnkNano)
-      .orderBy("piece")
-  }
-
-  // Metaphone blocking — the reference's ACTUAL phonetic key for its
-  // FERC↔EIA splink model: jellyfish.metaphone per name, candidate pairs
-  // blocked on the 3-char code prefix
-  // (eia_ferc1_record_linkage.py:182-193, eia_ferc1_model_config.py:12).
-  // q165's soundex twin key-for-key: same synthetic name variants, the
-  // native Metaphone expression (whole-stage codegen), block on
-  // substr(mphone, 1, 3) + nation, Jaro-Winkler score, best match per
-  // customer. The full code rides along as c_mphone so the oracle pins
-  // every emitted letter, not just the blocking prefix.
-  private def q174(s: SparkSession, dir: String): DataFrame = {
-    def named(df: DataFrame, key: String, nkey: String, names: Seq[String],
-              keyOut: String, nameOut: String) =
-      df.select(col(key).as(keyOut), col(nkey).as("nkey"),
-          element_at(array(names.map(lit): _*),
-            (pmod(col(key), lit(names.size)) + 1).cast("int")).as(nameOut))
-        .withColumn(s"${nameOut}_mph", graft.plans.Metaphone(col(nameOut)))
-        .withColumn(s"${nameOut}_mp3",
-          substring(col(s"${nameOut}_mph"), 1, 3))
-    val c = named(t(s, dir, "customer"), "c_custkey", "c_nationkey",
-      q165CustNames, "c_custkey", "c_name2")
-    val sup = named(t(s, dir, "supplier"), "s_suppkey", "s_nationkey",
-      q165SuppNames, "s_suppkey", "s_name2")
-    c.join(sup, col("c_name2_mp3") === col("s_name2_mp3") &&
-        c("nkey") === sup("nkey"))
-      .withColumn("name_sim",
-        graft.plans.JaroWinkler(col("c_name2"), col("s_name2")))
-      .where(col("name_sim") >= 0.5)
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("c_custkey"))
-          .orderBy(col("name_sim").desc, col("s_suppkey").asc)))
-      .where(col("rk") === 1)
-      .select(col("c_custkey"), col("s_suppkey"),
-        col("c_name2_mp3").as("block_key"),
-        col("c_name2_mph").as("c_mphone"),
-        round(col("name_sim"), 6).as("name_sim"))
-  }
-
-  // Multi-rule blocking union — splink's
-  // `blocking_rules_to_generate_predictions` candidate shape, which the
-  // reference configures with TEN OR-ed rules
-  // (`/root/reference/src/pudl/analysis/record_linkage/eia_ferc1_model_config.py:12-33`):
-  // every rule is report_year + some attribute conjunction + a metaphone
-  // prefix of varying length. q177 replays two rules of exactly those
-  // shapes on the q165/q174 name fixture — rule 0 = (nation, metaphone
-  // 3-prefix) [blocking_rule_1], rule 1 = (nation, fuel-type twin,
-  // metaphone 2-prefix) [blocking_rule_4] — through Linkage.unionBlocks:
-  // pairs matched by several rules appear ONCE with match_key = first
-  // matching rule and n_rules = how many matched (the cross-rule dedup
-  // the reference gets from splink's sequential AND-NOT SQL).
-  private val q177Fuels = Seq("coal", "gas", "wind", "solar", "hydro")
-  private def q177(s: SparkSession, dir: String): DataFrame = {
-    val (c, sup) = q177Sides(s, dir)
-    graft.linkage.Linkage.unionBlocks(c, sup, "c_custkey", "s_suppkey",
-        q177Rules)
-      .withColumn("name_sim",
-        graft.plans.JaroWinkler(col("c_name2"), col("s_name2")))
-      .where(col("name_sim") >= 0.5)
-      .select(col("c_custkey"), col("s_suppkey"), col("match_key"),
-        col("n_rules"), round(col("name_sim"), 6).as("name_sim"))
-  }
-  private def q177Rules: Seq[(Seq[Column], Seq[Column])] = Seq(
-    (Seq(col("c_nkey"), col("c_mp3")),
-     Seq(col("s_nkey"), col("s_mp3"))),
-    (Seq(col("c_nkey"), col("c_ftc"), col("c_mp2")),
-     Seq(col("s_nkey"), col("s_ftc"), col("s_mp2"))))
-  private def q177Sides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    def named(df: DataFrame, key: String, nkey: String, names: Seq[String],
-              keyOut: String, nkeyOut: String, nameOut: String, pfx: String) =
-      df.select(col(key).as(keyOut), col(nkey).as(nkeyOut),
-          element_at(array(names.map(lit): _*),
-            (pmod(col(key), lit(names.size)) + 1).cast("int")).as(nameOut))
-        .withColumn(s"${pfx}_ftc",
-          element_at(array(q177Fuels.map(lit): _*),
-            (pmod(col(keyOut), lit(q177Fuels.size)) + 1).cast("int")))
-        .withColumn(s"${pfx}_mph", graft.plans.Metaphone(col(nameOut)))
-        .withColumn(s"${pfx}_mp3", substring(col(s"${pfx}_mph"), 1, 3))
-        .withColumn(s"${pfx}_mp2", substring(col(s"${pfx}_mph"), 1, 2))
-    (named(t(s, dir, "customer"), "c_custkey", "c_nationkey",
-       q165CustNames, "c_custkey", "c_nkey", "c_name2", "c"),
-     named(t(s, dir, "supplier"), "s_suppkey", "s_nationkey",
-       q165SuppNames, "s_suppkey", "s_nkey", "s_name2", "s"))
-  }
-
-  // Blocking-rule pre-flight — splink's count_comparisons analysis over
-  // the q177 rule set: per-rule candidate-pair volume from per-block
-  // cardinalities (sum of nL*nR), computed WITHOUT materializing pairs —
-  // the 100 TB budget check that picks the rule set. Output: one row per
-  // rule.
-  private def q178(s: SparkSession, dir: String): DataFrame = {
-    val (c, sup) = q177Sides(s, dir)
-    graft.linkage.Linkage.blockProfile(c, sup, q177Rules)
-  }
-
-  // The reference's FULL production blocking set — all TEN prediction
-  // rules of eia_ferc1_model_config.py:12-33 replayed shape-for-shape
-  // through Linkage.unionBlocks (q177 replays two): every rule is
-  // report_year + an attribute conjunction + a metaphone prefix, except
-  // rule 10's raw numeric block_on("report_year","net_generation_mwh").
-  // Fixture twins: nationkey = report_year, plant/utility names from the
-  // q165 pools (utility = a rotated index so the two name columns
-  // decorrelate), fuel / installation-year / construction-year /
-  // capacity / net-generation derived deterministically from the key so
-  // the DuckDB oracle replays every block. Output is the per-rule
-  // candidate ledger: how many pairs each rule WINS (match_key = first
-  // matching rule, splink's sequential AND-NOT semantics), how many of
-  // those were multi-rule, and the total rule hits — exercising the
-  // cross-rule dedup ordering across 10 overlapping rules.
-  private val q188RuleCols: Seq[Seq[String]] = Seq(
-    Seq("nkey", "pmp3"),         // blocking_rule_1: year + plant mphone[1,3]
-    Seq("nkey", "ump2", "pmp2"), // rule_2: year + util[1,2] + plant[1,2]
-    Seq("nkey", "inst", "ump2"), // rule_3: year + installation + util[1,2]
-    Seq("nkey", "ftc", "pmp2"),  // rule_4: year + fuel + plant[1,2]
-    Seq("nkey", "ftc", "ump3"),  // rule_5: year + fuel + util[1,3]
-    Seq("nkey", "cons", "ump2"), // rule_6: year + construction + util[1,2]
-    Seq("nkey", "cap", "pmp2"),  // rule_7: year + capacity + plant[1,2]
-    Seq("nkey", "inst", "pmp2"), // rule_8: year + installation + plant[1,2]
-    Seq("nkey", "cons", "pmp2"), // rule_9: year + construction + plant[1,2]
-    Seq("nkey", "ngen"))         // rule_10: year + net_generation
-  private def q188Rules: Seq[(Seq[Column], Seq[Column])] =
-    q188RuleCols.map(cs =>
-      (cs.map(c0 => col(s"c_$c0")), cs.map(c0 => col(s"s_$c0"))))
-  private def q188Sides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    def side(df: DataFrame, key: String, nkey: String, names: Seq[String],
-             pfx: String): DataFrame = {
-      val k = col(key)
-      df.select(k, col(nkey).as(s"${pfx}_nkey"),
-          element_at(array(names.map(lit): _*),
-            (pmod(k, lit(12)) + 1).cast("int")).as(s"${pfx}_pname"),
-          element_at(array(names.map(lit): _*),
-            (pmod(k * 7 + 3, lit(12)) + 1).cast("int")).as(s"${pfx}_uname"),
-          element_at(array(q177Fuels.map(lit): _*),
-            (pmod(k, lit(5)) + 1).cast("int")).as(s"${pfx}_ftc"),
-          (pmod(k, lit(30)) + 1990).as(s"${pfx}_inst"),
-          (pmod(k, lit(25)) + 1985).as(s"${pfx}_cons"),
-          (pmod(k, lit(40)) * 12.5).as(s"${pfx}_cap"),
-          (pmod(k, lit(200)) * 1000).as(s"${pfx}_ngen"))
-        .withColumn(s"${pfx}_pmph", graft.plans.Metaphone(col(s"${pfx}_pname")))
-        .withColumn(s"${pfx}_umph", graft.plans.Metaphone(col(s"${pfx}_uname")))
-        .withColumn(s"${pfx}_pmp3", substring(col(s"${pfx}_pmph"), 1, 3))
-        .withColumn(s"${pfx}_pmp2", substring(col(s"${pfx}_pmph"), 1, 2))
-        .withColumn(s"${pfx}_ump3", substring(col(s"${pfx}_umph"), 1, 3))
-        .withColumn(s"${pfx}_ump2", substring(col(s"${pfx}_umph"), 1, 2))
-        .drop(s"${pfx}_pmph", s"${pfx}_umph")
-    }
-    (side(t(s, dir, "customer"), "c_custkey", "c_nationkey",
-       q165CustNames, "c"),
-     side(t(s, dir, "supplier"), "s_suppkey", "s_nationkey",
-       q165SuppNames, "s"))
-  }
-  private def q188(s: SparkSession, dir: String): DataFrame = {
-    val (c, sup) = q188Sides(s, dir)
-    graft.linkage.Linkage.unionBlocks(c, sup, "c_custkey", "s_suppkey",
-        q188Rules)
-      .groupBy(col("match_key"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(when(col("n_rules") > 1, 1L).otherwise(0L)).as("n_multi"),
-        sum(col("n_rules")).as("sum_rules"))
-  }
-
-  // splink's count_comparisons pre-flight over the FULL 10-rule set:
-  // one (n_blocks, n_pairs, max_block_pairs) row per production rule —
-  // the realistic rule-budgeting run the reference would do before
-  // predict (q178 profiles the 2-rule subset). Pairs never materialize.
-  private def q189(s: SparkSession, dir: String): DataFrame = {
-    val (c, sup) = q188Sides(s, dir)
-    graft.linkage.Linkage.blockProfile(c, sup, q188Rules)
-  }
-
-  // The reference's full PREDICT shape assembled end-to-end — splink
-  // predict over the production model config: the 10-rule candidate
-  // union (q188) -> comparison vector (NameComparison gamma ladders
-  // [0.9,0.8,0.7] on BOTH name columns, eia_ferc1_model_config.py:35-46,
-  // + exact fuel-type match, :47-50) -> Fellegi-Sunter match weight from
-  // plan-literal per-level log2(m/u) integer nanos -> acceptance -> best
-  // match per right record (sort desc + first, :245). q168-q170 verify
-  // the FS train/predict machinery with in-engine-estimated weights;
-  // this is the assembled production query over ALL ten blocking rules.
-  // Weights are literal longs (no float path anywhere: gammas are
-  // integer levels, the weight is a long sum, acceptance is a long
-  // compare at 3169925001 = round(log2(0.9/0.1)*1e9), precomputed so
-  // neither engine evaluates a transcendental).
-  private val q190NameW: Seq[(Int, Long)] = Seq(
-    -1 -> 0L,                // splink null level: Bayes factor 1
-    0 -> -4000000000L, 1 -> 1500000000L, 2 -> 3000000000L,
-    3 -> 5000000000L, 4 -> 7000000000L)
-  /** The full scored predict frame (10-rule union → gamma vector → FS
-    * weight), shared by q190 (best-match shape) and q193 (splink's
-    * clustering shape). */
-  private def q190Scored(s: SparkSession, dir: String): DataFrame = {
-    import graft.linkage.{FellegiSunter => FS, Linkage}
-    val (c, sup) = q188Sides(s, dir)
-    def nameW(g: Column): Column =
-      q190NameW.tail.foldLeft(when(g === q190NameW.head._1,
-          lit(q190NameW.head._2))) {
-        case (acc, (k, v)) => acc.when(g === k, lit(v))
-      }
-    Linkage.unionBlocks(c, sup, "c_custkey", "s_suppkey", q188Rules)
-      .withColumn("g_pname", FS.nameComparisonLevel(
-        col("c_pname"), col("s_pname"), Seq(0.9, 0.8, 0.7)))
-      .withColumn("g_uname", FS.nameComparisonLevel(
-        col("c_uname"), col("s_uname"), Seq(0.9, 0.8, 0.7)))
-      .withColumn("g_ftc",
-        when(col("c_ftc") === col("s_ftc"), 1).otherwise(0))
-      .withColumn("weight_nano",
-        lit(-6000000000L) + nameW(col("g_pname")) + nameW(col("g_uname"))
-          + when(col("g_ftc") === 1, lit(2000000000L))
-            .otherwise(lit(-1000000000L)))
-  }
-  private def q190(s: SparkSession, dir: String): DataFrame = {
-    import graft.linkage.{FellegiSunter => FS}
-    FS.bestMatch(q190Scored(s, dir), "s_suppkey", "c_custkey")
-      .select(col("s_suppkey"), col("c_custkey"), col("match_key"),
-        col("n_rules"), col("g_pname"), col("g_uname"), col("g_ftc"),
-        col("weight_nano"),
-        (col("weight_nano") >= 3169925001L).as("accepted"))
-  }
-
-  // splink's cluster_pairwise_predictions_at_threshold — the step after
-  // predict in splink's standard flow (the reference takes best-match
-  // 1:1 instead, eia_ferc1_record_linkage.py:245; this completes the
-  // splink API surface): accepted pairs become edges in a bipartite
-  // graph over BOTH record sets (customer → 2k, supplier → 2k+1, the
-  // q45 node mapping), connected components assign cluster_id = min
-  // node id, and unlinked records keep their own node as a singleton
-  // cluster — exactly splink's semantics. Scale: edge volume is the
-  // accepted-pair volume (bounded by blocking + threshold);
-  // ConnectedComponents.run picks driver union-find below 5M edges and
-  // the O(log n) large/small-star contraction above it.
-  private def q193(s: SparkSession, dir: String): DataFrame = {
-    // cast BEFORE doubling: a 32-bit key above 2^30 would wrap negative
-    // under non-ANSI int arithmetic (the silent-wrap class blockProfile
-    // guards against); DuckDB's oracle promotes to BIGINT first
-    val edges = q190Scored(s, dir)
-      .where(col("weight_nano") >= 3169925001L)
-      .select((col("c_custkey").cast("long") * 2).as("src"),
-        (col("s_suppkey").cast("long") * 2 + 1).as("dst"))
-    val (c, sup) = q188Sides(s, dir)
-    val verts = c.select((col("c_custkey").cast("long") * 2).as("node"))
-      .unionByName(
-        sup.select((col("s_suppkey").cast("long") * 2 + 1).as("node")))
-    val cc = graft.graph.ConnectedComponents.run(edges, "src", "dst")
-    verts.join(cc, verts("node") === cc("v"), "left")
-      .select(col("node"), (col("node") % 2 === 0).as("is_left"),
-        floor(col("node") / 2).cast("long").as("rec_id"),
-        coalesce(col("component"), col("node")).as("cluster_id"))
-  }
-
-  // Fractional epoch upsampling — the LLaMA-recipe data-mixing step:
-  // per-language epoch targets (dyadic, so double arithmetic replays
-  // exactly), each doc emitted floor(e) times plus a deterministic
-  // portable-hash coin for the fractional epoch; copy_idx disambiguates
-  // repeats. One broadcast + one generator, the corpus never shuffles.
-  private val q179Epochs: Seq[(String, Double)] = Seq(
-    "en" -> 2.5, "zh" -> 1.25, "es" -> 0.75, "de" -> 1.0, "fr" -> 3.0)
-  private def q179(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.epochUpsample(
-        t(s, dir, "documents").select("doc_id", "lang"),
-        "doc_id", "lang", q179Epochs.toMap)
-      .select(col("doc_id"), col("lang"), col("target_epochs"),
-        col("n_copies"), col("copy_idx"))
-
-  // splink NameComparison gamma ladder — the reference's name comparison
-  // config (jaro_winkler_thresholds=[0.9,0.8,0.7],
-  // eia_ferc1_model_config.py:35-42) replayed level-for-level: null side
-  // -> -1, exact -> 4, then 3/2/1 by threshold, else 0. Pairs are
-  // blocked (nation, key mod 100) with planted nulls on both sides so
-  // every level including the null lane appears in the output.
-  private def q180(s: SparkSession, dir: String): DataFrame = {
-    import graft.linkage.{FellegiSunter => FS}
-    def named(df: DataFrame, key: String, nkey: String, names: Seq[String],
-              keyOut: String, nkeyOut: String, nameOut: String, nullMod: Int) =
-      df.select(col(key).as(keyOut), col(nkey).as(nkeyOut),
-        when(col(key) % nullMod === 0, lit(null).cast("string"))
-          .otherwise(element_at(array(names.map(lit): _*),
-            (pmod(col(key), lit(names.size)) + 1).cast("int"))).as(nameOut))
-    val c = named(t(s, dir, "customer"), "c_custkey", "c_nationkey",
-      q165CustNames, "c_custkey", "c_nkey", "c_name2", 19)
-    val sup = named(t(s, dir, "supplier"), "s_suppkey", "s_nationkey",
-      q165SuppNames, "s_suppkey", "s_nkey", "s_name2", 23)
-    c.join(sup, col("c_nkey") === col("s_nkey") &&
-        pmod(col("c_custkey"), lit(100)) === pmod(col("s_suppkey"), lit(100)))
-      .select(col("c_custkey"), col("s_suppkey"),
-        FS.nameComparisonLevel(col("c_name2"), col("s_name2"),
-          Seq(0.9, 0.8, 0.7)).as("name_level"))
+  private val families: Seq[LaneFamily] = Seq(EtlLanes, TextLanes, LinkageLanes,
+    AnnLanes, GraphLanes, SpatialLanes, TimeseriesLanes)
+
+  /** Every lane of every family; a name declared twice fails here. */
+  lazy val lanes: Seq[Lane] = {
+    val all = families.flatMap(_.lanes)
+    val twice = all.groupBy(_.name).collect { case (n, ls) if ls.size > 1 => n }
+    require(twice.isEmpty, s"lanes declared more than once: ${twice.toSeq.sorted.mkString(", ")}")
+    all
+  }
+
+  /** The named lanes, each once, in the order first named. Throws
+    * IllegalArgumentException naming every name that is not a lane. */
+  def select(names: Seq[String]): Seq[Lane] = {
+    val byName = lanes.map(l => l.name -> l).toMap
+    val unknown = names.filterNot(byName.contains).distinct
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown lanes: ${unknown.mkString(", ")}")
+    names.distinct.map(byName)
   }
-
-  // Deterministic seeded training order — the data-loader contract:
-  // (shard, seeded-hash, id) permutation with a two-level global_pos
-  // (within-shard rank + broadcast shard offsets) so no global
-  // single-partition sort ever runs; the oracle replays the naive
-  // global ORDER BY the engine avoids.
-  private def q181(s: SparkSession, dir: String): DataFrame =
-    graft.text.TextAnalysis.trainOrder(
-        t(s, dir, "documents").select(col("doc_id"),
-          pmod(col("doc_id"), lit(32)).cast("long").as("shard")),
-        "shard", "doc_id", "ord")
-      .select("doc_id", "shard", "order_key", "global_pos")
-
-  // Per-group equal-width binning — the reference's CURRENT load-factor
-  // binning (assign_groupwise_load_factor_bins, pandas.cut replay with
-  // the bins[0]-only pad and round-9-before-ceil edge discipline,
-  // operational_characteristics.py:182-268). q23/q74 cover the
-  // ntile/qcut shapes the module previously used; this is the cut twin.
-  private def q182(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Binning.equalWidthBins(
-        t(s, dir, "events"), "user_id", "value", nBins = 10)
-      .select(col("user_id"), col("event_id"), col("value"),
-        col("bin_idx"), round(col("bin_lower"), 6).as("bin_lower"),
-        round(col("bin_upper"), 6).as("bin_upper"), col("bin_rank"))
-
-  // Imputation evaluation loop — the reference's simulate_nulls →
-  // impute → score harness (timeseries_evaluation.py:512-556) as one
-  // query: plant deterministic null runs (length 3, period 17, hashed
-  // per-series phase — the documented deterministic twin of the random
-  // placement), impute with the q27-style group median over surviving
-  // values, and score WMAPE on the planted rows in exact half-cent
-  // integers plus a single-division nano ratio.
-  private def q183(s: SparkSession, dir: String): DataFrame = {
-    import graft.impute.ImputationEval
-    val gapped = ImputationEval.simulateNullRuns(
-      t(s, dir, "events"), "user_id", Seq(col("ts"), col("event_id")),
-      "value", period = 17, runLen = 3, seed = "nulls")
-    val med = gapped.groupBy(col("user_id"))
-      .agg(median(col("v")).as("imputed"))
-    ImputationEval.scoreImputation(
-        gapped.join(broadcast(med), Seq("user_id")),
-        "user_id", "value", "imputed")
-      .select("user_id", "n_planted", "abs_err_hc", "truth_hc",
-        "wmape_nano")
-  }
-
-  // Minimum stable load bin — compute_minimum_stable_bin
-  // (operational_characteristics.py:420-477): q182's pandas.cut bins →
-  // gaps-and-islands runs of consecutive same-bin hours → lowest bin
-  // above "off" with a run of >= 2 — the minimum load factor at which a
-  // unit demonstrably runs stable.
-  private def q184(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Binning.minStableBin(
-        t(s, dir, "events"), "user_id",
-        Seq(col("ts"), col("event_id")), "value", nBins = 10, minRun = 2)
-      .select(col("user_id"), col("min_stable_bin_rank"),
-        col("min_stable_bin_idx"),
-        round(col("min_stable_load_factor"), 6).as("min_stable_load_factor"))
-
-  // The operational-characteristics headline assembly —
-  // estimate_operational_characteristics_by_unit
-  // (operational_characteristics.py:571-660): one row PER UNIT with max
-  // load, load-factor binning (value/max per the reference), minimum
-  // stable bin, median heat rate in the max-load bin and in the
-  // min-stable bin, and minimum up-time (shortest island of
-  // at-or-above-stable positions; the fixture's series index stands in
-  // for the reference's consecutive-hour test). Units lacking a stable
-  // bin keep the null shell (prep_output_df's left-join contract). The
-  // heat-rate twin is a deterministic integer function of event_id (the
-  // fixture has no fuel column); its medians land on the half-grid.
-  // Ramp-rate summary — summarize_ramp_rates
-  // (operational_characteristics.py:269-325): per-unit ramp = Δgeneration
-  // per hour over consecutive observations; ramp_down = median of the
-  // steepest 5% downward ramps (k = n/20 smallest), ramp_up = median of
-  // the k largest. ramp is the single expression Δv·3.6e9/Δµs so both
-  // engines fold the identical IEEE double; selection ties break on the
-  // series position. Units with < 20 ramps drop (the reference's
-  // `having(len >= 20)`).
-  private def q186(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wT = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val ramps = t(s, dir, "events")
-      .withColumn("__dv", col("value") - lag(col("value"), 1).over(wT))
-      .withColumn("__dus",
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(wT))
-      .where(col("__dus") > 0 && col("__dv").isNotNull)
-      .withColumn("ramp", col("__dv") * lit(3.6e9) / col("__dus"))
-      .withColumn("rn", row_number().over(wT))
-    val wAsc = Window.partitionBy(col("user_id"))
-      .orderBy(col("ramp").asc, col("rn").asc)
-    val wDesc = Window.partitionBy(col("user_id"))
-      .orderBy(col("ramp").desc, col("rn").desc)
-    val ranked = ramps
-      .withColumn("up_rk", row_number().over(wDesc))
-      .withColumn("dn_rk", row_number().over(wAsc))
-      .withColumn("__n", count(lit(1)).over(
-        Window.partitionBy(col("user_id"))))
-      .where(col("__n") >= 20)
-      // explicit floor: a bare double->long cast truncates in Spark but
-      // ROUNDS in a DuckDB CAST — floor is the one spelling both agree on
-      // (and matches polars' truncating Int64 cast for positive n)
-      .withColumn("__k", floor(col("__n") / 20).cast("long"))
-    val down = ranked.where(col("dn_rk") <= col("__k"))
-      .groupBy(col("user_id"))
-      .agg(median(col("ramp")).as("ramp_down_rate"),
-        max(col("__n")).as("n_ramps"))
-    val upR = ranked.where(col("up_rk") <= col("__k"))
-      .groupBy(col("user_id"))
-      .agg(median(col("ramp")).as("ramp_up_rate"))
-    down.join(upR, Seq("user_id"))
-      .select(col("user_id"), col("n_ramps"),
-        round(col("ramp_down_rate"), 6).as("ramp_down_rate"),
-        round(col("ramp_up_rate"), 6).as("ramp_up_rate"))
-  }
-
-  // Flag summary — the reference's summarize_flags
-  // (timeseries_evaluation.py:468-482, per-flag counts over the screen
-  // output): q71's flag pipeline rolled up per (series, flag) with the
-  // per-series total and an exact nano rate. The summary is one
-  // map-side-combinable count on top of the pipeline's windows.
-  private def q187(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-    q71(s, dir)
-      .groupBy(col("user_id"), col("flag"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("n_total", sum(col("n")).over(w))
-      .withColumn("flag_rate_nano",
-        round(lit(1e9) * col("n") / col("n_total")).cast("long"))
-  }
-
-  private def q185(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.operators.Binning
-    val ev = t(s, dir, "events")
-    val maxes = ev.groupBy(col("user_id"))
-      .agg(max(col("value")).as("max_load"))
-    val lf = ev.join(broadcast(maxes), Seq("user_id"))
-      .withColumn("lf", col("value") / col("max_load"))
-      .withColumn("hr", (lit(8) + pmod(col("event_id"), lit(5))).cast("double"))
-    // the binned frame feeds FIVE consumers (stable-run scan, max-rank,
-    // hr-at-max, hr-at-stable, up-time) — materialize it once instead of
-    // re-running the stats + dense-rank window pipeline per reference
-    // (round 17; minStableBinFromBinned shares the same frame)
-    // Round 18, measured and NOT kept: a repartition(user_id) before the
-    // checkpoint was tried so the five per-user consumers could reuse the
-    // partitioning — under AQE the checkpointed LogicalRDD reports
-    // unknown/coalesced partitioning, the consumer Exchanges stay
-    // (plan identical: 30 Exchanges either way), and the extra shuffle
-    // would be pure cost.
-    val binned = Binning.equalWidthBins(lf, "user_id", "lf", nBins = 10)
-      .localCheckpoint()
-    val stable = Binning.minStableBinFromBinned(binned, "user_id",
-      Seq(col("ts"), col("event_id")), minRun = 2)
-    val maxRank = binned.groupBy(col("user_id"))
-      .agg(max(col("bin_rank")).as("__mr"))
-    val hrMax = binned.join(broadcast(maxRank), Seq("user_id"))
-      .where(col("bin_rank") === col("__mr"))
-      .groupBy(col("user_id")).agg(median(col("hr")).as("hr_at_max_load"))
-    val stabIdx = stable.select(col("user_id"), col("min_stable_bin_idx"))
-    val hrStable = binned.join(broadcast(stabIdx), Seq("user_id"))
-      .where(col("bin_idx") === col("min_stable_bin_idx"))
-      .groupBy(col("user_id")).agg(median(col("hr")).as("hr_at_min_stable"))
-    val wT = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val up = binned.withColumn("rn", row_number().over(wT))
-      .join(broadcast(stabIdx), Seq("user_id"))
-      .where(col("bin_idx") >= col("min_stable_bin_idx"))
-      .withColumn("__isl", col("rn") - row_number().over(wT))
-      .groupBy(col("user_id"), col("__isl"))
-      .agg(count(lit(1)).as("__len"))
-      .groupBy(col("user_id")).agg(min(col("__len")).as("min_up_time_hours"))
-    maxes
-      .join(stable, Seq("user_id"), "left")
-      .join(hrMax, Seq("user_id"), "left")
-      .join(hrStable, Seq("user_id"), "left")
-      .join(up, Seq("user_id"), "left")
-      .select(col("user_id"), round(col("max_load"), 2).as("max_load"),
-        col("min_stable_bin_rank"),
-        round(col("min_stable_load_factor"), 6).as("min_stable_load_factor"),
-        round(col("hr_at_max_load"), 6).as("hr_at_max_load"),
-        round(col("hr_at_min_stable"), 6).as("hr_at_min_stable"),
-        col("min_up_time_hours"))
-  }
-
-  // Doc-level tokenizer accounting — the corpus capstone's stage 7 as an
-  // oracle-graded query: train the q171 unigram vocab (seed + 2 EM
-  // rounds) on the word dictionary, Viterbi-encode each DICTIONARY word
-  // once, then join the per-word piece counts back to the exploded docs
-  // and sum per doc. The dictionary reduction means the corpus is touched
-  // twice (word count + the accounting join) no matter its size; the
-  // trained surface is vocabulary-bounded.
-  /** Shared q175/q176 accounting frame: (doc_id, lang, n_tokens,
-    * n_pieces) under the q171-trained unigram vocab. */
-  private def unigramDocPieces(s: SparkSession, dir: String,
-                               withScore: Boolean = false): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val words = Unigram.wordDict(docs)
-    val grouped = Unigram.piecesPerWord(docs, Seq("doc_id", "lang"), words,
-        Unigram.train(words).localCheckpoint())
-      .groupBy("doc_id", "lang")
-    if (withScore)
-      grouped.agg(count(lit(1)).as("n_tokens"),
-        sum(col("__wp")).as("n_pieces"), sum(col("__ws")).as("score_nano"))
-    else
-      grouped.agg(count(lit(1)).as("n_tokens"),
-        sum(col("__wp")).as("n_pieces"))
-  }
-
-  private def q175(s: SparkSession, dir: String): DataFrame =
-    unigramDocPieces(s, dir).orderBy("doc_id")
-
-  // Per-doc language-model quality under the corpus-trained unigram —
-  // the PERPLEXITY FILTER stage (CCNet's "keep docs whose LM perplexity
-  // is low" discipline, a staple of LLaMA-class data pipelines): each
-  // doc's Viterbi path log-prob total (exact integer nanos from the
-  // trained scores), pieces count, NLL per piece = -score/n_pieces (one
-  // double division of exact longs — both engines fold the identical
-  // IEEE value), and the keep flag at a literal threshold. Costs ONE
-  // extra sum over the q175 accounting join — the LM itself stays
-  // dictionary-bounded (the q171 SentencePiece reduction), so the stage
-  // is corpus-linear with a vocabulary-sized state no matter the scale.
-  private def q191(s: SparkSession, dir: String): DataFrame =
-    unigramDocPieces(s, dir, withScore = true)
-      .withColumn("nll_per_piece_nano",
-        round(-col("score_nano").cast("double") / col("n_pieces"))
-          .cast("long"))
-      .withColumn("kept", col("nll_per_piece_nano") <= lit(3500000000L))
-      .orderBy("doc_id")
-
-  // ---- ANN index-quality: oracle-checked recall@10 of the LSH index ----
-  // The recall metric itself under the DuckDB oracle (the Bench
-  // recall10_* gate's oracle-green twin): Similarity.recallAtK of the
-  // q43-config portable LSH against brute-force cosineTopK, both at
-  // k = 10 on the bounded query set. The oracle rebuilds BOTH inputs
-  // from the same parameterized SQL the graded q42/q43 lanes use
-  // (annExactTopkSql/annLshTopkSql at k = 10 — drift between the graded
-  // lanes and the recall baseline is impossible by construction) and
-  // replays the left-join + aggregate. recall = n_hit / n_exact is one
-  // division of two exact integers — identical IEEE double both engines.
-  private def q192(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val qs = emb.where(col("vec_id") < 20)
-    Similarity.recallAtK(
-      Similarity.cosineTopK(qs, emb, "vec_id", "embedding", 10),
-      Similarity.lshTopK(qs, emb, "vec_id", "embedding", 10, nBits = 6,
-        dim = 64, tables = 8),
-      10)
-  }
-
-  // ---- training-data pipeline: T5/UL2 span corruption ---------------------
-  // Denoising-objective data construction (Raffel et al. JMLR'20
-  // §3.1.4): fixed-length token blocks, deterministic portable-hash
-  // coin at 15%, masked blocks collapse to <extra_id_K> sentinels in
-  // the input and expand to sentinel + tokens in the target with the
-  // terminal sentinel appended — T5's exact sentinel numbering. Pure
-  // integer/string arithmetic on the shared 60-bit MD5-prefix hash, so
-  // the oracle replays masks, sentinel ranks, and both assembled
-  // strings verbatim. One exchange on doc_id (window + reassembly).
-  private def q194(s: SparkSession, dir: String): DataFrame =
-    graft.text.SpanCorruption.spanCorrupt(
-      t(s, dir, "documents"), "doc_id", "text")
-
-  // ---- training-data pipeline: fill-in-the-middle --------------------------
-  // The FIM transform (arXiv:2207.14255): a 75% hash coin selects docs,
-  // two hash-drawn token points split a selected doc, and it
-  // re-serializes as <PRE> prefix <SUF> suffix <MID> middle (PSM);
-  // unselected docs pass through verbatim — the paper's joint-training
-  // recipe. Pure per-row list-slice arithmetic (zero shuffle); every
-  // draw replays in the oracle from the shared MD5-prefix hash.
-  private def q197(s: SparkSession, dir: String): DataFrame =
-    graft.text.SpanCorruption.fimTransform(
-      t(s, dir, "documents"), "doc_id", "text")
-
-  // ---- §2.3 both-sides skew-guarded join (2-D tile decomposition) --------
-  // The big-joins-big regime: the planted (key % 5) blocking key makes
-  // EVERY block hot on BOTH sides, so salting one side alone would still
-  // leave ~maxBlock · R pairs per salt. skewGuardedJoin decomposes each
-  // block's L×R pair matrix into ~maxBlock×maxBlock tiles — (row-salt,
-  // col-salt) shuffle groups, every pair meeting in exactly one tile —
-  // and maxBlock = 4 forces real multi-salt grids at every graded scale.
-  // The guard is pair-for-pair identical to the plain equi-join, which
-  // is precisely what the oracle replays: the exact pair count plus an
-  // integer checksum over ALL pairs would expose any pair the tiling
-  // lost or duplicated.
-  private def q198(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").where(col("c_custkey") % 100 < 20)
-      .select(col("c_custkey"), pmod(col("c_custkey"), lit(5)).as("blk"),
-        round(col("c_acctbal") * 100).cast("long").as("l_cents"))
-    val sup = t(s, dir, "supplier").where(col("s_suppkey") % 10 < 3)
-      .select(col("s_suppkey"),
-        pmod(col("s_suppkey"), lit(5)).as("__rblk"),
-        round(col("s_acctbal") * 100).cast("long").as("r_cents"))
-    graft.linkage.Linkage.skewGuardedJoin(c, sup,
-        Seq(col("blk")), Seq(col("__rblk")), maxBlock = 4)
-      .groupBy(col("blk"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("l_cents") * 7 + col("r_cents")).as("sum_chk"))
-  }
-
-  // ---- similarity search: multi-probe LSH ANN (the recall lever that is
-  // cheap at 100 TB). Same portable index as q43 — identical corpus-side
-  // (tbl, bucket) memberships, so one persisted bucket index serves both —
-  // but each query ALSO probes its 3 best single-bit-flip neighbor buckets
-  // per table (smallest |projection| margin first, Lv et al. VLDB 2007).
-  // Extra tables replicate the CORPUS side of the equi-join; extra probes
-  // only replicate the bounded QUERY side. The DuckDB oracle replays the
-  // margins (bit-exact: in-order ±1 double sums), the probe ORDER, the
-  // flipped buckets, candidates and the final ranking.
-  private def q199(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.lshMultiProbeTopK(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nBits = 6, dim = 64,
-      tables = 8, probes = 4)
-  }
-
-  /** q200's eval query set — the SINGLE descriptor both the Spark lane and
-    * the generated oracle SQL are built from (the q188 rule-descriptor
-    * discipline: drift between engine and oracle impossible by
-    * construction). Term mix: qa = q138's graded 3-term query, qb = a
-    * 4-term conjunction (sparser relevance), qc includes the one rare
-    * fixture token (`dup`) so recall@10 is exercised away from 1.0. */
-  private[graft] val q200Queries: Seq[(String, Seq[String])] = Seq(
-    "qa" -> Seq("spark", "window", "merge"),
-    "qb" -> Seq("hash", "join", "stream", "batch"),
-    "qc" -> Seq("dup", "vector"))
-
-  // ---- training-data pipeline: retrieval-quality eval ---------------------
-  // MRR / precision@10 / recall@10 of BM25 runs against boolean-AND
-  // relevance (doc relevant iff it contains every query term) — the eval
-  // half of a retrieval pipeline. Metrics are exact integer nanos (one
-  // integer division each; nothing float past the BM25 ranking), so the
-  // whole row set replays bit-for-bit in the oracle.
-  private def q200(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.retrievalEval(t(s, dir, "documents"), "doc_id", "text",
-      q200Queries, k = 50, cutoff = 10)
-
-  // ---- training-data pipeline: bigram LM quality (stupid backoff) --------
-  // The n > 1 member of the LM-filter family next to q191's unigram
-  // (CCNet trains KenLM n-grams for exactly this): train bigram + unigram
-  // MLE tables on the EVEN doc_ids, score EVERY doc under stupid backoff
-  // (Brants et al. 2007) — the train/apply split is what makes the backoff
-  // path reachable. Scores are per-TYPE integer nanos, doc score an exact
-  // integer sum; the oracle replays the stream, both tables, the backoff
-  // coalesce and the sums.
-  private def q201(s: SparkSession, dir: String): DataFrame =
-    graft.text.BigramLm.scoreDocs(t(s, dir, "documents"), "doc_id", "text",
-      trainPred = col("doc_id") % 2 === 0)
-
-  // ---- training-data pipeline: batched multi-query BM25 -------------------
-  // The scale form q200's Scaladoc promises: ONE corpus pass serves every
-  // query — terms union-filtered before any shuffle, (term -> query) rides
-  // a broadcast, per-query top-k is a rank-capped window. Same q200Queries
-  // descriptor generates the oracle, and scoring is bit-identical per
-  // query to q138's single-query operator (spec-pinned).
-  private def q203(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.bm25TopKBatch(t(s, dir, "documents"), "doc_id", "text",
-      q200Queries, k = 50)
-
-  // ---- training-data pipeline: hybrid retrieval (RRF fusion) --------------
-  // Reciprocal-rank fusion of the two retrieval families the engine
-  // already runs — lexical BM25 (q138's operator at q200's qa terms) and
-  // embedding cosine top-k (q42's operator for query vector 0) — the
-  // standard hybrid-search combiner. Each run contributes
-  // 1e9 // (60 + rank) integer nanos; the fused score is an exact integer
-  // sum, so the whole lane replays over the two runs' existing replays.
-  private def q204(s: SparkSession, dir: String): DataFrame = {
-    val lexical = TextAnalysis.bm25TopK(t(s, dir, "documents"), "doc_id",
-        "text", q200Queries.head._2, k = 50)
-      .select(col("doc_id").as("id"), col("rank"))
-    val emb = t(s, dir, "embeddings")
-    val semantic = Similarity.cosineTopK(emb.where(col("vec_id") === 0),
-        emb, "vec_id", "embedding", k = 50)
-      .select(col("c_id").as("id"), col("rk").cast("long").as("rank"))
-    TextAnalysis.rrfFuse(Seq(lexical, semantic), "id", k = 20)
-  }
-
-  // ---- §2.10 triangle counting (degree-ordered, skew-proof) ---------------
-  // Compact-forward exact triangle counts on a non-bipartite projection of
-  // lineitem (part/supplier keys folded into one mod-997 id space, sparse
-  // quantity slice). Orientation from the (deg, id)-smaller endpoint
-  // bounds every out-degree by ~sqrt(2m) — wedge volume O(m^1.5) total, no
-  // hub blowup — and the oracle replays degrees, orientation, wedges and
-  // the closing probe exactly.
-  private def q208(s: SparkSession, dir: String): DataFrame = {
-    val edges = t(s, dir, "lineitem")
-      .where(col("l_quantity") > 48)
-      .select((col("l_partkey") % 997).as("src"),
-        (col("l_suppkey") % 997).as("dst"))
-    graft.graph.Triangles.countPerVertex(edges, "src", "dst")
-  }
-
-  // ---- §2.10 local clustering coefficient (integer nanos) ----------------
-  // Watts–Strogatz local density on q208's counts: cc_nano =
-  // 2·T(v)·1e9 // (deg·(deg−1)), 0 below degree 2 — one integer division
-  // per vertex, shared oracle template with q208.
-  private def q210(s: SparkSession, dir: String): DataFrame = {
-    val edges = t(s, dir, "lineitem")
-      .where(col("l_quantity") > 48)
-      .select((col("l_partkey") % 997).as("src"),
-        (col("l_suppkey") % 997).as("dst"))
-    graft.graph.Triangles.clusteringCoefficient(edges, "src", "dst")
-  }
-
-  // ---- §2.10 community detection (synchronous label propagation) ---------
-  // Deterministic LPA (Raghavan et al. 2007, sync variant, min-label tie
-  // break) over the q208 edge fixture — 2 fixed rounds; the oracle unrolls
-  // both rounds (neighbor-label counts, per-vertex argmax) exactly.
-  private def q209(s: SparkSession, dir: String): DataFrame = {
-    val edges = t(s, dir, "lineitem")
-      .where(col("l_quantity") > 48)
-      .select((col("l_partkey") % 997).as("src"),
-        (col("l_suppkey") % 997).as("dst"))
-    graft.graph.Communities.labelPropagation(edges, "src", "dst", iters = 2)
-  }
-
-  // ---- graph family CONSUMER: dup-graph community/density report ---------
-  // q208-q210's operators pointed at the edge set a capstone actually
-  // builds: Etl.corpusDupEdges — the IDENTICAL 3-gram-Jaccard ≥ 1/4 pair
-  // frame the corpus capstone's canonicalization stage clusters on (shared
-  // helper, not a parallel re-declaration). Per dup-graph vertex: its LPA
-  // community (2 sync rounds), degree, triangle count and integer-nano
-  // clustering coefficient — the community/density signal a curation
-  // pipeline reads off its near-dup graph (dense high-cc communities =
-  // template farms; sparse low-cc chains = borderline near-dups). The
-  // edge frame is persisted (lazily) because BOTH branches consume it —
-  // pair volume ∝ true duplicates, bounded far below the corpus.
-  private def q211(s: SparkSession, dir: String): DataFrame = {
-    val edges = Etl.corpusDupEdges(t(s, dir, "documents")).persist()
-    val density = graft.graph.Triangles
-      .clusteringCoefficient(edges, "src", "dst")
-    val comm = graft.graph.Communities
-      .labelPropagation(edges, "src", "dst", iters = 2)
-    density.join(comm, Seq("vertex"))
-      .select(col("vertex"), col("community"), col("degree"),
-        col("n_triangles"), col("cc_nano"))
-  }
-
-  // ---- training-data pipeline: pseudo-relevance feedback ------------------
-  // Rocchio-family query expansion (the PRF half of RM3): seed BM25 run
-  // (q200's qa terms), harvest the 3 most frequent terms of the top-10
-  // feedback docs (exact integer tf, term tiebreak, seed excluded), re-run
-  // BM25 on the expanded set. The classic lexical recall lever; the oracle
-  // replays BOTH runs and the expansion selection.
-  private def q207(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.bm25Prf(t(s, dir, "documents"), "doc_id", "text",
-      q200Queries.head._2, fbDocs = 10, expandM = 3, k = 20)
-
-  // ---- similarity search: PQ shortlist + exact re-rank --------------------
-  // FAISS's standard two-stage serving shape: the q159 compressed index
-  // produces a 50-candidate ADC shortlist per query, raw vectors are
-  // fetched ONLY for those pairs and re-scored with the exact rounded
-  // cosine, top-10 kept — the ADC quantization distortion is removed
-  // entirely, recall becomes shortlist-coverage-bounded. Oracle = the
-  // parameterized q159 replay at k = 50 embedded as the rerank's CTE.
-  private def q206(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val q = emb.where(col("vec_id") < 20)
-    val shortlist = Similarity.pqTopKSeeded(q, emb, "vec_id", "embedding",
-      k = 50, m = 16, nCodes = 64)
-    Similarity.rerankExact(shortlist, q, emb, "vec_id", "embedding", k = 10)
-  }
-
-  // ---- training-data pipeline: SemDeDup with radius-1 band probing --------
-  // The q199 multi-probe lever transferred to the near-dup banding gap the
-  // recall gate records (recall_semdedup_nano 0.27 at the graded q130
-  // config): ONE side of the within-cluster self-join also probes every
-  // single-bit-flip neighbor of each 6-bit band, so pairs within Hamming
-  // distance 1 of a band match become candidates — 7x probe-side volume,
-  // UNCHANGED blocked-side cost. Same Lloyd trace, same tau; the oracle
-  // replays the flips on top of the q130 replay (shared template).
-  private def q202(s: SparkSession, dir: String): DataFrame =
-    graft.similarity.Similarity.semDedup(t(s, dir, "embeddings"),
-      "vec_id", "embedding", k = semDedupKFloor, iters = 1, tau = 0.4,
-      bandedDim = Some(64), bandProbe1 = true,
-      targetClusterRows = semDedupTargetRows)
-
-  // ---- training-data pipeline: UL2 mixture-of-denoisers -------------------
-  // The UL2 objective's data side (Tay et al. 2022): each doc hash-draws
-  // ONE denoiser — R (15%/span 3, weight 2/4), S (PrefixLM split, 1/4),
-  // X (extreme 50%/span 8, 1/4) — and the input gains the paradigm
-  // token. Docs filter to their lane BEFORE construction, so the corpus
-  // is processed once; the oracle replays all three constructions (the
-  // shared spanCorruptSql at each lane's parameters + the list-slice
-  // prefix split) over the same hash assignment.
-  private def q195(s: SparkSession, dir: String): DataFrame =
-    graft.text.SpanCorruption.ul2Mixture(
-      t(s, dir, "documents"), "doc_id", "text")
-
-  // Context-window packing by TRAINED-TOKENIZER budget — the production
-  // packer: windows are budgeted in model tokens (q175's n_pieces under
-  // the corpus-trained unigram vocab), not whitespace words (q134's
-  // form). Same declarative shape: one shuffle on the shard key, running
-  // offsets and chunk arithmetic as window expressions.
-  private def q176(s: SparkSession, dir: String): DataFrame =
-    graft.text.TextAnalysis.packSequencesBy(
-        unigramDocPieces(s, dir).select(col("doc_id"), col("n_pieces")),
-        "doc_id", col("n_pieces"), budget = 512, nShards = 8)
-      .select(col("doc_id"), col("n_tokens").as("n_pieces"), col("shard"),
-        col("chunk_id"), col("chunk_pos"), col("n_chunks"))
-      .orderBy("doc_id")
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     q02(spark, "/root/testdata/sf0.001")
 
-  /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (q01 _),
-    "q02_region_revenue" -> (q02 _),
-    "q03_filter_project" -> (q03 _),
-    "q04_freshest_order" -> (q04 _),
-    "q05_weighted_avg" -> (q05 _),
-    "q06_rolling_avg" -> (q06 _),
-    "q07_melt" -> (q07 _),
-    "q08_hourly_events" -> (q08 _),
-    "q09_date_merge" -> (q09 _),
-    "q10_expand_timeseries" -> (q10 _),
-    "q11_changelog" -> (q11 _),
-    "q12_scale_by_ownership" -> (q12 _),
-    "q13_sum_na" -> (q13 _),
-    "q14_harvest_consistency" -> (q14 _),
-    "q15_best_snapshot" -> (q15 _),
-    "q16_apply_diffs" -> (q16 _),
-    "q17_anti_join" -> (q17 _),
-    "q18_mixed_agg" -> (q18 _),
-    "q19_rolling_median" -> (q19 _),
-    "q20_spike_flag" -> (q20 _),
-    "q21_run_length" -> (q21 _),
-    "q22_identical_run" -> (q22 _),
-    "q23_ntile_bins" -> (q23 _),
-    "q24_cumulative" -> (q24 _),
-    "q25_ramp_rates" -> (q25 _),
-    "q26_min_up_down" -> (q26 _),
-    "q27_median_impute" -> (q27 _),
-    "q28_topk_per_group" -> (q28 _),
-    "q29_simplify_strings" -> (q29 _),
-    "q30_zero_pad" -> (q30 _),
-    "q31_encode" -> (q31 _),
-    "q32_convert_units" -> (q32 _),
-    "q33_date_compose" -> (q33 _),
-    "q34_extract_numeric" -> (q34 _),
-    "q35_name_normalize" -> (q35 _),
-    "q36_token_stats" -> (q36 _),
-    "q37_quality_score" -> (q37 _),
-    "q38_lang_id" -> (q38 _),
-    "q39_exact_dedup" -> (q39 _),
-    "q40_ngram_jaccard" -> (q40 _),
-    "q41_minhash_lsh" -> (q41 _),
-    "q42_cosine_topk" -> (q42 _),
-    "q43_lsh_ann" -> (q43 _),
-    "q44_multimodal_meta" -> (q44 _),
-    "q45_connected_components" -> (q45 _),
-    "q46_tfidf_top_term" -> (q46 _),
-    "q47_blocked_fuzzy_join" -> (q47 _),
-    "q48_logistic_match" -> (q48 _),
-    "q49_pivot_fractions" -> (q49 _),
-    "q50_mcoe_ratios" -> (q50 _),
-    "q51_multi_grain_agg" -> (q51 _),
-    "q52_weighted_quantile" -> (q52 _),
-    "q53_spot_fix" -> (q53 _),
-    "q54_drop_ytd" -> (q54 _),
-    "q55_stream_window" -> (q55 _),
-    "q56_schema_enforce" -> (q56 _),
-    "q57_check_runner" -> (q57 _),
-    "q58_dbscan_clusters" -> (q58 _),
-    "q59_sort_limit" -> (q59 _),
-    "q60_era_union" -> (q60 _),
-    "q61_matrix_impute" -> (q61 _),
-    "q62_calc_forest" -> (q62 _),
-    "q63_global_outlier" -> (q63 _),
-    "q64_bool_recode" -> (q64 _),
-    "q65_json_parse" -> (q65 _),
-    "q66_orphan_assign" -> (q66 _),
-    "q67_stack_explode" -> (q67 _),
-    "q68_sessionize" -> (q68 _),
-    "q69_neardup_canonical" -> (q69 _),
-    "q70_cleaning_chain" -> (q70 _),
-    "q71_flag_pipeline" -> (q71 _),
-    "q72_date_merge_quarter" -> (q72 _),
-    "q73_rollup_grains" -> (q73 _),
-    "q74_quantile_bins" -> (q74 _),
-    "q75_local_outlier" -> (q75 _),
-    "q76_anomalous_region" -> (q76 _),
-    "q77_bad_periods" -> (q77 _),
-    "q78_single_delta" -> (q78 _),
-    "q79_outer_assoc" -> (q79 _),
-    "q80_phone_year" -> (q80 _),
-    "q81_tubal_impute" -> (q81 _),
-    "q82_overlay_alloc" -> (q82 _),
-    "q83_dissolve_area" -> (q83 _),
-    "q84_point_in_region" -> (q84 _),
-    "q85_ivf_ann" -> (q85 _),
-    "q86_convex_clip" -> (q86 _),
-    "q87_row_map" -> (q87 _),
-    "q88_harvest_full" -> (q88 _),
-    "q89_true_gran" -> (q89 _),
-    "q90_parse_address" -> (q90 _),
-    "q91_territory_demand" -> (q91 _),
-    "q92_dbt_checks" -> (q92 _),
-    "q93_simhash_pairs" -> (q93 _),
-    "q94_fips_tz" -> (q94 _),
-    "q95_embedding_neardup" -> (q95 _),
-    "q96_euclidean_pairs" -> (q96 _),
-    "q97_link_cross_year" -> (q97 _),
-    "q98_jaro_winkler" -> (q98 _),
-    "q99_orphan_assign_lsh" -> (q99 _),
-    "q100_incremental_dedup" -> (q100 _),
-    "q101_cc_stars" -> (q101 _),
-    "q102_pack_sequences" -> (q102 _),
-    "q103_split_assign" -> (q103 _),
-    "q104_ngram_vocab" -> (q104 _),
-    "q105_asof_join" -> (q105 _),
-    "q106_interval_join" -> (q106 _),
-    "q107_stratified_sample" -> (q107 _),
-    "q108_polygon_overlay" -> (q108 _),
-    "q109_multipolygon_split" -> (q109 _),
-    "q110_polygon_dissolve" -> (q110 _),
-    "q111_territory_compile" -> (q111 _),
-    "q112_self_union_ratio" -> (q112 _),
-    "q113_winnow_pairs" -> (q113 _),
-    "q114_zorder_key" -> (q114 _),
-    "q115_kmv_distinct" -> (q115 _),
-    "q116_kmv_two_level" -> (q116 _),
-    "q117_scd2_intervals" -> (q117 _),
-    "q118_wkb_bridge" -> (q118 _),
-    "q119_agglomerative_split" -> (q119 _),
-    "q120_multi_index_stack" -> (q120 _),
-    "q121_gopher_quality" -> (q121 _),
-    "q122_pii_redact" -> (q122 _),
-    "q123_line_dedup" -> (q123 _),
-    "q124_temperature_sample" -> (q124 _),
-    "q125_sq8_ann" -> (q125 _),
-    "q126_perplexity_filter" -> (q126 _),
-    "q127_batch_layout" -> (q127 _),
-    "q128_decontaminate" -> (q128 _),
-    "q129_leakage_split" -> (q129 _),
-    "q130_semdedup" -> (q130 _),
-    "q131_bloom_manifest" -> (q131 _),
-    "q132_stratum_cap" -> (q132 _),
-    "q133_repeated_spans" -> (q133 _),
-    "q134_chunk_windows" -> (q134 _),
-    "q135_budget_select" -> (q135 _),
-    "q136_url_canonical" -> (q136 _),
-    "q137_html_strip" -> (q137 _),
-    "q138_bm25_topk" -> (q138 _),
-    "q139_weighted_sample" -> (q139 _),
-    "q140_embed_pool" -> (q140 _),
-    "q141_apply_changelog" -> (q141 _),
-    "q142_snapshot_at" -> (q142 _),
-    "q143_bpe_merges" -> (q143 _),
-    "q144_bpe_encode" -> (q144 _),
-    "q145_cms_estimate" -> (q145 _),
-    "q146_funnel" -> (q146 _),
-    "q147_profile" -> (q147 _),
-    "q148_pagerank" -> (q148 _),
-    "q149_corr_matrix" -> (q149 _),
-    "q150_psi_drift" -> (q150 _),
-    "q151_group_ols" -> (q151 _),
-    "q152_ewma_screen" -> (q152 _),
-    "q153_chi_square" -> (q153 _),
-    "q154_hard_negatives" -> (q154 _),
-    "q155_snapshot_diff" -> (q155 _),
-    "q156_capstone_metrics" -> (q156 _),
-    "q157_capstone_parts" -> (q157 _),
-    "q158_trained_match" -> (q158 _),
-    "q159_pq_adc" -> (q159 _),
-    "q160_dbt_checks2" -> (q160 _),
-    "q161_mixture_select" -> (q161 _),
-    "q162_ivfpq" -> (q162 _),
-    "q163_company_clean" -> (q163 _),
-    "q164_harvest_lastdate" -> (q164 _),
-    "q165_phonetic_block" -> (q165 _),
-    "q166_nb_quality" -> (q166 _),
-    "q167_dsir_select" -> (q167 _),
-    "q168_fellegi_sunter" -> (q168 _),
-    "q169_fs_em_train" -> (q169 _),
-    "q170_fs_tf_adjust" -> (q170 _),
-    "q171_unigram_lm" -> (q171 _),
-    "q172_unigram_encode" -> (q172 _),
-    "q173_unigram_prune" -> (q173 _),
-    "q174_metaphone_block" -> (q174 _),
-    "q175_doc_pieces" -> (q175 _),
-    "q176_pack_by_pieces" -> (q176 _),
-    "q177_union_blocks" -> (q177 _),
-    "q178_block_profile" -> (q178 _),
-    "q179_epoch_upsample" -> (q179 _),
-    "q180_name_levels" -> (q180 _),
-    "q181_train_order" -> (q181 _),
-    "q182_equal_width_bins" -> (q182 _),
-    "q183_impute_eval" -> (q183 _),
-    "q184_min_stable_bin" -> (q184 _),
-    "q185_unit_characteristics" -> (q185 _),
-    "q186_ramp_rates_p5" -> (q186 _),
-    "q187_flag_summary" -> (q187 _),
-    "q188_union_blocks_full" -> (q188 _),
-    "q189_block_profile_full" -> (q189 _),
-    "q190_splink_predict" -> (q190 _),
-    "q191_lm_quality" -> (q191 _),
-    "q192_ann_recall" -> (q192 _),
-    "q193_splink_cluster" -> (q193 _),
-    "q194_span_corrupt" -> (q194 _),
-    "q195_ul2_mixture" -> (q195 _),
-    "q196_contamination_report" -> (q196 _),
-    "q197_fim_transform" -> (q197 _),
-    "q198_skew2d_join" -> (q198 _),
-    "q199_multiprobe_lsh" -> (q199 _),
-    "q200_retrieval_eval" -> (q200 _),
-    "q201_bigram_lm" -> (q201 _),
-    "q202_semdedup_probed" -> (q202 _),
-    "q203_bm25_batch" -> (q203 _),
-    "q204_rrf_fusion" -> (q204 _),
-    "q205_orphan_probed" -> (q205 _),
-    "q206_pq_rerank" -> (q206 _),
-    "q207_bm25_prf" -> (q207 _),
-    "q208_triangles" -> (q208 _),
-    "q209_label_prop" -> (q209 _),
-    "q210_clustering_coeff" -> (q210 _),
-    "q211_dup_graph_report" -> (q211 _),
-  )
+  private def q02 = queries("q02_region_revenue")
 
-  /** q71's oracle, shared verbatim by q187's summary wrapper so the two
-    * can never drift. */
-  private val q71Sql: String =
-    """WITH ev AS (
-      |  SELECT user_id, event_id, ts,
-      |    CASE WHEN event_id % 53 = 0 THEN NULL ELSE value END AS v
-      |  FROM events),
-      |b AS (
-      |  SELECT *, CAST(floor(v / 10) AS BIGINT) AS bucket,
-      |    lag(CAST(floor(v / 10) AS BIGINT))
-      |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_b,
-      |    v - lag(v) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dp,
-      |    lead(v) OVER (PARTITION BY user_id ORDER BY ts, event_id) - v AS dn
-      |  FROM ev),
-      |runs AS (
-      |  SELECT *, sum(CASE WHEN prev_b IS DISTINCT FROM bucket THEN 1 ELSE 0 END)
-      |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-      |  FROM b),
-      |flags AS (
-      |  SELECT user_id, event_id, v,
-      |    (count(*) OVER (PARTITION BY user_id, run_id) >= 3
-      |      AND bucket IS NOT NULL) AS f_run,
-      |    (dp IS NOT NULL AND dn IS NOT NULL AND abs(dp) > 25.0
-      |      AND abs(dn) > 25.0 AND dp * dn < 0) AS f_spike
-      |  FROM runs)
-      |SELECT user_id, event_id, v,
-      |  CASE WHEN v IS NULL THEN 'missing'
-      |       WHEN NOT (v BETWEEN 0 AND 40) THEN 'oob'
-      |       WHEN f_run THEN 'identical_run'
-      |       WHEN f_spike THEN 'spike'
-      |       ELSE 'ok' END AS flag
-      |FROM flags""".stripMargin
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    lanes.map(l => l.name -> l.build).toMap
 
-  /** Exact brute-force cosine top-k oracle, parameterized by k: the q42
-    * graded lane uses k = 5 and q192's recall baseline uses k = 10 from
-    * the SAME text — drift between them is impossible by construction
-    * (the q188 rule-descriptor discipline). */
-  private def annExactTopkSql(k: Int): String =
-    """WITH q AS (
-      |  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 20),
-      |c AS (SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings),
-      |scored AS (
-      |  SELECT q_id, c_id,
-      |    round(
-      |      list_sum(list_transform(list_zip(q_emb, c_emb),
-      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(q_emb,
-      |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(c_emb,
-      |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))), 4) AS cosine
-      |  FROM q, c WHERE q_id <> c_id)
-      |SELECT q_id, rk, c_id, cosine FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id
-      |    ORDER BY cosine DESC, c_id ASC) AS rk
-      |  FROM scored) WHERE rk <= KK""".stripMargin
-      .replace("KK", k.toString)
-
-  /** Portable-LSH ANN oracle (all 8 hash tables, buckets, candidates and
-    * the final ranking), parameterized by k: q43 grades at k = 5, q192's
-    * recall subject runs the same index at k = 10. */
-  private def annLshTopkSql(k: Int): String =
-    """WITH signs AS (
-      |  SELECT g, list_transform(range(0, 64), d ->
-      |    CASE WHEN ('0x' || substr(md5(g::VARCHAR || '_' || d::VARCHAR), 1, 15))::BIGINT
-      |           % 2 = 0
-      |         THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS sv
-      |  FROM range(0, 48) t(g)),
-      |proj AS (
-      |  SELECT e.vec_id, s.g // 6 AS tbl, s.g % 6 AS i,
-      |    list_sum(list_transform(list_zip(e.embedding, s.sv),
-      |      x -> CAST(x[1] AS DOUBLE) * x[2])) AS p
-      |  FROM embeddings e CROSS JOIN signs s),
-      |buck AS (
-      |  SELECT vec_id, tbl,
-      |    sum(CASE WHEN p > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END) AS bucket
-      |  FROM proj GROUP BY 1, 2),
-      |cand AS (
-      |  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS c_id
-      |  FROM buck q JOIN buck c
-      |    ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.vec_id <> c.vec_id
-      |  WHERE q.vec_id < 20),
-      |norms AS (
-      |  SELECT vec_id, embedding,
-      |    sqrt(list_sum(list_transform(embedding,
-      |      e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)))) AS n
-      |  FROM embeddings),
-      |scored AS (
-      |  SELECT q_id, c_id,
-      |    round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.n * b.n), 4)
-      |      AS cosine
-      |  FROM cand
-      |  JOIN norms a ON a.vec_id = q_id
-      |  JOIN norms b ON b.vec_id = c_id)
-      |SELECT q_id, rk, c_id, cosine FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id
-      |    ORDER BY cosine DESC, c_id ASC) AS rk
-      |  FROM scored) WHERE rk <= KK""".stripMargin
-      .replace("KK", k.toString)
-
-  /** Multi-probe portable-LSH oracle (q199 grades at k = 5, probes = 4;
-    * the recall gate runs the same index at k = 10): annLshTopkSql's hash
-    * tables plus, per (query, table), the `probes − 1` single-bit-flip
-    * neighbor buckets in ascending |projection|-margin order. The ±1-plane
-    * projections are in-order double sums on both engines, so the margins
-    * — and therefore the probe ORDER — replay bit-exactly. */
-  private def annMultiProbeLshTopkSql(k: Int, probes: Int): String =
-    """WITH signs AS (
-      |  SELECT g, list_transform(range(0, 64), d ->
-      |    CASE WHEN ('0x' || substr(md5(g::VARCHAR || '_' || d::VARCHAR), 1, 15))::BIGINT
-      |           % 2 = 0
-      |         THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS sv
-      |  FROM range(0, 48) t(g)),
-      |proj AS (
-      |  SELECT e.vec_id, s.g // 6 AS tbl, s.g % 6 AS i,
-      |    list_sum(list_transform(list_zip(e.embedding, s.sv),
-      |      x -> CAST(x[1] AS DOUBLE) * x[2])) AS p
-      |  FROM embeddings e CROSS JOIN signs s),
-      |buck AS (
-      |  SELECT vec_id, tbl,
-      |    sum(CASE WHEN p > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END) AS bucket
-      |  FROM proj GROUP BY 1, 2),
-      |margins AS (
-      |  SELECT vec_id, tbl, i,
-      |    row_number() OVER (PARTITION BY vec_id, tbl
-      |      ORDER BY abs(p) ASC, i ASC) AS r
-      |  FROM proj WHERE vec_id < 20),
-      |qprobe AS (
-      |  SELECT vec_id, tbl, bucket FROM buck WHERE vec_id < 20
-      |  UNION ALL
-      |  SELECT m.vec_id, m.tbl, xor(b.bucket, 1::BIGINT << m.i) AS bucket
-      |  FROM margins m JOIN buck b ON b.vec_id = m.vec_id AND b.tbl = m.tbl
-      |  WHERE m.r <= PP - 1),
-      |cand AS (
-      |  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS c_id
-      |  FROM qprobe q JOIN buck c
-      |    ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.vec_id <> c.vec_id),
-      |norms AS (
-      |  SELECT vec_id, embedding,
-      |    sqrt(list_sum(list_transform(embedding,
-      |      e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)))) AS n
-      |  FROM embeddings),
-      |scored AS (
-      |  SELECT q_id, c_id,
-      |    round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.n * b.n), 4)
-      |      AS cosine
-      |  FROM cand
-      |  JOIN norms a ON a.vec_id = q_id
-      |  JOIN norms b ON b.vec_id = c_id)
-      |SELECT q_id, rk, c_id, cosine FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id
-      |    ORDER BY cosine DESC, c_id ASC) AS rk
-      |  FROM scored) WHERE rk <= KK""".stripMargin
-      .replace("KK", k.toString).replace("PP", probes.toString)
-
-  /** SemDeDup oracle shared by q130 (base banding) and q202 (radius-1 band
-    * probing): the full integer-grid Lloyd trace, the 4×6-bit portable
-    * sign-bit bands, the within-cluster banded candidate join and the
-    * rounded-cosine dup rule. `probed = true` swaps the x side of the
-    * candidate join for the base-plus-single-bit-flip probe memberships —
-    * the ONLY difference, by construction (placeholder substitution after
-    * stripMargin, the q195 discipline). The cluster count is DERIVED the
-    * same way the engine derives it — greatest(floor, ceil(n/target)),
-    * kval CTE — from the shared [[semDedupKFloor]]/[[semDedupTargetRows]]
-    * constants, so engine and oracle agree on k at every scale factor. */
-  private def semDedupOracleSql(probed: Boolean): String = {
-    val probeCte = if (!probed) "" else
-      """xprobe AS (
-        |  SELECT vec_id, band, bits FROM sbits
-        |  UNION ALL
-        |  SELECT vec_id, band, xor(bits, 1::BIGINT << f) AS bits
-        |  FROM sbits, unnest(range(0, 6)) t(f)),
-        |""".stripMargin
-    val xRel = if (probed) "xprobe" else "sbits"
-    """WITH q AS (
-      |  SELECT vec_id, embedding,
-      |    list_transform(embedding,
-      |      e -> CAST(round(CAST(e AS DOUBLE) * 1000) AS BIGINT)) AS qe
-      |  FROM embeddings),
-      |signs AS (
-      |  SELECT i, list_transform(range(0, 64), d ->
-      |    CASE WHEN ('0x' || substr(md5(i::VARCHAR || '_' || d::VARCHAR), 1, 15))::BIGINT
-      |           % 2 = 0
-      |         THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS sv
-      |  FROM range(0, 24) t(i)),
-      |proj AS (
-      |  SELECT e.vec_id, s.i,
-      |    list_sum(list_transform(list_zip(e.embedding, s.sv),
-      |      x -> CAST(x[1] AS DOUBLE) * x[2])) AS p
-      |  FROM embeddings e CROSS JOIN signs s),
-      |sbits AS (
-      |  SELECT vec_id, i // 6 AS band,
-      |    sum(CASE WHEN p > 0 THEN (1::BIGINT << (i % 6)) ELSE 0::BIGINT END) AS bits
-      |  FROM proj GROUP BY 1, 2),
-      |kval AS (
-      |  SELECT greatest(CAST(@KFLOOR@ AS BIGINT),
-      |    CAST(ceil(count(*) / CAST(@KTARGET@ AS DOUBLE)) AS BIGINT)) AS k
-      |  FROM embeddings),
-      |c0 AS (
-      |  SELECT j, ce FROM (
-      |    SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j, qe AS ce
-      |    FROM q) s
-      |  WHERE s.j < (SELECT k FROM kval)),
-      |a1 AS (
-      |  SELECT vec_id, qe, cl FROM (
-      |    SELECT q.vec_id, q.qe, c.j AS cl,
-      |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-      |        list_sum(list_transform(list_zip(q.qe, c.ce),
-      |          x -> (x[1] - x[2]) * (x[1] - x[2]))) ASC, c.j ASC) AS rk
-      |    FROM q CROSS JOIN c0 c) s WHERE rk = 1),
-      |c1 AS (
-      |  SELECT cl AS j, array_agg(s ORDER BY d) AS ce FROM (
-      |    SELECT cl, i AS d,
-      |      CAST(floor(CAST(sum(qe[i]) AS DOUBLE) / count(*)) AS BIGINT) AS s
-      |    FROM a1, unnest(range(1, 65)) t(i)
-      |    GROUP BY cl, i) sub
-      |  GROUP BY cl),
-      |a2 AS (
-      |  SELECT vec_id, cl FROM (
-      |    SELECT q.vec_id, c.j AS cl,
-      |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-      |        list_sum(list_transform(list_zip(q.qe, c.ce),
-      |          x -> (x[1] - x[2]) * (x[1] - x[2]))) ASC, c.j ASC) AS rk
-      |    FROM q CROSS JOIN c1 c) s WHERE rk = 1),
-      |@PROBE_CTE@cand AS (
-      |  SELECT DISTINCT xa.vec_id AS id_a, xb.vec_id AS id_b
-      |  FROM @XREL@ xa JOIN sbits xb
-      |    ON xa.band = xb.band AND xa.bits = xb.bits
-      |      AND xb.vec_id < xa.vec_id
-      |  JOIN a2 ca ON ca.vec_id = xa.vec_id
-      |  JOIN a2 cb ON cb.vec_id = xb.vec_id AND cb.cl = ca.cl),
-      |dup AS (
-      |  SELECT DISTINCT c.id_a AS vec_id
-      |  FROM cand c
-      |  JOIN q ea ON ea.vec_id = c.id_a
-      |  JOIN q eb ON eb.vec_id = c.id_b
-      |  WHERE round(
-      |    list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
-      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |    / (sqrt(list_sum(list_transform(ea.embedding,
-      |          e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))
-      |       * sqrt(list_sum(list_transform(eb.embedding,
-      |          e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))), 4) >= 0.4)
-      |SELECT a2.vec_id, CAST(a2.cl AS BIGINT) AS cluster,
-      |  (dup.vec_id IS NOT NULL) AS is_dup
-      |FROM a2 LEFT JOIN dup ON a2.vec_id = dup.vec_id""".stripMargin
-      .replace("@PROBE_CTE@", probeCte)
-      .replace("@XREL@", xRel)
-      .replace("@KFLOOR@", semDedupKFloor.toString)
-      .replace("@KTARGET@", semDedupTargetRows.toString)
-  }
-
-  /** q203 oracle, GENERATED from [[q200Queries]] (the same descriptor the
-    * Spark lane and q200 use): one toks/stats/df pass over the term union,
-    * the (term, query) VALUES table joined in, per-(query, doc) scores and
-    * the rank-capped window — the batched twin of the q138 replay. */
-  /** SQL-literal form of a query term: lowercased (the engine lowercases
-    * before matching) and quote-escaped — shared by every generator that
-    * interpolates [[q200Queries]] terms, so a future mixed-case or
-    * apostrophe-carrying term can neither diverge from the engine nor
-    * break the generated SQL. */
-  private def sqlTerm(t: String): String = t.toLowerCase.replace("'", "''")
-
-  private def q203OracleSql: String = {
-    val valuesList = q200Queries.flatMap { case (qid, terms) =>
-      terms.distinct.map(t => s"('$qid', '${sqlTerm(t)}')")
-    }.mkString(", ")
-    """WITH qt(query_id, tok) AS (VALUES @VALUES@),
-      |toks AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(trim(text)) = 0 THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS dl,
-      |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-      |  FROM documents),
-      |f AS (
-      |  SELECT doc_id, tok, max(dl) AS dl,
-      |    CAST(count(*) AS BIGINT) AS tf
-      |  FROM toks WHERE tok IN (SELECT tok FROM qt)
-      |  GROUP BY doc_id, tok),
-      |stats AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
-      |      ELSE len(string_split_regex(trim(text), '\s+')) END) AS BIGINT)
-      |      AS sumdl
-      |  FROM documents),
-      |d AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM f GROUP BY tok),
-      |s AS (
-      |  SELECT qt.query_id, f.doc_id,
-      |    round(sum(ln(1 + (n - df + 0.5) / (df + 0.5))
-      |      * (tf * (1.2 + 1))
-      |      / (tf + 1.2 * (1 - 0.75
-      |          + 0.75 * dl / (CAST(sumdl AS DOUBLE) / n)))), 4) AS score,
-      |    CAST(count(*) AS BIGINT) AS n_terms_hit
-      |  FROM f JOIN d USING (tok) JOIN qt USING (tok) CROSS JOIN stats
-      |  GROUP BY 1, 2)
-      |SELECT query_id, doc_id, score, n_terms_hit, rank
-      |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-      |  ORDER BY score DESC, doc_id ASC) AS rank FROM s)
-      |WHERE rank <= 50""".stripMargin
-      .replace("@VALUES@", valuesList)
-  }
-
-  /** PQ-ADC oracle (q159's full replay — seeded codebooks, encode, norms,
-    * ADC distances, ranking), parameterized by k: the graded q159 lane
-    * reads it at k = 5; q206 embeds it at k = 50 as the shortlist its
-    * exact re-rank consumes — drift between the graded index and the
-    * rerank's first stage impossible by construction. */
-  private def pqAdcOracleSql(k: Int): String = {
-    def chain(inner: String) = (0 until 16)
-      .map(mi => s"sum(CASE WHEN m = $mi THEN $inner END)")
-      .mkString("\n    + ")
-    s"""WITH hashed AS (
-      |  SELECT vec_id, embedding,
-      |    ('0x' || substr(md5('pq_' || vec_id::VARCHAR), 1, 15))::BIGINT AS h
-      |  FROM embeddings),
-      |seeds AS (
-      |  SELECT embedding AS s_emb,
-      |    row_number() OVER (ORDER BY h, vec_id::VARCHAR) - 1 AS j
-      |  FROM hashed ORDER BY h, vec_id::VARCHAR LIMIT 64),
-      |cd AS (
-      |  SELECT e.vec_id, mm.m, s.j,
-      |    round(
-      |      list_sum(list_transform(s.s_emb[mm.m*4+1 : mm.m*4+4],
-      |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-      |      - 2 * list_sum(list_transform(
-      |          list_zip(e.embedding[mm.m*4+1 : mm.m*4+4],
-      |                   s.s_emb[mm.m*4+1 : mm.m*4+4]),
-      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))), 4) AS d
-      |  FROM embeddings e, (SELECT unnest(range(16)) AS m) mm, seeds s),
-      |codes AS (
-      |  SELECT vec_id, m, j AS code FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
-      |      ORDER BY d, j) AS rn FROM cd) WHERE rn = 1),
-      |cw AS (
-      |  SELECT co.vec_id, co.m, s.s_emb
-      |  FROM codes co JOIN seeds s ON s.j = co.code),
-      |cn AS (
-      |  SELECT vec_id, ${chain("n2")} AS cn2sum FROM (
-      |    SELECT vec_id, m,
-      |      list_sum(list_transform(s_emb[m*4+1 : m*4+4],
-      |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS n2
-      |    FROM cw) GROUP BY vec_id),
-      |qn AS (
-      |  SELECT vec_id, ${chain("n2")} AS qn2tot FROM (
-      |    SELECT e.vec_id, mm.m,
-      |      list_sum(list_transform(e.embedding[mm.m*4+1 : mm.m*4+4],
-      |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS n2
-      |    FROM embeddings e, (SELECT unnest(range(16)) AS m) mm
-      |    WHERE e.vec_id < 20) GROUP BY vec_id),
-      |ds AS (
-      |  SELECT q_id, c_id, ${chain("dt")} AS dotsum FROM (
-      |    SELECT q.vec_id AS q_id, w.vec_id AS c_id, w.m,
-      |      list_sum(list_transform(
-      |        list_zip(q.embedding[w.m*4+1 : w.m*4+4],
-      |                 w.s_emb[w.m*4+1 : w.m*4+4]),
-      |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) AS dt
-      |    FROM embeddings q, cw w
-      |    WHERE q.vec_id < 20 AND q.vec_id <> w.vec_id)
-      |  GROUP BY q_id, c_id),
-      |adc AS (
-      |  SELECT ds.q_id, ds.c_id,
-      |    round(qn.qn2tot + cn.cn2sum - 2 * ds.dotsum, 4) AS adc_dist
-      |  FROM ds
-      |  JOIN qn ON qn.vec_id = ds.q_id
-      |  JOIN cn ON cn.vec_id = ds.c_id)
-      |SELECT q_id, rk, c_id, adc_dist FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id
-      |    ORDER BY adc_dist ASC, c_id ASC) AS rk FROM adc) WHERE rk <= KK"""
-      .stripMargin.replace("KK", k.toString)
-  }
-
-  /** Triangle-count oracle shared by q208 (counts) and q210 (+ the
-    * integer-nano local clustering coefficient): degrees, (deg, id)
-    * orientation, apex wedges, closing probe — one template, the cc
-    * wrapper the only difference. */
-  /** The q208/q209/q210 lineitem graph as an `e0(a, b)` CTE (normalized
-    * undirected distinct edges, a < b). */
-  private val lineitemGraphE0: String =
-    """e0 AS (
-      |  SELECT DISTINCT least(l_partkey % 997, l_suppkey % 997) AS a,
-      |         greatest(l_partkey % 997, l_suppkey % 997) AS b
-      |  FROM lineitem
-      |  WHERE l_quantity > 48 AND l_partkey % 997 <> l_suppkey % 997)""".stripMargin
-
-  /** The corpus capstone's near-dup edge set ([[Etl.corpusDupEdges]]: the
-    * q69 3-gram Jaccard ≥ 1/4 replay) as the same `e0(a, b)` shape —
-    * id_a < id_b by construction, distinct by the pair grouping. */
-  private val dupGraphE0: String =
-    """words AS (
-      |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] AS shingle
-      |  FROM words, unnest(range(1, len(wl) - 1)) t(i)
-      |  WHERE len(wl) >= 3),
-      |counts AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      |prs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |e0 AS (
-      |  SELECT id_a AS a, id_b AS b FROM prs
-      |  JOIN counts ca ON ca.doc_id = id_a
-      |  JOIN counts cb ON cb.doc_id = id_b
-      |  WHERE common * 4 >= 1 * (ca.n_sh + cb.n_sh - common))""".stripMargin
-
-  /** Degree-ordered triangle CTE chain over a caller-supplied `e0(a, b)`
-    * edge CTE — deg/orientation/wedges/closing-probe/`base(vertex,
-    * degree, n_triangles)`, shared by q208/q210 (lineitem graph) and the
-    * q211 dup-graph report. The returned string ends inside the WITH
-    * list, ready for more CTEs or a final SELECT. */
-  private def triangleBaseCtes(e0Cte: String): String =
-    s"WITH $e0Cte,\n" + """deg AS (
-      |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
-      |    SELECT a AS v FROM e0 UNION ALL SELECT b AS v FROM e0)
-      |  GROUP BY v),
-      |o AS (
-      |  SELECT
-      |    CASE WHEN ga.deg < gb.deg OR (ga.deg = gb.deg AND e0.a < e0.b)
-      |         THEN e0.a ELSE e0.b END AS u,
-      |    CASE WHEN ga.deg < gb.deg OR (ga.deg = gb.deg AND e0.a < e0.b)
-      |         THEN e0.b ELSE e0.a END AS w,
-      |    CASE WHEN ga.deg < gb.deg OR (ga.deg = gb.deg AND e0.a < e0.b)
-      |         THEN gb.deg ELSE ga.deg END AS dw
-      |  FROM e0
-      |  JOIN deg ga ON ga.v = e0.a
-      |  JOIN deg gb ON gb.v = e0.b),
-      |tri AS (
-      |  SELECT o1.u AS x, o1.w AS y, o2.w AS z
-      |  FROM o o1 JOIN o o2 ON o1.u = o2.u
-      |    AND (o1.dw < o2.dw OR (o1.dw = o2.dw AND o1.w < o2.w))
-      |  JOIN o o3 ON o3.u = o1.w AND o3.w = o2.w),
-      |crn AS (
-      |  SELECT v, CAST(count(*) AS BIGINT) AS t FROM (
-      |    SELECT x AS v FROM tri UNION ALL
-      |    SELECT y AS v FROM tri UNION ALL
-      |    SELECT z AS v FROM tri)
-      |  GROUP BY v),
-      |base AS (
-      |  SELECT deg.v AS vertex, deg.deg AS degree,
-      |    coalesce(crn.t, CAST(0 AS BIGINT)) AS n_triangles
-      |  FROM deg LEFT JOIN crn ON crn.v = deg.v)
-      |""".stripMargin
-
-  private def trianglesOracleSql(withCc: Boolean): String = {
-    val tail =
-      if (!withCc) "SELECT vertex, degree, n_triangles FROM base"
-      else
-        // widened numerator, same as the engine's decimal(38,0): 2·T·1e9
-        // wraps int64 past T ~ 4.6e9, and the two engines disagree on
-        // overflow (Spark wraps silently, DuckDB errors). HUGEINT, not
-        // DECIMAL, on the DuckDB side: DuckDB's DECIMAL `//` ROUNDS the
-        // decimal quotient before flooring (10526315.79 → 16), while
-        // int128 `//` is exact floor division — matching Spark's exact
-        // integral `div` on the decimal
-        """SELECT vertex, degree, n_triangles,
-          |  CASE WHEN degree >= 2
-          |       THEN CAST(CAST(2 AS HUGEINT) * n_triangles
-          |            * 1000000000 // (degree * (degree - 1)) AS BIGINT)
-          |       ELSE CAST(0 AS BIGINT) END AS cc_nano
-          |FROM base""".stripMargin
-    triangleBaseCtes(lineitemGraphE0) + tail
-  }
-
-  /** q211 oracle: the triangle/cc template + the q209 two-round LPA
-    * unroll, BOTH over the corpus capstone's jaccard edge set
-    * ([[dupGraphE0]] — the q69 pair replay), joined per vertex. */
-  private def dupGraphReportOracleSql: String =
-    triangleBaseCtes(dupGraphE0) +
-      """,sym AS (SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0),
-        |l0 AS (SELECT DISTINCT a AS v, a AS lbl FROM sym),
-        |n1 AS (
-        |  SELECT s.a AS v, l.lbl, CAST(count(*) AS BIGINT) AS c
-        |  FROM sym s JOIN l0 l ON l.v = s.b GROUP BY 1, 2),
-        |l1 AS (
-        |  SELECT v, lbl FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY v
-        |      ORDER BY c DESC, lbl ASC) AS rn FROM n1) WHERE rn = 1),
-        |n2 AS (
-        |  SELECT s.a AS v, l.lbl, CAST(count(*) AS BIGINT) AS c
-        |  FROM sym s JOIN l1 l ON l.v = s.b GROUP BY 1, 2),
-        |l2 AS (
-        |  SELECT v, lbl FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY v
-        |      ORDER BY c DESC, lbl ASC) AS rn FROM n2) WHERE rn = 1)
-        |SELECT b.vertex, l2.lbl AS community, b.degree, b.n_triangles,
-        |  CASE WHEN b.degree >= 2
-        |       THEN CAST(CAST(2 AS HUGEINT) * b.n_triangles
-        |            * 1000000000 // (b.degree * (b.degree - 1)) AS BIGINT)
-        |       ELSE CAST(0 AS BIGINT) END AS cc_nano
-        |FROM base b JOIN l2 ON l2.v = b.vertex""".stripMargin
-
-  /** Orphan-assignment oracle shared by q99 (base banding) and q205
-    * (radius-1 probing on the ORPHAN side): portable sign-bit bands,
-    * banded candidate join, rounded-cosine top-1. `probed = true` swaps
-    * the orphan side of the candidate join for base-plus-flip probe
-    * memberships — the only difference, by construction. */
-  private def orphanAssignOracleSql(probed: Boolean): String = {
-    val probeCte = if (!probed) "" else
-      """oprobe AS (
-        |  SELECT vec_id, band, bits FROM bits WHERE vec_id < 50
-        |  UNION ALL
-        |  SELECT vec_id, band, xor(bits, 1::BIGINT << f) AS bits
-        |  FROM bits, unnest(range(0, 6)) t(f) WHERE vec_id < 50),
-        |""".stripMargin
-    val oRel = if (probed) "oprobe" else "bits"
-    """WITH signs AS (
-      |  SELECT i, list_transform(range(0, 64), d ->
-      |    CASE WHEN ('0x' || substr(md5(i::VARCHAR || '_' || d::VARCHAR), 1, 15))::BIGINT
-      |           % 2 = 0
-      |         THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS sv
-      |  FROM range(0, 24) t(i)),
-      |proj AS (
-      |  SELECT e.vec_id, s.i,
-      |    list_sum(list_transform(list_zip(e.embedding, s.sv),
-      |      x -> CAST(x[1] AS DOUBLE) * x[2])) AS p
-      |  FROM embeddings e CROSS JOIN signs s),
-      |bits AS (
-      |  SELECT vec_id, i // 6 AS band,
-      |    sum(CASE WHEN p > 0 THEN (1::BIGINT << (i % 6)) ELSE 0::BIGINT END) AS bits
-      |  FROM proj GROUP BY 1, 2),
-      |@PROBE_CTE@cand AS (
-      |  SELECT DISTINCT o.vec_id AS orphan_id, c.vec_id AS neighbor_id
-      |  FROM @OREL@ o JOIN bits c ON o.band = c.band AND o.bits = c.bits
-      |  WHERE o.vec_id < 50 AND c.vec_id >= 50),
-      |norms AS (
-      |  SELECT vec_id, embedding,
-      |    sqrt(list_sum(list_transform(embedding,
-      |      e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)))) AS n
-      |  FROM embeddings),
-      |scored AS (
-      |  SELECT orphan_id, neighbor_id,
-      |    round(list_sum(list_transform(list_zip(o.embedding, c.embedding),
-      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (o.n * c.n),
-      |      4) AS cosine
-      |  FROM cand
-      |  JOIN norms o ON o.vec_id = orphan_id
-      |  JOIN norms c ON c.vec_id = neighbor_id)
-      |SELECT orphan_id, neighbor_id, cosine,
-      |  neighbor_id % 7 AS assigned_cluster
-      |FROM (SELECT *, row_number() OVER (PARTITION BY orphan_id
-      |        ORDER BY cosine DESC, neighbor_id ASC) AS rk FROM scored)
-      |WHERE rk = 1""".stripMargin
-      .replace("@PROBE_CTE@", probeCte)
-      .replace("@OREL@", oRel)
-  }
-
-  /** q207 oracle, GENERATED from [[q200Queries]]'s qa terms: the feedback
-    * BM25 run (k = 10), the exact-integer expansion pick (Σtf DESC, term
-    * ASC, seed excluded, top 3), and the final BM25 run over the UNION
-    * term set — both runs the q138 replay, the second one filtered by the
-    * computed `terms` CTE instead of a literal list. */
-  private def q207OracleSql: String = {
-    val seed = q200Queries.head._2.distinct.map(_.toLowerCase)
-    val termList = seed.map(t => s"'${sqlTerm(t)}'").mkString(", ")
-    s"""WITH toks AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(trim(text)) = 0 THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS dl,
-      |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-      |  FROM documents),
-      |stats AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
-      |      ELSE len(string_split_regex(trim(text), '\\s+')) END) AS BIGINT)
-      |      AS sumdl
-      |  FROM documents),
-      |f0 AS (
-      |  SELECT doc_id, tok, max(dl) AS dl, CAST(count(*) AS BIGINT) AS tf
-      |  FROM toks WHERE tok IN ($termList) GROUP BY doc_id, tok),
-      |d0 AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM f0 GROUP BY tok),
-      |fb AS (
-      |  SELECT doc_id FROM (
-      |    SELECT doc_id,
-      |      row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-      |    FROM (
-      |      SELECT f.doc_id,
-      |        round(sum(ln(1 + (n - df + 0.5) / (df + 0.5))
-      |          * (tf * (1.2 + 1))
-      |          / (tf + 1.2 * (1 - 0.75
-      |              + 0.75 * dl / (CAST(sumdl AS DOUBLE) / n)))), 4) AS score
-      |      FROM f0 f JOIN d0 USING (tok) CROSS JOIN stats
-      |      GROUP BY f.doc_id))
-      |  WHERE rank <= 10),
-      |expn AS (
-      |  SELECT tok FROM (
-      |    SELECT t.tok, CAST(count(*) AS BIGINT) AS xtf
-      |    FROM toks t JOIN fb ON fb.doc_id = t.doc_id
-      |    WHERE t.tok <> '' AND t.tok NOT IN ($termList)
-      |    GROUP BY t.tok ORDER BY xtf DESC, t.tok ASC LIMIT 3)),
-      |terms AS (
-      |  SELECT unnest([$termList]) AS tok UNION SELECT tok FROM expn),
-      |f1 AS (
-      |  SELECT doc_id, tok, max(dl) AS dl, CAST(count(*) AS BIGINT) AS tf
-      |  FROM toks WHERE tok IN (SELECT tok FROM terms)
-      |  GROUP BY doc_id, tok),
-      |d1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM f1 GROUP BY tok),
-      |s1 AS (
-      |  SELECT f.doc_id,
-      |    round(sum(ln(1 + (n - df + 0.5) / (df + 0.5))
-      |      * (tf * (1.2 + 1))
-      |      / (tf + 1.2 * (1 - 0.75
-      |          + 0.75 * dl / (CAST(sumdl AS DOUBLE) / n)))), 4) AS score,
-      |    CAST(count(*) AS BIGINT) AS n_terms_hit
-      |  FROM f1 f JOIN d1 USING (tok) CROSS JOIN stats
-      |  GROUP BY f.doc_id)
-      |SELECT doc_id, score, n_terms_hit,
-      |  row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-      |FROM s1 ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin
-  }
-
-  /** q204 oracle: the q138 BM25 replay at [[q200Queries]]'s qa terms
-    * (shared descriptor) + the q42 exact-cosine replay for query vector 0,
-    * fused with the exact integer RRF arithmetic — nothing here is new to
-    * the oracle beyond two integer divisions and a sum. */
-  private def q204OracleSql: String = {
-    val termList = q200Queries.head._2.distinct
-      .map(t => s"'${sqlTerm(t)}'").mkString(", ")
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(trim(text)) = 0 THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS dl,
-      |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-      |  FROM documents),
-      |f AS (
-      |  SELECT doc_id, tok, max(dl) AS dl, CAST(count(*) AS BIGINT) AS tf
-      |  FROM toks WHERE tok IN (@TERMS@) GROUP BY doc_id, tok),
-      |stats AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
-      |      ELSE len(string_split_regex(trim(text), '\s+')) END) AS BIGINT)
-      |      AS sumdl
-      |  FROM documents),
-      |d AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM f GROUP BY tok),
-      |run_lex AS (
-      |  SELECT doc_id AS id,
-      |    row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-      |  FROM (
-      |    SELECT fx.doc_id,
-      |      round(sum(ln(1 + (n - df + 0.5) / (df + 0.5))
-      |        * (tf * (1.2 + 1))
-      |        / (tf + 1.2 * (1 - 0.75
-      |            + 0.75 * dl / (CAST(sumdl AS DOUBLE) / n)))), 4) AS score
-      |    FROM f fx JOIN d USING (tok) CROSS JOIN stats
-      |    GROUP BY fx.doc_id)
-      |  QUALIFY rank <= 50),
-      |qv AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-      |  WHERE vec_id = 0),
-      |run_sem AS (
-      |  SELECT c_id AS id,
-      |    row_number() OVER (ORDER BY cosine DESC, c_id ASC) AS rank
-      |  FROM (
-      |    SELECT c.vec_id AS c_id,
-      |      round(
-      |        list_sum(list_transform(list_zip(q.q_emb, c.embedding),
-      |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(q.q_emb,
-      |              e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))
-      |           * sqrt(list_sum(list_transform(c.embedding,
-      |              e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))), 4)
-      |        AS cosine
-      |    FROM qv q, embeddings c WHERE c.vec_id <> q.q_id)
-      |  QUALIFY rank <= 50),
-      |u AS (
-      |  SELECT id,
-      |    CAST(1000000000 AS BIGINT) // (CAST(60 AS BIGINT) + rank) AS rrf
-      |  FROM run_lex
-      |  UNION ALL
-      |  SELECT id,
-      |    CAST(1000000000 AS BIGINT) // (CAST(60 AS BIGINT) + rank) AS rrf
-      |  FROM run_sem),
-      |fz AS (
-      |  SELECT id, CAST(sum(rrf) AS BIGINT) AS rrf_nano,
-      |    CAST(count(*) AS BIGINT) AS n_runs_hit
-      |  FROM u GROUP BY id)
-      |SELECT id, rrf_nano, n_runs_hit, rank FROM (
-      |  SELECT *, row_number() OVER (ORDER BY rrf_nano DESC, id ASC) AS rank
-      |  FROM fz) WHERE rank <= 20""".stripMargin
-      .replace("@TERMS@", termList)
-  }
-
-  /** q200 oracle, GENERATED from [[q200Queries]]: per query, the q138 BM25
-    * replay at that query's terms (shared toks/stats CTEs — the corpus is
-    * tokenized once), boolean-AND relevance, then the integer-nano metric
-    * row. Built with @BLOCKS@ substitution per the q195 placeholder
-    * discipline (never stripMargin over interpolated SQL). */
-  private def q200OracleSql: String = {
-    val blocks = q200Queries.map { case (qid, terms) =>
-      val termList = terms.map(t => s"'${sqlTerm(t)}'").mkString(", ")
-      val relPred = terms.map(t =>
-        s"list_contains(string_split_regex(trim(lower(text)), '\\s+')," +
-          s" '${sqlTerm(t)}')")
-        .mkString("\n    AND ")
-      s"""f_$qid AS (
-SELECT doc_id, tok, max(dl) AS dl, CAST(count(*) AS BIGINT) AS tf
-FROM toks WHERE tok IN ($termList) GROUP BY doc_id, tok),
-d_$qid AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM f_$qid GROUP BY tok),
-run_$qid AS (
-  SELECT doc_id, rank FROM (
-    SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-    FROM (
-      SELECT f.doc_id,
-        round(sum(ln(1 + (n - df + 0.5) / (df + 0.5))
-          * (tf * (1.2 + 1))
-          / (tf + 1.2 * (1 - 0.75
-              + 0.75 * dl / (CAST(sumdl AS DOUBLE) / n)))), 4) AS score
-      FROM f_$qid f JOIN d_$qid d USING (tok) CROSS JOIN stats
-      GROUP BY f.doc_id))
-  WHERE rank <= 50),
-rel_$qid AS (SELECT doc_id FROM documents
-  WHERE $relPred),
-met_$qid AS (
-  SELECT '$qid' AS query_id,
-    (SELECT CAST(count(*) AS BIGINT) FROM rel_$qid) AS n_rel,
-    CAST(sum(CASE WHEN rel.doc_id IS NOT NULL AND run.rank <= 10
-      THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-    min(CASE WHEN rel.doc_id IS NOT NULL THEN run.rank END) AS first_rel_rank
-  FROM run_$qid run LEFT JOIN rel_$qid rel ON run.doc_id = rel.doc_id)"""
-    }
-    val unions = q200Queries.map { case (qid, _) =>
-      s"SELECT * FROM met_$qid" }.mkString("\n  UNION ALL ")
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(trim(text)) = 0 THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS dl,
-      |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-      |  FROM documents),
-      |stats AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
-      |      ELSE len(string_split_regex(trim(text), '\s+')) END) AS BIGINT)
-      |      AS sumdl
-      |  FROM documents),
-      |@BLOCKS@
-      |SELECT query_id, n_rel,
-      |  coalesce(hits, CAST(0 AS BIGINT)) AS hits, first_rel_rank,
-      |  coalesce(CAST(1000000000 AS BIGINT) // first_rel_rank,
-      |    CAST(0 AS BIGINT)) AS rr_nano,
-      |  coalesce(hits, CAST(0 AS BIGINT))
-      |    * CAST(1000000000 AS BIGINT) // 10 AS p_nano,
-      |  CASE WHEN n_rel > 0 THEN coalesce(hits, CAST(0 AS BIGINT))
-      |      * CAST(1000000000 AS BIGINT) // n_rel
-      |       ELSE CAST(0 AS BIGINT) END AS r_nano
-      |FROM (@UNIONS@)
-      |ORDER BY query_id""".stripMargin
-      .replace("@BLOCKS@", blocks.mkString(",\n"))
-      .replace("@UNIONS@", unions)
-  }
-
-  /** DuckDB twin of the unigram-LM recipe (`Unigram.wordDict` → `train`
-    * → `encodeWords`), one CTE block per step; the q171-q173, q175, q176
-    * and q191 oracles are assembled from it.
-    *
-    * The DPs are RECURSIVE CTEs (forward Viterbi, state carried in plain
-    * BIGINT/VARCHAR[] columns) rather than unrolled list_reduce folds:
-    * DuckDB 1.0.0's list_reduce lambda nondeterministically corrupts
-    * STRUCT accumulators once the query chains ~3 DP instances (round 12:
-    * q173's seg3 returned another row's pieces, a different row per run;
-    * round 13's gate caught the same flake in q172's third DP). The
-    * recursive form has no lambda accumulator at all, so the whole
-    * corruption family is out of reach; tie-breaks (longest piece wins on
-    * equal score) and the unreachable-cell sentinel match
-    * `plans.UnigramViterbi` exactly. */
-  private object UnigramSql {
-    /** `WITH RECURSIVE` word dictionary `wdict`, substring table `sub` and
-      * seed vocabulary `vocab0`: every character plus the top 24
-      * multi-character substrings. */
-    val seed: String =
-      """WITH RECURSIVE wdict AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS cnt, len(word) AS n
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) >= 1 GROUP BY word),
-        |sub AS MATERIALIZED (
-        |  SELECT word, j, l,
-        |    CASE WHEN j + l - 1 <= len(word) THEN substr(word, j, l) END AS piece
-        |  FROM wdict, unnest(generate_series(1, n)) AS gj(j),
-        |    unnest(generate_series(1, 4)) AS gl(l)),
-        |occ AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt
-        |  FROM sub JOIN wdict USING (word) WHERE piece IS NOT NULL GROUP BY 1),
-        |picked AS (
-        |  SELECT piece, cnt FROM occ WHERE len(piece) = 1
-        |  UNION ALL
-        |  SELECT piece, cnt FROM (SELECT piece, cnt FROM occ WHERE len(piece) > 1
-        |    ORDER BY cnt DESC, piece ASC LIMIT 24)),
-        |vocab0 AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM picked)""".stripMargin
-
-    /** Every dictionary word's score array `arr<r>` under `vocab`, then
-      * its Viterbi DP `dp<r>`; the terminal rows (`i = n`) carry the best
-      * path `p0` and its total score `s0`. */
-    def encode(r: Int, vocab: String): String =
-      s"""arr$r AS MATERIALIZED (SELECT w.word, w.cnt, w.n,
-        |    list(CASE WHEN sub.l = 1 AND sub.piece IS NOT NULL
-        |        THEN coalesce(v.score_nano, CAST(${Unigram.UnkNano} AS BIGINT))
-        |        ELSE CASE WHEN sub.piece IS NOT NULL THEN v.score_nano END END
-        |      ORDER BY sub.j, sub.l) AS arr
-        |  FROM wdict w JOIN sub ON sub.word = w.word
-        |  LEFT JOIN $vocab v ON v.piece = sub.piece
-        |  GROUP BY w.word, w.cnt, w.n),
-        |dp$r AS (
-        |  SELECT word, cnt, n, arr, 0 AS i,
-        |    CAST(0 AS BIGINT) AS s0, CAST(NULL AS BIGINT) AS s1,
-        |    CAST(NULL AS BIGINT) AS s2, CAST(NULL AS BIGINT) AS s3,
-        |    CAST([] AS VARCHAR[]) AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-        |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-        |  FROM arr$r
-        |  UNION ALL
-        |  SELECT word, cnt, n, arr, i + 1,
-        |    greatest(c1, c2, c3, c4), s0, s1, s2,
-        |    CASE WHEN c4 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p3, substr(word, i - 2, 4))
-        |         WHEN c3 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p2, substr(word, i - 1, 3))
-        |         WHEN c2 = greatest(c1, c2, c3, c4)
-        |           THEN list_append(p1, substr(word, i, 2))
-        |         ELSE list_append(p0, substr(word, i + 1, 1)) END,
-        |    p0, p1, p2
-        |  FROM (SELECT *,
-        |      coalesce(s0 + arr[i * 4 + 1],
-        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c1,
-        |      coalesce(CASE WHEN i >= 1 THEN s1 + arr[(i - 1) * 4 + 2] END,
-        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c2,
-        |      coalesce(CASE WHEN i >= 2 THEN s2 + arr[(i - 2) * 4 + 3] END,
-        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c3,
-        |      coalesce(CASE WHEN i >= 3 THEN s3 + arr[(i - 3) * 4 + 4] END,
-        |        CAST(${Unigram.NegInf} AS BIGINT)) AS c4
-        |    FROM dp$r WHERE i < n))""".stripMargin
-
-    /** EM round `r` under `vocab`: encode, count each chosen piece by word
-      * frequency (`cnt<r>`), re-score as `vocab<r>`. */
-    def emRound(r: Int, vocab: String): String =
-      encode(r, vocab) + s""",
-        |seg$r AS MATERIALIZED (
-        |  SELECT word, cnt, p0 AS pieces FROM dp$r WHERE i = n),
-        |cnt$r AS MATERIALIZED (SELECT vp.piece,
-        |    coalesce(u.cnt, 0) AS cnt
-        |  FROM (SELECT piece FROM $vocab) vp
-        |  LEFT JOIN (SELECT p.piece, CAST(sum(s.cnt) AS BIGINT) AS cnt
-        |    FROM seg$r s, unnest(s.pieces) AS p(piece) GROUP BY 1) u
-        |    ON u.piece = vp.piece),
-        |vocab$r AS MATERIALIZED (SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM cnt$r)""".stripMargin
-
-    /** The seed plus two EM rounds, ending at `vocab2` (`Unigram.train`). */
-    val trained: String =
-      Seq(seed, emRound(1, "vocab0"), emRound(2, "vocab1")).mkString(",\n")
-
-    /** `trained`, then every dictionary word encoded under it (`dp3`). */
-    val encoded: String = trained + ",\n" + encode(3, "vocab2")
-  }
-
-  /** DuckDB twin of FellegiSunter's customer fixture (`fsFixture`) and its
-    * three comparison levels; the q168, q169 and q170 oracles are
-    * assembled from it. */
-  private object FsSql {
-    /** `base` and its two sides `l` / `rr`: 1 in 17 left and 1 in 13
-      * right balances nulled, right cents jittered by `id % 7 - 3`. */
-    val fixture: String =
-      """WITH base AS (
-        |  SELECT c_custkey AS id,
-        |    right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4) AS last4,
-        |    c_nationkey AS nkey, c_mktsegment AS seg,
-        |    CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer),
-        |l AS (SELECT id AS l_id, last4 AS l_last4, nkey AS l_nkey, seg AS l_seg,
-        |    CASE WHEN id % 17 = 0 THEN NULL ELSE cents END AS l_cents FROM base),
-        |rr AS (SELECT id AS r_id, last4 AS r_last4, nkey AS r_nkey, seg AS r_seg,
-        |    CASE WHEN id % 13 = 0 THEN NULL ELSE cents + id % 7 - 3 END AS r_cents
-        |  FROM base)""".stripMargin
-
-    /** `up`: the seeded random-pair sample the u-probabilities count. */
-    val up: String =
-      """up AS (SELECT * FROM
-        |    (SELECT * FROM l WHERE ('0x' || substr(md5('u168_' || l_id::VARCHAR), 1, 15))::BIGINT % 64 = 0)
-        |    CROSS JOIN
-        |    (SELECT * FROM rr WHERE ('0x' || substr(md5('v168_' || r_id::VARCHAR), 1, 15))::BIGINT % 64 = 0))""".stripMargin
-
-    /** The per-comparison level spine (name 1-3, seg 1-2, bal 1-3). */
-    val spine: String =
-      """spine AS (
-        |  SELECT 'name' AS comparison, CAST(unnest(range(1, 4)) AS INT) AS level, 3 AS n_levels
-        |  UNION ALL
-        |  SELECT 'seg', CAST(unnest(range(1, 3)) AS INT), 2
-        |  UNION ALL
-        |  SELECT 'bal', CAST(unnest(range(1, 4)) AS INT), 3)""".stripMargin
-
-    /** CTE `head` selecting the three comparison levels (`lvl_name`,
-      * `lvl_seg`, `lvl_bal`) over `from`. */
-    def levels(head: String, from: String): String =
-      head + """
-        |    CASE WHEN l_last4 = r_last4 THEN 3
-        |      WHEN levenshtein(l_last4, r_last4) <= 1 THEN 2 ELSE 1 END AS lvl_name,
-        |    CASE WHEN l_seg = r_seg THEN 2 ELSE 1 END AS lvl_seg,
-        |    CASE WHEN l_cents IS NULL OR r_cents IS NULL THEN NULL
-        |      WHEN 1000 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 3
-        |      WHEN 20 * abs(l_cents - r_cents) <= greatest(abs(l_cents), abs(r_cents)) THEN 2
-        |      ELSE 1 END AS lvl_bal""".stripMargin + "\n  FROM " + from + ")"
-
-    /** q168/q170's estimate: the true pairs `mp` and the random pairs `up`
-      * levelled and counted into match weights `w`, plus the prior `pr`. */
-    val weights: String = Seq(fixture,
-      "mp AS (SELECT * FROM l JOIN rr ON l_id = r_id WHERE l_id % 4 < 3)",
-      up, levels("mlev AS (SELECT", "mp"), levels("ulev AS (SELECT", "up"),
-      """obs AS (
-        |  SELECT 'm' AS src, 'name' AS comparison, lvl_name AS level FROM mlev
-        |  UNION ALL SELECT 'm', 'seg', lvl_seg FROM mlev
-        |  UNION ALL SELECT 'm', 'bal', lvl_bal FROM mlev WHERE lvl_bal IS NOT NULL
-        |  UNION ALL SELECT 'u', 'name', lvl_name FROM ulev
-        |  UNION ALL SELECT 'u', 'seg', lvl_seg FROM ulev
-        |  UNION ALL SELECT 'u', 'bal', lvl_bal FROM ulev WHERE lvl_bal IS NOT NULL)""".stripMargin,
-      spine,
-      """cnt AS (SELECT comparison, level,
-        |    CAST(count(*) FILTER (WHERE src = 'm') AS BIGINT) AS c_m,
-        |    CAST(count(*) FILTER (WHERE src = 'u') AS BIGINT) AS c_u
-        |  FROM obs GROUP BY 1, 2),
-        |j AS (SELECT spine.comparison, spine.level, spine.n_levels,
-        |    coalesce(c_m, 0) AS c_m, coalesce(c_u, 0) AS c_u,
-        |    sum(coalesce(c_m, 0)) OVER (PARTITION BY spine.comparison) AS n_m,
-        |    sum(coalesce(c_u, 0)) OVER (PARTITION BY spine.comparison) AS n_u
-        |  FROM spine LEFT JOIN cnt
-        |    ON spine.comparison = cnt.comparison AND spine.level = cnt.level),
-        |w AS (SELECT comparison, level,
-        |    CAST(round((ln((c_m + 0.5) / (n_m + 0.5 * n_levels))
-        |              - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |         / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM j),
-        |pr AS (SELECT CAST(round(-ln(count(*) - 1.0) / ln(2.0) * 1e9) AS BIGINT)
-        |    AS prior_nano FROM l)""".stripMargin).mkString(",\n")
-
-    /** Both blocking rules' candidate pairs, levelled and scored (`sc`). */
-    val scored: String = Seq(
-      """cand AS (
-        |  SELECT l.*, rr.* FROM l JOIN rr
-        |    ON l_nkey = r_nkey AND substr(l_last4, 1, 2) = substr(r_last4, 1, 2)
-        |  UNION ALL
-        |  SELECT l.*, rr.* FROM l JOIN rr ON l_last4 = r_last4)""".stripMargin,
-      levels("clev AS (SELECT *,", "cand"),
-      """sc AS (SELECT c.*,
-        |    (SELECT w_nano FROM w WHERE comparison = 'name' AND level = c.lvl_name)
-        |  + (SELECT w_nano FROM w WHERE comparison = 'seg' AND level = c.lvl_seg)
-        |  + coalesce((SELECT w_nano FROM w WHERE comparison = 'bal' AND level = c.lvl_bal), 0)
-        |  + (SELECT prior_nano FROM pr) AS weight_nano
-        |  FROM clev c)""".stripMargin).mkString(",\n")
-
-    /** q169's EM round `r`: every blocked pair's match probability under
-      * the weights `w<r>` and log-odds prior `lr<r>`, then the
-      * re-estimated m-probabilities `m<r>`, weights `w<r+1>` and prior
-      * `lr<r+1>`. */
-    def emRound(r: Int): String =
-      s"""p$r AS (SELECT ep.*,
-        |    (SELECT lr FROM lr$r)
-        |  + (SELECT w_nano FROM w$r WHERE comparison = 'name' AND level = ep.lvl_name)
-        |  + (SELECT w_nano FROM w$r WHERE comparison = 'seg' AND level = ep.lvl_seg)
-        |  + coalesce((SELECT w_nano FROM w$r WHERE comparison = 'bal' AND level = ep.lvl_bal), 0)
-        |    AS s_nano
-        |  FROM ep),
-        |q$r AS MATERIALIZED (SELECT *, CAST(round(1.0 / (1.0 + exp(-(s_nano / 1e9) * ln(2.0))) * 1e6)
-        |    AS BIGINT) AS p_micro FROM p$r),
-        |c$r AS MATERIALIZED (SELECT comparison, level, CAST(sum(p_micro) AS BIGINT) AS s_p FROM (
-        |    SELECT 'name' AS comparison, lvl_name AS level, p_micro FROM q$r
-        |    UNION ALL SELECT 'seg', lvl_seg, p_micro FROM q$r
-        |    UNION ALL SELECT 'bal', lvl_bal, p_micro FROM q$r WHERE lvl_bal IS NOT NULL)
-        |  GROUP BY 1, 2),
-        |t$r AS MATERIALIZED (SELECT CAST(sum(p_micro) AS BIGINT) AS sp, CAST(count(*) AS BIGINT) AS n
-        |  FROM q$r),
-        |m$r AS MATERIALIZED (SELECT uj.comparison, uj.level, uj.n_levels, uj.c_u, uj.n_u,
-        |    (coalesce(s_p, 0) + 500000.0) /
-        |    (CAST(sum(coalesce(s_p, 0)) OVER (PARTITION BY uj.comparison) AS BIGINT)
-        |      + 500000.0 * uj.n_levels) AS m
-        |  FROM uj LEFT JOIN c$r
-        |    ON uj.comparison = c$r.comparison AND uj.level = c$r.level),
-        |w${r + 1} AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
-        |    CAST(round((ln(m) - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |      / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM m$r),
-        |lr${r + 1} AS MATERIALIZED (SELECT CAST(round(ln(sp / (n * 1000000 - sp)) / ln(2.0) * 1e9)
-        |    AS BIGINT) AS lr FROM t$r)""".stripMargin
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-        |  avg(l_quantity) AS avg_qty,
-        |  CAST(sum(CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE)
-        |    / (100.0 * count(*)) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_region_revenue" ->
-      """SELECT r_name, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, CAST(year(o_orderdate) AS INTEGER)""".stripMargin,
-    "q03_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity, l_returnflag
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_quantity IS NOT NULL AND l_quantity BETWEEN 0 AND 100""".stripMargin,
-    "q04_freshest_order" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY o_custkey
-        |    ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-        |  FROM orders) WHERE rn = 1""".stripMargin,
-    "q05_weighted_avg" ->
-      """SELECT s_nationkey,
-        |  CAST(sum(CAST(round(l_discount * 100) AS BIGINT)
-        |         * CAST(l_quantity AS BIGINT)) AS DOUBLE)
-        |    / (100 * sum(l_quantity)) AS wavg_discount,
-        |  sum(l_quantity) AS sum_qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey""".stripMargin,
-    "q06_rolling_avg" ->
-      """WITH monthly AS (
-        |  SELECT c_mktsegment,
-        |    CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS o_month,
-        |    round(sum(o_totalprice), 2) AS revenue
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2)
-        |SELECT c_mktsegment, o_month, revenue,
-        |  round(avg(revenue) OVER (
-        |    PARTITION BY c_mktsegment ORDER BY o_month
-        |    ROWS BETWEEN 5 PRECEDING AND 6 FOLLOWING), 4) AS rolling_revenue
-        |FROM monthly""".stripMargin,
-    "q07_melt" ->
-      """SELECT l_orderkey, l_linenumber, 'quantity' AS measure,
-        |  CAST(l_quantity AS DOUBLE) AS value FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'extendedprice',
-        |  CAST(l_extendedprice AS DOUBLE) FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'discount',
-        |  CAST(l_discount AS DOUBLE) FROM lineitem""".stripMargin,
-    "q08_hourly_events" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  count(*) AS n_events,
-        |  round(sum(value), 4) AS sum_value,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-        |    / (100.0 * count(*)) AS avg_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin,
-    "q09_date_merge" ->
-      """WITH monthly AS (
-        |  SELECT l_suppkey, CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
-        |    round(sum(l_extendedprice), 2) AS month_rev
-        |  FROM lineitem GROUP BY 1, 2),
-        |yearly AS (
-        |  SELECT l_suppkey, CAST(date_trunc('year', l_shipdate) AS TIMESTAMP) AS ship_year,
-        |    round(sum(l_extendedprice), 2) AS year_rev
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m.l_suppkey, m.ship_month, m.month_rev, y.year_rev,
-        |  round(m.month_rev / y.year_rev, 6) AS rev_share
-        |FROM monthly m LEFT JOIN yearly y
-        |  ON m.l_suppkey = y.l_suppkey
-        |  AND CAST(date_trunc('year', m.ship_month) AS TIMESTAMP) = y.ship_year""".stripMargin,
-    "q10_expand_timeseries" ->
-      """WITH monthly AS (
-        |  SELECT l_suppkey, CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
-        |    round(sum(l_extendedprice), 2) AS month_rev
-        |  FROM lineitem GROUP BY 1, 2),
-        |spine AS (
-        |  SELECT l_suppkey, unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS ship_month
-        |  FROM (SELECT l_suppkey, min(ship_month) AS lo, max(ship_month) AS hi
-        |        FROM monthly GROUP BY 1))
-        |SELECT s.l_suppkey, s.ship_month,
-        |  last_value(m.month_rev IGNORE NULLS) OVER (
-        |    PARTITION BY s.l_suppkey ORDER BY s.ship_month
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS month_rev
-        |FROM spine s LEFT JOIN monthly m
-        |  ON s.l_suppkey = m.l_suppkey AND s.ship_month = m.ship_month""".stripMargin,
-    "q11_changelog" ->
-      """SELECT user_id, event_id, ts, event_type FROM (
-        |  SELECT user_id, event_id, ts, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events)
-        |WHERE rn = 1 OR event_type IS DISTINCT FROM prev_type""".stripMargin,
-    "q12_scale_by_ownership" ->
-      """WITH own AS (
-        |  SELECT l_orderkey AS o_orderkey, l_suppkey, sum(l_quantity) AS q
-        |  FROM lineitem GROUP BY 1, 2),
-        |own2 AS (
-        |  SELECT o_orderkey, l_suppkey,
-        |    q / sum(q) OVER (PARTITION BY o_orderkey) AS fraction_owned
-        |  FROM own),
-        |joined AS (
-        |  SELECT o.o_orderkey, own2.l_suppkey,
-        |    coalesce(own2.fraction_owned, 1.0) AS fraction_owned, o.o_totalprice
-        |  FROM orders o LEFT JOIN own2 ON o.o_orderkey = own2.o_orderkey)
-        |SELECT o_orderkey, l_suppkey, 'owned' AS ownership_record_type,
-        |  o_totalprice * fraction_owned AS totalprice_scaled, fraction_owned
-        |FROM joined
-        |UNION ALL
-        |SELECT o_orderkey, l_suppkey, 'total', o_totalprice, fraction_owned
-        |FROM joined""".stripMargin,
-    "q13_sum_na" ->
-      """WITH x AS (
-        |  SELECT l_suppkey,
-        |    CASE WHEN l_quantity > 45 THEN NULL ELSE l_extendedprice END AS v
-        |  FROM lineitem)
-        |SELECT l_suppkey,
-        |  CASE WHEN count(v) = count(*) THEN round(sum(v), 2) END AS sum_price_na,
-        |  count(v) AS n_nonnull, count(*) AS n_rows
-        |FROM x GROUP BY l_suppkey""".stripMargin,
-    "q14_harvest_consistency" ->
-      """WITH counts AS (
-        |  SELECT o_custkey, o_orderpriority, count(*) AS value_count
-        |  FROM orders WHERE o_orderpriority IS NOT NULL GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT *,
-        |    CAST(sum(value_count) OVER (PARTITION BY o_custkey) AS BIGINT) AS total_count,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY value_count DESC, o_orderpriority ASC) AS rk
-        |  FROM counts)
-        |SELECT o_custkey,
-        |  CASE WHEN CAST(value_count AS DOUBLE) / total_count > 0.7
-        |    THEN o_orderpriority END AS o_orderpriority,
-        |  value_count, total_count,
-        |  CAST(value_count AS DOUBLE) / total_count AS rate
-        |FROM ranked WHERE rk = 1""".stripMargin,
-    "q15_best_snapshot" ->
-      """WITH snaps AS (
-        |  SELECT o_custkey, o_orderkey, o_orderdate,
-        |    CASE WHEN o_orderstatus = 'O' THEN NULL ELSE o_totalprice END AS price_n,
-        |    CASE WHEN o_orderpriority = '3-MEDIUM' THEN NULL ELSE o_orderpriority END AS prio_n
-        |  FROM orders)
-        |SELECT o_custkey, o_orderkey, price_n, prio_n FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY (CASE WHEN price_n IS NOT NULL THEN 1 ELSE 0 END
-        |            + CASE WHEN prio_n IS NOT NULL THEN 1 ELSE 0 END) DESC,
-        |      o_orderdate DESC, o_orderkey DESC) AS rn
-        |  FROM snaps) WHERE rn = 1""".stripMargin,
-    "q16_apply_diffs" ->
-      """WITH snaps AS (
-        |  SELECT o_custkey, o_orderkey,
-        |    CASE WHEN o_orderstatus = 'O' THEN NULL ELSE o_totalprice END AS price_n,
-        |    CASE WHEN o_orderpriority = '3-MEDIUM' THEN NULL ELSE o_orderpriority END AS prio_n
-        |  FROM orders)
-        |SELECT o_custkey,
-        |  arg_max(price_n, CASE WHEN price_n IS NOT NULL THEN o_orderkey END) AS price_n,
-        |  arg_max(prio_n, CASE WHEN prio_n IS NOT NULL THEN o_orderkey END) AS prio_n
-        |FROM snaps GROUP BY o_custkey""".stripMargin,
-    "q17_anti_join" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin,
-    "q18_mixed_agg" ->
-      """SELECT l_partkey,
-        |  sum(l_quantity) AS sum_qty,
-        |  CAST(sum(CAST(round(l_discount * 100) AS BIGINT)
-        |         * CAST(l_quantity AS BIGINT)) AS DOUBLE)
-        |    / (100 * sum(l_quantity)) AS wavg_discount,
-        |  CASE WHEN count(DISTINCT l_returnflag) = 1 THEN min(l_returnflag)
-        |    ELSE 'mixed' END AS returnflag_label
-        |FROM lineitem GROUP BY l_partkey""".stripMargin,
-    "q19_rolling_median" ->
-      """WITH fr AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    list_sort(list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)) AS arr
-        |  FROM events)
-        |SELECT user_id, event_id, ts, value,
-        |  (arr[CAST((len(arr) + 1) // 2 AS INTEGER)]
-        |   + arr[CAST(len(arr) // 2 + 1 AS INTEGER)]) / 2.0 AS rolling_median
-        |FROM fr""".stripMargin,
-    "q20_spike_flag" ->
-      """SELECT user_id, event_id, ts, value,
-        |  (dp IS NOT NULL AND dn IS NOT NULL
-        |   AND abs(dp) > 20.0 AND abs(dn) > 20.0 AND dp * dn < 0) AS flag_spike
-        |FROM (
-        |  SELECT user_id, event_id, ts, value,
-        |    value - lag(value) OVER w AS dp,
-        |    lead(value) OVER w - value AS dn
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))""".stripMargin,
-    "q21_run_length" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id, (value >= 10.0) AS flag FROM events),
-        |lagged AS (
-        |  SELECT *, lag(flag) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_flag
-        |  FROM flagged),
-        |runs AS (
-        |  SELECT user_id, ts, flag,
-        |    sum(CASE WHEN prev_flag IS DISTINCT FROM flag THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-        |  FROM lagged)
-        |SELECT user_id, CAST(run_id AS BIGINT) AS run_id, min(flag) AS flag,
-        |  count(*) AS run_length, min(ts) AS run_start, max(ts) AS run_end
-        |FROM runs GROUP BY user_id, run_id""".stripMargin,
-    "q22_identical_run" ->
-      """WITH b AS (
-        |  SELECT user_id, event_id, ts,
-        |    CAST(floor(value / 10) AS BIGINT) AS value_bucket
-        |  FROM events),
-        |lagged AS (
-        |  SELECT *, lag(value_bucket) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_b
-        |  FROM b),
-        |runs AS (
-        |  SELECT user_id, event_id, ts, value_bucket,
-        |    sum(CASE WHEN prev_b IS DISTINCT FROM value_bucket THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-        |  FROM lagged)
-        |SELECT user_id, event_id, ts, value_bucket,
-        |  (count(*) OVER (PARTITION BY user_id, run_id) >= 3
-        |   AND value_bucket IS NOT NULL) AS flag_run
-        |FROM runs""".stripMargin,
-    "q23_ntile_bins" ->
-      """SELECT event_id, event_type, value,
-        |  ntile(4) OVER (PARTITION BY event_type ORDER BY value, event_id) AS bin
-        |FROM events""".stripMargin,
-    "q24_cumulative" ->
-      """SELECT user_id, event_id, ts,
-        |  round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_value,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |FROM events""".stripMargin,
-    "q25_ramp_rates" ->
-      """SELECT user_id, max(d) AS max_ramp_up, min(d) AS max_ramp_down
-        |FROM (
-        |  SELECT user_id,
-        |    value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS d
-        |  FROM events)
-        |GROUP BY user_id""".stripMargin,
-    "q26_min_up_down" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id, (value >= 10.0) AS flag FROM events),
-        |lagged AS (
-        |  SELECT *, lag(flag) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_flag
-        |  FROM flagged),
-        |runs AS (
-        |  SELECT user_id, flag,
-        |    sum(CASE WHEN prev_flag IS DISTINCT FROM flag THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-        |  FROM lagged),
-        |rl AS (
-        |  SELECT user_id, run_id, min(flag) AS flag, count(*) AS run_length
-        |  FROM runs GROUP BY user_id, run_id)
-        |SELECT user_id, flag, min(run_length) AS min_run, max(run_length) AS max_run,
-        |  count(*) AS n_runs
-        |FROM rl GROUP BY user_id, flag""".stripMargin,
-    "q27_median_impute" ->
-      """WITH gapped AS (
-        |  SELECT event_id, event_type, CAST(hour(ts) AS INTEGER) AS hod,
-        |    CASE WHEN event_id % 37 = 0 THEN NULL ELSE value END AS v
-        |  FROM events),
-        |med AS (
-        |  SELECT event_type, hod, median(v) AS group_median
-        |  FROM gapped GROUP BY event_type, hod)
-        |SELECT g.event_id, g.event_type, g.hod,
-        |  round(coalesce(g.v, m.group_median), 6) AS value_imputed,
-        |  (g.v IS NULL) AS was_imputed
-        |FROM gapped g LEFT JOIN med m
-        |  ON g.event_type = m.event_type AND g.hod = m.hod""".stripMargin,
-    "q28_topk_per_group" ->
-      """SELECT event_type, rk, event_id, value FROM (
-        |  SELECT event_type, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id ASC) AS rk
-        |  FROM events)
-        |WHERE rk <= 3""".stripMargin,
-    "q29_simplify_strings" ->
-      """SELECT p_partkey, '  ' || upper(p_name) || '   ' AS messy,
-        |  trim(regexp_replace(regexp_replace(
-        |    lower('  ' || upper(p_name) || '   '),
-        |    '[^\x20-\x7e]', '', 'g'), '\s+', ' ', 'g')) AS clean
-        |FROM part""".stripMargin,
-    "q30_zero_pad" ->
-      """SELECT s_suppkey,
-        |  CASE WHEN regexp_matches(CAST(s_suppkey AS VARCHAR), '^\d+$')
-        |    THEN lpad(CAST(s_suppkey AS VARCHAR), 9, '0') END AS padded,
-        |  CAST(CAST(lpad(CAST(s_suppkey AS VARCHAR), 9, '0') AS BIGINT) AS VARCHAR)
-        |    AS roundtrip
-        |FROM supplier""".stripMargin,
-    "q31_encode" ->
-      """SELECT c_custkey, c_mktsegment AS raw,
-        |  CASE WHEN c_mktsegment IN ('FURNITURE') THEN NULL
-        |       WHEN c_mktsegment = 'HOUSEHOLD' THEN 'BUILDING'
-        |       WHEN c_mktsegment IN ('BUILDING','AUTOMOBILE','MACHINERY')
-        |         THEN c_mktsegment
-        |       ELSE NULL END AS segment_coded
-        |FROM customer""".stripMargin,
-    "q32_convert_units" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_quantity * 0.45359237 AS qty_kg,
-        |  CASE WHEN (l_extendedprice BETWEEN 0 AND 50000)
-        |         OR l_extendedprice IS NULL THEN l_extendedprice
-        |       ELSE l_extendedprice * 0.001 END AS price_corrected
-        |FROM lineitem""".stripMargin,
-    "q33_date_compose" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS INTEGER) AS y,
-        |  CAST(month(o_orderdate) AS INTEGER) AS m,
-        |  CAST(day(o_orderdate) AS INTEGER) AS d,
-        |  make_date(CAST(year(o_orderdate) AS INTEGER),
-        |            CAST(month(o_orderdate) AS INTEGER),
-        |            CAST(day(o_orderdate) AS INTEGER)) AS composed_date,
-        |  CAST(date_trunc('quarter', o_orderdate) AS TIMESTAMP) AS quarter_start
-        |FROM orders""".stripMargin,
-    "q34_extract_numeric" ->
-      """SELECT event_id,
-        |  CAST(nullif(regexp_extract(props, '(-?\d+(\.\d+)?)', 1), '') AS BIGINT)
-        |    AS k_value
-        |FROM events""".stripMargin,
-    "q35_name_normalize" ->
-      """SELECT s_suppkey,
-        |  regexp_replace(regexp_replace(trim(lower(s_name)), '[^a-z0-9]+', '_', 'g'),
-        |    '^_+|_+$', '', 'g') AS name_snake,
-        |  trim(regexp_replace(lower(s_name), '[^a-z0-9]+', ' ', 'g')) AS name_words
-        |FROM supplier""".stripMargin,
-    "q36_token_stats" ->
-      """SELECT doc_id,
-        |  CASE WHEN len(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-        |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9 ]')) AS n_bpeish,
-        |  (len(text) = n_chars) AS len_matches_field
-        |FROM documents""".stripMargin,
-    "q37_quality_score" ->
-      """WITH x AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN len(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-        |    CAST(len(regexp_extract_all(lower(text), '[^a-z0-9\s]')) AS DOUBLE)
-        |      / len(text) AS punct_ratio
-        |  FROM documents)
-        |SELECT doc_id, punct_ratio,
-        |  CAST(len(regexp_replace(text, '\s', '', 'g')) AS DOUBLE) / n_tokens
-        |    AS mean_token_len,
-        |  least(1.0, CAST(n_tokens AS DOUBLE) / 100.0) * (1.0 - punct_ratio)
-        |    AS quality
-        |FROM x""".stripMargin,
-    "q38_lang_id" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |  FROM documents),
-        |lex(tok, lang) AS (VALUES
-        |  ('the','en'),('a','en'),('data','en'),
-        |  ('el','es'),('la','es'),('los','es'),
-        |  ('der','de'),('und','de'),('das','de'),
-        |  ('le','fr'),('et','fr'),('les','fr')),
-        |scores AS (
-        |  SELECT toks.doc_id, lex.lang AS lang_pred, count(*) AS hits
-        |  FROM toks JOIN lex USING (tok) GROUP BY 1, 2),
-        |top AS (
-        |  SELECT doc_id, lang_pred, hits,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY hits DESC, lang_pred ASC) AS rk
-        |  FROM scores)
-        |SELECT d.doc_id, d.lang, coalesce(tp.lang_pred, 'und') AS lang_pred,
-        |  coalesce(tp.hits, 0) AS lexicon_hits
-        |FROM documents d
-        |LEFT JOIN (SELECT * FROM top WHERE rk = 1) tp USING (doc_id)""".stripMargin,
-    "q39_exact_dedup" ->
-      """WITH fp AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
-        |  FROM documents)
-        |SELECT doc_id, fingerprint,
-        |  min(doc_id) OVER (PARTITION BY fingerprint) AS canonical_id,
-        |  count(*) OVER (PARTITION BY fingerprint) AS group_size,
-        |  (doc_id <> min(doc_id) OVER (PARTITION BY fingerprint)) AS is_dup
-        |FROM fp""".stripMargin,
-    "q40_ngram_jaccard" ->
-      """WITH words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] AS shingle
-        |  FROM words, unnest(range(1, len(wl) - 1)) t(i)
-        |  WHERE len(wl) >= 3),
-        |counts AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, common, ca.n_sh AS na, cb.n_sh AS nb,
-        |  CAST(common AS DOUBLE) / (ca.n_sh + cb.n_sh - common) AS jaccard
-        |FROM pairs
-        |JOIN counts ca ON ca.doc_id = id_a
-        |JOIN counts cb ON cb.doc_id = id_b
-        |WHERE common * 4 >= 1 * (ca.n_sh + cb.n_sh - common)""".stripMargin,
-    "q42_cosine_topk" -> annExactTopkSql(5),
-    "q44_multimodal_meta" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  sha256(text) AS sha256
-        |FROM documents""".stripMargin,
-    "q45_connected_components" ->
-      """WITH RECURSIVE
-        |e AS (
-        |  SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  WHERE o_totalprice > 465000 AND o_custkey < 300),
-        |sym AS (SELECT a, b FROM e UNION SELECT b AS a, a AS b FROM e),
-        |reach(v, c) AS (
-        |  SELECT a AS v, a AS c FROM sym
-        |  UNION
-        |  SELECT sym.a AS v, reach.c FROM sym JOIN reach ON sym.b = reach.v)
-        |SELECT v, min(c) AS component FROM reach GROUP BY v""".stripMargin,
-    "q46_tfidf_top_term" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT doc_id, term AS top_term, tf, df,
-        |  round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
-        |FROM (
-        |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df, n.n_docs,
-        |    row_number() OVER (PARTITION BY tf.doc_id
-        |      ORDER BY tf.tf DESC, dfreq.df ASC, tf.term ASC) AS rk
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN n)
-        |WHERE rk = 1""".stripMargin,
-    "q47_blocked_fuzzy_join" ->
-      """SELECT c_nationkey AS nkey, c_custkey, s_suppkey,
-        |  right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4) AS c_last4,
-        |  right(regexp_replace(s_name, '[^0-9]', '', 'g'), 4) AS s_last4,
-        |  levenshtein(right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4),
-        |              right(regexp_replace(s_name, '[^0-9]', '', 'g'), 4)) AS name_dist
-        |FROM customer JOIN supplier ON c_nationkey = s_nationkey
-        |WHERE levenshtein(right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4),
-        |                  right(regexp_replace(s_name, '[^0-9]', '', 'g'), 4)) <= 1""".stripMargin,
-    "q48_logistic_match" ->
-      """WITH cand AS (
-        |  SELECT c_custkey, s_suppkey,
-        |    levenshtein(right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4),
-        |                right(regexp_replace(s_name, '[^0-9]', '', 'g'), 4)) AS name_dist,
-        |    abs(c_acctbal - s_acctbal) / 10000.0 AS bal_diff
-        |  FROM customer JOIN supplier ON c_nationkey = s_nationkey),
-        |scored AS (
-        |  SELECT c_custkey, s_suppkey, name_dist,
-        |    round(1.0 / (1.0 + exp(-(CAST(2 - name_dist AS DOUBLE) * 1.2
-        |      + bal_diff * -0.5 + -1.0))), 6) AS score
-        |  FROM cand WHERE name_dist <= 2)
-        |SELECT c_custkey, s_suppkey, name_dist, score FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |    ORDER BY score DESC, s_suppkey ASC) AS rk
-        |  FROM scored)
-        |WHERE rk = 1""".stripMargin,
-    "q49_pivot_fractions" ->
-      """WITH piv AS (
-        |  SELECT l_suppkey,
-        |    round(sum(CASE WHEN l_returnflag = 'A' THEN l_extendedprice ELSE 0 END), 4) AS rev_a,
-        |    round(sum(CASE WHEN l_returnflag = 'N' THEN l_extendedprice ELSE 0 END), 4) AS rev_n,
-        |    round(sum(CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0 END), 4) AS rev_r
-        |  FROM lineitem GROUP BY l_suppkey)
-        |SELECT l_suppkey, rev_a, rev_n, rev_r,
-        |  rev_a / (rev_a + rev_n + rev_r) AS frac_a,
-        |  rev_n / (rev_a + rev_n + rev_r) AS frac_n,
-        |  rev_r / (rev_a + rev_n + rev_r) AS frac_r,
-        |  CASE WHEN rev_a / (rev_a + rev_n + rev_r) > 0.5 THEN 'A'
-        |       WHEN rev_n / (rev_a + rev_n + rev_r) > 0.5 THEN 'N'
-        |       WHEN rev_r / (rev_a + rev_n + rev_r) > 0.5 THEN 'R'
-        |       ELSE 'none' END AS primary_flag
-        |FROM piv""".stripMargin,
-    "q50_mcoe_ratios" ->
-      """WITH g AS (
-        |  SELECT l_suppkey, CAST(year(l_shipdate) AS INTEGER) AS ship_year,
-        |    round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-        |    sum(l_quantity) AS qty,
-        |    min(s_acctbal) AS capacity
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2)
-        |SELECT l_suppkey, ship_year, revenue, qty,
-        |  revenue / qty AS price_per_qty,
-        |  revenue / (capacity * 8760.0) AS capacity_factor
-        |FROM g""".stripMargin,
-    "q51_multi_grain_agg" ->
-      """WITH base AS (
-        |  SELECT l.*, s.s_nationkey, n.n_regionkey
-        |  FROM lineitem l
-        |  JOIN supplier s ON l_suppkey = s_suppkey
-        |  JOIN nation n ON s_nationkey = n_nationkey)
-        |SELECT 'supplier' AS grain, CAST(l_suppkey AS VARCHAR) AS part_key,
-        |  sum(l_quantity) AS sum_qty, count(*) AS n_rows,
-        |  count(DISTINCT l_suppkey) AS n_suppliers
-        |FROM base GROUP BY 2
-        |UNION ALL
-        |SELECT 'nation', CAST(s_nationkey AS VARCHAR), sum(l_quantity),
-        |  count(*), count(DISTINCT l_suppkey)
-        |FROM base GROUP BY 2
-        |UNION ALL
-        |SELECT 'region', CAST(n_regionkey AS VARCHAR), sum(l_quantity),
-        |  count(*), count(DISTINCT l_suppkey)
-        |FROM base GROUP BY 2""".stripMargin,
-    "q52_weighted_quantile" ->
-      """WITH x AS (
-        |  SELECT s_nationkey, l_discount AS v, l_quantity AS w
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey),
-        |o AS (
-        |  SELECT s_nationkey, v,
-        |    sum(w) OVER (PARTITION BY s_nationkey ORDER BY v
-        |      RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw,
-        |    sum(w) OVER (PARTITION BY s_nationkey) AS wtot
-        |  FROM x)
-        |SELECT s_nationkey, min(v) AS wmedian_discount
-        |FROM o WHERE cumw * 2 >= wtot GROUP BY s_nationkey""".stripMargin,
-    "q53_spot_fix" ->
-      """SELECT c_custkey,
-        |  CASE c_custkey WHEN 1 THEN 'MACHINERY' WHEN 5 THEN 'BUILDING'
-        |    WHEN 42 THEN 'AUTOMOBILE' ELSE c_mktsegment END AS c_mktsegment
-        |FROM customer""".stripMargin,
-    "q54_drop_ytd" ->
-      """WITH monthly AS (
-        |  SELECT l_suppkey, CAST(year(l_shipdate) AS INTEGER) AS ship_year,
-        |    CAST(month(l_shipdate) AS INTEGER) AS ship_month,
-        |    round(sum(l_extendedprice), 2) AS month_rev
-        |  FROM lineitem GROUP BY 1, 2, 3)
-        |SELECT l_suppkey, ship_year, round(sum(month_rev), 2) AS annual_rev
-        |FROM monthly GROUP BY l_suppkey, ship_year
-        |HAVING count(DISTINCT ship_month) = 12""".stripMargin,
-    "q55_stream_window" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start,
-        |  CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR AS hour_end,
-        |  event_type, count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
-    "q56_schema_enforce" ->
-      """SELECT l_shipdate AS shipdate,
-        |  CAST(l_orderkey AS BIGINT) AS l_orderkey,
-        |  CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |  CAST(l_quantity AS DOUBLE) AS qty,
-        |  CASE WHEN l_returnflag IN ('A', 'R') THEN l_returnflag END AS returnflag
-        |FROM lineitem""".stripMargin,
-    "q57_check_runner" ->
-      """SELECT 'orders:pk_unique' AS check_name,
-        |  count(*) = 0 AS passed, count(*) AS observed
-        |FROM (SELECT o_orderkey FROM orders GROUP BY 1 HAVING count(*) > 1)
-        |UNION ALL
-        |SELECT 'orders:custkey_not_null',
-        |  count(CASE WHEN o_custkey IS NULL THEN 1 END) = 0,
-        |  count(CASE WHEN o_custkey IS NULL THEN 1 END) FROM orders
-        |UNION ALL
-        |SELECT 'orders:totalprice_range',
-        |  count(CASE WHEN o_totalprice IS NOT NULL
-        |    AND o_totalprice NOT BETWEEN 0 AND 1000000 THEN 1 END) = 0,
-        |  count(CASE WHEN o_totalprice IS NOT NULL
-        |    AND o_totalprice NOT BETWEEN 0 AND 1000000 THEN 1 END) FROM orders
-        |UNION ALL
-        |SELECT 'orders:status_enum',
-        |  count(CASE WHEN o_orderstatus IS NOT NULL
-        |    AND o_orderstatus NOT IN ('O','F','P') THEN 1 END) = 0,
-        |  count(CASE WHEN o_orderstatus IS NOT NULL
-        |    AND o_orderstatus NOT IN ('O','F','P') THEN 1 END) FROM orders
-        |UNION ALL
-        |SELECT 'orders:price_self_ratio',
-        |  (sum(o_totalprice) / sum(o_totalprice)) BETWEEN 0.999 AND 1.001,
-        |  CAST(round(sum(o_totalprice) / sum(o_totalprice) * 1e6) AS BIGINT)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'orders:custkey_fk', count(*) = 0, count(*)
-        |FROM orders o
-        |WHERE o.o_custkey IS NOT NULL
-        |  AND NOT EXISTS (SELECT 1 FROM customer c
-        |                  WHERE c.c_custkey = o.o_custkey)""".stripMargin,
-    "q58_dbscan_clusters" ->
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS ia, b.vec_id AS ib,
-        |    round(
-        |      list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cos
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id),
-        |ed AS (SELECT ia AS src, ib AS dst FROM p WHERE cos >= 0.35),
-        |sym AS (SELECT src AS a, dst AS b FROM ed
-        |        UNION SELECT dst AS a, src AS b FROM ed),
-        |reach(v, c) AS (
-        |  SELECT a AS v, a AS c FROM sym
-        |  UNION
-        |  SELECT sym.a AS v, reach.c FROM sym JOIN reach ON sym.b = reach.v),
-        |cc AS (SELECT v, min(c) AS component FROM reach GROUP BY v)
-        |SELECT e.vec_id AS v, coalesce(cc.component, e.vec_id) AS cluster,
-        |  coalesce(cc.component, -1) AS dbscan_label
-        |FROM e LEFT JOIN cc ON e.vec_id = cc.v""".stripMargin,
-    "q59_sort_limit" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""".stripMargin,
-    "q60_era_union" ->
-      """SELECT o_orderkey, o_totalprice, 'legacy' AS era,
-        |  NULL AS o_orderpriority
-        |FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01'
-        |UNION ALL
-        |SELECT o_orderkey, o_totalprice, 'modern', o_orderpriority
-        |FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01'""".stripMargin,
-    "q62_calc_forest" ->
-      """WITH base AS (
-        |  SELECT CAST(year(l_shipdate) AS INTEGER) AS yr, n_name, r_name,
-        |    l_extendedprice AS ext
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey),
-        |nat AS (SELECT yr, 'nation:' || n_name AS node, round(sum(ext), 2) AS value
-        |        FROM base GROUP BY 1, 2),
-        |reg AS (SELECT yr, 'region:' || r_name AS node, round(sum(ext), 2) AS value
-        |        FROM base GROUP BY 1, 2),
-        |facts AS (SELECT * FROM nat UNION ALL SELECT * FROM reg),
-        |edges AS (
-        |  SELECT DISTINCT 'region:' || r_name AS parent,
-        |    'nation:' || n_name AS child, 1.0 AS weight
-        |  FROM nation JOIN region ON n_regionkey = r_regionkey),
-        |calc AS (
-        |  SELECT f.yr, e.parent, round(sum(f.value * e.weight), 4) AS calculated
-        |  FROM facts f JOIN edges e ON f.node = e.child GROUP BY 1, 2)
-        |SELECT r.yr, r.node AS parent, r.value AS reported, c.calculated,
-        |  abs(r.value - c.calculated) AS abs_diff,
-        |  abs(r.value - c.calculated) <= 0.05 AS is_consistent
-        |FROM facts r JOIN calc c ON r.yr = c.yr AND r.node = c.parent""".stripMargin,
-    "q63_global_outlier" ->
-      """WITH stats AS (
-        |  SELECT user_id,
-        |    round(quantile_cont(value, 0.5)
-        |      + (quantile_cont(value, 0.75) - quantile_cont(value, 0.25)) * 3, 6)
-        |      AS thr_hi,
-        |    round(quantile_cont(value, 0.5)
-        |      - (quantile_cont(value, 0.75) - quantile_cont(value, 0.25)) * 3, 6)
-        |      AS thr_lo
-        |  FROM events GROUP BY user_id)
-        |SELECT e.user_id, e.event_id, e.value, s.thr_lo, s.thr_hi,
-        |  (e.value < s.thr_lo OR e.value > s.thr_hi) AS flag_outlier
-        |FROM events e JOIN stats s ON e.user_id = s.user_id""".stripMargin,
-    "q64_bool_recode" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderstatus = 'F' THEN true
-        |       WHEN o_orderstatus IN ('O', 'P') THEN false END AS is_finished,
-        |  CAST(CAST(round(o_totalprice) AS BIGINT) AS VARCHAR) AS price_str
-        |FROM orders""".stripMargin,
-    "q65_json_parse" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value,
-        |  json_extract_string(props, '$.k') AS k_str
-        |FROM events""".stripMargin,
-    "q66_orphan_assign" ->
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS ia, b.vec_id AS ib,
-        |    round(
-        |      list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cos
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id),
-        |ed AS (SELECT ia AS src, ib AS dst FROM p WHERE cos >= 0.35),
-        |sym AS (SELECT src AS a, dst AS b FROM ed
-        |        UNION SELECT dst AS a, src AS b FROM ed),
-        |reach(v, c) AS (
-        |  SELECT a AS v, a AS c FROM sym
-        |  UNION
-        |  SELECT sym.a AS v, reach.c FROM sym JOIN reach ON sym.b = reach.v),
-        |cc AS (SELECT v, min(c) AS component FROM reach GROUP BY v),
-        |orph AS (
-        |  SELECT vec_id, embedding FROM e
-        |  WHERE vec_id NOT IN (SELECT v FROM cc)),
-        |cand AS (
-        |  SELECT o.vec_id AS orphan_id, cl.v AS neighbor_id,
-        |    round(
-        |      list_sum(list_transform(list_zip(o.embedding, ce.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(o.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(ce.embedding,
-        |            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cosine,
-        |    cc2.component AS assigned_cluster
-        |  FROM orph o
-        |  CROSS JOIN (SELECT v FROM cc) cl
-        |  JOIN e ce ON ce.vec_id = cl.v
-        |  JOIN cc cc2 ON cc2.v = cl.v)
-        |SELECT orphan_id, neighbor_id, cosine, assigned_cluster FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY orphan_id
-        |    ORDER BY cosine DESC, neighbor_id ASC) AS rk
-        |  FROM cand) WHERE rk = 1""".stripMargin,
-    "q67_stack_explode" ->
-      """SELECT c_custkey, 0 AS attr_rank, c_mktsegment AS attr_value FROM customer
-        |UNION ALL
-        |SELECT c_custkey, 1, upper(c_mktsegment) FROM customer
-        |UNION ALL
-        |SELECT c_custkey, 2, c_name FROM customer""".stripMargin,
-    "q68_sessionize" ->
-      """WITH lagged AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS prev_us
-        |  FROM events),
-        |sess AS (
-        |  SELECT user_id, ts, value,
-        |    CAST(sum(CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us > 1800 * 1000000 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS session_id
-        |  FROM lagged)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  min(ts) AS session_start, max(ts) AS session_end,
-        |  round(sum(value), 4) AS sum_value
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-    "q69_neardup_canonical" ->
-      """WITH RECURSIVE
-        |words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] AS shingle
-        |  FROM words, unnest(range(1, len(wl) - 1)) t(i)
-        |  WHERE len(wl) >= 3),
-        |counts AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |ed AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  JOIN counts ca ON ca.doc_id = id_a
-        |  JOIN counts cb ON cb.doc_id = id_b
-        |  WHERE common * 4 >= 1 * (ca.n_sh + cb.n_sh - common)),
-        |sym AS (SELECT src AS a, dst AS b FROM ed
-        |        UNION SELECT dst AS a, src AS b FROM ed),
-        |reach(v, c) AS (
-        |  SELECT a AS v, a AS c FROM sym
-        |  UNION
-        |  SELECT sym.a AS v, reach.c FROM sym JOIN reach ON sym.b = reach.v),
-        |cc AS (SELECT v, min(c) AS component FROM reach GROUP BY v)
-        |SELECT d.doc_id, coalesce(cc.component, d.doc_id) AS canonical_id,
-        |  (d.doc_id <> coalesce(cc.component, d.doc_id)) AS is_dup
-        |FROM documents d LEFT JOIN cc ON d.doc_id = cc.v""".stripMargin,
-    "q70_cleaning_chain" ->
-      """SELECT c_custkey,
-        |  CASE WHEN c_mktsegment IN ('FURNITURE', 'N/A') THEN NULL
-        |       ELSE c_mktsegment END AS segment_clean,
-        |  round(c_acctbal / 100.0, 4) AS disc_pct,
-        |  CASE WHEN round(c_acctbal / 100.0, 4) BETWEEN 0 AND 100
-        |       THEN round(c_acctbal / 100.0, 4) / 100.0 END AS disc_ratio,
-        |  CASE WHEN c_acctbal BETWEEN 0 AND 1e9 THEN c_acctbal END AS acctbal_pos
-        |FROM customer""".stripMargin,
-    "q71_flag_pipeline" -> q71Sql,
-    "q72_date_merge_quarter" ->
-      """WITH monthly AS (
-        |  SELECT l_suppkey, CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
-        |    round(sum(l_extendedprice), 2) AS month_rev
-        |  FROM lineitem GROUP BY 1, 2),
-        |quarterly AS (
-        |  SELECT l_suppkey, CAST(date_trunc('quarter', l_shipdate) AS TIMESTAMP) AS ship_quarter,
-        |    round(sum(l_extendedprice), 2) AS quarter_rev
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m.l_suppkey, m.ship_month, m.month_rev, q.quarter_rev,
-        |  greatest(m.ship_month,
-        |    CAST(date_trunc('quarter', m.ship_month) AS TIMESTAMP)) AS date_out,
-        |  round(m.month_rev / q.quarter_rev, 6) AS rev_share_q
-        |FROM monthly m LEFT JOIN quarterly q
-        |  ON m.l_suppkey = q.l_suppkey
-        |  AND CAST(date_trunc('quarter', m.ship_month) AS TIMESTAMP) = q.ship_quarter""".stripMargin,
-    "q73_rollup_grains" ->
-      """SELECT n_regionkey, n_name,
-        |  CAST(GROUPING(n_regionkey) * 2 + GROUPING(n_name) AS BIGINT) AS gid,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-        |  count(*) AS n_rows
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY ROLLUP (n_regionkey, n_name)""".stripMargin,
-    "q74_quantile_bins" ->
-      """WITH breaks AS (
-        |  SELECT event_type,
-        |    round(quantile_cont(value, 0.25), 6) AS t1,
-        |    round(quantile_cont(value, 0.5), 6) AS t2,
-        |    round(quantile_cont(value, 0.75), 6) AS t3
-        |  FROM events GROUP BY event_type)
-        |SELECT e.event_type, e.event_id, e.value,
-        |  CASE WHEN e.value <= b.t1 THEN 1
-        |       WHEN e.value <= b.t2 THEN 2
-        |       WHEN e.value <= b.t3 THEN 3
-        |       ELSE 4 END AS bin
-        |FROM events e JOIN breaks b ON e.event_type = b.event_type""".stripMargin,
-    "q75_local_outlier" ->
-      """WITH s1 AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    list_sort(list_filter(list(value) OVER w12, x -> x IS NOT NULL)) AS a12,
-        |    list_sort(list_filter(list(value) OVER w48, x -> x IS NOT NULL)) AS a48
-        |  FROM events
-        |  WINDOW
-        |    w12 AS (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING),
-        |    w48 AS (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN 24 PRECEDING AND 23 FOLLOWING)),
-        |s2 AS (
-        |  SELECT *,
-        |    CAST(len(a12)-1 AS DOUBLE) * 0.5e0 AS h12,
-        |    CAST(len(a48)-1 AS DOUBLE) * 0.5e0 AS h48
-        |  FROM s1),
-        |s3 AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    a12[CAST(floor(h12) AS INT)+1] + (h12 - floor(h12)) *
-        |      (coalesce(a12[CAST(floor(h12) AS INT)+2],
-        |                a12[CAST(floor(h12) AS INT)+1]) -
-        |       a12[CAST(floor(h12) AS INT)+1]) AS m,
-        |    a48[CAST(floor(h48) AS INT)+1] + (h48 - floor(h48)) *
-        |      (coalesce(a48[CAST(floor(h48) AS INT)+2],
-        |                a48[CAST(floor(h48) AS INT)+1]) -
-        |       a48[CAST(floor(h48) AS INT)+1]) AS mlong
-        |  FROM s2),
-        |s4 AS (SELECT *, value - m AS off FROM s3),
-        |s5 AS (
-        |  SELECT *,
-        |    lag(off, 12) OVER wo AS l12, lag(off, 6) OVER wo AS l6,
-        |    lead(off, 6) OVER wo AS f6, lead(off, 12) OVER wo AS f12,
-        |    list_sort(list_filter(list(off) OVER wq, x -> x IS NOT NULL)) AS aq
-        |  FROM s4
-        |  WINDOW wo AS (PARTITION BY user_id ORDER BY ts, event_id),
-        |    wq AS (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING)),
-        |s6 AS (
-        |  SELECT *,
-        |    list_sort(list_filter([l12, l6, off, f6, f12],
-        |      x -> x IS NOT NULL)) AS ash,
-        |    CAST(len(aq)-1 AS DOUBLE) * 0.75e0 AS h75,
-        |    CAST(len(aq)-1 AS DOUBLE) * 0.25e0 AS h25
-        |  FROM s5),
-        |s7 AS (
-        |  SELECT *,
-        |    (ash[(len(ash)+1)//2] + ash[len(ash)//2+1]) / 2.0e0 AS medoff,
-        |    aq[CAST(floor(h75) AS INT)+1] + (h75 - floor(h75)) *
-        |      (coalesce(aq[CAST(floor(h75) AS INT)+2],
-        |                aq[CAST(floor(h75) AS INT)+1]) -
-        |       aq[CAST(floor(h75) AS INT)+1]) AS p75,
-        |    aq[CAST(floor(h25) AS INT)+1] + (h25 - floor(h25)) *
-        |      (coalesce(aq[CAST(floor(h25) AS INT)+2],
-        |                aq[CAST(floor(h25) AS INT)+1]) -
-        |       aq[CAST(floor(h25) AS INT)+1]) AS p25
-        |  FROM s6),
-        |s8 AS (
-        |  SELECT user_id, event_id, value,
-        |    m * (1.0e0 + medoff / nullif(mlong, 0.0e0)) AS pred,
-        |    p75 - p25 AS iqr
-        |  FROM s7)
-        |SELECT user_id, event_id, value, pred, iqr,
-        |  value > pred + 3.5e0 * iqr AS flag_local_hi,
-        |  value < pred - 2.5e0 * iqr AS flag_local_lo
-        |FROM s8""".stripMargin,
-    "q76_anomalous_region" ->
-      """WITH b AS (
-        |  SELECT user_id, event_id, ts, value < 12 AS flagged FROM events),
-        |w1 AS (
-        |  SELECT *,
-        |    (count(*) OVER tr = 4 AND
-        |     sum(CASE WHEN flagged THEN 1 ELSE 0 END) OVER tr >= 1) AS is_after,
-        |    count(*) OVER ce AS c_ce,
-        |    sum(CASE WHEN flagged THEN 1 ELSE 0 END) OVER ce AS f_ce,
-        |    CASE WHEN flagged IS DISTINCT FROM lag(flagged) OVER wo
-        |      THEN 1 ELSE 0 END AS chg
-        |  FROM b
-        |  WINDOW wo AS (PARTITION BY user_id ORDER BY ts, event_id),
-        |    tr AS (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN 3 PRECEDING AND CURRENT ROW),
-        |    ce AS (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN 4 PRECEDING AND 3 FOLLOWING)),
-        |w2 AS (
-        |  SELECT *,
-        |    CASE WHEN c_ce = 8 THEN 1 ELSE 0 END AS inner_valid,
-        |    CASE WHEN c_ce = 8 AND CAST(f_ce AS DOUBLE)/8 > 0.5e0
-        |      THEN 1 ELSE 0 END AS inner_val,
-        |    sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-        |  FROM w1),
-        |w3 AS (
-        |  SELECT *,
-        |    count(*) OVER (PARTITION BY user_id, run) AS runlen,
-        |    coalesce(lead(is_after, 3) OVER
-        |      (PARTITION BY user_id ORDER BY ts, event_id), false) AS is_before,
-        |    (sum(inner_valid) OVER ce2 = 8 AND
-        |     max(inner_val) OVER ce2 = 1) AS is_region
-        |  FROM w2
-        |  WINDOW ce2 AS (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN 4 PRECEDING AND 3 FOLLOWING))
-        |SELECT user_id, event_id, flagged,
-        |  (NOT flagged) AND is_after AND is_before AND runlen <= 4
-        |    AND is_region AS flag_region
-        |FROM w3""".stripMargin,
-    "q77_bad_periods" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-        |  FROM events),
-        |p AS (SELECT *, CAST(date_trunc('day', ts) AS TIMESTAMP) AS period
-        |  FROM ev),
-        |g AS (
-        |  SELECT user_id, period,
-        |    min(CASE WHEN v IS NOT NULL THEN ts END) AS first_ts,
-        |    max(CASE WHEN v IS NOT NULL THEN ts END) AS last_ts,
-        |    count(v) AS n,
-        |    max(CAST(v > 300 AS INT)) AS has_flags
-        |  FROM p GROUP BY 1, 2),
-        |g2 AS (
-        |  SELECT user_id, period,
-        |    CAST(epoch_us(last_ts) - epoch_us(first_ts) AS DOUBLE)
-        |      / 3600000000.0e0 + 1.0e0 AS coverage_hours,
-        |    n, has_flags
-        |  FROM g),
-        |g3 AS (
-        |  SELECT user_id, period, coverage_hours,
-        |    CAST(n AS DOUBLE) / coverage_hours AS data_fraction,
-        |    coalesce(coverage_hours < 6.0e0, true) OR
-        |      (CAST(n AS DOUBLE) / coverage_hours < 0.15e0 AND has_flags = 1)
-        |      AS flag_bad_period
-        |  FROM g2)
-        |SELECT p.user_id, p.event_id, p.period, g3.coverage_hours,
-        |  g3.data_fraction, g3.flag_bad_period
-        |FROM p JOIN g3 ON p.user_id = g3.user_id AND p.period = g3.period""".stripMargin,
-    "q79_outer_assoc" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 3 <> 0),
-        |ords AS (
-        |  SELECT o_custkey, count(*) AS n_orders,
-        |    round(sum(o_totalprice), 2) AS sum_totalprice
-        |  FROM orders WHERE o_custkey % 2 = 0 GROUP BY 1),
-        |rets AS (
-        |  SELECT o_custkey AS r_custkey, count(*) AS n_returns
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  WHERE l_returnflag = 'R' GROUP BY 1),
-        |fo AS (
-        |  SELECT coalesce(c_custkey, o_custkey) AS custkey, c_mktsegment,
-        |    CASE WHEN c_custkey IS NOT NULL AND o_custkey IS NOT NULL THEN 'both'
-        |         WHEN c_custkey IS NOT NULL THEN 'left_only'
-        |         ELSE 'right_only' END AS source,
-        |    n_orders, sum_totalprice
-        |  FROM cust FULL OUTER JOIN ords ON c_custkey = o_custkey)
-        |SELECT f.custkey, f.c_mktsegment, f.source,
-        |  coalesce(f.n_orders, 0) AS n_orders,
-        |  coalesce(f.sum_totalprice, 0.0) AS sum_totalprice,
-        |  coalesce(r.n_returns, 0) AS n_returns
-        |FROM fo f LEFT JOIN rets r ON f.custkey = r.r_custkey""".stripMargin,
-    "q80_phone_year" ->
-      """WITH base AS (
-        |  SELECT c_custkey,
-        |    CAST(c_custkey % 800 + 200 AS VARCHAR) AS area,
-        |    lpad(CAST(c_custkey % 900 + 100 AS VARCHAR), 3, '0') AS mid,
-        |    lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0') AS last4
-        |  FROM customer),
-        |raw AS (
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey % 5 = 0
-        |           THEN '(' || area || ') ' || mid || ' ' || last4
-        |         WHEN c_custkey % 5 = 1
-        |           THEN area || '.' || mid || '.' || last4 || 'x' ||
-        |                CAST(c_custkey % 9 + 1 AS VARCHAR)
-        |         WHEN c_custkey % 5 = 2 THEN mid || last4
-        |         WHEN c_custkey % 5 = 3 THEN '0000000000'
-        |         ELSE area || '-' || mid || '-' || last4 END AS phone_raw,
-        |    CASE WHEN c_custkey % 4 = 0
-        |           THEN lpad(CAST(c_custkey % 100 AS VARCHAR), 2, '0')
-        |         WHEN c_custkey % 4 = 1
-        |           THEN CAST(c_custkey % 60 + 1960 AS VARCHAR)
-        |         WHEN c_custkey % 4 = 2 THEN '7'
-        |         ELSE lpad(CAST(c_custkey % 30 AS VARCHAR), 2, '0')
-        |    END AS year_raw
-        |  FROM base),
-        |parsed AS (
-        |  SELECT c_custkey, phone_raw, year_raw,
-        |    regexp_extract(regexp_replace(phone_raw, '\.0$', ''),
-        |      '^([^xX]*)', 1) AS main_raw,
-        |    regexp_extract(regexp_replace(phone_raw, '\.0$', ''),
-        |      '[xX](\d+)$', 1) AS ext
-        |  FROM raw),
-        |dig AS (
-        |  SELECT *, regexp_replace(main_raw, '[^0-9]', '', 'g') AS digits
-        |  FROM parsed),
-        |fmt AS (
-        |  SELECT *,
-        |    CASE WHEN length(digits) = 10
-        |      THEN substring(digits,1,3) || '-' || substring(digits,4,3) ||
-        |           '-' || substring(digits,7,4)
-        |      ELSE digits END AS formatted
-        |  FROM dig),
-        |yr AS (
-        |  SELECT *,
-        |    CASE WHEN length(year_raw) = 2 THEN
-        |      CASE WHEN 2000 + TRY_CAST(year_raw AS INT) > 2026
-        |        THEN 2000 + TRY_CAST(year_raw AS INT) - 100
-        |        ELSE 2000 + TRY_CAST(year_raw AS INT) END
-        |      ELSE TRY_CAST(year_raw AS INT) END AS mapped
-        |  FROM fmt)
-        |SELECT c_custkey, phone_raw, year_raw,
-        |  CASE WHEN digits = '' OR regexp_full_match(digits, '0+') THEN NULL
-        |       WHEN ext <> '' THEN formatted || 'x' || ext
-        |       ELSE formatted END AS phone_std,
-        |  CASE WHEN regexp_full_match(year_raw, '\d{2}|\d{4}')
-        |         AND mapped BETWEEN 1960 AND 2026 THEN mapped
-        |  END AS year_fixed
-        |FROM yr""".stripMargin,
-    "q82_overlay_alloc" ->
-      """WITH terr AS (
-        |  SELECT s_suppkey,
-        |    (s_suppkey % 50) * 2.0e0 AS ax1,
-        |    (s_suppkey % 30) * 2.0e0 AS ay1,
-        |    (s_suppkey % 50) * 2.0e0 + 3.0e0 + (s_suppkey % 4) AS ax2,
-        |    (s_suppkey % 30) * 2.0e0 + 2.0e0 + (s_suppkey % 5) AS ay2
-        |  FROM supplier),
-        |county AS (
-        |  SELECT c_custkey,
-        |    (c_custkey % 40) * 2.5e0 AS bx1,
-        |    (c_custkey % 24) * 2.5e0 AS by1,
-        |    (c_custkey % 40) * 2.5e0 + 4.0e0 AS bx2,
-        |    (c_custkey % 24) * 2.5e0 + 4.0e0 AS by2,
-        |    c_acctbal
-        |  FROM customer),
-        |pairs AS (
-        |  SELECT s_suppkey, c_custkey,
-        |    (least(ax2, bx2) - greatest(ax1, bx1)) *
-        |      (least(ay2, by2) - greatest(ay1, by1)) AS inter_area,
-        |    (bx2 - bx1) * (by2 - by1) AS right_area, c_acctbal
-        |  FROM terr JOIN county
-        |    ON least(ax2, bx2) > greatest(ax1, bx1)
-        |   AND least(ay2, by2) > greatest(ay1, by1))
-        |SELECT s_suppkey, c_custkey, inter_area,
-        |  inter_area / right_area AS area_fraction,
-        |  c_acctbal * (inter_area / right_area) AS acctbal_alloc
-        |FROM pairs""".stripMargin,
-    "q83_dissolve_area" ->
-      """WITH boxes AS (
-        |  SELECT s_nationkey,
-        |    CAST(s_suppkey % 40 AS INT) AS x1,
-        |    CAST((s_suppkey * 7) % 30 AS INT) AS y1,
-        |    CAST((s_suppkey % 40) + 1 + (s_suppkey % 5) AS INT) AS x2,
-        |    CAST(((s_suppkey * 7) % 30) + 1 + (s_suppkey % 4) AS INT) AS y2
-        |  FROM supplier),
-        |cellsx AS (
-        |  SELECT s_nationkey, y1, y2, unnest(range(x1, x2)) AS cx FROM boxes),
-        |cellsy AS (
-        |  SELECT s_nationkey, cx, unnest(range(y1, y2)) AS cy FROM cellsx),
-        |cells AS (SELECT DISTINCT s_nationkey, cx, cy FROM cellsy),
-        |agg AS (
-        |  SELECT s_nationkey, CAST(count(*) AS DOUBLE) AS union_area
-        |  FROM cells GROUP BY 1),
-        |nb AS (SELECT s_nationkey, count(*) AS n_boxes FROM boxes GROUP BY 1)
-        |SELECT a.s_nationkey, a.union_area, nb.n_boxes
-        |FROM agg a JOIN nb ON a.s_nationkey = nb.s_nationkey""".stripMargin,
-    "q84_point_in_region" ->
-      """WITH regions AS (
-        |  SELECT n_nationkey, n_name,
-        |    (n_nationkey % 5) * 20.0e0 AS x1,
-        |    floor(n_nationkey / 5) * 20.0e0 AS y1,
-        |    (n_nationkey % 5) * 20.0e0 + 20.0e0 AS x2,
-        |    floor(n_nationkey / 5) * 20.0e0 + 20.0e0 AS y2
-        |  FROM nation),
-        |r2 AS (
-        |  SELECT *,
-        |    abs((x1*y1 - x2*y1) + (x2*y2 - x2*y1) + (x2*y2 - x1*y2) +
-        |        (x1*y1 - x1*y2)) / 2.0e0 AS ring_area
-        |  FROM regions),
-        |points AS (
-        |  SELECT c_custkey,
-        |    (c_custkey % 97) * 1.03e0 AS px,
-        |    (c_custkey % 89) * 1.1e0 AS py
-        |  FROM customer)
-        |SELECT p.c_custkey, p.px, p.py, r.n_nationkey, r.n_name, r.ring_area
-        |FROM points p LEFT JOIN r2 r
-        |  ON p.px >= r.x1 AND p.px < r.x2 AND p.py >= r.y1 AND p.py < r.y2""".stripMargin,
-    "q85_ivf_ann" ->
-      """WITH hashed AS (
-        |  SELECT vec_id, embedding,
-        |    ('0x' || substr(md5('ivf_' || vec_id::VARCHAR), 1, 15))::BIGINT AS h
-        |  FROM embeddings),
-        |seeds AS (
-        |  SELECT vec_id, embedding FROM hashed
-        |  ORDER BY h, vec_id::VARCHAR LIMIT 16),
-        |cells AS (
-        |  SELECT embedding AS s_emb,
-        |    row_number() OVER (ORDER BY h, vec_id::VARCHAR) - 1 AS cell
-        |  FROM hashed WHERE vec_id IN (SELECT vec_id FROM seeds)),
-        |cd AS (
-        |  SELECT e.vec_id AS id, e.embedding AS emb, c.cell,
-        |    round(
-        |      list_sum(list_transform(c.s_emb,
-        |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-        |      - 2 * list_sum(list_transform(list_zip(e.embedding, c.s_emb),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))), 4) AS dist
-        |  FROM embeddings e, cells c),
-        |assigned AS (
-        |  SELECT id AS c_id, emb AS c_emb, cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY id
-        |      ORDER BY dist, cell) AS rn FROM cd) WHERE rn = 1),
-        |probes AS (
-        |  SELECT id AS q_id, emb AS q_emb, cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY id
-        |      ORDER BY dist, cell) AS rn FROM cd WHERE id < 20) WHERE rn <= 4),
-        |scored AS (
-        |  SELECT q_id, c_id,
-        |    round(
-        |      list_sum(list_transform(list_zip(q_emb, c_emb),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(q_emb,
-        |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c_emb,
-        |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))), 4) AS cosine
-        |  FROM probes JOIN assigned USING (cell) WHERE q_id <> c_id)
-        |SELECT q_id, rk, c_id, cosine FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cosine DESC, c_id ASC) AS rk
-        |  FROM scored) WHERE rk <= 5""".stripMargin,
-    "q86_convex_clip" ->
-      """SELECT n_nationkey,
-        |  (n_nationkey % 5) * 20.0e0 AS x1,
-        |  floor(n_nationkey / 5) * 20.0e0 AS y1,
-        |  (n_nationkey % 5) * 20.0e0 + 20.0e0 AS x2,
-        |  floor(n_nationkey / 5) * 20.0e0 + 20.0e0 AS y2,
-        |  greatest(0.0e0, least((n_nationkey % 5) * 20.0e0 + 20.0e0, 75.0e0) -
-        |           greatest((n_nationkey % 5) * 20.0e0, 15.0e0)) *
-        |  greatest(0.0e0, least(floor(n_nationkey / 5) * 20.0e0 + 20.0e0, 75.0e0) -
-        |           greatest(floor(n_nationkey / 5) * 20.0e0, 15.0e0))
-        |    AS clipped_area
-        |FROM nation""".stripMargin,
-    "q87_row_map" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(year(l_shipdate) AS INT) AS ship_year,
-        |  CASE (year(l_shipdate) + l_linenumber) % 3
-        |    WHEN 0 THEN 'revenue' WHEN 1 THEN 'expense' END AS row_category
-        |FROM lineitem
-        |WHERE year(l_shipdate) BETWEEN 1990 AND 2000
-        |  AND l_linenumber BETWEEN 1 AND 7
-        |  AND (year(l_shipdate) + l_linenumber) % 3 <> 2""".stripMargin,
-    "q88_harvest_full" ->
-      """WITH direct AS (
-        |  SELECT c_custkey AS custkey, c_mktsegment AS segment,
-        |    c_acctbal + 0.007e0 AS balance
-        |  FROM customer),
-        |reported AS (
-        |  SELECT c_custkey AS custkey,
-        |    CASE WHEN o_orderkey % 11 = 0 THEN 'NOISY'
-        |         ELSE c_mktsegment END AS segment,
-        |    c_acctbal + (o_orderkey % 3) - 1 + 0.007e0 AS balance
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |seg_cand AS (
-        |  SELECT custkey, segment FROM direct
-        |  UNION ALL SELECT custkey, segment FROM reported),
-        |seg_counts AS (
-        |  SELECT custkey, segment, count(*) AS vc FROM seg_cand
-        |  WHERE segment IS NOT NULL GROUP BY 1, 2),
-        |seg_rank AS (
-        |  SELECT *, sum(vc) OVER (PARTITION BY custkey) AS tc,
-        |    row_number() OVER (PARTITION BY custkey
-        |      ORDER BY vc DESC, segment ASC) AS rk
-        |  FROM seg_counts),
-        |seg AS (
-        |  SELECT custkey,
-        |    CASE WHEN CAST(vc AS DOUBLE)/tc > 0.7e0 THEN segment END AS segment,
-        |    CAST(vc AS DOUBLE)/tc AS segment_rate
-        |  FROM seg_rank WHERE rk = 1),
-        |bal_cand AS (
-        |  SELECT custkey, round(balance, -1) + 0.0e0 AS balance FROM direct
-        |  UNION ALL SELECT custkey, round(balance, -1) + 0.0e0 FROM reported),
-        |bal_counts AS (
-        |  SELECT custkey, balance, count(*) AS vc FROM bal_cand
-        |  WHERE balance IS NOT NULL GROUP BY 1, 2),
-        |bal_rank AS (
-        |  SELECT *, sum(vc) OVER (PARTITION BY custkey) AS tc,
-        |    row_number() OVER (PARTITION BY custkey
-        |      ORDER BY vc DESC, balance ASC) AS rk
-        |  FROM bal_counts),
-        |bal AS (
-        |  SELECT custkey,
-        |    CASE WHEN CAST(vc AS DOUBLE)/tc > 0.5e0 THEN balance END AS balance,
-        |    CAST(vc AS DOUBLE)/tc AS balance_rate
-        |  FROM bal_rank WHERE rk = 1)
-        |SELECT coalesce(s.custkey, b.custkey) AS custkey, s.segment,
-        |  s.segment_rate, b.balance, b.balance_rate
-        |FROM seg s FULL OUTER JOIN bal b ON s.custkey = b.custkey""".stripMargin,
-    "q89_true_gran" ->
-      """WITH base AS (
-        |  SELECT l.*, s.s_nationkey, n.n_regionkey
-        |  FROM lineitem l
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN nation n ON s.s_nationkey = n.n_nationkey),
-        |parts AS (
-        |  SELECT CAST(l_suppkey AS VARCHAR) AS part_key,
-        |    round(sum(l_quantity), 2) AS sum_qty, count(*) AS n_rows,
-        |    count(DISTINCT l_suppkey) AS n_suppliers,
-        |    'supplier' AS grain, 1 AS priority
-        |  FROM base GROUP BY 1
-        |  UNION ALL
-        |  SELECT CAST(s_nationkey AS VARCHAR), round(sum(l_quantity), 2),
-        |    count(*), count(DISTINCT l_suppkey), 'nation', 2
-        |  FROM base GROUP BY 1
-        |  UNION ALL
-        |  SELECT CAST(n_regionkey AS VARCHAR), round(sum(l_quantity), 2),
-        |    count(*), count(DISTINCT l_suppkey), 'region', 3
-        |  FROM base GROUP BY 1)
-        |SELECT grain, part_key, sum_qty, n_rows, n_suppliers,
-        |  row_number() OVER (
-        |    PARTITION BY sum_qty, n_rows, n_suppliers
-        |    ORDER BY priority ASC, part_key ASC) = 1 AS true_gran
-        |FROM parts""".stripMargin,
-    // The regexes interpolate the SAME Scala constants the Spark path
-    // compiles (both RE2-safe), so the two engines cannot drift.
-    "q90_parse_address" -> {
-      val sp = graft.functions.Cleaning.streetAddrPattern
-      val bp = graft.functions.Cleaning.poBoxPattern
-      // each generated line carries its own stripMargin '|' — the regex
-      // itself contains '|' alternations that must survive the strip
-      def sg(i: Int) =
-        s"|    nullif(regexp_extract(addr_raw, '$sp', $i), '') AS g$i,"
-      def bg(i: Int) =
-        s"|    nullif(regexp_extract(addr_raw, '$bp', $i), '') AS b$i"
-      s"""WITH parts AS (
-        |  SELECT c_custkey,
-        |    CAST(c_custkey % 900 + 1 AS VARCHAR) AS num,
-        |    (['Main St', 'Oak Ave', 'Elm Dr'])[c_custkey % 3 + 1] AS stname,
-        |    (['IL', 'CA', 'TX', 'NY'])[c_custkey % 4 + 1] AS st,
-        |    lpad(CAST(c_custkey % 100000 AS VARCHAR), 5, '0') AS zip5,
-        |    CAST(c_custkey % 1000 AS VARCHAR) AS boxn,
-        |    CAST(c_custkey % 50 + 1 AS VARCHAR) AS ste,
-        |    CAST(c_custkey % 20 + 1 AS VARCHAR) AS apt,
-        |    CAST(c_custkey % 90 + 1 AS VARCHAR) AS ordn,
-        |    lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0') AS zip4,
-        |    c_custkey % 9 AS m9
-        |  FROM customer),
-        |base AS (
-        |  SELECT c_custkey,
-        |    CASE m9
-        |      WHEN 0 THEN 'PO Box ' || boxn
-        |      WHEN 1 THEN 'PO Box ' || boxn || ', Springfield, ' || st || ' ' || zip5
-        |      WHEN 2 THEN num || ' N ' || stname || ', Springfield, ' || st || ' ' || zip5
-        |      WHEN 3 THEN num || ' ' || stname || ' NW, Springfield, ' || st || ' ' || zip5
-        |      WHEN 4 THEN num || ' ' || stname || ', Ste ' || ste || ', Springfield, ' || st || ' ' || zip5
-        |      WHEN 5 THEN num || ' ' || stname || ' Apt ' || apt || ', Springfield, ' || st || ' ' || zip5 || '-' || zip4
-        |      WHEN 6 THEN num || ' North ' || stname || ', Springfield, ' || st || ' ' || zip5
-        |      WHEN 7 THEN num || ' ' || ordn || 'th St West, Springfield, ' || st || ' ' || zip5
-        |      ELSE num || ' ' || stname || ', Springfield, ' || st || ' ' || zip5
-        |    END AS addr_raw
-        |  FROM parts),
-        |ex AS (
-        |  SELECT c_custkey, addr_raw,
-${(1 to 8).map(sg).mkString("\n")}
-${Seq(2, 3, 4).map(bg).mkString(",\n")}
-        |  FROM base)
-        |SELECT c_custkey, addr_raw,
-        |  g1 AS addr_number,
-        |  CASE WHEN g1 IS NOT NULL THEN trim(concat_ws(' ', g2, g3, g4, g5))
-        |       WHEN b4 IS NOT NULL THEN NULL
-        |       ELSE addr_raw END AS addr_street,
-        |  coalesce(g6, b2) AS addr_city,
-        |  coalesce(g7, b3) AS addr_state,
-        |  coalesce(g8, b4) AS addr_zip
-        |FROM ex""".stripMargin
-    },
-    "q91_territory_demand" ->
-      """WITH county AS (
-        |  SELECT c_custkey, c_nationkey,
-        |    CAST(c_custkey % 40 AS INT) AS x1,
-        |    CAST(c_custkey % 24 AS INT) AS y1,
-        |    CAST(c_custkey % 40 + 2 AS INT) AS x2,
-        |    CAST(c_custkey % 24 + 2 AS INT) AS y2,
-        |    CAST(floor(abs(c_acctbal)) + 1 AS BIGINT) AS population
-        |  FROM customer),
-        |demand AS (
-        |  SELECT c_nationkey, round(sum(o_totalprice), 2) AS demand_total
-        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1),
-        |wsum AS (
-        |  SELECT c_nationkey, CAST(sum(population) AS DOUBLE) AS tot,
-        |    count(*) AS n
-        |  FROM county GROUP BY 1),
-        |cellsx AS (
-        |  SELECT c_nationkey, y1, y2, unnest(range(x1, x2)) AS cx FROM county),
-        |cellsy AS (
-        |  SELECT c_nationkey, cx, unnest(range(y1, y2)) AS cy FROM cellsx),
-        |terr AS (
-        |  SELECT c_nationkey, CAST(count(*) AS DOUBLE) AS union_area
-        |  FROM (SELECT DISTINCT c_nationkey, cx, cy FROM cellsy) GROUP BY 1)
-        |SELECT c.c_custkey, c.c_nationkey, c.population,
-        |  (CASE WHEN w.tot <> 0.0e0 THEN c.population / w.tot
-        |        ELSE 1.0e0 / w.n END) * d.demand_total AS alloc_demand,
-        |  t.union_area
-        |FROM county c
-        |JOIN wsum w ON c.c_nationkey = w.c_nationkey
-        |JOIN demand d ON c.c_nationkey = d.c_nationkey
-        |JOIN terr t ON c.c_nationkey = t.c_nationkey""".stripMargin,
-    "q92_dbt_checks" ->
-      """WITH j AS (
-        |  SELECT l.*, o.o_totalprice, o.o_orderdate,
-        |    CAST(year(o.o_orderdate) AS INT) AS o_year
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |c1 AS (
-        |  SELECT 'orders:parts_vs_total' AS check_name,
-        |    count(CASE WHEN abs(p - t) > 0.25 * abs(t) THEN 1 END) AS observed
-        |  FROM (SELECT l_orderkey, sum(l_extendedprice) AS p,
-        |          max(o_totalprice) AS t
-        |        FROM j GROUP BY 1)),
-        |pool AS (
-        |  SELECT l_discount AS v, sum(l_quantity) AS w FROM j GROUP BY 1),
-        |wq AS (
-        |  SELECT min(v) AS q FROM (
-        |    SELECT v,
-        |      sum(w) OVER (ORDER BY v
-        |        RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw,
-        |      sum(w) OVER () AS wtot
-        |    FROM pool)
-        |  WHERE cumw * 2 >= wtot),
-        |c2 AS (
-        |  SELECT 'lineitem:wq_discount_bound' AS check_name, q,
-        |    CAST(round(q * 1e6) AS BIGINT) AS observed
-        |  FROM wq),
-        |yearly AS (
-        |  SELECT o_year, sum(l_extendedprice) AS t FROM j GROUP BY 1),
-        |c3 AS (
-        |  SELECT 'orders:yearly_revenue_continuity' AS check_name,
-        |    count(CASE WHEN prev IS NOT NULL
-        |      AND NOT (t / prev BETWEEN 0.1e0 AND 1.9e0) THEN 1 END) AS observed
-        |  FROM (SELECT t, lag(t) OVER (ORDER BY o_year) AS prev FROM yearly))
-        |SELECT check_name, observed = 0 AS passed, observed FROM c1
-        |UNION ALL
-        |SELECT check_name, q >= 0.0e0 AND q <= 0.06e0 AS passed, observed FROM c2
-        |UNION ALL
-        |SELECT check_name, observed = 0 AS passed, observed FROM c3""".stripMargin,
-    "q41_minhash_lsh" ->
-      """WITH words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] AS shingle
-        |  FROM words, unnest(range(1, len(wl) - 1)) t(i)
-        |  WHERE len(wl) >= 3),
-        |consts AS (
-        |  SELECT i,
-        |    ('0x' || substr(md5('a_' || i::VARCHAR), 1, 15))::BIGINT
-        |      % 2147483646 + 1 AS a,
-        |    ('0x' || substr(md5('b_' || i::VARCHAR), 1, 15))::BIGINT
-        |      % 2147483647 AS b
-        |  FROM range(0, 32) t(i)),
-        |sx AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(shingle), 1, 15))::BIGINT % 2147483647 AS x
-        |  FROM sh),
-        |hs AS (
-        |  SELECT doc_id, i, min((a * x + b) % 2147483647) AS h
-        |  FROM sx CROSS JOIN consts GROUP BY 1, 2),
-        |bnd AS (
-        |  SELECT doc_id, i // 4 AS band,
-        |    ('0x' || substr(md5(string_agg(h::VARCHAR, '_' ORDER BY i)), 1, 15))::BIGINT
-        |      AS bucket
-        |  FROM hs GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bnd a JOIN bnd b
-        |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-        |eq AS (
-        |  SELECT id_a, id_b, sum(CASE WHEN ha.h = hb.h THEN 1 ELSE 0 END) AS neq
-        |  FROM cand
-        |  JOIN hs ha ON ha.doc_id = id_a
-        |  JOIN hs hb ON hb.doc_id = id_b AND hb.i = ha.i
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, CAST(neq AS DOUBLE) / 32 AS est_jaccard
-        |FROM eq WHERE CAST(neq AS DOUBLE) / 32 >= 0.35""".stripMargin,
-    "q93_simhash_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id, ('0x' || substr(md5('0_' || tok), 1, 15))::BIGINT AS hv
-        |  FROM toks),
-        |votes AS (
-        |  SELECT doc_id, i, sum(CASE WHEN (hv >> i) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM h CROSS JOIN range(0, 60) t(i) GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT doc_id,
-        |    sum(CASE WHEN v > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END)::BIGINT AS sg
-        |  FROM votes GROUP BY 1),
-        |bb AS (
-        |  SELECT doc_id, sg, b, (sg >> (b * 15)) & 32767 AS bits
-        |  FROM sig CROSS JOIN range(0, 4) t(b)),
-        |pairs AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(bit_count(xor(a.sg, b.sg)) AS BIGINT) AS hamming
-        |  FROM bb a JOIN bb b
-        |    ON a.b = b.b AND a.bits = b.bits AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3""".stripMargin,
-    "q43_lsh_ann" -> annLshTopkSql(5),
-    "q94_fips_tz" ->
-      """WITH dim(state_name, code, tz) AS (VALUES
-        |  ('algeria','012','Africa/Algiers'),
-        |  ('argentina','032','America/Argentina/Buenos_Aires'),
-        |  ('brazil','076','America/Sao_Paulo'),
-        |  ('canada','124','America/Toronto'),
-        |  ('egypt','818','Africa/Cairo'),
-        |  ('ethiopia','231','Africa/Addis_Ababa'),
-        |  ('france','250','Europe/Paris'),
-        |  ('germany','276','Europe/Berlin'),
-        |  ('india','356','Asia/Kolkata'),
-        |  ('indonesia','360','Asia/Jakarta'),
-        |  ('iran','364','Asia/Tehran'),
-        |  ('iraq','368','Asia/Baghdad'),
-        |  ('japan','392','Asia/Tokyo'),
-        |  ('jordan','400','Asia/Amman'),
-        |  ('kenya','404','Africa/Nairobi'),
-        |  ('morocco','504','Africa/Casablanca'),
-        |  ('mozambique','508','Africa/Maputo'),
-        |  ('peru','604','America/Lima'),
-        |  ('china','156','Asia/Shanghai'),
-        |  ('romania','642','Europe/Bucharest'),
-        |  ('saudi arabia','682','Asia/Riyadh'),
-        |  ('vietnam','704','Asia/Ho_Chi_Minh'),
-        |  ('russia','643','Europe/Moscow'),
-        |  ('united kingdom','826','Europe/London'),
-        |  ('united states','840','America/New_York')),
-        |base AS (
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey % 7 = 0 THEN '  ' || lower(n_name) || '  '
-        |         WHEN c_custkey % 13 = 0 AND n_name = 'UNITED STATES'
-        |           THEN 'UNTIED STATES'
-        |         ELSE n_name END AS raw_state,
-        |    CAST(c_custkey % 360 - 180 AS DOUBLE) AS lon
-        |  FROM customer JOIN nation ON c_nationkey = n_nationkey),
-        |clean AS (
-        |  SELECT c_custkey, lon,
-        |    CASE WHEN s = 'untied states' THEN 'united states' ELSE s END AS s
-        |  FROM (SELECT c_custkey, lon,
-        |          trim(regexp_replace(regexp_replace(lower(raw_state),
-        |            '[^\x20-\x7e]', '', 'g'), '\s+', ' ', 'g')) AS s
-        |        FROM base)),
-        |off AS (SELECT *, CAST(round(lon / 15.0) AS INTEGER) AS o FROM clean)
-        |SELECT c_custkey, s AS state_clean,
-        |  lpad(d.code, 3, '0') AS country_fips,
-        |  coalesce(tz.tz, 'Etc/GMT' ||
-        |    CASE WHEN o >= 0 THEN '-' || o::VARCHAR
-        |         ELSE '+' || (-o)::VARCHAR END) AS timezone
-        |FROM off
-        |LEFT JOIN dim d ON off.s = d.state_name
-        |LEFT JOIN (SELECT state_name, tz FROM dim WHERE code < '500') tz
-        |  ON off.s = tz.state_name""".stripMargin,
-    "q96_euclidean_pairs" ->
-      """WITH grids AS (
-        |  SELECT t,
-        |    list_transform(range(0, 64), d ->
-        |      CASE WHEN ('0x' || substr(md5('eg_' || t::VARCHAR || '_' || d::VARCHAR),
-        |             1, 15))::BIGINT % 2 = 0
-        |           THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS g,
-        |    (('0x' || substr(md5('eshift_' || t::VARCHAR), 1, 15))::BIGINT
-        |      % 1000000) / 1000000.0 AS shift
-        |  FROM range(0, 8) t(t)),
-        |buck AS (
-        |  SELECT e.vec_id, grids.t AS tbl,
-        |    CAST(floor(
-        |      list_sum(list_transform(list_zip(e.embedding, grids.g),
-        |        x -> CAST(x[1] AS DOUBLE) * x[2])) / 2.0 + grids.shift)
-        |      AS BIGINT) AS bucket
-        |  FROM embeddings e CROSS JOIN grids),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM buck a JOIN buck b
-        |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-        |dots AS (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding,
-        |      e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS sq
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT id_a, id_b,
-        |    a.sq - 2.0 * list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) + b.sq AS d2
-        |  FROM cand
-        |  JOIN dots a ON a.vec_id = id_a
-        |  JOIN dots b ON b.vec_id = id_b)
-        |SELECT id_a, id_b, round(sqrt(greatest(d2, 0.0)), 6) AS dist
-        |FROM scored WHERE d2 <= 1.1 * 1.1""".stripMargin,
-    "q95_embedding_neardup" ->
-      """WITH signs AS (
-        |  SELECT i, list_transform(range(0, 64), d ->
-        |    CASE WHEN ('0x' || substr(md5(i::VARCHAR || '_' || d::VARCHAR), 1, 15))::BIGINT
-        |           % 2 = 0
-        |         THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS sv
-        |  FROM range(0, 24) t(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.i,
-        |    list_sum(list_transform(list_zip(e.embedding, s.sv),
-        |      x -> CAST(x[1] AS DOUBLE) * x[2])) AS p
-        |  FROM embeddings e CROSS JOIN signs s),
-        |bits AS (
-        |  SELECT vec_id, i // 6 AS band,
-        |    sum(CASE WHEN p > 0 THEN (1::BIGINT << (i % 6)) ELSE 0::BIGINT END) AS bits
-        |  FROM proj GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM bits a JOIN bits b
-        |    ON a.band = b.band AND a.bits = b.bits AND a.vec_id < b.vec_id),
-        |norms AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(embedding,
-        |      e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)))) AS n
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT id_a, id_b,
-        |    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.n * b.n) AS c
-        |  FROM cand
-        |  JOIN norms a ON a.vec_id = id_a
-        |  JOIN norms b ON b.vec_id = id_b)
-        |SELECT id_a, id_b, round(c, 4) AS cosine
-        |FROM scored WHERE c >= 0.4""".stripMargin,
-    // Full §2.11 linkage pipeline replayed end-to-end: portable-plane LSH
-    // edges (as q95) + same-year veto → recursive-CTE connected components
-    // (as q45) → first-fit split as a window (row_number per (component,
-    // year) − 1, see NearDup.splitClusters) → brute-force orphan top-1.
-    "q97_link_cross_year" ->
-      """WITH RECURSIVE signs AS (
-        |  SELECT i, list_transform(range(0, 64), d ->
-        |    CASE WHEN ('0x' || substr(md5(i::VARCHAR || '_' || d::VARCHAR), 1, 15))::BIGINT
-        |           % 2 = 0
-        |         THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS sv
-        |  FROM range(0, 24) t(i)),
-        |yr AS (
-        |  SELECT vec_id, CAST(vec_id % 4 + 2019 AS INTEGER) AS year
-        |  FROM embeddings),
-        |proj AS (
-        |  SELECT e.vec_id, s.i,
-        |    list_sum(list_transform(list_zip(e.embedding, s.sv),
-        |      x -> CAST(x[1] AS DOUBLE) * x[2])) AS p
-        |  FROM embeddings e CROSS JOIN signs s),
-        |bits AS (
-        |  SELECT vec_id, i // 6 AS band,
-        |    sum(CASE WHEN p > 0 THEN (1::BIGINT << (i % 6)) ELSE 0::BIGINT END) AS bits
-        |  FROM proj GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM bits a JOIN bits b
-        |    ON a.band = b.band AND a.bits = b.bits AND a.vec_id < b.vec_id),
-        |norms AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(embedding,
-        |      e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)))) AS n
-        |  FROM embeddings),
-        |edges AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT id_a, id_b,
-        |      list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.n * b.n) AS c
-        |    FROM cand
-        |    JOIN norms a ON a.vec_id = id_a
-        |    JOIN norms b ON b.vec_id = id_b)
-        |  WHERE c >= 0.4),
-        |vetoed AS (
-        |  SELECT e.id_a, e.id_b FROM edges e
-        |  JOIN yr ya ON ya.vec_id = e.id_a
-        |  JOIN yr yb ON yb.vec_id = e.id_b
-        |  WHERE ya.year != yb.year),
-        |sym AS (SELECT id_a AS a, id_b AS b FROM vetoed
-        |        UNION SELECT id_b, id_a FROM vetoed),
-        |reach(v, c) AS (
-        |  SELECT a AS v, a AS c FROM sym
-        |  UNION
-        |  SELECT sym.a AS v, reach.c FROM sym JOIN reach ON sym.b = reach.v),
-        |cc AS (SELECT v, min(c) AS component FROM reach GROUP BY v),
-        |split AS (
-        |  SELECT y.vec_id, cc.component,
-        |    row_number() OVER (PARTITION BY cc.component, y.year
-        |                       ORDER BY y.vec_id) - 1 AS sub
-        |  FROM cc JOIN yr y ON y.vec_id = cc.v),
-        |labeled AS (
-        |  SELECT vec_id,
-        |    min(vec_id) OVER (PARTITION BY component, sub) AS record_label
-        |  FROM split),
-        |orphans AS (
-        |  SELECT vec_id FROM yr WHERE vec_id NOT IN (SELECT v FROM cc)),
-        |assign_scored AS (
-        |  SELECT o.vec_id AS orphan_id, l.vec_id AS neighbor_id,
-        |    l.record_label,
-        |    round(list_sum(list_transform(list_zip(na.embedding, nb.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (na.n * nb.n), 4)
-        |      AS cos4
-        |  FROM orphans o
-        |  CROSS JOIN labeled l
-        |  JOIN norms na ON na.vec_id = o.vec_id
-        |  JOIN norms nb ON nb.vec_id = l.vec_id),
-        |assigned AS (
-        |  SELECT orphan_id AS vec_id, record_label FROM (
-        |    SELECT orphan_id, record_label, cos4,
-        |      row_number() OVER (PARTITION BY orphan_id
-        |        ORDER BY cos4 DESC, neighbor_id ASC) AS rk
-        |    FROM assign_scored)
-        |  WHERE rk = 1 AND cos4 >= 0.3),
-        |singles AS (
-        |  SELECT vec_id, vec_id AS record_label FROM orphans
-        |  WHERE vec_id NOT IN (SELECT vec_id FROM assigned))
-        |SELECT y.vec_id, y.year, u.record_label
-        |FROM yr y JOIN (SELECT vec_id, record_label FROM labeled
-        |                UNION ALL SELECT vec_id, record_label FROM assigned
-        |                UNION ALL SELECT vec_id, record_label FROM singles) u
-        |  ON u.vec_id = y.vec_id""".stripMargin,
-    // The native JaroWinkler expression replicates DuckDB's
-    // jaro_winkler_similarity (RapidFuzz semantics: boost threshold 0.7,
-    // prefix cap 4, summed m/len1 + m/len2 + (m-t)/m then one /3) with the
-    // same double association order — filter and rounded value replay
-    // bit-for-bit.
-    "q98_jaro_winkler" ->
-      """SELECT c_nationkey AS nkey, c_custkey, s_suppkey,
-        |  round(jaro_winkler_similarity(c_name, s_name), 6) AS name_sim
-        |FROM customer JOIN supplier ON c_nationkey = s_nationkey
-        |WHERE jaro_winkler_similarity(c_name, s_name) >= 0.77""".stripMargin,
-    // Blocked orphan assignment: same portable 24-plane / 6-bit-band
-    // blocking as q95, then exact-cosine top-1 inside candidate buckets.
-    "q99_orphan_assign_lsh" -> orphanAssignOracleSql(probed = false),
-    "q205_orphan_probed" -> orphanAssignOracleSql(probed = true),
-    // Incremental batch-vs-history dedup: exact fingerprint probe (q39's
-    // normalization), then the q41 MinHash machinery restricted to
-    // new-batch survivors × history, best match by (est DESC, hist id ASC).
-    "q100_incremental_dedup" ->
-      """WITH fph AS (
-        |  SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-        |    min(doc_id) AS exact_match_id
-        |  FROM documents WHERE doc_id < 400 GROUP BY 1),
-        |ex AS (
-        |  SELECT n.doc_id, fph.exact_match_id
-        |  FROM documents n LEFT JOIN fph
-        |    ON md5(trim(regexp_replace(lower(n.text), '\s+', ' ', 'g'))) = fph.fp
-        |  WHERE n.doc_id >= 400),
-        |words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] AS shingle
-        |  FROM words, unnest(range(1, len(wl) - 1)) t(i)
-        |  WHERE len(wl) >= 3),
-        |consts AS (
-        |  SELECT i,
-        |    ('0x' || substr(md5('a_' || i::VARCHAR), 1, 15))::BIGINT
-        |      % 2147483646 + 1 AS a,
-        |    ('0x' || substr(md5('b_' || i::VARCHAR), 1, 15))::BIGINT
-        |      % 2147483647 AS b
-        |  FROM range(0, 32) t(i)),
-        |sx AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(shingle), 1, 15))::BIGINT % 2147483647 AS x
-        |  FROM sh),
-        |hs AS (
-        |  SELECT doc_id, i, min((a * x + b) % 2147483647) AS h
-        |  FROM sx CROSS JOIN consts GROUP BY 1, 2),
-        |bnd AS (
-        |  SELECT doc_id, i // 4 AS band,
-        |    ('0x' || substr(md5(string_agg(h::VARCHAR, '_' ORDER BY i)), 1, 15))::BIGINT
-        |      AS bucket
-        |  FROM hs GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT n.doc_id AS nid, h.doc_id AS hid
-        |  FROM bnd n JOIN bnd h ON n.band = h.band AND n.bucket = h.bucket
-        |  WHERE n.doc_id >= 400 AND h.doc_id < 400
-        |    AND n.doc_id IN (SELECT doc_id FROM ex WHERE exact_match_id IS NULL)),
-        |eq AS (
-        |  SELECT nid, hid, sum(CASE WHEN ha.h = hb.h THEN 1 ELSE 0 END) AS neq
-        |  FROM cand
-        |  JOIN hs ha ON ha.doc_id = nid
-        |  JOIN hs hb ON hb.doc_id = hid AND hb.i = ha.i
-        |  GROUP BY 1, 2),
-        |best AS (
-        |  SELECT nid, hid, est FROM (
-        |    SELECT nid, hid, CAST(neq AS DOUBLE) / 32 AS est,
-        |      row_number() OVER (PARTITION BY nid
-        |        ORDER BY CAST(neq AS DOUBLE) / 32 DESC, hid ASC) AS rn
-        |    FROM eq WHERE CAST(neq AS DOUBLE) / 32 >= 0.35) WHERE rn = 1)
-        |SELECT ex.doc_id,
-        |  CASE WHEN ex.exact_match_id IS NOT NULL THEN 'exact_dup'
-        |       WHEN best.hid IS NOT NULL THEN 'near_dup'
-        |       ELSE 'unique' END AS status,
-        |  coalesce(ex.exact_match_id, best.hid) AS match_id,
-        |  best.est AS est_jaccard
-        |FROM ex LEFT JOIN best ON best.nid = ex.doc_id""".stripMargin,
-    "q101_cc_stars" ->
-      """WITH RECURSIVE
-        |e AS (
-        |  SELECT a, b FROM (
-        |    SELECT c_custkey AS a,
-        |      lead(c_custkey) OVER (
-        |        PARTITION BY c_nationkey, c_custkey % 25
-        |        ORDER BY c_custkey) AS b
-        |    FROM customer)
-        |  WHERE b IS NOT NULL),
-        |sym AS (SELECT a, b FROM e UNION SELECT b AS a, a AS b FROM e),
-        |reach(v, c) AS (
-        |  SELECT a AS v, a AS c FROM sym
-        |  UNION
-        |  SELECT sym.a AS v, reach.c FROM sym JOIN reach ON sym.b = reach.v)
-        |SELECT v, min(c) AS component FROM reach GROUP BY v""".stripMargin,
-    "q102_pack_sequences" ->
-      """WITH toks AS (
-        |  SELECT doc_id, doc_id % 32 AS shard,
-        |    CASE WHEN len(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
-        |  FROM documents),
-        |off AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-        |         AS BIGINT) AS end_off
-        |  FROM toks)
-        |SELECT doc_id, n_tokens, shard, end_off,
-        |  CAST(end_off - n_tokens AS BIGINT) AS start_off,
-        |  CAST(floor((end_off - n_tokens) / 512.0) AS BIGINT) AS chunk_id,
-        |  CAST((end_off - n_tokens) % 512 AS BIGINT) AS chunk_pos,
-        |  CASE WHEN n_tokens = 0 THEN 0
-        |       ELSE CAST(floor((end_off - 1) / 512.0) AS BIGINT)
-        |            - CAST(floor((end_off - n_tokens) / 512.0) AS BIGINT) + 1
-        |  END AS n_chunks
-        |FROM off""".stripMargin,
-    // L-territory ∩ county replayed by decomposing each L into its two
-    // disjoint boxes (bottom w×2 strip + left 2×(h-2) upper strip):
-    // area(L ∩ B) = area(box1 ∩ B) + area(box2 ∩ B) — plain rectangle
-    // arithmetic, independent of the triangulate-and-clip path under test.
-    "q108_polygon_overlay" ->
-      """WITH terr AS (
-        |  SELECT s_suppkey,
-        |    (s_suppkey % 50) * 2.0e0 AS ax,
-        |    (s_suppkey % 30) * 2.0e0 AS ay,
-        |    4.0e0 + (s_suppkey % 3) AS w,
-        |    4.0e0 + (s_suppkey % 2) AS h
-        |  FROM supplier),
-        |county AS (
-        |  SELECT c_custkey, c_acctbal,
-        |    (c_custkey % 40) * 2.0e0 AS bx,
-        |    (c_custkey % 24) * 2.0e0 AS by0
-        |  FROM customer),
-        |pairs AS (
-        |  SELECT s_suppkey, c_custkey, c_acctbal,
-        |    greatest(0.0e0, least(ax + w, bx + 4.0e0) - greatest(ax, bx)) *
-        |      greatest(0.0e0, least(ay + 2.0e0, by0 + 4.0e0) - greatest(ay, by0))
-        |    + greatest(0.0e0, least(ax + 2.0e0, bx + 4.0e0) - greatest(ax, bx)) *
-        |      greatest(0.0e0, least(ay + h, by0 + 4.0e0) - greatest(ay + 2.0e0, by0))
-        |      AS inter
-        |  FROM terr, county)
-        |SELECT s_suppkey, c_custkey, round(inter, 6) AS inter_area,
-        |  round(inter, 6) / 16.0e0 AS area_fraction,
-        |  c_acctbal * (round(inter, 6) / 16.0e0) AS acctbal_alloc
-        |FROM pairs WHERE inter > 0""".stripMargin,
-    // part areas from the box dimensions directly; fractions and rescaled
-    // values are the same IEEE divisions/multiplies the Spark side performs
-    // on its shoelace-exact integer areas
-    "q109_multipolygon_split" ->
-      """WITH m AS (
-        |  SELECT s_suppkey, s_acctbal,
-        |    CAST((1 + s_suppkey % 3) * (1 + s_suppkey % 2) AS DOUBLE) AS a0,
-        |    CAST(2 * (1 + s_suppkey % 4) AS DOUBLE) AS a1,
-        |    CAST(3 * (1 + s_suppkey % 5) AS DOUBLE) AS a2
-        |  FROM supplier),
-        |p AS (
-        |  SELECT s_suppkey, s_acctbal, 0 AS part_index, a0 AS ring_area,
-        |    a0 + a1 + a2 AS total FROM m
-        |  UNION ALL SELECT s_suppkey, s_acctbal, 1, a1, a0 + a1 + a2 FROM m
-        |  UNION ALL SELECT s_suppkey, s_acctbal, 2, a2, a0 + a1 + a2 FROM m)
-        |SELECT s_suppkey, part_index, ring_area,
-        |  ring_area / total AS area_fraction,
-        |  s_acctbal * (ring_area / total) AS acctbal_part
-        |FROM p""".stripMargin,
-    // each L decomposed into its two disjoint boxes; union area on the
-    // integer grid == count of distinct covered unit cells per nation
-    "q110_polygon_dissolve" ->
-      """WITH t AS (
-        |  SELECT s_nationkey,
-        |    CAST((s_suppkey % 50) * 2 AS INT) AS ax,
-        |    CAST((s_suppkey % 30) * 2 AS INT) AS ay,
-        |    CAST(4 + (s_suppkey % 3) AS INT) AS w,
-        |    CAST(4 + (s_suppkey % 2) AS INT) AS h
-        |  FROM supplier),
-        |boxes AS (
-        |  SELECT s_nationkey, ax AS x1, ay AS y1, ax + w AS x2, ay + 2 AS y2 FROM t
-        |  UNION ALL
-        |  SELECT s_nationkey, ax, ay + 2, ax + 2, ay + h FROM t),
-        |cellsx AS (
-        |  SELECT s_nationkey, y1, y2, unnest(range(x1, x2)) AS cx FROM boxes),
-        |cellsy AS (
-        |  SELECT s_nationkey, cx, unnest(range(y1, y2)) AS cy FROM cellsx),
-        |cells AS (SELECT DISTINCT s_nationkey, cx, cy FROM cellsy),
-        |agg AS (
-        |  SELECT s_nationkey, CAST(count(*) AS DOUBLE) AS union_area
-        |  FROM cells GROUP BY 1),
-        |np AS (SELECT s_nationkey, count(*) AS n_polys FROM supplier GROUP BY 1)
-        |SELECT a.s_nationkey, a.union_area, np.n_polys
-        |FROM agg a JOIN np ON a.s_nationkey = np.s_nationkey""".stripMargin,
-    // counties as L-shapes (area 2w+2h−4 in closed form); territory area
-    // by distinct-covered-cell counting of the two-box decompositions —
-    // the sweep union must agree, and the fractions/allocations are the
-    // same IEEE ops on both engines
-    "q111_territory_compile" ->
-      """WITH c AS (
-        |  SELECT c_custkey, c_acctbal, c_custkey % 25 AS utility_id,
-        |    CAST((c_custkey % 40) * 2 AS INT) AS ax,
-        |    CAST((c_custkey % 24) * 2 AS INT) AS ay,
-        |    CAST(4 + (c_custkey % 3) AS INT) AS w,
-        |    CAST(4 + (c_custkey % 2) AS INT) AS h
-        |  FROM customer),
-        |boxes AS (
-        |  SELECT utility_id, ax AS x1, ay AS y1, ax + w AS x2, ay + 2 AS y2 FROM c
-        |  UNION ALL
-        |  SELECT utility_id, ax, ay + 2, ax + 2, ay + h FROM c),
-        |cellsx AS (
-        |  SELECT utility_id, y1, y2, unnest(range(x1, x2)) AS cx FROM boxes),
-        |cellsy AS (
-        |  SELECT utility_id, cx, unnest(range(y1, y2)) AS cy FROM cellsx),
-        |cells AS (SELECT DISTINCT utility_id, cx, cy FROM cellsy),
-        |terr AS (
-        |  SELECT utility_id, CAST(count(*) AS DOUBLE) AS territory_area
-        |  FROM cells GROUP BY 1)
-        |SELECT c.utility_id, c.c_custkey,
-        |  CAST(2*w + 2*h - 4 AS DOUBLE) AS county_area,
-        |  t.territory_area,
-        |  CAST(2*w + 2*h - 4 AS DOUBLE) / t.territory_area AS area_fraction,
-        |  c_acctbal * (CAST(2*w + 2*h - 4 AS DOUBLE) / t.territory_area)
-        |    AS demand_alloc
-        |FROM c JOIN terr t ON c.utility_id = t.utility_id""".stripMargin,
-    // self-overlay replay: each L is its two disjoint boxes; a pair's
-    // shared piece is the sum of the 2×2 box-pair rectangle intersections;
-    // the exclusive remainder is 16 − Σ shared
-    "q112_self_union_ratio" ->
-      """WITH p AS (
-        |  SELECT s_suppkey AS pid, s_acctbal,
-        |    CAST(floor(s_suppkey / 2) AS BIGINT) AS pr,
-        |    s_suppkey % 2 AS side
-        |  FROM supplier),
-        |geo AS (
-        |  SELECT pid, s_acctbal,
-        |    (pr % 30) * 12.0e0 + side * (1.0e0 + (pr % 3)) AS ox,
-        |    (pr % 20) * 10.0e0 + side * (pr % 3) AS oy
-        |  FROM p),
-        |boxes AS (
-        |  SELECT pid, ox AS x1, oy AS y1, ox + 5 AS x2, oy + 2 AS y2 FROM geo
-        |  UNION ALL
-        |  SELECT pid, ox, oy + 2, ox + 2, oy + 5 FROM geo),
-        |inter AS (
-        |  SELECT a.pid AS pid_a, b.pid AS pid_b,
-        |    sum(greatest(0, least(a.x2, b.x2) - greatest(a.x1, b.x1)) *
-        |        greatest(0, least(a.y2, b.y2) - greatest(a.y1, b.y1)))
-        |      AS piece_area
-        |  FROM boxes a JOIN boxes b ON a.pid < b.pid
-        |  GROUP BY 1, 2
-        |  HAVING piece_area > 0),
-        |shared_rows AS (
-        |  SELECT pid_a AS pid, pid_b AS piece_partner,
-        |    round(piece_area, 6) AS piece_area FROM inter
-        |  UNION ALL
-        |  SELECT pid_b, pid_a, round(piece_area, 6) FROM inter),
-        |shared_tot AS (
-        |  SELECT pid, sum(piece_area) AS sh FROM shared_rows GROUP BY 1),
-        |pieces AS (
-        |  SELECT g.pid, CAST(-1 AS BIGINT) AS piece_partner,
-        |    16.0e0 - coalesce(t.sh, 0) AS piece_area
-        |  FROM geo g LEFT JOIN shared_tot t ON g.pid = t.pid
-        |  UNION ALL
-        |  SELECT pid, piece_partner, piece_area FROM shared_rows)
-        |SELECT x.pid, x.piece_partner, x.piece_area,
-        |  x.piece_area / 16.0e0 AS area_fraction,
-        |  g.s_acctbal * (x.piece_area / 16.0e0) AS acctbal_part
-        |FROM pieces x JOIN geo g ON x.pid = g.pid""".stripMargin,
-    // winnowing replay: gram hashes via the portable seeded family
-    // (md5('0_'||gram) 60-bit prefix), window minima via a trailing-frame
-    // window min over complete windows only, then the same df-capped
-    // shared-count pairing (fixture docs are all >= k+w-1 chars, so the
-    // short-doc min-of-all branch never fires)
-    "q113_winnow_pairs" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS txt
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, txt,
-        |    unnest(generate_series(0, length(txt) - 16)) AS i
-        |  FROM d WHERE length(txt) >= 16),
-        |h AS (
-        |  SELECT doc_id, i, length(txt) - 16 AS maxi,
-        |    ('0x' || substr(md5('0_' || substr(txt, i + 1, 16)), 1, 15))::BIGINT
-        |      AS hv
-        |  FROM pos),
-        |wmin AS (
-        |  SELECT doc_id,
-        |    min(hv) OVER (PARTITION BY doc_id ORDER BY i
-        |                  ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp
-        |  FROM h QUALIFY i <= maxi - 7),
-        |fps AS (
-        |  SELECT DISTINCT doc_id, fp FROM wmin
-        |  UNION
-        |  -- short-document branch: fewer grams than the window (the engine
-        |  -- emits ONE min-of-all fingerprint so near-dup short docs still
-        |  -- collide); without this the replay silently dropped such docs
-        |  SELECT doc_id, min(hv) AS fp FROM h WHERE maxi < 7 GROUP BY doc_id),
-        |pl AS (SELECT fp, count(*) AS df FROM fps GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  JOIN pl ON a.fp = pl.fp
-        |  WHERE pl.df <= 20)
-        |SELECT id_a, id_b, count(*) AS n_shared
-        |FROM pairs GROUP BY 1, 2 HAVING count(*) >= 5""".stripMargin,
-    // Morton interleave replay: bit i of dim d lands at i*2+d; the masked
-    // bit (x & 1<<i) carries 2^i, so the remaining factor is 2^(i*(n-1)+d)
-    "q114_zorder_key" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(list_sum(list_transform(generate_series(0, 9), i ->
-        |      ((l_partkey % 1024) & (1::BIGINT << i)) * (1::BIGINT << i)
-        |    + ((l_suppkey % 1024) & (1::BIGINT << i)) * (1::BIGINT << (i + 1))
-        |  )) AS BIGINT) AS zval
-        |FROM lineitem""".stripMargin,
-    // KMV replay: distinct portable hashes per group, rank ascending; the
-    // sketch holds ranks <= k, the estimate is (k-1)*2^60/h_k once full,
-    // or the exact below-k distinct count
-    "q115_kmv_distinct" ->
-      """WITH hp AS (
-        |  SELECT DISTINCT l_returnflag AS g,
-        |    ('0x' || substr(md5(l_partkey::VARCHAR), 1, 15))::BIGINT AS hv
-        |  FROM lineitem),
-        |rp AS (SELECT g, hv,
-        |         row_number() OVER (PARTITION BY g ORDER BY hv) AS rn
-        |       FROM hp),
-        |sp AS (SELECT g, count(*) FILTER (WHERE rn <= 256) AS n,
-        |         max(hv) FILTER (WHERE rn = 256) AS kth
-        |       FROM rp GROUP BY g),
-        |hs AS (
-        |  SELECT DISTINCT l_returnflag AS g,
-        |    ('0x' || substr(md5(l_suppkey::VARCHAR), 1, 15))::BIGINT AS hv
-        |  FROM lineitem),
-        |rs AS (SELECT g, hv,
-        |         row_number() OVER (PARTITION BY g ORDER BY hv) AS rn
-        |       FROM hs),
-        |ss AS (SELECT g, count(*) FILTER (WHERE rn <= 256) AS n,
-        |         max(hv) FILTER (WHERE rn = 256) AS kth
-        |       FROM rs GROUP BY g),
-        |ex AS (SELECT l_returnflag AS g,
-        |         count(DISTINCT l_partkey) AS exact_parts,
-        |         count(DISTINCT l_suppkey) AS exact_supps
-        |       FROM lineitem GROUP BY g)
-        |SELECT ex.g AS l_returnflag,
-        |  CASE WHEN sp.n < 256 THEN CAST(sp.n AS DOUBLE)
-        |       ELSE 255.0 * 1152921504606846976.0 / CAST(sp.kth AS DOUBLE)
-        |  END AS est_parts,
-        |  CASE WHEN ss.n < 256 THEN CAST(ss.n AS DOUBLE)
-        |       ELSE 255.0 * 1152921504606846976.0 / CAST(ss.kth AS DOUBLE)
-        |  END AS est_supps,
-        |  ex.exact_parts, ex.exact_supps
-        |FROM ex JOIN sp ON ex.g = sp.g JOIN ss ON ex.g = ss.g""".stripMargin,
-    // two-level rollup replays as the ONE-PASS formula (union-truncate is
-    // lossless), plus the per-(flag, year) sketch count
-    "q116_kmv_two_level" ->
-      """WITH hp AS (
-        |  SELECT DISTINCT l_returnflag AS g,
-        |    ('0x' || substr(md5(l_partkey::VARCHAR), 1, 15))::BIGINT AS hv
-        |  FROM lineitem),
-        |rp AS (SELECT g, hv,
-        |         row_number() OVER (PARTITION BY g ORDER BY hv) AS rn
-        |       FROM hp),
-        |sp AS (SELECT g, count(*) FILTER (WHERE rn <= 256) AS n,
-        |         max(hv) FILTER (WHERE rn = 256) AS kth
-        |       FROM rp GROUP BY g),
-        |ns AS (SELECT l_returnflag AS g,
-        |         count(DISTINCT year(l_shipdate)) AS n_sketches
-        |       FROM lineitem GROUP BY g)
-        |SELECT ns.g AS l_returnflag,
-        |  CASE WHEN sp.n < 256 THEN CAST(sp.n AS DOUBLE)
-        |       ELSE 255.0 * 1152921504606846976.0 / CAST(sp.kth AS DOUBLE)
-        |  END AS est_parts,
-        |  ns.n_sketches
-        |FROM ns JOIN sp ON ns.g = sp.g""".stripMargin,
-    // q11's changelog closed into [from, to) intervals with version
-    // numbers — the lead/row_number run over the CHANGE rows only
-    "q117_scd2_intervals" ->
-      """WITH chg AS (
-        |  SELECT user_id, event_id, ts, event_type FROM (
-        |    SELECT user_id, event_id, ts, event_type,
-        |      lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-        |      row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |    FROM events)
-        |  WHERE rn = 1 OR event_type IS DISTINCT FROM prev_type)
-        |SELECT user_id, event_id, event_type,
-        |  ts AS effective_from,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |    AS effective_to,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |    AS INT) AS version,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |    AS is_current
-        |FROM chg""".stripMargin,
-    // WKB replayed at the BYTE level: the oracle rebuilds the exact
-    // little-endian WKB hex arithmetically — IEEE754 bit pattern of each
-    // (non-negative, integer-valued) coordinate via floor(log2) + mantissa
-    // scaling, bytes reversed into little-endian hex. Areas come from the
-    // closed-form L/box arithmetic, independent of the decoder under test.
-    "q118_wkb_bridge" ->
-      """WITH terr AS (
-        |  SELECT s_suppkey,
-        |    (s_suppkey % 50) * 2.0 AS ax, (s_suppkey % 30) * 2.0 AS ay,
-        |    4.0 + (s_suppkey % 3) AS w, 4.0 + (s_suppkey % 2) AS h
-        |  FROM supplier),
-        |pts AS (
-        |  SELECT s_suppkey, i.range AS i,
-        |    [[ax,ay],[ax+w,ay],[ax+w,ay+2],[ax+2,ay+2],[ax+2,ay+h],[ax,ay+h],
-        |     [ax,ay],
-        |     [ax+200,ay],[ax+202,ay],[ax+202,ay+2],[ax+200,ay+2],[ax+200,ay]]
-        |      [CAST(i.range + 1 AS INT)] AS p
-        |  FROM terr, range(12) i),
-        |coords AS (
-        |  SELECT s_suppkey, i*2 + j.range AS ord,
-        |    CASE WHEN j.range = 0 THEN p[1] ELSE p[2] END AS v
-        |  FROM pts, range(2) j),
-        |hx AS (
-        |  SELECT s_suppkey, ord,
-        |    CASE WHEN v = 0 THEN '0000000000000000'
-        |         ELSE list_reduce(list_transform(range(0,8), bi -> printf('%02x',
-        |           (((CAST(floor(log2(v)) AS BIGINT) + 1023) * 4503599627370496
-        |             + CAST(v / pow(2.0, CAST(floor(log2(v)) AS BIGINT))
-        |                    * 4503599627370496 AS BIGINT)
-        |             - 4503599627370496) >> CAST(8*bi AS INT)) & 255)),
-        |           (a, c) -> a || c)
-        |    END AS h
-        |  FROM coords),
-        |ringhex AS (
-        |  SELECT s_suppkey,
-        |    string_agg(CASE WHEN ord < 14 THEN h END, '' ORDER BY ord) AS lhex,
-        |    string_agg(CASE WHEN ord >= 14 THEN h END, '' ORDER BY ord) AS bhex
-        |  FROM hx GROUP BY s_suppkey)
-        |SELECT t.s_suppkey,
-        |  '010300000001000000' || '07000000' || r.lhex AS wkb_hex,
-        |  3 AS wkb_type,
-        |  6 AS n_pts,
-        |  2*t.w + 2*t.h - 4.0 AS area,
-        |  '010600000002000000' ||
-        |    '010300000001000000' || '07000000' || r.lhex ||
-        |    '010300000001000000' || '05000000' || r.bhex AS mp_hex,
-        |  2*t.w + 2*t.h AS mp_area
-        |FROM terr t JOIN ringhex r ON r.s_suppkey = t.s_suppkey""".stripMargin,
-    // Average-linkage agglomerative replay for 3-member clusters: the merge
-    // order is closed-form — first merge = first pair (in (0,1),(0,2),(1,2)
-    // scan order) attaining the strict minimum below the threshold; second
-    // merge iff the MEAN distance from the merged pair to the remaining
-    // member is below it; final labels numbered by each cluster's minimum
-    // member index. Distances replay the engine's double accumulation over
-    // the float embeddings (q95 pattern). Sub-3 tail clusters have no
-    // duplicate year key and pass through as sub 0.
-    "q119_agglomerative_split" ->
-      """WITH m AS (
-        |  SELECT vec_id, vec_id // 3 AS cluster, vec_id % 3 AS idx, embedding
-        |  FROM embeddings),
-        |pd AS (
-        |  SELECT a.cluster, a.idx AS i, b.idx AS j,
-        |    1 - list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))
-        |        * sqrt(list_sum(list_transform(b.embedding,
-        |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))) AS d
-        |  FROM m a JOIN m b ON a.cluster = b.cluster AND a.idx < b.idx),
-        |w AS (
-        |  SELECT cluster,
-        |    max(CASE WHEN i = 0 AND j = 1 THEN d END) AS d01,
-        |    max(CASE WHEN i = 0 AND j = 2 THEN d END) AS d02,
-        |    max(CASE WHEN i = 1 AND j = 2 THEN d END) AS d12
-        |  FROM pd GROUP BY cluster),
-        |lab AS (
-        |  SELECT cluster,
-        |    CASE
-        |      WHEN d12 IS NULL OR d02 IS NULL THEN NULL
-        |      WHEN least(d01, d02, d12) >= 1.0 THEN [0, 1, 2]
-        |      WHEN d01 <= d02 AND d01 <= d12 THEN
-        |        CASE WHEN (d02 + d12) / 2 < 1.0 THEN [0,0,0] ELSE [0,0,1] END
-        |      WHEN d02 <= d12 THEN
-        |        CASE WHEN (d01 + d12) / 2 < 1.0 THEN [0,0,0] ELSE [0,1,0] END
-        |      ELSE
-        |        CASE WHEN (d01 + d02) / 2 < 1.0 THEN [0,0,0] ELSE [0,1,1] END
-        |    END AS labs
-        |  FROM w)
-        |SELECT m.vec_id, m.cluster,
-        |  coalesce(l.labs[CAST(m.idx + 1 AS INT)], 0) AS sub_cluster
-        |FROM m LEFT JOIN lab l ON l.cluster = m.cluster""".stripMargin,
-    "q120_multi_index_stack" ->
-      """SELECT o_orderkey, 'balance' AS metric, '2020' AS year,
-        |  'q1' AS quarter, o_totalprice AS value FROM orders
-        |UNION ALL
-        |SELECT o_orderkey, 'balance', '2020', 'q2', o_totalprice * 2.0
-        |FROM orders
-        |UNION ALL
-        |SELECT o_orderkey, 'balance', '2021', 'q1', o_totalprice * 3.0
-        |FROM orders
-        |UNION ALL
-        |SELECT o_orderkey, 'count', '2021', 'q2', CAST(o_custkey AS DOUBLE)
-        |FROM orders""".stripMargin,
-    "q121_gopher_quality" ->
-      """WITH w AS (
-        |  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(lower(text), '[^a-z0-9\s]'))
-        |      AS BIGINT) AS n_symbols,
-        |    string_split(text, ' ') AS ws
-        |  FROM documents),
-        |u AS (
-        |  SELECT doc_id, 1 AS n, unnest(ws) AS unit FROM w
-        |  UNION ALL
-        |  SELECT doc_id, 2, unnest(list_transform(range(1, len(ws)),
-        |    i -> ws[i] || ' ' || ws[i+1])) FROM w),
-        |c AS (SELECT doc_id, n, unit, count(*) AS c FROM u GROUP BY 1, 2, 3),
-        |a AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN n = 1 THEN c ELSE 0 END) AS BIGINT) AS n_words,
-        |    CAST(sum(CASE WHEN n = 1 THEN length(unit) * c ELSE 0 END)
-        |      AS BIGINT) AS word_chars,
-        |    CAST(sum(CASE WHEN n = 1 AND c > 1 THEN c ELSE 0 END)
-        |      AS BIGINT) AS dup_word_occ,
-        |    CAST(sum(CASE WHEN n = 2 THEN c ELSE 0 END) AS BIGINT) AS n_grams,
-        |    CAST(max(CASE WHEN n = 2 THEN c ELSE 0 END) AS BIGINT)
-        |      AS top_gram_c,
-        |    CAST(sum(CASE WHEN n = 2 AND c > 1 THEN c ELSE 0 END)
-        |      AS BIGINT) AS dup_gram_occ
-        |  FROM c GROUP BY 1)
-        |SELECT a.doc_id, w.n_chars, w.n_symbols, a.n_words,
-        |  a.word_chars / a.n_words AS mean_word_len,
-        |  a.dup_word_occ / a.n_words AS frac_dup_words,
-        |  CASE WHEN a.n_grams = 0 THEN 0.0
-        |       ELSE a.top_gram_c / a.n_grams END AS top_2gram_frac,
-        |  CASE WHEN a.n_grams = 0 THEN 0.0
-        |       ELSE a.dup_gram_occ / a.n_grams END AS frac_dup_2grams,
-        |  w.n_symbols / w.n_chars AS symbol_ratio,
-        |  (a.n_words >= 25 AND a.n_words <= 1000
-        |    AND a.word_chars >= a.n_words * 3
-        |    AND a.word_chars <= a.n_words * 10
-        |    AND a.top_gram_c * 10 <= a.n_grams
-        |    AND a.dup_gram_occ * 100 <= a.n_grams * 8) AS passes_gopher
-        |FROM a JOIN w USING (doc_id)""".stripMargin,
-    "q122_pii_redact" ->
-      """WITH i AS (
-        |  SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 3 = 0 THEN ' reach user' || doc_id::VARCHAR
-        |      || '@mail.example.com' ELSE '' END ||
-        |    CASE WHEN doc_id % 5 = 0 THEN ' ssn 123-45-'
-        |      || lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ' call 202-555-'
-        |      || lpad((doc_id % 10000)::VARCHAR, 4, '0') || ' from 10.0.'
-        |      || (doc_id % 256)::VARCHAR || '.'
-        |      || ((doc_id * 7) % 256)::VARCHAR ELSE '' END AS t
-        |  FROM documents),
-        |n AS (
-        |  SELECT doc_id, t,
-        |    CAST(len(regexp_extract_all(t,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |      AS BIGINT) AS n_emails,
-        |    CAST(len(regexp_extract_all(t, '\b\d{3}-\d{2}-\d{4}\b'))
-        |      AS BIGINT) AS n_ssns,
-        |    CAST(len(regexp_extract_all(t, '\b\d{3}-\d{3}-\d{4}\b'))
-        |      AS BIGINT) AS n_phones,
-        |    CAST(len(regexp_extract_all(t,
-        |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips
-        |  FROM i)
-        |SELECT doc_id, n_emails, n_ssns, n_phones, n_ips,
-        |  (n_emails > 0 OR n_ssns > 0 OR n_phones > 0 OR n_ips > 0)
-        |    AS has_pii,
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g'),
-        |    '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g')
-        |    AS redacted
-        |FROM n""".stripMargin,
-    "q123_line_dedup" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |  FROM documents),
-        |l AS (
-        |  SELECT doc_id,
-        |    unnest(range(0, CAST(ceil(len(ws) / 4.0) AS BIGINT))) AS idx,
-        |    unnest(list_transform(range(0, CAST(ceil(len(ws) / 4.0)
-        |        AS BIGINT)),
-        |      i -> array_to_string(ws[i*4+1 : i*4+4], ' '))) AS line
-        |  FROM w),
-        |c AS (SELECT line, count(*) AS df FROM l GROUP BY 1),
-        |f AS (SELECT l.doc_id, l.idx, l.line, c.df
-        |  FROM l JOIN c USING (line))
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
-        |  CAST(count(CASE WHEN df < 3 THEN 1 END) AS BIGINT) AS n_kept,
-        |  coalesce(string_agg(CASE WHEN df < 3 THEN line END,
-        |    chr(10) ORDER BY idx), '') AS cleaned_text
-        |FROM f GROUP BY doc_id""".stripMargin,
-    "q124_temperature_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 16 < 8 THEN 'big'
-        |         WHEN doc_id % 16 < 12 THEN 'mid'
-        |         WHEN doc_id % 16 < 14 THEN 'small'
-        |         ELSE 'rare' END AS domain
-        |  FROM documents),
-        |s AS (
-        |  SELECT domain, CAST(count(*) AS BIGINT) AS n_domain,
-        |    CAST(round(pow(count(*), 0.5) * 1e6) AS BIGINT) AS score
-        |  FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_domain) AS BIGINT) AS nn,
-        |    CAST(sum(score) AS BIGINT) AS ss FROM s),
-        |p AS (
-        |  SELECT domain, n_domain,
-        |    least(CAST(1.0 AS DOUBLE), CAST(0.5 AS DOUBLE) * nn * score
-        |      / (ss * n_domain)) AS keep_p
-        |  FROM s, t),
-        |j AS (
-        |  SELECT d.doc_id, d.domain, p.n_domain, p.keep_p,
-        |    ('0x' || substr(md5('temp_' || d.doc_id::VARCHAR), 1, 15))::BIGINT
-        |      / 1152921504606846976.0 AS u
-        |  FROM d JOIN p USING (domain))
-        |SELECT doc_id, domain, n_domain, keep_p, u FROM j
-        |WHERE u < keep_p""".stripMargin,
-    "q125_sq8_ann" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |dims AS (
-        |  SELECT d, min(CAST(v AS DOUBLE)) AS mn, max(CAST(v AS DOUBLE)) AS mx
-        |  FROM (SELECT unnest(embedding) AS v,
-        |               unnest(range(1, len(embedding) + 1)) AS d FROM e)
-        |  GROUP BY 1),
-        |st AS (SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs
-        |  FROM dims),
-        |c AS (
-        |  SELECT vec_id AS c_id,
-        |    list_transform(range(1, len(embedding) + 1),
-        |      i -> CASE WHEN mxs[i] = mns[i] THEN mns[i]
-        |           ELSE mns[i]
-        |             + round((CAST(embedding[i] AS DOUBLE) - mns[i]) * 255.0
-        |                 / (mxs[i] - mns[i]))
-        |               * (mxs[i] - mns[i]) / 255.0 END) AS xhat
-        |  FROM e, st),
-        |q AS (SELECT vec_id AS q_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
-        |  FROM e WHERE vec_id < 20),
-        |scored AS (
-        |  SELECT q_id, c_id,
-        |    round(list_sum(list_transform(list_zip(qe, xhat),
-        |        p -> p[1] * p[2]))
-        |      / (sqrt(list_sum(list_transform(qe, x -> x * x)))
-        |         * sqrt(list_sum(list_transform(xhat, x -> x * x)))), 4)
-        |      AS cosine
-        |  FROM q, c WHERE q_id <> c_id)
-        |SELECT q_id, rk, c_id, cosine FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cosine DESC, c_id ASC) AS rk
-        |  FROM scored) WHERE rk <= 5""".stripMargin,
-    "q126_perplexity_filter" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |  FROM documents),
-        |allw AS (SELECT unnest(ws) AS w1 FROM w),
-        |uni AS (SELECT w1, count(*) AS c1 FROM allw GROUP BY 1),
-        |v AS (SELECT count(*) AS V FROM uni),
-        |g AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, len(ws)), i -> ws[i])) AS w1,
-        |    unnest(list_transform(range(1, len(ws)), i -> ws[i+1])) AS w2
-        |  FROM w),
-        |bi AS (SELECT w1, w2, count(*) AS c12 FROM g GROUP BY 1, 2),
-        |sc AS (
-        |  SELECT doc_id, CAST(round(ln(
-        |      (c12 + CAST(0.5 AS DOUBLE)) / (c1 + CAST(0.5 AS DOUBLE) * V))
-        |      * 1e9) AS BIGINT) AS t
-        |  FROM g JOIN bi USING (w1, w2) JOIN uni USING (w1), v),
-        |a AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |    (CAST(sum(t) AS BIGINT) / 1e9) / count(*) AS avg_logp
-        |  FROM sc GROUP BY 1)
-        |SELECT doc_id, n_grams, avg_logp,
-        |  avg_logp > -3.41 AS ppl_ok
-        |FROM a""".stripMargin,
-    "q127_batch_layout" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS len,
-        |    doc_id % 8 AS shard
-        |  FROM documents),
-        |n AS (
-        |  SELECT shard, len, CAST(floor((row_number() OVER (
-        |    PARTITION BY shard ORDER BY doc_id) - 1) / 16.0) AS BIGINT)
-        |    AS batch_id
-        |  FROM d),
-        |b AS (
-        |  SELECT shard, len, CAST(floor((row_number() OVER (
-        |    PARTITION BY shard ORDER BY len, doc_id) - 1) / 16.0) AS BIGINT)
-        |    AS batch_id
-        |  FROM d),
-        |na AS (
-        |  SELECT 'naive' AS policy, shard, batch_id,
-        |    CAST(count(*) AS BIGINT) AS n_docs, max(len) AS max_len,
-        |    CAST(sum(len) AS BIGINT) AS sum_len
-        |  FROM n GROUP BY 2, 3),
-        |ba AS (
-        |  SELECT 'bucketed' AS policy, shard, batch_id,
-        |    CAST(count(*) AS BIGINT) AS n_docs, max(len) AS max_len,
-        |    CAST(sum(len) AS BIGINT) AS sum_len
-        |  FROM b GROUP BY 2, 3)
-        |SELECT policy, shard, batch_id, n_docs, max_len, sum_len,
-        |  max_len * n_docs - sum_len AS padding
-        |FROM (SELECT * FROM na UNION ALL SELECT * FROM ba)""".stripMargin,
-    "q128_decontaminate" ->
-      """WITH words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] || ' ' || wl[i+3] AS shingle
-        |  FROM words, unnest(range(1, len(wl) - 2)) t(i)
-        |  WHERE len(wl) >= 4),
-        |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 37 = 0),
-        |hits AS (
-        |  SELECT s.doc_id, count(*) AS n_eval_hits
-        |  FROM sh s JOIN ev ON s.shingle = ev.shingle
-        |  WHERE s.doc_id % 37 <> 0
-        |  GROUP BY 1)
-        |SELECT d.doc_id, coalesce(h.n_eval_hits, 0) AS n_eval_hits,
-        |  coalesce(h.n_eval_hits, 0) >= 1 AS contaminated
-        |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-        |WHERE d.doc_id % 37 <> 0""".stripMargin,
-    "q129_leakage_split" ->
-      """WITH RECURSIVE
-        |words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] AS shingle
-        |  FROM words, unnest(range(1, len(wl) - 1)) t(i)
-        |  WHERE len(wl) >= 3),
-        |counts AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |ed AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  JOIN counts ca ON ca.doc_id = id_a
-        |  JOIN counts cb ON cb.doc_id = id_b
-        |  WHERE common * 4 >= 1 * (ca.n_sh + cb.n_sh - common)),
-        |sym AS (SELECT src AS a, dst AS b FROM ed
-        |        UNION SELECT dst AS a, src AS b FROM ed),
-        |reach(v, c) AS (
-        |  SELECT a AS v, a AS c FROM sym
-        |  UNION
-        |  SELECT sym.a AS v, reach.c FROM sym JOIN reach ON sym.b = reach.v),
-        |cc AS (SELECT v, min(c) AS component FROM reach GROUP BY v),
-        |canon AS (
-        |  SELECT d.doc_id, coalesce(cc.component, d.doc_id) AS canonical_id
-        |  FROM documents d LEFT JOIN cc ON d.doc_id = cc.v),
-        |bkt AS (
-        |  SELECT doc_id, canonical_id,
-        |    ('0x' || substr(md5('split_' || canonical_id::VARCHAR), 1, 15))
-        |      ::BIGINT % 100 AS split_bucket
-        |  FROM canon)
-        |SELECT doc_id, canonical_id, split_bucket,
-        |  CASE WHEN split_bucket < 80 THEN 'train'
-        |       WHEN split_bucket < 90 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM bkt""".stripMargin,
-    "q130_semdedup" -> semDedupOracleSql(probed = false),
-    "q202_semdedup_probed" -> semDedupOracleSql(probed = true),
-    "q203_bm25_batch" -> q203OracleSql,
-    "q204_rrf_fusion" -> q204OracleSql,
-    "q207_bm25_prf" -> q207OracleSql,
-    // q208/q210: the SAME degree-ordered algorithm replayed — normalize,
-    // degrees, (deg, id) orientation, apex wedges, closing probe, corner
-    // explode; q210 adds the integer-nano coefficient on top. Exact
-    // integers end to end, one shared template.
-    "q208_triangles" -> trianglesOracleSql(withCc = false),
-    "q210_clustering_coeff" -> trianglesOracleSql(withCc = true),
-    // q211: the triangle/cc + 2-round LPA templates composed over the
-    // corpus capstone's jaccard edge replay (q69's pair CTEs)
-    "q211_dup_graph_report" -> dupGraphReportOracleSql,
-    // q209: two synchronous LPA rounds unrolled — neighbor-label counts,
-    // per-vertex argmax (count DESC, label ASC) each round.
-    "q209_label_prop" ->
-      """WITH e0 AS (
-        |  SELECT DISTINCT least(l_partkey % 997, l_suppkey % 997) AS a,
-        |         greatest(l_partkey % 997, l_suppkey % 997) AS b
-        |  FROM lineitem
-        |  WHERE l_quantity > 48 AND l_partkey % 997 <> l_suppkey % 997),
-        |sym AS (
-        |  SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0),
-        |l0 AS (SELECT DISTINCT a AS v, a AS lbl FROM sym),
-        |n1 AS (
-        |  SELECT s.a AS v, l.lbl, CAST(count(*) AS BIGINT) AS c
-        |  FROM sym s JOIN l0 l ON l.v = s.b GROUP BY 1, 2),
-        |l1 AS (
-        |  SELECT v, lbl FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY v
-        |      ORDER BY c DESC, lbl ASC) AS rn FROM n1) WHERE rn = 1),
-        |n2 AS (
-        |  SELECT s.a AS v, l.lbl, CAST(count(*) AS BIGINT) AS c
-        |  FROM sym s JOIN l1 l ON l.v = s.b GROUP BY 1, 2),
-        |l2 AS (
-        |  SELECT v, lbl FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY v
-        |      ORDER BY c DESC, lbl ASC) AS rn FROM n2) WHERE rn = 1)
-        |SELECT v AS vertex, lbl AS community FROM l2""".stripMargin,
-    "q131_bloom_manifest" ->
-      """WITH bits AS (
-        |  SELECT DISTINCT doc_id % 8 AS shard,
-        |    ('0x' || substr(md5(i::VARCHAR || '_' || doc_id::VARCHAR), 1, 15))
-        |      ::BIGINT % 1024 AS bit
-        |  FROM documents, unnest(range(0, 3)) t(i)),
-        |ppos AS (
-        |  SELECT DISTINCT doc_id AS probe_id,
-        |    ('0x' || substr(md5(i::VARCHAR || '_' || doc_id::VARCHAR), 1, 15))
-        |      ::BIGINT % 1024 AS bit
-        |  FROM documents, unnest(range(0, 3)) t(i)
-        |  WHERE doc_id % 101 = 0),
-        |np AS (SELECT probe_id, count(*) AS n FROM ppos GROUP BY 1),
-        |cand AS (
-        |  SELECT p.probe_id, b.shard, count(*) AS hits
-        |  FROM ppos p JOIN bits b ON p.bit = b.bit
-        |  GROUP BY 1, 2)
-        |SELECT c.probe_id, c.shard,
-        |  (c.probe_id % 8 = c.shard) AS is_true_shard
-        |FROM cand c JOIN np ON np.probe_id = c.probe_id
-        |WHERE c.hits = np.n""".stripMargin,
-    "q132_stratum_cap" ->
-      """WITH r AS (
-        |  SELECT doc_id, lang,
-        |    CAST(row_number() OVER (PARTITION BY lang ORDER BY
-        |      ('0x' || substr(md5('cap_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |        ASC, doc_id ASC) AS INTEGER) AS sample_rank
-        |  FROM documents)
-        |SELECT doc_id, lang, sample_rank FROM r
-        |WHERE sample_rank <= 30""".stripMargin,
-    // Repeated-span replay: positional 16-gram portable hashes, global
-    // distinct-doc frequency >= 2 marks positions, gaps-and-islands
-    // (pos - row_number) coalesces runs into maximal spans.
-    "q133_repeated_spans" ->
-      """WITH pos AS (
-        |  SELECT doc_id, text,
-        |    unnest(generate_series(1::BIGINT, length(text) - 15)) AS pos
-        |  FROM documents WHERE length(text) >= 16),
-        |h AS (
-        |  SELECT doc_id, pos,
-        |    ('0x' || substr(md5('0_' || substr(text, pos::INTEGER, 16)), 1, 15))::BIGINT
-        |      AS gh
-        |  FROM pos),
-        |freq AS (
-        |  SELECT gh FROM h GROUP BY gh HAVING count(DISTINCT doc_id) >= 2),
-        |marked AS (SELECT doc_id, pos FROM h JOIN freq USING (gh)),
-        |grp AS (
-        |  SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        |  FROM marked)
-        |SELECT doc_id, min(pos) AS span_start, max(pos) + 15 AS span_end,
-        |  max(pos) - min(pos) + 16 AS span_len, count(*) AS n_grams
-        |FROM grp GROUP BY doc_id, g""".stripMargin,
-    // Sliding-window chunk replay: window i of 64 tokens starts at token
-    // i*48 (16-token overlap), i in [0, max(1, ceil((n-16)/48))).
-    "q134_chunk_windows" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |c AS (
-        |  SELECT doc_id, ws,
-        |    greatest(1, (len(ws) - 16 + 47) // 48) AS n_chunks
-        |  FROM w),
-        |u AS (
-        |  SELECT doc_id, ws, unnest(range(0, n_chunks)) AS i FROM c)
-        |SELECT doc_id, i AS chunk_id, i * 48 AS token_start,
-        |  CAST(len(list_slice(ws, (i*48+1)::INTEGER, (i*48+64)::INTEGER))
-        |    AS BIGINT) AS n_tokens,
-        |  array_to_string(list_slice(ws, (i*48+1)::INTEGER,
-        |    (i*48+64)::INTEGER), ' ') AS chunk_text
-        |FROM u""".stripMargin,
-    // Budget-select replay: the NAIVE global-order window (the bucketed
-    // Spark path is provably identical — floor buckets refine the order).
-    "q135_budget_select" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END
-        |      AS BIGINT) AS n_tokens,
-        |    least(1.0, CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END
-        |        AS DOUBLE) / 100.0) *
-        |      (1.0 - CAST(len(regexp_extract_all(lower(text), '[^a-z0-9\s]'))
-        |        AS DOUBLE) / len(text)) AS score
-        |  FROM documents),
-        |o AS (
-        |  SELECT doc_id, n_tokens, score,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY score DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before
-        |  FROM t)
-        |SELECT doc_id, n_tokens, score, cum_before < 40000 AS selected
-        |FROM o""".stripMargin,
-    // URL canonicalization replay: same extract regex, default-port strip,
-    // www strip, fragment drop, empty-path slash; eTLD+1 via last-2/last-3
-    // labels against the multi-label suffix list.
-    "q136_url_canonical" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 11 = 0 THEN 'not a url'
-        |    ELSE (CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END)
-        |      || '://' ||
-        |      (['Example.COM','news.example.co.uk','www.Data.example.org',
-        |        'blog.example.com','cdn.example.net'])[doc_id % 5 + 1] ||
-        |      (CASE WHEN doc_id % 3 = 0 THEN
-        |        (CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END)
-        |        ELSE '' END) ||
-        |      (CASE WHEN doc_id % 4 = 0 THEN ''
-        |        ELSE '/Page/' || CAST(doc_id % 50 AS VARCHAR) END) ||
-        |      (CASE WHEN doc_id % 7 = 0 THEN '?id=' ||
-        |        CAST(doc_id % 9 AS VARCHAR) ELSE '' END) ||
-        |      (CASE WHEN doc_id % 6 = 0 THEN '#Sec' ||
-        |        CAST(doc_id % 4 AS VARCHAR) ELSE '' END)
-        |    END AS url_raw
-        |  FROM documents),
-        |ex AS (
-        |  SELECT doc_id, url_raw,
-        |    lower(regexp_extract(url_raw,
-        |      '^\s*([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]+)([^#]*)(#.*)?$', 1))
-        |      AS scheme,
-        |    lower(regexp_extract(url_raw,
-        |      '^\s*([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]+)([^#]*)(#.*)?$', 2))
-        |      AS auth,
-        |    regexp_extract(url_raw,
-        |      '^\s*([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]+)([^#]*)(#.*)?$', 3)
-        |      AS rest
-        |  FROM base),
-        |h AS (
-        |  SELECT doc_id, url_raw, scheme, rest,
-        |    regexp_replace(
-        |      CASE WHEN scheme = 'http' THEN regexp_replace(auth, ':80$', '')
-        |           WHEN scheme = 'https' THEN regexp_replace(auth, ':443$', '')
-        |           ELSE auth END, '^www\.', '') AS host_c,
-        |    CASE WHEN auth <> '' THEN regexp_replace(
-        |      regexp_replace(auth, ':[0-9]+$', ''), '^www\.', '') END AS host
-        |  FROM ex)
-        |SELECT doc_id, url_raw,
-        |  CASE WHEN scheme <> '' THEN scheme || '://' || host_c ||
-        |    (CASE WHEN rest = '' THEN '/' ELSE rest END) END AS url_canonical,
-        |  host,
-        |  CASE WHEN host IS NOT NULL THEN (
-        |    CASE WHEN len(ls) <= 2 THEN host
-        |         WHEN (ls[-2] || '.' || ls[-1]) IN
-        |             ('co.uk','ac.uk','com.au','co.jp','com.br','co.in')
-        |             AND len(ls) >= 3
-        |           THEN ls[-3] || '.' || ls[-2] || '.' || ls[-1]
-        |         ELSE ls[-2] || '.' || ls[-1] END) END AS registered_domain
-        |FROM (SELECT *, string_split(host, '.') AS ls FROM h)""".stripMargin,
-    // HTML strip replay: tags -> spaces, entities decode with &amp; LAST,
-    // whitespace collapse. DuckDB regexp_replace needs the 'g' flag
-    // (Spark replaces all matches by default).
-    "q137_html_strip" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    '<html><body class="c"><p>' || text ||
-        |    (CASE WHEN doc_id % 3 = 0 THEN ' &amp; more &lt;raw&gt;'
-        |      ELSE '' END) ||
-        |    (CASE WHEN doc_id % 4 = 0 THEN '<br/>line&nbsp;two'
-        |      ELSE '' END) ||
-        |    '</p></body></html>' AS html
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(html, '<[^>]*>')) AS BIGINT) AS n_tags,
-        |  CAST(len(regexp_extract_all(html, '&[a-z]+;|&#[0-9]+;')) AS BIGINT)
-        |    AS n_entities,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(replace(replace(
-        |      regexp_replace(html, '<[^>]*>', ' ', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |      '&nbsp;', ' '), '&amp;', '&'),
-        |    '\s+', ' ', 'g')) AS clean_text
-        |FROM h""".stripMargin,
-    // BM25: idf/length normalization replayed term-by-term; (1.2 + 1) is
-    // COMPUTED (not the literal 2.2) so both engines round the double sum
-    // identically.
-    "q138_bm25_topk" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS dl,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, tok, max(dl) AS dl,
-        |    CAST(count(*) AS BIGINT) AS tf
-        |  FROM toks WHERE tok IN ('spark', 'window', 'merge')
-        |  GROUP BY doc_id, tok),
-        |stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END) AS BIGINT)
-        |      AS sumdl
-        |  FROM documents),
-        |d AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM f GROUP BY tok),
-        |s AS (
-        |  SELECT f.doc_id,
-        |    round(sum(ln(1 + (n - df + 0.5) / (df + 0.5))
-        |      * (tf * (1.2 + 1))
-        |      / (tf + 1.2 * (1 - 0.75
-        |          + 0.75 * dl / (CAST(sumdl AS DOUBLE) / n)))), 4) AS score,
-        |    CAST(count(*) AS BIGINT) AS n_terms_hit
-        |  FROM f JOIN d USING (tok) CROSS JOIN stats
-        |  GROUP BY f.doc_id)
-        |SELECT doc_id, score, n_terms_hit,
-        |  row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-        |FROM s ORDER BY score DESC, doc_id ASC LIMIT 50""".stripMargin,
-    // Efraimidis–Spirakis keys: u from the portable hash in (0,1),
-    // rank by round(ln(u)/w, 8) per stratum.
-    "q139_weighted_sample" ->
-      """WITH b AS (
-        |  SELECT doc_id, lang, greatest(n_chars, 1) AS w,
-        |    ((('0x' || substr(md5('wsamp_' || doc_id::VARCHAR), 1, 15))
-        |        ::BIGINT % 4503599627370496) + 0.5) / 4503599627370496.0
-        |      AS u
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, lang, w, round(ln(u) / w, 8) AS sample_key
-        |  FROM b)
-        |SELECT doc_id, lang, w, sample_key,
-        |  CAST(rk AS INTEGER) AS sample_rank
-        |FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY lang
-        |    ORDER BY sample_key DESC, doc_id ASC) AS rk
-        |  FROM k) WHERE rk <= 20""".stripMargin,
-    // Exact integer-quantized mean embedding per label, exploded to
-    // (label, dim, value); two IEEE divisions in fixed order.
-    "q140_embed_pool" ->
-      """WITH q AS (
-        |  SELECT label,
-        |    unnest(range(0, len(embedding))) AS dim,
-        |    unnest(list_transform(embedding,
-        |      e -> CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))) AS qv
-        |  FROM embeddings),
-        |a AS (
-        |  SELECT label, dim, CAST(sum(qv) AS BIGINT) AS s,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM q GROUP BY label, dim)
-        |SELECT CAST(label AS BIGINT) AS label,
-        |  max(n) OVER (PARTITION BY label) AS n_members,
-        |  dim, CAST(s AS DOUBLE) / n / 1000000 AS value
-        |FROM a""".stripMargin,
-    // CDC apply: last change per key wins (row_number over seq desc),
-    // upserts replace payload, deletes drop, unmatched base passes through.
-    "q141_apply_changelog" ->
-      """WITH ch AS (
-        |  SELECT CASE WHEN l_partkey % 13 = 0 THEN -l_orderkey - 1
-        |              ELSE l_orderkey END AS o_orderkey,
-        |    CAST(l_linenumber AS BIGINT) AS seq,
-        |    CASE WHEN l_suppkey % 5 = 0 THEN 'D' ELSE 'U' END AS op,
-        |    l_extendedprice AS p, l_returnflag AS st
-        |  FROM lineitem),
-        |latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY o_orderkey
-        |      ORDER BY seq DESC, op ASC, p DESC, st DESC) AS rn
-        |    FROM ch) WHERE rn = 1),
-        |j AS (
-        |  SELECT coalesce(b.o_orderkey, l.o_orderkey) AS o_orderkey, l.op,
-        |    CASE WHEN l.op IS NOT NULL THEN l.p
-        |         ELSE b.o_totalprice END AS o_totalprice,
-        |    CASE WHEN l.op IS NOT NULL THEN l.st
-        |         ELSE b.o_orderstatus END AS o_orderstatus
-        |  FROM orders b FULL JOIN latest l ON b.o_orderkey = l.o_orderkey)
-        |SELECT o_orderkey, o_totalprice, o_orderstatus FROM j
-        |WHERE op IS NULL OR op <> 'D'""".stripMargin,
-    // BPE replay: 5 unrolled merge rounds over the word-frequency dict;
-    // pair counts at every adjacent position, (count desc, l, r) tiebreak,
-    // greedy-leftmost merge as a list_reduce fold over singleton lists.
-    "q143_bpe_merges" -> {
-      val step = (i: Int) => {
-        val j = i - 1
-        s"""p$i AS (
-           |  SELECT s[t.i] AS l, s[t.i+1] AS r, sum(f) AS c
-           |  FROM v$j, unnest(range(1, len(s))) t(i)
-           |  WHERE len(s) > 1
-           |  GROUP BY 1, 2),
-           |b$i AS (SELECT l, r, c FROM p$i ORDER BY c DESC, l ASC, r ASC LIMIT 1),
-           |v$i AS (
-           |  SELECT w, f,
-           |    list_reduce(list_transform(s, x -> [x]),
-           |      (acc, x) -> CASE WHEN acc[len(acc)] = b$i.l AND x[1] = b$i.r
-           |                       THEN acc[1:len(acc)-1] || [b$i.l || b$i.r]
-           |                       ELSE acc || x END) AS s
-           |  FROM v$j, b$i)""".stripMargin
-      }
-      ("""WITH toks AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents),
-        |v0 AS (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS f,
-        |    list_transform(range(1, len(w)+1), i -> w[i:i]) || ['</w>'] AS s
-        |  FROM toks WHERE len(w) > 0 GROUP BY w),
-        |""".stripMargin
-        + (1 to 5).map(step).mkString(",\n") + "\nSELECT * FROM (\n"
-        + (1 to 5).map(i =>
-          s"""SELECT CAST($i AS BIGINT) AS step, l AS "left", r AS "right",
-             |  l || r AS merged, CAST(c AS BIGINT) AS pair_count FROM b$i""".stripMargin)
-          .mkString("\nUNION ALL\n")
-        + "\n) ORDER BY step")
-    },
-    // Snapshot diff: the same mutation replayed, full-outer classified.
-    "q155_snapshot_diff" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders),
-        |today AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1.0
-        |         ELSE o_totalprice END AS o_totalprice,
-        |    o_orderstatus
-        |  FROM base WHERE o_orderkey % 11 <> 0
-        |  UNION ALL
-        |  SELECT -o_orderkey - 1, o_totalprice, o_orderstatus
-        |  FROM base WHERE o_orderkey % 13 = 0),
-        |j AS (
-        |  SELECT coalesce(b.o_orderkey, t.o_orderkey) AS o_orderkey,
-        |    b.o_orderkey IS NOT NULL AS in_old,
-        |    t.o_orderkey IS NOT NULL AS in_new,
-        |    (b.o_totalprice IS DISTINCT FROM t.o_totalprice) AS chg_p,
-        |    (b.o_orderstatus IS DISTINCT FROM t.o_orderstatus) AS chg_s
-        |  FROM base b FULL JOIN today t ON b.o_orderkey = t.o_orderkey)
-        |SELECT o_orderkey,
-        |  CASE WHEN NOT in_old THEN 'added'
-        |       WHEN NOT in_new THEN 'removed'
-        |       WHEN chg_p OR chg_s THEN 'changed'
-        |       ELSE 'unchanged' END AS status,
-        |  CASE WHEN in_old AND in_new THEN
-        |    concat_ws(',',
-        |      CASE WHEN chg_p THEN 'o_totalprice' END,
-        |      CASE WHEN chg_s THEN 'o_orderstatus' END)
-        |  END AS changed_cols,
-        |  CASE WHEN in_old AND in_new THEN
-        |    CAST((CASE WHEN chg_p THEN 1 ELSE 0 END)
-        |       + (CASE WHEN chg_s THEN 1 ELSE 0 END) AS BIGINT)
-        |  ELSE 0 END AS n_changed
-        |FROM j""".stripMargin,
-    // Capstone chain replay: harvest vote (q88 shape) + integer-cent
-    // ownership allocation + per-(supplier, year) rollup. Every revenue
-    // cell is a sum of exact integer cents, so no tolerance is needed.
-    "q156_capstone_metrics" ->
-      """WITH cand AS (
-        |  SELECT s_suppkey AS suppkey, CAST(s_nationkey AS BIGINT) AS nationkey
-        |  FROM supplier
-        |  UNION ALL
-        |  SELECT s_suppkey,
-        |    CAST(CASE WHEN l_orderkey % 13 = 0 THEN s_nationkey + 1
-        |         ELSE s_nationkey END AS BIGINT)
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey),
-        |vc AS (
-        |  SELECT suppkey, nationkey, count(*) AS n FROM cand
-        |  WHERE nationkey IS NOT NULL GROUP BY 1, 2),
-        |vr AS (
-        |  SELECT *, sum(n) OVER (PARTITION BY suppkey) AS tc,
-        |    row_number() OVER (PARTITION BY suppkey
-        |      ORDER BY n DESC, nationkey ASC) AS rk
-        |  FROM vc),
-        |ent AS (
-        |  SELECT suppkey AS s_suppkey,
-        |    CASE WHEN CAST(n AS DOUBLE)/tc > 0.7e0 THEN nationkey END
-        |      AS nationkey
-        |  FROM vr WHERE rk = 1),
-        |own AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    CAST(sum(l_quantity) AS BIGINT) AS qty
-        |  FROM lineitem GROUP BY 1, 2),
-        |ownt AS (
-        |  SELECT *, sum(qty) OVER (PARTITION BY l_orderkey) AS tot
-        |  FROM own),
-        |alloc AS (
-        |  SELECT f.l_suppkey, year(o.o_orderdate) AS order_year, f.qty,
-        |    (CAST(round(o.o_totalprice * 100) AS BIGINT) * f.qty) // f.tot
-        |      AS alloc_cents
-        |  FROM orders o JOIN ownt f ON o.o_orderkey = f.l_orderkey)
-        |SELECT a.l_suppkey AS s_suppkey, a.order_year, e.nationkey,
-        |  sum(a.alloc_cents) / 100.0 AS alloc_revenue,
-        |  CAST(sum(a.qty) AS BIGINT) AS qty,
-        |  round((sum(a.alloc_cents) / 100.0) / sum(a.qty), 4)
-        |    AS price_per_qty
-        |FROM alloc a LEFT JOIN ent e ON a.l_suppkey = e.s_suppkey
-        |GROUP BY 1, 2, 3""".stripMargin,
-    // Capstone plant-parts replay: the q156 chain re-aggregated at three
-    // grains with the q89 true-grain signature window; revenue stays in
-    // exact integer cents until the final /100.
-    "q157_capstone_parts" ->
-      """WITH cand AS (
-        |  SELECT s_suppkey AS suppkey, CAST(s_nationkey AS BIGINT) AS nationkey
-        |  FROM supplier
-        |  UNION ALL
-        |  SELECT s_suppkey,
-        |    CAST(CASE WHEN l_orderkey % 13 = 0 THEN s_nationkey + 1
-        |         ELSE s_nationkey END AS BIGINT)
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey),
-        |vc AS (
-        |  SELECT suppkey, nationkey, count(*) AS n FROM cand
-        |  WHERE nationkey IS NOT NULL GROUP BY 1, 2),
-        |vr AS (
-        |  SELECT *, sum(n) OVER (PARTITION BY suppkey) AS tc,
-        |    row_number() OVER (PARTITION BY suppkey
-        |      ORDER BY n DESC, nationkey ASC) AS rk
-        |  FROM vc),
-        |ent AS (
-        |  SELECT suppkey AS s_suppkey,
-        |    CASE WHEN CAST(n AS DOUBLE)/tc > 0.7e0 THEN nationkey END
-        |      AS nationkey
-        |  FROM vr WHERE rk = 1),
-        |own AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    CAST(sum(l_quantity) AS BIGINT) AS qty
-        |  FROM lineitem GROUP BY 1, 2),
-        |ownt AS (
-        |  SELECT *, sum(qty) OVER (PARTITION BY l_orderkey) AS tot
-        |  FROM own),
-        |alloc AS (
-        |  SELECT f.l_suppkey, year(o.o_orderdate) AS order_year,
-        |    f.qty,
-        |    (CAST(round(o.o_totalprice * 100) AS BIGINT) * f.qty) // f.tot
-        |      AS alloc_cents
-        |  FROM orders o JOIN ownt f ON o.o_orderkey = f.l_orderkey),
-        |metrics AS (
-        |  SELECT a.l_suppkey AS s_suppkey, a.order_year, e.nationkey,
-        |    CAST(sum(a.alloc_cents) AS BIGINT) AS cents,
-        |    CAST(sum(a.qty) AS BIGINT) AS qty
-        |  FROM alloc a LEFT JOIN ent e ON a.l_suppkey = e.s_suppkey
-        |  GROUP BY 1, 2, 3),
-        |wr AS (
-        |  SELECT m.*, n.n_regionkey FROM metrics m
-        |  LEFT JOIN nation n ON m.nationkey = n.n_nationkey),
-        |parts AS (
-        |  SELECT CAST(s_suppkey AS VARCHAR) AS part_key,
-        |    sum(cents) / 100.0 AS sum_revenue, count(*) AS n_rows,
-        |    count(DISTINCT s_suppkey) AS n_suppliers,
-        |    'supplier' AS grain, 1 AS priority
-        |  FROM wr GROUP BY 1
-        |  UNION ALL
-        |  SELECT CAST(nationkey AS VARCHAR), sum(cents) / 100.0,
-        |    count(*), count(DISTINCT s_suppkey), 'nation', 2
-        |  FROM wr GROUP BY 1
-        |  UNION ALL
-        |  SELECT CAST(n_regionkey AS VARCHAR), sum(cents) / 100.0,
-        |    count(*), count(DISTINCT s_suppkey), 'region', 3
-        |  FROM wr GROUP BY 1)
-        |SELECT grain, part_key, sum_revenue, n_rows, n_suppliers,
-        |  row_number() OVER (
-        |    PARTITION BY sum_revenue, n_rows, n_suppliers
-        |    ORDER BY priority ASC, part_key ASC) = 1 AS true_gran
-        |FROM parts""".stripMargin,
-    // Trained pair-matcher replay: the unregularized logistic MLE on a
-    // saturated one-binary-feature design fits the empirical cell rates
-    // exactly (sigmoid(w·x+b) = p̂(y|x)), so the trained scores are
-    // recoverable from the label rates without re-running LBFGS.
-    "q158_trained_match" ->
-      """WITH cand AS (
-        |  SELECT c_custkey, s_suppkey,
-        |    levenshtein(right(regexp_replace(c_name, '[^0-9]', '', 'g'), 4),
-        |                right(regexp_replace(s_name, '[^0-9]', '', 'g'), 4))
-        |      AS name_dist
-        |  FROM customer JOIN supplier ON c_nationkey = s_nationkey),
-        |feat AS (
-        |  SELECT *, CASE WHEN name_dist <= 1 THEN 1 ELSE 0 END AS x,
-        |    CASE WHEN name_dist <= 1
-        |      THEN CASE WHEN (c_custkey + s_suppkey) % 4 < 3 THEN 1.0 ELSE 0.0 END
-        |      ELSE CASE WHEN (c_custkey + s_suppkey) % 4 = 0 THEN 1.0 ELSE 0.0 END
-        |    END AS y
-        |  FROM cand WHERE name_dist <= 2),
-        |cells AS (
-        |  SELECT avg(CASE WHEN x = 0 THEN y END) AS p0,
-        |         avg(CASE WHEN x = 1 THEN y END) AS p1 FROM feat),
-        |scored AS (
-        |  SELECT f.c_custkey, f.s_suppkey, f.name_dist,
-        |    CASE WHEN f.x = 1 THEN c.p1 ELSE c.p0 END AS score
-        |  FROM feat f, cells c)
-        |SELECT c_custkey, s_suppkey, name_dist,
-        |  CAST(round(score * 1e6) AS BIGINT) AS score_micro FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |    ORDER BY score DESC, s_suppkey ASC) AS rk
-        |  FROM scored)
-        |WHERE rk = 1""".stripMargin,
-    // PQ ADC replay: portable-hash seed codebooks, rounded per-subspace
-    // argmin encode, and the engine's exact ADC algebra —
-    // |q|² + Σ|c|² − 2·Σ q_m·c_m with every Σ an explicit fixed-order
-    // chain (CASE pivot — a bare sum() would not pin float addition
-    // order), |q|² folded once per query and Σ|c|² once per corpus row.
-    "q159_pq_adc" -> pqAdcOracleSql(5),
-    // q206: the q159 ADC run widened to a 50-candidate shortlist (same
-    // replay, parameterized k), then the exact-cosine re-rank — FAISS's
-    // two-stage serving shape, fully oracle-replayable.
-    "q206_pq_rerank" -> {
-      """WITH run AS (
-        |@RUN@),
-        |norms AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(embedding,
-        |      e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)))) AS n
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT run.q_id, run.c_id,
-        |    round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.n * b.n),
-        |      4) AS cosine
-        |  FROM run
-        |  JOIN norms a ON a.vec_id = run.q_id
-        |  JOIN norms b ON b.vec_id = run.c_id)
-        |SELECT q_id, rk, c_id, cosine FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cosine DESC, c_id ASC) AS rk
-        |  FROM scored) WHERE rk <= 10""".stripMargin
-        .replace("@RUN@", pqAdcOracleSql(50))
-    },
-    // dbt macros part 2 replay: the exceed counts and functional-
-    // dependency violation counts recomputed directly.
-    "q160_dbt_checks2" ->
-      """WITH j AS (
-        |  SELECT l.l_tax, l.l_discount, l.l_quantity, l.l_orderkey,
-        |    o.o_totalprice, o.o_custkey, o.o_orderstatus
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |c1 AS (
-        |  SELECT 'lineitem:tax_discount_vs_qty_cents' AS check_name,
-        |    count(CASE WHEN l_tax IS NOT NULL AND l_discount IS NOT NULL
-        |      AND l_quantity IS NOT NULL
-        |      AND (l_tax + l_discount) > l_quantity * 0.01 THEN 1 END)
-        |      AS observed
-        |  FROM j),
-        |c2 AS (
-        |  SELECT 'lineitem:tax_discount_le_total' AS check_name,
-        |    count(CASE WHEN l_tax IS NOT NULL AND l_discount IS NOT NULL
-        |      AND o_totalprice IS NOT NULL
-        |      AND (l_tax + l_discount) > o_totalprice * 1.0 THEN 1 END)
-        |      AS observed
-        |  FROM j),
-        |c3 AS (
-        |  SELECT 'orders:order_to_cust' AS check_name,
-        |    count(CASE WHEN n > 1 THEN 1 END) AS observed
-        |  FROM (SELECT l_orderkey, count(DISTINCT o_custkey) AS n
-        |        FROM j WHERE l_orderkey IS NOT NULL GROUP BY 1)),
-        |c4 AS (
-        |  SELECT 'orders:cust_to_status' AS check_name,
-        |    count(CASE WHEN n > 1 THEN 1 END) AS observed
-        |  FROM (SELECT o_custkey, count(DISTINCT o_orderstatus) AS n
-        |        FROM j WHERE o_custkey IS NOT NULL GROUP BY 1))
-        |SELECT check_name, observed = 0 AS passed, observed FROM c1
-        |UNION ALL
-        |SELECT check_name, observed = 0 AS passed, observed FROM c2
-        |UNION ALL
-        |SELECT check_name, observed = 0 AS passed, observed FROM c3
-        |UNION ALL
-        |SELECT check_name, observed = 0 AS passed, observed FROM c4"""
-        .stripMargin,
-    // Mixture-select replay: salted hash order, 1024 high-bit buckets
-    // (u // 2^50), per-(lang, bucket) cutoffs, boundary-bucket window.
-    "q161_mixture_select" ->
-      """WITH d AS (
-        |  SELECT doc_id, lang,
-        |    CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
-        |      AS n_tokens,
-        |    ('0x' || substr(md5('mix_' || doc_id::VARCHAR), 1, 15))::BIGINT AS u
-        |  FROM documents),
-        |b AS (SELECT *, u // 1125899906842624 AS mix_bucket FROM d),
-        |budgets(lang, budget) AS (
-        |  VALUES ('en', 5000), ('zh', 2000), ('es', 2000), ('de', 1500)),
-        |tot AS (
-        |  SELECT lang, mix_bucket, sum(n_tokens) AS t FROM b GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT *, sum(t) OVER (PARTITION BY lang ORDER BY mix_bucket) - t
-        |    AS bef FROM tot),
-        |cut AS (
-        |  SELECT c.lang, min(c.mix_bucket) AS cutb
-        |  FROM cum c JOIN budgets g ON c.lang = g.lang
-        |  WHERE c.bef + c.t >= g.budget GROUP BY 1),
-        |cutv AS (
-        |  SELECT c.lang, cut.cutb, c.bef AS cut_before
-        |  FROM cum c JOIN cut ON c.lang = cut.lang AND c.mix_bucket = cut.cutb),
-        |j AS (
-        |  SELECT b.*, g.budget, cv.cutb, cv.cut_before
-        |  FROM b LEFT JOIN budgets g ON b.lang = g.lang
-        |  LEFT JOIN cutv cv ON b.lang = cv.lang),
-        |nonb AS (
-        |  SELECT doc_id, lang, n_tokens, mix_bucket,
-        |    CASE WHEN budget IS NULL THEN FALSE
-        |         WHEN cutb IS NULL THEN TRUE
-        |         ELSE mix_bucket < cutb END AS selected
-        |  FROM j WHERE cutb IS NULL OR mix_bucket <> cutb),
-        |bnd AS (
-        |  SELECT doc_id, lang, n_tokens, mix_bucket,
-        |    cut_before + coalesce(sum(n_tokens) OVER (
-        |      PARTITION BY lang ORDER BY u, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) < budget
-        |      AS selected
-        |  FROM j WHERE mix_bucket = cutb)
-        |SELECT * FROM nonb UNION ALL SELECT * FROM bnd""".stripMargin,
-    // IVF-PQ replay: q85's rounded cell routing + q159's codes/norms,
-    // ADC over candidates sharing a probed cell, fixed-order sums.
-    "q162_ivfpq" -> {
-      def chain(inner: String) = (0 until 16)
-        .map(mi => s"sum(CASE WHEN m = $mi THEN $inner END)")
-        .mkString("\n    + ")
-      s"""WITH ivfh AS (
-        |  SELECT vec_id, embedding,
-        |    ('0x' || substr(md5('ivf_' || vec_id::VARCHAR), 1, 15))::BIGINT AS h
-        |  FROM embeddings),
-        |cells AS (
-        |  SELECT embedding AS ce,
-        |    row_number() OVER (ORDER BY h, vec_id::VARCHAR) - 1 AS cell
-        |  FROM ivfh ORDER BY h, vec_id::VARCHAR LIMIT 16),
-        |route AS (
-        |  SELECT e.vec_id, c.cell,
-        |    round(
-        |      list_sum(list_transform(c.ce,
-        |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-        |      - 2 * list_sum(list_transform(list_zip(e.embedding, c.ce),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))), 4) AS d
-        |  FROM embeddings e, cells c),
-        |assigned AS (
-        |  SELECT vec_id AS c_id, cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY d, cell) AS rn FROM route) WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS q_id, cell FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY d, cell) AS rn FROM route WHERE vec_id < 20)
-        |  WHERE rn <= 4),
-        |cand AS (
-        |  SELECT q_id, c_id FROM probes JOIN assigned USING (cell)
-        |  WHERE q_id <> c_id),
-        |pqh AS (
-        |  SELECT vec_id, embedding,
-        |    ('0x' || substr(md5('pq_' || vec_id::VARCHAR), 1, 15))::BIGINT AS h
-        |  FROM embeddings),
-        |seeds AS (
-        |  SELECT embedding AS s_emb,
-        |    row_number() OVER (ORDER BY h, vec_id::VARCHAR) - 1 AS j
-        |  FROM pqh ORDER BY h, vec_id::VARCHAR LIMIT 64),
-        |cd AS (
-        |  SELECT e.vec_id, mm.m, s.j,
-        |    round(
-        |      list_sum(list_transform(s.s_emb[mm.m*4+1 : mm.m*4+4],
-        |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-        |      - 2 * list_sum(list_transform(
-        |          list_zip(e.embedding[mm.m*4+1 : mm.m*4+4],
-        |                   s.s_emb[mm.m*4+1 : mm.m*4+4]),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))), 4) AS d
-        |  FROM embeddings e, (SELECT unnest(range(16)) AS m) mm, seeds s),
-        |codes AS (
-        |  SELECT vec_id, m, j AS code FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
-        |      ORDER BY d, j) AS rn FROM cd) WHERE rn = 1),
-        |cw AS (
-        |  SELECT co.vec_id, co.m, s.s_emb
-        |  FROM codes co JOIN seeds s ON s.j = co.code),
-        |cn AS (
-        |  SELECT vec_id, ${chain("n2")} AS cn2sum FROM (
-        |    SELECT vec_id, m,
-        |      list_sum(list_transform(s_emb[m*4+1 : m*4+4],
-        |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS n2
-        |    FROM cw) GROUP BY vec_id),
-        |qn AS (
-        |  SELECT vec_id, ${chain("n2")} AS qn2tot FROM (
-        |    SELECT e.vec_id, mm.m,
-        |      list_sum(list_transform(e.embedding[mm.m*4+1 : mm.m*4+4],
-        |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS n2
-        |    FROM embeddings e, (SELECT unnest(range(16)) AS m) mm
-        |    WHERE e.vec_id < 20) GROUP BY vec_id),
-        |ds AS (
-        |  SELECT q_id, c_id, ${chain("dt")} AS dotsum FROM (
-        |    SELECT p.q_id, p.c_id, w.m,
-        |      list_sum(list_transform(
-        |        list_zip(q.embedding[w.m*4+1 : w.m*4+4],
-        |                 w.s_emb[w.m*4+1 : w.m*4+4]),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) AS dt
-        |    FROM cand p
-        |    JOIN embeddings q ON q.vec_id = p.q_id
-        |    JOIN cw w ON w.vec_id = p.c_id)
-        |  GROUP BY q_id, c_id),
-        |adc AS (
-        |  SELECT ds.q_id, ds.c_id,
-        |    round(qn.qn2tot + cn.cn2sum - 2 * ds.dotsum, 4) AS adc_dist
-        |  FROM ds
-        |  JOIN qn ON qn.vec_id = ds.q_id
-        |  JOIN cn ON cn.vec_id = ds.c_id)
-        |SELECT q_id, rk, c_id, adc_dist FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY adc_dist ASC, c_id ASC) AS rk FROM adc) WHERE rk <= 5"""
-        .stripMargin
-    },
-    // Hard negatives: the q42 brute cosine with a label-mismatch filter.
-    "q154_hard_negatives" ->
-      """WITH q AS (
-        |  SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb
-        |  FROM embeddings WHERE vec_id < 30),
-        |c AS (SELECT vec_id AS c_id, label AS c_label, embedding AS c_emb
-        |      FROM embeddings),
-        |scored AS (
-        |  SELECT q_id, q_label, c_id, c_label,
-        |    round(
-        |      list_sum(list_transform(list_zip(q_emb, c_emb),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(q_emb,
-        |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c_emb,
-        |            e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE))))), 4) AS cosine
-        |  FROM q, c
-        |  WHERE q_id <> c_id AND q_label IS DISTINCT FROM c_label)
-        |SELECT q_id, q_label, rk, c_id, c_label, cosine FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cosine DESC, c_id ASC) AS rk
-        |  FROM scored) WHERE rk <= 5""".stripMargin,
-    // Chi-square replay: margins cross-joined to the full grid, same
-    // double sequence over exact counts.
-    "q153_chi_square" ->
-      """WITH obs AS (
-        |  SELECT lang AS a, source AS b, CAST(count(*) AS BIGINT) AS observed
-        |  FROM documents GROUP BY 1, 2),
-        |ra AS (SELECT a, CAST(sum(observed) AS BIGINT) AS ra FROM obs GROUP BY 1),
-        |cb AS (SELECT b, CAST(sum(observed) AS BIGINT) AS cb FROM obs GROUP BY 1),
-        |grid AS (
-        |  SELECT ra.a, cb.b, ra.ra, cb.cb, coalesce(obs.observed, 0) AS observed
-        |  FROM ra CROSS JOIN cb LEFT JOIN obs USING (a, b)),
-        |t AS (
-        |  SELECT CAST(sum(observed) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT a) AS BIGINT) AS na,
-        |    CAST(count(DISTINCT b) AS BIGINT) AS nb
-        |  FROM grid),
-        |c AS (
-        |  SELECT a, b, observed, ra, cb, n, na, nb,
-        |    CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(n AS DOUBLE) AS exp,
-        |    (CAST(observed AS DOUBLE)
-        |      - CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(n AS DOUBLE))
-        |    * (CAST(observed AS DOUBLE)
-        |      - CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(n AS DOUBLE))
-        |    / (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(n AS DOUBLE))
-        |      AS ctr
-        |  FROM grid, t)
-        |SELECT a, b, observed, round(exp, 6) AS expected,
-        |  round(ctr, 6) AS contrib,
-        |  round(sum(ctr) OVER (), 6) AS chi2,
-        |  (na - 1) * (nb - 1) AS dof,
-        |  round(sqrt(sum(ctr) OVER ()
-        |    / (CAST(n AS DOUBLE) * CAST(least(na - 1, nb - 1) AS DOUBLE))), 6)
-        |    AS cramers_v,
-        |  n AS n_rows
-        |FROM c""".stripMargin,
-    // EWMA replay: per-series ordered fold via list_reduce (the q78
-    // flat-state pattern) in exact BIGINT micro-units — a float fold is
-    // not ulp-replayable across engines (FMA contraction), so the state
-    // is fixed-point by design: E' = (X + 3E + 2) // 4.
-    "q152_ewma_screen" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    list(struct_pack(ts := epoch_us(ts), id := event_id, v := value)
-        |      ORDER BY epoch_us(ts), event_id) AS arr
-        |  FROM events GROUP BY 1),
-        |e AS (
-        |  SELECT user_id, arr,
-        |    list_reduce(list_transform(arr,
-        |        s -> [CAST(round(CAST(s.v AS DOUBLE) * 1000000) AS BIGINT)]),
-        |      (acc, x) -> acc ||
-        |        [(1 * x[1] + 3 * acc[len(acc)] + 2) // 4]) AS ew
-        |  FROM g),
-        |x AS (
-        |  SELECT user_id, arr, ew,
-        |    list_transform(arr,
-        |      s -> CAST(round(CAST(s.v AS DOUBLE) * 1000000) AS BIGINT)) AS xs
-        |  FROM e)
-        |SELECT user_id, arr[t.i].ts AS ts_us, arr[t.i].id AS event_id,
-        |  arr[t.i].v AS value,
-        |  CAST(ew[t.i] AS DOUBLE) / 1000000 AS ewma,
-        |  CASE WHEN t.i > 1
-        |    THEN CAST(xs[t.i] - ew[t.i-1] AS DOUBLE) / 1000000
-        |  END AS deviation,
-        |  CASE WHEN t.i > 1 THEN abs(xs[t.i] - ew[t.i-1]) > 150000000
-        |       ELSE false END AS flag_ewma
-        |FROM x, unnest(range(1, len(arr) + 1)) t(i)""".stripMargin,
-    // OLS replay: HUGEINT moments per group, closed forms in the same
-    // double order; slope rescaled to original units by xs/ys = 1/100.
-    "q151_group_ols" ->
-      """WITH m AS (
-        |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
-        |    sum(CAST(round(CAST(l_quantity AS DOUBLE) * 1) AS HUGEINT)) AS sx,
-        |    sum(CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS HUGEINT)) AS sy,
-        |    sum(CAST(round(CAST(l_quantity AS DOUBLE) * 1) AS HUGEINT)
-        |      * CAST(round(CAST(l_quantity AS DOUBLE) * 1) AS HUGEINT)) AS sxx,
-        |    sum(CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS HUGEINT)
-        |      * CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS HUGEINT)) AS syy,
-        |    sum(CAST(round(CAST(l_quantity AS DOUBLE) * 1) AS HUGEINT)
-        |      * CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS HUGEINT)) AS sxy
-        |  FROM lineitem GROUP BY 1),
-        |f AS (
-        |  SELECT l_returnflag, n_rows,
-        |    CAST(n_rows*sxx - sx*sx AS DOUBLE) AS dx,
-        |    CAST(n_rows*syy - sy*sy AS DOUBLE) AS dy,
-        |    CAST(n_rows*sxy - sx*sy AS DOUBLE) AS num,
-        |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd
-        |  FROM m)
-        |SELECT l_returnflag, n_rows,
-        |  CASE WHEN dx > 0
-        |    THEN round((num / dx) * (CAST(1 AS DOUBLE) / CAST(100 AS DOUBLE)), 6)
-        |  END AS slope,
-        |  CASE WHEN dx > 0
-        |    THEN round(((syd - (num / dx) * sxd) / CAST(n_rows AS DOUBLE))
-        |      / 100, 6)
-        |  END AS intercept,
-        |  CASE WHEN dx > 0 AND dy > 0
-        |    THEN round(num * num / (dx * dy), 6)
-        |  END AS r2
-        |FROM f""".stripMargin,
-    // PSI replay: per-side counts, full-outer bucket join, add-one
-    // smoothing over the union bucket count, same double sequence.
-    "q150_psi_drift" ->
-      """WITH ref AS (
-        |  SELECT event_type AS bucket, CAST(count(*) AS BIGINT) AS ref_cnt
-        |  FROM events WHERE ts < TIMESTAMP '2024-01-16'
-        |  GROUP BY 1),
-        |cur AS (
-        |  SELECT event_type AS bucket, CAST(count(*) AS BIGINT) AS cur_cnt
-        |  FROM events WHERE ts >= TIMESTAMP '2024-01-16'
-        |    AND NOT (event_type = 'error' AND event_id % 2 = 0)
-        |  GROUP BY 1),
-        |j AS (
-        |  SELECT coalesce(ref.bucket, cur.bucket) AS bucket,
-        |    coalesce(ref_cnt, 0) AS ref_cnt, coalesce(cur_cnt, 0) AS cur_cnt
-        |  FROM ref FULL JOIN cur ON ref.bucket = cur.bucket),
-        |t AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS b,
-        |    CAST(sum(ref_cnt) AS BIGINT) AS rt,
-        |    CAST(sum(cur_cnt) AS BIGINT) AS ct
-        |  FROM j),
-        |c AS (
-        |  SELECT bucket, ref_cnt, cur_cnt,
-        |    CAST(ref_cnt + 1 AS DOUBLE) / CAST(rt + b AS DOUBLE) AS p,
-        |    CAST(cur_cnt + 1 AS DOUBLE) / CAST(ct + b AS DOUBLE) AS q
-        |  FROM j, t)
-        |SELECT bucket, ref_cnt, cur_cnt,
-        |  round(p, 6) AS ref_p, round(q, 6) AS cur_p,
-        |  round((p - q) * ln(p / q), 6) AS psi_contrib,
-        |  round(sum((p - q) * ln(p / q)) OVER (), 6) AS psi_total
-        |FROM c""".stripMargin,
-    // Correlation replay: HUGEINT exact moment sums (the decimal(38,0)
-    // twin), then the same fixed double sequence per pair.
-    "q149_corr_matrix" -> {
-      val cols = Seq("l_quantity" -> 1, "l_extendedprice" -> 100,
-        "l_discount" -> 100, "l_tax" -> 100)
-      val qz = cols.map { case (c, s) =>
-        c -> s"CAST(round(CAST($c AS DOUBLE) * $s) AS HUGEINT)"
-      }.toMap
-      val moments = Seq("CAST(count(*) AS HUGEINT) AS n") ++
-        cols.flatMap { case (c, _) =>
-          Seq(s"sum(${qz(c)}) AS s_$c", s"sum(${qz(c)} * ${qz(c)}) AS q_$c")
-        } ++
-        cols.map(_._1).combinations(2).toSeq.map { case Seq(a, b) =>
-          s"sum(${qz(a)} * ${qz(b)}) AS p_${a}_$b"
-        }
-      val pair = (a: String, b: String) =>
-        s"""SELECT '$a' AS col_a, '$b' AS col_b,
-           |  CAST(n AS BIGINT) AS n_rows,
-           |  CASE WHEN CAST(n*q_$a - s_$a*s_$a AS DOUBLE) > 0
-           |        AND CAST(n*q_$b - s_$b*s_$b AS DOUBLE) > 0
-           |       THEN round(CAST(n*p_${a}_$b - s_$a*s_$b AS DOUBLE)
-           |         / sqrt(CAST(n*q_$a - s_$a*s_$a AS DOUBLE)
-           |              * CAST(n*q_$b - s_$b*s_$b AS DOUBLE)), 6)
-           |  END AS corr FROM m""".stripMargin
-      ("WITH m AS (SELECT " + moments.mkString(", ") + " FROM lineitem)\n"
-        + cols.map(_._1).combinations(2).toSeq
-          .map { case Seq(a, b) => pair(a, b) }.mkString("\nUNION ALL\n"))
-    },
-    // PageRank replay: 3 unrolled integer-DIV iterations over the
-    // bipartite trade graph; 150000 = (1-d)*scale with d = 85/100.
-    "q148_pagerank" -> {
-      val it = (i: Int) => {
-        val j = i - 1
-        s"""c$i AS (
-           |  SELECT e.dst AS node, sum(r.rank // e.deg) AS inc
-           |  FROM e JOIN r$j r ON r.node = e.src GROUP BY 1),
-           |r$i AS (
-           |  SELECT n.node,
-           |    150000 + (85 * coalesce(c.inc, 0)) // 100 AS rank
-           |  FROM nodes n LEFT JOIN c$i c USING (node))""".stripMargin
-      }
-      ("""WITH pairs AS (
-        |  SELECT DISTINCT o_custkey AS cust, -l_suppkey AS supp
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e0 AS (
-        |  SELECT cust AS src, supp AS dst FROM pairs
-        |  UNION ALL SELECT supp, cust FROM pairs),
-        |deg AS (SELECT src, count(*) AS deg FROM e0 GROUP BY 1),
-        |e AS (SELECT e0.src, e0.dst, deg.deg FROM e0 JOIN deg USING (src)),
-        |nodes AS (SELECT DISTINCT src AS node FROM e0
-        |          UNION SELECT DISTINCT dst FROM e0),
-        |r0 AS (SELECT node, 1000000 AS rank FROM nodes),
-        |""".stripMargin
-        + (1 to 3).map(it).mkString(",\n") + "\n"
-        + """SELECT node, CAST(rank AS BIGINT) AS rank,
-        |  CASE WHEN node < 0 THEN 'supplier' ELSE 'customer' END
-        |    AS node_type
-        |FROM r3 ORDER BY rank DESC, node ASC LIMIT 20""".stripMargin)
-    },
-    // Profile replay: per column, null counts + the q115 KMV estimate
-    // formula + typed min/max, one UNION ALL branch per column.
-    "q147_profile" -> {
-      val kmv = (c: String) =>
-        s"""h_$c AS (
-           |  SELECT DISTINCT ('0x' || substr(md5($c::VARCHAR), 1, 15))::BIGINT AS hv
-           |  FROM orders WHERE $c IS NOT NULL),
-           |r_$c AS (SELECT hv, row_number() OVER (ORDER BY hv) AS rn FROM h_$c),
-           |s_$c AS (SELECT count(*) FILTER (WHERE rn <= 256) AS n,
-           |           max(hv) FILTER (WHERE rn = 256) AS kth FROM r_$c)""".stripMargin
-      val branch = (c: String, num: Boolean) =>
-        s"""SELECT '$c' AS "column",
-           |  (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_rows,
-           |  (SELECT CAST(count(*) - count($c) AS BIGINT) FROM orders) AS n_nulls,
-           |  (SELECT CASE WHEN n < 256 THEN CAST(n AS DOUBLE)
-           |     ELSE 255.0 * 1152921504606846976.0 / CAST(kth AS DOUBLE) END
-           |   FROM s_$c) AS n_distinct_est,
-           |  ${if (num) s"(SELECT CAST(min($c) AS DOUBLE) FROM orders)"
-              else "CAST(NULL AS DOUBLE)"} AS min_num,
-           |  ${if (num) s"(SELECT CAST(max($c) AS DOUBLE) FROM orders)"
-              else "CAST(NULL AS DOUBLE)"} AS max_num,
-           |  ${if (num) "CAST(NULL AS VARCHAR)"
-              else s"(SELECT CAST(min($c) AS VARCHAR) FROM orders)"} AS min_str,
-           |  ${if (num) "CAST(NULL AS VARCHAR)"
-              else s"(SELECT CAST(max($c) AS VARCHAR) FROM orders)"} AS max_str""".stripMargin
-      val cols = Seq("o_orderkey" -> true, "o_custkey" -> true,
-        "o_orderstatus" -> false, "o_orderdate" -> false,
-        "o_orderpriority" -> false)
-      ("WITH " + cols.map(c => kmv(c._1)).mkString(",\n") + "\n"
-        + cols.map(c => branch(c._1, c._2)).mkString("\nUNION ALL\n"))
-    },
-    // Funnel replay: per-user chained conditional minima (step i > step
-    // i-1, all within 72h of step 1), joined step by step.
-    "q146_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN ts END) AS step1_ts
-        |  FROM events GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id,
-        |    min(CASE WHEN event_type = 'click' AND e.ts > s1.step1_ts
-        |             AND e.ts <= s1.step1_ts + INTERVAL 72 HOUR
-        |        THEN e.ts END) AS step2_ts
-        |  FROM events e JOIN s1 USING (user_id) GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id,
-        |    min(CASE WHEN event_type = 'purchase' AND e.ts > s2.step2_ts
-        |             AND e.ts <= s1.step1_ts + INTERVAL 72 HOUR
-        |        THEN e.ts END) AS step3_ts
-        |  FROM events e JOIN s1 USING (user_id) JOIN s2 USING (user_id)
-        |  GROUP BY 1)
-        |SELECT user_id, step1_ts, step2_ts, step3_ts,
-        |  CAST((CASE WHEN step1_ts IS NULL THEN 0 ELSE 1 END)
-        |     + (CASE WHEN step2_ts IS NULL THEN 0 ELSE 1 END)
-        |     + (CASE WHEN step3_ts IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-        |    AS steps_completed
-        |FROM s1 JOIN s2 USING (user_id) JOIN s3 USING (user_id)""".stripMargin,
-    // CMS replay: the portable seeded hashes rebuild the same 4x32
-    // counter matrix; estimates are the row-wise minimum.
-    "q145_cms_estimate" ->
-      """WITH words AS (
-        |  SELECT tok AS word FROM (
-        |    SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |    FROM documents)
-        |  WHERE len(tok) > 0),
-        |consts AS (
-        |  SELECT i,
-        |    ('0x' || substr(md5('a_' || i::VARCHAR), 1, 15))::BIGINT
-        |      % 2147483646 + 1 AS a,
-        |    ('0x' || substr(md5('b_' || i::VARCHAR), 1, 15))::BIGINT
-        |      % 2147483647 AS b
-        |  FROM range(0, 4) t(i)),
-        |sk AS (
-        |  SELECT i AS row, ((a * x + b) % 2147483647) % 32 AS bucket,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM (SELECT word,
-        |          ('0x' || substr(md5('cms_' || word), 1, 15))::BIGINT
-        |            % 2147483647 AS x
-        |        FROM words) CROSS JOIN consts
-        |  GROUP BY 1, 2),
-        |top AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS exact_count FROM words
-        |  GROUP BY word ORDER BY exact_count DESC, word ASC LIMIT 15),
-        |tb AS (
-        |  SELECT t.word, t.exact_count, i AS row,
-        |    ((a * (('0x' || substr(md5('cms_' || t.word), 1, 15))::BIGINT
-        |      % 2147483647) + b) % 2147483647) % 32 AS bucket
-        |  FROM top t CROSS JOIN consts),
-        |est AS (
-        |  SELECT word, exact_count,
-        |    CAST(min(coalesce(s.cnt, 0)) AS BIGINT) AS cms_estimate
-        |  FROM tb LEFT JOIN sk s USING (row, bucket)
-        |  GROUP BY 1, 2)
-        |SELECT word, exact_count, cms_estimate,
-        |  cms_estimate > exact_count AS overestimated
-        |FROM est""".stripMargin,
-    // BPE encode: the q143 training chain re-derived, then the five
-    // merges replayed over every document's words (nested list_reduce
-    // folds), scalar outputs (counts + prefix).
-    "q144_bpe_encode" -> {
-      val step = (i: Int) => {
-        val j = i - 1
-        s"""p$i AS (
-           |  SELECT s[t.i] AS l, s[t.i+1] AS r, sum(f) AS c
-           |  FROM v$j, unnest(range(1, len(s))) t(i)
-           |  WHERE len(s) > 1
-           |  GROUP BY 1, 2),
-           |b$i AS (SELECT l, r, c FROM p$i ORDER BY c DESC, l ASC, r ASC LIMIT 1),
-           |v$i AS (
-           |  SELECT w, f,
-           |    list_reduce(list_transform(s, x -> [x]),
-           |      (acc, x) -> CASE WHEN acc[len(acc)] = b$i.l AND x[1] = b$i.r
-           |                       THEN acc[1:len(acc)-1] || [b$i.l || b$i.r]
-           |                       ELSE acc || x END) AS s
-           |  FROM v$j, b$i)""".stripMargin
-      }
-      val astep = (i: Int) => {
-        val j = i - 1
-        s"""e$i AS (
-           |  SELECT doc_id, list_transform(ws, s ->
-           |    list_reduce(list_transform(s, x -> [x]),
-           |      (acc, x) -> CASE WHEN acc[len(acc)] = b$i.l AND x[1] = b$i.r
-           |                       THEN acc[1:len(acc)-1] || [b$i.l || b$i.r]
-           |                       ELSE acc || x END)) AS ws
-           |  FROM e$j, b$i)""".stripMargin
-      }
-      ("""WITH toks AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents),
-        |v0 AS (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS f,
-        |    list_transform(range(1, len(w)+1), i -> w[i:i]) || ['</w>'] AS s
-        |  FROM toks WHERE len(w) > 0 GROUP BY w),
-        |""".stripMargin
-        + (1 to 5).map(step).mkString(",\n") + ",\n"
-        + """e0 AS (
-        |  SELECT doc_id, list_transform(
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |      w -> len(w) > 0),
-        |    w -> list_transform(range(1, len(w)+1), i -> w[i:i]) || ['</w>']) AS ws
-        |  FROM documents),
-        |""".stripMargin
-        + (1 to 5).map(astep).mkString(",\n") + "\n"
-        + """SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-        |  CAST(COALESCE(list_sum(list_transform(ws, s -> len(s))), 0)
-        |    AS BIGINT) AS n_subwords,
-        |  array_to_string(flatten(ws)[1:8], ' ') AS encoded_prefix
-        |FROM e5""".stripMargin)
-    },
-    // Time travel: the q117 history filtered to intervals containing the
-    // instant (from <= at < to, NULL to = current).
-    "q142_snapshot_at" ->
-      """WITH chg AS (
-        |  SELECT user_id, event_id, ts, event_type FROM (
-        |    SELECT user_id, event_id, ts, event_type,
-        |      lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-        |      row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |    FROM events)
-        |  WHERE rn = 1 OR event_type IS DISTINCT FROM prev_type),
-        |hist AS (
-        |  SELECT user_id, event_id, event_type,
-        |    ts AS effective_from,
-        |    lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS effective_to,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS INT) AS version
-        |  FROM chg)
-        |SELECT * FROM hist
-        |WHERE effective_from <= TIMESTAMP '2024-01-15 00:00:00'
-        |  AND (effective_to IS NULL
-        |       OR TIMESTAMP '2024-01-15 00:00:00' < effective_to)""".stripMargin,
-    "q107_stratified_sample" ->
-      """WITH b AS (
-        |  SELECT doc_id, lang,
-        |    ('0x' || substr(md5('strat_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |      % 100 AS split_bucket
-        |  FROM documents)
-        |SELECT doc_id, lang, split_bucket FROM b
-        |WHERE split_bucket <
-        |  CASE lang WHEN 'en' THEN 40 WHEN 'zh' THEN 90 ELSE 70 END""".stripMargin,
-    "q106_interval_join" ->
-      """SELECT e.event_id, e.user_id, e.ts, a.event_id AS anchor_id,
-        |  a.ts AS start_ts, a.ts + INTERVAL 4 HOUR AS end_ts
-        |FROM events e JOIN events a
-        |  ON e.user_id = a.user_id
-        | AND a.event_id % 37 = 0
-        | AND e.ts BETWEEN a.ts AND a.ts + INTERVAL 4 HOUR""".stripMargin,
-    "q105_asof_join" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS user_id, o_orderdate AS ots,
-        |    max(o_orderkey) AS last_order_id,
-        |    sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS day_total
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, e.ts, r.ots AS order_ts,
-        |  r.last_order_id, r.day_total
-        |FROM events e ASOF LEFT JOIN r
-        |  ON e.user_id = r.user_id AND e.ts >= r.ots""".stripMargin,
-    "q104_ngram_vocab" ->
-      """WITH words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, wl[i] || ' ' || wl[i+1] AS shingle
-        |  FROM words, unnest(range(1, len(wl))) t(i)
-        |  WHERE len(wl) >= 2)
-        |SELECT shingle, count(*) AS doc_freq FROM sh
-        |GROUP BY shingle
-        |ORDER BY doc_freq DESC, shingle ASC
-        |LIMIT 200""".stripMargin,
-    "q103_split_assign" ->
-      """WITH b AS (
-        |  SELECT doc_id, lang,
-        |    ('0x' || substr(md5('split_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |      % 100 AS split_bucket
-        |  FROM documents)
-        |SELECT doc_id, lang, split_bucket,
-        |  CASE WHEN split_bucket < 80 THEN 'train'
-        |       WHEN split_bucket < 90 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM b""".stripMargin,
-    // Sequential two-pass fixpoint replayed as a per-series left fold
-    // (list_reduce). DuckDB 1.0's list_reduce drops struct accumulators
-    // across steps, so the fold state is encoded positionally in a flat
-    // DOUBLE[]: slot 1 = last surviving value, slots 2.. = 0/1 flags.
-    "q78_single_delta" ->
-      """WITH numbered AS (
-        |  SELECT user_id, epoch_us(ts)//1000000 AS ts, value,
-        |         value - lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS d
-        |  FROM events
-        |), grp AS (
-        |  SELECT user_id,
-        |         list(struct_pack(ts := ts, v := value) ORDER BY ts) AS arr,
-        |         5.0 * (quantile_cont(d, 0.75) FILTER (WHERE d IS NOT NULL)
-        |              - quantile_cont(d, 0.25) FILTER (WHERE d IS NOT NULL)) AS thr
-        |  FROM numbered GROUP BY user_id
-        |), fwd_pass AS (
-        |  SELECT user_id, arr, thr,
-        |    list_reduce(
-        |      list_prepend(CAST([NULL] AS DOUBLE[]),
-        |                   list_transform(arr, e -> [e.v])),
-        |      (a, x) -> list_concat(
-        |        [CASE WHEN x[1] IS NULL THEN a[1]
-        |              WHEN thr IS NOT NULL AND a[1] IS NOT NULL
-        |                   AND abs(x[1] - a[1]) > thr THEN a[1]
-        |              ELSE x[1] END],
-        |        list_concat(a[2:],
-        |          [CASE WHEN x[1] IS NOT NULL AND thr IS NOT NULL
-        |                     AND a[1] IS NOT NULL AND abs(x[1] - a[1]) > thr
-        |                THEN 1.0 ELSE 0.0 END])))[2:] AS fwd
-        |  FROM grp
-        |), bwd_pass AS (
-        |  SELECT user_id, arr, fwd,
-        |    list_reverse(list_reduce(
-        |      list_prepend(CAST([NULL] AS DOUBLE[]),
-        |        list_reverse(list_transform(range(1, len(arr) + 1),
-        |                                    i -> [arr[i].v, fwd[i]]))),
-        |      (a, x) -> list_concat(
-        |        [CASE WHEN x[1] IS NULL OR x[2] = 1.0 THEN a[1]
-        |              WHEN thr IS NOT NULL AND a[1] IS NOT NULL
-        |                   AND abs(x[1] - a[1]) > thr THEN a[1]
-        |              ELSE x[1] END],
-        |        list_concat(a[2:],
-        |          [CASE WHEN x[1] IS NOT NULL AND x[2] = 0.0 AND thr IS NOT NULL
-        |                     AND a[1] IS NOT NULL AND abs(x[1] - a[1]) > thr
-        |                THEN 1.0 ELSE 0.0 END])))[2:]) AS bwd
-        |  FROM fwd_pass
-        |)
-        |SELECT user_id, u.e.ts AS ts, u.e.v AS value,
-        |       (u.e.f1 = 1.0 OR u.e.f2 = 1.0) AS flag_single_delta
-        |FROM bwd_pass,
-        |  UNNEST(list_transform(range(1, len(arr) + 1),
-        |    i -> struct_pack(ts := arr[i].ts, v := arr[i].v,
-        |                     f1 := fwd[i], f2 := bwd[i]))) AS u(e)""".stripMargin,
-    // Company-name cleaner replay: the SAME rule constants rendered as a
-    // nested regexp_replace chain (CompanyNames.sqlChain) over the same
-    // deterministically constructed names.
-    "q163_company_clean" -> {
-      import graft.functions.CompanyNames
-      val stems = q163Stems.map(s => "'" + s + "'").mkString(", ")
-      val sufs = q163Suffixes.map(s => "'" + s + "'").mkString(", ")
-      s"""WITH raw AS (
-        |  SELECT s_suppkey,
-        |    ([$stems])[CAST(s_suppkey % ${q163Stems.size} AS INT) + 1]
-        |      || ' ' ||
-        |    ([$sufs])[CAST(s_suppkey % ${q163Suffixes.size} AS INT) + 1]
-        |      AS raw_name
-        |  FROM supplier)
-        |SELECT s_suppkey, raw_name,
-        |  ${CompanyNames.sqlChain("raw_name")} AS canon_name,
-        |  ${CompanyNames.sqlChain("raw_name", rules = Nil,
-               legalTerms = CompanyNames.Remove)} AS bare_name
-        |FROM raw ORDER BY s_suppkey""".stripMargin
-    },
-    // Harvest last-reported rescue replay: the same modal vote, plus the
-    // last-by-date fallback for op_year with rate pinned to 1.0 on rescue.
-    // The two parity halves union back to all of orders, so the oracle
-    // votes over orders directly.
-    "q164_harvest_lastdate" ->
-      """WITH cand AS (
-        |  SELECT o_custkey, year(o_orderdate) AS op_year, o_orderdate,
-        |    o_orderpriority
-        |  FROM orders),
-        |yr_counts AS (
-        |  SELECT o_custkey, op_year, count(*) AS vc FROM cand
-        |  WHERE op_year IS NOT NULL GROUP BY 1, 2),
-        |yr_rank AS (
-        |  SELECT *, sum(vc) OVER (PARTITION BY o_custkey) AS tc,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY vc DESC, op_year ASC) AS rk
-        |  FROM yr_counts),
-        |yr_modal AS (
-        |  SELECT o_custkey,
-        |    CASE WHEN CAST(vc AS DOUBLE)/tc > 0.7e0 THEN op_year END AS op_year,
-        |    CAST(vc AS DOUBLE)/tc AS rate
-        |  FROM yr_rank WHERE rk = 1),
-        |yr_last AS (
-        |  SELECT o_custkey, op_year AS lastv FROM (
-        |    SELECT o_custkey, op_year,
-        |      row_number() OVER (PARTITION BY o_custkey
-        |        ORDER BY o_orderdate DESC, op_year DESC) AS rn
-        |    FROM cand WHERE op_year IS NOT NULL) WHERE rn = 1),
-        |yr AS (
-        |  SELECT m.o_custkey,
-        |    coalesce(m.op_year, l.lastv) AS op_year,
-        |    CASE WHEN m.op_year IS NULL AND l.lastv IS NOT NULL THEN 1.0e0
-        |         ELSE m.rate END AS op_year_rate
-        |  FROM yr_modal m LEFT JOIN yr_last l USING (o_custkey)),
-        |pr_counts AS (
-        |  SELECT o_custkey, o_orderpriority, count(*) AS vc FROM cand
-        |  WHERE o_orderpriority IS NOT NULL GROUP BY 1, 2),
-        |pr_rank AS (
-        |  SELECT *, sum(vc) OVER (PARTITION BY o_custkey) AS tc,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY vc DESC, o_orderpriority ASC) AS rk
-        |  FROM pr_counts),
-        |pr AS (
-        |  SELECT o_custkey,
-        |    CASE WHEN CAST(vc AS DOUBLE)/tc > 0.7e0
-        |         THEN o_orderpriority END AS o_orderpriority,
-        |    CAST(vc AS DOUBLE)/tc AS o_orderpriority_rate
-        |  FROM pr_rank WHERE rk = 1)
-        |SELECT coalesce(y.o_custkey, p.o_custkey) AS o_custkey,
-        |  y.op_year, y.op_year_rate, p.o_orderpriority, p.o_orderpriority_rate
-        |FROM yr y FULL OUTER JOIN pr p ON y.o_custkey = p.o_custkey
-        |ORDER BY o_custkey""".stripMargin,
-    // Phonetic-blocked linkage replay: DuckDB has no soundex, so the
-    // oracle recomputes the code with the Phonetics.soundexSql fold over
-    // the same constructed names, then the same jw score + top-1 window.
-    "q165_phonetic_block" -> {
-      import graft.functions.Phonetics
-      val cn = q165CustNames.map(s => "'" + s + "'").mkString(", ")
-      val sn = q165SuppNames.map(s => "'" + s + "'").mkString(", ")
-      s"""WITH c AS (
-        |  SELECT c_custkey, c_nationkey AS nkey,
-        |    ([$cn])[CAST(c_custkey % 12 AS INT) + 1] AS c_name2
-        |  FROM customer),
-        |sup AS (
-        |  SELECT s_suppkey, s_nationkey AS nkey,
-        |    ([$sn])[CAST(s_suppkey % 12 AS INT) + 1] AS s_name2
-        |  FROM supplier),
-        |cb AS (
-        |  SELECT *, substr(${Phonetics.soundexSql("c_name2")}, 1, 3)
-        |    AS c_sx3 FROM c),
-        |sb AS (
-        |  SELECT *, substr(${Phonetics.soundexSql("s_name2")}, 1, 3)
-        |    AS s_sx3 FROM sup),
-        |cand AS (
-        |  SELECT c_custkey, s_suppkey, c_sx3 AS block_key,
-        |    jaro_winkler_similarity(c_name2, s_name2) AS sim
-        |  FROM cb JOIN sb ON cb.c_sx3 = sb.s_sx3 AND cb.nkey = sb.nkey
-        |  WHERE jaro_winkler_similarity(c_name2, s_name2) >= 0.5)
-        |SELECT c_custkey, s_suppkey, block_key,
-        |  round(sim, 6) AS name_sim
-        |FROM (SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |        ORDER BY sim DESC, s_suppkey ASC) AS rk FROM cand)
-        |WHERE rk = 1""".stripMargin
-    },
-    // Trained-NB quality filter replay: the oracle re-trains the same
-    // closed-form log-odds weights from the same seed and scores the same
-    // held-out corpus — integer-nano logs on both sides (q126 discipline).
-    "q166_nb_quality" ->
-      """WITH seed AS (
-        |  SELECT doc_id, (lang = 'en') AS pos, string_split(text, ' ') AS ws
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |tok AS (SELECT pos, unnest(ws) AS token FROM seed),
-        |cnt AS (SELECT token,
-        |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS c_pos,
-        |    CAST(sum(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS c_neg
-        |  FROM tok GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c_pos) AS BIGINT) AS n_pos,
-        |    CAST(sum(c_neg) AS BIGINT) AS n_neg,
-        |    CAST(count(*) AS BIGINT) AS v FROM cnt),
-        |w AS (SELECT token,
-        |    CAST(round(ln((c_pos + 0.5) / (n_pos + 0.5 * v)) * 1e9) AS BIGINT)
-        |  - CAST(round(ln((c_neg + 0.5) / (n_neg + 0.5 * v)) * 1e9) AS BIGINT)
-        |    AS w_nano
-        |  FROM cnt, tot),
-        |pr AS (SELECT
-        |    CAST(round(ln(CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS DOUBLE)
-        |      / sum(CASE WHEN pos THEN 0 ELSE 1 END)) * 1e9) AS BIGINT)
-        |    AS prior_nano
-        |  FROM seed),
-        |corp AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |sc AS (SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-        |    CAST(sum(coalesce(w.w_nano, 0)) AS BIGINT) AS s
-        |  FROM corp c LEFT JOIN w USING (token) GROUP BY 1)
-        |SELECT doc_id, n_toks, CAST(s + prior_nano AS BIGINT) AS score_nano,
-        |  (s + prior_nano) > 0 AS keep
-        |FROM sc, pr""".stripMargin,
-    // DSIR replay: same portable bucket hash, same nano log-ratios over
-    // the range(m) spine, same ES keys as the q139 twin.
-    "q167_dsir_select" ->
-      """WITH ws AS (
-        |  SELECT doc_id, source, string_split(text, ' ') AS wl
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, source, unnest(wl) AS gram FROM ws
-        |  UNION ALL
-        |  SELECT doc_id, source, unnest(list_transform(range(1, len(wl)),
-        |    i -> wl[i] || ' ' || wl[i+1])) AS gram FROM ws),
-        |b AS (SELECT doc_id, source,
-        |    ('0x' || substr(md5('167_' || gram), 1, 15))::BIGINT % 1024
-        |      AS bucket
-        |  FROM g),
-        |ct AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c_t FROM b
-        |  WHERE source IN ('src0', 'src1', 'src2') GROUP BY 1),
-        |cq AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c_q FROM b
-        |  GROUP BY 1),
-        |spine AS (SELECT unnest(range(0, 1024)) AS bucket),
-        |j AS (SELECT spine.bucket, coalesce(c_t, 0) AS c_t,
-        |    coalesce(c_q, 0) AS c_q
-        |  FROM spine LEFT JOIN ct USING (bucket)
-        |  LEFT JOIN cq USING (bucket)),
-        |tot AS (SELECT CAST(sum(c_t) AS BIGINT) AS n_t,
-        |    CAST(sum(c_q) AS BIGINT) AS n_q FROM j),
-        |r AS (SELECT bucket,
-        |    CAST(round(ln((c_t + 0.5) / (n_t + 0.5 * 1024)) * 1e9) AS BIGINT)
-        |  - CAST(round(ln((c_q + 0.5) / (n_q + 0.5 * 1024)) * 1e9) AS BIGINT)
-        |    AS ratio_nano
-        |  FROM j, tot),
-        |lw AS (SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(sum(ratio_nano) AS BIGINT) AS logw_nano
-        |  FROM b JOIN r USING (bucket) GROUP BY 1),
-        |base AS (SELECT lw.doc_id, d.lang, n_grams, logw_nano,
-        |    exp(CAST(logw_nano AS DOUBLE) / 1e9) AS w,
-        |    ((('0x' || substr(md5('dsir_' || lw.doc_id::VARCHAR), 1, 15))
-        |        ::BIGINT % 4503599627370496) + 0.5) / 4503599627370496.0 AS u
-        |  FROM lw JOIN documents d ON d.doc_id = lw.doc_id),
-        |k AS (SELECT doc_id, lang, n_grams, logw_nano,
-        |    round(ln(u) / w, 8) AS sample_key FROM base)
-        |SELECT doc_id, lang, n_grams, logw_nano, sample_key,
-        |  CAST(rk AS INTEGER) AS sample_rank
-        |FROM (SELECT *, row_number() OVER (PARTITION BY lang
-        |    ORDER BY sample_key DESC, doc_id ASC) AS rk FROM k)
-        |WHERE rk <= 25""".stripMargin,
-    "q168_fellegi_sunter" -> (FsSql.weights + ",\n" + FsSql.scored + """
-        |SELECT r_id, l_id, lvl_name, lvl_seg, lvl_bal, weight_nano,
-        |  weight_nano >= (SELECT CAST(round(ln(0.9 / (1.0 - 0.9)) / ln(2.0) * 1e9)
-        |    AS BIGINT)) AS accepted
-        |FROM (SELECT *, row_number() OVER (PARTITION BY r_id
-        |    ORDER BY weight_nano DESC, l_id ASC) AS rk FROM sc)
-        |WHERE rk = 1""".stripMargin),
-    "q169_fs_em_train" -> (Seq(FsSql.fixture, FsSql.up,
-      FsSql.levels("ulev AS (SELECT", "up"),
-      """uobs AS (
-        |  SELECT 'name' AS comparison, lvl_name AS level FROM ulev
-        |  UNION ALL SELECT 'seg', lvl_seg FROM ulev
-        |  UNION ALL SELECT 'bal', lvl_bal FROM ulev WHERE lvl_bal IS NOT NULL)""".stripMargin,
-      FsSql.spine,
-      """ucnt AS (SELECT comparison, level, CAST(count(*) AS BIGINT) AS c_u
-        |  FROM uobs GROUP BY 1, 2),
-        |uj AS MATERIALIZED (SELECT spine.comparison, spine.level, spine.n_levels,
-        |    coalesce(c_u, 0) AS c_u,
-        |    CAST(sum(coalesce(c_u, 0)) OVER (PARTITION BY spine.comparison) AS BIGINT) AS n_u
-        |  FROM spine LEFT JOIN ucnt
-        |    ON spine.comparison = ucnt.comparison AND spine.level = ucnt.level)""".stripMargin,
-      FsSql.levels("ep AS MATERIALIZED (SELECT *,",
-        """(SELECT l.*, rr.* FROM l JOIN rr
-        |    ON l_nkey = r_nkey AND substr(l_last4, 1, 2) = substr(r_last4, 1, 2))""".stripMargin),
-      """w1 AS MATERIALIZED (SELECT comparison, level, n_levels, c_u, n_u,
-        |    CAST(round((ln(1.0 / n_levels) - ln((c_u + 0.5) / (n_u + 0.5 * n_levels)))
-        |      / ln(2.0) * 1e9) AS BIGINT) AS w_nano
-        |  FROM uj),
-        |lr1 AS MATERIALIZED (SELECT CAST(round(ln(0.01 / (1.0 - 0.01)) / ln(2.0) * 1e9) AS BIGINT) AS lr)""".stripMargin,
-      FsSql.emRound(1), FsSql.emRound(2), FsSql.emRound(3)).mkString(",\n") +
-      """
-        |SELECT m3.comparison, m3.level, m3.c_u, m3.n_u,
-        |  CAST(round(m3.m * 1e9) AS BIGINT) AS m_nano,
-        |  w4.w_nano,
-        |  (SELECT CAST(round(sp / n) AS BIGINT) FROM t3) AS lam_micro
-        |FROM m3 JOIN w4 ON m3.comparison = w4.comparison AND m3.level = w4.level
-        |ORDER BY m3.comparison, m3.level""".stripMargin),
-    "q170_fs_tf_adjust" -> (Seq(FsSql.weights,
-      """tf AS (SELECT value,
-        |    CAST(round((ln(((SELECT c_u FROM j WHERE comparison = 'seg' AND level = 2) + 0.5)
-        |              / ((SELECT n_u FROM j WHERE comparison = 'seg' AND level = 2) + 0.5 * 2))
-        |          - ln(c / n)) / ln(2.0) * 1e9) AS BIGINT) AS tf_adj_nano
-        |  FROM (SELECT value, CAST(count(*) AS BIGINT) AS c,
-        |      CAST(sum(count(*)) OVER () AS BIGINT) AS n
-        |    FROM (SELECT l_seg AS value FROM l UNION ALL SELECT r_seg FROM rr)
-        |    GROUP BY value))""".stripMargin,
-      FsSql.scored).mkString(",\n") + """,
-        |adj AS (SELECT sc.*,
-        |    CASE WHEN lvl_seg = 2 THEN tf.tf_adj_nano ELSE 0 END AS tf_adj_nano,
-        |    weight_nano + CASE WHEN lvl_seg = 2 THEN tf.tf_adj_nano ELSE 0 END
-        |      AS weight_adj_nano
-        |  FROM sc JOIN tf ON sc.l_seg = tf.value)
-        |SELECT r_id, l_id, lvl_seg, weight_nano, tf_adj_nano, weight_adj_nano,
-        |  weight_adj_nano >= (SELECT CAST(round(ln(0.9 / (1.0 - 0.9)) / ln(2.0) * 1e9)
-        |    AS BIGINT)) AS accepted
-        |FROM (SELECT *, row_number() OVER (PARTITION BY r_id
-        |    ORDER BY weight_adj_nano DESC, l_id ASC) AS rk FROM adj)
-        |WHERE rk = 1""".stripMargin),
-    "q171_unigram_lm" -> (UnigramSql.trained +
-      "\nSELECT piece, cnt, score_nano FROM vocab2 ORDER BY piece"),
-    "q172_unigram_encode" -> (UnigramSql.encoded + """
-        |SELECT word, cnt, CAST(len(p0) AS INT) AS n_pieces,
-        |  array_to_string(p0, '+') AS seg, s0 AS score_nano
-        |FROM dp3 WHERE i = n ORDER BY word""".stripMargin),
-    "q173_unigram_prune" -> (Seq(UnigramSql.trained,
-      """vocabp AS MATERIALIZED (
-        |  SELECT piece, cnt,
-        |    CAST(round(ln((cnt + 0.5) / (sum(cnt) OVER () + 0.5 * count(*) OVER ()))
-        |      * 1e9) AS BIGINT) AS score_nano
-        |  FROM (
-        |    SELECT piece, cnt FROM vocab2 WHERE len(piece) = 1
-        |    UNION ALL
-        |    SELECT piece, cnt FROM (SELECT piece, cnt FROM vocab2
-        |      WHERE len(piece) > 1 ORDER BY cnt DESC, piece ASC LIMIT 12)))""".stripMargin,
-      UnigramSql.emRound(3, "vocabp")).mkString(",\n") +
-      "\nSELECT piece, cnt, score_nano FROM vocab3 ORDER BY piece"),
-    // q175: stage-7 accounting replay — the q172 recursive-CTE encode
-    // oracle extended with the per-doc piece-count join (no new DP
-    // instances; sums CAST to BIGINT so no HUGEINT reaches the hash).
-    "q175_doc_pieces" -> (UnigramSql.encoded + "," + """
-        |wp AS MATERIALIZED (
-        |  SELECT word, CAST(len(p0) AS BIGINT) AS np FROM dp3 WHERE i = n),
-        |docw AS (
-        |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
-        |  FROM documents)
-        |SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(np) AS BIGINT) AS n_pieces
-        |FROM docw JOIN wp USING (word) WHERE len(word) >= 1
-        |GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin),
-    "q191_lm_quality" -> (UnigramSql.encoded + "," + """
-        |wp AS MATERIALIZED (
-        |  SELECT word, CAST(len(p0) AS BIGINT) AS np, s0 AS ws
-        |  FROM dp3 WHERE i = n),
-        |docw AS (
-        |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
-        |  FROM documents),
-        |base AS (
-        |  SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(sum(np) AS BIGINT) AS n_pieces,
-        |    CAST(sum(ws) AS BIGINT) AS score_nano
-        |  FROM docw JOIN wp USING (word) WHERE len(word) >= 1
-        |  GROUP BY doc_id, lang)
-        |SELECT doc_id, lang, n_tokens, n_pieces, score_nano,
-        |  CAST(round(-(CAST(score_nano AS DOUBLE)) / n_pieces) AS BIGINT)
-        |    AS nll_per_piece_nano,
-        |  CAST(round(-(CAST(score_nano AS DOUBLE)) / n_pieces) AS BIGINT)
-        |    <= 3500000000 AS kept
-        |FROM base ORDER BY doc_id""".stripMargin),
-    // q192: recall@10 of the portable LSH vs brute force — both inputs
-    // are the SAME parameterized SQL the q42/q43 graded lanes use, at
-    // k = 10 (nested WITH inside each CTE keeps their internal names
-    // from colliding); the metric is a left join + one aggregate.
-    "q192_ann_recall" ->
-      s"""WITH exact10 AS (
-         |${annExactTopkSql(10)}
-         |),
-         |approx10 AS (
-         |${annLshTopkSql(10)}
-         |),
-         |j AS (
-         |  SELECT e.q_id, e.c_id,
-         |    CASE WHEN a.c_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |  FROM exact10 e LEFT JOIN approx10 a
-         |    ON e.q_id = a.q_id AND e.c_id = a.c_id)
-         |SELECT count(DISTINCT q_id) AS n_queries,
-         |  count(*) AS n_exact,
-         |  CAST(sum(hit) AS BIGINT) AS n_hit,
-         |  CAST(sum(hit) AS DOUBLE) / count(*) AS recall
-         |FROM j""".stripMargin,
-    // q176: the q175 accounting packed into 512-PIECE context windows
-    // (window-sum replay; every sum/offset CAST to BIGINT so no
-    // HUGEINT reaches the hash).
-    "q176_pack_by_pieces" -> (UnigramSql.encoded + "," + """
-        |wp AS MATERIALIZED (
-        |  SELECT word, CAST(len(p0) AS BIGINT) AS np FROM dp3 WHERE i = n),
-        |docw AS (
-        |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
-        |  FROM documents),
-        |acct AS MATERIALIZED (
-        |  SELECT doc_id, CAST(sum(np) AS BIGINT) AS n_pieces
-        |  FROM docw JOIN wp USING (word) WHERE len(word) >= 1
-        |  GROUP BY doc_id),
-        |off AS (
-        |  SELECT doc_id, n_pieces, CAST(doc_id % 8 AS BIGINT) AS shard,
-        |    CAST(sum(n_pieces) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS end_off
-        |  FROM acct)
-        |SELECT doc_id, n_pieces, shard,
-        |  CAST(floor((end_off - n_pieces) / 512.0) AS BIGINT) AS chunk_id,
-        |  CAST((end_off - n_pieces) % 512 AS BIGINT) AS chunk_pos,
-        |  CASE WHEN n_pieces = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE CAST(floor((end_off - 1) / 512.0)
-        |      - floor((end_off - n_pieces) / 512.0) + 1 AS BIGINT) END AS n_chunks
-        |FROM off ORDER BY doc_id""".stripMargin),
-    // Metaphone replay: per-word codes from the single-level VARCHAR-
-    // accumulator fold in Phonetics.metaphoneWordSql (the q163 fold
-    // discipline — no struct accumulators), computed once over the 24
-    // DISTINCT names and joined back, then the same block-join / best-
-    // match shape as q165's oracle.
-    "q174_metaphone_block" -> {
-      import graft.functions.Phonetics
-      val cn = q165CustNames.map(s => "'" + s + "'").mkString(", ")
-      val sn = q165SuppNames.map(s => "'" + s + "'").mkString(", ")
-      s"""WITH c AS (
-        |  SELECT c_custkey, c_nationkey AS nkey,
-        |    ([$cn])[CAST(c_custkey % 12 AS INT) + 1] AS c_name2
-        |  FROM customer),
-        |sup AS (
-        |  SELECT s_suppkey, s_nationkey AS nkey,
-        |    ([$sn])[CAST(s_suppkey % 12 AS INT) + 1] AS s_name2
-        |  FROM supplier),
-        |nm AS (
-        |  SELECT DISTINCT c_name2 AS name FROM c
-        |  UNION SELECT DISTINCT s_name2 FROM sup),
-        |wrd AS (
-        |  SELECT name, g.wi,
-        |    lower(string_split_regex(name, '[^A-Za-z]+')[wi]) AS w
-        |  FROM nm, unnest(generate_series(1,
-        |    len(string_split_regex(name, '[^A-Za-z]+')))) AS g(wi)),
-        |wcode AS (
-        |  SELECT name, wi, ${Phonetics.metaphoneWordSql("w")} AS code
-        |  FROM wrd WHERE w <> ''),
-        |mcode AS (SELECT name, string_agg(code, ' ' ORDER BY wi) AS mph
-        |  FROM wcode GROUP BY name),
-        |cb AS (SELECT c.*, m.mph AS c_mphone, substr(m.mph, 1, 3) AS c_mp3
-        |  FROM c JOIN mcode m ON m.name = c.c_name2),
-        |sb AS (SELECT sup.*, substr(m.mph, 1, 3) AS s_mp3
-        |  FROM sup JOIN mcode m ON m.name = sup.s_name2),
-        |cand AS (
-        |  SELECT c_custkey, s_suppkey, c_mp3 AS block_key, c_mphone,
-        |    jaro_winkler_similarity(c_name2, s_name2) AS sim
-        |  FROM cb JOIN sb ON cb.c_mp3 = sb.s_mp3 AND cb.nkey = sb.nkey
-        |  WHERE jaro_winkler_similarity(c_name2, s_name2) >= 0.5)
-        |SELECT c_custkey, s_suppkey, block_key, c_mphone,
-        |  round(sim, 6) AS name_sim
-        |FROM (SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |        ORDER BY sim DESC, s_suppkey ASC) AS rk FROM cand)
-        |WHERE rk = 1""".stripMargin
-    },
-    "q177_union_blocks" -> {
-      import graft.functions.Phonetics
-      val cn = q165CustNames.map(s => "'" + s + "'").mkString(", ")
-      val sn = q165SuppNames.map(s => "'" + s + "'").mkString(", ")
-      val fu = q177Fuels.map(s => "'" + s + "'").mkString(", ")
-      s"""WITH c AS (
-        |  SELECT c_custkey, c_nationkey AS c_nkey,
-        |    ([$cn])[CAST(c_custkey % 12 AS INT) + 1] AS c_name2,
-        |    ([$fu])[CAST(c_custkey % 5 AS INT) + 1] AS c_ftc
-        |  FROM customer),
-        |sup AS (
-        |  SELECT s_suppkey, s_nationkey AS s_nkey,
-        |    ([$sn])[CAST(s_suppkey % 12 AS INT) + 1] AS s_name2,
-        |    ([$fu])[CAST(s_suppkey % 5 AS INT) + 1] AS s_ftc
-        |  FROM supplier),
-        |nm AS (
-        |  SELECT DISTINCT c_name2 AS name FROM c
-        |  UNION SELECT DISTINCT s_name2 FROM sup),
-        |wrd AS (
-        |  SELECT name, g.wi,
-        |    lower(string_split_regex(name, '[^A-Za-z]+')[wi]) AS w
-        |  FROM nm, unnest(generate_series(1,
-        |    len(string_split_regex(name, '[^A-Za-z]+')))) AS g(wi)),
-        |wcode AS (
-        |  SELECT name, wi, ${Phonetics.metaphoneWordSql("w")} AS code
-        |  FROM wrd WHERE w <> ''),
-        |mcode AS (SELECT name, string_agg(code, ' ' ORDER BY wi) AS mph
-        |  FROM wcode GROUP BY name),
-        |cb AS (SELECT c.*, substr(m.mph, 1, 3) AS c_mp3,
-        |    substr(m.mph, 1, 2) AS c_mp2
-        |  FROM c JOIN mcode m ON m.name = c.c_name2),
-        |sb AS (SELECT sup.*, substr(m.mph, 1, 3) AS s_mp3,
-        |    substr(m.mph, 1, 2) AS s_mp2
-        |  FROM sup JOIN mcode m ON m.name = sup.s_name2),
-        |u AS (
-        |  SELECT c_custkey, s_suppkey, c_name2, s_name2, 0 AS match_key
-        |  FROM cb JOIN sb ON cb.c_nkey = sb.s_nkey AND cb.c_mp3 = sb.s_mp3
-        |  UNION ALL
-        |  SELECT c_custkey, s_suppkey, c_name2, s_name2, 1
-        |  FROM cb JOIN sb ON cb.c_nkey = sb.s_nkey
-        |    AND cb.c_ftc = sb.s_ftc AND cb.c_mp2 = sb.s_mp2),
-        |dedup AS (
-        |  SELECT c_custkey, s_suppkey, c_name2, s_name2, match_key,
-        |    count(*) OVER (PARTITION BY c_custkey, s_suppkey) AS n_rules,
-        |    row_number() OVER (PARTITION BY c_custkey, s_suppkey
-        |      ORDER BY match_key) AS rn
-        |  FROM u)
-        |SELECT c_custkey, s_suppkey, match_key, n_rules,
-        |  round(jaro_winkler_similarity(c_name2, s_name2), 6) AS name_sim
-        |FROM dedup
-        |WHERE rn = 1 AND jaro_winkler_similarity(c_name2, s_name2) >= 0.5""".stripMargin
-    },
-    "q178_block_profile" -> {
-      import graft.functions.Phonetics
-      val cn = q165CustNames.map(s => "'" + s + "'").mkString(", ")
-      val sn = q165SuppNames.map(s => "'" + s + "'").mkString(", ")
-      val fu = q177Fuels.map(s => "'" + s + "'").mkString(", ")
-      s"""WITH c AS (
-        |  SELECT c_custkey, c_nationkey AS c_nkey,
-        |    ([$cn])[CAST(c_custkey % 12 AS INT) + 1] AS c_name2,
-        |    ([$fu])[CAST(c_custkey % 5 AS INT) + 1] AS c_ftc
-        |  FROM customer),
-        |sup AS (
-        |  SELECT s_suppkey, s_nationkey AS s_nkey,
-        |    ([$sn])[CAST(s_suppkey % 12 AS INT) + 1] AS s_name2,
-        |    ([$fu])[CAST(s_suppkey % 5 AS INT) + 1] AS s_ftc
-        |  FROM supplier),
-        |nm AS (
-        |  SELECT DISTINCT c_name2 AS name FROM c
-        |  UNION SELECT DISTINCT s_name2 FROM sup),
-        |wrd AS (
-        |  SELECT name, g.wi,
-        |    lower(string_split_regex(name, '[^A-Za-z]+')[wi]) AS w
-        |  FROM nm, unnest(generate_series(1,
-        |    len(string_split_regex(name, '[^A-Za-z]+')))) AS g(wi)),
-        |wcode AS (
-        |  SELECT name, wi, ${Phonetics.metaphoneWordSql("w")} AS code
-        |  FROM wrd WHERE w <> ''),
-        |mcode AS (SELECT name, string_agg(code, ' ' ORDER BY wi) AS mph
-        |  FROM wcode GROUP BY name),
-        |cb AS (SELECT c.*, substr(m.mph, 1, 3) AS c_mp3,
-        |    substr(m.mph, 1, 2) AS c_mp2
-        |  FROM c JOIN mcode m ON m.name = c.c_name2),
-        |sb AS (SELECT sup.*, substr(m.mph, 1, 3) AS s_mp3,
-        |    substr(m.mph, 1, 2) AS s_mp2
-        |  FROM sup JOIN mcode m ON m.name = sup.s_name2),
-        |r0 AS (
-        |  SELECT count(*) AS n_blocks,
-        |    CAST(sum(nl * nr) AS BIGINT) AS n_pairs,
-        |    max(nl * nr) AS max_block_pairs
-        |  FROM (SELECT c_nkey, c_mp3, count(*) AS nl FROM cb GROUP BY 1, 2) L
-        |  JOIN (SELECT s_nkey, s_mp3, count(*) AS nr FROM sb GROUP BY 1, 2) R
-        |    ON L.c_nkey = R.s_nkey AND L.c_mp3 = R.s_mp3),
-        |r1 AS (
-        |  SELECT count(*) AS n_blocks,
-        |    CAST(sum(nl * nr) AS BIGINT) AS n_pairs,
-        |    max(nl * nr) AS max_block_pairs
-        |  FROM (SELECT c_nkey, c_ftc, c_mp2, count(*) AS nl
-        |        FROM cb GROUP BY 1, 2, 3) L
-        |  JOIN (SELECT s_nkey, s_ftc, s_mp2, count(*) AS nr
-        |        FROM sb GROUP BY 1, 2, 3) R
-        |    ON L.c_nkey = R.s_nkey AND L.c_ftc = R.s_ftc
-        |      AND L.c_mp2 = R.s_mp2)
-        |SELECT CAST(0 AS INT) AS match_key, n_blocks, n_pairs,
-        |  max_block_pairs FROM r0
-        |UNION ALL
-        |SELECT CAST(1 AS INT), n_blocks, n_pairs, max_block_pairs
-        |FROM r1""".stripMargin
-    },
-    "q179_epoch_upsample" -> {
-      val ev = q179Epochs
-        .map { case (l, e) => s"('$l', CAST($e AS DOUBLE))" }
-        .mkString(", ")
-      s"""WITH e(lang, target_epochs) AS (VALUES $ev),
-        |d AS (
-        |  SELECT doc_id, e.lang, e.target_epochs,
-        |    ('0x' || substr(md5('epoch_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |      / 1152921504606846976.0 AS u
-        |  FROM documents JOIN e USING (lang)),
-        |c AS (
-        |  SELECT doc_id, lang, target_epochs,
-        |    CAST(floor(target_epochs) + (CASE WHEN
-        |      u < target_epochs - floor(target_epochs)
-        |      THEN 1 ELSE 0 END) AS INT) AS n_copies
-        |  FROM d)
-        |SELECT doc_id, lang, target_epochs, n_copies,
-        |  CAST(g.ci AS INT) AS copy_idx
-        |FROM c, unnest(generate_series(0, n_copies - 1)) AS g(ci)
-        |WHERE n_copies > 0""".stripMargin
-    },
-    "q180_name_levels" -> {
-      val cn = q165CustNames.map(s => "'" + s + "'").mkString(", ")
-      val sn = q165SuppNames.map(s => "'" + s + "'").mkString(", ")
-      s"""WITH c AS (
-        |  SELECT c_custkey, c_nationkey AS c_nkey,
-        |    CASE WHEN c_custkey % 19 = 0 THEN NULL
-        |      ELSE ([$cn])[CAST(c_custkey % 12 AS INT) + 1] END AS c_name2
-        |  FROM customer),
-        |sup AS (
-        |  SELECT s_suppkey, s_nationkey AS s_nkey,
-        |    CASE WHEN s_suppkey % 23 = 0 THEN NULL
-        |      ELSE ([$sn])[CAST(s_suppkey % 12 AS INT) + 1] END AS s_name2
-        |  FROM supplier)
-        |SELECT c_custkey, s_suppkey,
-        |  CASE
-        |    WHEN c_name2 IS NULL OR s_name2 IS NULL THEN -1
-        |    WHEN c_name2 = s_name2 THEN 4
-        |    WHEN jaro_winkler_similarity(c_name2, s_name2) >= 0.9 THEN 3
-        |    WHEN jaro_winkler_similarity(c_name2, s_name2) >= 0.8 THEN 2
-        |    WHEN jaro_winkler_similarity(c_name2, s_name2) >= 0.7 THEN 1
-        |    ELSE 0 END AS name_level
-        |FROM c JOIN sup ON c_nkey = s_nkey
-        |  AND c_custkey % 100 = s_suppkey % 100""".stripMargin
-    },
-    "q181_train_order" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 32 AS shard,
-        |    ('0x' || substr(md5('ord_' || (doc_id % 32)::VARCHAR
-        |      || '_' || doc_id::VARCHAR), 1, 15))::BIGINT AS order_key
-        |  FROM documents)
-        |SELECT doc_id, CAST(shard AS BIGINT) AS shard, order_key,
-        |  CAST(row_number() OVER (ORDER BY shard, order_key, doc_id) - 1
-        |    AS BIGINT) AS global_pos
-        |FROM d""".stripMargin,
-    "q182_equal_width_bins" ->
-      """WITH s AS (
-        |  SELECT user_id, min(value) AS lo, max(value) AS hi,
-        |    count(DISTINCT value) AS nuniq
-        |  FROM events GROUP BY user_id),
-        |j AS (
-        |  SELECT e.user_id, e.event_id, e.value, s.lo,
-        |    s.hi - s.lo AS span, s.nuniq
-        |  FROM events e JOIN s USING (user_id)
-        |  WHERE s.nuniq > 1 AND e.value IS NOT NULL),
-        |b AS (
-        |  SELECT user_id, event_id, value, lo,
-        |    CASE WHEN span = 0 THEN 0.001 ELSE span * 0.001 END AS pad,
-        |    CASE WHEN span = 0 THEN 0.0002 ELSE span / 10 END AS width
-        |  FROM j),
-        |c AS (
-        |  SELECT user_id, event_id, value, lo, pad, width,
-        |    CAST(least(greatest(
-        |      ceil(round((value - lo) / width, 9)), 1), 10) AS BIGINT)
-        |      AS bin_idx
-        |  FROM b),
-        |d AS (
-        |  SELECT user_id, event_id, value, bin_idx,
-        |    CASE WHEN bin_idx = 1 THEN lo - pad
-        |      ELSE lo + (bin_idx - 1) * width END AS lower_raw,
-        |    lo + bin_idx * width AS upper_raw
-        |  FROM c)
-        |SELECT user_id, event_id, value, bin_idx,
-        |  round(lower_raw, 6) AS bin_lower,
-        |  round(upper_raw, 6) AS bin_upper,
-        |  CAST(dense_rank() OVER (PARTITION BY user_id ORDER BY lower_raw)
-        |    AS INT) AS bin_rank
-        |FROM d""".stripMargin,
-    "q183_impute_eval" ->
-      """WITH g AS (
-        |  SELECT user_id, value,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS rn,
-        |    ('0x' || substr(md5('nulls_' || user_id::VARCHAR), 1, 15))::BIGINT
-        |      % 17 AS phase
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, value,
-        |    ((rn - 1 + phase) % 17) < 3 AS planted,
-        |    CASE WHEN ((rn - 1 + phase) % 17) < 3 THEN NULL
-        |      ELSE value END AS v
-        |  FROM g),
-        |med AS (SELECT user_id, median(v) AS imputed FROM p GROUP BY user_id),
-        |sc AS (
-        |  SELECT p.user_id,
-        |    count(*) AS n_planted,
-        |    CAST(sum(CAST(abs(round(m.imputed * 200) - round(p.value * 200))
-        |      AS BIGINT)) AS BIGINT) AS abs_err_hc,
-        |    CAST(sum(CAST(abs(round(p.value * 200)) AS BIGINT)) AS BIGINT)
-        |      AS truth_hc
-        |  FROM p JOIN med m USING (user_id)
-        |  WHERE p.planted GROUP BY p.user_id)
-        |SELECT user_id, n_planted, abs_err_hc, truth_hc,
-        |  CAST(round(1e9 * abs_err_hc / truth_hc) AS BIGINT) AS wmape_nano
-        |FROM sc""".stripMargin,
-    "q184_min_stable_bin" ->
-      """WITH s AS (
-        |  SELECT user_id, min(value) AS lo, max(value) AS hi,
-        |    count(DISTINCT value) AS nuniq
-        |  FROM events GROUP BY user_id),
-        |j AS (
-        |  SELECT e.user_id, e.event_id, e.ts, e.value, s.lo,
-        |    s.hi - s.lo AS span
-        |  FROM events e JOIN s USING (user_id)
-        |  WHERE s.nuniq > 1 AND e.value IS NOT NULL),
-        |b AS (
-        |  SELECT user_id, event_id, ts, lo,
-        |    CASE WHEN span = 0 THEN 0.001 ELSE span * 0.001 END AS pad,
-        |    CASE WHEN span = 0 THEN 0.0002 ELSE span / 10 END AS width,
-        |    CAST(least(greatest(ceil(round((value - lo) /
-        |      (CASE WHEN span = 0 THEN 0.0002 ELSE span / 10 END), 9)),
-        |      1), 10) AS BIGINT) AS bin_idx
-        |  FROM j),
-        |c AS (
-        |  SELECT user_id, event_id, ts, bin_idx,
-        |    CASE WHEN bin_idx = 1 THEN lo - pad
-        |      ELSE lo + (bin_idx - 1) * width END AS lower_raw,
-        |    dense_rank() OVER (PARTITION BY user_id ORDER BY
-        |      CASE WHEN bin_idx = 1 THEN lo - pad
-        |        ELSE lo + (bin_idx - 1) * width END) AS bin_rank
-        |  FROM b),
-        |r AS (
-        |  SELECT *, CASE WHEN lag(bin_idx) OVER w IS DISTINCT FROM bin_idx
-        |    THEN 1 ELSE 0 END AS chg
-        |  FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |runs AS (
-        |  SELECT user_id, bin_idx, bin_rank, lower_raw,
-        |    sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS rid
-        |  FROM r),
-        |rl AS (
-        |  SELECT user_id, bin_idx, bin_rank, lower_raw, rid,
-        |    count(*) AS run_length
-        |  FROM runs WHERE bin_rank > 1
-        |  GROUP BY user_id, bin_idx, bin_rank, lower_raw, rid)
-        |SELECT user_id, CAST(bin_rank AS INT) AS min_stable_bin_rank,
-        |  bin_idx AS min_stable_bin_idx,
-        |  round(lower_raw, 6) AS min_stable_load_factor
-        |FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY bin_rank, bin_idx, lower_raw) AS rn
-        |  FROM rl WHERE run_length >= 2)
-        |WHERE rn = 1""".stripMargin,
-    "q185_unit_characteristics" ->
-      """WITH mload AS (
-        |  SELECT user_id, max(value) AS max_load FROM events GROUP BY 1),
-        |base AS (
-        |  SELECT e.user_id, e.event_id, e.ts, e.value / m.max_load AS lf,
-        |    CAST(8 + e.event_id % 5 AS DOUBLE) AS hr
-        |  FROM events e JOIN mload m USING (user_id)),
-        |s AS (
-        |  SELECT user_id, min(lf) AS lo, max(lf) AS hi,
-        |    count(DISTINCT lf) AS nuniq
-        |  FROM base GROUP BY 1),
-        |j AS (
-        |  SELECT b.*, s.lo, s.hi - s.lo AS span
-        |  FROM base b JOIN s USING (user_id)
-        |  WHERE s.nuniq > 1 AND b.lf IS NOT NULL),
-        |bnd AS (
-        |  SELECT user_id, event_id, ts, hr, lo,
-        |    CASE WHEN span = 0 THEN 0.001 ELSE span * 0.001 END AS pad,
-        |    CASE WHEN span = 0 THEN 0.0002 ELSE span / 10 END AS width,
-        |    CAST(least(greatest(ceil(round((lf - lo) /
-        |      (CASE WHEN span = 0 THEN 0.0002 ELSE span / 10 END), 9)),
-        |      1), 10) AS BIGINT) AS bin_idx
-        |  FROM j),
-        |c AS (
-        |  SELECT *, CASE WHEN bin_idx = 1 THEN lo - pad
-        |      ELSE lo + (bin_idx - 1) * width END AS lower_raw,
-        |    dense_rank() OVER (PARTITION BY user_id ORDER BY
-        |      CASE WHEN bin_idx = 1 THEN lo - pad
-        |        ELSE lo + (bin_idx - 1) * width END) AS bin_rank,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM bnd),
-        |r AS (
-        |  SELECT *, CASE WHEN lag(bin_idx) OVER w IS DISTINCT FROM bin_idx
-        |    THEN 1 ELSE 0 END AS chg
-        |  FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |runs AS (
-        |  SELECT user_id, bin_idx, bin_rank, lower_raw,
-        |    sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS rid
-        |  FROM r),
-        |rl AS (
-        |  SELECT user_id, bin_idx, bin_rank, lower_raw, rid,
-        |    count(*) AS run_length
-        |  FROM runs WHERE bin_rank > 1
-        |  GROUP BY user_id, bin_idx, bin_rank, lower_raw, rid),
-        |stab AS (
-        |  SELECT user_id, bin_rank AS ms_rank, bin_idx AS ms_idx,
-        |    lower_raw AS ms_lf
-        |  FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |      ORDER BY bin_rank, bin_idx, lower_raw) AS qn
-        |    FROM rl WHERE run_length >= 2)
-        |  WHERE qn = 1),
-        |mr AS (SELECT user_id, max(bin_rank) AS mrank FROM c GROUP BY 1),
-        |hrmax AS (
-        |  SELECT user_id, median(hr) AS hr_at_max_load
-        |  FROM c JOIN mr USING (user_id)
-        |  WHERE bin_rank = mrank GROUP BY user_id),
-        |hrstab AS (
-        |  SELECT user_id, median(hr) AS hr_at_min_stable
-        |  FROM c JOIN stab USING (user_id)
-        |  WHERE bin_idx = ms_idx GROUP BY user_id),
-        |upf AS (
-        |  SELECT user_id, rn,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY rn) AS fn
-        |  FROM c JOIN stab USING (user_id)
-        |  WHERE bin_idx >= ms_idx),
-        |uplen AS (
-        |  SELECT user_id, rn - fn AS isl, count(*) AS len
-        |  FROM upf GROUP BY user_id, rn - fn),
-        |up AS (
-        |  SELECT user_id, min(len) AS min_up_time_hours
-        |  FROM uplen GROUP BY user_id)
-        |SELECT m.user_id, round(m.max_load, 2) AS max_load,
-        |  CAST(stab.ms_rank AS INT) AS min_stable_bin_rank,
-        |  round(stab.ms_lf, 6) AS min_stable_load_factor,
-        |  round(hrmax.hr_at_max_load, 6) AS hr_at_max_load,
-        |  round(hrstab.hr_at_min_stable, 6) AS hr_at_min_stable,
-        |  up.min_up_time_hours
-        |FROM mload m
-        |LEFT JOIN stab USING (user_id)
-        |LEFT JOIN hrmax USING (user_id)
-        |LEFT JOIN hrstab USING (user_id)
-        |LEFT JOIN up USING (user_id)""".stripMargin,
-    "q186_ramp_rates_p5" ->
-      """WITH d AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    value - lag(value) OVER w AS dv,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER w AS dus
-        |  FROM events WINDOW w AS (PARTITION BY user_id
-        |    ORDER BY ts, event_id)),
-        |ramps AS (
-        |  SELECT user_id, ts, event_id, dv * 3.6e9 / dus AS ramp,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM d WHERE dus > 0 AND dv IS NOT NULL),
-        |ranked AS (
-        |  SELECT user_id, ramp,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ramp DESC, rn DESC) AS up_rk,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ramp ASC, rn ASC) AS dn_rk,
-        |    count(*) OVER (PARTITION BY user_id) AS n,
-        |    CAST(floor(count(*) OVER (PARTITION BY user_id) / 20.0)
-        |      AS BIGINT) AS k
-        |  FROM ramps),
-        |dn AS (
-        |  SELECT user_id, median(ramp) AS ramp_down_rate, max(n) AS n_ramps
-        |  FROM ranked WHERE n >= 20 AND dn_rk <= k GROUP BY user_id),
-        |up AS (
-        |  SELECT user_id, median(ramp) AS ramp_up_rate
-        |  FROM ranked WHERE n >= 20 AND up_rk <= k GROUP BY user_id)
-        |SELECT user_id, n_ramps,
-        |  round(ramp_down_rate, 6) AS ramp_down_rate,
-        |  round(ramp_up_rate, 6) AS ramp_up_rate
-        |FROM dn JOIN up USING (user_id)""".stripMargin,
-    "q187_flag_summary" ->
-      s"""WITH base AS (
-        |$q71Sql),
-        |g AS (
-        |  SELECT user_id, flag, count(*) AS n
-        |  FROM base GROUP BY user_id, flag)
-        |SELECT user_id, flag, n,
-        |  CAST(sum(n) OVER (PARTITION BY user_id) AS BIGINT) AS n_total,
-        |  CAST(round(1e9 * n /
-        |    CAST(sum(n) OVER (PARTITION BY user_id) AS BIGINT)) AS BIGINT)
-        |    AS flag_rate_nano
-        |FROM g""".stripMargin,
-    "q188_union_blocks_full" -> {
-      val unions = q188RuleCols.zipWithIndex.map { case (cs, i) =>
-        s"  SELECT c_custkey, s_suppkey, $i AS match_key\n" +
-          s"  FROM cb JOIN sb ON ${q188RuleCondSql(cs)}"
-      }.mkString("\n  UNION ALL\n")
-      s"""$q188OracleCtes,
-        |u AS (
-        |$unions),
-        |dedup AS (
-        |  SELECT c_custkey, s_suppkey, match_key,
-        |    count(*) OVER (PARTITION BY c_custkey, s_suppkey) AS n_rules,
-        |    row_number() OVER (PARTITION BY c_custkey, s_suppkey
-        |      ORDER BY match_key) AS rn
-        |  FROM u)
-        |SELECT match_key, count(*) AS n_pairs,
-        |  CAST(sum(CASE WHEN n_rules > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_multi,
-        |  CAST(sum(n_rules) AS BIGINT) AS sum_rules
-        |FROM dedup WHERE rn = 1 GROUP BY match_key""".stripMargin
-    },
-    "q189_block_profile_full" -> {
-      val parts = q188RuleCols.zipWithIndex.map { case (cs, i) =>
-        val lcols = cs.map(c0 => s"c_$c0").mkString(", ")
-        val rcols = cs.map(c0 => s"s_$c0").mkString(", ")
-        val nums = (1 to cs.size).mkString(", ")
-        val cond = cs.map(c0 => s"L.c_$c0 = R.s_$c0").mkString(" AND ")
-        s"""SELECT CAST($i AS INT) AS match_key, count(*) AS n_blocks,
-           |  CAST(sum(nl * nr) AS BIGINT) AS n_pairs,
-           |  CAST(max(nl * nr) AS BIGINT) AS max_block_pairs
-           |FROM (SELECT $lcols, count(*) AS nl FROM cb GROUP BY $nums) L
-           |JOIN (SELECT $rcols, count(*) AS nr FROM sb GROUP BY $nums) R
-           |  ON $cond""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"$q188OracleCtes\n$parts"
-    },
-    "q190_splink_predict" ->
-      s"""$q190PredictSql
-        |SELECT s_suppkey, c_custkey, match_key, n_rules,
-        |  g_pname, g_uname, g_ftc, weight_nano,
-        |  weight_nano >= 3169925001 AS accepted
-        |FROM (SELECT *, row_number() OVER (PARTITION BY s_suppkey
-        |        ORDER BY weight_nano DESC, c_custkey ASC) AS rk FROM w)
-        |WHERE rk = 1""".stripMargin,
-    // q193: splink's cluster_pairwise_predictions_at_threshold — the
-    // SAME predict CTE chain q190 uses (shared q190PredictSql, so the
-    // two stages cannot drift), accepted pairs as bipartite edges, the
-    // q45 recursive-CTE connected components, singletons seeded from
-    // both sides so unlinked records keep their own cluster.
-    "q193_splink_cluster" -> {
-      val rec = q190PredictSql.replaceFirst("^WITH ", "WITH RECURSIVE ")
-      s"""$rec,
-        |edges AS (
-        |  SELECT c_custkey * 2 AS a, s_suppkey * 2 + 1 AS b
-        |  FROM w WHERE weight_nano >= 3169925001),
-        |verts AS (
-        |  SELECT c_custkey * 2 AS v FROM cb
-        |  UNION SELECT s_suppkey * 2 + 1 FROM sb),
-        |sym AS (SELECT a, b FROM edges UNION SELECT b AS a, a AS b FROM edges),
-        |reach(v, c2) AS (
-        |  SELECT v, v AS c2 FROM verts
-        |  UNION
-        |  SELECT sym.a AS v, reach.c2 FROM sym JOIN reach ON sym.b = reach.v)
-        |SELECT v AS node, v % 2 = 0 AS is_left,
-        |  CAST(v // 2 AS BIGINT) AS rec_id,
-        |  CAST(min(c2) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY v""".stripMargin
-    },
-    // q194: T5 span corruption — masks, sentinel ranks and both
-    // assembled strings replayed from the shared 60-bit MD5-prefix
-    // coin; string_agg(... ORDER BY pos) is the oracle's reassembly.
-    "q194_span_corrupt" -> spanCorruptSql("documents", 3, 3, 20),
-    // q195: UL2 mixture — the hash assignment plus all three lane
-    // constructions (the SAME parameterized spanCorruptSql at R/X
-    // parameters, nested WITHs keep their CTE names apart, and the
-    // list-slice prefix split for S), paradigm tokens prefixed.
-    "q195_ul2_mixture" -> {
-      def lane(cond: String) =
-        s"(SELECT doc_id, text FROM den WHERE d $cond)"
-      // the lane SQL is spliced in AFTER stripMargin: its own lines
-      // contain leading `||` concat operators that a second stripMargin
-      // pass would truncate to `|`
-      """WITH den AS (
-        |  SELECT doc_id, text,
-        |    ('0x' || substr(md5('ul2_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |      % 4 AS d
-        |  FROM documents),
-        |r AS (
-        |@R_LANE@
-        |),
-        |x AS (
-        |@X_LANE@
-        |),
-        |s AS (
-        |  SELECT doc_id,
-        |    CAST(len(w) AS BIGINT) AS n_tokens, CAST(1 AS BIGINT) AS n_spans,
-        |    array_to_string(w[1 : CAST(sp AS INT)], ' ') AS input_text,
-        |    array_to_string(w[CAST(sp + 1 AS INT) : len(w)], ' ')
-        |      AS target_text
-        |  FROM (
-        |    SELECT doc_id, w,
-        |      greatest(1, least(len(w) - 1,
-        |        (len(w) * (('0x' || substr(md5('plm_' || doc_id::VARCHAR),
-        |           1, 15))::BIGINT % 50 + 25)) // 100)) AS sp
-        |    FROM (SELECT doc_id,
-        |            list_filter(string_split(text, ' '), t -> t <> '') AS w
-        |          FROM den WHERE d = 2)))
-        |SELECT doc_id, 'R' AS denoiser, n_tokens, n_spans,
-        |  '[R] ' || input_text AS input_text, target_text FROM r
-        |UNION ALL
-        |SELECT doc_id, 'S', n_tokens, n_spans,
-        |  '[S] ' || input_text, target_text FROM s
-        |UNION ALL
-        |SELECT doc_id, 'X', n_tokens, n_spans,
-        |  '[X] ' || input_text, target_text FROM x""".stripMargin
-        .replace("@R_LANE@", spanCorruptSql(lane("<= 1"), 3, 3, 20))
-        .replace("@X_LANE@", spanCorruptSql(lane("= 3"), 8, 10, 20))
-    },
-    // q196: the fraction-based contamination report over q128's shingle
-    // machinery — n_grams, hits, floor(1e9*hits/grams), dirty at 10%.
-    "q196_contamination_report" ->
-      """WITH words AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS wl
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2] || ' ' || wl[i+3] AS shingle
-        |  FROM words, unnest(range(1, len(wl) - 2)) t(i)
-        |  WHERE len(wl) >= 4),
-        |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 37 = 0),
-        |st AS (
-        |  SELECT s.doc_id, count(*) AS n_grams,
-        |    count(ev.shingle) AS n_eval_hits
-        |  FROM sh s LEFT JOIN ev ON s.shingle = ev.shingle
-        |  WHERE s.doc_id % 37 <> 0
-        |  GROUP BY 1)
-        |SELECT d.doc_id,
-        |  coalesce(st.n_grams, 0) AS n_grams,
-        |  coalesce(st.n_eval_hits, 0) AS n_eval_hits,
-        |  CASE WHEN coalesce(st.n_grams, 0) = 0 THEN 0
-        |       ELSE CAST((1000000000 * st.n_eval_hits) // st.n_grams
-        |         AS BIGINT) END AS overlap_nano,
-        |  CASE WHEN coalesce(st.n_grams, 0) = 0 THEN 0
-        |       ELSE CAST((1000000000 * st.n_eval_hits) // st.n_grams
-        |         AS BIGINT) END >= 100000000 AS dirty
-        |FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
-        |WHERE d.doc_id % 37 <> 0""".stripMargin,
-    // q197: FIM — the 75% coin, the two modular split draws and the PSM
-    // re-serialization all replay from the shared MD5-prefix hash;
-    // empty segments concatenate as empty strings on both engines.
-    "q197_fim_transform" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), t -> t <> '') AS w,
-        |    ('0x' || substr(md5('fimr_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |      % 4 AS cr,
-        |    ('0x' || substr(md5('fima_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |      AS ha,
-        |    ('0x' || substr(md5('fimb_' || doc_id::VARCHAR), 1, 15))::BIGINT
-        |      AS hb
-        |  FROM documents),
-        |pts AS (
-        |  SELECT doc_id, w, len(w) AS n,
-        |    len(w) >= 1 AND cr < 3 AS applied,
-        |    CAST(ha % (len(w) + 1) AS INT) AS i
-        |  FROM base),
-        |pts2 AS (
-        |  SELECT *, CAST(i + hb % (n - i + 1) AS INT) AS j
-        |  FROM (SELECT p.*, b.hb FROM pts p JOIN base b USING (doc_id)))
-        |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, applied AS fim_applied,
-        |  CASE WHEN applied THEN CAST(i AS BIGINT) END AS split_i,
-        |  CASE WHEN applied THEN CAST(j AS BIGINT) END AS split_j,
-        |  CASE WHEN applied THEN
-        |    '<PRE> ' || coalesce(array_to_string(w[1 : i], ' '), '') ||
-        |    ' <SUF> ' || coalesce(array_to_string(w[j + 1 : n], ' '), '') ||
-        |    ' <MID> ' || coalesce(array_to_string(w[i + 1 : j], ' '), '')
-        |  ELSE array_to_string(w, ' ') END AS fim_text
-        |FROM pts2""".stripMargin,
-    // q198: the 2-D skew-guarded join is pair-for-pair identical to the
-    // plain equi-join, so the oracle IS the plain join — the exact pair
-    // count and the integer checksum over every pair expose any pair
-    // the tile decomposition lost or duplicated.
-    "q198_skew2d_join" ->
-      """SELECT c.c_custkey % 5 AS blk, count(*) AS n_pairs,
-        |  CAST(sum(c.lc * 7 + s.rc) AS BIGINT) AS sum_chk
-        |FROM (SELECT c_custkey,
-        |        CAST(round(c_acctbal * 100) AS BIGINT) AS lc
-        |      FROM customer WHERE c_custkey % 100 < 20) c
-        |JOIN (SELECT s_suppkey,
-        |        CAST(round(s_acctbal * 100) AS BIGINT) AS rc
-        |      FROM supplier WHERE s_suppkey % 10 < 3) s
-        |  ON c.c_custkey % 5 = s.s_suppkey % 5
-        |GROUP BY 1""".stripMargin,
-    "q199_multiprobe_lsh" -> annMultiProbeLshTopkSql(5, 4),
-    "q200_retrieval_eval" -> q200OracleSql,
-    // q201: bigram stupid-backoff LM — train tables on even doc_ids, score
-    // all docs; per-type ln nanos, exact integer doc sums (q175 discipline).
-    // Both engines compute ln(0.4) themselves; -23025850930 is the shared
-    // ln(1e-10) unk floor.
-    "q201_bigram_lm" ->
-      """WITH ws AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, g.wi - 1 AS pos, w[wi] AS tok
-        |  FROM ws, unnest(generate_series(1, len(w))) AS g(wi)
-        |  WHERE w[wi] <> ''),
-        |bg AS (
-        |  SELECT doc_id, pos,
-        |    coalesce(lag(tok) OVER (PARTITION BY doc_id ORDER BY pos),
-        |      '<s>') AS prev,
-        |    tok AS cur
-        |  FROM toks),
-        |tr AS (SELECT * FROM bg WHERE doc_id % 2 = 0),
-        |bcnt AS (SELECT prev, cur, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM tr GROUP BY 1, 2),
-        |ctx AS (SELECT prev, CAST(sum(cnt) AS BIGINT) AS ctx
-        |  FROM bcnt GROUP BY 1),
-        |bscore AS (
-        |  SELECT prev, cur,
-        |    CAST(round(ln(CAST(cnt AS DOUBLE) / CAST(ctx AS DOUBLE)) * 1e9)
-        |      AS BIGINT) AS score_nano
-        |  FROM bcnt JOIN ctx USING (prev)),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tr),
-        |uscore AS (
-        |  SELECT cur,
-        |    CAST(round(ln(CAST(count(*) AS DOUBLE) / CAST(n AS DOUBLE))
-        |      * 1e9) AS BIGINT) AS uni_nano
-        |  FROM tr CROSS JOIN tot GROUP BY cur, n),
-        |sc AS (
-        |  SELECT bg.doc_id,
-        |    coalesce(b.score_nano, CAST(round(ln(0.4) * 1e9) AS BIGINT)
-        |      + coalesce(u.uni_nano, CAST(-23025850930 AS BIGINT))) AS s,
-        |    CASE WHEN b.score_nano IS NULL THEN 1 ELSE 0 END AS bo
-        |  FROM bg
-        |  LEFT JOIN bscore b ON b.prev = bg.prev AND b.cur = bg.cur
-        |  LEFT JOIN uscore u ON u.cur = bg.cur)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(count(s.s), 0) AS BIGINT) AS n_bigrams,
-        |  CAST(coalesce(sum(s.bo), 0) AS BIGINT) AS n_backoff,
-        |  CAST(coalesce(sum(s.s), 0) AS BIGINT) AS score_nano
-        |FROM documents d LEFT JOIN sc s ON s.doc_id = d.doc_id
-        |GROUP BY d.doc_id""".stripMargin,
-  )
-
-  /** T5 span-corruption oracle, parameterized by source relation and
-    * (spanLen, rateNum, rateDen) — q194 replays the default lane over
-    * `documents`; q195's R and X lanes replay the same text over their
-    * hash-filtered doc subsets at UL2's parameters, so the mixture and
-    * the single-lane query cannot drift. */
-  private def spanCorruptSql(src: String, spanLen: Int, rateNum: Int,
-                             rateDen: Int): String =
-    s"""WITH ws AS (
-      |  SELECT doc_id, string_split(text, ' ') AS w FROM $src),
-      |words AS (
-      |  -- positions are dense ranks AFTER the empty-token filter (repeated
-      |  -- whitespace), mirroring the Spark side's post-filter row_number
-      |  SELECT doc_id,
-      |    row_number() OVER (PARTITION BY doc_id ORDER BY g.wi) - 1 AS pos,
-      |    w[wi] AS tok
-      |  FROM ws, unnest(generate_series(1, len(w))) AS g(wi)
-      |  WHERE w[wi] <> ''),
-      |blocked AS (
-      |  SELECT doc_id, pos, tok,
-      |    (('0x' || substr(md5(doc_id::VARCHAR || '_' ||
-      |        (pos // $spanLen)::VARCHAR), 1, 15))::BIGINT % $rateDen)
-      |      < $rateNum AS masked,
-      |    pos % $spanLen = 0 AS first
-      |  FROM words),
-      |ks AS (
-      |  SELECT *, CAST(sum(CASE WHEN masked AND first THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS BIGINT) AS k
-      |  FROM blocked),
-      |toks AS (
-      |  SELECT doc_id, pos, masked, first,
-      |    CASE WHEN NOT masked THEN tok
-      |         WHEN first THEN '<extra_id_' || k || '>' END AS in_tok,
-      |    CASE WHEN masked AND first THEN '<extra_id_' || k || '> ' || tok
-      |         WHEN masked THEN tok END AS tg_tok
-      |  FROM ks)
-      |SELECT doc_id, count(*) AS n_tokens,
-      |  CAST(sum(CASE WHEN masked AND first THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_spans,
-      |  coalesce(string_agg(in_tok, ' ' ORDER BY pos)
-      |    FILTER (WHERE in_tok IS NOT NULL), '') AS input_text,
-      |  ltrim(coalesce(string_agg(tg_tok, ' ' ORDER BY pos)
-      |      FILTER (WHERE tg_tok IS NOT NULL), '')
-      |    || ' <extra_id_' ||
-      |    CAST(sum(CASE WHEN masked AND first THEN 1 ELSE 0 END)
-      |      AS BIGINT) || '>') AS target_text
-      |FROM toks GROUP BY doc_id""".stripMargin
-
-  /** The q190 predict oracle's CTE chain (candidate union → dedup →
-    * gamma vector → FS weight), ending at CTE `w` — the shared prefix of
-    * the q190 (best-match) and q193 (clustering) oracles. */
-  private def q190PredictSql: String = {
-    val unions = q188RuleCols.zipWithIndex.map { case (cs, i) =>
-      s"  SELECT c_custkey, s_suppkey, $i AS match_key\n" +
-        s"  FROM cb JOIN sb ON ${q188RuleCondSql(cs)}"
-    }.mkString("\n  UNION ALL\n")
-    def gamma(l: String, r: String): String =
-      s"CASE WHEN $l IS NULL OR $r IS NULL THEN -1 " +
-        s"WHEN $l = $r THEN 4 " +
-        s"WHEN jaro_winkler_similarity($l, $r) >= 0.9 THEN 3 " +
-        s"WHEN jaro_winkler_similarity($l, $r) >= 0.8 THEN 2 " +
-        s"WHEN jaro_winkler_similarity($l, $r) >= 0.7 THEN 1 ELSE 0 END"
-    def wcase(g: String): String =
-      q190NameW.map { case (k, v) => s"WHEN $g = $k THEN $v" }
-        .mkString("CASE ", " ", " ELSE NULL END")
-    s"""$q188OracleCtes,
-      |u AS (
-      |$unions),
-      |dedup AS (
-      |  SELECT c_custkey, s_suppkey, match_key,
-      |    count(*) OVER (PARTITION BY c_custkey, s_suppkey) AS n_rules,
-      |    row_number() OVER (PARTITION BY c_custkey, s_suppkey
-      |      ORDER BY match_key) AS rn
-      |  FROM u),
-      |pairs AS (
-      |  SELECT d.c_custkey, d.s_suppkey, d.match_key, d.n_rules,
-      |    cb.c_pname, cb.c_uname, cb.c_ftc,
-      |    sb.s_pname, sb.s_uname, sb.s_ftc
-      |  FROM dedup d
-      |  JOIN cb ON cb.c_custkey = d.c_custkey
-      |  JOIN sb ON sb.s_suppkey = d.s_suppkey
-      |  WHERE d.rn = 1),
-      |g AS (
-      |  SELECT *,
-      |    ${gamma("c_pname", "s_pname")} AS g_pname,
-      |    ${gamma("c_uname", "s_uname")} AS g_uname,
-      |    CASE WHEN c_ftc = s_ftc THEN 1 ELSE 0 END AS g_ftc
-      |  FROM pairs),
-      |w AS (
-      |  SELECT c_custkey, s_suppkey, match_key, n_rules,
-      |    g_pname, g_uname, g_ftc,
-      |    -6000000000 + ${wcase("g_pname")} + ${wcase("g_uname")}
-      |      + CASE WHEN g_ftc = 1 THEN 2000000000
-      |             ELSE -1000000000 END AS weight_nano
-      |  FROM g)""".stripMargin
-  }
-
-  /** Shared DuckDB CTE prefix for q188/q189: the two blocking sides with
-    * every attribute twin + metaphone prefixes for BOTH name columns
-    * (plant + utility), generated from the same lists the Spark side
-    * uses. */
-  private def q188OracleCtes: String = {
-    import graft.functions.Phonetics
-    val cn = q165CustNames.map("'" + _ + "'").mkString(", ")
-    val sn = q165SuppNames.map("'" + _ + "'").mkString(", ")
-    val fu = q177Fuels.map("'" + _ + "'").mkString(", ")
-    s"""WITH c AS (
-      |  SELECT c_custkey, c_nationkey AS c_nkey,
-      |    ([$cn])[CAST(c_custkey % 12 AS INT) + 1] AS c_pname,
-      |    ([$cn])[CAST((c_custkey * 7 + 3) % 12 AS INT) + 1] AS c_uname,
-      |    ([$fu])[CAST(c_custkey % 5 AS INT) + 1] AS c_ftc,
-      |    c_custkey % 30 + 1990 AS c_inst,
-      |    c_custkey % 25 + 1985 AS c_cons,
-      |    (c_custkey % 40) * 12.5 AS c_cap,
-      |    (c_custkey % 200) * 1000 AS c_ngen
-      |  FROM customer),
-      |sup AS (
-      |  SELECT s_suppkey, s_nationkey AS s_nkey,
-      |    ([$sn])[CAST(s_suppkey % 12 AS INT) + 1] AS s_pname,
-      |    ([$sn])[CAST((s_suppkey * 7 + 3) % 12 AS INT) + 1] AS s_uname,
-      |    ([$fu])[CAST(s_suppkey % 5 AS INT) + 1] AS s_ftc,
-      |    s_suppkey % 30 + 1990 AS s_inst,
-      |    s_suppkey % 25 + 1985 AS s_cons,
-      |    (s_suppkey % 40) * 12.5 AS s_cap,
-      |    (s_suppkey % 200) * 1000 AS s_ngen
-      |  FROM supplier),
-      |nm AS (
-      |  SELECT DISTINCT c_pname AS name FROM c
-      |  UNION SELECT DISTINCT c_uname FROM c
-      |  UNION SELECT DISTINCT s_pname FROM sup
-      |  UNION SELECT DISTINCT s_uname FROM sup),
-      |wrd AS (
-      |  SELECT name, g.wi,
-      |    lower(string_split_regex(name, '[^A-Za-z]+')[wi]) AS w
-      |  FROM nm, unnest(generate_series(1,
-      |    len(string_split_regex(name, '[^A-Za-z]+')))) AS g(wi)),
-      |wcode AS (
-      |  SELECT name, wi, ${Phonetics.metaphoneWordSql("w")} AS code
-      |  FROM wrd WHERE w <> ''),
-      |mcode AS (SELECT name, string_agg(code, ' ' ORDER BY wi) AS mph
-      |  FROM wcode GROUP BY name),
-      |cb AS (SELECT c.*,
-      |    substr(mp.mph, 1, 3) AS c_pmp3, substr(mp.mph, 1, 2) AS c_pmp2,
-      |    substr(mu.mph, 1, 3) AS c_ump3, substr(mu.mph, 1, 2) AS c_ump2
-      |  FROM c JOIN mcode mp ON mp.name = c.c_pname
-      |         JOIN mcode mu ON mu.name = c.c_uname),
-      |sb AS (SELECT sup.*,
-      |    substr(mp.mph, 1, 3) AS s_pmp3, substr(mp.mph, 1, 2) AS s_pmp2,
-      |    substr(mu.mph, 1, 3) AS s_ump3, substr(mu.mph, 1, 2) AS s_ump2
-      |  FROM sup JOIN mcode mp ON mp.name = sup.s_pname
-      |           JOIN mcode mu ON mu.name = sup.s_uname)""".stripMargin
-  }
-  private def q188RuleCondSql(cs: Seq[String]): String =
-    cs.map(c0 => s"cb.c_$c0 = sb.s_$c0").mkString(" AND ")
+  /** Each lane's oracle SQL, built on every call; lanes that are not
+    * SQL-expressible have no entry. */
+  def oracleSql: Map[String, String] =
+    lanes.flatMap(l => l.oracle.map(sql => l.name -> sql())).toMap
 }

@@ -1,22 +1,23 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Correctness dump: each lane's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional 3rd arg: comma-separated lane names (local iteration); "-"
+    // names no lane, so only oracle_sql.json is written
+    val selected: Seq[graft.lanes.Lane] =
+      if (args.length <= 2) SparkEntry.lanes
+      else if (args(2) == "-") Seq.empty
+      else SparkEntry.select(args(2).split(",").toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.tune(
       SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     def rmTree(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
       f.delete(); ()
@@ -37,10 +38,10 @@ object Verify {
     // loop: even a hard JVM death mid-run (OOM, SIGKILL) leaves the
     // comparator enough to red-out every query that has no output — the
     // silent-shrink failure the manifest exists to prevent.
-    val manifest = selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]")
+    val manifest = selected.map(_.name).sorted.map(q).mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/queries.json"), manifest)
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case graft.lanes.Lane(name, fn, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -14,7 +14,7 @@ import graft.operators.TimeseriesScreens.EwmaFold
 object EventStreams {
 
   /** Watermarked tumbling-window rollup — the streaming twin of the batch
-    * hourly aggregation (SparkEntry q08/q55). */
+    * hourly aggregation (lanes q08/q55 in `lanes.TimeseriesLanes`). */
   def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
     events
       .withWatermark("ts", watermark)
@@ -156,8 +156,8 @@ object EventStreams {
     *
     * Scale: buffered state per key is bounded by (watermark delay ×
     * event rate), the same bound every watermarked stateful op carries;
-    * timers are one per key per watermark advance, re-registered only
-    * while the buffer is non-empty. */
+    * a key holds at most one timer, re-registered only while the buffer
+    * is non-empty. */
   class OrderedEwmaProcessor(threshold: Double, alphaNum: Int, alphaDen: Int)
       extends StatefulProcessor[Long, EwmaEvent, EwmaOut] {
     private val fold = EwmaFold(alphaNum, alphaDen, threshold)
@@ -172,8 +172,11 @@ object EventStreams {
     override def handleInputRows(uid: Long, rows: Iterator[EwmaEvent],
                                  timers: TimerValues): Iterator[EwmaOut] = {
       rows.foreach(buf.appendValue)
-      // flush as soon as the watermark next advances
-      getHandle.registerTimer(timers.getCurrentWatermarkInMs() + 1)
+      // flush as soon as the watermark next advances; a timer the key
+      // already holds fires no later than that (in this batch if it is
+      // due) and flushes these rows too, so register only when it has none
+      if (!getHandle.listTimers().hasNext)
+        getHandle.registerTimer(timers.getCurrentWatermarkInMs() + 1)
       Iterator.empty
     }
     override def handleExpiredTimer(uid: Long, timers: TimerValues,

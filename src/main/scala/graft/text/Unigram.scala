@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * a float DP would tie-break on ulps and diverge across engines; the
   * integer DP with an explicit tie rule (equal score → smaller start =
   * longer last piece) replays bit-for-bit in DuckDB's recursive-CTE twin
-  * (`SparkEntry.UnigramSql`). EM round trips (counts → ln → nanos)
+  * (`UnigramSql` in `lanes.TextLanes`). EM round trips (counts → ln → nanos)
   * follow the q126 rule: one ln per cell from exact integer counts,
   * rounded once.
   *

@@ -35,6 +35,23 @@ class QueriesSpec extends SparkSpec {
     assert(compiles === 0L)
   }
 
+  test("the registry holds 211 lanes, all but the two imputers with an oracle") {
+    assert(SparkEntry.lanes.size === 211)
+    assert(SparkEntry.lanes.map(_.name).distinct.size === 211)
+    assert(SparkEntry.lanes.filter(_.oracle.isEmpty).map(_.name).toSet ===
+      Set("q61_matrix_impute", "q81_tubal_impute"))
+  }
+
+  test("select returns the named lanes and rejects every unknown name") {
+    val picked = SparkEntry.select(Seq("q42_cosine_topk", "q01_pricing_summary",
+      "q42_cosine_topk"))
+    assert(picked.map(_.name) === Seq("q42_cosine_topk", "q01_pricing_summary"))
+    val e = intercept[IllegalArgumentException](SparkEntry.select(
+      Seq("q42_cosine_topk", "q999_typo", "q02_region", "q999_typo")))
+    assert(e.getMessage.contains("q999_typo, q02_region"))
+    assert(!e.getMessage.contains("q42_cosine_topk"))
+  }
+
   test("every oracleSql key has a matching query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }

@@ -183,14 +183,14 @@ class RecallGateSpec extends SparkSpec {
     // through a graded-config change) must trip these absolute floors
     val docs = Tables.load(spark, sf, "documents")
     val m = graft.text.TextAnalysis.retrievalEval(docs, "doc_id", "text",
-        SparkEntry.q200Queries, k = 50, cutoff = 10)
+        graft.lanes.TextLanes.q200Queries, k = 50, cutoff = 10)
       .agg(sum("rr_nano"), sum("p_nano"), sum("r_nano"), count(lit(1)))
       .head
     val n = m.getLong(3)
     val (mrr, p10, r10) = (m.getLong(0) / n, m.getLong(1) / n,
       m.getLong(2) / n)
     info(s"mrr_nano=$mrr p10_nano=$p10 r10_nano=$r10 over $n queries")
-    assert(n == SparkEntry.q200Queries.size.toLong)
+    assert(n == graft.lanes.TextLanes.q200Queries.size.toLong)
     assert(mrr >= 300000000L, s"mrr_nano = $mrr") // MRR >= 0.3
     assert(p10 > 0L, s"p10_nano = $p10")
     assert(r10 >= 100000000L, s"r10_nano = $r10") // R@10 >= 0.1

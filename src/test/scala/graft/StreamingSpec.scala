@@ -258,6 +258,64 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("ewmaStreamOrdered registers no timer that already exists") {
+    // one key gets rows in three micro-batches; the later two carry no
+    // newer event time, so the watermark stands still between them and a
+    // per-batch registration at watermark + 1 would collide with the
+    // timer the first of them set
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val collisions = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new AbstractAppender("timer-collisions", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("Failed to register timer"))
+          collisions.incrementAndGet()
+    }
+    counter.start()
+    val timerLog = LogManager.getLogger("org.apache.spark.sql.execution." +
+      "streaming.operators.stateful.transformwithstate.timers.TimerStateImpl")
+      .asInstanceOf[CoreLogger]
+    val prevLevel = timerLog.getLevel
+    timerLog.addAppender(counter)
+    timerLog.setLevel(Level.WARN)
+    try {
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft_otimer").toString
+      Seq("2024-01-05 10:00:00", "2024-01-05 09:00:00", "2024-01-05 08:00:00")
+        .zipWithIndex.foreach { case (ts, i) =>
+          Seq((1L, java.sql.Timestamp.valueOf(ts), i.toLong, 100.0 + i))
+            .toDF("user_id", "ts", "event_id", "value")
+            .coalesce(1).write.mode("append").parquet(dir)
+        }
+      val schema = spark.read.parquet(dir).schema
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+        .transform(df => EventStreams.ewmaStreamOrdered(spark, df,
+          threshold = 150.0, watermark = "2 days"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName("otimer_out")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+      assert(collisions.get() == 0)
+    } finally {
+      timerLog.removeAppender(counter)
+      timerLog.setLevel(prevLevel)
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("nearDupCandidates: stream-stream band join finds planted near-dups") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog and keeps on " +
