@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.lanes.{Gate, GateFixture, Gates}
+
 import scala.util.control.NonFatal
 
 /** Benchmark main. Prints ONE compact JSON line as the LAST stdout line —
@@ -21,6 +23,76 @@ object Bench {
     "q61_matrix_impute", "q69_neardup_canonical", "q85_ivf_ann")
 
   private def jnum(v: Double): String = f"$v%.3f"
+
+  private val capstones: Seq[(String, (SparkSession, String, String) => (Double, Double, Long))] =
+    Seq("etl_capstone" -> Etl.capstone _, "corpus_capstone" -> Etl.corpusCapstone _,
+      "linkage_capstone" -> Etl.linkageCapstone _)
+
+  /** A capstone's kept pass and its first pass, each (core, checks)
+    * seconds; a core of -1 marks a failed or skipped pass. */
+  private[graft] final case class CapstoneTimes(core: Double, checks: Double,
+                                               firstCore: Double, firstChecks: Double) {
+    private def total(c: Double, k: Double) = if (c < 0) -1.0 else c + k
+
+    /** (key suffix, seconds, also on the compact line), in output order. */
+    def keyed: Seq[(String, Double, Boolean)] = Seq(
+      ("", total(core, checks), true), ("_core", core, true),
+      ("_checks", checks, true), ("_first_pass", total(firstCore, firstChecks), true),
+      ("_first_pass_core", firstCore, false), ("_first_pass_checks", firstChecks, false))
+  }
+
+  /** Each gate's keys and nanos, in order. A gate that throws records -1
+    * for each of its keys, and every gate's cached and checkpointed blocks
+    * are released whether it passed or threw. */
+  private[graft] def runGates(gates: Seq[Gate], f: GateFixture): Seq[(String, Long)] =
+    gates.flatMap { g =>
+      val nanos =
+        try {
+          val v = g.nanos(f)
+          require(v.size == g.keys.size, s"${v.size} values for ${g.keys.size} keys")
+          v
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] gate ${g.keys.mkString(",")} failed: ${e.getMessage}")
+          g.keys.map(_ => -1L)
+        } finally graft.util.SessionHygiene.releaseAll(f.spark)
+      g.keys.zip(nanos)
+    }
+
+  /** (bench_full.json, the compact last line). Both share the header; the
+    * full file adds every capstone key (`<label><suffix>_sec`), the gates,
+    * the failed lanes and every query with its differing first pass,
+    * slowest first; the compact line carries only the headline queries and
+    * the first four keys of each capstone (`<label><suffix>`). */
+  private[graft] def render(sfDir: String, results: Seq[(String, Double)],
+                            firstPass: Seq[(String, Option[Double])],
+                            capstoneTimes: Seq[(String, CapstoneTimes)],
+                            gates: Seq[(String, Long)],
+                            failedLanes: Seq[String]): (String, String) = {
+    def str(v: String) = "\"" + v + "\""
+    def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+    val head = Seq("metric" -> str("total"), "value" -> jnum(results.map(_._2).sum),
+      "unit" -> str("sec"), "n_queries" -> results.size.toString)
+    val caps = capstoneTimes.flatMap { case (label, t) =>
+      t.keyed.map { case (suffix, v, compact) => (label + suffix, v, compact) }
+    }
+    val firstMap = firstPass.toMap
+    val queries = results.sortBy(-_._2).flatMap { case (k, v) =>
+      (k -> jnum(v)) +: firstMap(k).filter(_ != v).map(fp => s"${k}__first_pass" -> jnum(fp)).toSeq
+    }
+    val full = obj(head ++
+      Seq("total_first_pass" -> jnum(firstPass.flatMap(_._2).sum)) ++
+      caps.map { case (k, v, _) => s"${k}_sec" -> jnum(v) } ++
+      gates.map { case (k, v) => k -> v.toString } ++
+      Seq("failed_lanes" -> failedLanes.map(str).mkString("[", ",", "]"),
+        "queries" -> obj(queries), "sf" -> str(sfDir)))
+    val resMap = results.toMap
+    val compact = obj(head ++ Seq(
+      "queries" -> obj(headline.flatMap(k => resMap.get(k).map(v => k -> jnum(v))) ++
+        caps.collect { case (k, v, true) => k -> jnum(v) }),
+      "sf" -> str(sfDir)))
+    (full, compact)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -147,31 +219,26 @@ object Bench {
         name -> best
       }
     }
-    // Whole-pipeline capstone: the chained harvest → allocation → mcoe →
-    // plant-parts → checks lineage (Etl.buildWide), timed end-to-end
-    // including the parquet writes and the validation pass — the
-    // apples-to-apples number against the reference's published
-    // whole-ETL wall time. Not part of the per-query suite (it
-    // materializes real output), recorded as its own entry.
-    def rm(f: java.io.File): Unit = {
-      // listFiles returns null on IO error; an NPE here would mask
-      // the capstone's original exception
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(); ()
-    }
-    // capstones report (core = lineage+write, checks = validation) apart,
-    // so a growing check suite never reads as a lineage regression.
+    // Capstones: each chained lineage (Etl.capstone: harvest → allocation →
+    // mcoe → plant-parts → checks; its training-data twin
+    // Etl.corpusCapstone; its record-linkage twin Etl.linkageCapstone),
+    // timed end-to-end including the parquet writes and the validation
+    // pass — the apples-to-apples number against the reference's published
+    // whole-ETL wall time. Not part of the per-query suite (they
+    // materialize real output), recorded as their own entries.
+    // Core (lineage+write) and checks (validation) are reported apart, so
+    // a growing check suite never reads as a lineage regression.
     // Min-of-two, same policy as the query suite: each capstone runs
     // TWICE (each pass in a fresh temp dir, with SessionHygiene.releaseAll
     // between, outside any timed window) and the run with the smaller
     // core+checks total is KEPT WHOLE — core and checks always come from
     // the same pass, so the split stays internally consistent. The pass-1
-    // raw numbers are returned beside the kept run and recorded as
+    // raw numbers are kept beside the kept run and recorded as
     // `*_first_pass_*` keys so round-over-round comparison has a
     // consistent basis (round 12/13 single-run capstone numbers swung
     // 2-5× on driver-host contention with zero code change).
     def timeCapstone(label: String)(
-        run: String => (Double, Double, Long)): (Double, Double, Double, Double) = {
+        run: String => (Double, Double, Long)): CapstoneTimes = {
       def once(): (Double, Double) = {
         val dir = java.nio.file.Files.createTempDirectory(s"graft_$label")
         try {
@@ -184,7 +251,7 @@ object Bench {
           (-1.0, 0.0)
         } finally {
           graft.util.SessionHygiene.releaseAll(spark)
-          rm(dir.toFile)
+          Verify.rmTree(dir.toFile)
         }
       }
       val (c1, k1) = once()
@@ -195,314 +262,35 @@ object Bench {
         else if (c1 < 0) false
         else (c1 + k1) <= (c2 + k2)
       val (c, k) = if (keepFirst) (c1, k1) else (c2, k2)
-      (c, k, c1, k1)
+      CapstoneTimes(c, k, c1, k1)
     }
-    val (capstoneCore, capstoneChecks, capstoneFpCore, capstoneFpChecks) =
-      if (skipCapstones) (-1.0, 0.0, -1.0, 0.0)
-      else timeCapstone("etl_capstone")(Etl.capstone(spark, sfDir, _))
-    val capstoneSec =
-      if (capstoneCore < 0) -1.0 else capstoneCore + capstoneChecks
-    val capstoneFpSec =
-      if (capstoneFpCore < 0) -1.0 else capstoneFpCore + capstoneFpChecks
-    // the training-data pipeline twin: dedup → decontaminate → quality →
-    // mixture → split → pack, one lineage, timed with write + checks
-    val (corpusCore, corpusChecks, corpusFpCore, corpusFpChecks) =
-      if (skipCapstones) (-1.0, 0.0, -1.0, 0.0)
-      else timeCapstone("corpus_capstone")(Etl.corpusCapstone(spark, sfDir, _))
-    val corpusSec = if (corpusCore < 0) -1.0 else corpusCore + corpusChecks
-    val corpusFpSec =
-      if (corpusFpCore < 0) -1.0 else corpusFpCore + corpusFpChecks
-    // the record-linkage twin: name canon -> phonetic blocking -> FS
-    // train -> predict -> best match, one lineage, write + checks
-    val (linkCore, linkChecks, linkFpCore, linkFpChecks) =
-      if (skipCapstones) (-1.0, 0.0, -1.0, 0.0)
-      else timeCapstone("linkage_capstone")(
-        Etl.linkageCapstone(spark, sfDir, _))
-    val linkSec = if (linkCore < 0) -1.0 else linkCore + linkChecks
-    val linkFpSec = if (linkFpCore < 0) -1.0 else linkFpCore + linkFpChecks
-    // Per-round imputer WMAPE gate (judge r14 brief #2): the LATC/tubal
-    // lanes are `no_oracle` by design (float-iterative), so their only
-    // quantitative regression signal is this recorded number — the
-    // reference gates its imputations the same way
-    // (timeseries_cleaning.py:2189-2240 MAPE thresholds). Runs the full
-    // simulate→impute→score loop (ImputationEval.latc/tubalEvalOnEvents)
-    // once per bench on the bench fixture; recorded in bench_full.json as
-    // wmape NANOS (exact half-cent integer scoring), not timed as a
-    // query. Skipped on filtered runs (SPARK_GRAFT_ONLY / capstones-only)
-    // — the gate belongs to the full per-round suite.
-    def wmapeOf(eval: => org.apache.spark.sql.DataFrame): Long =
-      if (skipCapstones || capsOnly) -1L
-      else try {
-        val (_, _, _, nano) = graft.impute.ImputationEval.overallWmape(eval)
-        graft.util.SessionHygiene.releaseAll(spark)
-        nano
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] imputer eval failed: ${e.getMessage}")
-        -1L
-      }
-    val latcWmapeNano = wmapeOf(graft.impute.ImputationEval
-      .latcEvalOnEvents(Tables.load(spark, sfDir, "events")))
-    val tubalWmapeNano = wmapeOf(graft.impute.ImputationEval
-      .tubalEvalOnEvents(Tables.load(spark, sfDir, "events")))
-    // Structured-grid QUALITY pair (judge r15 brief #5): the divergence
-    // WMAPEs above track harness regressions; imputer quality is the
-    // planted rank-1 grid where LATC must beat the per-series median
-    // (ImputeSpec holds the comparative gate; these record the actual
-    // numbers per round so a quality drift is visible in the artifact).
-    def gridNano(f: => Long): Long =
-      if (skipCapstones || capsOnly) -1L
-      else try { val n = f; n }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] grid wmape failed: ${e.getMessage}")
-        -1L
-      } finally graft.util.SessionHygiene.releaseAll(spark)
-    val latcGridNano = gridNano(graft.impute.ImputationEval
-      .latcGridWmapeNano(Tables.load(spark, sfDir, "events")))
-    val medianGridNano = gridNano(graft.impute.ImputationEval
-      .medianGridWmapeNano(Tables.load(spark, sfDir, "events")))
-    // Per-round ANN recall@10 gate (judge r14 brief #6, the WMAPE twin
-    // for the index lanes): the five ANN queries (q43/q85/q125/q159/q162)
-    // are hash-exact vs an oracle that REPLAYS the same algorithm, so a
-    // recall regression — a config or hash-family change that silently
-    // prunes true neighbors — is invisible to the correctness gate.
-    // Recorded here as Similarity.recallAtK (|approx ∩ exact| / |exact|,
-    // exact integer ratio ×1e9) of each index at ITS GRADED CONFIG
-    // against brute-force cosineTopK on the same bounded query set
-    // (vec_id < 20, k = 10). Not timed as a query; skipped on filtered /
-    // capstones-only runs like the WMAPE gate. RecallGateSpec holds the
-    // absolute per-index floors on the test fixture.
-    // The exact brute-force baseline is the expensive side of the gate and
-    // identical for all five indexes — compute it ONCE and pin the result
-    // (|queries|·k = 200 rows) as a local relation the gates reuse, instead
-    // of re-running the brute force per index.
-    val recallExact: Option[org.apache.spark.sql.DataFrame] =
-      if (skipCapstones || capsOnly) None
-      else try {
-        import graft.similarity.Similarity
-        import org.apache.spark.sql.functions.col
-        val emb = Tables.load(spark, sfDir, "embeddings")
-        val qs = emb.where(col("vec_id") < 20)
-        val base = Similarity.cosineTopK(qs, emb, "vec_id", "embedding", 10)
-          .select(col("q_id"), col("rk"), col("c_id"))
-        val rows = base.collect()
-        Some(spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), base.schema))
-      } catch { case e: Throwable =>
-        System.err.println(
-          s"[bench] recall exact baseline failed: ${e.getMessage}")
-        None
-      } finally graft.util.SessionHygiene.releaseAll(spark)
-    def recall10Of(
-        ann: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)
-          => org.apache.spark.sql.DataFrame): Long =
-      recallExact match {
-        case None => -1L
-        case Some(exact) =>
-          // releaseAll in finally: a failure mid-gate must not leave cached
-          // blocks alive for the rest of the benchmark run
-          try {
-            import graft.similarity.Similarity
-            import org.apache.spark.sql.functions.col
-            val emb = Tables.load(spark, sfDir, "embeddings")
-            val qs = emb.where(col("vec_id") < 20)
-            val row = Similarity.recallAtK(exact, ann(qs, emb), 10)
-              .select((col("recall") * 1e9).cast("long")).head
-            // recallAtK reports an explicit 0.0 on an empty exact side;
-            // a null here is a genuinely malformed result → sentinel
-            if (row.isNullAt(0)) -1L else row.getLong(0)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] recall gate failed: ${e.getMessage}")
-            -1L
-          } finally graft.util.SessionHygiene.releaseAll(spark)
-      }
-    // Round-16: the same recorded-recall discipline for the two other
-    // approximate lanes the judge flagged — the LSH-blocked orphan
-    // assignment (q99's graded config vs the brute-force nearest) and
-    // banded hard-negative mining (q154's exact twin vs the narrow-band
-    // scale path). Each gate builds its own (exact, approx) pair and
-    // reports the exact integer pair-set recall ×1e9.
-    def recallGateOf(k: Int)(
-        build: => (org.apache.spark.sql.DataFrame,
-                   org.apache.spark.sql.DataFrame)): Long =
-      if (skipCapstones || capsOnly) -1L
-      else try {
-        import graft.similarity.Similarity
-        import org.apache.spark.sql.functions.col
-        val (exactDf, approxDf) = build
-        val row = Similarity.recallAtK(exactDf, approxDf, k)
-          .select((col("recall") * 1e9).cast("long")).head
-        if (row.isNullAt(0)) -1L else row.getLong(0)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] recall gate failed: ${e.getMessage}")
-        -1L
-      } finally graft.util.SessionHygiene.releaseAll(spark)
-    import graft.similarity.Similarity
-    def orphanPair(probed: Boolean) = {
-      import org.apache.spark.sql.functions.{col, lit}
-      val emb = Tables.load(spark, sfDir, "embeddings")
-      val orphans = emb.where(col("vec_id") < 50)
-      val clustered = emb.where(col("vec_id") >= 50)
-        .withColumn("cluster", col("vec_id") % 7)
-      def top1(df: org.apache.spark.sql.DataFrame) = df.select(
-        col("orphan_id").as("q_id"), lit(1).as("rk"),
-        col("neighbor_id").as("c_id"))
-      (top1(Similarity.nearestAssign(orphans, clustered, "vec_id",
-         "embedding", "cluster")),
-       top1(Similarity.nearestAssignBlocked(orphans, clustered, "vec_id",
-         "embedding", "cluster", dim = 64, nBits = 24, bands = 4,
-         bandProbe1 = probed)))
+    val capstoneTimes = capstones.map { case (label, run) =>
+      label -> (if (skipCapstones) CapstoneTimes(-1.0, 0.0, -1.0, 0.0)
+                else timeCapstone(label)(run(spark, sfDir, _)))
     }
-    val recallOrphanNano = recallGateOf(1)(orphanPair(probed = false))
-    // q205's orphan-side radius-1 probing vs the same brute-force twin
-    val recallOrphanProbedNano = recallGateOf(1)(orphanPair(probed = true))
-    val recallHardNegNano = recallGateOf(5) {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.load(spark, sfDir, "embeddings")
-      val q = emb.where(col("vec_id") < 20)
-      (Similarity.hardNegatives(q, emb, "vec_id", "embedding", "label", 5),
-       Similarity.hardNegatives(q, emb, "vec_id", "embedding", "label", 5,
-         bandedDim = Some(64), nBits = 24, bands = 12))
-    }
-    // q96's p-stable euclidean LSH vs the exact eps-pair twin (pairs
-    // touching the bounded query set; the twin mirrors the lane's exact
-    // |a-b|² expression term-for-term so the boundary filter agrees).
-    val recallEucNano = recallGateOf(1) {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.load(spark, sfDir, "embeddings")
-      val eps = 1.1
-      val e = emb.select(col("vec_id"), col("embedding"))
-        .withColumn("__n2",
-          Similarity.dotFast(col("embedding"), col("embedding")))
-      val ea = e.select(col("vec_id").as("id_a"),
-        col("embedding").as("__ea"), col("__n2").as("__na2"))
-      val eb = e.select(col("vec_id").as("id_b"),
-        col("embedding").as("__eb"), col("__n2").as("__nb2"))
-      val exactPairs = ea.where(col("id_a") < 20).crossJoin(eb)
-        .where(col("id_a") < col("id_b"))
-        .withColumn("__d2",
-          col("__na2")
-            - lit(2.0) * Similarity.dotFast(col("__ea"), col("__eb"))
-            + col("__nb2"))
-        .where(col("__d2") <= eps * eps)
-        .select(col("id_a").as("q_id"), lit(1).as("rk"),
-          col("id_b").as("c_id"))
-      val approx = Similarity.euclideanNearPairs(emb, "vec_id",
-          "embedding", dim = 64, eps = eps, w = 2.0, tables = 8)
-        .where(col("id_a") < 20)
-        .select(col("id_a").as("q_id"), lit(1).as("rk"),
-          col("id_b").as("c_id"))
-      (exactPairs, approx)
-    }
-    // q130's banded SemDeDup vs its exact all-pairs twin: set recall of
-    // the flagged-duplicate ids (c_id pinned — recallAtK degenerates to
-    // |banded ∩ exact| / |exact| over the dup sets). Both sides run the
-    // GRADED config — data-scaled k (max(8, ceil(n/250)), round 17) — so
-    // the recorded number tracks the production operating mode; at the
-    // sf0.1 bench fixture the derived k is still 8 (2000/250), keeping
-    // the gate bit-comparable with rounds 15–16.
-    def semDedupDups(bandedDim: Option[Int], probed: Boolean) = {
-      import org.apache.spark.sql.functions._
-      val emb = Tables.load(spark, sfDir, "embeddings")
-      Similarity.semDedup(emb, "vec_id", "embedding", k = 8, iters = 1,
-          tau = 0.4, bandedDim = bandedDim, bandProbe1 = probed,
-          targetClusterRows = 250)
-        .where(col("is_dup"))
-        .select(col("vec_id").as("q_id"),
-          org.apache.spark.sql.functions.lit(1).as("rk"),
-          org.apache.spark.sql.functions.lit(0L).as("c_id"))
-    }
-    val recallSemDedupNano = recallGateOf(1) {
-      (semDedupDups(None, probed = false), semDedupDups(Some(64), probed = false))
-    }
-    // q202's radius-1 band probing vs the same exact twin: the recorded
-    // answer to the 0.27 banding gap at unchanged blocked-side cost.
-    val recallSemDedupProbedNano = recallGateOf(1) {
-      (semDedupDups(None, probed = false), semDedupDups(Some(64), probed = true))
-    }
-    val recallLshNano = recall10Of((q, c) => Similarity.lshTopK(q, c,
-      "vec_id", "embedding", 10, nBits = 6, dim = 64, tables = 8))
-    // Multi-probe on the SAME index as the lsh gate (q199's graded config):
-    // the recorded pair shows what 4 probes buy over 1 at zero index cost.
-    val recallMpLshNano = recall10Of((q, c) => Similarity.lshMultiProbeTopK(
-      q, c, "vec_id", "embedding", 10, nBits = 6, dim = 64, tables = 8,
-      probes = 4))
-    val recallIvfNano = recall10Of((q, c) => Similarity.ivfTopKSeeded(q, c,
-      "vec_id", "embedding", 10, nCells = 16, nProbe = 4))
-    val recallSq8Nano = recall10Of((q, c) => Similarity.sq8TopK(q, c,
-      "vec_id", "embedding", 10))
-    val recallPqNano = recall10Of((q, c) => Similarity.pqTopKSeeded(q, c,
-      "vec_id", "embedding", 10, m = 16, nCodes = 64))
-    // q206's two-stage shape: 50-candidate ADC shortlist -> exact re-rank.
-    // The pair (pq vs pq_rerank) shows what the re-rank stage buys.
-    val recallPqRerankNano = recall10Of((q, c) => Similarity.rerankExact(
-      Similarity.pqTopKSeeded(q, c, "vec_id", "embedding", 50, m = 16,
-        nCodes = 64), q, c, "vec_id", "embedding", 10))
-    val recallIvfPqRerankNano = recall10Of((q, c) => Similarity.rerankExact(
-      Similarity.ivfPqTopKSeeded(q, c, "vec_id", "embedding", 50,
-        nCells = 16, nProbe = 4, m = 16, nCodes = 64),
-      q, c, "vec_id", "embedding", 10))
-    val recallIvfPqNano = recall10Of((q, c) => Similarity.ivfPqTopKSeeded(q,
-      c, "vec_id", "embedding", 10, nCells = 16, nProbe = 4, m = 16,
-      nCodes = 64))
-    // Round-17 (judge r16 brief #6): ranking QUALITY into the recorded
-    // gate family. q200's MRR/P@10/R@10 are oracle-checked per round
-    // (engine ≡ replay), but a graded-config or relevance-rule change
-    // that shifts the metrics themselves was invisible in the artifact —
-    // these record the fleet-level numbers the way the 20 recall/WMAPE
-    // gates are recorded. Exact integers end-to-end: per-query nanos
-    // from retrievalEval (already integer), summed and floor-divided by
-    // the query count — bit-stable across runs by construction.
-    // RetrievalGate floors live in RecallGateSpec.
-    val (mrrNano, p10Nano, r10Nano): (Long, Long, Long) =
-      if (skipCapstones || capsOnly) (-1L, -1L, -1L)
-      else try {
-        import org.apache.spark.sql.functions.{count => fcount, lit => flit, sum => fsum}
-        val docs = Tables.load(spark, sfDir, "documents")
-        val m = graft.text.TextAnalysis.retrievalEval(docs, "doc_id",
-            "text", graft.lanes.TextLanes.q200Queries, k = 50, cutoff = 10)
-          .agg(fsum("rr_nano"), fsum("p_nano"), fsum("r_nano"),
-            fcount(flit(1)))
-          .head
-        val n = m.getLong(3)
-        if (n == 0L) (-1L, -1L, -1L)
-        else (m.getLong(0) / n, m.getLong(1) / n, m.getLong(2) / n)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] retrieval gate failed: ${e.getMessage}")
-        (-1L, -1L, -1L)
-      } finally graft.util.SessionHygiene.releaseAll(spark)
-    val total = results.map(_._2).sum
-    val firstMap = firstPass.toMap
-    val failedJson = failedLanes.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullJson = results.sortBy(-_._2)
-      .map { case (k, v) =>
-        "\"" + k + "\":" + jnum(v) + firstMap(k).filter(_ != v)
-          .map(fp => ",\"" + k + "__first_pass\":" + jnum(fp)).getOrElse("")
-      }
-      .mkString(
-        s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"total_first_pass":${jnum(firstPass.flatMap(_._2).sum)},"etl_capstone_sec":${jnum(capstoneSec)},"etl_capstone_core_sec":${jnum(capstoneCore)},"etl_capstone_checks_sec":${jnum(capstoneChecks)},"etl_capstone_first_pass_sec":${jnum(capstoneFpSec)},"etl_capstone_first_pass_core_sec":${jnum(capstoneFpCore)},"etl_capstone_first_pass_checks_sec":${jnum(capstoneFpChecks)},"corpus_capstone_sec":${jnum(corpusSec)},"corpus_capstone_core_sec":${jnum(corpusCore)},"corpus_capstone_checks_sec":${jnum(corpusChecks)},"corpus_capstone_first_pass_sec":${jnum(corpusFpSec)},"corpus_capstone_first_pass_core_sec":${jnum(corpusFpCore)},"corpus_capstone_first_pass_checks_sec":${jnum(corpusFpChecks)},"linkage_capstone_sec":${jnum(linkSec)},"linkage_capstone_core_sec":${jnum(linkCore)},"linkage_capstone_checks_sec":${jnum(linkChecks)},"linkage_capstone_first_pass_sec":${jnum(linkFpSec)},"linkage_capstone_first_pass_core_sec":${jnum(linkFpCore)},"linkage_capstone_first_pass_checks_sec":${jnum(linkFpChecks)},"latc_wmape_nano":$latcWmapeNano,"tubal_wmape_nano":$tubalWmapeNano,"latc_grid_wmape_nano":$latcGridNano,"median_grid_wmape_nano":$medianGridNano,"recall10_lsh_nano":$recallLshNano,"recall10_mplsh_nano":$recallMpLshNano,"recall10_ivf_nano":$recallIvfNano,"recall10_sq8_nano":$recallSq8Nano,"recall10_pq_nano":$recallPqNano,"recall10_pq_rerank_nano":$recallPqRerankNano,"recall10_ivfpq_rerank_nano":$recallIvfPqRerankNano,"recall10_ivfpq_nano":$recallIvfPqNano,"recall1_orphan_nano":$recallOrphanNano,"recall1_orphan_probed_nano":$recallOrphanProbedNano,"recall5_hardneg_nano":$recallHardNegNano,"recall_eucpairs_nano":$recallEucNano,"recall_semdedup_nano":$recallSemDedupNano,"recall_semdedup_probed_nano":$recallSemDedupProbedNano,"mrr_nano":$mrrNano,"p10_nano":$p10Nano,"r10_nano":$r10Nano,"failed_lanes":$failedJson,"queries":{""",
-        ",", s"""},"sf":"$sfDir"}""")
+    // Per-round quality gates (lanes.Gates, one declaration each): the
+    // imputer WMAPEs, the recall of every approximate lane at its graded
+    // config against its exact twin, and q200's retrieval metrics. Those
+    // lanes are either `no_oracle` by design or hash-exact vs an oracle
+    // that REPLAYS the same algorithm, so a quality regression — a config
+    // or hash-family change that silently prunes true neighbors — is
+    // invisible to the correctness gate; these recorded numbers are its
+    // signal (the reference gates its imputations the same way,
+    // timeseries_cleaning.py:2189-2240). Exact integer nanos, not timed as
+    // queries. Skipped on filtered runs (SPARK_GRAFT_ONLY / capstones-only)
+    // — the gates belong to the full per-round suite.
+    val gateValues =
+      if (skipCapstones || capsOnly) Gates.all.flatMap(_.keys.map(_ -> -1L))
+      else runGates(Gates.all, new GateFixture(spark, sfDir))
+    val (fullJson, compactLine) =
+      render(sfDir, results, firstPass, capstoneTimes, gateValues, failedLanes)
     try {
       val w = new java.io.PrintWriter("bench_full.json")
       try w.println(fullJson) finally w.close()
     } catch { case _: Throwable => () }
     System.err.println(fullJson) // full detail on stderr for local runs
-    val resMap = results.toMap
-    val qs = (headline.flatMap(k => resMap.get(k).map(v => "\"" + k + "\":" + jnum(v))) :+
-        ("\"etl_capstone\":" + jnum(capstoneSec)) :+
-        ("\"etl_capstone_core\":" + jnum(capstoneCore)) :+
-        ("\"etl_capstone_checks\":" + jnum(capstoneChecks)) :+
-        ("\"etl_capstone_first_pass\":" + jnum(capstoneFpSec)) :+
-        ("\"corpus_capstone\":" + jnum(corpusSec)) :+
-        ("\"corpus_capstone_core\":" + jnum(corpusCore)) :+
-        ("\"corpus_capstone_checks\":" + jnum(corpusChecks)) :+
-        ("\"corpus_capstone_first_pass\":" + jnum(corpusFpSec)) :+
-        ("\"linkage_capstone\":" + jnum(linkSec)) :+
-        ("\"linkage_capstone_core\":" + jnum(linkCore)) :+
-        ("\"linkage_capstone_checks\":" + jnum(linkChecks)) :+
-        ("\"linkage_capstone_first_pass\":" + jnum(linkFpSec)))
-      .mkString("{", ",", "}")
     // The one parseable line, printed LAST so it lands inside the tail.
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"sf":"$sfDir"}""")
+    println(compactLine)
     spark.stop()
   }
 }

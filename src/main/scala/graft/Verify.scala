@@ -4,6 +4,14 @@ import java.nio.file.{Files, Paths}
 /** Correctness dump: each lane's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Deletes `f` and everything under it. listFiles returns null on an IO
+    * error; that directory is skipped rather than thrown on, so a caller's
+    * original exception is not masked. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
+    f.delete(); ()
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated lane names (local iteration); "-"
@@ -18,10 +26,6 @@ object Verify {
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-      f.delete(); ()
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,6 +1,7 @@
 package graft
 package lanes
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Similarity
@@ -9,7 +10,9 @@ import OracleFragments.{ccReach, embeddingNorms, planeProjections, planeSigns}
 
 /** Vector-similarity lanes: exact and approximate nearest neighbours
   * (LSH, IVF, SQ8, PQ), embedding near-dups, orphan assignment,
-  * semantic dedup and hard-negative mining. */
+  * semantic dedup and hard-negative mining. Each graded index config is
+  * one builder here that its lane and its recall gate ([[Gates]]) both
+  * call, so a config change moves the gate it should trip. */
 object AnnLanes extends LaneFamily {
 
   // ---- similarity search: brute-force cosine top-k ------------------------
@@ -22,11 +25,13 @@ object AnnLanes extends LaneFamily {
   // ---- similarity search: LSH-bucketed ANN (scale path). Portable
   // Rademacher planes → the DuckDB oracle rebuilds all 8 hash tables,
   // buckets, candidates and the top-k ranking exactly.
+  private[graft] def lshIndex(q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    Similarity.lshTopK(q, c, idCol = "vec_id", embCol = "embedding", k = k,
+      nBits = 6, dim = 64, tables = 8)
+
   lane("q43_lsh_ann") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    Similarity.lshTopK(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nBits = 6, dim = 64,
-      tables = 8)
+    lshIndex(emb.where(col("vec_id") < 20), emb, 5)
   }.oracle(annLshTopkSql(5))
 
   // ---- §2.11 orphan nearest-neighbor assignment --------------------------
@@ -90,10 +95,13 @@ object AnnLanes extends LaneFamily {
   // seed set, cell assignment, probes and ranking all replayed by the
   // DuckDB oracle; the Lloyd-trained variant stays recall-tested in
   // SimilaritySpec) --------------------------------------------------------
+  private[graft] def ivfIndex(q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    Similarity.ivfTopKSeeded(q, c, idCol = "vec_id", embCol = "embedding",
+      k = k, nCells = 16, nProbe = 4)
+
   lane("q85_ivf_ann") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    Similarity.ivfTopKSeeded(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nCells = 16, nProbe = 4)
+    ivfIndex(emb.where(col("vec_id") < 20), emb, 5)
   }.oracle(
     """WITH hashed AS (
       |  SELECT vec_id, embedding,
@@ -168,9 +176,14 @@ object AnnLanes extends LaneFamily {
   // ---- §2.11 DistanceMatrix replacement under its own metric: p-stable
   // euclidean LSH near pairs (grid buckets per table, exact |a-b| <= eps
   // inside buckets). Portable grids → oracle-replayed end-to-end.
+  private[graft] val euclideanEps = 1.1
+
+  private[graft] def euclideanPairs(emb: DataFrame): DataFrame =
+    Similarity.euclideanNearPairs(emb, "vec_id", "embedding", dim = 64,
+      eps = euclideanEps, w = 2.0, tables = 8)
+
   lane("q96_euclidean_pairs") { (s, dir) =>
-    Similarity.euclideanNearPairs(t(s, dir, "embeddings"), "vec_id",
-      "embedding", dim = 64, eps = 1.1, w = 2.0, tables = 8)
+    euclideanPairs(t(s, dir, "embeddings"))
   }.oracle(
     """WITH grids AS (
       |  SELECT t,
@@ -213,13 +226,21 @@ object AnnLanes extends LaneFamily {
   // orphans × clustered product never forms — candidates meet on the
   // (band, bits) equi-join over portable Rademacher planes, so the DuckDB
   // oracle replays blocking, scoring and top-1 exactly.
-  lane("q99_orphan_assign_lsh") { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-    val orphans = emb.where(col("vec_id") < 50)
-    val clustered = emb.where(col("vec_id") >= 50)
-      .withColumn("cluster", col("vec_id") % 7)
+  /** q99/q205's split: the first 50 vectors are orphans, the rest are
+    * clustered by `vec_id % 7`. */
+  private[graft] def orphanSplit(emb: DataFrame): (DataFrame, DataFrame) =
+    (emb.where(col("vec_id") < 50),
+     emb.where(col("vec_id") >= 50).withColumn("cluster", col("vec_id") % 7))
+
+  private[graft] def orphanAssignLsh(emb: DataFrame, probed: Boolean): DataFrame = {
+    val (orphans, clustered) = orphanSplit(emb)
     Similarity.nearestAssignBlocked(orphans, clustered, "vec_id",
-      "embedding", "cluster", dim = 64, nBits = 24, bands = 4)
+      "embedding", "cluster", dim = 64, nBits = 24, bands = 4,
+      bandProbe1 = probed)
+  }
+
+  lane("q99_orphan_assign_lsh") { (s, dir) =>
+    orphanAssignLsh(t(s, dir, "embeddings"), probed = false)
   }.oracle(
     // Blocked orphan assignment: same portable 24-plane / 6-bit-band
     // blocking as q95, then exact-cosine top-1 inside candidate buckets.
@@ -231,13 +252,7 @@ object AnnLanes extends LaneFamily {
   // band flip costs 7x on a 50-row frame while the clustered index is
   // untouched. Same q99 oracle with the flip CTE added (shared template).
   lane("q205_orphan_probed") { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-    val orphans = emb.where(col("vec_id") < 50)
-    val clustered = emb.where(col("vec_id") >= 50)
-      .withColumn("cluster", col("vec_id") % 7)
-    Similarity.nearestAssignBlocked(orphans, clustered, "vec_id",
-      "embedding", "cluster", dim = 64, nBits = 24, bands = 4,
-      bandProbe1 = true)
+    orphanAssignLsh(t(s, dir, "embeddings"), probed = true)
   }.oracle(orphanAssignOracleSql(probed = true))
 
   // ---- similarity: SQ8-quantized ANN (compressed-corpus scale path) ------
@@ -245,10 +260,12 @@ object AnnLanes extends LaneFamily {
   // bytes at the scoring join); queries stay raw (asymmetric/ADC). Codes
   // and dequantization are exact integer arithmetic on identically derived
   // doubles, so DuckDB replays the whole compressed ranking bit-for-bit.
+  private[graft] def sq8Index(q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    Similarity.sq8TopK(q, c, idCol = "vec_id", embCol = "embedding", k = k)
+
   lane("q125_sq8_ann") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    graft.similarity.Similarity.sq8TopK(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5)
+    sq8Index(emb.where(col("vec_id") < 20), emb, 5)
   }.oracle(
     """WITH e AS (SELECT vec_id, embedding FROM embeddings),
       |dims AS (
@@ -300,10 +317,16 @@ object AnnLanes extends LaneFamily {
 
   private val semDedupTargetRows = 250
 
+  /** The graded SemDeDup run: `bandedDim = None` is its exact all-pairs
+    * twin, `probed` adds q202's radius-1 band probing. */
+  private[graft] def semDedupRun(emb: DataFrame, bandedDim: Option[Int],
+                                 probed: Boolean): DataFrame =
+    Similarity.semDedup(emb, "vec_id", "embedding", k = semDedupKFloor,
+      iters = 1, tau = 0.4, bandedDim = bandedDim, bandProbe1 = probed,
+      targetClusterRows = semDedupTargetRows)
+
   lane("q130_semdedup") { (s, dir) =>
-    graft.similarity.Similarity.semDedup(t(s, dir, "embeddings"),
-      "vec_id", "embedding", k = semDedupKFloor, iters = 1, tau = 0.4,
-      bandedDim = Some(64), targetClusterRows = semDedupTargetRows)
+    semDedupRun(t(s, dir, "embeddings"), Some(64), probed = false)
   }.oracle(semDedupOracleSql(probed = false))
 
   // ---- training-data pipeline: pooled embedding centroids ----------------
@@ -378,10 +401,13 @@ object AnnLanes extends LaneFamily {
   // than the 64 floats), fixture recall 0.38 seeded / 0.55 Lloyd-trained
   // vs exact euclidean — the seed-codebook gap is the oracle tax, like
   // q85's routing and q100's portable digests.
+  private[graft] def pqIndex(q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    Similarity.pqTopKSeeded(q, c, idCol = "vec_id", embCol = "embedding",
+      k = k, m = 16, nCodes = 64)
+
   lane("q159_pq_adc") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    Similarity.pqTopKSeeded(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, m = 16, nCodes = 64)
+    pqIndex(emb.where(col("vec_id") < 20), emb, 5)
   }.oracle(
     // PQ ADC replay: portable-hash seed codebooks, rounded per-subspace
     // argmin encode, and the engine's exact ADC algebra —
@@ -396,11 +422,13 @@ object AnnLanes extends LaneFamily {
   // serving composition (codes hash-partitioned by cell, raw vectors
   // never reach the scoring join). Routing (q85), codes (q159) and
   // ranking all replay in the oracle.
+  private[graft] def ivfPqIndex(q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    Similarity.ivfPqTopKSeeded(q, c, idCol = "vec_id", embCol = "embedding",
+      k = k, nCells = 16, nProbe = 4, m = 16, nCodes = 64)
+
   lane("q162_ivfpq") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    Similarity.ivfPqTopKSeeded(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nCells = 16,
-      nProbe = 4, m = 16, nCodes = 64)
+    ivfPqIndex(emb.where(col("vec_id") < 20), emb, 5)
   }.oracle {
     // IVF-PQ replay: q85's rounded cell routing + q159's codes/norms,
     // ADC over candidates sharing a probed cell, fixed-order sums.
@@ -511,9 +539,7 @@ object AnnLanes extends LaneFamily {
     val qs = emb.where(col("vec_id") < 20)
     Similarity.recallAtK(
       Similarity.cosineTopK(qs, emb, "vec_id", "embedding", 10),
-      Similarity.lshTopK(qs, emb, "vec_id", "embedding", 10, nBits = 6,
-        dim = 64, tables = 8),
-      10)
+      lshIndex(qs, emb, 10), 10)
   }.oracle(
     // q192: recall@10 of the portable LSH vs brute force — both inputs
     // are the SAME parameterized SQL the q42/q43 graded lanes use, at
@@ -545,11 +571,14 @@ object AnnLanes extends LaneFamily {
   // only replicate the bounded QUERY side. The DuckDB oracle replays the
   // margins (bit-exact: in-order ±1 double sums), the probe ORDER, the
   // flipped buckets, candidates and the final ranking.
+  private[graft] def multiProbeLshIndex(q: DataFrame, c: DataFrame,
+                                        k: Int): DataFrame =
+    Similarity.lshMultiProbeTopK(q, c, idCol = "vec_id", embCol = "embedding",
+      k = k, nBits = 6, dim = 64, tables = 8, probes = 4)
+
   lane("q199_multiprobe_lsh") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    Similarity.lshMultiProbeTopK(emb.where(col("vec_id") < 20), emb,
-      idCol = "vec_id", embCol = "embedding", k = 5, nBits = 6, dim = 64,
-      tables = 8, probes = 4)
+    multiProbeLshIndex(emb.where(col("vec_id") < 20), emb, 5)
   }.oracle(annMultiProbeLshTopkSql(5, 4))
 
   // ---- similarity search: PQ shortlist + exact re-rank --------------------
@@ -559,12 +588,15 @@ object AnnLanes extends LaneFamily {
   // cosine, top-10 kept — the ADC quantization distortion is removed
   // entirely, recall becomes shortlist-coverage-bounded. Oracle = the
   // parameterized q159 replay at k = 50 embedded as the rerank's CTE.
+  /** `index`'s 50-candidate shortlist, re-ranked by exact cosine to the
+    * top k (q206 over [[pqIndex]]). */
+  private[graft] def reranked(index: (DataFrame, DataFrame, Int) => DataFrame)(
+      q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    Similarity.rerankExact(index(q, c, 50), q, c, "vec_id", "embedding", k = k)
+
   lane("q206_pq_rerank") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
-    val q = emb.where(col("vec_id") < 20)
-    val shortlist = Similarity.pqTopKSeeded(q, emb, "vec_id", "embedding",
-      k = 50, m = 16, nCodes = 64)
-    Similarity.rerankExact(shortlist, q, emb, "vec_id", "embedding", k = 10)
+    reranked(pqIndex)(emb.where(col("vec_id") < 20), emb, 10)
   }.oracle {
     // q206: the q159 ADC run widened to a 50-candidate shortlist (same
     // replay, parameterized k), then the exact-cosine re-rank — FAISS's
@@ -596,10 +628,7 @@ object AnnLanes extends LaneFamily {
   // UNCHANGED blocked-side cost. Same Lloyd trace, same tau; the oracle
   // replays the flips on top of the q130 replay (shared template).
   lane("q202_semdedup_probed") { (s, dir) =>
-    graft.similarity.Similarity.semDedup(t(s, dir, "embeddings"),
-      "vec_id", "embedding", k = semDedupKFloor, iters = 1, tau = 0.4,
-      bandedDim = Some(64), bandProbe1 = true,
-      targetClusterRows = semDedupTargetRows)
+    semDedupRun(t(s, dir, "embeddings"), Some(64), probed = true)
   }.oracle(semDedupOracleSql(probed = true))
 
   /** Exact brute-force cosine top-k oracle, parameterized by k: the q42

@@ -1726,9 +1726,13 @@ object TextLanes extends LaneFamily {
   // half of a retrieval pipeline. Metrics are exact integer nanos (one
   // integer division each; nothing float past the BM25 ranking), so the
   // whole row set replays bit-for-bit in the oracle.
+  /** q200's graded run, which its retrieval gate ([[Gates]]) also reads. */
+  private[graft] def retrievalRun(docs: DataFrame): DataFrame =
+    TextAnalysis.retrievalEval(docs, "doc_id", "text", q200Queries,
+      k = 50, cutoff = 10)
+
   lane("q200_retrieval_eval") { (s, dir) =>
-    TextAnalysis.retrievalEval(t(s, dir, "documents"), "doc_id", "text",
-      q200Queries, k = 50, cutoff = 10)
+    retrievalRun(t(s, dir, "documents"))
   }.oracle(q200OracleSql)
 
   // ---- training-data pipeline: bigram LM quality (stupid backoff) --------

@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, Cast, Expression, ExpressionInfo, Literal, Multiply}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftaccess.Internals
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
 
 /** Catalyst integration point: registers graft's native expressions in the
@@ -68,9 +69,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "hex60(x) - portable 60-bit hash: first 15 hex digits of md5(x) as a BIGINT") {
       case Seq(x) => Md5Prefix60(Cast(x, StringType))
     }
-    // Morton/Z-order key (operators.Layout.zorderValue) as SQL — the same
-    // static mask-and-multiply sum as the Column form (plain codegen'd
-    // long arithmetic), for clustered writes from the SQL front door
+    // Morton/Z-order key as SQL: Layout.zorderValue's mask-and-multiply
+    // sum (plain codegen'd long arithmetic), for clustered writes from the
+    // SQL front door
     register("zorder_key",
       "zorder_key(d1, d2, ..., bits) - Morton/Z-order interleave of the" +
         " low `bits` bits of each dimension as a BIGINT (bits*dims <= 62)") {
@@ -81,17 +82,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case _ => throw new IllegalArgumentException(
             "zorder_key: bits must be an integer literal")
         }
-        val dims = args.init
-        val n = dims.size
-        require(bits >= 1 && bits * n <= 62,
-          s"zorder_key: bits*dims must fit a positive long, got $bits*$n")
-        val terms = for {
-          (c, d) <- dims.zipWithIndex
-          masked = BitwiseAnd(Cast(c, LongType), Literal((1L << bits) - 1))
-          i <- 0 until bits
-        } yield Multiply(BitwiseAnd(masked, Literal(1L << i)),
-          Literal(1L << (i * (n - 1) + d))): Expression
-        terms.reduce((a, b) => Add(a, b))
+        Internals.converted(
+          graft.operators.Layout.zorderValue(args.init.map(Internals.column), bits))
     }
     register("wkb_from_polygons",
       "wkb_from_polygons(polys[, force_multi]) - little-endian WKB" +

@@ -398,7 +398,12 @@ object EventStreams {
     val right = buckets.select(col(idCol).as("id_b"), col(tsCol).as("ts_b"),
       col("band"), col("bucket"))
     left.join(right, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b") &&
+      // the pair order as an equality, not a range comparison between the
+      // two sides: Spark reads every range comparison in a stream-stream
+      // join condition as a candidate state-watermark bound, and on id_a <
+      // id_b that fails and logs a stack trace on every micro-batch plan
+      .where(least(col("id_a"), col("id_b")) === col("id_a") &&
+        col("id_a") =!= col("id_b") &&
         col("ts_b").between(
           col("ts_a") - expr(s"INTERVAL $joinWindow"),
           col("ts_a") + expr(s"INTERVAL $joinWindow")))

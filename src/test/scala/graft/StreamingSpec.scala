@@ -386,6 +386,51 @@ class StreamingSpec extends SparkSpec {
     assert(batchPairs.nonEmpty)
   }
 
+  test("nearDupCandidates plans log no state-constraint extraction error") {
+    // every micro-batch plan of a stream-stream join reads each range
+    // comparison in its condition as a candidate state-watermark bound;
+    // one between the two sides' ids cannot be evaluated and logs a full
+    // stack trace per plan
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import spark.implicits._
+    val errors = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new AbstractAppender("join-constraint-errors", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("StreamingJoinHelper") &&
+            e.getMessage.getFormattedMessage
+              .contains("Error trying to extract state constraint"))
+          errors.incrementAndGet()
+    }
+    counter.start()
+    // on the root logger of the context's live configuration, which every
+    // Spark logger reaches through additivity
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(counter, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      def ts(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
+      val text = "the quick brown fox jumps over the lazy dog again"
+      val dir = java.nio.file.Files.createTempDirectory("graft_neardup3").toString
+      Seq((1L, ts(0), text), (2L, ts(1), text + " twice"))
+        .toDF("doc_id", "ts", "text").write.mode("overwrite").parquet(dir)
+      val q = EventStreams.runToMemory(spark, spark.read.parquet(dir).schema,
+        dir, EventStreams.nearDupCandidates(_, "doc_id", "ts", "text"),
+        "neardup_log", org.apache.spark.sql.streaming.OutputMode.Append())
+      q.awaitTermination(60000)
+      assert(spark.table("neardup_log").select("id_a", "id_b").distinct()
+        .as[(Long, Long)].collect().toSet == Set((1L, 2L)))
+      assert(errors.get() == 0, s"${errors.get()} extraction errors logged")
+    } finally {
+      root.removeAppender(counter.getName)
+      ctx.updateLoggers()
+    }
+  }
+
   test("KMV sketch aggregates a stream to exactly the batch estimate") {
     import spark.implicits._
     // the mergeable-state property is what makes the sketch streamable:
