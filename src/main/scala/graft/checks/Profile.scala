@@ -24,26 +24,31 @@ import org.apache.spark.sql.types._
   * output rows is a plan-time `explode(array(struct...))` over the
   * single aggregated row.
   *
-  * @param family hash family for the KMV sketches —
-  *               [[graft.functions.PortableHashFamily]] renders values
-  *               via string cast (engine-replayable; avoid for doubles,
-  *               whose string forms differ across engines),
-  *               [[graft.functions.XxHashFamily]] for production. */
+  * The KMV sketch hashes each value's string form (the portable hash),
+  * so float and double columns are normalized first: −0.0 becomes 0.0,
+  * which `countDistinct` already counts as one value (every NaN renders
+  * as "NaN" and needs nothing). The oracle twin cannot replay a floating
+  * column's estimate, because double→string renderings differ across
+  * engines. */
 object Profile {
 
-  def profileTable(df: DataFrame, cols: Seq[String], k: Int = 256,
-                   family: graft.functions.HashFamily =
-                     graft.functions.XxHashFamily): DataFrame = {
+  def profileTable(df: DataFrame, cols: Seq[String],
+                   k: Int = 256): DataFrame = {
     require(cols.nonEmpty, "need at least one column")
     val schema = df.schema
     def isNum(c: String): Boolean = schema(c).dataType match {
       case _: NumericType => true
       case _              => false
     }
+    def sketched(c: String): Column = schema(c).dataType match {
+      case t @ (FloatType | DoubleType) =>
+        when(col(c) === lit(0.0), lit(0.0).cast(t)).otherwise(col(c))
+      case _ => col(c)
+    }
     val aggs: Seq[Column] = count(lit(1)).as("__n") +: cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"__nn_$c"),
-        graft.functions.KmvSketch(col(c), k, family).as(s"__nd_$c"),
+        graft.functions.KmvSketch(sketched(c), k).as(s"__nd_$c"),
         (if (isNum(c)) min(col(c)).cast("double") else lit(null).cast("double"))
           .as(s"__mnn_$c"),
         (if (isNum(c)) max(col(c)).cast("double") else lit(null).cast("double"))

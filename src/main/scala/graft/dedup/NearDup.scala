@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.PortableHash
 import graft.text.TextAnalysis
 
 /** Near-duplicate detection for document corpora: exact (fingerprint),
@@ -167,15 +168,12 @@ object NearDup {
     * not a groupBy + join-back — the join form re-exploded and re-hashed
     * every gram a second time for the probe side, a full extra pass over
     * the corpus' characters at 100 TB. Then one window per doc. Grams
-    * travel as 64-bit hashes, never strings — `family` picks xxhash64
-    * (production) or the portable MD5 family (the q133 oracle replay; the
-    * usual 2-4× oracle tax, SCALE.md). A df cap is unnecessary: frequency
+    * travel as 64-bit portable hashes, never strings, so the q133 oracle
+    * replays the marks exactly. A df cap is unnecessary: frequency
     * only gates a boolean mark, so hot boilerplate grams cost one counter,
     * not a pair blowup. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                    k: Int = 16, minDf: Int = 2,
-                    family: graft.functions.HashFamily =
-                      graft.functions.XxHashFamily): DataFrame = {
+                    k: Int = 16, minDf: Int = 2): DataFrame = {
     require(k >= 2 && minDf >= 2, "need k >= 2 and minDf >= 2")
     val g = df
       .where(length(col(textCol)) >= k)
@@ -184,7 +182,8 @@ object NearDup {
           (length(col(textCol)) - lit(k - 1)).cast("long"))).as("pos"),
         col(textCol))
       .select(col(idCol), col("pos"),
-        family.hash(0, expr(s"substring($textCol, pos, $k)")).as("__gh"))
+        PortableHash.seeded(0, expr(s"substring($textCol, pos, $k)"))
+          .as("__gh"))
     // distinct docs per gram without leaving the gram-hash partitioning:
     // rows of one gram sort by (id, pos), the first row of each id raises
     // a flag, and the unbounded sum of flags is the document frequency —
@@ -273,15 +272,14 @@ object NearDup {
     * recall only on pairs that already share many other fingerprints.
     * Unlike MinHash banding ([[minhashLshPairs]]), shared-count here is a
     * deterministic function of the two documents' content alone, so the
-    * whole pipeline replays exactly in SQL with the portable family. */
+    * whole pipeline replays exactly in SQL. */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
-                  k: Int = 16, w: Int = 8, minShared: Int = 5, maxDf: Int = 20,
-                  family: graft.functions.HashFamily =
-                    graft.functions.XxHashFamily): DataFrame = {
+                  k: Int = 16, w: Int = 8, minShared: Int = 5,
+                  maxDf: Int = 20): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
     require(maxDf >= 2, "maxDf must be >= 2 (pairs need df >= 2)")
     val fps = df.select(col(idCol),
-      explode(TextAnalysis.winnowFingerprints(col(textCol), k, w, family))
+      explode(TextAnalysis.winnowFingerprints(col(textCol), k, w))
         .as("fp"))
     fps.groupBy(col("fp"))
       .agg(sort_array(collect_list(col(idCol))).as("ids"))
@@ -295,29 +293,28 @@ object NearDup {
 
   /** MinHash signatures: for each of `numHashes` seeded hash functions keep
     * the min over the doc's shingles. Returns (id, h0..h{k-1}). */
-  def minhashSignatures(shingles: DataFrame, idCol: String, numHashes: Int,
-                        family: graft.functions.HashFamily =
-                          graft.functions.XxHashFamily): DataFrame = {
-    // digest each shingle ONCE (family.base), then derive the k members
-    // arithmetically — k× fewer string hashes on the hot path
-    val based = shingles.withColumn("__hb", family.base(col("shingle")))
+  def minhashSignatures(shingles: DataFrame, idCol: String,
+                        numHashes: Int): DataFrame = {
+    // digest each shingle ONCE (PortableHash.base), then derive the k
+    // members arithmetically — k× fewer string hashes on the hot path
+    val based = shingles.withColumn("__hb", PortableHash.base(col("shingle")))
     val aggs = (0 until numHashes)
-      .map(i => min(family.derive(i, col("__hb"))).as(s"h$i"))
+      .map(i => min(PortableHash.derive(i, col("__hb"))).as(s"h$i"))
     based.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** LSH banding of a MinHash signature `h(0..numHashes-1)`: one
     * (band, bucket) struct per band, band b hashing signature rows
-    * [b·r, (b+1)·r) with `family.combine`, r = numHashes / bands. The one
-    * home of the banding for [[minhashLshPairs]], [[incrementalDedup]] and
-    * `EventStreams.nearDupCandidates`. */
-  private[graft] def bandBuckets(h: Int => Column, numHashes: Int, bands: Int,
-                                 family: graft.functions.HashFamily): Column = {
+    * [b·r, (b+1)·r) with `PortableHash.combine`, r = numHashes / bands.
+    * The one home of the banding for [[minhashLshPairs]],
+    * [[incrementalDedup]] and `EventStreams.nearDupCandidates`. */
+  private[graft] def bandBuckets(h: Int => Column, numHashes: Int,
+                                 bands: Int): Column = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
     array((0 until bands).map { b =>
       val slice = (0 until rowsPerBand).map(r => h(b * rowsPerBand + r))
-      struct(lit(b).as("band"), family.combine(slice).as("bucket"))
+      struct(lit(b).as("band"), PortableHash.combine(slice).as("bucket"))
     }: _*)
   }
 
@@ -337,11 +334,9 @@ object NearDup {
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.5,
-                      family: graft.functions.HashFamily =
-                        graft.functions.XxHashFamily): DataFrame = {
+                      threshold: Double = 0.5): DataFrame = {
     val sh = wordShingles(df, idCol, textCol, shingleN)
-    val sig = minhashSignatures(sh, idCol, numHashes, family)
+    val sig = minhashSignatures(sh, idCol, numHashes)
     // The full signature rides along with each bucket row (bands× a few
     // hundred bytes per doc), so the estimated Jaccard is computed INSIDE
     // the band join — no cached signature frame held past the call (the old
@@ -350,8 +345,7 @@ object NearDup {
     // the shuffles it removes.
     val buckets = sig.select(col(idCol),
         array((0 until numHashes).map(i => col(s"h$i")): _*).as("__sig"),
-        explode(bandBuckets(i => col(s"h$i"), numHashes, bands, family))
-          .as("bb"))
+        explode(bandBuckets(i => col(s"h$i"), numHashes, bands)).as("bb"))
       .select(col(idCol), col("__sig"), col("bb.band"), col("bb.bucket"))
     buckets.as("x").join(buckets.as("y"), Seq("band", "bucket"))
       .where(col(s"x.$idCol") < col(s"y.$idCol"))
@@ -390,9 +384,7 @@ object NearDup {
   def incrementalDedup(newBatch: DataFrame, history: DataFrame,
                        idCol: String, textCol: String,
                        shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                       threshold: Double = 0.5,
-                       family: graft.functions.HashFamily =
-                         graft.functions.XxHashFamily): DataFrame = {
+                       threshold: Double = 0.5): DataFrame = {
     val fp = TextAnalysis.fingerprint(col(textCol))
     val histIdx = history
       .select(fp.as("__fp"), col(idCol).as("__hid"))
@@ -408,15 +400,14 @@ object NearDup {
     // near fields are masked in the final projection, so the output is
     // identical to the survivor-filtered form.
     def sigOf(df: DataFrame) = minhashSignatures(
-      wordShingles(df, idCol, textCol, shingleN), idCol, numHashes, family)
+      wordShingles(df, idCol, textCol, shingleN), idCol, numHashes)
     // signatures ride the bucket rows (see minhashLshPairs): the estimate
     // is computed inside the candidate join, so neither signature frame is
     // cached — nothing persisted survives the call
     def bucketsOf(df: DataFrame, idAs: String, sigAs: String) =
       sigOf(df).select(col(idCol).as(idAs),
           array((0 until numHashes).map(i => col(s"h$i")): _*).as(sigAs),
-          explode(bandBuckets(i => col(s"h$i"), numHashes, bands, family))
-            .as("bb"))
+          explode(bandBuckets(i => col(s"h$i"), numHashes, bands)).as("bb"))
         .select(col(idAs), col(sigAs), col("bb.band"), col("bb.bucket"))
     val best = graft.operators.Dedup.keepFirst(
       bucketsOf(newBatch.select(col(idCol), col(textCol)), "__nid", "__sa")
@@ -572,20 +563,18 @@ object NearDup {
   }
 
   /** SimHash near-dup pairs: signatures within `maxHamming` bits. Candidate
-    * generation is the classic band trick — split the 64-bit signature into
+    * generation is the classic band trick — split the 60-bit signature into
     * `bands` equal bit-bands; any pair within maxHamming < bands Hamming
     * distance must agree exactly on at least one band (pigeonhole), so
     * candidates meet on a (band, band-bits) equi-join and the exact
     * `bit_count` filter runs only inside buckets. Same blocking shape as
     * MinHash-LSH/IVF: the all-pairs comparison never materializes. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, bands: Int = 4,
-                   family: graft.functions.HashFamily =
-                     graft.functions.XxHashFamily): DataFrame = {
+                   maxHamming: Int = 3, bands: Int = 4): DataFrame = {
     require(maxHamming < bands, "need maxHamming < bands for pigeonhole recall")
-    require(family.bits % bands == 0, "bands must divide signature width")
-    val sig = simhash(df, idCol, textCol, family)
-    val width = family.bits / bands
+    require(PortableHash.Bits % bands == 0, "bands must divide signature width")
+    val sig = simhash(df, idCol, textCol)
+    val width = PortableHash.Bits / bands
     val bandStructs = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         shiftrightunsigned(col("simhash"), b * width)
@@ -603,16 +592,14 @@ object NearDup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** 64-bit SimHash over word hashes: bit i of the signature is the sign of
-    * the sum of (+1/-1) votes from each token's hash bit i. Hamming-close
-    * signatures ≈ similar docs. Pure expressions — codegen-friendly. */
-  def simhash(df: DataFrame, idCol: String, textCol: String,
-              family: graft.functions.HashFamily =
-                graft.functions.XxHashFamily): DataFrame = {
-    val nBits = family.bits
+  /** 60-bit SimHash over portable word hashes: bit i of the signature is
+    * the sign of the sum of (+1/-1) votes from each token's hash bit i.
+    * Hamming-close signatures ≈ similar docs. Pure expressions. */
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val nBits = PortableHash.Bits
     val toks = df.select(col(idCol),
       explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-      .withColumn("h", family.hash(0, col("tok")))
+      .withColumn("h", PortableHash.seeded(0, col("tok")))
     val bitVotes = (0 until nBits).map { i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1))
         .as(s"b$i")

@@ -23,35 +23,33 @@ import org.apache.spark.sql.functions._
   * corpus. No custom aggregation buffer needed; counter addition
   * commutes, so the result is partition-order independent.
   *
-  * Hash family is pluggable like the other sketches (MinHash/SimHash):
-  * [[XxHashFamily]] by default — codegen'd, engine-private, the
-  * production path — or [[PortableHashFamily]] for bit-exact oracle
-  * replay (q145). Both use the family's two-phase base/derive split, so
-  * even the portable lane digests the key string ONCE per row (one MD5)
-  * and derives the depth members by affine arithmetic, instead of paying
-  * depth full digests per row (the round-11 q145 hot spot).
+  * Hashing is the portable MD5 prefix like the other sketches
+  * (MinHash/SimHash), so the oracle replays the sketch bit-exactly
+  * (q145). Its two-phase [[PortableHash.base]]/[[PortableHash.derive]]
+  * split digests the key string ONCE per row (one MD5) and derives the
+  * depth members by affine arithmetic, instead of paying depth full
+  * digests per row (the round-11 q145 hot spot).
   */
 object CountMin {
 
-  /** Bucket columns for rows 0..depth-1: the salted key is hashed once
-    * (`family.base`), each row's member derives from that base, and
-    * `pmod` folds the member into [0, width). */
-  def buckets(key: Column, depth: Int, width: Int, salt: String,
-              family: HashFamily): Seq[Column] = {
-    val base = family.base(concat(lit(s"${salt}_"), key.cast("string")))
+  /** Bucket columns for rows 0..depth-1: the `cms_`-salted key is hashed
+    * once ([[PortableHash.base]]), each row's member derives from that
+    * base, and `pmod` folds the member into [0, width). */
+  def buckets(key: Column, depth: Int, width: Int): Seq[Column] = {
+    val base = PortableHash.base(concat(lit("cms_"), key.cast("string")))
     // the repeated base subtree is CSE'd by codegen within the projection,
-    // so non-trivial bases (the portable family's MD5) evaluate once per row
-    (0 until depth).map(i => pmod(family.derive(i, base), lit(width.toLong)))
+    // so the MD5 evaluates once per row
+    (0 until depth).map(i =>
+      pmod(PortableHash.derive(i, base), lit(width.toLong)))
   }
 
   /** Build the depth×width counter frame from a key column: one
     * map-side explode into (row, bucket), one partial-aggregated
     * count shuffle. Output: (row, bucket, cnt) — ≤ depth×width rows. */
-  def sketch(df: DataFrame, keyCol: String, depth: Int, width: Int,
-             salt: String = "cms",
-             family: HashFamily = XxHashFamily): DataFrame = {
+  def sketch(df: DataFrame, keyCol: String, depth: Int,
+             width: Int): DataFrame = {
     require(depth >= 1 && width >= 1, "need depth, width >= 1")
-    val rows = buckets(col(keyCol), depth, width, salt, family).zipWithIndex
+    val rows = buckets(col(keyCol), depth, width).zipWithIndex
       .map { case (b, i) => struct(lit(i).as("row"), b.as("bucket")) }
     df.select(explode(array(rows: _*)).as("__rb"))
       .groupBy(col("__rb.row").as("row"), col("__rb.bucket").as("bucket"))
@@ -63,10 +61,9 @@ object CountMin {
     * and takes the row-wise minimum. Missing buckets count 0 (possible
     * only for keys absent from the sketched corpus). Adds `cms_estimate`. */
   def estimate(sketchDf: DataFrame, keys: DataFrame, keyCol: String,
-               depth: Int, width: Int, salt: String = "cms",
-               family: HashFamily = XxHashFamily): DataFrame = {
+               depth: Int, width: Int): DataFrame = {
     require(depth >= 1 && width >= 1, "need depth, width >= 1")
-    val rows = buckets(col(keyCol), depth, width, salt, family).zipWithIndex
+    val rows = buckets(col(keyCol), depth, width).zipWithIndex
       .map { case (b, i) => struct(lit(i).as("row"), b.as("bucket")) }
     keys.select(col("*"), explode(array(rows: _*)).as("__rb"))
       .select(col("*"), col("__rb.row").as("row"), col("__rb.bucket").as("bucket"))

@@ -14,7 +14,7 @@ object Hof {
     * iteration — Catalyst does no common-subexpression elimination
     * across HOF calls. Closing over a plain attribute is fine (an O(1)
     * row read), but closing over a computed array or struct multiplies
-    * its cost by the iteration count: `TextAnalysis.winnowFingerprints`
+    * its cost by the iteration count: the declarative winnowing chain
     * was O(len²) hash calls per row (a 10× wall-clock regression on its
     * spec) until its gram array was bound this way.
     *

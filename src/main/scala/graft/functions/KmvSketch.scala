@@ -9,27 +9,32 @@ import org.apache.spark.sql.functions.udaf
   * `Aggregator` — the mergeable sketch family behind distributed
   * COUNT(DISTINCT) estimation.
   *
-  * State is the k smallest DISTINCT portable hashes seen — O(k) longs per
-  * group, maintained sorted; `merge` is union-then-truncate, so partial
-  * aggregation composes exactly (map-side combine does most of the work
-  * and the shuffle carries ≤ k longs per group per mapper, vs the full
-  * value set an exact distinct shuffles). Estimator: with h_k the k-th
-  * smallest hash on a 2⁶⁰ scale, D ≈ (k−1)·2⁶⁰/h_k; below k distinct
-  * hashes the sketch IS the exact distinct count.
+  * State is the k smallest DISTINCT [[PortableHash]] values seen — O(k)
+  * longs per group, maintained sorted; `merge` is union-then-truncate, so
+  * partial aggregation composes exactly (map-side combine does most of
+  * the work and the shuffle carries ≤ k longs per group per mapper, vs
+  * the full value set an exact distinct shuffles). Estimator: with h_k
+  * the k-th smallest hash on a 2⁶⁰ scale, D ≈ (k−1)·2⁶⁰/h_k; below k
+  * distinct hashes the sketch IS the exact distinct count.
   *
   * Spark's `approx_count_distinct` (HyperLogLog++) is the cheaper
   * production default; this sketch is (a) mergeable state you can PERSIST
   * per partition/file and re-combine later (HLL buffers aren't exposed),
-  * and (b) family-parameterized like MinHash/winnow: xxhash64 by default
-  * (codegen, no MD5 cost), or the portable MD5-prefix family so the
+  * and (b) built on the portable MD5 prefix like MinHash/winnow, so the
   * DuckDB oracle replays hash values, k-th minimum and the estimate
-  * bit-for-bit (q115) — the same portable-twin pattern as the LSH family.
+  * bit-for-bit (q115).
   *
   * Determinism: the result depends only on the SET of input values —
   * insertion order, partitioning and merge order cannot change the k
   * smallest distinct hashes.
+  *
+  * Precondition: values that should count as one must share one string
+  * form, because the hash reads `cast(x as string)`. On float and double
+  * columns −0.0 and 0.0 render differently, so the sketch counts them
+  * twice where `countDistinct` counts once; normalize −0.0 to 0.0 first,
+  * as [[graft.checks.Profile.profileTable]] does.
   */
-class KmvAgg(k: Int, scale: Double = KmvSketch.Two60)
+class KmvAgg(k: Int)
     extends Aggregator[java.lang.Long, Array[Long], Double] {
   require(k >= 2, "k must be >= 2")
 
@@ -78,7 +83,7 @@ class KmvAgg(k: Int, scale: Double = KmvSketch.Two60)
 
   override def finish(b: Array[Long]): Double =
     if (b.length < k) b.length.toDouble
-    else (k - 1).toDouble * scale / b(k - 1).toDouble
+    else (k - 1).toDouble * KmvSketch.Two60 / b(k - 1).toDouble
 
   // NATIVE array encoder, not Encoders.kryo: the buffer crosses the
   // partial/final aggregation boundary once per group per mapper, and
@@ -115,16 +120,14 @@ class KmvStateOut(k: Int)
 
 /** Merge previously materialized sketches (array<bigint> rows) and finish
   * to the distinct-count estimate. */
-class KmvMergeAgg(k: Int, scale: Double = KmvSketch.Two60)
+class KmvMergeAgg(k: Int)
     extends Aggregator[Array[Long], Array[Long], Double] {
-  private val inner = new KmvAgg(k, scale)
+  private val inner = new KmvAgg(k)
   override def zero: Array[Long] = inner.zero
   override def reduce(b: Array[Long], s: Array[Long]): Array[Long] =
     inner.merge(b, if (s == null) Array.empty else s)
   override def merge(x: Array[Long], y: Array[Long]): Array[Long] = inner.merge(x, y)
-  override def finish(b: Array[Long]): Double =
-    if (b.length < k) b.length.toDouble
-    else (k - 1).toDouble * scale / b(k - 1).toDouble
+  override def finish(b: Array[Long]): Double = inner.finish(b)
   override def bufferEncoder: Encoder[Array[Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
@@ -134,31 +137,24 @@ object KmvSketch {
   /** 2⁶⁰ as an exact double — the portable hash's value range. */
   val Two60: Double = 1152921504606846976.0
 
-  /** Column form: KMV distinct-count estimate of `c` with sketch size `k`.
-    * Like MinHash/winnow, the hash family is a parameter: xxhash64
-    * (codegen, cheapest) is the production default; pass
-    * [[PortableHashFamily]] for the DuckDB-replayable twin (q115). The
-    * estimate's accuracy is family-independent (both are uniform on their
-    * scale); only the portable one is oracle-checkable bit-for-bit. */
-  def apply(c: Column, k: Int,
-            family: HashFamily = XxHashFamily): Column = {
-    val agg = udaf(new KmvAgg(k, family.kmvScale), Encoders.LONG)
-    agg(family.kmvValue(c))
+  /** Column form: KMV distinct-count estimate of `c` with sketch size `k`
+    * over the portable 60-bit hash — the DuckDB oracle replays it
+    * bit-for-bit (q115). */
+  def apply(c: Column, k: Int): Column = {
+    val agg = udaf(new KmvAgg(k), Encoders.LONG)
+    agg(PortableHash.hex60(c))
   }
 
   /** The raw sketch (sorted array of the k minimum distinct hashes) — the
-    * persistable state form; feed rows of these to [[merged]] later, WITH
-    * THE SAME FAMILY (sketches from different families don't mix). */
-  def state(c: Column, k: Int,
-            family: HashFamily = XxHashFamily): Column = {
+    * persistable state form; feed rows of these to [[merged]] later. */
+  def state(c: Column, k: Int): Column = {
     val agg = udaf(new KmvStateOut(k), Encoders.LONG)
-    agg(family.kmvValue(c))
+    agg(PortableHash.hex60(c))
   }
 
   /** Distinct-count estimate from materialized [[state]] sketches. */
-  def merged(sketch: Column, k: Int,
-             family: HashFamily = XxHashFamily): Column = {
-    val agg = udaf(new KmvMergeAgg(k, family.kmvScale),
+  def merged(sketch: Column, k: Int): Column = {
+    val agg = udaf(new KmvMergeAgg(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
     agg(sketch)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Community detection by synchronous label propagation (Raghavan, Albert
   * & Kumara, Phys. Rev. E 2007) — §2.10's community member next to the
-  * min-label CC family: CC answers "connected?", LPA answers "densely
+  * min-label CC family. CC answers "connected?", LPA answers "densely
   * connected to WHOM?" (domain clusters in a near-dup graph, community
   * structure in an entity graph).
   *

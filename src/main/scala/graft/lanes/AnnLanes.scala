@@ -93,8 +93,7 @@ object AnnLanes extends LaneFamily {
 
   // ---- similarity search: IVF ANN (portable sampled-seed quantizer —
   // seed set, cell assignment, probes and ranking all replayed by the
-  // DuckDB oracle; the Lloyd-trained variant stays recall-tested in
-  // SimilaritySpec) --------------------------------------------------------
+  // DuckDB oracle) ---------------------------------------------------------
   private[graft] def ivfIndex(q: DataFrame, c: DataFrame, k: Int): DataFrame =
     Similarity.ivfTopKSeeded(q, c, idCol = "vec_id", embCol = "embedding",
       k = k, nCells = 16, nProbe = 4)
@@ -395,12 +394,11 @@ object AnnLanes extends LaneFamily {
   // 64-dim floats → 8 codeword ids; queries score asymmetrically against
   // reconstructed codewords. Portable-hash seed codebooks + rounded
   // argmin/ADC (the q85 discipline) make encode, codes, and ranking
-  // replayable in SQL. The Lloyd-trained production path is pqTopK
-  // (recall-tested in SimilaritySpec).
+  // replayable in SQL.
   // m=16 4-dim subspaces × 64 codewords: 16 codes/vector (16× smaller
-  // than the 64 floats), fixture recall 0.38 seeded / 0.55 Lloyd-trained
-  // vs exact euclidean — the seed-codebook gap is the oracle tax, like
-  // q85's routing and q100's portable digests.
+  // than the 64 floats), fixture recall 0.38 vs exact euclidean — seed
+  // codebooks without Lloyd refinement trade recall for replay, like
+  // q85's routing.
   private[graft] def pqIndex(q: DataFrame, c: DataFrame, k: Int): DataFrame =
     Similarity.pqTopKSeeded(q, c, idCol = "vec_id", embCol = "embedding",
       k = k, m = 16, nCodes = 64)

@@ -1337,15 +1337,13 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
   // ---- KMV distinct-count sketch (mergeable approx COUNT DISTINCT) -------
   // k=256 sketches beside the exact counts: l_partkey (distinct ≫ k →
   // estimator path) and l_suppkey (distinct < k → the sketch IS the exact
-  // count). The portable hash family lets the oracle replay hash values,
+  // count). The portable hash lets the oracle replay hash values,
   // the k-th minimum and the (k−1)·2⁶⁰/h_k estimate bit-for-bit.
   lane("q115_kmv_distinct") { (s, dir) =>
     t(s, dir, "lineitem").groupBy(col("l_returnflag"))
       .agg(
-        graft.functions.KmvSketch(col("l_partkey"), 256,
-          graft.functions.PortableHashFamily).as("est_parts"),
-        graft.functions.KmvSketch(col("l_suppkey"), 256,
-          graft.functions.PortableHashFamily).as("est_supps"),
+        graft.functions.KmvSketch(col("l_partkey"), 256).as("est_parts"),
+        graft.functions.KmvSketch(col("l_suppkey"), 256).as("est_supps"),
         countDistinct(col("l_partkey")).as("exact_parts"),
         countDistinct(col("l_suppkey")).as("exact_supps"))
   }.oracle(
@@ -1396,11 +1394,9 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
   lane("q116_kmv_two_level") { (s, dir) =>
     val states = t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), year(col("l_shipdate")).as("yr"))
-      .agg(graft.functions.KmvSketch.state(col("l_partkey"), 256,
-        graft.functions.PortableHashFamily).as("sk"))
+      .agg(graft.functions.KmvSketch.state(col("l_partkey"), 256).as("sk"))
     states.groupBy(col("l_returnflag"))
-      .agg(graft.functions.KmvSketch.merged(col("sk"), 256,
-        graft.functions.PortableHashFamily).as("est_parts"),
+      .agg(graft.functions.KmvSketch.merged(col("sk"), 256).as("est_parts"),
         count(lit(1)).as("n_sketches"))
   }.oracle(
     // two-level rollup replays as the ONE-PASS formula (union-truncate is
@@ -1426,7 +1422,7 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
       |FROM ns JOIN sp ON ns.g = sp.g""".stripMargin)
 
   // ---- SCD2 validity intervals (warehouse dimension-history build) -------
-  // The interval form of the changelog family: q11's change rows closed
+  // The interval form of the changelog family — q11's change rows closed
   // into [effective_from, effective_to) with version numbers and a
   // current flag — one hash exchange, both windows share the clustering.
   lane("q117_scd2_intervals") { (s, dir) =>
@@ -1606,14 +1602,14 @@ ${Seq(2, 3, 4).map(bg).mkString(",\n")}
 
   // ---- checks: single-pass table profile ---------------------------------
   // One scan + one aggregate profiles five orders columns: nulls, KMV
-  // distinct estimates (portable family -> oracle-replayable; the double
+  // distinct estimates (portable hash -> oracle-replayable; the double
   // column is excluded because double->string renderings differ across
   // engines), typed min/max. Never a multi-count(distinct) Expand.
   lane("q147_profile") { (s, dir) =>
     Profile.profileTable(t(s, dir, "orders"),
       Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate",
         "o_orderpriority"),
-      k = 256, family = graft.functions.PortableHashFamily)
+      k = 256)
   }.oracle {
     // Profile replay: per column, null counts + the q115 KMV estimate
     // formula + typed min/max, one UNION ALL branch per column.

@@ -134,14 +134,12 @@ object TextLanes extends LaneFamily {
       |      AS bucket
       |  FROM hs GROUP BY 1, 2)""".stripMargin
 
-  // ---- dedup: MinHash + LSH (the 100 TB path). Runs on the PORTABLE
-  // MD5-prefix hash family so the DuckDB oracle replays the whole sketch —
-  // signatures, band buckets, candidate pairs — exactly; the default
-  // xxhash64 family (cheaper at scale) is recall-tested in TextDedupSpec.
+  // ---- dedup: MinHash + LSH (the 100 TB path). The portable MD5-prefix
+  // hash lets the DuckDB oracle replay the whole sketch — signatures,
+  // band buckets, candidate pairs — exactly.
   lane("q41_minhash_lsh") { (s, dir) =>
     NearDup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-      shingleN = 3, numHashes = 32, bands = 8, threshold = 0.35,
-      family = graft.functions.PortableHashFamily)
+      shingleN = 3, numHashes = 32, bands = 8, threshold = 0.35)
   }.oracle(
     s"""WITH $wordShingles3,
       |$minhashBands,
@@ -194,13 +192,12 @@ object TextLanes extends LaneFamily {
       |  (d.doc_id <> coalesce(cc.component, d.doc_id)) AS is_dup
       |FROM documents d LEFT JOIN cc ON d.doc_id = cc.v""".stripMargin)
 
-  // ---- dedup: SimHash signatures + banded Hamming pairs. Portable hash
-  // family (60-bit MD5 prefix) → the oracle rebuilds signatures, bands and
-  // Hamming distances bit-for-bit in SQL; the xxhash64 default stays the
-  // scale path (recall-tested in TextDedupSpec).
+  // ---- dedup: SimHash signatures + banded Hamming pairs. The portable
+  // hash (60-bit MD5 prefix) lets the oracle rebuild signatures, bands and
+  // Hamming distances bit-for-bit in SQL.
   lane("q93_simhash_pairs") { (s, dir) =>
     NearDup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 3, bands = 4, family = graft.functions.PortableHashFamily)
+        maxHamming = 3, bands = 4)
       .withColumn("hamming", col("hamming").cast("long"))
   }.oracle(
     """WITH toks AS (
@@ -229,17 +226,17 @@ object TextLanes extends LaneFamily {
   // ---- training-data pipeline: incremental batch-vs-history dedup -------
   // The production dedup shape: a new ingest batch screened against the
   // historical corpus (exact fingerprint probe, then MinHash band-bucket
-  // candidates, history never re-shuffled). Portable family → the oracle
-  // replays fingerprints, signatures, buckets, best-match and labels.
+  // candidates, history never re-shuffled). The portable hash lets the
+  // oracle replay fingerprints, signatures, buckets, best-match and labels.
   lane("q100_incremental_dedup") { (s, dir) =>
     // single-file fixture scan = one task; spread the docs so the
-    // per-shingle MD5 grind (portable family) runs on every core
+    // per-shingle MD5 grind (portable hash) runs on every core
     val docs = t(s, dir, "documents")
       .repartition(s.sparkContext.defaultParallelism)
     NearDup.incrementalDedup(
       docs.where(col("doc_id") >= 400), docs.where(col("doc_id") < 400),
       "doc_id", "text", shingleN = 3, numHashes = 32, bands = 8,
-      threshold = 0.35, family = graft.functions.PortableHashFamily)
+      threshold = 0.35)
   }.oracle(
     // Incremental batch-vs-history dedup: exact fingerprint probe (q39's
     // normalization), then the q41 MinHash machinery restricted to
@@ -365,15 +362,14 @@ object TextLanes extends LaneFamily {
 
   // ---- winnowing fingerprints (MOSS) near-dup candidate pairs ------------
   // Rolling-gram fingerprint selection + shared-count pairing
-  // (TextAnalysis.winnowFingerprints / NearDup.winnowPairs). Portable hash
-  // family so the DuckDB oracle replays the full pipeline — gram hashes,
+  // (TextAnalysis.winnowFingerprints / NearDup.winnowPairs). The portable
+  // hash lets the DuckDB oracle replay the full pipeline — gram hashes,
   // window minima, df cap, pair counts — bit-for-bit. On this fixture every
   // pair with n_shared >= 5 has true token-Jaccard >= 0.9 (measured), so
   // the sketch finds exactly the planted near-dups.
   lane("q113_winnow_pairs") { (s, dir) =>
     graft.dedup.NearDup.winnowPairs(t(s, dir, "documents"), "doc_id", "text",
-      k = 16, w = 8, minShared = 5, maxDf = 20,
-      family = graft.functions.PortableHashFamily)
+      k = 16, w = 8, minShared = 5, maxDf = 20)
   }.oracle(
     // winnowing replay: gram hashes via the portable seeded family
     // (md5('0_'||gram) 60-bit prefix), window minima via a trailing-frame
@@ -800,11 +796,10 @@ object TextLanes extends LaneFamily {
   // ---- training-data pipeline: span-level repeated-substring dedup -------
   // Positional 16-gram frequency re-expression of suffix-array substring
   // dedup (arXiv:2107.06499): maximal spans whose every 16-gram occurs in
-  // >= 2 docs. Portable family for the oracle replay; xxhash64 default.
+  // >= 2 docs. Portable gram hashes for the oracle replay.
   lane("q133_repeated_spans") { (s, dir) =>
     graft.dedup.NearDup.repeatedSpans(t(s, dir, "documents"),
-      "doc_id", "text", k = 16, minDf = 2,
-      family = graft.functions.PortableHashFamily)
+      "doc_id", "text", k = 16, minDf = 2)
   }.oracle(
     // Repeated-span replay: positional 16-gram portable hashes, global
     // distinct-doc frequency >= 2 marks positions, gaps-and-islands
@@ -1211,21 +1206,17 @@ object TextLanes extends LaneFamily {
   // estimates next to their true counts (estimate >= exact always — CMS
   // can only over-count; width 32 vs ~30 word types makes 2 of 15
   // collide so both lanes are exercised). Sketch shuffle is bounded at
-  // depth×width rows per mapper regardless of corpus size. This is the
-  // oracle-replay lane (portable family: ONE md5 per row + affine
-  // members); production default is codegen xxhash64 (KmvSketchSpec).
+  // depth×width rows per mapper regardless of corpus size. The portable
+  // hash (ONE md5 per row + affine members) lets the oracle replay it.
   lane("q145_cms_estimate") { (s, dir) =>
     val (depth, width) = (4, 32)
     val words = t(s, dir, "documents")
       .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
       .where(length(col("word")) > 0)
-    val fam = graft.functions.PortableHashFamily
-    val sk = graft.functions.CountMin.sketch(words, "word", depth, width,
-      family = fam)
+    val sk = graft.functions.CountMin.sketch(words, "word", depth, width)
     val top = words.groupBy(col("word")).agg(count(lit(1)).as("exact_count"))
       .orderBy(col("exact_count").desc, col("word").asc).limit(15)
-    graft.functions.CountMin.estimate(sk, top, "word", depth, width,
-        family = fam)
+    graft.functions.CountMin.estimate(sk, top, "word", depth, width)
       .withColumn("overestimated", col("cms_estimate") > col("exact_count"))
       .select("word", "exact_count", "cms_estimate", "overestimated")
   }.oracle(
@@ -1384,8 +1375,8 @@ object TextLanes extends LaneFamily {
 
   // ---- training-data pipeline: DSIR importance resampling ----------------
   // Data Selection via Importance Resampling (arXiv:2302.03169): hashed
-  // unigram+bigram bucket models (m=1024, portable family for the replay;
-  // XxHash is the production default) for target = src0-2 docs vs the raw
+  // unigram+bigram bucket models (m=1024, portable hash for the replay)
+  // for target = src0-2 docs vs the raw
   // corpus, per-doc importance log-weights as exact integer nano sums,
   // then ES/Gumbel resampling (weightedSample, w = exp(logw)) of 25 docs
   // per language. The m-row ratio table broadcasts at ANY corpus size —
@@ -1393,7 +1384,6 @@ object TextLanes extends LaneFamily {
   lane("q167_dsir_select") { (s, dir) =>
     import graft.ml.Dsir
     val m = 1024
-    val fam = graft.functions.PortableHashFamily
     val docs = t(s, dir, "documents")
     // explode + hash the grams ONCE (the portable MD5 is the dominant
     // cost); the checkpointed bucket frame feeds both the count agg and
@@ -1403,7 +1393,7 @@ object TextLanes extends LaneFamily {
         col("source").isin("src0", "src1", "src2").as("__t"),
         explode(Dsir.grams(col("text"))).as("g"))
       .select(col("doc_id"), col("__t"),
-        Dsir.bucket(col("g"), m, fam).as("bucket"))
+        Dsir.bucket(col("g"), m).as("bucket"))
       .localCheckpoint()
     val ratios = Dsir.ratiosFromBuckets(buckets, col("__t"), m)
     val lw = Dsir.weightsFromBuckets(buckets, "doc_id", ratios)

@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HashFamily, XxHashFamily}
+import graft.functions.PortableHash
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al., NeurIPS
   * 2023, arXiv:2302.03169): fit hashed-n-gram bag-of-words models for a
@@ -42,16 +42,13 @@ object Dsir {
     concat(ws, bi)
   }
 
-  /** Hashed feature bucket of one gram — public so callers can explode +
-    * bucket ONCE, checkpoint the (id, flag, bucket) frame, and feed both
-    * the count aggregation and the scoring aggregation from it (the gram
-    * hash is the dominant cost at corpus scale; see q167). */
-  def bucket(g: Column, m: Int, family: HashFamily = XxHashFamily,
-             seed: Int = 167): Column =
-    pmod(family.hash(seed, g), lit(m.toLong))
-
-  private def bucketOf(g: Column, m: Int, family: HashFamily,
-                       seed: Int): Column = bucket(g, m, family, seed)
+  /** Hashed feature bucket of one gram, the portable hash seeded 167 —
+    * public so callers can explode + bucket ONCE, checkpoint the (id,
+    * flag, bucket) frame, and feed both the count aggregation and the
+    * scoring aggregation from it (the gram hash is the dominant cost at
+    * corpus scale; see q167). */
+  def bucket(g: Column, m: Int): Column =
+    pmod(PortableHash.seeded(167, g), lit(m.toLong))
 
   /** [[bucketLogRatios]] over an already-bucketed gram frame (one row per
     * gram occurrence, `targetFlag` boolean). Same counts as
@@ -83,12 +80,10 @@ object Dsir {
     * add-α smoothed, over the full `0..m-1` bucket spine (so the scoring
     * join never misses). (bucket: long, ratio_nano: long), exactly m rows. */
   def bucketLogRatios(target: DataFrame, raw: DataFrame, textCol: Column,
-                      m: Int, alpha: Double = 0.5,
-                      family: HashFamily = XxHashFamily,
-                      seed: Int = 167): DataFrame = {
+                      m: Int, alpha: Double = 0.5): DataFrame = {
     def counts(df: DataFrame, out: String) =
       df.select(explode(grams(textCol)).as("g"))
-        .select(bucketOf(col("g"), m, family, seed).as("bucket"))
+        .select(bucket(col("g"), m).as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as(out))
     val spine = target.sparkSession.range(m).select(col("id").as("bucket"))
     val joined = spine
@@ -108,12 +103,11 @@ object Dsir {
     * the count-stage cost by half. Counts are identical to
     * `bucketLogRatios(raw.where(targetCond), raw, …)` by construction. */
   def bucketLogRatiosWhere(raw: DataFrame, targetCond: Column,
-                           textCol: Column, m: Int, alpha: Double = 0.5,
-                           family: HashFamily = XxHashFamily,
-                           seed: Int = 167): DataFrame = {
+                           textCol: Column, m: Int,
+                           alpha: Double = 0.5): DataFrame = {
     val counts = raw
       .select(targetCond.as("__t"), explode(grams(textCol)).as("g"))
-      .select(col("__t"), bucketOf(col("g"), m, family, seed).as("bucket"))
+      .select(col("__t"), bucket(col("g"), m).as("bucket"))
       .groupBy("bucket").agg(
         sum(when(col("__t"), 1L).otherwise(0L)).as("c_t"),
         count(lit(1)).as("c_q"))
@@ -140,11 +134,9 @@ object Dsir {
   /** Per-document importance log-weight: sum of bucket ratios over the
     * doc's gram occurrences. (idCol, n_grams: long, logw_nano: long). */
   def docLogWeights(corpus: DataFrame, idCol: String, textCol: Column,
-                    ratios: DataFrame, m: Int,
-                    family: HashFamily = XxHashFamily,
-                    seed: Int = 167): DataFrame =
+                    ratios: DataFrame, m: Int): DataFrame =
     corpus.select(col(idCol), explode(grams(textCol)).as("g"))
-      .select(col(idCol), bucketOf(col("g"), m, family, seed).as("bucket"))
+      .select(col(idCol), bucket(col("g"), m).as("bucket"))
       .join(broadcast(ratios), Seq("bucket"))
       .groupBy(idCol).agg(
         count(lit(1)).as("n_grams"),

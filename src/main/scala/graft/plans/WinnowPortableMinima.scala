@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the winnowing fingerprint selection of
-  * [[graft.text.TextAnalysis.winnowFingerprints]] under the PORTABLE
-  * hash family, in ONE pass per row — `array<long>` of the
-  * first-occurrence-distinct sliding-window minima over the k-gram
-  * hashes `hex60("0_" <gram>)` of an ALREADY-normalized text.
+  * [[graft.text.TextAnalysis.winnowFingerprints]], in ONE pass per row —
+  * `array<long>` of the first-occurrence-distinct sliding-window minima
+  * over the k-gram hashes `hex60("0_" <gram>)` of an ALREADY-normalized
+  * text.
   *
   * Bit-identical by construction to the declarative chain it replaces
   * (`transform(sequence(...), i -> md5_prefix60(concat('0_',
@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * array_min(slice(grams, j, w))))`):
   *   - grams are CODE-POINT substrings (`substringSQL` semantics — the
   *     byte offsets are walked once, so no per-gram string allocates);
-  *   - the hash is the [[Md5Prefix60]] fold (top 60 bits of the digest's
-  *     first 8 bytes) over the UTF-8 bytes of `"0_" + gram`;
+  *   - the hash is the [[Md5Prefix60.prefix60]] kernel (top 60 bits of
+  *     the digest's first 8 bytes) over the UTF-8 bytes of `"0_" + gram`;
   *   - `nGrams <= 0` (including null/short text) → empty array;
   *     `nGrams <= w` → one element, the global minimum;
   *   - otherwise the per-position window minima with `array_distinct`'s
@@ -33,9 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Exists for the same reason as [[WordShingles]]: Catalyst HOF lambdas
   * run interpreted — for winnowing that is one boxed dispatch plus a
   * fresh substring/concat allocation per GRAM (per character of the
-  * corpus), which dominated q113 after the digest itself. Only the
-  * portable family routes here; the xxhash production path keeps the
-  * declarative form.
+  * corpus), which dominated q113 after the digest itself.
   */
 case class WinnowPortableMinima(child: Expression, k: Int, w: Int)
     extends UnaryExpression with CodegenFallback {
@@ -78,18 +76,11 @@ case class WinnowPortableMinima(child: Expression, k: Int, w: Int)
       ci += 1
     }
     off(ci) = bytes.length
-    val md = WinnowPortableMinima.digest.get()
     val grams = new Array[Long](n)
     var i = 0
     while (i < n) {
-      md.reset()
-      md.update(prefix)
-      md.update(bytes, off(i), off(i + k) - off(i))
-      val d = md.digest()
-      var h = 0L
-      var p = 0
-      while (p < 8) { h = (h << 8) | (d(p) & 0xffL); p += 1 }
-      grams(i) = h >>> 4
+      grams(i) = Md5Prefix60.prefix60(bytes, off(i), off(i + k) - off(i),
+        prefix)
       i += 1
     }
     if (n <= w) {
@@ -123,11 +114,6 @@ case class WinnowPortableMinima(child: Expression, k: Int, w: Int)
 }
 
 object WinnowPortableMinima {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** Column-API entry point (expects the normalized text). */
   def apply(txt: Column, k: Int, w: Int): Column =
     Internals.column(WinnowPortableMinima(

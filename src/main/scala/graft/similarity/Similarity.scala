@@ -367,72 +367,6 @@ object Similarity {
       .distinct()
   }
 
-  /** Driver-side Lloyd iterations over a bounded sample: seeded distinct
-    * init, empty clusters keep their previous centroid. Deterministic given
-    * (sample order, seed). k·N·dim·iters ≈ 16·4096·64·8 ≈ 34M flops — µs-ms
-    * scale, no cluster work. */
-  private def localLloyd(sample: Array[Array[Float]], k: Int, iters: Int,
-                         seed: Long): Seq[Array[Float]] = {
-    require(sample.nonEmpty, "IVF quantizer needs a non-empty corpus sample")
-    val dim = sample.head.length
-    val rnd = new scala.util.Random(seed)
-    val init = rnd.shuffle(sample.indices.toVector).take(k).sorted
-    var centroids = init.map(i => sample(i).map(_.toDouble)).toArray
-    val kEff = centroids.length // k capped by sample size
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(kEff)(new Array[Double](dim))
-      val counts = new Array[Long](kEff)
-      sample.foreach { v =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < kEff) {
-          var d = 0.0; var j = 0
-          while (j < dim) {
-            val diff = v(j) - centroids(c)(j); d += diff * diff; j += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        var j = 0
-        while (j < dim) { sums(best)(j) += v(j); j += 1 }
-        counts(best) += 1
-      }
-      centroids = Array.tabulate(kEff) { c =>
-        if (counts(c) == 0) centroids(c)
-        else sums(c).map(_ / counts(c))
-      }
-    }
-    centroids.map(_.map(_.toFloat)).toSeq
-  }
-
-  /** IVF (inverted-file) approximate top-k — the other standard ANN scale
-    * path next to LSH: a k-means coarse quantizer (MLlib, deterministic
-    * seed) partitions the corpus into `nCells` cells; each query probes its
-    * `nProbe` nearest centroids and ranks exactly within those cells.
-    *
-    * At 100 TB the corpus is hash-partitioned by cell id (the shuffle key),
-    * centroids are a broadcast dimension, and candidate volume per query is
-    * ~ nProbe/nCells of the corpus — the cross product never forms. Recall
-    * rises with `nProbe` (nProbe = nCells degrades to exact brute force).
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              embCol: String, k: Int, nCells: Int, nProbe: Int,
-              seed: Long = 42L, kmeansIters: Int = 20,
-              sampleN: Int = 4096): DataFrame = {
-    // Coarse quantizer trained on a bounded, deterministic sample — the
-    // standard IVF recipe at scale (FAISS trains on ~max(10k, 40·nCells)
-    // points regardless of corpus size): centroids only ROUTE candidates,
-    // recall comes from nProbe. sort+limit is a distributed TopK (no full
-    // collect), then Lloyd runs driver-side on ≤sampleN rows in ~ms —
-    // replacing kmeansIters full MLlib passes over the corpus.
-    val sample: Array[Array[Float]] = corpus
-      .select(col(idCol), col(embCol)).sort(col(idCol)).limit(sampleN)
-      .collect().map(_.getSeq[Float](1).toArray)
-    val centroids = localLloyd(sample, nCells, kmeansIters, seed)
-    ivfRank(queries, corpus, idCol, embCol, k, centroids, nProbe,
-      roundedRouting = false)
-  }
-
   /** The one portable seeded-row pick: the embeddings of the `n` corpus
     * rows with the smallest portable hash `hex60(prefix || id)` (ties by
     * id-as-string) — IVF centroids ("ivf_") and PQ codebook seeds ("pq_").
@@ -449,21 +383,33 @@ object Similarity {
       .sort(col("__h"), col("__sid")).limit(n)
       .collect().map(_.getSeq[Float](1).toArray).toSeq
 
-  /** Portable IVF — same routing/ranking as [[ivfTopK]], but the coarse
-    * quantizer is the `nCells` [[seededRows]] ("ivf_"), used directly as
-    * centroids with no Lloyd refinement (recall still comes from
-    * `nProbe`, cells are merely routing). The ENTIRE operator — seed set,
-    * cell assignment, probe set, final ranking — is replayable by the
-    * DuckDB oracle, so the approximate ANN path graduates from rows-only
-    * to hash-checked. Cell-routing distances are rounded (4 dp, cell-id
-    * tiebreak) so argmin agrees across engines despite summation-order
-    * float drift. */
+  /** Portable IVF (inverted-file) approximate top-k — the other standard
+    * ANN scale path next to LSH: the coarse quantizer is the `nCells`
+    * [[seededRows]] ("ivf_"), used directly as centroids with no Lloyd
+    * refinement; each query probes its `nProbe` nearest centroids and
+    * ranks exactly within those cells. Cells only ROUTE candidates,
+    * recall comes from `nProbe` (nProbe = nCells degrades to exact brute
+    * force).
+    *
+    * At 100 TB the corpus is hash-partitioned by cell id (the shuffle
+    * key), centroids are plan-time literals, and candidate volume per
+    * query is ~ nProbe/nCells of the corpus — the cross product never
+    * forms. The ENTIRE operator — seed set, cell assignment, probe set,
+    * final ranking — is replayable by the DuckDB oracle, so the
+    * approximate ANN path is hash-checked, not rows-only. Cell-routing
+    * distances are rounded (4 dp, cell-id tiebreak) so argmin agrees
+    * across engines despite summation-order float drift. */
   def ivfTopKSeeded(queries: DataFrame, corpus: DataFrame, idCol: String,
                     embCol: String, k: Int, nCells: Int,
-                    nProbe: Int): DataFrame =
-    ivfRank(queries, corpus, idCol, embCol, k,
-      seededRows(corpus, idCol, embCol, "ivf_", nCells), nProbe,
-      roundedRouting = true)
+                    nProbe: Int): DataFrame = {
+    val routing = cellRouting(embCol,
+      seededRows(corpus, idCol, embCol, "ivf_", nCells))
+    val c = normed(corpus.withColumn("cell", nearestCell(routing)),
+      idCol, embCol, "c", col("cell"))
+    val q = normed(queries.withColumn("cell", probedCells(routing, nProbe)),
+      idCol, embCol, "q", col("cell"))
+    rankByCosine(q.join(c, Seq("cell")).where(col("q_id") =!= col("c_id")), k)
+  }
 
   /** Constant centroids → cell routing as one codegen expression per
     * row: (dist, cell) structs sorted by argmin over cells of
@@ -471,17 +417,15 @@ object Similarity {
     * (ordering only). All centroid dots come from ONE PlaneProjections
     * node; rounding (4 dp, cell tiebreak) makes the argmin
     * engine-portable. No shuffle, no window. */
-  private def cellRouting(embCol: String, centroids: Seq[Array[Float]],
-                          rounded: Boolean): Column = {
+  private def cellRouting(embCol: String,
+                          centroids: Seq[Array[Float]]): Column = {
     val dim = centroids.head.length
     val cNorms2 = array(centroids.map(c =>
       lit(c.foldLeft(0.0)((acc, v) => acc + v.toDouble * v.toDouble))): _*)
     val rawDist = zip_with(
       graft.plans.PlaneProjections(col(embCol), centroids.flatten.toArray, dim),
       cNorms2, (proj, n2) => n2 - lit(2.0) * proj)
-    val distArr =
-      if (rounded) transform(rawDist, d => round(d, 4)) else rawDist
-    array_sort(transform(distArr, (d, i) =>
+    array_sort(transform(transform(rawDist, d => round(d, 4)), (d, i) =>
       struct(d.as("dist"), i.as("cell"))))
   }
 
@@ -492,18 +436,6 @@ object Similarity {
   /** A query row's probed cells, one row each: its `nProbe` nearest. */
   private def probedCells(routing: Column, nProbe: Int): Column =
     explode(transform(slice(routing, 1, nProbe), s => s.getField("cell")))
-
-  /** Shared IVF routing/ranking for a constant centroid matrix. */
-  private def ivfRank(queries: DataFrame, corpus: DataFrame, idCol: String,
-                      embCol: String, k: Int, centroids: Seq[Array[Float]],
-                      nProbe: Int, roundedRouting: Boolean): DataFrame = {
-    val routing = cellRouting(embCol, centroids, roundedRouting)
-    val c = normed(corpus.withColumn("cell", nearestCell(routing)),
-      idCol, embCol, "c", col("cell"))
-    val q = normed(queries.withColumn("cell", probedCells(routing, nProbe)),
-      idCol, embCol, "q", col("cell"))
-    rankByCosine(q.join(c, Seq("cell")).where(col("q_id") =!= col("c_id")), k)
-  }
 
   /** Single-row frame of per-dimension corpus (min, max) — the SQ8
     * codebook. Dim-bounded metadata (64 doubles per array here), computed
@@ -689,7 +621,7 @@ object Similarity {
                       embCol: String, k: Int, nCells: Int, nProbe: Int,
                       m: Int = 16, nCodes: Int = 64): DataFrame = {
     val routing = cellRouting(embCol,
-      seededRows(corpus, idCol, embCol, "ivf_", nCells), rounded = true)
+      seededRows(corpus, idCol, embCol, "ivf_", nCells))
     val cbs = pqSeededCodebooks(corpus, idCol, embCol, m, nCodes)
     val corpusCells = pqEncode(corpus, embCol, cbs)
       .withColumn("cell", nearestCell(routing))
@@ -699,23 +631,6 @@ object Similarity {
       .withColumn("cell", probedCells(routing, nProbe))
       .select(col(idCol).as("q_id"), col(embCol).as("__q"), col("cell"))
     adcTopK(queryCells, k, cbs)(_.join(corpusCells, Seq("cell")))
-  }
-
-  /** Trained PQ ADC top-k: per-subspace Lloyd codebooks on a bounded
-    * deterministic sample (the [[ivfTopK]] recipe — FAISS trains PQ on a
-    * sample regardless of corpus size), then the same encode/ADC path.
-    * Recall vs exact euclidean top-k is spec-tested on the fixture. */
-  def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-             embCol: String, k: Int, m: Int = 8, nCodes: Int = 32,
-             kmeansIters: Int = 10, seed: Long = 42L,
-             sampleN: Int = 4096): DataFrame = {
-    val sample: Array[Array[Float]] = corpus
-      .select(col(idCol), col(embCol)).sort(col(idCol)).limit(sampleN)
-      .collect().map(_.getSeq[Float](1).toArray)
-    val cbs = subvectors(sample.toSeq, m).zipWithIndex.map { case (vs, mi) =>
-      localLloyd(vs.toArray, nCodes, kmeansIters, seed + mi)
-    }
-    pqAdcTopK(queries, corpus, idCol, embCol, k, cbs)
   }
 
   /** Embedding-cosine near-duplicate pairs — the embedding-space member of
@@ -1006,7 +921,7 @@ object Similarity {
     }
 
     // Init: kEff lowest ids via distributed TopK; kEff rows collected
-    // (bounded driver state by contract, like ivfTopK's sample).
+    // (bounded driver state by contract, like seededRows' pick).
     var centroids: Seq[(Int, Array[Long])] = q
       .select(col(idCol), col("__qe")).sort(col(idCol)).limit(kEff)
       .collect().zipWithIndex

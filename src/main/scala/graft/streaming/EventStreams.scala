@@ -375,21 +375,19 @@ object EventStreams {
                         textCol: String, shingleN: Int = 3,
                         numHashes: Int = 16, bands: Int = 4,
                         joinWindow: String = "10 minutes",
-                        watermark: String = "20 minutes",
-                        family: graft.functions.HashFamily =
-                          graft.functions.XxHashFamily): DataFrame = {
+                        watermark: String = "20 minutes"): DataFrame = {
     val withBases = docs
       .withColumn("__bases",
         transform(graft.plans.WordShingles(col(textCol), shingleN),
-          s => family.base(s)))
+          s => graft.functions.PortableHash.base(s)))
       .where(size(col("__bases")) > 0)
     val hCols = (0 until numHashes).map(i =>
-      array_min(transform(col("__bases"), b => family.derive(i, b)))
-        .as(s"__h$i"))
+      array_min(transform(col("__bases"),
+        b => graft.functions.PortableHash.derive(i, b))).as(s"__h$i"))
     val sig = withBases.select(col(idCol) +: col(tsCol) +: hCols: _*)
     val buckets = sig
       .select(col(idCol), col(tsCol), explode(graft.dedup.NearDup.bandBuckets(
-        i => col(s"__h$i"), numHashes, bands, family)).as("bb"))
+        i => col(s"__h$i"), numHashes, bands)).as("bb"))
       .select(col(idCol), col(tsCol),
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
       .withWatermark(tsCol, watermark)

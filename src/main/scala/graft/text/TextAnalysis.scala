@@ -86,59 +86,23 @@ object TextAnalysis {
     * robust to content reordering around the match (unlike the global
     * [[fingerprint]], which only catches whole-doc duplicates).
     *
-    * Scale shape: pure within-row HOF arithmetic (`sequence` → `transform`
-    * → windowed `array_min`) — selection is a narrow projection, ZERO
+    * Scale shape: ONE native [[graft.plans.WinnowPortableMinima]] node
+    * per row — gram hashing (the portable `hex60("0_" <gram>)`, so the
+    * DuckDB oracle replays the selection bit-for-bit, q113), sliding
+    * minima and the ordered distinct in a single pass with a monotonic
+    * deque, O(len) per row. Selection is a narrow projection, ZERO
     * shuffle; only the candidate join
     * ([[graft.dedup.NearDup.winnowPairs]]) shuffles, keyed by
-    * fingerprint. Cost is O(len · w) comparisons per row (the classic
-    * rolling-hash/deque form is O(len), but it trades a non-codegen custom
-    * expression for a constant factor that only matters when w is large —
-    * at w ≤ 16 the HOF form stays inside whole-stage codegen and wins).
+    * fingerprint. The declarative HOF form it replaced paid an
+    * interpreted lambda dispatch plus a substring/concat allocation per
+    * GRAM and an O(n·w) slice copy per window position.
     *
     * Short inputs: fewer than `w` grams (but ≥ 1) → the single min-of-all
     * fingerprint, so every doc of length ≥ `k` is sketched; length < `k`
-    * → empty array.
-    *
-    * @param family hash family per gram; [[graft.functions.PortableHashFamily]]
-    *               makes the selection replayable bit-for-bit by the
-    *               DuckDB oracle (q113), [[graft.functions.XxHashFamily]]
-    *               is the cheaper production default. */
-  def winnowFingerprints(text: Column, k: Int, w: Int,
-                         family: graft.functions.HashFamily =
-                           graft.functions.XxHashFamily): Column = {
-    require(k >= 1, "gram length k must be >= 1")
-    require(w >= 1, "window size w must be >= 1")
-    val normalized = trim(regexp_replace(lower(text), "\\s+", " "))
-    family match {
-      // Portable family: ONE native node per row (round 17) — gram
-      // hashing + sliding minima + ordered distinct in a single pass
-      // with a monotonic deque, bit-identical to the declarative chain
-      // below (WinnowPortableMinima scaladoc has the equivalence
-      // argument; TextDedupSpec pins both paths, q113's oracle replays
-      // the selection). The HOF form paid an interpreted lambda
-      // dispatch + substring/concat allocation per GRAM and an O(n·w)
-      // slice copy per window position.
-      case graft.functions.PortableHashFamily =>
-        graft.plans.WinnowPortableMinima(normalized, k, w)
-      case _ =>
-        // The let-binding is load-bearing: without it the gram hashing
-        // re-runs per window position and the selection goes O(len²) per
-        // row (see Hof.let).
-        import graft.functions.Hof.let
-        let(normalized) { txt =>
-          val nGrams = length(txt) - k + 1
-          let(when(nGrams.isNull || nGrams <= 0, array().cast("array<long>"))
-              .otherwise(transform(sequence(lit(1), nGrams),
-                i => family.hash(0, substr(txt, i, lit(k)))))) { grams =>
-            when(size(grams) === 0, array().cast("array<long>"))
-              .when(size(grams) <= w, array(array_min(grams)))
-              .otherwise(array_distinct(transform(
-                sequence(lit(1), size(grams) - w + 1),
-                j => array_min(slice(grams, j, lit(w))))))
-          }
-        }
-    }
-  }
+    * → empty array. */
+  def winnowFingerprints(text: Column, k: Int, w: Int): Column =
+    graft.plans.WinnowPortableMinima(
+      trim(regexp_replace(lower(text), "\\s+", " ")), k, w)
 
   /** Gopher-style repetition/quality statistics (Rae et al.,
     * *Scaling Language Models: … Gopher*, arXiv:2112.11446 §A1.1 — the

@@ -30,9 +30,9 @@ class DsirSpec extends SparkSpec {
     // the bucket holding "quantum" (target-only, twice) must outscore the
     // bucket holding "spam" (raw-only, thrice)
     val qb = spark.range(1).select(
-      pmod(xxhash64(lit(167), lit("quantum")), lit(m.toLong))).head.getLong(0)
+      Dsir.bucket(lit("quantum"), m)).head.getLong(0)
     val sb = spark.range(1).select(
-      pmod(xxhash64(lit(167), lit("spam")), lit(m.toLong))).head.getLong(0)
+      Dsir.bucket(lit("spam"), m)).head.getLong(0)
     assert(rows(qb) > 0L, "target-only token bucket should have positive ratio")
     assert(rows(sb) < 0L, "raw-only token bucket should have negative ratio")
   }

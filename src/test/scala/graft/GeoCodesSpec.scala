@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Cleaning, GeoCodes, PortableHash, PortableHashFamily}
+import graft.functions.{Cleaning, GeoCodes, PortableHash}
 
 class GeoCodesSpec extends SparkSpec {
   import spark.implicits._
@@ -21,11 +21,11 @@ class GeoCodesSpec extends SparkSpec {
     assert(got(1).getLong(1) == PortableHash.seeded(1, "quick brown fox"))
   }
 
-  test("PortableHashFamily.combine matches the string_agg SQL twin") {
+  test("PortableHash.combine matches the string_agg SQL twin") {
     // combine(h0, h1) = hex60("h0_h1") on decimal renderings
     val df = Seq((12L, 345L)).toDF("a", "b")
     val got = df.select(
-      PortableHashFamily.combine(Seq($"a", $"b")).as("c")).head().getLong(0)
+      PortableHash.combine(Seq($"a", $"b")).as("c")).head().getLong(0)
     assert(got == PortableHash.hex60("12_345"))
   }
 

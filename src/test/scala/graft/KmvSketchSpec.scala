@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{KmvSketch, PortableHashFamily, XxHashFamily}
+import graft.functions.KmvSketch
 
 class KmvSketchSpec extends SparkSpec {
   import spark.implicits._
@@ -48,28 +48,34 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("hash family is a parameter: exact regime identical, estimates close") {
-    // below k distinct: both families ARE the exact count — identical
+    // the family is fixed to the portable 60-bit MD5 prefix: below k
+    // distinct the sketch is identical to the exact count
     val small = (1 to 2000).map(i => (i % 5, i % 40)).toDF("g", "v")
-    val both = small.groupBy($"g")
-      .agg(KmvSketch($"v", 256, XxHashFamily).as("xx"),
-        KmvSketch($"v", 256, PortableHashFamily).as("md"),
-        countDistinct($"v").as("exact"))
-      .as[(Int, Double, Double, Long)].collect()
-    both.foreach { case (g, xx, md, exact) =>
-      assert(xx == exact.toDouble && md == exact.toDouble, s"group $g")
-    }
-    // above k: independent families, each within estimator tolerance
+    small.groupBy($"g")
+      .agg(KmvSketch($"v", 256).as("est"), countDistinct($"v").as("exact"))
+      .as[(Int, Double, Long)].collect()
+      .foreach { case (g, est, exact) =>
+        assert(est == exact.toDouble, s"group $g: $est vs $exact")
+      }
+    // above k: the estimate replays bit-for-bit from PortableHash.hex60
+    // ((k-1)*2^60 / k-th smallest distinct hash) and is close to exact
+    val k = 256
     val li = Tables.load(spark, sf, "lineitem")
     val est = li.groupBy($"l_returnflag")
-      .agg(KmvSketch($"l_partkey", 256, XxHashFamily).as("xx"),
-        KmvSketch($"l_partkey", 256, PortableHashFamily).as("md"),
+      .agg(KmvSketch($"l_partkey", k).as("est"),
         countDistinct($"l_partkey").as("exact"))
-      .as[(String, Double, Double, Long)].collect()
-    est.foreach { case (g, xx, md, exact) =>
-      if (exact >= 256) {
-        assert(math.abs(xx - exact) / exact <= 0.20, s"$g xx: $xx vs $exact")
-        assert(math.abs(md - exact) / exact <= 0.20, s"$g md: $md vs $exact")
-      } else assert(xx == exact.toDouble && md == exact.toDouble)
+      .as[(String, Double, Long)].collect()
+    val hashes = li.select($"l_returnflag",
+        graft.functions.PortableHash.hex60($"l_partkey").as("h"))
+      .distinct().as[(String, Long)].collect()
+      .groupBy(_._1).map { case (g, hs) => g -> hs.map(_._2).sorted }
+    est.foreach { case (g, e, exact) =>
+      val hs = hashes(g)
+      if (exact >= k) {
+        assert(e == (k - 1).toDouble * KmvSketch.Two60 / hs(k - 1).toDouble,
+          s"$g: sketch $e is not the portable-hash replay")
+        assert(math.abs(e - exact) / exact <= 0.20, s"$g: $e vs $exact")
+      } else assert(e == exact.toDouble && hs.length == exact)
     }
   }
 
@@ -94,29 +100,22 @@ class KmvSketchSpec extends SparkSpec {
     val df = rows.toDF("key")
     val keys = rows.distinct.toDF("key")
     val exact = rows.groupBy(identity).map { case (k, v) => (k, v.size.toLong) }
-    def estimates(depth: Int, width: Int, parts: Int,
-                  fam: graft.functions.HashFamily): Map[String, Long] = {
-      val sk = CountMin.sketch(df.repartition(parts), "key", depth, width,
-        family = fam)
-      CountMin.estimate(sk, keys, "key", depth, width, family = fam)
+    def estimates(depth: Int, width: Int, parts: Int): Map[String, Long] = {
+      val sk = CountMin.sketch(df.repartition(parts), "key", depth, width)
+      CountMin.estimate(sk, keys, "key", depth, width)
         .as[(String, Long)].collect().toMap
     }
-    // both families honor the sketch invariants — xxhash64 is the
-    // production default, portable MD5 the oracle-replay lane (q145)
-    for (fam <- Seq(graft.functions.XxHashFamily,
-                    graft.functions.PortableHashFamily)) {
-      // narrow sketch: collisions happen but NEVER an under-estimate
-      val narrow = estimates(4, 8, 3, fam)
-      exact.foreach { case (k, n) =>
-        assert(narrow(k) >= n, s"$fam $k under-estimated: ${narrow(k)} < $n")
-      }
-      assert(exact.exists { case (k, n) => narrow(k) > n },
-        s"$fam: 8-wide sketch over 40 keys should collide somewhere")
-      // wide sketch: 4 independent rows over 2048 buckets -> exact here
-      val wide = estimates(4, 2048, 3, fam)
-      exact.foreach { case (k, n) => assert(wide(k) == n) }
-      // counters commute: partitioning can't change any estimate
-      assert(estimates(4, 8, 13, fam) == narrow)
+    // narrow sketch: collisions happen but NEVER an under-estimate
+    val narrow = estimates(4, 8, 3)
+    exact.foreach { case (k, n) =>
+      assert(narrow(k) >= n, s"$k under-estimated: ${narrow(k)} < $n")
     }
+    assert(exact.exists { case (k, n) => narrow(k) > n },
+      "8-wide sketch over 40 keys should collide somewhere")
+    // wide sketch: 4 independent rows over 2048 buckets -> exact here
+    val wide = estimates(4, 2048, 3)
+    exact.foreach { case (k, n) => assert(wide(k) == n) }
+    // counters commute: partitioning can't change any estimate
+    assert(estimates(4, 8, 13) == narrow)
   }
 }

@@ -144,7 +144,16 @@ class PropertySpec extends SparkSpec {
   }
 
   test("PortableHash: Spark column form == JVM form on arbitrary strings") {
-    import graft.functions.{PortableHash, PortableHashFamily}
+    import graft.functions.PortableHash
+    import PortableHash.P
+    // independent JVM reference: the MD5 hex digest's first 15 digits
+    // parsed base 16 (the driver twin shares the column form's kernel)
+    def refHex60(s: String): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val hex = d.map(b => f"${b & 0xff}%02x").mkString
+      java.lang.Long.parseLong(hex.substring(0, 15), 16)
+    }
     val strGen: Gen[List[String]] = Gen.choose(1, 25).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf(
         Gen.alphaNumStr.map(_.take(40)),
@@ -154,18 +163,18 @@ class PropertySpec extends SparkSpec {
       val df = ss.toDF("s")
       val got = df.select(
           PortableHash.hex60($"s").as("h"),
-          PortableHashFamily.base($"s").as("b"),
-          PortableHashFamily.derive(3, PortableHashFamily.base($"s")).as("d3"))
+          PortableHash.base($"s").as("b"),
+          PortableHash.derive(3, PortableHash.base($"s")).as("d3"))
         .collect()
       ss.zip(got).foreach { case (s, row) =>
-        val jvmH = PortableHash.hex60(s)
-        val jvmB = jvmH % PortableHashFamily.P
-        val a = PortableHash.hex60("a_3") % (PortableHashFamily.P - 1) + 1
-        val b = PortableHash.hex60("b_3") % PortableHashFamily.P
+        val jvmH = refHex60(s)
+        val jvmB = jvmH % P
+        val a = refHex60("a_3") % (P - 1) + 1
+        val b = refHex60("b_3") % P
+        assert(PortableHash.hex60(s) == jvmH, s"driver hex60($s)")
         assert(row.getLong(0) == jvmH, s"hex60($s)")
         assert(row.getLong(1) == jvmB, s"base($s)")
-        assert(row.getLong(2) == (a * jvmB + b) % PortableHashFamily.P,
-          s"derive(3, $s)")
+        assert(row.getLong(2) == (a * jvmB + b) % P, s"derive(3, $s)")
       }
     }
   }

@@ -181,6 +181,21 @@ class SchemaChecksSpec extends SparkSpec {
     assert(str.getString(6) == "a" && str.getString(7) == "x")
   }
 
+  test("Profile.profileTable counts -0.0 and 0.0 as one value, like countDistinct") {
+    import graft.checks.Profile
+    // the KMV sketch hashes string forms: "-0.0" and "0.0" differ, while
+    // every NaN renders "NaN" — countDistinct sees 3 values in both columns
+    val negNaN = java.lang.Double.longBitsToDouble(0xfff8000000000000L)
+    val df = Seq(0.0, -0.0, 1.0, Double.NaN, negNaN)
+      .map(d => (d, d.toFloat)).toDF("d", "f")
+    val exact = df.agg(countDistinct($"d"), countDistinct($"f")).head()
+    assert(exact.getLong(0) == 3 && exact.getLong(1) == 3)
+    val est = Profile.profileTable(df, Seq("d", "f"))
+      .select("column", "n_distinct_est").as[(String, Double)]
+      .collect().toMap
+    assert(est == Map("d" -> 3.0, "f" -> 3.0), s"n_distinct_est: $est")
+  }
+
   test("Profile.correlationMatrix: exact signs, constants null, bit-stable") {
     import graft.checks.Profile
     val df = (1 to 200).map { i =>

@@ -188,8 +188,7 @@ class TextDedupSpec extends SparkSpec {
       "héllo wörld ünïcode — мир and 漢字 slices",        // code-point grams
       (1 to 60).map(i => s"tok$i").mkString(" "))
     val got = texts.toDF("t")
-      .select(TextAnalysis.winnowFingerprints($"t", k, w,
-        graft.functions.PortableHashFamily).as("fps"))
+      .select(TextAnalysis.winnowFingerprints($"t", k, w).as("fps"))
       .as[Seq[Long]].collect()
     texts.zip(got).foreach { case (t, fps) =>
       assert(fps.toSet == refWinnow(t, k, w), s"mismatch on '$t'")
